@@ -5,27 +5,6 @@ object Bench {
   private def fmt(v: Double, decimals: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // long many-query sessions: don't retain per-query UI state
-      // (plan strings for wide codegen plans are MBs each)
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** The epoch-reference query: the one whose history best every
     * normalization in this file anchors on. */
   private val AnchorQuery = "wordcount_x8"
@@ -58,8 +37,8 @@ object Bench {
     * host_factor 1.475). The anchor reading measures the CHILD's own
     * epoch, so the parent can normalize the verdict by the window the
     * measurement actually ran in. */
-  private def isolatedMain(query: String, sfDir: String, cpus: String): Unit = {
-    val spark = buildSession(cpus)
+  private def isolatedMain(query: String, sfDir: String, cpus: Int): Unit = {
+    val spark = GraftSession(cpus)
     val fn = SparkEntry.queries.getOrElse(query,
       sys.error(s"--isolated: unknown query '$query'"))
     def once(f: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -90,7 +69,7 @@ object Bench {
     * stderr — confirmation then falls back to the raw flag). Works
     * because the build forks run/test, so java.class.path of THIS
     * process is the full application classpath. */
-  private def runIsolated(name: String, sfDir: String, cpus: String,
+  private def runIsolated(name: String, sfDir: String, cpus: Int,
                           timeoutSec: Long): Option[(Double, Option[Double])] = {
     import scala.jdk.CollectionConverters._
     try {
@@ -105,7 +84,7 @@ object Bench {
       out.deleteOnExit()
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.redirectOutput(out)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()
@@ -217,7 +196,7 @@ object Bench {
     * quiet median still reads >1.5x the recorded best. The adopted
     * value is a real measured reading — the rolling min takes back
     * over if a later fix restores speed. */
-  private def rebaselineMain(names: Seq[String], sfDir: String, cpus: String): Unit = {
+  private def rebaselineMain(names: Seq[String], sfDir: String, cpus: Int): Unit = {
     val sfKey = new java.io.File(sfDir).getName
     val histFile = new java.io.File("bench_history.json")
     val hist = readHistory(histFile)
@@ -265,14 +244,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores(32)
     if (args.length >= 2 && args(0) == "--isolated") {
       isolatedMain(args(1), sfDir, cpus); return
     }
     if (args.length >= 2 && args(0) == "--rebaseline") {
       rebaselineMain(args(1).split(",").toSeq, sfDir, cpus); return
     }
-    val spark = buildSession(cpus)
+    val spark = GraftSession(cpus)
     // Steady-state timing: first execution pays JIT + codegen compile
     // (tens of seconds across a 33-query suite); run each query once to
     // warm, then measure the second execution.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Above-the-cutover measurement harness (VERDICT r15 task 2): every
@@ -43,20 +43,10 @@ object CutoverBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nums = args.filterNot(_.startsWith("--"))
     val rowsAbove = nums.lift(0).map(_.toLong).getOrElse(8000000L)
     val rowsBelow = nums.lift(1).map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cores(32))
     import graft.operators.{Corpus, TotalOrder}
 
     /** ×N replay: a continuous-score relation of ~`rows` rows grounded

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps the formatted physical plan of every registered query to
   * <outDir>/<name>.txt — the working artifact for shuffle/pushdown/
-  * codegen review (the builder contract's ".explain and iterate").
+  * codegen review (the builder contract's ".explain and iterate"), plus
+  * failures.json naming every query whose plan could not be built.
+  * Plans at `SPARK_GRAFT_CPUS` cores (default 32, as Bench), so the
+  * dumped plans are the plans Bench runs.
   *
   * Usage: runMain graft.Explain <sfDir> <outDir> [query,query,...]
   */
@@ -13,29 +15,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-        } catch {
-          case e: Throwable => System.err.println(s"[explain] $name failed: ${e.getMessage}")
-        }
-      }
+    val spark = GraftSession(GraftSession.cores(32))
+    Verify.eachQuery(spark, sfDir, outDir, only, "explain") { (name, df) =>
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
+    }
     spark.stop()
   }
 }

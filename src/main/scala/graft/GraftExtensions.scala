@@ -9,9 +9,8 @@ import graft.functions.{DamerauLevenshtein, DeflateSize, JaroWinkler, NfcNormali
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_dot
   * (a, b) ...")` works next to the Column API, and injects the
   * engine's optimizer rules (VecSelfDotRule: self-dot-product →
-  * squared-norm specialization). Attach with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * squared-norm specialization). [[GraftSession]] attaches it; outside
+  * graft attach with `--conf spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

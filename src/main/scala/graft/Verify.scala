@@ -1,56 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, plus
+  * failures.json naming every query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // classic (non-ANSI) semantics: the minhash/fingerprint operators
-      // rely on wrapping 64-bit arithmetic
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val spark = GraftSession(GraftSession.cores(4))
+    eachQuery(spark, sfDir, outDir, only, "verify") { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
+  }
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** `<outDir>/oracle_sql.json`: query name → oracle SQL. Jackson escapes
+    * every control character, so a tab or CR in the SQL cannot make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  def writeOracleSql(outDir: String, oracle: Map[String, String]): Unit =
+    mapper.writeValue(Paths.get(outDir, "oracle_sql.json").toFile, oracle)
+
+  /** Builds and consumes every registered query that passes `only`. A
+    * query that throws is named on stderr as `[tag] <name> failed: <msg>`
+    * and recorded in `<outDir>/failures.json` as `{query, error}`; the
+    * file is `[]` when none failed. */
+  def eachQuery(spark: SparkSession, sfDir: String, outDir: String,
+                only: Option[Set[String]], tag: String)
+               (consume: (String, DataFrame) => Unit): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    val failures = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .flatMap { case (name, fn) =>
+        try { consume(name, fn(spark, sfDir)); None }
+        catch { case e: Throwable =>
+          System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+          Some(Map("query" -> name, "error" -> e.toString))
+        }
+      }
+    mapper.writeValue(Paths.get(outDir, "failures.json").toFile, failures)
   }
 }

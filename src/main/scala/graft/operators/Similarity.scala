@@ -1275,10 +1275,11 @@ object Similarity {
     // ~d× the relation's rows in per-row BigDecimal work (round(·,12)
     // + DECIMAL(38,12) partial sums) before anything crosses a shuffle
     // — measured 4.6s single-task at sf0.1 vs 0.5s for the join alone
-    // (PcaProbe decomposition). Fan the PROBE side through the gated
-    // device (explode weight — each source row becomes d pair terms);
-    // the build side stays the unfanned pin behind an explicit
-    // broadcast so the planner cannot pick the fanned side to build.
+    // (the pca decomposition in OPTIMIZATION_r18.md). Fan the PROBE
+    // side through the gated device (explode weight — each source row
+    // becomes d pair terms); the build side stays the unfanned pin
+    // behind an explicit broadcast so the planner cannot pick the
+    // fanned side to build.
     // Partial decimal sums are exact and order-free, so the result is
     // bit-identical under any partitioning (oracle-checked).
     val ce = graft.plans.FanOut.fanOutIfNarrow(pin, col("vec_id"),

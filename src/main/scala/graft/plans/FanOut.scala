@@ -62,11 +62,6 @@ object FanOut {
     * 2.5 → 2.1; the distinct name records the distinct reason). */
   val ExplodeBytesPerTask: Long = 64L << 10
 
-  // measurement-only override (A/B harness): 0 = never fan out,
-  // n > 0 = always fan to min(cores, n). Unset in production.
-  private val targetOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_FANOUT").map(_.toInt)
-
   /** True iff every operator in the plan is a narrow map-side node
     * over leaves — the ONLY shape the fan-out exists for. Anything
     * that already crossed (or will introduce) a shuffle — aggregates,
@@ -87,11 +82,6 @@ object FanOut {
   def fanOutIfNarrow(df: DataFrame, key: Column,
                      bytesPerTask: Long = DefaultBytesPerTask): DataFrame = {
     val cores = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
-    targetOverride match {
-      case Some(0) => return df
-      case Some(n) => return df.repartition(math.min(cores, n), key)
-      case None =>
-    }
     if (!narrowOverScan(df.queryExecution.optimizedPlan)) return df
     // narrow plans have no shuffle stages, so the RDD probe below is
     // plan-only — it cannot run jobs

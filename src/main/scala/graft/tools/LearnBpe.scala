@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Bpe, TextOps}
 
 /** Artifact regeneration tool: learn the frozen BPE merge table +
@@ -30,15 +30,7 @@ object LearnBpe {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/bpe_merges.txt")
     val numMerges = args.lift(2).map(_.toInt).getOrElse(2048)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the nanos/µs events branch (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cores(16))
     val tb = graft.sources.Tables(spark, sfDir)
     val corpus = tb.documents.select(col("text"))
       .unionByName(tb.part.select(

@@ -2,16 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (creation costs seconds). */
+/** One shared local session for all suites (creation costs seconds).
+  * Pinned at 4 cores whatever `SPARK_GRAFT_CPUS` says, so plan-shape
+  * and fan-out assertions see the same session on every host. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder().withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.ansi.enabled", "false")
-    // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 }

@@ -9,11 +9,15 @@
   3. README's "other <K> registered queries" line (K == T - 2:
      wordcount and wordcount_x8 are the parity pair),
   4. every registered query name appears somewhere in SURVEY.md
-     (the §8 ledger is the auditable coverage record).
+     (the §8 ledger is the auditable coverage record),
+  5. bench-history monotonicity (tools/history_check.py),
+  6. one session builder: no `SparkSession.builder` under src/ outside
+     GraftSession.scala, and no `SPARK_GRAFT_FANOUT` env override.
 
 Exit 0 = consistent; nonzero prints every drift. Run before the
 end-of-round snapshot.
 """
+import pathlib
 import re
 import sys
 
@@ -65,6 +69,15 @@ def main() -> int:
         capture_output=True, text=True)
     if hc.returncode != 0:
         problems.append("bench_history monotonicity: " + hc.stdout.strip())
+
+    # 6. one session builder, no fan-out env override: copies of the
+    # builder drift apart, and an env-read A/B device outlives its A/B.
+    for path in sorted(pathlib.Path("src").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        if "SparkSession.builder" in text and path.name != "GraftSession.scala":
+            problems.append(f"{path}: SparkSession.builder outside GraftSession.scala")
+        if 'sys.env.get("SPARK_GRAFT_FANOUT"' in text:
+            problems.append(f"{path}: SPARK_GRAFT_FANOUT env override")
 
     if problems:
         for p in problems:
