@@ -41,11 +41,21 @@ object TextOps {
   def cleanWord(tok: Column): Column = lower(regexp_replace(tok, IspunctClass, ""))
 
   /** One row per cleaned, non-empty word (empty-token filter:
-    * map_reduce.cpp:166). */
+    * map_reduce.cpp:166).
+    *
+    * Each document is cleaned ONCE and then tokenized, instead of
+    * cleaning every token: one regex pass and one `lower` per document
+    * rather than per token. The multiset of non-empty words is the
+    * same as `explode(tokens(text))` → [[cleanWord]] → non-empty:
+    * [[IspunctClass]] and [[TokenSepRe]] are disjoint, so stripping
+    * punctuation never removes or adds a separator, and `lower` maps no
+    * character to a separator. A token that cleans to nothing becomes
+    * an empty split (or none), which the length filter drops either
+    * way. The order stays strip, then lower. `TextOpsSpec` checks the
+    * equivalence against the per-token formula. */
   def words(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs
-      .select(explode(tokens(col(textCol))).as("tok"))
-      .select(cleanWord(col("tok")).as("word"))
+      .select(explode(tokens(cleanWord(col(textCol)))).as("word"))
       .where(length(col("word")) > 0)
 
   /** The flagship: global (word, count). Catalyst plans partial+final

@@ -8,13 +8,32 @@ import org.apache.spark.sql.functions._
   * stream (:159). Spark's file index replaces the hand-rolled
   * opendir/readdir + MPI file dispatch: listing, splitting, locality
   * and dynamic scheduling are the task scheduler's job.
+  *
+  * The corpus is every non-hidden file under `dir`, at any depth, with
+  * no partition columns. The directory is read as ONE root path with
+  * `recursiveFileLookup`, so the file index lists it on the driver and
+  * runs no Spark job, like the reference's one `readdir` loop. A glob
+  * over the directory's entries expands to one root path per entry;
+  * above 32 root paths (`parallelPartitionDiscovery.threshold`) Spark
+  * lists them in a job with one task per path, and an explicit list of
+  * file paths does the same. For a 128-file corpus that job cost more
+  * than counting the words. `recursiveFileLookup` also turns off
+  * partition inference, so a `k=v/` subdirectory next to plain files is
+  * read as plain files instead of failing with
+  * CONFLICTING_DIRECTORY_STRUCTURES. The file set is the glob's for
+  * files in `dir` and in its subdirectories; files two or more
+  * subdirectories down (depth 3+), which the glob skipped, are read
+  * too. Hidden files (`_SUCCESS`, `.name`) are skipped.
   */
 object TextCorpus {
+
+  private def corpus(spark: SparkSession) =
+    spark.read.option("recursiveFileLookup", "true")
 
   /** One row per line, with the source file path — the scan half of
     * the reference pipeline. */
   def readLines(spark: SparkSession, dir: String): DataFrame =
-    spark.read.textFile(s"$dir/*").toDF("value")
+    corpus(spark).textFile(dir).toDF("value")
       .withColumn("path", input_file_name())
 
   /** A documents-shaped table (doc per file) from a raw text dir:
@@ -28,7 +47,7 @@ object TextCorpus {
     * order-sensitive downstreams (shingles, rolling-hash fingerprints)
     * across runs. */
   def readDocuments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("wholetext", "true").text(s"$dir/*")
+    corpus(spark).option("wholetext", "true").text(dir)
       .withColumn("path", input_file_name())
       .withColumn("doc_id", xxhash64(col("path")))
       .select(col("doc_id"), col("value").as("text"), col("path"))

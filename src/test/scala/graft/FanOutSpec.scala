@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,30 +12,6 @@ class FanOutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val cores = spark.sparkContext.defaultParallelism
 
-  /** Spark jobs started while `body` runs. Listener delivery is async
-    * but ordered, so a marker job run after `body` bounds the count:
-    * once its start arrives, every job `body` started has arrived. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val marker = s"fanout-spec-marker-${System.nanoTime()}"
-    val seen = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => marker == p.getProperty("spark.job.description")))
-          markerSeen.countDown()
-        else if (markerSeen.getCount > 0) seen.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
-      (out, seen.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a source already at >= cores/2 partitions comes back unchanged") {
     val src = spark.range(0, 1000, 1, cores / 2).select(col("id"), (col("id") * 2).as("v"))
     assert(src.rdd.getNumPartitions * 2 >= cores)
@@ -51,7 +23,7 @@ class FanOutSpec extends AnyFunSuite {
     // count would run the broadcast job, then the query would run it again
     val agg = spark.range(0, 1000, 1, 1).join(spark.range(0, 100, 1, 2), "id")
       .groupBy((col("id") % 7).as("k")).count()
-    val (out, jobs) = jobsDuring(FanOut.fanOutIfNarrow(agg, col("k"), bytesPerTask = 1L))
+    val (out, jobs) = TestSpark.jobsDuring(FanOut.fanOutIfNarrow(agg, col("k"), bytesPerTask = 1L))
     assert(jobs === 0, "probing a non-narrow plan must not execute it")
     assert(out eq agg)
     assert(out.count() === 7)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
@@ -29,6 +31,11 @@ class PlanShapeSpec extends AnyFunSuite {
     val plan = formatted(df)
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("partial_count"), plan) // map-side combine before the exchange
+    // the ispunct strip runs once per document, inside the generator's
+    // input, not once per token above the Generate
+    val generators = df.queryExecution.optimizedPlan.collect { case g: Generate => g.generator }
+    assert(generators.size === 1, df.queryExecution.optimizedPlan)
+    assert(generators.head.exists(_.isInstanceOf[RegExpReplace]), generators.head)
   }
 
   test("q1 pricing summary: shipdate filter pushed to the parquet scan, unused columns pruned") {

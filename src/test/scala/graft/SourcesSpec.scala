@@ -37,6 +37,54 @@ class SourcesSpec extends AnyFunSuite {
     assert(counts("spark") === 24)
   }
 
+  /** 40 files (above Spark's 32-root-path parallel listing threshold)
+    * plus hidden files, a plain subdirectory, a `k=v` subdirectory and
+    * a file at depth 3. */
+  private def mkListingCorpus(): (String, String) = {
+    val dir = Files.createTempDirectory("graft-listing")
+    for (i <- 0 until 40) Files.writeString(dir.resolve(f"f$i%02d.txt"), s"file $i\nline two of $i\n")
+    Files.writeString(dir.resolve("_SUCCESS"), "marker\n")
+    Files.writeString(dir.resolve(".hidden"), "hidden\n")
+    Files.createDirectories(dir.resolve("sub/deeper"))
+    Files.createDirectories(dir.resolve("k=v"))
+    Files.writeString(dir.resolve("sub/two.txt"), "two\n")
+    Files.writeString(dir.resolve("k=v/three.txt"), "three\n")
+    val deep = dir.resolve("sub/deeper/four.txt")
+    Files.writeString(deep, "four\n")
+    (dir.toString, deep.toUri.getPath)
+  }
+
+  test("TextCorpus lists the corpus on the driver: the glob's rows to depth 2, depth 3 added, no partition column, no job") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    val (dir, deep) = mkListingCorpus()
+    def rows(df: DataFrame, text: String): Set[(String, String)] =
+      df.select(col("path"), col(text)).collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    def isDeep(row: (String, String)) = row._1.endsWith(deep)
+
+    // the reference: the same reads over a glob, which lists with a job
+    val (globDocs, globJobs) = TestSpark.jobsDuring(
+      spark.read.option("wholetext", "true").text(s"$dir/*").withColumn("path", input_file_name()))
+    assert(globJobs >= 1, "the fixture no longer crosses the parallel listing threshold")
+    val globLines = spark.read.textFile(s"$dir/*").toDF("value").withColumn("path", input_file_name())
+
+    val (docs, docJobs) = TestSpark.jobsDuring(TextCorpus.readDocuments(spark, dir))
+    assert(docJobs === 0, "readDocuments must list the directory on the driver")
+    val (lines, lineJobs) = TestSpark.jobsDuring(TextCorpus.readLines(spark, dir))
+    assert(lineJobs === 0, "readLines must list the directory on the driver")
+    assert(docs.columns.toSeq === Seq("doc_id", "text", "path"))
+    assert(lines.columns.toSeq === Seq("value", "path"))
+
+    for ((got, want) <- Seq(rows(docs, "text") -> rows(globDocs, "value"),
+                            rows(lines, "value") -> rows(globLines, "value"))) {
+      assert(got.filterNot(isDeep) === want)
+      assert(got.filter(isDeep).map(_._2.trim) === Set("four"), "depth 3 is read")
+      assert(got.exists(_._1.endsWith("/k=v/three.txt")) && got.exists(_._1.endsWith("/sub/two.txt")))
+      assert(!got.exists(r => r._1.endsWith("/_SUCCESS") || r._1.endsWith("/.hidden")))
+    }
+    assert(docs.count() === 40 + 3)
+  }
+
   test("partitionBy layout: partition filter reaches the file index, only one dir scanned") {
     import org.apache.spark.sql.functions._
     val out = Files.createTempDirectory("graft-partlayout").toString

@@ -72,6 +72,47 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
+  /** The per-token formula `words` had before it cleaned each document
+    * once: split, clean every token, drop the empty ones. */
+  private def perTokenWords(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{col, explode, length}
+    df.select(explode(TextOps.tokens(col("text"))).as("tok"))
+      .select(TextOps.cleanWord(col("tok")).as("word"))
+      .where(length(col("word")) > 0)
+  }
+
+  // Every ispunct char, the 5 separators and \x0B (not a separator),
+  // punctuation-only tokens, digits, and case mappings that are not
+  // 1:1 or depend on context: Greek final sigma, dotted capital I
+  // (one char lowercases to two), sharp s, a combining mark.
+  private val pieces: Vector[String] =
+    (('!' to '/') ++ (':' to '@') ++ ('[' to '`') ++ ('{' to '~')).map(_.toString).toVector ++
+      Vector(" ", "\t", "\n", "\f", "\r", "\u000B") ++
+      Vector("--", "...", "'\"", "(-)") ++
+      Vector("0", "42", "1,000", "3.14") ++
+      Vector("a", "Word", "END", "ΟΔΟΣ", "ΛΟΓΟΣ", "Σ", "σ", "İ", "İSTANBUL", "ß", "STRAẞE",
+        "e\u0301", "\u0301", "É")
+
+  private def randomDoc(rnd: scala.util.Random): String = {
+    val ws = Vector("", " ", "\t", "\n ", "\r\n")
+    val body = Seq.fill(rnd.nextInt(25))(pieces(rnd.nextInt(pieces.size))).mkString
+    ws(rnd.nextInt(ws.size)) + body + ws(rnd.nextInt(ws.size))
+  }
+
+  test("property: words (clean each document, then split) == per-token clean, as multisets") {
+    assert(pieces.count(_.matches(TextOps.IspunctClass)) === 32)
+    for (seed <- Seq(1, 2, 3)) {
+      val rnd = new scala.util.Random(seed)
+      val texts = Seq("", " \t\n\f\r", "ΟΔΟΣ. ΛΟΓΟΣ\u000BΣ") ++ Seq.fill(300)(randomDoc(rnd))
+      val df = docs(texts: _*)
+      val got = TextOps.words(df).collect().map(_.getString(0)).sorted.toSeq
+      val want = perTokenWords(df).collect().map(_.getString(0)).sorted.toSeq
+      assert(got === want, s"seed $seed")
+      // the generator reached the context-sensitive and growing mappings
+      assert(want.exists(_.endsWith("ς")) && want.exists(_.contains("i\u0307")), s"seed $seed")
+    }
+  }
+
   test("top-k is count-desc with word tie-break") {
     val rows = TextOps.wordCountTopK(docs("b b a a c"), 2).collect()
     assert(rows.map(_.getString(0)).toSeq === Seq("a", "b"))

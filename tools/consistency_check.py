@@ -12,7 +12,11 @@
      (the §8 ledger is the auditable coverage record),
   5. bench-history monotonicity (tools/history_check.py),
   6. one session builder: no `SparkSession.builder` under src/ outside
-     GraftSession.scala, and no `SPARK_GRAFT_FANOUT` env override.
+     GraftSession.scala, and no `SPARK_GRAFT_FANOUT` env override,
+  7. no `/*"` glob path in a src/main file that builds a DataFrameReader
+     (`spark.read.…`): a glob that expands past 32 paths is listed by a
+     Spark job, where one directory root with `recursiveFileLookup` is
+     listed on the driver.
 
 Exit 0 = consistent; nonzero prints every drift. Run before the
 end-of-round snapshot.
@@ -78,6 +82,17 @@ def main() -> int:
             problems.append(f"{path}: SparkSession.builder outside GraftSession.scala")
         if 'sys.env.get("SPARK_GRAFT_FANOUT"' in text:
             problems.append(f"{path}: SPARK_GRAFT_FANOUT env override")
+
+    # 7. no directory glob read: each expanded path is a root path, and
+    # past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    # the roots are listed by a Spark job.
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        if not re.search(r"\.read\s*\.", text):  # a DataFrameReader chain
+            continue
+        for n, line in enumerate(text.splitlines(), 1):
+            if '/*"' in line:
+                problems.append(f"{path}:{n}: glob read path, list the directory instead")
 
     if problems:
         for p in problems:
