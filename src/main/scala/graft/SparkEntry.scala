@@ -6,14 +6,18 @@ import graft.operators._
 import graft.sources.{LakeTable, Tables}
 import graft.streaming.EventStreams
 import graft.plans.Lineage.TruncateOps
+import graft.QuerySpec.{Q, RowsOnly}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query entry points (build plan: SURVEY.md §7).
   *
-  * Every entry in `queries` is a thin wrapper over a library operator
-  * (graft.operators.*); every SQL-expressible one has a DuckDB twin in
-  * `oracleSql` with IDENTICAL output column names and, where floating
-  * point is aggregated, order-independent decimal accumulation on both
-  * sides (see graft.functions.dsum).
+  * `registry` holds one entry per query: its name, its Spark build (a
+  * thin wrapper over a library operator, graft.operators.*) and either
+  * its DuckDB twin — `Q(name, build)(sql)` — or, for the few results no
+  * SQL engine can reproduce, `RowsOnly(name, reason)(build)`. A twin
+  * has IDENTICAL output column names and, where floating point is
+  * aggregated, order-independent decimal accumulation on both sides
+  * (see graft.functions.dsum). `queries` and `oracleSql` are derived
+  * from the registry once; twin SQL is only built by `oracleSql`.
   */
 object SparkEntry {
 
@@ -277,18 +281,35 @@ object SparkEntry {
       (substring(col("source"), 4, 10).cast("int") % 2 === 0).as("is_pos"),
       (col("doc_id") % 10 < 7).as("is_train"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query, one entry each, in registration order. */
+  lazy val registry: QueryRegistry = QueryRegistry(
     // ---- M1: the reference surface (SURVEY.md §2 [REF] rows) ----
-    "wordcount" -> ((s, d) => TextOps.wordCount(t(s, d).documents).orderBy("word")),
+    Q("wordcount", (s, d) => TextOps.wordCount(t(s, d).documents).orderBy("word"))(
+      s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY word"),
     // tokenizer/embedding-table sizing: token-occurrence mass covered
     // by the N most frequent words, per candidate cutoff — integer-
     // exact ppm; rank + cumulative mass through the adaptive
     // TotalOrder devices (a 100 TB vocabulary never takes a global
     // ORDER BY window). Fixture cutoffs sized to the synthetic vocab
     // (31 words) so the curve has real shape, saturation included
-    "vocab_coverage_curve" -> ((s, d) =>
+    Q("vocab_coverage_curve", (s, d) =>
       graft.operators.TextQuality.vocabCoverageCurve(t(s, d).documents,
-        cutoffs = Seq(4L, 8L, 16L, 32L, 64L)).orderBy("vocab_size")),
+        cutoffs = Seq(4L, 8L, 16L, 32L, 64L)).orderBy("vocab_size"))(
+      // rank by (cnt desc, word), cumulative occurrence mass, per-cutoff
+      // max — the whole curve in exact integers; the ppm scale-up runs
+      // in HUGEINT (Spark: DECIMAL(38,0)) so a 100 TB token total
+      // cannot wrap the 64-bit multiply on either engine
+      s"""$WDoc,
+         | c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
+         | tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
+         | r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS rk FROM c),
+         | cum AS (SELECT rk, CAST(sum(cnt) OVER (ORDER BY rk) AS BIGINT) AS cum FROM r),
+         | cuts(vocab_size) AS (VALUES (4),(8),(16),(32),(64))
+         |SELECT CAST(vocab_size AS BIGINT) AS vocab_size, max(cum) AS covered,
+         | (SELECT total FROM tot) AS total,
+         | CAST((CAST(max(cum) AS HUGEINT) * 1000000) // (SELECT total FROM tot) AS BIGINT) AS covered_ppm
+         |FROM cum JOIN cuts ON rk <= vocab_size
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // Zipf's-law fit: OLS slope of ln(freq) on ln(rank) over the
     // rank-frequency curve — the one-number corpus-health check
     // (natural text ≈ −1; template spam and synthetic padding bend
@@ -296,7 +317,7 @@ object SparkEntry {
     // relation is unbounded at corpus scale, so no ORDER BY window —
     // and every log term is rounded(12) and DECIMAL-summed with one
     // fixed-association double finish (the trend_slopes discipline)
-    "zipf_fit" -> ((s, d) => {
+    Q("zipf_fit", (s, d) => {
       import graft.operators.TotalOrder
       val dec = org.apache.spark.sql.types.DecimalType(28, 12)
       val wc = TextOps.wordCount(t(s, d).documents)
@@ -316,42 +337,160 @@ object SparkEntry {
       m.select(col("n").as("n_words"), round(slope, 6).as("slope"),
         round((col("sy").cast("double") - slope * col("sx").cast("double"))
           / col("n").cast("double"), 6).as("intercept"))
-    }),
-    "wordcount_top100" -> ((s, d) => TextOps.wordCountTopK(t(s, d).documents, 100)),
-    "wordcount_x8" -> ((s, d) => TextOps.wordCountX8(t(s, d).documents).orderBy("word")),
-    "distinct_words" -> ((s, d) => TextOps.distinctWords(t(s, d).documents).orderBy("word")),
-    "word_lengths_hist" -> ((s, d) => TextOps.wordLengthHist(t(s, d).documents).orderBy("len")),
+    })(
+      // identical rounded-log terms DECIMAL-summed; slope/intercept the
+      // same fixed-association double ops (the trend_slopes device);
+      // the twin's row_number window is the single-task sort globalRank
+      // replaces
+      s"""$WDoc,
+         | wc AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
+         | rk AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS r FROM wc),
+         | t AS (SELECT
+         |   CAST(round(ln(CAST(r AS DOUBLE)), 12) AS DECIMAL(28,12)) AS x,
+         |   CAST(round(ln(CAST(cnt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS y,
+         |   CAST(round(ln(CAST(r AS DOUBLE)) * ln(CAST(cnt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS xy,
+         |   CAST(round(ln(CAST(r AS DOUBLE)) * ln(CAST(r AS DOUBLE)), 12) AS DECIMAL(28,12)) AS xx
+         |   FROM rk),
+         | m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy, sum(xy) AS sxy, sum(xx) AS sxx FROM t),
+         | f AS (SELECT n, sx, sy,
+         |   (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+         |     / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
+         |   FROM m)
+         |SELECT CAST(n AS BIGINT) AS n_words, round(slope, 6) AS slope,
+         | round((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept
+         |FROM f""".stripMargin),
+    Q("wordcount_top100", (s, d) => TextOps.wordCountTopK(t(s, d).documents, 100))(
+      wordcountTop100TwinSql),
+    Q("wordcount_x8", (s, d) => TextOps.wordCountX8(t(s, d).documents).orderBy("word"))(
+      s"$W SELECT word, count(*) * 8 AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY word"),
+    Q("distinct_words", (s, d) => TextOps.distinctWords(t(s, d).documents).orderBy("word"))(
+      s"$W SELECT DISTINCT word FROM w WHERE length(word) > 0 ORDER BY word"),
+    Q("word_lengths_hist", (s, d) => TextOps.wordLengthHist(t(s, d).documents).orderBy("len"))(
+      s"""$W SELECT CAST(length(word) AS INTEGER) AS len, count(*) AS cnt
+         | FROM w WHERE length(word) > 0 GROUP BY len ORDER BY len""".stripMargin),
 
     // ---- M2: relational breadth (SURVEY.md §2 [ABSENT]/[NS] rows) ----
-    "q1_pricing_summary" -> ((s, d) => Relational.pricingSummary(t(s, d).lineitem)),
-    "q3_top_orders" -> ((s, d) => Relational.topUnshippedOrders(t(s, d))),
-    "q5_nation_revenue" -> ((s, d) => Relational.nationRevenue(t(s, d), "ASIA")),
-    "semi_join" -> ((s, d) => Relational.customersWithOpenOrders(t(s, d))),
-    "anti_join" -> ((s, d) => Relational.customersWithoutOrders(t(s, d))),
-    "left_join_agg" -> ((s, d) => Relational.ordersPerCustomer(t(s, d))),
-    "rollup_agg" -> ((s, d) => Relational.rollupAgg(t(s, d).lineitem)),
-    "cube_agg" -> ((s, d) => Relational.cubeAgg(t(s, d).orders)),
-    "scalar_funcs" -> ((s, d) => Relational.partTransforms(t(s, d).part)),
-    "date_funcs" -> ((s, d) => Relational.orderDates(t(s, d).orders)),
-    "agg_stats" -> ((s, d) => Relational.customerStats(t(s, d).customer)),
-    "set_ops" -> ((s, d) => Relational.nationSetOps(t(s, d))),
-    "topk_orders" -> ((s, d) => Relational.topOrdersByPrice(t(s, d).orders)),
+    Q("q1_pricing_summary", (s, d) => Relational.pricingSummary(t(s, d).lineitem))(
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
+        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
+        | CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
+        | count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Q("q3_top_orders", (s, d) => Relational.topUnshippedOrders(t(s, d)))(
+      """SELECT o_orderkey, o_orderdate,
+        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM customer, orders, lineitem
+        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND o_orderkey = l_orderkey
+        |GROUP BY o_orderkey, o_orderdate ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+    Q("q5_nation_revenue", (s, d) => Relational.nationRevenue(t(s, d), "ASIA"))(
+      """SELECT n_name,
+        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM region
+        |JOIN nation ON n_regionkey = r_regionkey
+        |JOIN customer ON c_nationkey = n_nationkey
+        |JOIN orders ON o_custkey = c_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN supplier ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    Q("semi_join", (s, d) => Relational.customersWithOpenOrders(t(s, d)))(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
+        |ORDER BY c_custkey""".stripMargin),
+    Q("anti_join", (s, d) => Relational.customersWithoutOrders(t(s, d)))(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+        |ORDER BY c_custkey""".stripMargin),
+    Q("left_join_agg", (s, d) => Relational.ordersPerCustomer(t(s, d)))(
+      """SELECT c_custkey, count(o_orderkey) AS n_orders,
+        | coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS total_spend
+        |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    Q("rollup_agg", (s, d) => Relational.rollupAgg(t(s, d).lineitem))(
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag, coalesce(l_linestatus, 'ALL') AS linestatus,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY returnflag, linestatus""".stripMargin),
+    Q("cube_agg", (s, d) => Relational.cubeAgg(t(s, d).orders))(
+      """SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus, coalesce(o_orderpriority, 'ALL') AS orderpriority,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY orderstatus, orderpriority""".stripMargin),
+    Q("scalar_funcs", (s, d) => Relational.partTransforms(t(s, d).part))(
+      """SELECT p_partkey, upper(p_name) AS name_upper, CAST(length(p_name) AS INTEGER) AS name_len,
+        | substring(p_type, 1, 6) AS type_prefix, string_split(p_type, ' ')[1] AS type_head,
+        | p_retailprice * 1.1 AS marked_up,
+        | CASE WHEN p_size > 25 THEN 'large' WHEN p_size > 10 THEN 'medium' ELSE 'small' END AS size_class
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Q("date_funcs", (s, d) => Relational.orderDates(t(s, d).orders))(
+      """SELECT o_orderkey, CAST(year(o_orderdate) AS INTEGER) AS o_year,
+        | CAST(quarter(o_orderdate) AS INTEGER) AS o_quarter,
+        | CAST(month(o_orderdate) AS INTEGER) AS o_month,
+        | CAST(day(o_orderdate) AS INTEGER) AS o_day,
+        | date_trunc('month', o_orderdate) AS month_start,
+        | CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INTEGER) AS days_to_2002
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Q("agg_stats", (s, d) => Relational.customerStats(t(s, d).customer))(
+      """SELECT c_mktsegment, count(*) AS n_customers, count(DISTINCT c_nationkey) AS n_nations,
+        | min(c_acctbal) AS min_bal, max(c_acctbal) AS max_bal,
+        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal,
+        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_bal,
+        | (CAST(sum(CAST(c_acctbal*c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
+        |   - CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+        |     * CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)) / count(*) AS var_pop_bal
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Q("set_ops", (s, d) => Relational.nationSetOps(t(s, d)))(
+      """WITH cu AS (SELECT DISTINCT c_nationkey AS nationkey FROM customer),
+        | su AS (SELECT DISTINCT s_nationkey AS nationkey FROM supplier)
+        |SELECT nationkey, 'both' AS op FROM (SELECT nationkey FROM cu INTERSECT SELECT nationkey FROM su)
+        |UNION ALL
+        |SELECT nationkey, 'customer_only' AS op FROM (SELECT nationkey FROM cu EXCEPT SELECT nationkey FROM su)
+        |UNION ALL
+        |SELECT nationkey, 'supplier_only' AS op FROM (SELECT nationkey FROM su EXCEPT SELECT nationkey FROM cu)
+        |ORDER BY op, nationkey""".stripMargin),
+    Q("topk_orders", (s, d) => Relational.topOrdersByPrice(t(s, d).orders))(
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin),
     // custom whole-operator path: GroupedTopKNode -> strategy ->
     // two-phase heap exec (see graft.plans.GroupedTopK); same result
     // as the row_number window the oracle uses
-    "grouped_topk" -> ((s, d) => {
+    Q("grouped_topk", (s, d) => {
       graft.plans.GroupedTopK.topKPerKey(
           t(s, d).orders.select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice")),
           Seq("o_orderstatus"), Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)
         .orderBy(col("o_orderstatus"), desc("o_totalprice"), asc("o_orderkey"))
-    }),
-    "full_outer_join" -> ((s, d) => Relational.nationPresence(t(s, d))),
-    "theta_join" -> ((s, d) => Relational.lateShipments(t(s, d))),
-    "range_join" -> ((s, d) => Relational.priceBandCounts(t(s, d))),
+    })(
+      """SELECT o_orderstatus, o_orderkey, o_totalprice FROM (
+        | SELECT o_orderstatus, o_orderkey, o_totalprice,
+        |  row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        | FROM orders)
+        |WHERE rn <= 3 ORDER BY o_orderstatus, o_totalprice DESC, o_orderkey""".stripMargin),
+    Q("full_outer_join", (s, d) => Relational.nationPresence(t(s, d)))(
+      """WITH cu AS (SELECT c_nationkey AS k, count(*) AS n_cust FROM customer GROUP BY c_nationkey),
+        | su AS (SELECT s_nationkey AS k, count(*) AS n_supp FROM supplier GROUP BY s_nationkey)
+        |SELECT CAST(coalesce(cu.k, su.k) AS INTEGER) AS nationkey,
+        | coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
+        |FROM cu FULL JOIN su ON cu.k = su.k ORDER BY nationkey""".stripMargin),
+    Q("theta_join", (s, d) => Relational.lateShipments(t(s, d)))(
+      """SELECT o_orderstatus, count(*) AS n_late FROM lineitem JOIN orders
+        | ON l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL '30 days'
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Q("range_join", (s, d) => Relational.priceBandCounts(t(s, d)))(
+      """WITH bands AS (SELECT x AS band, x * 50000.0 AS lo, (x + 1) * 50000.0 AS hi FROM range(12) t(x))
+        |SELECT band, count(*) AS n_orders,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
+        |GROUP BY band ORDER BY band""".stripMargin),
     // large × large inequality join via bin-quantized equi-join — the
     // scale path for |a−b|<=δ predicates (RangeJoins.absDeltaJoin);
     // the broadcast-band variant above stays for small dim sides
-    "binned_range_join" -> ((s, d) => {
+    Q("binned_range_join", (s, d) => {
       val e = t(s, d).events
       val p = e.where(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("value").as("p_val"))
@@ -362,12 +501,22 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_close"),
           min(col("c_val")).as("min_cv"), max(col("c_val")).as("max_cv"))
         .orderBy(col("purchase_id"))
-    }),
-    "approx_distinct" -> ((s, d) => Relational.approxDistincts(t(s, d).lineitem)),
+    })(
+      // the oracle states the predicate directly (DuckDB handles the
+      // quadratic form fine at sf0.01); the engine side must produce the
+      // identical pair set through the bin rewrite
+      """SELECT p.event_id AS purchase_id, count(*) AS n_close,
+        | min(c.value) AS min_cv, max(c.value) AS max_cv
+        |FROM events p JOIN events c
+        | ON p.event_type = 'purchase' AND c.event_type = 'click'
+        | AND abs(p.value - c.value) <= 0.25
+        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin),
+    RowsOnly("approx_distinct", "HyperLogLog estimates are engine-specific")((s, d) =>
+      Relational.approxDistincts(t(s, d).lineitem)),
     // Bloom-filter pre-shuffle semi-join reduction (rows-only: sketch
     // membership has no DuckDB twin; no-false-negative + FPR bounds are
     // property-checked in SketchesSpec)
-    "bloom_filter_probe" -> ((s, d) => {
+    RowsOnly("bloom_filter_probe", "Bloom false positives depend on the engine's hash")((s, d) => {
       val tt = t(s, d)
       Sketches.bloomSemiFilter(
           tt.orders.where(col("o_orderpriority") === "1-URGENT"), "o_orderkey",
@@ -384,7 +533,7 @@ object SparkEntry {
     // relation is
     // quasi-id-cardinality-sized (a broadcastable rollup at any row
     // scale); the flags are the go/no-go a data release reads
-    "k_anonymity_audit" -> ((s, d) =>
+    Q("k_anonymity_audit", (s, d) =>
       t(s, d).orders
         .groupBy(col("o_orderstatus"), col("o_orderpriority"),
           year(col("o_orderdate")).cast("long").as("order_year"))
@@ -392,14 +541,21 @@ object SparkEntry {
           countDistinct(col("o_custkey")).as("n_distinct_sensitive"))
         .withColumn("k_anonymous", col("n_rows") >= 150)
         .withColumn("l_diverse", col("n_distinct_sensitive") >= 143)
-        .orderBy("o_orderstatus", "o_orderpriority", "order_year")),
+        .orderBy("o_orderstatus", "o_orderpriority", "order_year"))(
+      // straight rollup + integer thresholds; year() is BIGINT in
+      // DuckDB, the Spark side casts to match
+      """SELECT o_orderstatus, o_orderpriority, year(o_orderdate) AS order_year,
+        | count(*) AS n_rows, count(DISTINCT o_custkey) AS n_distinct_sensitive,
+        | count(*) >= 150 AS k_anonymous,
+        | count(DISTINCT o_custkey) >= 143 AS l_diverse
+        |FROM orders GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
     // the Bloom filter's ONE exact guarantee, hash-checked: no false
     // negatives — every probe row whose key IS in the build set must
     // survive the filter, so the true members that pass equal the
     // true members outright (false POSITIVES stay rows-only in
     // bloom_filter_probe; they're the approximate part). A broken
     // hash/bit path loses a member and the count unhashes
-    "bloom_no_false_negatives" -> ((s, d) => {
+    Q("bloom_no_false_negatives", (s, d) => {
       val tt = t(s, d)
       val urgent = tt.orders.where(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey")).truncateLineage // build + 2 semi probes
@@ -412,47 +568,82 @@ object SparkEntry {
         .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")
         .agg(count(lit(1)).as("n_true_passed"))
       nTrue.crossJoin(broadcast(nPassed))
-    }),
+    })(
+      // no-false-negatives is EXACT: true members that pass the filter
+      // == true members, both counts one relational semi-join
+      """WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
+        | c AS (SELECT count(*) AS n FROM lineitem l
+        |        WHERE EXISTS (SELECT 1 FROM u WHERE u.o_orderkey = l.l_orderkey))
+        |SELECT n AS n_true_members, n AS n_true_passed FROM c""".stripMargin),
     // sketch-based percentiles (rows-only by design, like approx_distinct:
     // the sketch is engine-specific; the exact twin is `percentiles`)
-    "approx_percentiles" -> ((s, d) => t(s, d).orders
-      .groupBy(col("o_orderstatus"))
-      .agg(percentile_approx(col("o_totalprice"), lit(0.5), lit(1000)).as("p50_approx"),
-        percentile_approx(col("o_totalprice"), lit(0.99), lit(1000)).as("p99_approx"),
-        count(lit(1)).as("n"))
-      .orderBy(col("o_orderstatus"))),
-    "pivot_agg" -> ((s, d) => Relational.pivotReturnFlagQty(t(s, d).lineitem)),
+    RowsOnly("approx_percentiles",
+        "percentile sketches are engine-specific; percentiles is the exact twin")((s, d) =>
+      t(s, d).orders
+        .groupBy(col("o_orderstatus"))
+        .agg(percentile_approx(col("o_totalprice"), lit(0.5), lit(1000)).as("p50_approx"),
+          percentile_approx(col("o_totalprice"), lit(0.99), lit(1000)).as("p99_approx"),
+          count(lit(1)).as("n"))
+        .orderBy(col("o_orderstatus"))),
+    Q("pivot_agg", (s, d) => Relational.pivotReturnFlagQty(t(s, d).lineitem))(
+      """SELECT l_linestatus,
+        | CAST(sum(CAST(CASE WHEN l_returnflag = 'A' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS A,
+        | CAST(sum(CAST(CASE WHEN l_returnflag = 'N' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS N,
+        | CAST(sum(CAST(CASE WHEN l_returnflag = 'R' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS R
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
     // ordered string aggregation (listagg): deterministic via sort_array
-    "string_agg" -> ((s, d) => t(s, d).nation
+    Q("string_agg", (s, d) => t(s, d).nation
       .groupBy(col("n_regionkey").cast("int").as("regionkey"))
       .agg(concat_ws(",", sort_array(collect_list(col("n_name")))).as("names"),
         count(lit(1)).as("n"))
-      .orderBy(col("regionkey"))),
+      .orderBy(col("regionkey")))(
+      """SELECT CAST(n_regionkey AS INTEGER) AS regionkey,
+        | string_agg(n_name, ',' ORDER BY n_name) AS names, count(*) AS n
+        |FROM nation GROUP BY n_regionkey ORDER BY regionkey""".stripMargin),
     // array-function breadth over tokenized documents: distinct, sort,
     // slice, join — all codegen'd builtins
-    "array_funcs" -> ((s, d) => t(s, d).documents
+    Q("array_funcs", (s, d) => t(s, d).documents
       .select(col("doc_id"),
         array_sort(array_distinct(
           filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_distinct"),
         concat_ws("|", slice(col("toks"), 1, 3)).as("first3"))
-      .orderBy(col("doc_id"))),
-    "unpivot_long" -> ((s, d) => Relational.unpivotLineitemMeasures(t(s, d).lineitem)),
+      .orderBy(col("doc_id")))(
+      """WITH tk AS (SELECT doc_id,
+        |  list_sort(list_distinct(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0))) AS toks
+        |  FROM documents)
+        |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_distinct,
+        | array_to_string(toks[1:3], '|') AS first3
+        |FROM tk ORDER BY doc_id""".stripMargin),
+    Q("unpivot_long", (s, d) => Relational.unpivotLineitemMeasures(t(s, d).lineitem))(
+      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
+        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
+        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
+        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
     // correlated scalar subquery through the SQL surface: orders priced
     // 1.5x above their customer's average (exact decimal avg on both
     // sides so the filter boundary is deterministic)
-    "scalar_subquery" -> ((s, d) => {
+    Q("scalar_subquery", (s, d) => {
       t(s, d).orders.createOrReplaceTempView("orders_v")
       s.sql("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders_v o
               |WHERE o_totalprice > 1.5 * (SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
               |                            FROM orders_v o2 WHERE o2.o_custkey = o.o_custkey)
               |ORDER BY o_orderkey""".stripMargin)
-    }),
-    "percentiles" -> ((s, d) => Relational.pricePercentiles(t(s, d).orders)),
+    })(
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
+        |WHERE o_totalprice > 1.5 * (SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
+        |                            FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+        |ORDER BY o_orderkey""".stripMargin),
+    Q("percentiles", (s, d) => Relational.pricePercentiles(t(s, d).orders))(
+      """SELECT o_orderstatus, round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+        | round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+        | round(quantile_cont(o_totalprice, 0.99), 4) AS p99, count(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // skew-safe salted join: same result as the plain join, verified
     // against the plain-join oracle
-    "salted_join" -> ((s, d) => {
+    Q("salted_join", (s, d) => {
       val tt = t(s, d)
       Relational.saltedJoin(
           tt.lineitem.withColumnRenamed("l_suppkey", "suppkey"),
@@ -460,33 +651,80 @@ object SparkEntry {
         .groupBy(col("s_name"))
         .agg(count(lit(1)).as("n_items"), graft.functions.dsum2(col("l_quantity")).as("sum_qty"))
         .orderBy(col("s_name"))
-    }),
-    "corr_stats" -> ((s, d) => Relational.quantityPriceCorr(t(s, d).lineitem)),
-    "regression_agg" -> ((s, d) => Relational.regressionByFlag(t(s, d).lineitem)),
+    })(
+      """SELECT s_name, count(*) AS n_items,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY s_name ORDER BY s_name""".stripMargin),
+    Q("corr_stats", (s, d) => Relational.quantityPriceCorr(t(s, d).lineitem))(
+      """SELECT l_returnflag, count(*) AS n,
+        | (count(*) * CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |   - CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE))
+        | / (sqrt(count(*) * CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |      - CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE))
+        |    * sqrt(count(*) * CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |      - CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)))
+        |  AS corr_qty_price
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Q("regression_agg", (s, d) => Relational.regressionByFlag(t(s, d).lineitem))(
+      // identical moment formulas and parenthesization as the Spark side
+      // (closed-form OLS from exact decimal sums — see regressionByFlag)
+      """WITH m AS (SELECT l_returnflag, count(*) AS n,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
+        |  CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sxy,
+        |  CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sxx,
+        |  CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS syy
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, n AS n_rows,
+        |  (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
+        |  (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept,
+        |  ((n*sxy - sx*sy) * (n*sxy - sx*sy)) / ((n*sxx - sx*sx) * (n*syy - sy*sy)) AS r2
+        |FROM m ORDER BY l_returnflag""".stripMargin),
     // native Generator (UDTF) through the SQL surface: word trigrams of
     // every document in one sliding pass, no intermediate token arrays
-    "ngram_udtf" -> ((s, d) => {
+    Q("ngram_udtf", (s, d) => {
       t(s, d).documents.createOrReplaceTempView("docs_ng")
       s.sql("""SELECT ngram, count(*) AS n
               |FROM docs_ng LATERAL VIEW word_ngrams(text, 3) g AS ngram
               |GROUP BY ngram HAVING count(*) >= 3
               |ORDER BY ngram""".stripMargin)
-    }),
+    })(
+      // trigram grid via generate_series — same tokenization (\s+ split,
+      // drop empties) as the WordNGrams generator
+      // explicit whitespace class: Java \s includes \x0B, RE2 \s does not
+      """WITH toks AS (SELECT list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l
+        |              FROM documents),
+        | tg AS (SELECT l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS ngram
+        |        FROM (SELECT l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3))
+        |SELECT ngram, count(*) AS n FROM tg GROUP BY ngram HAVING count(*) >= 3
+        |ORDER BY ngram""".stripMargin),
     // co-located join over pre-bucketed tables: zero shuffle Exchange
     // in the join+agg plan (BucketingSpec asserts it); result matches
     // the plain-join oracle
-    "bucketed_join" -> ((s, d) => {
+    Q("bucketed_join", (s, d) => {
       val tt = t(s, d)
       graft.plans.Bucketing.colocatedSpendPerCustomer(s, tt.customer, tt.orders)
         .orderBy("c_custkey")
-    }),
+    })(
+      """SELECT c_custkey, count(*) AS n_orders,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
+        |FROM customer JOIN orders ON o_custkey = c_custkey
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
     // cost-based optimization: ANALYZE'd catalog tables + CBO join
     // reorder — the query is WRITTEN fact-first, the optimizer joins
     // the filtered dim first (CboSpec asserts the reorder happens)
-    "cbo_star_join" -> ((s, d) =>
-      graft.plans.Cbo.segmentRevenue(s, d).orderBy("c_mktsegment")),
+    Q("cbo_star_join", (s, d) =>
+      graft.plans.Cbo.segmentRevenue(s, d).orderBy("c_mktsegment"))(
+      """SELECT c_mktsegment, count(*) AS n_items,
+        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |WHERE c.c_mktsegment = 'BUILDING'
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // JSON source/sink round trip: parquet -> json -> json scan -> agg
-    "json_roundtrip" -> ((s, d) => {
+    Q("json_roundtrip", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-json").toString
       t(s, d).orders.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").json(tmp)
@@ -495,13 +733,16 @@ object SparkEntry {
         .groupBy(col("o_orderstatus"))
         .agg(graft.functions.dsum2(col("o_totalprice")).as("sum_price"), count(lit(1)).as("n"))
         .orderBy(col("o_orderstatus"))
-    }),
+    })(
+      """SELECT o_orderstatus,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // the C4/OSCAR corpus container: gzip-framed JSON lines. Write the
     // corpus as .jsonl.gz (require() proves the codec engaged, not a
     // silent plain-text fallback), read it back with an explicit
     // schema, and account per language — docs, chars, DISTINCT texts —
     // so a decompression bug that drops or mangles lines unhashes
-    "jsonl_gz_roundtrip" -> ((s, d) => {
+    Q("jsonl_gz_roundtrip", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-jsonlgz").toString
       t(s, d).documents.select(col("doc_id"), col("lang"), col("text"))
         .write.mode("overwrite").option("compression", "gzip").json(tmp)
@@ -514,13 +755,17 @@ object SparkEntry {
           sum(length(col("text"))).as("sum_chars"),
           countDistinct(col("text")).as("n_texts"))
         .orderBy("lang")
-    }),
+    })(
+      """SELECT lang, count(*) AS n_docs,
+        | CAST(sum(length(text)) AS BIGINT) AS sum_chars,
+        | count(DISTINCT text) AS n_texts
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
     // corrupt-record ACCOUNTING on a JSONL ingest: every 13th line
     // truncated mid-string (deterministic damage), PERMISSIVE parse
     // preserves it in _corrupt, the audit counts the loss and
     // checksums the survivors — neither FAILFAST's dead job nor
     // DROPMALFORMED's silent shrink
-    "json_bad_records" -> ((s, d) => {
+    Q("json_bad_records", (s, d) => {
       val stage = java.nio.file.Files.createTempDirectory("graft-badjson").toString
       t(s, d).documents
         .select(col("doc_id"),
@@ -530,10 +775,23 @@ object SparkEntry {
         .coalesce(1).write.mode("overwrite").text(stage)
       graft.sources.Jsonl.audit(
         graft.sources.Jsonl.readAudited(s, stage, "doc_id LONG, lang STRING, text STRING"))
-    }),
-    "ref_bin_histogram" -> ((s, d) => TextOps.refBinHistogram(t(s, d).documents).orderBy("bin")),
+    })(
+      // the damage is doc_id arithmetic, so the audit is closed-form
+      """SELECT count(*) AS n_rows,
+        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_good,
+        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
+        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 0 ELSE doc_id END) AS BIGINT) AS good_id_sum
+        |FROM documents""".stripMargin),
+    Q("ref_bin_histogram", (s, d) => TextOps.refBinHistogram(t(s, d).documents).orderBy("bin"))(
+      // the reference's affine char-sum hash (map_reduce.cpp:214-217) is
+      // SQL-expressible — ASCII corpus, so ascii(c) == the byte the C
+      // code sums
+      s"""$W, dw AS (SELECT DISTINCT word FROM w WHERE length(word) > 0)
+         |SELECT CAST((coalesce(list_sum(list_transform(string_split(word, ''), c -> 22 + 23 * (ascii(c) - 14))), 0) % 1024 + 1024) % 1024 AS BIGINT) AS bin,
+         | count(*) AS n_words
+         |FROM dw GROUP BY bin ORDER BY bin""".stripMargin),
     // typed Aggregator UDAF (SURVEY.md §2.10): exact top-k by count
-    "topk_udaf" -> ((s, d) => {
+    Q("topk_udaf", (s, d) => {
       val topk = udaf(new graft.functions.TopKByCount(100),
         org.apache.spark.sql.Encoders.STRING)
       TextOps.words(t(s, d).documents)
@@ -541,12 +799,12 @@ object SparkEntry {
         .select(explode(col("tk")).as("e"))
         .select(col("e._1").as("word"), col("e._2").as("cnt"))
         .orderBy(desc("cnt"), asc("word"))
-    }),
+    })(wordcountTop100TwinSql),
     // the TypedImperativeAggregate twin of topk_udaf: same Misra-Gries
     // semantics, raw-JVM-object buffer with length-prefixed binary
     // serialization instead of encoder round trips (functions
     // .TopKByCountAgg); same oracle
-    "topk_imperative" -> ((s, d) => {
+    Q("topk_imperative", (s, d) => {
       val agg = org.apache.spark.sql.GraftSqlShim.column(
         graft.functions.TopKByCountAgg(
           org.apache.spark.sql.GraftSqlShim.expression(col("word")), 100)
@@ -556,16 +814,21 @@ object SparkEntry {
         .select(explode(col("tk")).as("e"))
         .select(col("e.value").as("word"), col("e.cnt").as("cnt"))
         .orderBy(desc("cnt"), asc("word"))
-    }),
+    })(
+      // imperative-aggregate twin must produce the identical exact top-k
+      wordcountTop100TwinSql),
     // SQL entry point + SparkSessionExtensions-registered native fn
-    "sql_api" -> ((s, d) => {
+    Q("sql_api", (s, d) => {
       t(s, d).embeddings.createOrReplaceTempView("emb_v")
       s.sql("""SELECT label, count(*) AS n,
               | round(max(vec_dot(embedding, embedding)), 6) AS max_sq_norm
               |FROM emb_v GROUP BY label ORDER BY label""".stripMargin)
-    }),
+    })(
+      """SELECT label, count(*) AS n,
+        | round(max(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))), 6) AS max_sq_norm
+        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin),
     // GROUPING SETS through the SQL surface
-    "grouping_sets" -> ((s, d) => {
+    Q("grouping_sets", (s, d) => {
       t(s, d).lineitem.createOrReplaceTempView("lineitem_v")
       s.sql("""SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
               | coalesce(l_linestatus, 'ALL') AS linestatus,
@@ -573,7 +836,13 @@ object SparkEntry {
               | count(*) AS n
               |FROM lineitem_v GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
               |ORDER BY returnflag, linestatus""".stripMargin)
-    }),
+    })(
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+        | coalesce(l_linestatus, 'ALL') AS linestatus,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | count(*) AS n
+        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+        |ORDER BY returnflag, linestatus""".stripMargin),
     // CSV source/sink round trip: parquet -> csv -> csv scan -> agg
     // the CSV corner that corrupts real pipelines: embedded commas,
     // quotes AND newlines. RFC-4180 quote-doubling on write (escape =
@@ -581,7 +850,7 @@ object SparkEntry {
     // the oracle computes the same aggregate from the CONSTRUCTED
     // text directly — hash equality proves the round trip lost
     // nothing through the quoting layer
-    "csv_quoted_roundtrip" -> ((s, d) => {
+    Q("csv_quoted_roundtrip", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(lit("a,\"q\" "), col("text"), lit("\nline2 "), col("doc_id").cast("string")).as("text"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-csvq").toString
@@ -592,8 +861,24 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_rows"), sum(col("fp")).as("fp_sum"))
         .crossJoin(broadcast(back.agg(sum(length(col("text"))).as("total_chars"))))
         .select(col("n_rows"), col("total_chars"), col("fp_sum"))
-    }),
-    "csv_roundtrip" -> ((s, d) => {
+    })(
+      s"""WITH fx AS (SELECT doc_id, 'a,"q" ' || text || chr(10) || 'line2 ' || CAST(doc_id AS VARCHAR) AS text
+         |            FROM documents),
+         | cw AS (SELECT doc_id, list_filter(list_transform(
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+         |    t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws FROM fx),
+         | h AS (SELECT doc_id, list_transform(ws, w ->
+         |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
+         |  FROM cw),
+         | f AS (SELECT doc_id,
+         |    CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
+         |      (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
+         |  FROM h)
+         |SELECT count(*) AS n_rows,
+         | (SELECT CAST(sum(length(text)) AS BIGINT) FROM fx) AS total_chars,
+         | CAST(sum(fp) AS BIGINT) AS fp_sum
+         |FROM f""".stripMargin),
+    Q("csv_roundtrip", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
       t(s, d).lineitem.select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
         .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -603,16 +888,59 @@ object SparkEntry {
         .groupBy(col("l_returnflag"))
         .agg(graft.functions.dsum2(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
         .orderBy(col("l_returnflag"))
-    }),
+    })(
+      """SELECT l_returnflag,
+        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // ---- M2: windows (analytic + event-time) ----
-    "window_funcs" -> ((s, d) => Windows.perUserAnalytics(t(s, d).events)),
-    "asof_join" -> ((s, d) => Windows.lastClickBeforePurchase(t(s, d).events)),
-    "interval_join" -> ((s, d) => Windows.purchasesWithRecentClicks(t(s, d).events)),
-    "window_ranks" -> ((s, d) => Windows.perUserRanks(t(s, d).events)),
+    Q("window_funcs", (s, d) => Windows.perUserAnalytics(t(s, d).events))(
+      """WITH e AS (SELECT event_id, user_id, event_type, value, CAST(ts AS TIMESTAMP) AS tsu FROM events)
+        |SELECT event_id, user_id, event_type, value,
+        | CAST(row_number() OVER w AS BIGINT) AS rn,
+        | lag(value, 1) OVER w AS prev_value,
+        | lead(event_type, 1) OVER w AS next_type,
+        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
+        | count(*) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS events_so_far,
+        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY tsu
+        |   RANGE BETWEEN INTERVAL '30 minutes' PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30m_value
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)
+        |ORDER BY user_id, rn""".stripMargin),
+    Q("asof_join", (s, d) => Windows.lastClickBeforePurchase(t(s, d).events))(
+      """WITH e AS (SELECT event_id, user_id, event_type, value, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | x AS (SELECT event_id, user_id, event_type,
+        |   last_value(CASE WHEN event_type = 'click' THEN tsu END IGNORE NULLS) OVER w AS prev_click_ts,
+        |   last_value(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS) OVER w AS prev_click_value
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        |SELECT event_id, user_id, prev_click_ts, prev_click_value FROM x
+        |WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin),
+    Q("interval_join", (s, d) => Windows.purchasesWithRecentClicks(t(s, d).events))(IntervalJoinSql),
+    Q("window_ranks", (s, d) => Windows.perUserRanks(t(s, d).events))(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS tsu FROM events)
+        |SELECT event_id, user_id, dense_rank() OVER w AS drnk, ntile(4) OVER w AS nt,
+        | percent_rank() OVER w AS prank, cume_dist() OVER w AS cdist
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)
+        |ORDER BY event_id""".stripMargin),
     // ordered view -> click -> purchase funnel, each stage anchored at
     // the first qualifying event of the previous stage
-    "funnel_daily" -> ((s, d) => Windows.funnelDaily(t(s, d).events)),
+    Q("funnel_daily", (s, d) => Windows.funnelDaily(t(s, d).events))(
+      // each stage: first qualifying event at-or-after the previous
+      // stage's anchor, per (day, user); day rollups join on the day
+      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id, event_type,
+        |                  CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | v AS (SELECT day, user_id, min(tsu) AS t_view FROM e WHERE event_type = 'view' GROUP BY 1, 2),
+        | c AS (SELECT e.day, e.user_id, min(e.tsu) AS t_click FROM e JOIN v USING (day, user_id)
+        |        WHERE e.event_type = 'click' AND e.tsu >= v.t_view GROUP BY 1, 2),
+        | b AS (SELECT e.day, e.user_id, min(e.tsu) AS t_buy FROM e JOIN c USING (day, user_id)
+        |        WHERE e.event_type = 'purchase' AND e.tsu >= c.t_click GROUP BY 1, 2),
+        | nv AS (SELECT day, count(*) AS n_view FROM v GROUP BY day),
+        | nc AS (SELECT day, count(*) AS n_click FROM c GROUP BY day),
+        | nb AS (SELECT day, count(*) AS n_buy FROM b GROUP BY day)
+        |SELECT nv.day, nv.n_view, coalesce(nc.n_click, 0) AS n_click, coalesce(nb.n_buy, 0) AS n_buy
+        |FROM nv LEFT JOIN nc USING (day) LEFT JOIN nb USING (day) ORDER BY nv.day""".stripMargin),
     // MATCH_RECOGNIZE-style sequence matching, sessionize-first:
     // per-SESSION event strings in total (ts, event_id) order,
     // regex-counted for the view→click→purchase pattern, rolled up
@@ -620,18 +948,49 @@ object SparkEntry {
     // whole-history
     // 12-hour gap: the events table's median per-user inter-event gap
     // is ~7h, so shorter gaps sessionize every event alone
-    "event_pattern_match" -> ((s, d) =>
-      Windows.eventPatternMatches(t(s, d).events, gapMinutes = 720).orderBy("user_id")),
+    Q("event_pattern_match", (s, d) =>
+      Windows.eventPatternMatches(t(s, d).events, gapMinutes = 720).orderBy("user_id"))(
+      // sessionize-first: the same gaps-and-islands split (>= 12-hour
+      // µs-integer gap breaks, lag-null fall-through to 0) before the
+      // per-SESSION token string — a pattern cannot span sessions on
+      // either engine
+      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu,
+        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        | g AS (SELECT user_id, event_id, event_type, tsu,
+        |        CASE WHEN us - lag(us) OVER w >= 43200000000 THEN 1 ELSE 0 END AS brk
+        |       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)),
+        | sx AS (SELECT user_id, event_id, event_type, tsu,
+        |         sum(brk) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+        |        FROM g),
+        | t AS (SELECT user_id, sess,
+        |        string_agg('[' || event_type || ']', '' ORDER BY tsu, event_id) AS seq
+        |       FROM sx GROUP BY 1, 2),
+        | m AS (SELECT user_id,
+        |        CAST(sum(len(regexp_extract_all(seq, '\[view\]\[click\]\[purchase\]'))) AS BIGINT) AS n_matches
+        |        FROM t GROUP BY 1)
+        |SELECT user_id, n_matches FROM m WHERE n_matches > 0
+        |ORDER BY user_id""".stripMargin),
     // cohort retention matrix: first-activity-week cohorts × activity
     // weeks, rate against cohort size — nothing windows the raw events
-    "cohort_retention" -> ((s, d) =>
+    Q("cohort_retention", (s, d) =>
       Windows.cohortRetention(t(s, d).events)
-        .orderBy("cohort_week", "activity_week")),
+        .orderBy("cohort_week", "activity_week"))(
+      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | cohort AS (SELECT user_id, min(date_trunc('week', tsu)) AS cohort_week FROM e GROUP BY 1),
+        | sizes AS (SELECT cohort_week, count(*) AS cohort_size FROM cohort GROUP BY 1),
+        | active AS (SELECT DISTINCT user_id, date_trunc('week', tsu) AS activity_week FROM e),
+        | m AS (SELECT cohort_week, activity_week, count(*) AS n_users
+        |       FROM active JOIN cohort USING (user_id) GROUP BY 1, 2)
+        |SELECT cohort_week, activity_week, n_users,
+        |       round(CAST(n_users AS DOUBLE) / cohort_size, 6) AS retention
+        |FROM m JOIN sizes USING (cohort_week)
+        |ORDER BY cohort_week, activity_week""".stripMargin),
     // Spark 4 recursive CTE (UnionLoop): dense monthly spine over the
     // orders date range; LEFT JOIN zero-fills order-free months. The
     // spine is driver-free iteration INSIDE the engine — the recursive
     // union materializes per step, 80 steps here, each a one-row add.
-    "recursive_spine" -> ((s, d) => {
+    Q("recursive_spine", (s, d) => {
       t(s, d).orders.createOrReplaceTempView("orders_rs")
       s.sql("""WITH RECURSIVE spine(mon) AS (
               |  SELECT CAST('1995-01-01 00:00:00' AS TIMESTAMP)
@@ -643,42 +1002,236 @@ object SparkEntry {
               |       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
               |FROM spine s LEFT JOIN orders_rs o ON date_trunc('MONTH', o.o_orderdate) = s.mon
               |GROUP BY s.mon ORDER BY s.mon""".stripMargin)
-    }),
+    })(
+      """WITH RECURSIVE spine(mon) AS (
+        |  SELECT TIMESTAMP '1995-01-01 00:00:00'
+        |  UNION ALL
+        |  SELECT mon + INTERVAL 1 MONTH FROM spine WHERE mon < TIMESTAMP '2001-08-01 00:00:00'
+        |)
+        |SELECT s.mon, count(o.o_orderkey) AS n_orders,
+        |       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM spine s LEFT JOIN orders o ON date_trunc('month', o.o_orderdate) = s.mon
+        |GROUP BY s.mon ORDER BY s.mon""".stripMargin),
     // ---- deep-relational plan shapes (TPC-H-flavored, TpchDepth) ----
-    "q2_min_cost_supplier" -> ((s, d) => TpchDepth.q2MinCostSupplier(t(s, d))),
-    "q6_forecast_revenue" -> ((s, d) => TpchDepth.q6ForecastRevenue(t(s, d))),
-    "q9_product_profit" -> ((s, d) => TpchDepth.q9ProductProfit(t(s, d))),
-    "q11_important_stock" -> ((s, d) => TpchDepth.q11ImportantStock(t(s, d))),
-    "q7_nation_volume" -> ((s, d) => TpchDepth.q7NationVolume(t(s, d))),
-    "q8_market_share" -> ((s, d) => TpchDepth.q8MarketShare(t(s, d))),
-    "q10_returned_items" -> ((s, d) => TpchDepth.q10ReturnedItems(t(s, d))),
-    "q13_customer_distribution" -> ((s, d) => TpchDepth.q13CustomerDistribution(t(s, d))),
-    "q4_priority_exists" -> ((s, d) => TpchDepth.q4PriorityExists(t(s, d))),
-    "q12_priority_split" -> ((s, d) => TpchDepth.q12PrioritySplit(t(s, d))),
-    "q14_promo_revenue" -> ((s, d) => TpchDepth.q14PromoRevenue(t(s, d))),
-    "q16_supplier_cnt" -> ((s, d) => TpchDepth.q16SupplierCount(t(s, d))),
-    "q18_large_volume" -> ((s, d) => TpchDepth.q18LargeVolume(t(s, d))),
-    "q19_disjunctive" -> ((s, d) => TpchDepth.q19Disjunctive(t(s, d))),
-    "q21_waiting_suppliers" -> ((s, d) => TpchDepth.q21WaitingSuppliers(t(s, d))),
-    "q22_dormant_customers" -> ((s, d) => TpchDepth.q22DormantCustomers(t(s, d))),
+    Q("q2_min_cost_supplier", (s, d) => TpchDepth.q2MinCostSupplier(t(s, d)))(
+      """WITH rs AS (
+        |  SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'EUROPE'),
+        | cost AS (
+        |  SELECT l_partkey, l_suppkey,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS cost
+        |  FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM rs)
+        |  GROUP BY 1, 2),
+        | mc AS (SELECT l_partkey, min(cost) AS min_cost FROM cost GROUP BY 1)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, s_suppkey, cost
+        |FROM cost JOIN mc USING (l_partkey)
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN rs ON l_suppkey = s_suppkey
+        |WHERE cost = min_cost AND p_size <= 15 AND p_type = 'SMALL'
+        |ORDER BY s_acctbal DESC, p_partkey, s_suppkey LIMIT 20""".stripMargin),
+    Q("q6_forecast_revenue", (s, d) => TpchDepth.q6ForecastRevenue(t(s, d)))(
+      """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+    Q("q9_product_profit", (s, d) => TpchDepth.q9ProductProfit(t(s, d)))(
+      """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    - 0.8 * p_retailprice * l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%red%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
+    Q("q11_important_stock", (s, d) => TpchDepth.q11ImportantStock(t(s, d)))(
+      """WITH v AS (
+        |  SELECT l_partkey,
+        |    CAST(sum(CAST(l_quantity * p_retailprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS vd
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  GROUP BY 1)
+        |SELECT l_partkey, CAST(vd AS DOUBLE) AS value FROM v
+        |WHERE vd * 1800 > (SELECT CAST(sum(vd) AS DECIMAL(38,2)) FROM v)
+        |ORDER BY value DESC, l_partkey""".stripMargin),
+    Q("q7_nation_volume", (s, d) => TpchDepth.q7NationVolume(t(s, d)))(
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
+        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS volume
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    Q("q8_market_share", (s, d) => TpchDepth.q8MarketShare(t(s, d)))(
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        | round(
+        |   CAST(sum(CAST(CASE WHEN n1.n_name = 'NATION_5'
+        |       THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
+        |   / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE),
+        |   6) AS mkt_share
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
+        |  AND o_custkey IN (
+        |    SELECT c_custkey FROM customer
+        |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |    JOIN region ON n2.n_regionkey = r_regionkey
+        |    WHERE r_name = 'AMERICA')
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q10_returned_items", (s, d) => TpchDepth.q10ReturnedItems(t(s, d)))(
+      """SELECT c_custkey, c_name, c_acctbal, n_name,
+        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1995-10-01'
+        |  AND o_orderdate < TIMESTAMP '1996-01-01'
+        |GROUP BY 1, 2, 3, 4
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    Q("q13_customer_distribution", (s, d) => TpchDepth.q13CustomerDistribution(t(s, d)))(
+      """WITH cc AS (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN (
+        |    SELECT o_orderkey, o_custkey FROM orders
+        |    WHERE o_orderpriority <> '1-URGENT') o
+        |  ON c_custkey = o_custkey
+        |  GROUP BY 1)
+        |SELECT c_count, count(*) AS custdist
+        |FROM cc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Q("q4_priority_exists", (s, d) => TpchDepth.q4PriorityExists(t(s, d)))(
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders o
+        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
+        |              AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Q("q12_priority_split", (s, d) => TpchDepth.q12PrioritySplit(t(s, d)))(
+      """SELECT l_linestatus,
+        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
+        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+    Q("q14_promo_revenue", (s, d) => TpchDepth.q14PromoRevenue(t(s, d)))(
+      """SELECT 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
+        |       / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS promo_revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1995-09-01' AND l_shipdate < TIMESTAMP '1995-10-01'""".stripMargin),
+    Q("q16_supplier_cnt", (s, d) => TpchDepth.q16SupplierCount(t(s, d)))(
+      """SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_size <= 15 AND p_type <> 'PROMO'
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_type
+        |ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin),
+    Q("q18_large_volume", (s, d) => TpchDepth.q18LargeVolume(t(s, d)))(
+      """WITH big AS (
+        |  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 110.0)
+        |SELECT c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+        |FROM orders JOIN big ON o_orderkey = l_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY total_qty DESC, o_orderkey LIMIT 20""".stripMargin),
+    Q("q19_disjunctive", (s, d) => TpchDepth.q19Disjunctive(t(s, d)))(
+      """SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+    Q("q21_waiting_suppliers", (s, d) => TpchDepth.q21WaitingSuppliers(t(s, d)))(
+      """WITH li AS (
+        |  SELECT l.l_orderkey, l.l_suppkey, l.l_shipdate, o.o_orderdate
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |  WHERE o.o_orderstatus = 'F'),
+        | late AS (SELECT DISTINCT l_orderkey AS lo, l_suppkey AS ls FROM li
+        |          WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY),
+        | ontime AS (SELECT DISTINCT l_orderkey AS oo, l_suppkey AS os FROM li
+        |            WHERE l_shipdate <= o_orderdate + INTERVAL 90 DAY)
+        |SELECT s_suppkey, s_name, count(*) AS numwait
+        |FROM late JOIN supplier ON ls = s_suppkey
+        |WHERE EXISTS (SELECT 1 FROM ontime WHERE oo = lo AND os <> ls)
+        |GROUP BY s_suppkey, s_name ORDER BY numwait DESC, s_suppkey LIMIT 20""".stripMargin),
+    Q("q22_dormant_customers", (s, d) => TpchDepth.q22DormantCustomers(t(s, d)))(
+      """WITH a AS (
+        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS a
+        |  FROM customer WHERE c_acctbal > 0)
+        |SELECT c_nationkey, count(*) AS numcust,
+        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |FROM customer, a
+        |WHERE c_acctbal > 0.5 * a.a
+        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+        |                  AND o_orderdate >= TIMESTAMP '1998-06-01')
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
     // correlated-subquery decorrelation shapes (scalar max over a
     // reused view; correlated scalar avg; nested correlated aggregate)
-    "q15_top_supplier" -> ((s, d) => TpchDepth.q15TopSupplier(t(s, d))),
-    "q17_small_qty_revenue" -> ((s, d) => TpchDepth.q17SmallQuantityRevenue(t(s, d))),
-    "q20_dominant_suppliers" -> ((s, d) => TpchDepth.q20DominantSuppliers(t(s, d))),
+    Q("q15_top_supplier", (s, d) => TpchDepth.q15TopSupplier(t(s, d)))(
+      // the revenue view appears twice (scalar max + row pick) — both
+      // derive total_revenue through the same exact-decimal sum, so the
+      // equality compares identical doubles on both engines
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |    CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev JOIN supplier ON s_suppkey = l_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin),
+    Q("q17_small_qty_revenue", (s, d) => TpchDepth.q17SmallQuantityRevenue(t(s, d)))(
+      // integer-exact threshold: q < 0.2*avg(q) algebra'd to 5*n*q <
+      // sum(q) so no float division reaches the comparison on either side
+      """WITH li AS (
+        |  SELECT l_partkey, l_quantity, l_extendedprice
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_brand = 'Brand#4'),
+        | pp AS (
+        |  SELECT l_partkey AS pk, sum(CAST(l_quantity AS BIGINT)) AS sum_qty, count(*) AS n_li
+        |  FROM li GROUP BY 1)
+        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / CAST(7.0 AS DOUBLE) AS avg_yearly
+        |FROM li JOIN pp ON l_partkey = pk
+        |WHERE CAST(l_quantity AS BIGINT) * 5 * n_li < sum_qty""".stripMargin),
+    Q("q20_dominant_suppliers", (s, d) => TpchDepth.q20DominantSuppliers(t(s, d)))(
+      // nested correlated aggregate, integer dominance test (6*qty_ps >
+      // qty_p, a >1/6 share) — the per-part rollup reads the
+      // (part,supplier) aggregate, never the fact table twice
+      """WITH shipped AS (
+        |  SELECT l_partkey, l_suppkey, sum(CAST(l_quantity AS BIGINT)) AS qty_ps
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_name LIKE 'red%'
+        |  GROUP BY 1, 2),
+        | pp AS (SELECT l_partkey, sum(qty_ps) AS qty_p FROM shipped GROUP BY 1)
+        |SELECT s_suppkey, s_name, s_acctbal
+        |FROM supplier
+        |WHERE s_suppkey IN (
+        |  SELECT DISTINCT l_suppkey FROM shipped JOIN pp USING (l_partkey)
+        |  WHERE qty_ps * 6 > qty_p)
+        |ORDER BY s_suppkey""".stripMargin),
     // iterative graph analytics: deterministic PageRank over the
     // supplier↔customer trade graph (both directions, so no node is a
     // pure sink). 5 fixed iterations; per-edge contributions rounded
     // then decimal-summed so the hash compare survives cross-engine
     // float accumulation — the twin unrolls the same 5 steps as CTEs
-    "page_rank" -> ((s, d) => {
+    Q("page_rank", (s, d) => {
       val tt = t(s, d)
       val pairs = tt.lineitem.join(tt.orders, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_suppkey").as("sk"), col("o_custkey").as("ck")).distinct()
       val edges = pairs.select(col("sk").as("src"), (col("ck") + 100000L).as("dst"))
         .unionAll(pairs.select((col("ck") + 100000L).as("src"), col("sk").as("dst")))
       Graph.pageRank(edges).orderBy("node")
-    }),
+    })(pageRankTwinSql),
     // distributed time-series subsequence search: top-k z-normalized
     // matches of a literal pattern over every user's event-value
     // series, via the SEGMENTED window builder (per-group state is
@@ -687,14 +1240,25 @@ object SparkEntry {
     // Every per-window float is an ORDERED-array fold, so both
     // engines compute bit-identical doubles — a hash-exact similarity
     // search
-    "series_subseq_topk" -> ((s, d) =>
-      Series.znormSubsequenceTopKSegmented(t(s, d).events, SeriesPattern, k = 20)),
-    "json_props_agg" -> ((s, d) => Windows.propsKeyStats(t(s, d).events)),
+    Q("series_subseq_topk", (s, d) =>
+      Series.znormSubsequenceTopKSegmented(t(s, d).events, SeriesPattern, k = 20))(seriesTwinSql),
+    Q("json_props_agg", (s, d) => Windows.propsKeyStats(t(s, d).events))(
+      """SELECT event_type, count(DISTINCT CAST(json_extract(props, '$.k') AS INTEGER)) AS n_k,
+        | CAST(sum(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
+        | min(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
+        | max(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // Spark 4 VARIANT: open-schema payload parsing with typed extraction
-    "variant_props_agg" -> ((s, d) => Windows.variantPropsStats(t(s, d).events)),
-    "tumbling_agg" -> ((s, d) => Windows.tumblingCounts(t(s, d).events)),
-    "sliding_agg" -> ((s, d) => Windows.slidingCounts(t(s, d).events)),
-    "session_agg" -> ((s, d) => Windows.sessionize(t(s, d).events)),
+    Q("variant_props_agg", (s, d) => Windows.variantPropsStats(t(s, d).events))(
+      // the variant round trip must preserve the typed values exactly
+      """SELECT event_type AS vtype, count(*) AS n,
+        | CAST(sum(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
+        | min(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
+        | max(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Q("tumbling_agg", (s, d) => Windows.tumblingCounts(t(s, d).events))(tumblingAggTwinSql),
+    Q("sliding_agg", (s, d) => Windows.slidingCounts(t(s, d).events))(slidingAggTwinSql),
+    Q("session_agg", (s, d) => Windows.sessionize(t(s, d).events))(sessionAggTwinSql),
     // RFM segmentation: recency/frequency/monetary quartiles per user
     // (quartiles with user_id tie-break, anchored at the table's max
     // ts). The event-scale work is ONE aggregate; the three quartile
@@ -702,7 +1266,7 @@ object SparkEntry {
     // TotalOrder.globalNtile — range-partitioned rank + integer
     // bucket arithmetic, so even a billion-user dimension never hits
     // a single-task ORDER BY (the plain ntile window would)
-    "rfm_scores" -> ((s, d) => {
+    Q("rfm_scores", (s, d) => {
       import graft.operators.TotalOrder
       val e = t(s, d).events
       val anchor = e.agg(max(unix_micros(col("ts"))).as("anchor_us"))
@@ -738,12 +1302,25 @@ object SparkEntry {
           col("rec_us"), col("r"), col("f"), col("m"),
           concat(col("r"), col("f"), col("m")).as("rfm"))
         .orderBy("user_id")
-    }),
+    })(
+      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, CAST(value AS DECIMAL(18,2)) AS v FROM events),
+        | a AS (SELECT max(us) AS anchor_us FROM e),
+        | per AS (SELECT user_id, max(us) AS last_us, count(*) AS freq,
+        |         CAST(sum(v) AS DOUBLE) AS mon FROM e GROUP BY 1),
+        | w AS (SELECT user_id, freq, mon, (SELECT anchor_us FROM a) - last_us AS rec_us FROM per),
+        | q AS (SELECT user_id, freq, mon, rec_us,
+        |   CAST(ntile(4) OVER (ORDER BY rec_us, user_id) AS BIGINT) AS r,
+        |   CAST(ntile(4) OVER (ORDER BY freq DESC, user_id) AS BIGINT) AS f,
+        |   CAST(ntile(4) OVER (ORDER BY mon DESC, user_id) AS BIGINT) AS m
+        |  FROM w)
+        |SELECT user_id, freq, round(mon, 2) AS mon, rec_us, r, f, m,
+        | CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) AS rfm
+        |FROM q ORDER BY user_id""".stripMargin),
     // recency weighting: exponentially decayed event mass per type,
     // half-life 7 days, anchored at the table's own max ts (a
     // deterministic anchor — "now" would unhash every run); rounded
     // exp terms DECIMAL-summed, the LM ladder's rounded-log device
-    "decayed_counts" -> ((s, d) => {
+    Q("decayed_counts", (s, d) => {
       val e = t(s, d).events
       val anchor = e.agg(max(unix_micros(col("ts"))).as("anchor_us"))
       e.crossJoin(broadcast(anchor))
@@ -754,11 +1331,23 @@ object SparkEntry {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("w")).cast("double"), 6).as("decayed_n"))
         .orderBy("event_type")
-    }),
+    })(
+      // the decay constant is interpolated from the SAME Scala double
+      // (shortest round-trip repr), so both engines start from one bit
+      // pattern; exp + round(12) is the accepted rounded-log device
+      s"""WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+         | a AS (SELECT max(epoch_us(tsu)) AS anchor_us FROM e),
+         | w AS (SELECT event_type,
+         |   CAST(round(exp(${-math.log(2.0) / 7.0} *
+         |     (CAST((SELECT anchor_us FROM a) - epoch_us(tsu) AS DOUBLE) / 86400000000.0)), 12)
+         |     AS DECIMAL(38,12)) AS w
+         |  FROM e)
+         |SELECT event_type, count(*) AS n, round(CAST(sum(w) AS DOUBLE), 6) AS decayed_n
+         |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin),
     // conversion latency: first view → first subsequent purchase per
     // (user, day); per-day nearest-rank p50/p90 of the exact-integer
     // µs lag (the event_gaps discipline — no interpolation)
-    "conversion_lags" -> ((s, d) => {
+    Q("conversion_lags", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, d).events.select(to_date(col("ts")).as("day"), col("user_id"),
         col("event_type"), unix_micros(col("ts")).as("us"))
@@ -778,11 +1367,27 @@ object SparkEntry {
           max(when(col("rn") === ceil(col("n") * lit(0.9)).cast("long"), col("lag_us"))).as("p90_lag_us"),
           max(col("lag_us")).as("max_lag_us"))
         .orderBy("day")
-    }),
+    })(
+      // nearest-rank picks on exact integer µs lags; ties at a rank all
+      // carry the same value, so tie order cannot flap the pick
+      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id, event_type,
+        |           epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        | v AS (SELECT day, user_id, min(us) AS t_view FROM e WHERE event_type = 'view' GROUP BY 1, 2),
+        | p AS (SELECT e.day, e.user_id, v.t_view, min(e.us) AS t_buy
+        |       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
+        |       WHERE e.event_type = 'purchase' AND e.us >= v.t_view GROUP BY 1, 2, 3),
+        | l AS (SELECT day, t_buy - t_view AS lag_us FROM p),
+        | r AS (SELECT day, lag_us, row_number() OVER (PARTITION BY day ORDER BY lag_us) AS rn,
+        |       count(*) OVER (PARTITION BY day) AS n FROM l)
+        |SELECT day, max(n) AS n_conversions,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN lag_us END) AS p50_lag_us,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN lag_us END) AS p90_lag_us,
+        | max(lag_us) AS max_lag_us
+        |FROM r GROUP BY day ORDER BY day""".stripMargin),
     // marketing attribution: each purchase credited to the user's
     // latest preceding click/view (last_value IGNORE NULLS over the
     // time-ordered stream — no self-join), 'none' when cold
-    "attribution_last_touch" -> ((s, d) => {
+    Q("attribution_last_touch", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, d).events.select(col("user_id"), col("event_id"), col("event_type"),
         to_date(col("ts")).as("day"), unix_micros(col("ts")).as("us"))
@@ -797,11 +1402,21 @@ object SparkEntry {
             .as("attributed"))
         .groupBy(col("day"), col("attributed")).agg(count(lit(1)).as("n"))
         .orderBy("day", "attributed")
-    }),
+    })(
+      // last_value IGNORE NULLS over the (us, event_id)-ordered stream
+      """WITH e AS (SELECT user_id, event_id, event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+        |           epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        | t AS (SELECT user_id, event_type, day,
+        |       last_value(CASE WHEN event_type IN ('click', 'view') THEN event_type END IGNORE NULLS)
+        |         OVER (PARTITION BY user_id ORDER BY us, event_id
+        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt
+        |       FROM e)
+        |SELECT day, coalesce(lt, 'none') AS attributed, count(*) AS n
+        |FROM t WHERE event_type = 'purchase' GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // path mining: top user journeys as event-type trigrams over each
     // user's time-ordered stream — per-user state is the type LIST
     // (array fold, no self-join); top-50 is TakeOrdered
-    "event_paths" -> ((s, d) => {
+    Q("event_paths", (s, d) => {
       val seqs = t(s, d).events
         .groupBy(col("user_id"))
         .agg(expr("transform(array_sort(collect_list(struct(ts, event_id, event_type)))," +
@@ -812,11 +1427,21 @@ object SparkEntry {
             " i -> concat(types[i-1], '>', types[i], '>', types[i+1]))")).as("path"))
         .groupBy(col("path")).agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), asc("path")).limit(50)
-    }),
+    })(
+      // ordered list() per user (rn-keyed, never unnest order), trigram
+      // paths by 1-based list indexing; (n desc, path) is total
+      """WITH o AS (SELECT user_id, event_type,
+        |        row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
+        |        FROM events),
+        | s AS (SELECT user_id, list(event_type ORDER BY rn) AS types FROM o GROUP BY 1),
+        | p AS (SELECT types[i] || '>' || types[i+1] || '>' || types[i+2] AS path
+        |       FROM (SELECT types, unnest(generate_series(1, len(types) - 2)) AS i
+        |             FROM s WHERE len(types) >= 3) z)
+        |SELECT path, count(*) AS n FROM p GROUP BY 1 ORDER BY n DESC, path LIMIT 50""".stripMargin),
     // behavior features: first-order Markov transition counts between
     // consecutive event types per user, with rounded row-conditional
     // probabilities
-    "event_transitions" -> ((s, d) => {
+    Q("event_transitions", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val pairs = t(s, d).events
@@ -827,47 +1452,124 @@ object SparkEntry {
         .withColumn("p", round(col("n").cast("double") /
           sum(col("n")).over(Window.partitionBy(col("prev_type"))).cast("double"), 6))
         .orderBy("prev_type", "event_type")
-    }),
+    })(
+      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | o AS (SELECT user_id, event_type,
+        |        lag(event_type) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev_type FROM e),
+        | c AS (SELECT prev_type, event_type, count(*) AS n FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT prev_type, event_type, n,
+        | round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
+        |FROM c ORDER BY prev_type, event_type""".stripMargin),
     // robust data-quality screen: median + MAD with the 5-MAD rule in
     // exact decimal over nearest-rank picks — the outlier test that
     // mean/stddev screens fail because outliers drag them
-    "value_outliers" -> ((s, d) =>
-      Profiling.madOutliers(t(s, d).events).orderBy("event_type")),
+    Q("value_outliers", (s, d) =>
+      Profiling.madOutliers(t(s, d).events).orderBy("event_type"))(
+      """WITH e AS (SELECT event_type AS grp, event_id AS id, CAST(value AS DECIMAL(18,2)) AS v FROM events),
+        | r1 AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY v, id) AS rn,
+        |        count(*) OVER (PARTITION BY grp) AS n FROM e),
+        | med AS (SELECT grp, v AS med FROM r1 WHERE rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT)),
+        | dv AS (SELECT e.grp, e.id, e.v, med.med, abs(e.v - med.med) AS dev FROM e JOIN med USING (grp)),
+        | r2 AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY dev, id) AS rn,
+        |        count(*) OVER (PARTITION BY grp) AS n FROM dv),
+        | mad AS (SELECT grp, dev AS mad FROM r2 WHERE rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT))
+        |SELECT dv.grp AS event_type, count(*) AS n,
+        | CAST(max(dv.med) AS DOUBLE) AS med, CAST(max(mad.mad) AS DOUBLE) AS mad,
+        | CAST(sum(CASE WHEN dv.dev > mad.mad * 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
+        | CAST(max(dv.dev) AS DOUBLE) AS max_dev
+        |FROM dv JOIN mad USING (grp)
+        |GROUP BY dv.grp ORDER BY dv.grp""".stripMargin),
     // the robust center MAD flags around: clamp into the nearest-rank
     // [p05, p95] band, then exact-decimal means raw vs winsorized
-    "winsorized_stats" -> ((s, d) =>
-      Profiling.winsorizedStats(t(s, d).events).orderBy("event_type")),
+    Q("winsorized_stats", (s, d) =>
+      Profiling.winsorizedStats(t(s, d).events).orderBy("event_type"))(
+      // nearest-rank band edges (q forced DOUBLE), decimal clamp,
+      // exact-decimal sums with one presentation division each
+      """WITH e AS (SELECT event_type AS grp, event_id AS id, CAST(value AS DECIMAL(18,2)) AS v FROM events),
+        | r AS (SELECT grp, id, v, row_number() OVER (PARTITION BY grp ORDER BY v, id) AS rn,
+        |       count(*) OVER (PARTITION BY grp) AS n FROM e),
+        | ed AS (SELECT grp,
+        |        max(CASE WHEN rn = greatest(CAST(ceil(n * CAST(0.05 AS DOUBLE)) AS BIGINT), 1) THEN v END) AS p_lo,
+        |        max(CASE WHEN rn = CAST(ceil(n * CAST(0.95 AS DOUBLE)) AS BIGINT) THEN v END) AS p_hi
+        |        FROM r GROUP BY grp),
+        | c AS (SELECT e.grp, e.v, ed.p_lo, ed.p_hi,
+        |       CASE WHEN e.v < ed.p_lo THEN ed.p_lo
+        |            WHEN e.v > ed.p_hi THEN ed.p_hi ELSE e.v END AS cv
+        |       FROM e JOIN ed USING (grp))
+        |SELECT grp AS event_type, count(*) AS n,
+        | CAST(max(p_lo) AS DOUBLE) AS p05, CAST(max(p_hi) AS DOUBLE) AS p95,
+        | round(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_raw,
+        | round(CAST(sum(cv) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_winsorized
+        |FROM c GROUP BY grp ORDER BY grp""".stripMargin),
     // rollup-vs-fact drift census: header totals against decimal-
     // summed line amounts with a permille tolerance — exact verdicts
-    "order_reconcile" -> ((s, d) =>
-      Relational.orderReconcile(t(s, d).lineitem, t(s, d).orders)),
+    Q("order_reconcile", (s, d) =>
+      Relational.orderReconcile(t(s, d).lineitem, t(s, d).orders))(
+      // per-line amount = one fixed-association double product rounded
+      // 4 dp, DECIMAL-summed; verdicts compare exact decimals
+      """WITH line AS (SELECT l_orderkey AS ok,
+        |  CAST(round(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax), 4) AS DECIMAL(28,4)) AS amt
+        |  FROM lineitem),
+        | comp AS (SELECT ok, sum(amt) AS computed FROM line GROUP BY 1),
+        | j AS (SELECT CAST(o.o_totalprice AS DECIMAL(18,2)) AS tot,
+        |       c.computed IS NULL AS no_lines,
+        |       abs(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DECIMAL(28,4))
+        |         - coalesce(c.computed, CAST(0 AS DECIMAL(28,4)))) AS dev
+        |       FROM orders o LEFT JOIN comp c ON o.o_orderkey = c.ok)
+        |SELECT count(*) AS n_orders,
+        | CAST(sum(CASE WHEN no_lines THEN 1 ELSE 0 END) AS BIGINT) AS n_no_lines,
+        | CAST(sum(CASE WHEN dev = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
+        | CAST(sum(CASE WHEN dev * 1000 <= CAST(tot AS DECIMAL(28,4)) * 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_within_tol,
+        | CAST(max(dev) AS DOUBLE) AS max_dev
+        |FROM j""".stripMargin),
     // EXACT heavy hitters over the cleaned word stream: every word
     // with frequency > total/2000 — the provably-complete hot-word
     // blocklist (pigeonhole: < 2000 such words can exist) that the
     // count-min sketch only candidates for. Two map-side-combined
     // aggregates; share as floor-ppm integer arithmetic
-    "heavy_hitters" -> ((s, d) =>
+    Q("heavy_hitters", (s, d) =>
       Profiling.heavyHitters(TextOps.words(t(s, d).documents), "word", k = 2000)
-        .orderBy("key")),
+        .orderBy("key"))(
+      // the strict n·k > total cut in pure BIGINT arithmetic; ppm via
+      // floor of one identical IEEE division (DuckDB CAST would round)
+      s"""$WDoc,
+         | c AS (SELECT word AS key, count(*) AS n FROM w GROUP BY 1),
+         | t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
+         |SELECT key, n, CAST((CAST(n AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS share_ppm
+         |FROM c CROSS JOIN t WHERE n * 2000 > total ORDER BY key""".stripMargin),
     // volume-spike tripwire: per-type daily counts scored against the
     // preceding 7 observations' mean/stddev (row-frame, exact integer
     // frame sums, fixed-association float finish, rounded-z cut)
-    "rolling_anomaly" -> ((s, d) =>
-      Series.rollingAnomaly(t(s, d).events).orderBy("key", "day")),
+    Q("rolling_anomaly", (s, d) =>
+      Series.rollingAnomaly(t(s, d).events).orderBy("key", "day"))(
+      // row-based lookback frame of exact integer sums; mean/var/z in a
+      // fixed-association float finish; the anomaly cut compares the
+      // ROUNDED z on both engines
+      rollingAnomalyTwin),
     // grow/decay screen: per-type OLS slope of daily volume with all
     // four moment sums exact longs and ONE double division at the end
-    "trend_slopes" -> ((s, d) =>
-      Series.trendSlopes(t(s, d).events).orderBy("key")),
+    Q("trend_slopes", (s, d) =>
+      Series.trendSlopes(t(s, d).events).orderBy("key"))(
+      // all four moment sums exact BIGINTs; slope/intercept are the
+      // same fixed-order double ops as the Spark side
+      trendSlopesTwin),
     // WHEN the feed changed: integer-exact CUSUM peak (n·Sᵢ − i·Σy —
     // no float accumulation, association-proof under segment trees)
-    "change_points" -> ((s, d) =>
-      Series.changePoints(t(s, d).events).orderBy("key")),
+    Q("change_points", (s, d) =>
+      Series.changePoints(t(s, d).events).orderBy("key"))(
+      // n·Sᵢ − i·Σy in pure BIGINT arithmetic — segment-tree window
+      // aggregation can't move an integer sum; top-1 by |peak|, day asc
+      changePointsTwinSql),
     // volume = trend + seasonal + residual per (type, day): centered
     // observed-day MA trend, epoch-arithmetic day-of-week seasonal
     // means, and the residual a feed alert should threshold instead
     // of raw volume (which confounds weekly shape with anomalies)
-    "stl_decompose" -> ((s, d) =>
-      Series.stlDecompose(t(s, d).events).orderBy("key", "day")),
+    Q("stl_decompose", (s, d) =>
+      Series.stlDecompose(t(s, d).events).orderBy("key", "day"))(
+      // same daily CTE in micro-integer units (floor of int*1e6/cnt is
+      // provably exact — see the operator doc); dow via
+      // (day − epoch-Monday) % 7, not DAYOFWEEK (anchors differ)
+      stlTwinSql),
     // equi-depth histogram of a ROW-SCALE fact column — the
     // statistics-building primitive a CBO's column stats and a
     // feature-binning step both need: 10 equal-population bins with
@@ -878,9 +1580,26 @@ object SparkEntry {
     // the dynamic-batching planner: equal-population length buckets
     // (the equidepth ntile device) with exact pad-token accounting vs
     // the naive global-max padding cost
-    "length_bucket_plan" -> ((s, d) =>
-      Corpus.lengthBucketPlan(t(s, d).documents).orderBy("bucket")),
-    "equidepth_bins" -> ((s, d) => {
+    Q("length_bucket_plan", (s, d) =>
+      Corpus.lengthBucketPlan(t(s, d).documents).orderBy("bucket"))(
+      // the twin's plain ntile window IS the single-task sort the Spark
+      // side's range-partitioned globalNtile avoids — same answer by
+      // the SQL-standard bucket arithmetic (TotalOrderSpec proves the
+      // equivalence for even and ragged bucket counts)
+      // ntile window twin of the range-partitioned globalNtile (the
+      // equidepth device); pad arithmetic is exact BIGINT, ppm floored
+      """WITH tc AS (SELECT doc_id, CAST(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_toks FROM documents),
+        | b AS (SELECT doc_id, n_toks, ntile(8) OVER (ORDER BY n_toks, doc_id) AS bucket FROM tc),
+        | g AS (SELECT max(n_toks) AS gmax FROM tc),
+        | a AS (SELECT bucket, count(*) AS n_docs, min(n_toks) AS min_len,
+        |        max(n_toks) AS max_len, CAST(sum(n_toks) AS BIGINT) AS sum_tokens
+        |       FROM b GROUP BY 1)
+        |SELECT CAST(bucket AS BIGINT) AS bucket, n_docs, min_len, max_len, sum_tokens,
+        | n_docs * max_len - sum_tokens AS pad_tokens,
+        | CAST(floor((n_docs * max_len - sum_tokens) * 1000000 / (n_docs * max_len)) AS BIGINT) AS pad_ppm,
+        | n_docs * g.gmax - sum_tokens AS naive_pad_tokens
+        |FROM a CROSS JOIN g ORDER BY bucket""".stripMargin),
+    Q("equidepth_bins", (s, d) => {
       import graft.operators.TotalOrder
       val li = t(s, d).lineitem.select(
         col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("v"),
@@ -893,15 +1612,32 @@ object SparkEntry {
           max(col("v")).cast("double").as("hi"),
           sum(col("v")).cast("double").as("mass"))
         .orderBy("bin")
-    }),
+    })(
+      """WITH li AS (SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
+        |            l_orderkey AS ok, l_linenumber AS ln FROM lineitem),
+        | b AS (SELECT v, ntile(10) OVER (ORDER BY v, ok, ln) AS bin FROM li)
+        |SELECT CAST(bin AS BIGINT) AS bin, count(*) AS n,
+        | CAST(min(v) AS DOUBLE) AS lo, CAST(max(v) AS DOUBLE) AS hi,
+        | CAST(sum(v) AS DOUBLE) AS mass
+        |FROM b GROUP BY bin ORDER BY bin""".stripMargin),
     // robust center under unequal row mass: exact-decimal nearest-rank
     // on cumulative weight — a real data value, no interpolation
-    "weighted_median" -> ((s, d) =>
+    Q("weighted_median", (s, d) =>
       Relational.weightedMedian(t(s, d).lineitem,
-        "l_returnflag", "l_extendedprice", "l_quantity").orderBy("l_returnflag")),
+        "l_returnflag", "l_extendedprice", "l_quantity").orderBy("l_returnflag"))(
+      // exact-decimal cumulative-weight pick; DECIMAL compares, one
+      // presentation cast at the end
+      """WITH g AS (SELECT l_returnflag AS grp, CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
+        |           sum(CAST(l_quantity AS DECIMAL(18,2))) AS w FROM lineitem GROUP BY 1, 2),
+        | r AS (SELECT grp, v, w,
+        |       sum(w) OVER (PARTITION BY grp ORDER BY v ROWS UNBOUNDED PRECEDING) AS cw,
+        |       sum(w) OVER (PARTITION BY grp) AS tw FROM g)
+        |SELECT grp AS l_returnflag, CAST(min(v) AS DOUBLE) AS weighted_median,
+        |       CAST(max(tw) AS DOUBLE) AS total_weight
+        |FROM r WHERE cw * 2 >= tw GROUP BY grp ORDER BY grp""".stripMargin),
     // orphan census over the star schema's four FK edges — one join +
     // folded count per edge, no orphan list materialized
-    "fk_integrity" -> ((s, d) => {
+    Q("fk_integrity", (s, d) => {
       val tt = t(s, d)
       Relational.fkIntegrity(Seq(
         ("lineitem.l_orderkey->orders", tt.lineitem, "l_orderkey", tt.orders, "o_orderkey"),
@@ -909,17 +1645,39 @@ object SparkEntry {
         ("lineitem.l_suppkey->supplier", tt.lineitem, "l_suppkey", tt.supplier, "s_suppkey"),
         ("orders.o_custkey->customer", tt.orders, "o_custkey", tt.customer, "c_custkey")))
         .orderBy("fk_edge")
-    }),
+    })(Seq(
+      ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+      ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
+      ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+      ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"))
+      .map { case (name, child, fk, parent, pk) =>
+        s"""(SELECT '$name' AS fk_edge, count(*) AS n_rows,
+           |  CAST(sum(CASE WHEN p.k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
+           | FROM (SELECT $fk AS k FROM $child) c
+           | LEFT JOIN (SELECT DISTINCT $pk AS k FROM $parent) p ON c.k = p.k)""".stripMargin
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY fk_edge")),
     // Benford first-digit screen on prices: string-extracted digit
     // (no log10 at power-of-ten boundaries), floor-ppm shares vs the
     // log10(1+1/d) expectation, signed deviation per digit
-    "benford_screen" -> ((s, d) =>
-      Profiling.benfordScreen(t(s, d).lineitem, "l_extendedprice").orderBy("digit")),
+    Q("benford_screen", (s, d) =>
+      Profiling.benfordScreen(t(s, d).lineitem, "l_extendedprice").orderBy("digit"))(
+      // digit via string extraction from floor(|x|); expectation is the
+      // same ln/ln-10 two-op double on both engines, floored to ppm
+      """WITH d AS (SELECT CAST(substring(CAST(CAST(floor(abs(l_extendedprice)) AS DECIMAL(38,0)) AS VARCHAR), 1, 1) AS BIGINT) AS digit
+        |           FROM lineitem WHERE abs(l_extendedprice) >= 1),
+        | c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
+        | t AS (SELECT digit, n, sum(n) OVER () AS total FROM c),
+        | f AS (SELECT digit, n,
+        |        CAST((CAST(n AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS share_ppm,
+        |        CAST(floor(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0) * 1000000.0) AS BIGINT) AS benford_ppm
+        |        FROM t)
+        |SELECT digit, n, share_ppm, benford_ppm, share_ppm - benford_ppm AS dev_ppm
+        |FROM f ORDER BY digit""".stripMargin),
     // pre-shuffle skew audit over lineitem's join/agg keys: distinct
     // count, hottest-key and top-10 share (floor-ppm), normalized
     // Shannon entropy (rounded-nats DECIMAL sum) — the report that
     // decides salting vs AQE before a 100 TB shuffle runs
-    "skew_report" -> ((s, d) => {
+    Q("skew_report", (s, d) => {
       // branch decision from the parquet-footer stat — zero Spark jobs
       // spent picking the plan (VERDICT r13 #4)
       val tt = t(s, d)
@@ -927,14 +1685,37 @@ object SparkEntry {
         Seq("l_orderkey", "l_suppkey", "l_returnflag", "l_linestatus"),
         sizeHint = Some(tt.rowCountStat("lineitem")))
         .orderBy("key_col")
-    }),
+    })(
+      // per-key-column block UNION ALL'd; entropy terms are
+      // round(p·-ln p, 9) DECIMAL-summed (the LM-ladder device), bits =
+      // nats / ln 2 in one final double op
+      Seq("l_orderkey", "l_suppkey", "l_returnflag", "l_linestatus")
+      .map { kc =>
+        s"""(WITH c AS (SELECT CAST($kc AS VARCHAR) AS key, count(*) AS n FROM lineitem GROUP BY 1),
+           |  r AS (SELECT key, n, row_number() OVER (ORDER BY n DESC, key) AS rk,
+           |        sum(n) OVER () AS tot FROM c),
+           |  t AS (SELECT key, n, rk, tot, CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS p FROM r),
+           |  h AS (SELECT key, n, rk, tot, CAST(round(p * -ln(p), 9) AS DECIMAL(38,9)) AS h_term FROM t),
+           |  a AS (SELECT count(*) AS n_keys, CAST(max(tot) AS BIGINT) AS total,
+           |        max(CASE WHEN rk = 1 THEN n END) AS top1,
+           |        CAST(sum(CASE WHEN rk <= 10 THEN n ELSE 0 END) AS BIGINT) AS top10,
+           |        sum(h_term) AS h_nats FROM h)
+           | SELECT '$kc' AS key_col, n_keys, total,
+           |  CAST((CAST(top1 AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS top1_ppm,
+           |  CAST((CAST(top10 AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS top10_ppm,
+           |  round(CAST(h_nats AS DOUBLE) / ln(2.0), 6) AS entropy_bits,
+           |  round(CASE WHEN n_keys > 1
+           |        THEN CAST(h_nats AS DOUBLE) / ln(CAST(n_keys AS DOUBLE))
+           |        ELSE 0.0 END, 6) AS entropy_norm
+           | FROM a)""".stripMargin
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY key_col")),
     // inter-arrival profile: per-user consecutive-event gaps in exact
     // integer microseconds, NEAREST-RANK percentiles (value at rank
     // ceil(q·n) — engines' interpolating percentiles differ by an ulp
     // and flip rounding boundaries; the picked value is an exact
     // integer, so the hash can't flap) — the burst/bot tell a raw
     // event feed gets screened with
-    "event_gaps" -> ((s, d) => {
+    Q("event_gaps", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val gaps = t(s, d).events
@@ -952,34 +1733,101 @@ object SparkEntry {
           max(when(col("rn") === ceil(col("n") * lit(0.9)).cast("long"), col("gap_us"))).as("p90_gap"),
           max(col("gap_us")).as("max_gap"))
         .orderBy("user_id")
-    }),
+    })(
+      // nearest-rank pick: ceil(q·n) with q forced to DOUBLE (DuckDB's
+      // bare 0.9 is DECIMAL — exact 9.0 where IEEE gives 9.000…002, a
+      // different ceil)
+      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | o AS (SELECT user_id, event_id, tsu,
+        |        lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
+        | g AS (SELECT user_id, epoch_us(tsu) - epoch_us(prev) AS gap_us FROM o WHERE prev IS NOT NULL),
+        | r AS (SELECT user_id, gap_us,
+        |        row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
+        |        count(*) OVER (PARTITION BY user_id) AS n FROM g)
+        |SELECT user_id, count(*) AS n_gaps,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN gap_us END) AS p50_gap,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN gap_us END) AS p90_gap,
+        | max(gap_us) AS max_gap
+        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // ---- M3: LLM-pipeline operators (SURVEY.md §2.11) ----
-    "dedup_exact" -> ((s, d) => Dedup.exactGroups(t(s, d).documents).orderBy("keep_id")),
-    "dedup_hash" -> ((s, d) => Dedup.hashGroups(t(s, d).documents).orderBy("h")),
+    Q("dedup_exact", (s, d) => Dedup.exactGroups(t(s, d).documents).orderBy("keep_id"))(
+      "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents GROUP BY text ORDER BY keep_id"),
+    Q("dedup_hash", (s, d) => Dedup.hashGroups(t(s, d).documents).orderBy("h"))(
+      """SELECT sha256(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY sha256(text) ORDER BY h""".stripMargin),
     // ingest-time incremental dedup: the even-id half of the corpus
     // plays the persisted digest store; the incoming batch dedups
     // within itself then anti-joins the store on the 32-byte digest
-    "incremental_dedup" -> ((s, d) => {
+    Q("incremental_dedup", (s, d) => {
       val docs = t(s, d).documents
       val store = docs.where(col("doc_id") % 2 === 0)
         .select(sha2(col("text"), 256).as("h"))
       Dedup.incrementalDigestDedup(docs, store).orderBy("h")
-    }),
-    "near_dup_jaccard" -> ((s, d) => Dedup.nearestByJaccard(t(s, d).documents).orderBy("doc_id")),
+    })(
+      // batch-internal dedup (min id per digest) then anti-join against
+      // the persisted store — the relational spelling of ingest dedup
+      """WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
+        | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1)
+        |SELECT b.h, b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h
+        |WHERE s.h IS NULL ORDER BY b.h""".stripMargin),
+    Q("near_dup_jaccard", (s, d) => Dedup.nearestByJaccard(t(s, d).documents).orderBy("doc_id"))(
+      // stop-shingle cap mirrored from Dedup.DefaultMaxDf: shingles with
+      // document frequency > 10 are dropped from intersections AND set
+      // sizes on both sides (a no-op at sf0.01, where max df = 7)
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
+        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
+        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |            GROUP BY a.doc_id, b.doc_id),
+        | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
+        |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
+        | sym AS (SELECT doc_a AS doc_id, doc_b AS other_id, jaccard FROM j
+        |          UNION ALL SELECT doc_b AS doc_id, doc_a AS other_id, jaccard FROM j),
+        | r AS (SELECT doc_id, other_id, jaccard,
+        |        row_number() OVER (PARTITION BY doc_id ORDER BY jaccard DESC, other_id) AS rn FROM sym)
+        |SELECT doc_id, other_id, jaccard FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
     // MOSS-style winnowing: rightmost-min-per-window fingerprint
     // selection at density 2/(w+1) with the >= w+k-1-token detection
     // guarantee; selection is one per-doc window over a packed BIGINT
-    "winnowing_fingerprints" -> ((s, d) =>
-      Dedup.winnowingFingerprints(t(s, d).documents).orderBy("doc_id", "fp_pos")),
+    Q("winnowing_fingerprints", (s, d) =>
+      Dedup.winnowingFingerprints(t(s, d).documents).orderBy("doc_id", "fp_pos"))(
+      // winnowing selection replayed verbatim: the packed-BIGINT window
+      // min IS the paper's "smallest hash, rightmost on ties" rule; the
+      // 40-bit md5-prefix hash comes from the same md5 string on both
+      // engines (HexInt40 expands DuckDB's missing conv(hex))
+      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
+         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
+         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
+         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk)
+         |SELECT DISTINCT doc_id, sel // 1048576 AS fp, 1048575 - (sel % 1048576) AS fp_pos
+         |FROM sel WHERE gpos >= 3 ORDER BY doc_id, fp_pos""".stripMargin),
     // the MOSS match step: pairs sharing >= 2 df-capped fingerprints
-    "winnowing_near_dups" -> ((s, d) =>
-      Dedup.winnowingNearDups(t(s, d).documents).orderBy("doc_a", "doc_b")),
+    Q("winnowing_near_dups", (s, d) =>
+      Dedup.winnowingNearDups(t(s, d).documents).orderBy("doc_a", "doc_b"))(
+      // the match step off the same selection chain: distinct (doc, fp),
+      // df-capped at 50 (the stop-shingle posture), pairs sharing >= 2
+      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
+         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
+         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
+         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
+         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
+         | rare AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 50),
+         | c AS (SELECT f.doc_id, f.fp FROM f JOIN rare USING (fp))
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
+         |FROM c a JOIN c b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY 1, 2""".stripMargin),
     // the dedup-cut tuning table: how many pairs (and docs) a Jaccard
     // threshold would merge, per candidate threshold — the artifact a
     // curation team reads before picking THE cut; one pair relation,
     // five broadcast threshold rows
-    "dedup_threshold_sweep" -> ((s, d) => {
+    Q("dedup_threshold_sweep", (s, d) => {
       val ths = Seq(0.02, 0.05, 0.1, 0.5, 0.9)
       val pairs = Dedup.jaccardPairs(t(s, d).documents)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -998,11 +1846,33 @@ object SparkEntry {
           coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
           coalesce(col("n_docs_affected"), lit(0L)).as("n_docs_affected"))
         .orderBy("threshold")
-    }),
+    })(
+      // the jaccard pair chain joined to a threshold relation; the
+      // quotient is the same long/long double division on both sides
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
+        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
+        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |            GROUP BY a.doc_id, b.doc_id),
+        | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
+        |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
+        | th AS (SELECT unnest([0.02, 0.05, 0.1, 0.5, 0.9]) AS threshold),
+        | f AS (SELECT th.threshold, j.doc_a, j.doc_b FROM j JOIN th ON j.jaccard >= th.threshold),
+        | np AS (SELECT threshold, count(*) AS n_pairs FROM f GROUP BY 1),
+        | nd AS (SELECT threshold, count(DISTINCT doc) AS n_docs_affected
+        |        FROM (SELECT threshold, unnest([doc_a, doc_b]) AS doc FROM f) GROUP BY 1)
+        |SELECT th.threshold, coalesce(np.n_pairs, 0) AS n_pairs,
+        | CAST(coalesce(nd.n_docs_affected, 0) AS BIGINT) AS n_docs_affected
+        |FROM th LEFT JOIN np USING (threshold) LEFT JOIN nd USING (threshold)
+        |ORDER BY th.threshold""".stripMargin),
     // the operational check on fingerprint index size: winnowing
     // selects ~2/(w+1) of grams; a density far off that band means a
     // broken window or a degenerate hash
-    "winnowing_density_audit" -> ((s, d) => {
+    Q("winnowing_density_audit", (s, d) => {
       val docs = t(s, d).documents
       val grams = docs
         .select(size(filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))
@@ -1018,12 +1888,27 @@ object SparkEntry {
           floor(col("n_selected") * lit(1000000L) / col("n_grams")).as("density_ppm"),
           (floor(col("n_selected") * lit(1000000L) / col("n_grams"))
             .between(200000L, 600000L)).as("near_theory")) // 2/(w+1) = 0.4
-    }),
+    })(
+      // grams/windows by arithmetic off token counts, selections by the
+      // winnowing chain; density floored ppm
+      s"""WITH tc AS (SELECT CAST(len(list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_toks FROM documents),
+         | gsum AS (SELECT CAST(sum(n_toks - 2 - 3) AS BIGINT) AS n_windows, CAST(sum(n_toks - 2) AS BIGINT) AS n_grams FROM tc WHERE n_toks >= 6),
+         | toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
+         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
+         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
+         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
+         | ns AS (SELECT CAST(count(*) AS BIGINT) AS n_selected FROM
+         |   (SELECT DISTINCT doc_id, sel FROM sel WHERE gpos >= 3))
+         |SELECT g2.n_grams, g2.n_windows, ns.n_selected,
+         | CAST(floor(ns.n_selected * 1000000 / g2.n_grams) AS BIGINT) AS density_ppm,
+         | floor(ns.n_selected * 1000000 / g2.n_grams) BETWEEN 200000 AND 600000 AS near_theory
+         |FROM gsum g2 CROSS JOIN ns""".stripMargin),
     // continuous MOSS: winnowing copy detection against the growing
     // ADMITTED-fingerprint store; a re-posted copy in a later drop is
     // caught by the detection guarantee, batch mates by the lower-id
     // rule — the twin unrolls the 4 batch admissions
-    "streaming_winnowing_ingest" -> ((s, d) => {
+    Q("streaming_winnowing_ingest", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -1039,70 +1924,201 @@ object SparkEntry {
         .join(admitted, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("ok"), lit(false)).as("admitted"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // the 4 batch admissions unrolled: batch = doc_id // per (the
+      // stageDocStream range layout), per-batch df cap, pairwise shared
+      // counts once, then a_b = batch b minus (mate-rejected ∪ rejected
+      // against the union of EARLIER admitted sets) — the recursive
+      // store semantics as plain CTEs
+      def adm(b: Int, priors: Seq[String]) = {
+        val vsStore =
+          if (priors.isEmpty) ""
+          else priors.map(p =>
+            s"AND doc_id NOT IN (SELECT c.d FROM cand c JOIN $p p ON c.e = p.doc_id WHERE c.db = $b)")
+            .mkString(" ", " ", "")
+        s""" a$b AS (SELECT doc_id FROM dd WHERE b = $b
+           |   AND doc_id NOT IN (SELECT d FROM cand WHERE eb = db AND db = $b)$vsStore)""".stripMargin
+      }
+      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
+         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
+         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
+         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
+         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
+         | pc AS (SELECT CAST(max(doc_id) AS BIGINT) // 4 + 1 AS per FROM documents),
+         | fb AS (SELECT doc_id, fp, doc_id // (SELECT per FROM pc) AS b FROM f),
+         | rare AS (SELECT b, fp FROM fb GROUP BY b, fp HAVING count(*) <= 50),
+         | c0 AS (SELECT fb.doc_id, fb.fp, fb.b FROM fb JOIN rare USING (b, fp)),
+         | cand AS (SELECT a.doc_id AS e, d.doc_id AS d, a.b AS eb, d.b AS db
+         |          FROM c0 a JOIN c0 d ON a.fp = d.fp AND a.doc_id < d.doc_id
+         |          GROUP BY 1, 2, 3, 4 HAVING count(*) >= 2),
+         | dd AS (SELECT doc_id, doc_id // (SELECT per FROM pc) AS b FROM documents),
+         |${adm(0, Nil)},
+         |${adm(1, Seq("a0"))},
+         |${adm(2, Seq("a0", "a1"))},
+         |${adm(3, Seq("a0", "a1", "a2"))},
+         | adm AS (SELECT doc_id FROM a0 UNION ALL SELECT doc_id FROM a1
+         |         UNION ALL SELECT doc_id FROM a2 UNION ALL SELECT doc_id FROM a3)
+         |SELECT d.doc_id, (adm.doc_id IS NOT NULL) AS admitted
+         |FROM documents d LEFT JOIN adm ON d.doc_id = adm.doc_id
+         |ORDER BY d.doc_id""".stripMargin
+    },
     // asymmetric containment |S(A)∩S(B)|/|S(A)| — the partial-dup
     // (quote-inside-page) detector Jaccard structurally misses; same
     // df-capped candidate bound as jaccardPairs, directed output,
     // containment rounded before the cut
-    "containment_dups" -> ((s, d) =>
+    Q("containment_dups", (s, d) =>
       Dedup.containmentPairs(t(s, d).documents, minContainment = 0.5)
-        .orderBy("doc_id", "other_id")),
+        .orderBy("doc_id", "other_id"))(
+      // same shingle/df-cap CTEs as near_dup_jaccard, then the DIRECTED
+      // containment projection: inter over the OWNING side's set size,
+      // rounded 6 dp before the >= cut
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
+        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
+        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |            GROUP BY a.doc_id, b.doc_id),
+        | dir AS (SELECT i.doc_a AS doc_id, i.doc_b AS other_id, i.inter, ca.n_sh AS n_own
+        |          FROM inter i JOIN cnt ca ON ca.doc_id = i.doc_a
+        |          UNION ALL
+        |          SELECT i.doc_b AS doc_id, i.doc_a AS other_id, i.inter, cb.n_sh AS n_own
+        |          FROM inter i JOIN cnt cb ON cb.doc_id = i.doc_b),
+        | c AS (SELECT doc_id, other_id, inter, n_own,
+        |        round(CAST(inter AS DOUBLE) / CAST(n_own AS DOUBLE), 6) AS containment FROM dir)
+        |SELECT doc_id, other_id, inter, n_own, containment
+        |FROM c WHERE containment >= CAST(0.5 AS DOUBLE) ORDER BY doc_id, other_id""".stripMargin),
     // the inverse of dedup: share of a doc's shingles that exist
     // nowhere else — template-assembled docs score ≈ 0 even when no
     // single pairwise duplicate exists
-    "novelty_score" -> ((s, d) =>
-      Dedup.noveltyScores(t(s, d).documents).orderBy("doc_id")),
+    Q("novelty_score", (s, d) =>
+      Dedup.noveltyScores(t(s, d).documents).orderBy("doc_id"))(
+      // distinct shingles (the near_dup CTE prefix), df = 1 share
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+        | dfq AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY 1),
+        | a AS (SELECT doc_id, count(*) AS n_shingles,
+        |       CAST(sum(CASE WHEN dfq.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
+        |       FROM sh0 JOIN dfq USING (shingle) GROUP BY 1)
+        |SELECT doc_id, n_shingles, n_unique,
+        | round(CAST(n_unique AS DOUBLE) / CAST(n_shingles AS DOUBLE), 6) AS novelty
+        |FROM a ORDER BY doc_id""".stripMargin),
     // substring-level duplication (Lee et al. 2022 shape): strided
     // 32-char window grid, grouped on the span, kept where >= 2 docs
-    "dup_spans" -> ((s, d) =>
-      Dedup.duplicatedSpans(t(s, d).documents, k = 32, stride = 8, minDocs = 2).orderBy("span")),
+    Q("dup_spans", (s, d) =>
+      Dedup.duplicatedSpans(t(s, d).documents, k = 32, stride = 8, minDocs = 2).orderBy("span"))(
+      // strided 32-char window grid, grouped on the span itself
+      """WITH sp AS (
+        |  SELECT doc_id, substring(text, CAST(i AS INTEGER), 32) AS span
+        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 31, 8)) AS i
+        |        FROM documents WHERE length(text) >= 32) t)
+        |SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ
+        |FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2 ORDER BY span""".stripMargin),
     // duplicated spans coalesced into maximal per-document regions
     // (gaps-and-islands over the flagged window grid) — the byte
     // ranges a cleaning pass actually cuts
-    "dup_regions" -> ((s, d) =>
+    Q("dup_regions", (s, d) =>
       Dedup.duplicatedRegions(t(s, d).documents, k = 32, stride = 8, minDocs = 2)
-        .orderBy("doc_id", "region_start")),
+        .orderBy("doc_id", "region_start"))(
+      """WITH sp AS (
+        |  SELECT doc_id, i AS pos, substring(text, CAST(i AS INTEGER), 32) AS span
+        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 31, 8)) AS i
+        |        FROM documents WHERE length(text) >= 32) t),
+        | flagged AS (SELECT span FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
+        | hits AS (SELECT doc_id, pos, pos + 31 AS e FROM sp JOIN flagged USING (span)),
+        | marked AS (SELECT doc_id, pos, e,
+        |    CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
+        |         THEN 1 ELSE 0 END AS ni
+        |    FROM hits),
+        | isl AS (SELECT doc_id, pos, e,
+        |    sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM marked)
+        |SELECT doc_id, min(pos) AS region_start, max(e) AS region_end,
+        |       max(e) - min(pos) + 1 AS region_len
+        |FROM isl GROUP BY doc_id, island
+        |ORDER BY doc_id, region_start""".stripMargin),
     // inverted index: the canonical MapReduce workload one past
     // wordcount — term -> (df, cf, sorted postings). The df cap BINDS
     // at sf0.01 (drops the ~15 hottest of 31 terms): hot-term posting
     // state is bounded by construction, and the twin mirrors the cap
-    "inverted_index" -> ((s, d) =>
-      Retrieval.invertedIndex(t(s, d).documents, maxDf = RetrievalMaxDf).orderBy("word")),
+    Q("inverted_index", (s, d) =>
+      Retrieval.invertedIndex(t(s, d).documents, maxDf = RetrievalMaxDf).orderBy("word"))(
+      // HAVING df <= cap mirrors the enforced stop-term drop on the
+      // Spark side (Retrieval.cappedTermFreqs)
+      s"""$WDoc, tfq AS (SELECT word, doc_id, count(*) AS tf FROM w GROUP BY 1, 2)
+         |SELECT word, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf,
+         | string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
+         |FROM tfq GROUP BY word HAVING count(*) <= $RetrievalMaxDf ORDER BY word""".stripMargin),
     // BM25 ranked retrieval over the index's statistics (fixed-order
     // per-term fold + round(4) for cross-engine determinism); query
     // terms above the df cap are stop terms and contribute 0
-    "bm25_topk" -> ((s, d) =>
-      Retrieval.bm25TopK(t(s, d).documents, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)),
+    Q("bm25_topk", (s, d) =>
+      Retrieval.bm25TopK(t(s, d).documents, Bm25Terms, k = 20, maxDf = RetrievalMaxDf))(
+      // BM25 with the Spark side's exact literals and association:
+      // ln(idf+1) * (tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)), summed
+      // over the terms in fixed order, rounded to 4 decimals after the
+      // sum; dfq's HAVING mirrors the enforced stop-term cap (a query
+      // term above it contributes 0 on both engines)
+      bm25TwinSql),
     // positional-index phrase query: exact consecutive-token match
     // with occurrence counts — what bag-of-words BM25 cannot answer
-    "phrase_search" -> ((s, d) =>
-      Retrieval.phraseSearch(t(s, d).documents, PhraseTerms).orderBy("doc_id")),
+    Q("phrase_search", (s, d) =>
+      Retrieval.phraseSearch(t(s, d).documents, PhraseTerms).orderBy("doc_id"))(phraseTwinSql),
     // proximity (slop) query between phrase and bag-of-words: every
     // all-terms doc with its EXACT minimal covering token span and
     // the ≤window verdict — the positional index answering "near",
     // not just "adjacent" or "anywhere"
-    "proximity_search" -> ((s, d) =>
+    Q("proximity_search", (s, d) =>
       Retrieval.proximitySearch(t(s, d).documents, PhraseTerms, window = 12)
-        .orderBy("doc_id")),
+        .orderBy("doc_id")) {
+      // same cleaned positional relation as the phrase twin, then the
+      // m-way per-doc occurrence join and exact min-span aggregate
+      val ts = PhraseTerms
+      val inList = ts.distinct.map(t => s"'$t'").mkString(", ")
+      val eCtes = ts.zipWithIndex.map { case (t, i) =>
+        s" e$i AS (SELECT doc_id, pos AS p$i FROM px WHERE word = '$t')"
+      }.mkString(",\n")
+      val joins = (1 until ts.length).map(i => s"JOIN e$i USING (doc_id)").mkString(" ")
+      val plist = ts.indices.map(i => s"p$i").mkString(", ")
+      s"""WITH toksc AS (SELECT doc_id,
+         |   list_filter(list_transform(string_split_regex(text, '[ \\t\\n\\f\\r]+'),
+         |     x -> lower(regexp_replace(x, '$P', '', 'g'))), x -> length(x) > 0) AS l
+         |  FROM documents),
+         | px AS (SELECT doc_id, l[i] AS word, i AS pos
+         |   FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM toksc) z
+         |   WHERE l[i] IN ($inList)),
+         |$eCtes,
+         | j AS (SELECT e0.doc_id, greatest($plist) - least($plist) + 1 AS span
+         |   FROM e0 $joins)
+         |SELECT doc_id, CAST(min(span) AS BIGINT) AS min_window,
+         | count(*) AS n_combos, min(span) <= 12 AS within
+         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    },
     // model-free document embeddings: feature-hashed TF-IDF in sparse
     // relational form, L2-normalized — similarity retrieval with no
     // embedding column required
-    "tfidf_embed" -> ((s, d) =>
+    Q("tfidf_embed", (s, d) =>
       Retrieval.tfidfHashedVectors(t(s, d).documents, dim = 64)
-        .orderBy("doc_id", "dim_idx")),
+        .orderBy("doc_id", "dim_idx"))(
+      s"""$TfidfVecCtes
+         |SELECT doc_id, dim_idx, v FROM vec ORDER BY doc_id, dim_idx""".stripMargin),
     // cosine top-k against doc 0's hashed vector: broadcast query dims,
     // map-side partial dot products, TakeOrderedAndProject
-    "tfidf_query_topk" -> ((s, d) =>
-      Retrieval.tfidfQueryTopK(t(s, d).documents, queryId = 0L, k = 20, dim = 64)),
+    Q("tfidf_query_topk", (s, d) =>
+      Retrieval.tfidfQueryTopK(t(s, d).documents, queryId = 0L, k = 20, dim = 64))(tfidfTopkTwin),
     // diversified top-k (MMR): greedy λ·rel − (1−λ)·maxSim selection —
     // coverage instead of k near-copies of the best hit; k bounded
     // driver rounds, each one distributed argmax
-    "mmr_topk" -> ((s, d) =>
-      Retrieval.mmrTopK(t(s, d).documents, queryId = 0L, k = 5).orderBy("rank")),
+    Q("mmr_topk", (s, d) =>
+      Retrieval.mmrTopK(t(s, d).documents, queryId = 0L, k = 5).orderBy("rank"))(mmrTwinSql),
     // reciprocal-rank fusion of the lexical (BM25) and hashed-TF-IDF
     // rankings — Σ 1/(60+rank), the standard-constant RRF; hits found
     // by only one ranker keep their single term via the outer join
-    "rrf_fusion" -> ((s, d) => {
+    Q("rrf_fusion", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val ra = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
@@ -1120,12 +2136,24 @@ object SparkEntry {
             .as("rrf"))
         .orderBy(desc("rrf"), asc("doc_id"))
         .limit(20)
-    }),
+    })(
+      // rank fusion over the two twins verbatim as subqueries: RRF =
+      // Σ 1/(60+rank), each term one division, missing rank → 0
+      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
+         |            FROM ($bm25TwinSql) z1),
+         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
+         |        FROM ($tfidfTopkTwin) z2),
+         | f AS (SELECT coalesce(ra.doc_id, rb.doc_id) AS doc_id, ra.r_bm, rb.r_tf
+         |        FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id)
+         |SELECT doc_id, r_bm, r_tf,
+         | round(coalesce(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r_bm AS DOUBLE)), 0.0)
+         |   + coalesce(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r_tf AS DOUBLE)), 0.0), 9) AS rrf
+         |FROM f ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
     // ranking EVALUATION against an exact relevance set (docs whose
     // cleaned vocabulary contains every query term): P@10, recall@20,
     // MRR — the numbers that decide whether BM25 constants or the
     // df cap need touching, all exact integers + single divisions
-    "retrieval_eval" -> ((s, d) => {
+    Q("retrieval_eval", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val ranked = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
@@ -1145,7 +2173,23 @@ object SparkEntry {
           round(col("rel_in_top20").cast("double") / col("n_rel").cast("double"), 6)
             .as("recall_at_20"),
           round(lit(1.0) / col("fr").cast("double"), 6).as("mrr"))
-    }),
+    })(
+      s"""$WDoc,
+         | rk AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r
+         |        FROM ($bm25TwinSql) z1),
+         | $bm25RelCte,
+         | n AS (SELECT count(*) AS n_rel FROM rel),
+         | h AS (SELECT r FROM rk JOIN rel USING (doc_id)),
+         | a AS (SELECT count(*) AS rel_in_top20,
+         |        coalesce(sum(CASE WHEN r <= 10 THEN 1 ELSE 0 END), 0) AS rel_in_top10,
+         |        min(r) AS fr FROM h)
+         |SELECT CAST(n.n_rel AS BIGINT) AS n_rel,
+         | CAST(a.rel_in_top10 AS BIGINT) AS rel_in_top10,
+         | CAST(a.rel_in_top20 AS BIGINT) AS rel_in_top20,
+         | round(CAST(a.rel_in_top10 AS DOUBLE) / 10.0, 6) AS p_at_10,
+         | round(CAST(a.rel_in_top20 AS DOUBLE) / CAST(n.n_rel AS DOUBLE), 6) AS recall_at_20,
+         | round(CAST(1.0 AS DOUBLE) / CAST(a.fr AS DOUBLE), 6) AS mrr
+         |FROM a CROSS JOIN n""".stripMargin),
     // hard-negative mining for contrastive embedding training (the
     // DPR/BM25-negatives recipe): the top-BM25 docs that rank high
     // yet MISS at least one query term — lexically confusable, not
@@ -1153,7 +2197,7 @@ object SparkEntry {
     // the positives retrieval_eval scores. Rank-anti-join over the
     // k-bounded ranked relation; positives = the same all-terms
     // relevance set
-    "hard_negative_mining" -> ((s, d) => {
+    Q("hard_negative_mining", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val ranked = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
@@ -1163,7 +2207,21 @@ object SparkEntry {
       ranked.join(rel, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("score"), col("neg_rank"))
         .orderBy("neg_rank")
-    }),
+    })(
+      // relevance = the conjunctive exact-match set off the shared WDoc
+      // tokenization; terms and count interpolated from the ONE Scala
+      // constant the Spark ranker queries use
+      // the negatives twin: bm25 ranking as a subquery, the SAME
+      // all-terms relevance CTE as retrieval_eval, NOT IN instead of
+      // the hit join
+      s"""$WDoc,
+         | rk AS (SELECT doc_id, score,
+         |        CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS neg_rank
+         |        FROM ($bm25TwinSql) z1),
+         | $bm25RelCte
+         |SELECT doc_id, score, neg_rank FROM rk
+         |WHERE doc_id NOT IN (SELECT doc_id FROM rel)
+         |ORDER BY neg_rank""".stripMargin),
     // graded companion to retrieval_eval: relevance GRADE = how many
     // of the query's terms the doc's cleaned vocabulary holds (1..3),
     // gain = 2^grade − 1, nDCG@10 of the BM25 ranking against the
@@ -1172,7 +2230,7 @@ object SparkEntry {
     // decayed_counts device), so no cross-engine log ever runs;
     // gain·w terms are DECIMAL-summed, and the final nDCG is one
     // division of two such sums
-    "ndcg_eval" -> ((s, d) => {
+    Q("ndcg_eval", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val dec = org.apache.spark.sql.types.DecimalType(38, 12)
       val docs = t(s, d).documents
@@ -1206,13 +2264,43 @@ object SparkEntry {
           round(col("dcg_s").cast("double"), 6).as("dcg_at_10"),
           round(col("idcg_s").cast("double"), 6).as("idcg_at_10"),
           round(col("dcg_s").cast("double") / col("idcg_s").cast("double"), 6).as("ndcg_at_10"))
-    }),
+    }) {
+      // graded twin: same WDoc vocabulary, same BM25 twin ranking, and
+      // the SAME Scala-rounded discount constants in a VALUES table —
+      // gain·w rounded(12) DECIMAL-summed on both engines
+      val wtVals = NdcgDiscounts.map { case (r, w) =>
+        val ws = if (w.toString.toLowerCase.contains("e")) w.toString else w.toString + "e0"
+        s"($r, $ws)"
+      }.mkString(", ")
+      s"""$WDoc,
+         | rk AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r
+         |        FROM ($bm25TwinSql) z1),
+         | graded AS (SELECT doc_id, count(DISTINCT word) AS grade FROM w
+         |            WHERE word IN (${Bm25Terms.map(x => s"'$x'").mkString(", ")})
+         |            GROUP BY doc_id),
+         | gg AS (SELECT doc_id, CASE WHEN grade = 1 THEN 1 WHEN grade = 2 THEN 3 ELSE 7 END AS gain FROM graded),
+         | wt(r, wgt) AS (VALUES $wtVals),
+         | dcg AS (SELECT coalesce(sum(CAST(round(gg.gain * wt.wgt, 12) AS DECIMAL(38,12))),
+         |                         CAST(0 AS DECIMAL(38,12))) AS dcg_s,
+         |         count(*) AS graded_in_top10
+         |        FROM rk JOIN gg USING (doc_id) JOIN wt ON wt.r = rk.r WHERE rk.r <= 10),
+         | ideal AS (SELECT gain, CAST(row_number() OVER (ORDER BY gain DESC, doc_id) AS BIGINT) AS ir FROM gg),
+         | idcg AS (SELECT sum(CAST(round(ideal.gain * wt.wgt, 12) AS DECIMAL(38,12))) AS idcg_s
+         |          FROM ideal JOIN wt ON wt.r = ideal.ir WHERE ideal.ir <= 10),
+         | n AS (SELECT count(*) AS n_graded FROM gg)
+         |SELECT CAST(n.n_graded AS BIGINT) AS n_graded,
+         | CAST(dcg.graded_in_top10 AS BIGINT) AS graded_in_top10,
+         | round(CAST(dcg.dcg_s AS DOUBLE), 6) AS dcg_at_10,
+         | round(CAST(idcg.idcg_s AS DOUBLE), 6) AS idcg_at_10,
+         | round(CAST(dcg.dcg_s AS DOUBLE) / CAST(idcg.idcg_s AS DOUBLE), 6) AS ndcg_at_10
+         |FROM dcg CROSS JOIN idcg CROSS JOIN n""".stripMargin
+    },
     // before fusing two rankers, MEASURE their agreement: top-k set
     // overlap (Jaccard) and Spearman's footrule Σ|r_a − r_b| on the
     // intersection — all exact integers plus one rounded division.
     // High overlap + low footrule means RRF adds nothing; disjoint
     // lists mean one ranker is broken or they see different signals
-    "ranker_agreement" -> ((s, d) => {
+    Q("ranker_agreement", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val ra = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
@@ -1233,24 +2321,41 @@ object SparkEntry {
           round(col("n_overlap").cast("double")
             / (col("na") + col("nb") - col("n_overlap")).cast("double"), 6).as("jaccard"),
           col("footrule"))
-    }),
+    })(
+      // both ranker twins embedded verbatim (the rrf_fusion device), so
+      // agreement numbers can never drift from the rankings they measure
+      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
+         |            FROM ($bm25TwinSql) z1),
+         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
+         |        FROM ($tfidfTopkTwin) z2),
+         | j AS (SELECT ra.doc_id, r_bm, r_tf FROM ra JOIN rb USING (doc_id)),
+         | m AS (SELECT (SELECT count(*) FROM ra) AS na, (SELECT count(*) FROM rb) AS nb,
+         |        count(*) AS n_overlap, coalesce(sum(abs(r_bm - r_tf)), 0) AS footrule FROM j)
+         |SELECT CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
+         | CAST(n_overlap AS BIGINT) AS n_overlap,
+         | round(CAST(n_overlap AS DOUBLE) / CAST(na + nb - n_overlap AS DOUBLE), 6) AS jaccard,
+         | CAST(footrule AS BIGINT) AS footrule
+         |FROM m""".stripMargin),
     // the build-once/query-many retrieval lifecycle (the ANN side's
     // ivfPqWrite/Read posture): persist the four index relations,
     // reload, score BM25 from the stored postings — same oracle as the
     // recompute path, so hash-green == lifecycle-parity proof
-    "bm25_from_index" -> ((s, d) => {
+    Q("bm25_from_index", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-invidx").toString
       Retrieval.invIndexWrite(
         Retrieval.invIndexBuild(t(s, d).documents, maxDf = RetrievalMaxDf), dir)
       Retrieval.bm25FromIndex(Retrieval.invIndexRead(s, dir), Bm25Terms, k = 20)
-    }),
+    })(
+      // the persisted-index path answers the SAME query from the stored
+      // relations — one oracle proves both (lifecycle parity = hash-green)
+      bm25TwinSql),
     // incremental index maintenance: build on 80% of the corpus,
     // persist, reload, fold the held-out batch in WITHOUT re-reading
     // the indexed docs (df counters merge, postings re-filter against
     // the merged cap, stats merge from exact integer sums), persist
     // the grown index, score from the reload. Same oracle as the
     // full-corpus recompute — hash-green == append-exactness proof
-    "bm25_after_append" -> ((s, d) => {
+    Q("bm25_after_append", (s, d) => {
       val docs = t(s, d).documents
       val dir0 = java.nio.file.Files.createTempDirectory("graft-invidx-base").toString
       val dir1 = java.nio.file.Files.createTempDirectory("graft-invidx-grown").toString
@@ -1260,14 +2365,17 @@ object SparkEntry {
         Retrieval.invIndexAppend(Retrieval.invIndexRead(s, dir0),
           docs.where(col("doc_id") % 5 === 2)), dir1)
       Retrieval.bm25FromIndex(Retrieval.invIndexRead(s, dir1), Bm25Terms, k = 20)
-    }),
+    })(
+      // the appended index must answer exactly what a full rebuild
+      // answers — one twin serves all three BM25 paths
+      bm25TwinSql),
     // sketch MERGEABILITY — the property that makes approximate
     // distinct counts distributed: per-(segment, nation) HLL sketches
     // built in one pass, then UNIONED up to segment level (binary
     // sketch state merges; re-scanning is never needed). Rows-only
     // (estimates by design); SketchesSpec pins union == direct build
     // and the error bound
-    "sketch_rollup" -> ((s, d) => {
+    RowsOnly("sketch_rollup", "merged HyperLogLog estimates are engine-specific")((s, d) => {
       val c = t(s, d).customer
       c.groupBy(col("c_mktsegment"), col("c_nationkey"))
         .agg(expr("hll_sketch_agg(c_custkey)").as("sk"))
@@ -1279,16 +2387,25 @@ object SparkEntry {
     // dictionary: lossless positional q-gram count filter, then exact
     // levenshtein verify — never the O(N²) cross product. The twin IS
     // the cross product (the oracle may be naive; the operator may not)
-    "fuzzy_name_pairs" -> ((s, d) => {
+    Q("fuzzy_name_pairs", (s, d) => {
       val names = t(s, d).part.groupBy(col("p_name"))
         .agg(min(col("p_partkey")).as("id"))
         .select(col("id"), col("p_name").as("s"))
       Dedup.editDistancePairs(names, q = 2, maxDist = 2).orderBy("id_a", "id_b")
-    }),
+    })(
+      // naive all-pairs twin of the q-gram-filtered fuzzy join — the
+      // operator is TOTAL (gram path for certifiable pairs, exact
+      // length-banded tail for the short rest), so the twin carries no
+      // length guard
+      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s FROM part GROUP BY p_name)
+        |SELECT a.id AS id_a, b.id AS id_b, CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
+        |FROM s a JOIN s b ON a.id < b.id
+        |WHERE levenshtein(a.s, b.s) <= 2
+        |ORDER BY id_a, id_b""".stripMargin),
     // the second native string-distance Expression: TRUE (unrestricted)
     // Damerau-Levenshtein over the same prefix blocks — exact integer
     // distances, swap-typo pairs plain levenshtein over-penalizes
-    "dl_name_pairs" -> ((s, d) => {
+    Q("dl_name_pairs", (s, d) => {
       val names = t(s, d).part.groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
         .select(col("id"), col("p_name").as("s"), substring(col("p_name"), 1, 3).as("blk"))
       names.as("a").join(names.as("b"),
@@ -1298,12 +2415,19 @@ object SparkEntry {
             .cast("long").as("dl"))
         .where(col("dl") <= 4)
         .orderBy("id_a", "id_b")
-    }),
+    })(
+      // exact-integer compare against DuckDB's builtin of the same name
+      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s, substring(p_name, 1, 3) AS blk
+        |           FROM part GROUP BY p_name),
+        | p AS (SELECT a.id AS id_a, b.id AS id_b,
+        |       CAST(damerau_levenshtein(a.s, b.s) AS BIGINT) AS dl
+        |       FROM s a JOIN s b ON a.blk = b.blk AND a.id < b.id)
+        |SELECT id_a, id_b, dl FROM p WHERE dl <= 4 ORDER BY id_a, id_b""".stripMargin),
     // native-Expression fuzzy matching: Jaro-Winkler over 3-char
     // prefix blocks (the Winkler boost rewards exactly the prefix the
     // block shares) — raw doubles compared, since the kernel mirrors
     // DuckDB's RapidFuzz implementation operation-for-operation
-    "jw_name_match" -> ((s, d) => {
+    Q("jw_name_match", (s, d) => {
       val names = t(s, d).part.groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
         .select(col("id"), col("p_name").as("s"), substring(col("p_name"), 1, 3).as("blk"))
       names.as("a").join(names.as("b"),
@@ -1312,30 +2436,48 @@ object SparkEntry {
           graft.functions.JaroWinkler.jaroWinkler(col("a.s"), col("b.s")).as("jw"))
         .where(col("jw") >= 0.88)
         .orderBy("id_a", "id_b")
-    }),
+    })(
+      // raw-double compare: the Spark kernel is an op-for-op mirror of
+      // the RapidFuzz implementation behind this DuckDB builtin
+      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s, substring(p_name, 1, 3) AS blk
+        |           FROM part GROUP BY p_name),
+        | p AS (SELECT a.id AS id_a, b.id AS id_b, jaro_winkler_similarity(a.s, b.s) AS jw
+        |       FROM s a JOIN s b ON a.blk = b.blk AND a.id < b.id)
+        |SELECT id_a, id_b, jw FROM p
+        |WHERE jw >= CAST(0.88 AS DOUBLE) ORDER BY id_a, id_b""".stripMargin),
     // exact dedup with a PRIORITY survivor rule: within each digest
     // group the curated (highest-priority) copy wins, min id on ties —
     // one bounded max_by buffer per group, never a per-key sort
-    "priority_dedup" -> ((s, d) => {
+    Q("priority_dedup", (s, d) => {
       val docs = t(s, d).documents.withColumn("priority", col("doc_id") % 7)
       Dedup.priorityDedup(docs)
         .select(col("doc_id"), col("lang"), col("priority"))
         .orderBy("doc_id")
-    }),
+    })(
+      """WITH p AS (SELECT doc_id, lang, text, doc_id % 7 AS priority FROM documents),
+        | r AS (SELECT doc_id, lang, priority,
+        |   row_number() OVER (PARTITION BY text ORDER BY priority DESC, doc_id) AS rn
+        |   FROM p)
+        |SELECT doc_id, lang, priority FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
     // per-source data budget: keep each language's docs in
     // deterministic multiplicative-hash order until the char budget is
     // reached — "at most N chars per source" stated directly
-    "budget_cap" -> ((s, d) =>
+    Q("budget_cap", (s, d) =>
       Corpus.budgetCap(t(s, d).documents, budget = 20000)
         .select(col("doc_id"), col("lang"),
           length(col("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"))(
+      """WITH w AS (SELECT doc_id, lang, length(text) AS n_chars,
+        |   ((doc_id % 2147483648) * 2654435761) % 4294967296 AS ord FROM documents),
+        | c AS (SELECT doc_id, lang, n_chars,
+        |   sum(n_chars) OVER (PARTITION BY lang ORDER BY ord, doc_id) AS cum FROM w)
+        |SELECT doc_id, lang, n_chars FROM c WHERE cum <= 20000 ORDER BY doc_id""".stripMargin),
     // the same budget governor keyed on the CRAWL site key: each doc
     // carries its page host (URL fixture) + registered domain, and the
     // char budget caps per HOST — "at most N chars per site", the
     // anti-single-source-domination rule a crawl corpus actually
     // enforces (host keys come from the engine's own URL normalizer)
-    "domain_budget_cap" -> ((s, d) => {
+    Q("domain_budget_cap", (s, d) => {
       val pages = Html.urlPageFromDocs(t(s, d).documents)
       // r15: site keyed by the PSL snapshot join (values unchanged on
       // the fixture — PublicSuffixSpec pins heuristic agreement — but
@@ -1347,35 +2489,73 @@ object SparkEntry {
         .select(col("doc_id"), col("host"), col("site"),
           length(col("text")).cast("long").as("n_chars"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // same window device partitioned on the closed-form fixture host
+      // site from the PSL CTE chain (r15) — no closed-form shortcut;
+      // the twin runs the same published algorithm over the same
+      // bundled snapshot the engine broadcasts
+      val ss = Html.SiteSpace
+      s"""WITH w AS (SELECT doc_id, ${sqlHost(s"doc_id%$ss")} AS host,
+         |   length(text) AS n_chars,
+         |   ((doc_id % 2147483648) * 2654435761) % 4294967296 AS ord FROM documents),
+         |${pslCtes("w")},
+         | c AS (SELECT doc_id, w.host, coalesce(m.site, lower(w.host)) AS site, n_chars,
+         |   sum(n_chars) OVER (PARTITION BY w.host ORDER BY ord, doc_id) AS cum
+         |  FROM w JOIN psl_map m ON m.host = w.host)
+         |SELECT doc_id, host, site, n_chars FROM c WHERE cum <= 800 ORDER BY doc_id""".stripMargin
+    },
     // one-scan column profiling: every measure for every column in a
     // single partial+final aggregate, unpivoted to the catalog's long
     // format — the summary a pipeline runs before trusting a source
-    "column_profile" -> ((s, d) =>
+    Q("column_profile", (s, d) =>
       Profiling.columnProfile(t(s, d).customer,
           Seq("c_custkey", "c_name", "c_mktsegment", "c_nationkey"))
-        .orderBy("col_name")),
+        .orderBy("col_name")) {
+      val cols = Seq("c_custkey", "c_name", "c_mktsegment", "c_nationkey")
+      cols.map(c =>
+        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
+           | count(*) - count($c) AS n_null, count(DISTINCT $c) AS n_distinct,
+           | CAST(min($c) AS VARCHAR) AS min_s, CAST(max($c) AS VARCHAR) AS max_s
+           |FROM customer""".stripMargin)
+        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
+    },
     // ENTITY RESOLUTION over the part-name dictionary: fuzzy pairs →
     // transitive min-label clusters → deterministic canonical pick
     // (the entity's min-id name). Twin = naive N² levenshtein +
     // recursive-CTE closure — the oracle may be quadratic, the
     // operator may not
-    "entity_resolution" -> ((s, d) => {
+    Q("entity_resolution", (s, d) => {
       val names = t(s, d).part.groupBy(col("p_name"))
         .agg(min(col("p_partkey")).as("id"))
         .select(col("id"), col("p_name").as("s"))
       Dedup.resolveEntities(names, q = 2, maxDist = 2).orderBy("id")
-    }),
+    })(
+      """WITH RECURSIVE s AS (SELECT min(p_partkey) AS id, p_name AS s FROM part GROUP BY p_name),
+        | j AS (SELECT a.id AS src, b.id AS dst FROM s a JOIN s b
+        |       ON a.id <> b.id AND levenshtein(a.s, b.s) <= 2),
+        | reach(id, label) AS (
+        |   SELECT id, id FROM s
+        |   UNION
+        |   SELECT j.dst, r.label FROM reach r JOIN j ON j.src = r.id
+        | ),
+        | lab AS (SELECT id, min(label) AS entity_id FROM reach GROUP BY id)
+        |SELECT l.id, s.s, l.entity_id, cs.s AS canonical
+        |FROM lab l JOIN s USING (id) JOIN s cs ON cs.id = l.entity_id
+        |ORDER BY id""".stripMargin),
     // connected components over J >= 0.3 pairs: canonical doc per cluster
-    "dedup_clusters" -> ((s, d) => {
+    Q("dedup_clusters", (s, d) => {
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
       Dedup.nearDupClusters(pairs, docs).orderBy("doc_id")
-    }),
+    })(
+      // same capped-shingle Jaccard pipeline as near_dup_jaccard, then
+      // min-label transitive closure via a recursive CTE
+      s"""$dedupClustersCtes
+         |SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // duplication-corrected sampling: keep rate 1/family_size per
     // near-dup family (content-hash keyed) — the corpus keeps ONE
     // expected copy per family instead of rewarding replication
-    "dedup_weighted_sample" -> ((s, d) => {
+    Q("dedup_weighted_sample", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
@@ -1386,22 +2566,38 @@ object SparkEntry {
         .where(Corpus.hashPermille(col("text")) * col("family_size") < 1000)
         .select(col("doc_id"), col("cluster_id"), col("family_size"))
         .orderBy("doc_id")
-    }),
+    })(
+      // reachability labels + per-family size; keep iff
+      // hashPermille(text)·size < 1000 — one expected survivor/family
+      s"""$dedupClustersCtes,
+         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
+         | sz AS (SELECT lab.doc_id, lab.cluster_id,
+         |        count(*) OVER (PARTITION BY lab.cluster_id) AS family_size FROM lab)
+         |SELECT sz.doc_id, sz.cluster_id, CAST(sz.family_size AS BIGINT) AS family_size
+         |FROM sz JOIN documents d ON d.doc_id = sz.doc_id
+         |WHERE $HashPermille * sz.family_size < 1000
+         |ORDER BY sz.doc_id""".stripMargin),
     // dedup ROI report: near-dup family-size histogram — how much of
     // the corpus is singletons vs deep copy families (the number that
     // prices a better dedup pass); one rollup over the cluster labels
-    "dedup_family_sizes" -> ((s, d) => {
+    Q("dedup_family_sizes", (s, d) => {
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
       Dedup.nearDupClusters(pairs, docs)
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("family_size")).agg(count(lit(1)).as("n_families"))
         .orderBy("family_size")
-    }),
+    })(
+      // same reachability CTEs rolled to family-size grain
+      s"""$dedupClustersCtes,
+         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
+         | cs AS (SELECT cluster_id, count(*) AS sz FROM lab GROUP BY 1)
+         |SELECT sz AS family_size, count(*) AS n_families
+         |FROM cs GROUP BY 1 ORDER BY 1""".stripMargin),
     // per-doc character-level Shannon entropy (rounded-nats DECIMAL
     // sums, the skew_report device) — low-entropy docs are repetitive
     // or padded; extreme-high are mojibake/binary leaks
-    "char_entropy" -> ((s, d) => {
+    Q("char_entropy", (s, d) => {
       val docs = t(s, d).documents
       docs.select(col("doc_id"),
           explode(filter(split(col("text"), ""), c => length(c) > 0)).as("ch"))
@@ -1416,12 +2612,23 @@ object SparkEntry {
         .select(col("doc_id"), col("n_chars"), col("n_distinct_chars"),
           round(col("h_nats").cast("double") / lit(math.log(2.0)), 6).as("entropy_bits"))
         .orderBy("doc_id")
-    }),
+    })(
+      // the skew_report entropy device at character grain
+      """WITH c AS (SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents),
+        | g AS (SELECT doc_id, ch, count(*) AS n FROM c WHERE length(ch) > 0 GROUP BY 1, 2),
+        | w AS (SELECT doc_id, ch, n, CAST(sum(n) OVER (PARTITION BY doc_id) AS BIGINT) AS tot FROM g),
+        | p AS (SELECT doc_id, tot, CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS p FROM w),
+        | h AS (SELECT doc_id, tot, CAST(round(p * -ln(p), 9) AS DECIMAL(38,9)) AS h_term FROM p),
+        | a AS (SELECT doc_id, max(tot) AS n_chars, count(*) AS n_distinct_chars,
+        |       sum(h_term) AS h_nats FROM h GROUP BY 1)
+        |SELECT doc_id, n_chars, n_distinct_chars,
+        | round(CAST(h_nats AS DOUBLE) / ln(2.0), 6) AS entropy_bits
+        |FROM a ORDER BY doc_id""".stripMargin),
     // replica reconciliation (the Merkle-tree move, relationally):
     // bucket both copies by id, compare counts + engine-exact
     // fingerprint sums — divergence localizes to buckets without ever
     // shipping rows; fixture diverges replica B deterministically
-    "table_reconcile" -> ((s, d) => {
+    Q("table_reconcile", (s, d) => {
       val docs = t(s, d).documents
       val a = docs.select(col("doc_id"), col("text"))
       val b = docs.where(col("doc_id") =!= 42)
@@ -1438,12 +2645,36 @@ object SparkEntry {
           coalesce(col("f_a"), lit(0L)).as("f_a"), coalesce(col("f_b"), lit(0L)).as("f_b"))
         .withColumn("diverged", col("n_a") =!= col("n_b") || col("f_a") =!= col("f_b"))
         .orderBy("bucket")
-    }),
+    }) {
+      def fpSum(srcCte: String, pfx: String): String =
+        s""" ${pfx}cw AS (SELECT doc_id, list_filter(list_transform(
+           |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+           |    t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws FROM $srcCte),
+           | ${pfx}h AS (SELECT doc_id, list_transform(ws, w ->
+           |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
+           |  FROM ${pfx}cw),
+           | ${pfx}fp AS (SELECT doc_id % 16 AS bucket,
+           |    CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
+           |      (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
+           |  FROM ${pfx}h),
+           | ${pfx}s AS (SELECT bucket, count(*) AS n, CAST(sum(fp) AS BIGINT) AS f FROM ${pfx}fp GROUP BY 1)""".stripMargin
+      s"""WITH ta AS (SELECT doc_id, text FROM documents),
+         | tb AS (SELECT doc_id, CASE WHEN doc_id % 97 = 13 THEN text || ' tampered' ELSE text END AS text
+         |        FROM documents WHERE doc_id <> 42),
+         |${fpSum("ta", "ra")},
+         |${fpSum("tb", "rb")}
+         |SELECT coalesce(x.bucket, y.bucket) AS bucket,
+         | coalesce(x.n, 0) AS n_a, coalesce(y.n, 0) AS n_b,
+         | coalesce(x.f, 0) AS f_a, coalesce(y.f, 0) AS f_b,
+         | (coalesce(x.n, 0) <> coalesce(y.n, 0) OR coalesce(x.f, 0) <> coalesce(y.f, 0)) AS diverged
+         |FROM ras x FULL JOIN rbs y ON x.bucket = y.bucket
+         |ORDER BY bucket""".stripMargin
+    },
     // the dedup ops dashboard: per language, how many docs survive
     // each stage — raw → exact (distinct digests) → near-dup (cluster
     // min-id survivors) — the one report that says which stage is
     // actually paying for itself on this corpus
-    "dedup_funnel" -> ((s, d) => {
+    Q("dedup_funnel", (s, d) => {
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
       val lab = Dedup.nearDupClusters(pairs, docs)
@@ -1456,28 +2687,47 @@ object SparkEntry {
         .select(col("lang"), col("n_raw"), col("n_exact"),
           coalesce(col("n_near"), lit(0L)).as("n_near"))
         .orderBy("lang")
-    }),
+    })(
+      s"""$dedupClustersCtes,
+         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
+         | surv AS (SELECT doc_id FROM lab WHERE doc_id = cluster_id),
+         | raw AS (SELECT lang, count(*) AS n_raw,
+         |         CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_exact FROM documents GROUP BY 1),
+         | nn AS (SELECT d.lang, count(*) AS n_near FROM surv JOIN documents d USING (doc_id) GROUP BY 1)
+         |SELECT raw.lang, n_raw, n_exact, coalesce(nn.n_near, 0) AS n_near
+         |FROM raw LEFT JOIN nn USING (lang) ORDER BY raw.lang""".stripMargin),
     // near-dup families keep their BEST copy (length as the quality
     // proxy), not the min id — the priorityDedup survivor rule lifted
     // to similarity clusters; one bounded max_by buffer per family
-    "cluster_best_pick" -> ((s, d) => {
+    Q("cluster_best_pick", (s, d) => {
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
       val scored = docs.select(col("doc_id"),
         length(col("text")).cast("long").as("score"))
       Dedup.bestPerCluster(Dedup.nearDupClusters(pairs, docs), scored)
         .orderBy("cluster_id")
-    }),
+    })(
+      s"""$dedupClustersCtes,
+         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
+         | L AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS score FROM documents),
+         | r AS (SELECT cluster_id, lab.doc_id, score,
+         |        row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, lab.doc_id) AS rn
+         |        FROM lab JOIN L USING (doc_id))
+         |SELECT cluster_id, doc_id AS keep_id, score FROM r WHERE rn = 1
+         |ORDER BY cluster_id""".stripMargin),
     // incremental NEAR-dup ingest: the odd-id batch admits against the
     // even-id corpus's persisted band store — near-dup memory at
     // bands×8 bytes/doc, corpus text never re-read (rows-only: LSH
     // admission is approximate by design; DedupSpec pins semantics)
-    "minhash_ingest" -> ((s, d) => {
+    Q("minhash_ingest", (s, d) => {
       val docs = t(s, d).documents
       val store = Dedup.bandKeys(docs.where(col("doc_id") % 2 === 0))
       Dedup.incrementalMinhashDedup(docs.where(col("doc_id") % 2 === 1), store)
         .select(col("doc_id"), col("lang")).orderBy("doc_id")
-    }),
+    })(
+      // minhash_ingest CONVERTED (round 12): the incremental LSH
+      // admission gate replayed band-for-band — see minhashIngestTwinSql
+      minhashIngestTwinSql),
     // the LSH-admission gate's EXACT invariant, hash-checked: clones
     // of store documents (identical text → identical raw token stream
     // → identical minhash signature → every band collides) MUST all be
@@ -1485,7 +2735,7 @@ object SparkEntry {
     // with no minhash in sight. A broken hash/banding path admits a
     // clone and this loses a row; the approximate near-dup behavior
     // stays minhash_ingest's (rows-only) and DedupSpec's
-    "minhash_ingest_clone_rejects" -> ((s, d) => {
+    Q("minhash_ingest_clone_rejects", (s, d) => {
       val docs = t(s, d).documents
       val store = Dedup.bandKeys(docs.where(col("doc_id") % 2 === 0))
       val clones = docs.where(col("doc_id") % 10 === 0)
@@ -1501,31 +2751,98 @@ object SparkEntry {
           tk => length(tk) > 0)) >= 3)
         .join(admitted, Seq("doc_id"), "left_anti")
         .select(col("doc_id")).orderBy("doc_id")
-    }),
-    "minhash_near_dups" -> ((s, d) =>
-      Dedup.minhashNearDups(t(s, d).documents, minJaccard = 0.3).orderBy("doc_a", "doc_b")),
-    "simhash" -> ((s, d) => Dedup.simhash(t(s, d).documents).orderBy("doc_id")),
+    })(
+      // every planted store-clone with >= 3 tokens must be rejected by
+      // the LSH gate (identical text → identical signature → every band
+      // collides) — the rejected set is closed-form
+      """WITH tk AS (SELECT doc_id,
+        |   list_filter(string_split_regex(text, '[ \t\n\f\r]+'), t -> length(t) > 0) AS tk
+        |   FROM documents)
+        |SELECT doc_id + 10000 AS doc_id FROM tk
+        |WHERE doc_id % 10 = 0 AND len(tk) >= 3 ORDER BY 1""".stripMargin),
+    Q("minhash_near_dups", (s, d) =>
+      Dedup.minhashNearDups(t(s, d).documents, minJaccard = 0.3).orderBy("doc_a", "doc_b"))(
+      // minhash_near_dups CONVERTED from rows-only to a full hash oracle
+      // (round 12): signatures, band keys, candidates AND the Jaccard
+      // verify all replay — see minhashNearDupsTwinSql
+      minhashNearDupsTwinSql),
+    Q("simhash", (s, d) => Dedup.simhash(t(s, d).documents).orderBy("doc_id"))(
+      // simhash CONVERTED from rows-only to a full hash oracle (round
+      // 12): the per-word xxhash64 is replayed by the XXH64-in-SQL
+      // device (xxh64WordCtes), bit sums and the 64-bit fingerprint
+      // assemble in exact integer arithmetic — the whole fingerprint
+      // relation, not just the clone invariant, now sits behind the gate
+      s"""$WDoc,
+         | xw AS (SELECT DISTINCT word FROM w),
+         |${xxh64WordCtes},
+         | wcc AS (SELECT doc_id, word, count(*) AS w_cnt FROM w GROUP BY 1, 2),
+         | hb AS (SELECT doc_id, w_cnt,
+         |   CAST(CASE WHEN h >= 9223372036854775808 THEN h - $XW ELSE h END AS BIGINT) AS hs
+         |   FROM wcc JOIN xh USING (word)),
+         | bits AS (SELECT doc_id, j, sum(CASE WHEN ((hs >> CAST(j AS INT)) & 1) = 1 THEN w_cnt ELSE -w_cnt END) AS b
+         |   FROM hb CROSS JOIN (SELECT unnest(range(64)) AS j) GROUP BY 1, 2),
+         | fpu AS (SELECT doc_id, sum(CASE WHEN b > 0 THEN (1::HUGEINT << CAST(j AS INT)) ELSE 0::HUGEINT END) AS u
+         |   FROM bits GROUP BY 1)
+         |SELECT doc_id, CAST(CASE WHEN u >= 9223372036854775808 THEN u - $XW ELSE u END AS BIGINT) AS simhash
+         |FROM fpu ORDER BY doc_id""".stripMargin),
     // int8 embedding compression WITH its error measurement: per-dim
     // affine code book, byte codes, per-vector reconstruction MSE —
     // the 4x serving-tier memory cut, measured not assumed
-    "embedding_quantize" -> ((s, d) =>
-      Similarity.int8QuantizeAudit(t(s, d).embeddings).orderBy("vec_id")),
-    "cosine_topk" -> ((s, d) => {
+    Q("embedding_quantize", (s, d) =>
+      Similarity.int8QuantizeAudit(t(s, d).embeddings).orderBy("vec_id"))(
+      // per-dim code books from accumulation-free min/max; codes via
+      // floor(x/scale + 0.5) — floor of an identical IEEE double, not an
+      // engine-specific half-rounding cast; squared errors DECIMAL-summed
+      """WITH c AS (SELECT vec_id, CAST(embedding[i] AS DOUBLE) AS x, i AS dim_idx
+        |   FROM (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
+        | st AS (SELECT dim_idx, min(x) AS mn, round((max(x) - min(x)) / 255.0, 12) AS scale FROM c GROUP BY 1),
+        | cd AS (SELECT c.vec_id, c.x, st.mn, st.scale,
+        |        CASE WHEN st.scale = 0.0 THEN 0
+        |             ELSE greatest(0, least(255, CAST(floor((c.x - st.mn) / st.scale + 0.5) AS BIGINT))) END AS code
+        |        FROM c JOIN st USING (dim_idx)),
+        | e AS (SELECT vec_id, code,
+        |        CAST(round((x - (mn + CAST(code AS DOUBLE) * scale)) * (x - (mn + CAST(code AS DOUBLE) * scale)), 12)
+        |          AS DECIMAL(38,12)) AS e2
+        |       FROM cd)
+        |SELECT vec_id, CAST(sum(code) AS BIGINT) AS code_sum,
+        | min(code) AS code_min, max(code) AS code_max,
+        | round(CAST(sum(e2) AS DOUBLE) / 64, 10) AS mse
+        |FROM e GROUP BY vec_id ORDER BY vec_id""".stripMargin),
+    Q("cosine_topk", (s, d) => {
       val e = t(s, d).embeddings
       Similarity.bruteForceTopK(e, e.where(col("vec_id") % 50 === 0))
         .orderBy("q_id", "rank")
-    }),
+    })(
+      """WITH q AS (SELECT vec_id AS q_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
+        | c AS (SELECT vec_id AS c_id, embedding FROM embeddings),
+        | s AS (SELECT q_id, c_id,
+        |        list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim
+        |        FROM q JOIN c ON q_id <> c_id),
+        | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
+        |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
     // the k-occurrence hubness census: N_k histogram with antihubs —
     // the high-dimensionality red flag every k-NN consumer inherits
-    "knn_hubness" -> ((s, d) =>
-      Similarity.knnHubness(t(s, d).embeddings).orderBy("n_k")),
+    Q("knn_hubness", (s, d) =>
+      Similarity.knnHubness(t(s, d).embeddings).orderBy("n_k"))(
+      // the k-occurrence census off the proven cosine-rank chain: every
+      // vector a query, rank <= 10 occurrences counted per candidate,
+      // antihubs restored by the left join
+      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | s AS (SELECT q_id, c_id, list_cosine_similarity(q.e, c.e) AS sim FROM q JOIN c ON q_id <> c_id),
+        | r AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s),
+        | occ AS (SELECT c_id, count(*) AS occ FROM r WHERE rank <= 10 GROUP BY 1)
+        |SELECT coalesce(occ.occ, 0) AS n_k, count(*) AS n_vectors
+        |FROM embeddings e LEFT JOIN occ ON e.vec_id = occ.c_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // Johnson-Lindenstrauss projection WITH its distortion
     // measurement (the embedding_quantize posture applied to dim
     // reduction): 64→16 dims through the deterministic splitmix
     // hyperplanes, then per adjacent-id pair the squared distance in
     // both spaces and the 3/k-scaled ratio — the dim cut measured,
     // not assumed. Twin replays the exact plane geometry (planeSql)
-    "jl_distortion_audit" -> ((s, d) => {
+    Q("jl_distortion_audit", (s, d) => {
       val k = 16
       val e = t(s, d).embeddings
       val pr = Similarity.jlProject(e, k = k)
@@ -1550,80 +2867,211 @@ object SparkEntry {
           round(col("__d2p"), 6).as("d2_proj"),
           round(col("__d2p") * 3 / k / col("__d2o"), 6).as("distortion"))
         .orderBy("id_a")
-    }),
+    }) {
+      // the identical plane geometry inlined as literals; projections,
+      // both squared distances and the 3/k ratio replayed term-for-term
+      val k = 16
+      val projList = (0 until k).map(j =>
+        s"round(list_dot_product(e, ${Similarity.planeSql(Similarity.JlPlaneOffset + j, 64)}), 9)")
+        .mkString("[", ",\n      ", "]")
+      val d2p = (1 to k).map(j => s"(pa[$j]-pb[$j])*(pa[$j]-pb[$j])").mkString(" + ")
+      s"""WITH pr AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         | pj AS (SELECT vec_id, e, $projList AS proj FROM pr),
+         | a AS (SELECT vec_id AS id_a, e AS ea, proj AS pa FROM pj WHERE vec_id % 2 = 0),
+         | b AS (SELECT vec_id - 1 AS id_a, vec_id AS id_b, e AS eb, proj AS pb
+         |   FROM pj WHERE vec_id % 2 = 1),
+         | d AS (SELECT id_a, id_b,
+         |    round(list_dot_product(ea, ea), 9) + round(list_dot_product(eb, eb), 9)
+         |      - 2 * round(list_dot_product(ea, eb), 9) AS d2o,
+         |    $d2p AS d2p
+         |   FROM a JOIN b USING (id_a))
+         |SELECT id_a, id_b, round(d2o, 6) AS d2_orig, round(d2p, 6) AS d2_proj,
+         | round(d2p * 3 / $k / d2o, 6) AS distortion
+         |FROM d ORDER BY id_a""".stripMargin
+    },
     // ratio-margin bitext mining: per-source best target scored by
     // cos/(k-NN mass avg) — hub cancellation — with the mutual
     // (forward-backward) flag; sides are vec_id parity
-    "bitext_margin_mining" -> ((s, d) => {
+    Q("bitext_margin_mining", (s, d) => {
       val e = t(s, d).embeddings
       Similarity.bitextMarginMining(
         e.where(col("vec_id") % 2 === 0), e.where(col("vec_id") % 2 === 1))
         .orderBy("s_id")
-    }),
+    })(
+      // the margin math replayed: rounded(9)-DECIMAL cosines, k-NN mass
+      // sums, ONE division per margin rounded(6) before every rank
+      """WITH s AS (SELECT vec_id AS s_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 0),
+        | t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 1),
+        | sims AS (SELECT s_id, t_id,
+        |   CAST(round(list_cosine_similarity(s.e, t.e), 9) AS DECIMAL(18,9)) AS sim FROM s CROSS JOIN t),
+        | ks AS (SELECT s_id, sum(sim) AS degs FROM
+        |   (SELECT s_id, sim, row_number() OVER (PARTITION BY s_id ORDER BY sim DESC, t_id) AS rn FROM sims)
+        |   WHERE rn <= 4 GROUP BY 1),
+        | kt AS (SELECT t_id, sum(sim) AS degt FROM
+        |   (SELECT t_id, sim, row_number() OVER (PARTITION BY t_id ORDER BY sim DESC, s_id) AS rn FROM sims)
+        |   WHERE rn <= 4 GROUP BY 1),
+        | m AS (SELECT s_id, t_id,
+        |   round((CAST(sim AS DOUBLE) * 2.0) / (CAST(ks.degs + kt.degt AS DOUBLE) / 4), 6) AS margin
+        |   FROM sims JOIN ks USING (s_id) JOIN kt USING (t_id)),
+        | fwd AS (SELECT s_id, t_id, margin, row_number() OVER (PARTITION BY s_id ORDER BY margin DESC, t_id) AS rns FROM m),
+        | bwd AS (SELECT s_id, t_id, row_number() OVER (PARTITION BY t_id ORDER BY margin DESC, s_id) AS rnt FROM m)
+        |SELECT f.s_id, f.t_id, f.margin, (b.rnt = 1) AS mutual
+        |FROM fwd f JOIN bwd b USING (s_id, t_id)
+        |WHERE f.rns = 1 AND f.margin >= 1.05 ORDER BY f.s_id""".stripMargin),
     // the 100-TB margin miner: hyperplane-LSH shortlist candidates
     // into the IDENTICAL margin chain — the twin recomputes the same
     // splitmix plane geometry (literals inlined by planeSql), so the
     // CANDIDATE SET is hash-pinned, not just the margins
-    "bitext_margin_lsh" -> ((s, d) => {
+    Q("bitext_margin_lsh", (s, d) => {
       val e = t(s, d).embeddings
       Similarity.bitextMarginMiningLsh(
         e.where(col("vec_id") % 2 === 0), e.where(col("vec_id") % 2 === 1))
         .orderBy("s_id")
-    }),
+    })(
+      // the LSH-shortlist margin miner, twinned end to end: bucket keys
+      // from the inlined splitmix planes, candidates from the co-bucket
+      // join, then the brute twin's margin chain verbatim
+      bitextMarginLshTwinSql),
     // the production hubness audit: the same k-occurrence census over
     // ivfTopK's shortlist-served neighbor lists — deterministic
     // geometry end to end, so the census is a full hash oracle
-    "knn_hubness_ivf" -> ((s, d) =>
-      Similarity.knnHubnessIvf(t(s, d).embeddings).orderBy("n_k")),
+    Q("knn_hubness_ivf", (s, d) =>
+      Similarity.knnHubnessIvf(t(s, d).embeddings).orderBy("n_k"))(
+      // the IVF-shortlist hubness census: kCent-capped stride cells
+      // (vec_id % 25 = 0 AND vec_id < 25*64), nProbe probes,
+      // exact within-candidate cosine ranks, then knn_hubness's census
+      """WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 25 = 0 AND vec_id < 1600),
+        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents),
+        | home AS (SELECT vec_id AS c_id, cell FROM asg WHERE rn = 1),
+        | probe AS (SELECT vec_id AS q_id, cell FROM asg WHERE rn <= 4),
+        | cand AS (SELECT DISTINCT q_id, c_id FROM probe JOIN home USING (cell) WHERE q_id <> c_id),
+        | s AS (SELECT q_id, c_id, list_cosine_similarity(q.e, c.e) AS sim
+        |       FROM cand JOIN v q ON q.vec_id = cand.q_id JOIN v c ON c.vec_id = cand.c_id),
+        | r AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s),
+        | occ AS (SELECT c_id, count(*) AS occ FROM r WHERE rank <= 10 GROUP BY 1)
+        |SELECT coalesce(occ.occ, 0) AS n_k, count(*) AS n_vectors
+        |FROM embeddings e LEFT JOIN occ ON e.vec_id = occ.c_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // lsh_topk's EXACT shadow: the (vec_id, bucket) relation under the
     // same 8 sign planes lshTopK buckets with — candidate structure
     // hash-pinned while the top-k answers stay rows-only
-    "lsh_buckets" -> ((s, d) =>
+    Q("lsh_buckets", (s, d) =>
       Similarity.lshBuckets(t(s, d).embeddings, nPlanes = 8)
-        .select(col("vec_id"), col("bucket")).orderBy("vec_id")),
+        .select(col("vec_id"), col("bucket")).orderBy("vec_id"))(
+      // lsh_topk's bucket geometry, exactly twinned via inlined planes
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+         |SELECT vec_id, CAST(${lshBucketSql("e", 8, 0)} AS BIGINT) AS bucket
+         |FROM v ORDER BY vec_id""".stripMargin),
     // ivf_topk's EXACT shadow: every vector's nProbe nearest stride
     // centroids with probe rank (rank 1 = corpus home cell) — one
     // relation pins both halves of the candidate structure
-    "ivf_cells" -> ((s, d) =>
-      Similarity.ivfProbeCells(t(s, d).embeddings).orderBy("vec_id", "rank")),
+    Q("ivf_cells", (s, d) =>
+      Similarity.ivfProbeCells(t(s, d).embeddings).orderBy("vec_id", "rank"))(
+      // ivf_topk's candidate structure: nProbe nearest kCent-capped
+      // stride-50 centroids (vec_id < 50*64) per vector with probe rank
+      // (rank 1 = home cell)
+      """WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 3200),
+        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents)
+        |SELECT vec_id, CAST(rn AS BIGINT) AS rank, cell FROM asg
+        |WHERE rn <= 4 ORDER BY vec_id, rank""".stripMargin),
     // ivf_pq_topk's EXACT shadow: the built index's cells relation
     // (the streaming_ann_cells device, applied to the batch build)
-    "ivf_pq_cells" -> ((s, d) =>
+    Q("ivf_pq_cells", (s, d) =>
       Similarity.ivfPqBuild(t(s, d).embeddings).cells
-        .select(col("vec_id"), col("cell")).orderBy("vec_id")),
+        .select(col("vec_id"), col("cell")).orderBy("vec_id"))(
+      // ivf_pq_topk's cells relation under the batch-built index
+      s"""WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 10 = 0$coarseGuard),
+        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents)
+        |SELECT vec_id, cell FROM asg WHERE rn = 1 ORDER BY vec_id""".stripMargin),
     // pq_topk's EXACT shadow: the per-subspace code relation under the
     // frozen stride codebook — with this every ANN family (lsh/ivf/
     // ivf×pq/pq) carries a hash-checked exact invariant
-    "pq_codes" -> ((s, d) =>
-      Similarity.pqCodeRelation(t(s, d).embeddings).orderBy("vec_id", "j")),
+    Q("pq_codes", (s, d) =>
+      Similarity.pqCodeRelation(t(s, d).embeddings).orderBy("vec_id", "j"))(
+      // pq encoding replayed: stride codebook (dense-ranked first kCent
+      // stride vectors), per-subspace argmin of -2·s·c + |c|² with the
+      // min-code tie-break — m=16 subspaces of subDim=4 over dim 64
+      """WITH sv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | js AS (SELECT unnest(range(16)) AS j),
+        | cb0 AS (SELECT e, row_number() OVER (ORDER BY vec_id) - 1 AS code FROM sv WHERE vec_id % 50 = 0),
+        | cb AS (SELECT code, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS cs FROM cb0 CROSS JOIN js WHERE code < 48),
+        | sub AS (SELECT vec_id, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS s FROM sv CROSS JOIN js),
+        | d AS (SELECT vec_id, sub.j AS j, code,
+        |   list_dot_product(s, cs) * -2.0 + list_dot_product(cs, cs) AS d
+        |   FROM sub JOIN cb ON sub.j = cb.j),
+        | r AS (SELECT vec_id, j, code, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM d)
+        |SELECT vec_id, CAST(j AS BIGINT) AS j, CAST(code AS BIGINT) AS code
+        |FROM r WHERE rn = 1 ORDER BY vec_id, j""".stripMargin),
     // DSIR domain selection (Xie et al. 2023, arXiv:2302.03169): score
     // the non-English pool by ln p_en(w) − ln p_pool(w) under add-1
     // unigram models, keep the top quarter — importance resampling
     // toward a target domain, the data-selection method a 100 TB
     // pretraining pipeline runs before mixture solving
-    "dsir_select" -> ((s, d) => {
+    Q("dsir_select", (s, d) => {
       val docs = t(s, d).documents
       Corpus.dsirSelect(docs.where(col("lang") =!= "en"),
         docs.where(col("lang") === "en")).orderBy("doc_id")
-    }),
+    })(
+      // DSIR replayed: add-1 unigram models of pool (lang<>'en') and
+      // target ('en') over the union vocab, per-word Δ of rounded(12)
+      // lns subtracted as DECIMALs, per-doc DECIMAL sums, rank on the
+      // EXACT decimal with doc_id tie-break, integer ceil for the cut
+      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
+         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
+         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
+         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
+         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
+         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
+         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
+         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
+         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
+         | delta AS (SELECT word,
+         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
+         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
+         |   FROM vocab CROSS JOIN sizes),
+         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
+         |   FROM pw JOIN delta USING (word) GROUP BY 1),
+         | nn AS (SELECT count(*) AS n FROM scored),
+         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
+         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
+         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
+         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin),
     // the DSIR memory-bound variant (the paper's actual posture): the
     // SAME importance-resampling selection with the model keyed on
     // xxhash64(word) % 1024 — the scorer's broadcast relation is
     // provably m-bounded, the shape a 100 TB pool's union vocabulary
     // requires. m = 1024 deliberately forces real bucket collisions at
     // this fixture's vocab so the hashing is exercised, not vestigial
-    "dsir_select_hashed" -> ((s, d) => {
+    Q("dsir_select_hashed", (s, d) => {
       val docs = t(s, d).documents
       Corpus.dsirSelectHashed(docs.where(col("lang") =!= "en"),
         docs.where(col("lang") === "en"), m = 1024).orderBy("doc_id")
-    }),
+    })(
+      // the hashed-model DSIR twin: the dsir_select chain with every
+      // clean word collapsed to pmod(xxhash64(word), 1024) BEFORE the
+      // count/model/score stages — the hash replayed via xxh64WordCtes
+      // (unsigned HUGEINT -> signed two's-complement -> positive mod,
+      // Spark's pmod semantics), smoothing denominator = OCCUPIED
+      // bucket count, everything else byte-identical to the exact twin
+      s"""$hashedDsirScoredCtes,
+         | nn AS (SELECT count(*) AS n FROM scored),
+         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
+         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
+         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
+         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin),
     // the hashed gate COMPOSED into a build (VERDICT r13 #6): the
     // m-bounded model — the 100 TB shape, broadcast ≤ m rows at any
     // vocabulary — drives a real curation chain: select on the hashed
     // importance weights, rejoin the surviving docs, chunk to context
     // windows. One hash proves the bounded gate slots into a pipeline
     // exactly like the exact-model one
-    "dsir_curate_e2e" -> ((s, d) => {
+    Q("dsir_curate_e2e", (s, d) => {
       val docs = t(s, d).documents
       val sel = Corpus.dsirSelectHashed(docs.where(col("lang") =!= "en"),
           docs.where(col("lang") === "en"), m = 1024)
@@ -1634,13 +3082,30 @@ object SparkEntry {
       Corpus.chunk(kept, size = 256)
         .select(col("doc_id"), col("lang"), col("dsir_logw"), col("chunk_idx"), col("chunk"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    })(
+      // the composed hashed gate: dsir_select_hashed's selection chain,
+      // survivors rejoined to the corpus and chunked at 256 (the
+      // pipeline_e2e chunk template) — one hash over the whole build
+      s"""$hashedDsirScoredCtes,
+         | nn AS (SELECT count(*) AS n FROM scored),
+         | r AS (SELECT doc_id, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored),
+         | sel AS (SELECT doc_id, round(CAST(sl AS DOUBLE), 6) AS dsir_logw
+         |   FROM r CROSS JOIN nn WHERE rk <= (nn.n * 250 + 999) // 1000),
+         | kept AS (SELECT d.doc_id, d.lang, sel.dsir_logw, d.text
+         |   FROM documents d JOIN sel USING (doc_id)),
+         | c AS (SELECT doc_id, lang, dsir_logw, text,
+         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
+         | u AS (SELECT doc_id, lang, dsir_logw, text,
+         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, dsir_logw, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // simhash's derived EXACT invariant (the minhash clone-reject
     // device): planted byte-identical clones MUST collide with their
     // originals — identical text ⇒ identical 64-bit fingerprint — so
     // the collision set is closed-form while a nondeterministic or
     // text-unstable simhash unhashes it
-    "simhash_clone_invariant" -> ((s, d) => {
+    Q("simhash_clone_invariant", (s, d) => {
       val docs = t(s, d).documents
       // the clone-id offset must clear the real id space: a fixture
       // whose doc_ids reach 10000 would leak real docs into the clone
@@ -1658,19 +3123,29 @@ object SparkEntry {
         .join(sh.as("o"), col("c.doc_id") === col("o.doc_id") + 10000 &&
           col("c.simhash") === col("o.simhash"))
         .select(col("c.doc_id")).orderBy("doc_id")
-    }),
+    })(
+      // identical text ⇒ identical simhash: every planted clone with at
+      // least one clean word must collide with its original
+      s"""$WDoc
+         |SELECT DISTINCT doc_id + 10000 AS doc_id FROM w
+         |WHERE doc_id % 10 = 0 ORDER BY 1""".stripMargin),
     // EXACT-replayable distributed k-means: deterministic init (first
     // k vectors), 6-dp-rounded min-code-tiebreak assignment, 10-dp
     // DECIMAL-accumulated means — the whole clustering sits behind the
     // hash gate (the twin unrolls all three Lloyd iterations), not
     // just a row count like the approximate ANN family
-    "kmeans_assign" -> ((s, d) =>
-      Similarity.kmeans(t(s, d).embeddings).orderBy("vec_id")),
+    Q("kmeans_assign", (s, d) =>
+      Similarity.kmeans(t(s, d).embeddings).orderBy("vec_id"))(
+      // all three Lloyd iterations UNROLLED (the PageRank twin device):
+      // per iteration one rounded-score argmin assignment and one
+      // DECIMAL-mean centroid update, generated from the same (k, iters)
+      s"""$KmeansCtes
+         |SELECT vec_id, code FROM af ORDER BY vec_id""".stripMargin),
     // SEMANTIC corpus rebalancing: k-means clusters as sampling strata
     // — over-represented semantic regions downsample exactly like
     // over-represented languages do in temperature_sample (embeddings
     // and documents share the id space, so clusters key documents)
-    "cluster_balanced_sample" -> ((s, d) => {
+    Q("cluster_balanced_sample", (s, d) => {
       val codes = Similarity.kmeans(t(s, d).embeddings)
         .select(col("vec_id").as("doc_id"), col("code").as("cluster"))
       val docs = t(s, d).documents.join(codes, Seq("doc_id"))
@@ -1679,16 +3154,49 @@ object SparkEntry {
       Corpus.resampleWithRates(docs, rates, strataCol = "cluster")
         .select(col("doc_id"), col("cluster"), col("n_l"), col("keep_permille"))
         .orderBy("doc_id")
-    }),
-    "lsh_topk" -> ((s, d) => Similarity.lshTopK(t(s, d).embeddings).orderBy("q_id", "rank")),
-    "ivf_topk" -> ((s, d) => Similarity.ivfTopK(t(s, d).embeddings).orderBy("q_id", "rank")),
+    })(
+      // SEMANTIC rebalancing: the kmeans chain feeds the same
+      // temperature-rate + hash-permille machinery temperature_sample
+      // proves, keyed on cluster instead of language
+      s"""$KmeansCtes,
+         | n AS (SELECT code AS cluster, count(*) AS n_l FROM af GROUP BY code),
+         | r AS (SELECT cluster, n_l,
+         |   CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+         |        / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n)
+         |SELECT d.doc_id, af.code AS cluster, r.n_l, r.keep_permille
+         |FROM documents d JOIN af ON d.doc_id = af.vec_id JOIN r ON af.code = r.cluster
+         |WHERE $HashPermille < r.keep_permille
+         |ORDER BY d.doc_id""".stripMargin),
+    Q("lsh_topk", (s, d) => Similarity.lshTopK(t(s, d).embeddings).orderBy("q_id", "rank"))(
+      // lsh_topk CONVERTED from rows-only to a full hash oracle (round
+      // 12): the bucket keys are deterministic splitmix planes (inlined
+      // literals, bit-identical dot products — see lsh_buckets), and the
+      // within-bucket ranking is exact cosine with id tie-break, so the
+      // ENTIRE approximate answer is replayable
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         | b AS (SELECT vec_id, e, ${lshBucketSql("e", 8, 0)} AS bucket FROM v),
+         | s AS (SELECT x.vec_id AS q_id, y.vec_id AS c_id,
+         |        list_cosine_similarity(x.e, y.e) AS sim
+         |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
+         | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
+         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
+         |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Q("ivf_topk", (s, d) => Similarity.ivfTopK(t(s, d).embeddings).orderBy("q_id", "rank"))(
+      // ivf_topk CONVERTED from rows-only to a full hash oracle (round
+      // 12): kCent-capped stride-centroid cells (vec_id < 50*64),
+      // nProbe probes, exact within-
+      // candidate cosine ranking — the knn_hubness_ivf chain minus the
+      // census (the cells relation alone remains pinned by ivf_cells)
+      s"""$ivfRankCtes
+         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
+         |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
     // the ANN quality gate a serving index ships with: recall@10 of
     // ivf_topk against the exact cosine truth, as the pure-integer
     // hits histogram (how many queries found 0..10 of their true
     // top-10) — every-query coverage, 0-hit queries restored by the
     // left join; both input rankings are themselves hash-proven, so
     // the set intersection is engine-identical
-    "ann_recall_eval" -> ((s, d) => {
+    Q("ann_recall_eval", (s, d) => {
       val e = t(s, d).embeddings
       // exact truth over a BOUNDED query sample (the cosine_topk
       // stride device): the gate needs a recall estimate, not an
@@ -1705,13 +3213,30 @@ object SparkEntry {
         .select(coalesce(col("hits"), lit(0L)).as("hits"))
         .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
         .orderBy("hits")
-    }),
+    })(
+      // the ANN quality gate: recall@10 of the IVF ranking against the
+      // exact cosine truth, reported as the hits histogram (0..10 —
+      // pure integers, no float mean to flap a hash); queries whose
+      // IVF list shares nothing with the truth are restored at 0 by
+      // the left join
+      s"""$ivfRankCtes,
+         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
+         |        FROM v q JOIN v c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
+         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
+         | hits AS (SELECT a.q_id, count(*) AS hits
+         |          FROM (SELECT q_id, c_id FROM r WHERE rank <= 10 AND q_id % 50 = 0) a
+         |          JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
+         |          GROUP BY 1),
+         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
+         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
+         |FROM allq LEFT JOIN hits h USING (q_id)
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the same recall@10 gate for the IVF×PQ funnel (r15: VERDICT #7 —
     // uniform serving-quality story across the ANN stack): both input
     // rankings are independently hash-proven, so the intersection is
     // engine-identical; pure-integer hits histogram, 0-hit queries
     // restored by the left join
-    "ivf_pq_recall_eval" -> ((s, d) => {
+    Q("ivf_pq_recall_eval", (s, d) => {
       val e = t(s, d).embeddings
       val queries = e.where(col("vec_id") % 50 === 0)
       val approx = Similarity.ivfPqTopK(e).select(col("q_id"), col("c_id"))
@@ -1723,10 +3248,24 @@ object SparkEntry {
         .select(coalesce(col("hits"), lit(0L)).as("hits"))
         .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
         .orderBy("hits")
-    }),
+    })(
+      // recall gate for the IVF×PQ funnel: the hash-proven ivf_pq_topk
+      // twin as a subquery, intersected with the exact cosine truth
+      s"""WITH apx AS (SELECT q_id, c_id FROM (${ivfPqQueryTwinSql("", "", "vec_id % 50 = 0")}) z),
+         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
+         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
+         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
+         | hits AS (SELECT a.q_id, count(*) AS hits
+         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
+         |          GROUP BY 1),
+         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
+         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
+         |FROM allq LEFT JOIN hits h USING (q_id)
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // and for the hyperplane-LSH ranking — same bounded query sample
     // (the exact truth is never an unbounded N×N brute force)
-    "lsh_recall_eval" -> ((s, d) => {
+    Q("lsh_recall_eval", (s, d) => {
       val e = t(s, d).embeddings
       val queries = e.where(col("vec_id") % 50 === 0)
       val approx = Similarity.lshTopK(e).where(col("q_id") % 50 === 0)
@@ -1739,27 +3278,82 @@ object SparkEntry {
         .select(coalesce(col("hits"), lit(0L)).as("hits"))
         .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
         .orderBy("hits")
-    }),
+    }) {
+      // recall gate for the hyperplane-LSH ranking: the hash-proven
+      // lsh_topk twin filtered to the bounded query sample
+      val lshTwin =
+        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+           | b AS (SELECT vec_id, e, ${lshBucketSql("e", 8, 0)} AS bucket FROM v),
+           | s AS (SELECT x.vec_id AS q_id, y.vec_id AS c_id,
+           |        list_cosine_similarity(x.e, y.e) AS sim
+           |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
+           | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
+           |SELECT q_id, c_id FROM r WHERE rank <= 10 AND q_id % 50 = 0""".stripMargin
+      s"""WITH apx AS (SELECT q_id, c_id FROM ($lshTwin) z),
+         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
+         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
+         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
+         | hits AS (SELECT a.q_id, count(*) AS hits
+         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
+         |          GROUP BY 1),
+         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
+         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
+         |FROM allq LEFT JOIN hits h USING (q_id)
+         |GROUP BY 1 ORDER BY 1""".stripMargin
+    },
     // product-quantization ANN (rows-only: approximate by design;
     // recall vs brute force asserted in SimilaritySpec)
-    "pq_topk" -> ((s, d) => Similarity.pqTopK(t(s, d).embeddings).orderBy("q_id", "rank")),
-    "ivf_pq_topk" -> ((s, d) => Similarity.ivfPqTopK(t(s, d).embeddings).orderBy("q_id", "rank")),
+    Q("pq_topk", (s, d) => Similarity.pqTopK(t(s, d).embeddings).orderBy("q_id", "rank"))(
+      // pq_topk CONVERTED from rows-only to a full hash oracle (round
+      // 12): codes from the pq_codes device, query tables from
+      // bit-identical subspace dots, and the ADC score as an ORDERED
+      // list_reduce fold — double addition is order-sensitive and
+      // VecAdcScore sums subspaces sequentially, so the fold (not a SUM
+      // aggregate) is what makes the scores replay bit-for-bit
+      """WITH sv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        | js AS (SELECT unnest(range(16)) AS j),
+        | cb0 AS (SELECT e, row_number() OVER (ORDER BY vec_id) - 1 AS code FROM sv WHERE vec_id % 50 = 0),
+        | cb AS MATERIALIZED (SELECT code, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS cs FROM cb0 CROSS JOIN js WHERE code < 48),
+        | sub AS (SELECT vec_id, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS s FROM sv CROSS JOIN js),
+        | d AS (SELECT vec_id, sub.j AS j, code,
+        |   list_dot_product(s, cs) * -2.0 + list_dot_product(cs, cs) AS d
+        |   FROM sub JOIN cb ON sub.j = cb.j),
+        | r AS (SELECT vec_id, j, code, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM d),
+        | codes AS MATERIALIZED (SELECT vec_id, j, code FROM r WHERE rn = 1),
+        | qd AS MATERIALIZED (SELECT q.vec_id AS q_id, cb.j, cb.code,
+        |   list_dot_product(q.e[CAST(cb.j*4+1 AS INT):CAST(cb.j*4+4 AS INT)], cs) AS dot
+        |   FROM sv q CROSS JOIN cb WHERE q.vec_id % 50 = 0),
+        | sc AS (SELECT q_id, c.vec_id AS c_id,
+        |   list_reduce(list_prepend(0.0, list(dot ORDER BY c.j)), (acc, x) -> acc + x) AS sim
+        |   FROM codes c JOIN qd ON qd.j = c.j AND qd.code = c.code
+        |   WHERE q_id <> c.vec_id
+        |   GROUP BY 1, 2),
+        | rk AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM sc)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
+        |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Q("ivf_pq_topk", (s, d) => Similarity.ivfPqTopK(t(s, d).embeddings).orderBy("q_id", "rank"))(
+      // the residual IVF×PQ family CONVERTED from rows-only to full hash
+      // oracles (round 12) — all four share ivfPqQueryTwinSql; the
+      // roundtrip/append/streaming variants answering IDENTICALLY to the
+      // direct computation is precisely their contract
+      ivfPqQueryTwinSql("", "", "vec_id % 50 = 0")),
     // the production index lifecycle: build → persist to parquet →
     // reload → query the reloaded relations (SimilaritySpec proves
     // byte-identical answers to the in-memory path)
-    "ann_index_roundtrip" -> ((s, d) => {
+    Q("ann_index_roundtrip", (s, d) => {
       val emb = t(s, d).embeddings
       val dir = java.nio.file.Files.createTempDirectory("graft-annidx").toString
       Similarity.ivfPqWrite(Similarity.ivfPqBuild(emb), dir)
       Similarity.ivfPqQuery(Similarity.ivfPqRead(s, dir),
           emb.where(col("vec_id") % 50 === 0), emb)
         .orderBy("q_id", "rank")
-    }),
+    })(ivfPqQueryTwinSql("", "", "vec_id % 50 = 0")),
     // incremental index ingest: build on 80% of the corpus, fold the
     // remaining batch in with frozen centroids/code books (no retrain),
     // query the grown index — rows-only (approximate ANN); the
     // findability and recall properties are asserted in SimilaritySpec
-    "ann_index_append" -> ((s, d) => {
+    Q("ann_index_append", (s, d) => {
       val emb = t(s, d).embeddings
       // the batch residue (7k+3) is disjoint from the centroid seed
       // stride (10k), so the base keeps its coarse geometry
@@ -1768,7 +3362,8 @@ object SparkEntry {
         emb.where(col("vec_id") % 7 === 3))
       Similarity.ivfPqQuery(idx, emb.where(col("vec_id") % 70 === 3), emb)
         .orderBy("q_id", "rank")
-    }),
+    })(
+      ivfPqQueryTwinSql(" AND vec_id % 7 <> 3", " AND vec_id % 7 <> 3", "vec_id % 70 = 3")),
     // the append path's rebuild trigger: per-cell residual energy of an
     // append batch vs the build-time baseline. The batch here is
     // deliberately OUT of distribution (embeddings scaled ×-2), so
@@ -1777,7 +3372,7 @@ object SparkEntry {
     // decimal-summed energies are all relational, so the twin
     // recomputes the drift ratio end to end (the ivfPqBuild PQ code
     // books never touch this output)
-    "ann_drift" -> ((s, d) => {
+    Q("ann_drift", (s, d) => {
       val emb = t(s, d).embeddings
       val index = Similarity.ivfPqBuild(emb)
       val baseline = Similarity.cellResidualEnergy(index, emb)
@@ -1787,7 +3382,20 @@ object SparkEntry {
         .select(col("cell"), col("n_batch"), round(col("drift_ratio"), 4).as("drift_r"),
           col("rebuild"))
         .orderBy("cell")
-    }),
+    })(
+      // the drift ratio recomputed relationally end to end: stride
+      // centroids, cosine-argmax assignment (cosine_topk's proven
+      // device) and decimal-summed residual energies for both the
+      // shifted batch and the corpus baseline — the PQ code books never
+      // touch this output, so nothing approximate remains
+      s"""WITH cents AS (SELECT vec_id AS cell, embedding AS ce FROM embeddings WHERE vec_id % 10 = 0$coarseGuard),
+         | batch AS (SELECT vec_id, list_transform(embedding, x -> CAST(x * -2.0 AS FLOAT)) AS embedding FROM embeddings),
+         | corpus AS (SELECT vec_id, embedding FROM embeddings),
+         | ${annEnergySql("b", "batch", "cents")},
+         | ${annEnergySql("c", "corpus", "cents")}
+         |SELECT b.cell, b.n AS n_batch, round(b.energy / c.energy, 4) AS drift_r,
+         | (b.n >= 4 AND b.energy / c.energy >= 1.5) AS rebuild
+         |FROM bagg b JOIN cagg c USING (cell) ORDER BY b.cell""".stripMargin),
     // the drift trigger ACTED ON: maintain an index through an
     // out-of-distribution batch (constant-offset shift = a coherent new
     // mode). appendDrift trips, ivfPqMaintain retrains over corpus ∪
@@ -1797,7 +3405,7 @@ object SparkEntry {
     // relationally (old stride centroids → batch/baseline energies →
     // EXISTS trip → new stride centroids over corpus ∪ batch → fresh
     // baseline)
-    "ann_rebuild" -> ((s, d) => {
+    Q("ann_rebuild", (s, d) => {
       val emb = t(s, d).embeddings
       val base = emb.where(col("vec_id") % 7 =!= 3)
       val ood = emb.where(col("vec_id") % 7 === 3).select(
@@ -1809,46 +3417,192 @@ object SparkEntry {
       newBaseline.select(col("cell"), col("n"),
           round(col("mean_energy"), 4).as("energy_r"), lit(rebuilt).as("rebuilt"))
         .orderBy("cell")
-    }),
-    "embedding_near_dups" -> ((s, d) =>
-      Similarity.cosineNearDupPairs(t(s, d).embeddings).orderBy("id_a", "id_b")),
+    })(
+      // trigger AND rebuilt geometry recomputed relationally: old stride
+      // centroids → batch/baseline energies → EXISTS trip → new stride
+      // centroids over corpus ∪ batch → fresh per-cell baseline
+      s"""WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 <> 3),
+         | ood AS (SELECT vec_id + 1000000 AS vec_id,
+         |   list_transform(embedding, x -> CAST(x + CAST(3.0 AS FLOAT) AS FLOAT)) AS embedding
+         |   FROM embeddings WHERE vec_id % 7 = 3),
+         | cents AS (SELECT vec_id AS cell, embedding AS ce FROM base WHERE vec_id % 10 = 0${coarseGuardOn("base")}),
+         | ${annEnergySql("o", "ood", "cents")},
+         | ${annEnergySql("s", "base", "cents")},
+         | trip AS (SELECT count(*) > 0 AS tripped FROM oagg o JOIN sagg s USING (cell)
+         |          WHERE o.n >= 4 AND o.energy / s.energy >= 1.5),
+         | allv AS (SELECT * FROM base UNION ALL SELECT * FROM ood),
+         | cents2 AS (SELECT vec_id AS cell, embedding AS ce FROM allv WHERE vec_id % 10 = 0${coarseGuardOn("allv")}),
+         | ${annEnergySql("r", "allv", "cents2")}
+         |SELECT cell, n, round(energy, 4) AS energy_r, (SELECT tripped FROM trip) AS rebuilt
+         |FROM ragg ORDER BY cell""".stripMargin),
+    Q("embedding_near_dups", (s, d) =>
+      Similarity.cosineNearDupPairs(t(s, d).embeddings).orderBy("id_a", "id_b"))(
+      """WITH s AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS sim
+        | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
+        |SELECT id_a, id_b, round(sim, 4) AS sim_r FROM s WHERE sim >= 0.4
+        |ORDER BY id_a, id_b""".stripMargin),
     // approximate (LSH-bucketed) variant — rows-only by design; recall
     // vs the exact pairs is asserted in SimilaritySpec
-    "embedding_near_dups_lsh" -> ((s, d) =>
-      Similarity.cosineNearDupPairsLsh(t(s, d).embeddings).orderBy("id_a", "id_b")),
+    Q("embedding_near_dups_lsh", (s, d) =>
+      Similarity.cosineNearDupPairsLsh(t(s, d).embeddings).orderBy("id_a", "id_b")) {
+      // embedding_near_dups_lsh CONVERTED from rows-only (round 12):
+      // candidates co-bucketed in ANY of 8 four-plane tables, scored
+      // exactly and thresholded — the brute embedding_near_dups twin
+      // with the candidate cut replayed from the same inlined planes
+      val keyed = (0 until 8).map(tb =>
+        s"SELECT vec_id, $tb AS tbl, ${lshBucketSql("e", 4, tb)} AS bucket FROM v")
+        .mkString(" UNION ALL ")
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         | b AS ($keyed),
+         | cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
+         |          FROM b x JOIN b y ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
+         | s AS (SELECT id_a, id_b, list_cosine_similarity(a.e, c.e) AS sim
+         |       FROM cand JOIN v a ON a.vec_id = id_a JOIN v c ON c.vec_id = id_b)
+         |SELECT id_a, id_b, round(sim, 4) AS sim_r FROM s WHERE sim >= 0.4
+         |ORDER BY id_a, id_b""".stripMargin
+    },
     // SemDeDup: cluster-then-compare semantic dedup — deterministic
     // stride centroids + greedy min-id survivor, hash-exact vs the twin
-    "semantic_dedup" -> ((s, d) =>
-      Similarity.semanticDedup(t(s, d).embeddings).orderBy("vec_id")),
-    "text_quality" -> ((s, d) => TextQuality.qualityFeatures(t(s, d).documents).orderBy("doc_id")),
+    Q("semantic_dedup", (s, d) =>
+      Similarity.semanticDedup(t(s, d).embeddings).orderBy("vec_id"))(
+      // same centroid stride (40), assignment tie-break (sim DESC, cid
+      // ASC) and survivor rule as Similarity.semanticDedup
+      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 40 = 0),
+        | sims AS (SELECT e.vec_id, c.cid,
+        |          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) AS sim
+        |          FROM embeddings e CROSS JOIN c),
+        | r AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn FROM sims),
+        | asg AS (SELECT e.vec_id, e.embedding, r.cid AS cell
+        |         FROM r JOIN embeddings e USING (vec_id) WHERE rn = 1),
+        | drops AS (SELECT DISTINCT b.vec_id FROM asg a JOIN asg b
+        |           ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |           AND round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 12) >= 0.4)
+        |SELECT vec_id, cell, vec_id NOT IN (SELECT vec_id FROM drops) AS kept
+        |FROM asg ORDER BY vec_id""".stripMargin),
+    Q("text_quality", (s, d) => TextQuality.qualityFeatures(t(s, d).documents).orderBy("doc_id"))(
+      s"""WITH t AS (SELECT doc_id, text, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |           FROM documents)
+         |SELECT doc_id,
+         | CAST(len(tk) AS BIGINT) AS n_tokens,
+         | CAST(length(text) AS BIGINT) AS n_chars,
+         | CAST(list_sum(list_transform(tk, x -> length(x))) AS BIGINT) / len(tk) AS avg_token_len,
+         | (length(text) - length(regexp_replace(text, '$P', '', 'g'))) / length(text) AS punct_ratio,
+         | (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
+         | len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], lower(x)))) / len(tk) AS stopword_ratio
+         |FROM t ORDER BY doc_id""".stripMargin),
     // Flesch ease + FK grade from three regexp counters (vowel-group
     // syllables); narrow, codegen'd, shuffle-free — extreme values in
     // either direction flag broken extraction before an LM pass runs
-    "readability" -> ((s, d) => TextQuality.readability(t(s, d).documents).orderBy("doc_id")),
+    Q("readability", (s, d) => TextQuality.readability(t(s, d).documents).orderBy("doc_id"))(
+      // three exact regexp counts; each ratio one IEEE division, both
+      // formulas left-associated identically, rounded 4 dp
+      """WITH m AS (SELECT doc_id,
+        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS n_sents,
+        |  CAST(greatest(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)), 1) AS BIGINT) AS n_words,
+        |  CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS BIGINT) AS n_syll
+        | FROM documents),
+        | r AS (SELECT doc_id, n_sents, n_words, n_syll,
+        |   CAST(n_words AS DOUBLE) / CAST(n_sents AS DOUBLE) AS wps,
+        |   CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE) AS spw FROM m)
+        |SELECT doc_id, n_sents, n_words, n_syll,
+        | round(CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * wps - CAST(84.6 AS DOUBLE) * spw, 4) AS flesch_ease,
+        | round(CAST(0.39 AS DOUBLE) * wps + CAST(11.8 AS DOUBLE) * spw - CAST(15.59 AS DOUBLE), 4) AS fk_grade
+        |FROM r ORDER BY doc_id""".stripMargin),
     // global vocabulary collapse (TTR + hapax share over cleaned
     // words) — the template-spam signal adjacent-n-gram repetition
     // stats can't see; two key-local shuffles, per-doc state is the
     // doc's vocabulary
-    "lexical_diversity" -> ((s, d) =>
-      TextQuality.lexicalDiversity(t(s, d).documents).orderBy("doc_id")),
+    Q("lexical_diversity", (s, d) =>
+      TextQuality.lexicalDiversity(t(s, d).documents).orderBy("doc_id"))(
+      s"""$WDoc,
+         | c AS (SELECT doc_id, word, count(*) AS n FROM w GROUP BY 1, 2),
+         | a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens, count(*) AS n_types,
+         |       CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax FROM c GROUP BY 1)
+         |SELECT doc_id, n_tokens, n_types, n_hapax,
+         | round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
+         | round(CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE), 6) AS hapax_ratio
+         |FROM a ORDER BY doc_id""".stripMargin),
     // corpus routing: code-vs-prose surface signals (symbol density,
     // indent/semicolon line shares, reserved-word density) blended to
     // a fixed linear score — rounded before the is_code cut so both
     // engines threshold the identical number
-    "code_detect" -> ((s, d) => TextQuality.codeDetect(t(s, d).documents).orderBy("doc_id")),
+    Q("code_detect", (s, d) => TextQuality.codeDetect(t(s, d).documents).orderBy("doc_id"))(
+      // the keyword alternation interpolates the SAME Scala constant the
+      // Spark side compiles (CodeKeywordRe), so the two engines cannot
+      // drift on the reserved-word list; is_code compares the ROUNDED
+      // score so the cut is over an identical literal on both engines
+      s"""WITH m AS (SELECT doc_id,
+         |  CAST(greatest(length(text), 1) AS BIGINT) AS n_chars,
+         |  CAST(len(regexp_extract_all(text, '\\n')) + 1 AS BIGINT) AS n_lines,
+         |  CAST(greatest(len(list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0)), 1) AS BIGINT) AS n_words,
+         |  CAST(len(regexp_extract_all(text, '[{}()\\[\\];=<>]')) AS BIGINT) AS sym,
+         |  CAST(len(regexp_extract_all(text, '(?m)^(  |\\t)')) AS BIGINT) AS indented,
+         |  CAST(len(regexp_extract_all(text, '(?m);[ \\t]*$$')) AS BIGINT) AS semi_eol,
+         |  CAST(len(regexp_extract_all(lower(text), '${TextQuality.CodeKeywordRe}')) AS BIGINT) AS kw
+         | FROM documents),
+         | r AS (SELECT doc_id,
+         |   CAST(sym AS DOUBLE) / CAST(n_chars AS DOUBLE) AS sym_r,
+         |   CAST(indented AS DOUBLE) / CAST(n_lines AS DOUBLE) AS indent_r,
+         |   CAST(semi_eol AS DOUBLE) / CAST(n_lines AS DOUBLE) AS semi_r,
+         |   CAST(kw AS DOUBLE) / CAST(n_words AS DOUBLE) AS kw_r FROM m),
+         | sc AS (SELECT doc_id,
+         |   round(sym_r, 6) AS sym_ratio, round(indent_r, 6) AS indent_ratio,
+         |   round(semi_r, 6) AS semi_ratio, round(kw_r, 6) AS kw_ratio,
+         |   round(CAST(2.0 AS DOUBLE) * sym_r + CAST(0.5 AS DOUBLE) * indent_r
+         |     + CAST(1.0 AS DOUBLE) * semi_r + CAST(1.5 AS DOUBLE) * kw_r, 6) AS code_score
+         |  FROM r)
+         |SELECT doc_id, sym_ratio, indent_ratio, semi_ratio, kw_ratio, code_score,
+         | code_score > CAST(0.12 AS DOUBLE) AS is_code
+         |FROM sc ORDER BY doc_id""".stripMargin),
     // statistically-bound word pairs: top-100 adjacent-pair PMI with
     // a count floor; vocabulary-sized aggregates + TakeOrdered top-k
-    "collocations" -> ((s, d) => TextQuality.collocations(t(s, d).documents)),
+    Q("collocations", (s, d) => TextQuality.collocations(t(s, d).documents))(
+      // PMI per pair: one mul + one div + one ln in identical
+      // association; the (pmi desc, w1, w2) order is total so LIMIT
+      // can't flap on ties
+      s"""WITH toks AS (SELECT doc_id,
+         |    list_filter(list_transform(
+         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |  FROM documents),
+         | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
+         | tu AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM uni),
+         | bgp AS (SELECT ws[i] AS w1, ws[i+1] AS w2
+         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM toks WHERE len(ws) >= 2)),
+         | bg AS (SELECT w1, w2, count(*) AS c12 FROM bgp GROUP BY 1, 2),
+         | tb AS (SELECT CAST(sum(c12) AS BIGINT) AS bt FROM bg),
+         | j AS (SELECT bg.w1, bg.w2, bg.c12,
+         |        CAST(bg.c12 AS DOUBLE) / CAST(tb.bt AS DOUBLE) AS p12,
+         |        CAST(u1.cnt AS DOUBLE) / CAST(tu.t AS DOUBLE) AS p1,
+         |        CAST(u2.cnt AS DOUBLE) / CAST(tu.t AS DOUBLE) AS p2
+         |        FROM bg JOIN uni u1 ON bg.w1 = u1.word JOIN uni u2 ON bg.w2 = u2.word
+         |        CROSS JOIN tu CROSS JOIN tb
+         |        WHERE bg.c12 >= 5)
+         |SELECT w1, w2, c12, round(ln(p12 / (p1 * p2)), 6) AS pmi
+         |FROM j ORDER BY pmi DESC, w1, w2 LIMIT 100""".stripMargin),
     // Church-Gale burstiness: variance-to-mean of per-doc counts —
     // high-cf LOW-VMR words not on the stopword list are template
     // boilerplate leaking through cleaning
-    "word_burstiness" -> ((s, d) =>
-      TextOps.wordBurstiness(t(s, d).documents).orderBy("word")),
+    Q("word_burstiness", (s, d) =>
+      TextOps.wordBurstiness(t(s, d).documents).orderBy("word"))(
+      // df/cf/Σc² exact; mean/variance/VMR the fixed three-op double
+      // sequence (the rollingAnomaly device)
+      s"""$WDoc,
+         | c AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
+         | a AS (SELECT word, count(*) AS df, CAST(sum(c) AS BIGINT) AS cf,
+         |       CAST(sum(c * c) AS BIGINT) AS cf2 FROM c GROUP BY 1),
+         | m AS (SELECT word, df, cf, cf2,
+         |       CAST(cf AS DOUBLE) / CAST(df AS DOUBLE) AS mean_c FROM a WHERE cf >= 20),
+         | v AS (SELECT word, df, cf, mean_c,
+         |       (CAST(cf2 AS DOUBLE) - CAST(cf AS DOUBLE) * mean_c) / CAST(df AS DOUBLE) AS vr FROM m)
+         |SELECT word, df, cf, round(mean_c, 6) AS mean_tf, round(vr / mean_c, 6) AS vmr
+         |FROM v ORDER BY word""".stripMargin),
     // Heaps'-law vocabulary growth: cumulative (tokens, types) at
     // 50-doc checkpoints in doc_id order — a flattening curve means
     // the crawl is re-fetching known material; types are credited to
     // the FIRST doc containing them (exact, no sampling)
-    "heaps_curve" -> ((s, d) => {
+    Q("heaps_curve", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val dw = t(s, d).documents
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
@@ -1872,12 +3626,23 @@ object SparkEntry {
         Seq("n_tok" -> "cum_tokens", "n_new" -> "cum_types"))
         .select(col("bucket"), col("cum_tokens"), col("cum_types"))
         .orderBy("bucket")
-    }),
+    })(
+      // first-doc-credited types, 50-doc buckets, running integer sums
+      s"""$WDoc,
+         | tb AS (SELECT doc_id // 50 AS bucket, count(*) AS n_tok FROM w GROUP BY 1),
+         | fd AS (SELECT word, min(doc_id) AS first_doc FROM w GROUP BY 1),
+         | nb AS (SELECT first_doc // 50 AS bucket, count(*) AS n_new FROM fd GROUP BY 1),
+         | j AS (SELECT tb.bucket, tb.n_tok, coalesce(nb.n_new, 0) AS n_new
+         |       FROM tb LEFT JOIN nb ON tb.bucket = nb.bucket)
+         |SELECT CAST(bucket AS BIGINT) AS bucket,
+         | CAST(sum(n_tok) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
+         | CAST(sum(n_new) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_types
+         |FROM j ORDER BY bucket""".stripMargin),
     // exact two-sample Kolmogorov-Smirnov D between the even- and
     // odd-doc length distributions: the max CDF gap computed as
     // max |c1·n2 − c2·n1| in pure integers, ONE division at the end —
     // the numeric-drift gate (corpus_drift covers token frequencies)
-    "ks_drift" -> ((s, d) => {
+    Q("ks_drift", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val v = t(s, d).documents.select(col("n_chars").as("v"),
         (col("doc_id") % 2 === 0).as("g1"))
@@ -1898,22 +3663,68 @@ object SparkEntry {
         .select(col("n1"), col("n2"), col("d_num"),
           round(col("d_num").cast("double") / (col("n1") * col("n2")).cast("double"), 6)
             .as("ks_d"))
-    }),
+    })(
+      // max |c1·n2 − c2·n1| in pure BIGINTs, one rounded division
+      """WITH v AS (SELECT n_chars AS v, doc_id % 2 = 0 AS g1 FROM documents),
+        | per AS (SELECT v,
+        |         CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
+        |         CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT) AS b
+        |         FROM v GROUP BY 1),
+        | tot AS (SELECT CAST(sum(a) AS BIGINT) AS n1, CAST(sum(b) AS BIGINT) AS n2 FROM per),
+        | c AS (SELECT v,
+        |       CAST(sum(a) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c1,
+        |       CAST(sum(b) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c2
+        |       FROM per),
+        | g AS (SELECT tot.n1, tot.n2, abs(c.c1 * tot.n2 - c.c2 * tot.n1) AS gap
+        |       FROM c CROSS JOIN tot)
+        |SELECT n1, n2, max(gap) AS d_num,
+        | round(CAST(max(gap) AS DOUBLE) / CAST(n1 * n2 AS DOUBLE), 6) AS ks_d
+        |FROM g GROUP BY n1, n2""".stripMargin),
     // within-doc chorus/footer CUT (repetition stats detect, this
     // removes): first occurrence per sentence, reassembled in order;
     // fixture plants a guaranteed repeat per doc
-    "sentence_dedup_within" -> ((s, d) => {
+    Q("sentence_dedup_within", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(col("text"), lit(" Again now. Again now. Doc tail.")).as("text"))
       TextQuality.sentenceDedupWithin(fx).orderBy("doc_id")
-    }),
+    })(
+      // first-occurrence per (doc, sentence), ordered string_agg —
+      // the same sentence CTEs as sentence_split, different stitch
+      """WITH fx AS (SELECT doc_id, text || ' Again now. Again now. Doc tail.' AS text FROM documents),
+        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
+        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q),
+        | s AS (SELECT doc_id, CAST(i AS BIGINT) AS sent_idx, l[i] AS sentence FROM u),
+        | r AS (SELECT doc_id, sent_idx, sentence,
+        |       row_number() OVER (PARTITION BY doc_id, sentence ORDER BY sent_idx) AS rn FROM s),
+        | k AS (SELECT doc_id, count(*) AS n_kept,
+        |       string_agg(sentence, ' ' ORDER BY sent_idx) AS clean_text FROM r WHERE rn = 1 GROUP BY 1),
+        | t AS (SELECT doc_id, count(*) AS n_sents FROM s GROUP BY 1)
+        |SELECT t.doc_id, t.n_sents, k.n_kept, k.clean_text
+        |FROM t JOIN k USING (doc_id) ORDER BY t.doc_id""".stripMargin),
     // register gate keyed to each doc's OWN language list — an en
     // list scoring a de page near 0 is the bug this dispatch avoids
-    "stopword_coverage" -> ((s, d) =>
-      TextQuality.stopwordCoverage(t(s, d).documents).orderBy("lang")),
+    Q("stopword_coverage", (s, d) =>
+      TextQuality.stopwordCoverage(t(s, d).documents).orderBy("lang")) {
+      // per-lang CASE over the SAME Scala stopword lists, interpolated —
+      // the two engines cannot drift on the word lists
+      val langs = TextQuality.Stopwords.keys.toSeq.sorted
+      val caseArms = langs.map { l =>
+        val lst = TextQuality.Stopwords(l).map(w => s"'$w'").mkString("[", ",", "]")
+        s"WHEN lang = '$l' THEN CAST(len(list_filter(tk, x -> list_contains($lst, lower(x)))) AS BIGINT)"
+      }.mkString("\n        |       ")
+      s"""WITH t AS (SELECT lang, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk FROM documents),
+         | s AS (SELECT lang, CAST(len(tk) AS BIGINT) AS n_toks,
+         |       CASE $caseArms END AS n_stop
+         |       FROM t),
+         | f AS (SELECT lang, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_toks,
+         |       CAST(sum(n_stop) AS BIGINT) AS n_stop FROM s WHERE n_toks > 0 GROUP BY 1)
+         |SELECT lang, n_docs, n_toks, n_stop,
+         | round(CAST(n_stop AS DOUBLE) / CAST(n_toks AS DOUBLE), 6) AS coverage
+         |FROM f ORDER BY lang""".stripMargin
+    },
     // data discovery: which column pairs actually join — exact
     // distinct-set overlap coefficient per candidate pair
-    "joinability_report" -> ((s, d) => {
+    Q("joinability_report", (s, d) => {
       val tt = t(s, d)
       Profiling.joinability(Seq(
         ("events.user_id~customer.c_custkey", tt.events, "user_id", tt.customer, "c_custkey"),
@@ -1921,10 +3732,23 @@ object SparkEntry {
         ("orders.o_custkey~customer.c_custkey", tt.orders, "o_custkey", tt.customer, "c_custkey"),
         ("orders.o_orderkey~part.p_partkey", tt.orders, "o_orderkey", tt.part, "p_partkey")))
         .orderBy("col_pair")
-    }),
+    })(Seq(
+      ("events.user_id~customer.c_custkey", "events", "user_id", "customer", "c_custkey"),
+      ("lineitem.l_partkey~part.p_partkey", "lineitem", "l_partkey", "part", "p_partkey"),
+      ("orders.o_custkey~customer.c_custkey", "orders", "o_custkey", "customer", "c_custkey"),
+      ("orders.o_orderkey~part.p_partkey", "orders", "o_orderkey", "part", "p_partkey"))
+      .map { case (name, lt, lc, rt, rc) =>
+        s"""(SELECT '$name' AS col_pair,
+           |  count(a.v) AS n_left, count(b.v) AS n_right,
+           |  CAST(sum(CASE WHEN a.v IS NOT NULL AND b.v IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
+           |  round(CAST(sum(CASE WHEN a.v IS NOT NULL AND b.v IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+           |    / CAST(least(count(a.v), count(b.v)) AS DOUBLE), 6) AS overlap
+           | FROM (SELECT DISTINCT CAST($lc AS VARCHAR) AS v FROM $lt) a
+           | FULL JOIN (SELECT DISTINCT CAST($rc AS VARCHAR) AS v FROM $rt) b ON a.v = b.v)""".stripMargin
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_pair")),
     // hour-of-day load shape per event type with floor-ppm shares and
     // a deterministic peak flag
-    "seasonality_profile" -> ((s, d) => {
+    Q("seasonality_profile", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       t(s, d).events
         .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hr"))
@@ -1935,10 +3759,18 @@ object SparkEntry {
           Window.partitionBy(col("event_type")).orderBy(desc("n"), col("hr"))) === 1)
         .select(col("event_type"), col("hr"), col("n"), col("share_ppm"), col("is_peak"))
         .orderBy("event_type", "hr")
-    }),
+    })(
+      """WITH h AS (SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
+        |           count(*) AS n FROM events GROUP BY 1, 2),
+        | w AS (SELECT event_type, hr, n,
+        |       CAST(sum(n) OVER (PARTITION BY event_type) AS BIGINT) AS total,
+        |       row_number() OVER (PARTITION BY event_type ORDER BY n DESC, hr) AS rk FROM h)
+        |SELECT event_type, hr, n,
+        | CAST(floor(n * 1000000 / total) AS BIGINT) AS share_ppm, rk = 1 AS is_peak
+        |FROM w ORDER BY event_type, hr""".stripMargin),
     // per-doc top-3 TF-IDF keywords through the GroupedTopK physical
     // operator — bounded per-group heaps, never a per-doc sort
-    "doc_keywords" -> ((s, d) => {
+    Q("doc_keywords", (s, d) => {
       val docs = t(s, d).documents
       val tf = Retrieval.docTermFreqs(docs)
       val dfr = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -1950,24 +3782,67 @@ object SparkEntry {
       graft.plans.GroupedTopK.topKPerKey(wt, Seq("doc_id"),
           Seq(("w", true), ("word", false)), k = 3)
         .orderBy(col("doc_id"), desc("w"), asc("word"))
-    }),
+    })(
+      // tf·idf with idf = ln(N/df), one division + one ln + one mul;
+      // row_number top-3 mirrors the GroupedTopK heap semantics
+      s"""$WDoc,
+         | tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2),
+         | dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
+         | nd AS (SELECT count(*) AS n_docs FROM documents),
+         | wt AS (SELECT tf.doc_id, tf.word,
+         |   round(CAST(tf.tf AS DOUBLE) * ln(CAST(nd.n_docs AS DOUBLE) / CAST(dfq.df AS DOUBLE)), 6) AS w
+         |   FROM tf JOIN dfq USING (word) CROSS JOIN nd),
+         | r AS (SELECT doc_id, word, w,
+         |       row_number() OVER (PARTITION BY doc_id ORDER BY w DESC, word) AS rn FROM wt)
+         |SELECT doc_id, word, w FROM r WHERE rn <= 3 ORDER BY doc_id, w DESC, word""".stripMargin),
     // structural QA: dominant Unicode script vs the lang label — a
     // CJK-dominant doc labeled 'en' is a mislabel or a mojibake feed
-    "script_lang_matrix" -> ((s, d) => {
+    Q("script_lang_matrix", (s, d) => {
       val docs = t(s, d).documents
       TextQuality.scriptProfile(docs).select(col("doc_id"), col("dominant"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .groupBy(col("lang"), col("dominant")).agg(count(lit(1)).as("n"))
         .orderBy("lang", "dominant")
-    }),
+    }) {
+      // the script census on RAW documents (no fixture stitching),
+      // rolled up to the (label, dominant-script) grain
+      def c(cls: String) = s"CAST(length(text) - length(regexp_replace(text, '$cls', '', 'g')) AS BIGINT)"
+      s"""WITH p AS (SELECT doc_id,
+         |  ${c("[A-Za-z]")} AS n_latin,
+         |  ${c("[\\x{0400}-\\x{04FF}]")} AS n_cyrillic,
+         |  ${c("[\\x{4E00}-\\x{9FFF}]")} AS n_cjk FROM documents),
+         | v AS (SELECT doc_id,
+         |  CASE WHEN n_latin + n_cyrillic + n_cjk = 0 THEN 'none'
+         |       WHEN n_cjk >= n_latin AND n_cjk >= n_cyrillic THEN 'cjk'
+         |       WHEN n_cyrillic >= n_latin THEN 'cyrillic'
+         |       ELSE 'latin' END AS dominant FROM p)
+         |SELECT d.lang, v.dominant, count(*) AS n
+         |FROM v JOIN documents d USING (doc_id)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    },
     // cross-source score calibration: quantile normalization — each
     // doc's per-source rank mapped to the GLOBAL score at the same
     // quantile, in PURE integer rank arithmetic (no float percentile)
-    "score_quantile_norm" -> ((s, d) =>
-      Corpus.quantileNormalize(t(s, d).documents).orderBy("doc_id")),
+    Q("score_quantile_norm", (s, d) =>
+      Corpus.quantileNormalize(t(s, d).documents).orderBy("doc_id"))(
+      // rt = (rs−1)(N−1) // (ns−1) + 1 in pure BIGINT arithmetic; the
+      // normalized score is a real value picked by global rank
+      """WITH b AS (SELECT doc_id, source AS grp, CAST(n_chars AS BIGINT) AS score FROM documents),
+        | s AS (SELECT doc_id, grp, score,
+        |       CAST(row_number() OVER (PARTITION BY grp ORDER BY score, doc_id) AS BIGINT) AS rs,
+        |       count(*) OVER (PARTITION BY grp) AS ns FROM b),
+        | g AS (SELECT CAST(row_number() OVER (ORDER BY score, doc_id) AS BIGINT) AS rt,
+        |       score AS norm_score FROM b),
+        | n AS (SELECT count(*) AS ng FROM b),
+        | t AS (SELECT s.doc_id, s.grp, s.score,
+        |       CASE WHEN s.ns = 1 THEN 1
+        |            ELSE ((s.rs - 1) * (n.ng - 1)) // (s.ns - 1) + 1 END AS rt
+        |       FROM s CROSS JOIN n)
+        |SELECT t.doc_id, t.grp AS source, t.score, g.norm_score
+        |FROM t JOIN g ON g.rt = t.rt ORDER BY t.doc_id""".stripMargin),
     // the confusion matrix reduced to decision numbers: per-language
     // precision/recall/F1 (F1 from the ROUNDED p and r, mirrored)
-    "lang_id_metrics" -> ((s, d) => {
+    Q("lang_id_metrics", (s, d) => {
       val docs = t(s, d).documents
       val cm = TextQuality.langIdNgram(docs).select(col("doc_id"), col("pred_lang"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
@@ -1987,11 +3862,30 @@ object SparkEntry {
           round(lit(2.0) * col("precision") * col("recall")
             / (col("precision") + col("recall")), 6)))
         .orderBy("lang")
-    }),
+    })(
+      // confusion rolled to per-language precision/recall/F1; F1 from
+      // the rounded p and r exactly as the Spark side computes it
+      s"""WITH cm AS (SELECT d.lang, p.pred_lang
+         |            FROM ($langIdNgramTwin) p JOIN documents d USING (doc_id)),
+         | ba AS (SELECT lang, count(*) AS n_actual,
+         |        CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS tp
+         |        FROM cm GROUP BY 1),
+         | bp AS (SELECT pred_lang AS lang, count(*) AS n_pred FROM cm GROUP BY 1),
+         | j AS (SELECT ba.lang, ba.n_actual, coalesce(bp.n_pred, 0) AS n_pred, ba.tp
+         |       FROM ba LEFT JOIN bp ON ba.lang = bp.lang),
+         | pr AS (SELECT lang, n_actual, n_pred, tp,
+         |        CASE WHEN n_pred > 0
+         |             THEN round(CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE), 6) END AS precision,
+         |        round(CAST(tp AS DOUBLE) / CAST(n_actual AS DOUBLE), 6) AS recall
+         |        FROM j)
+         |SELECT lang, n_actual, n_pred, tp, precision, recall,
+         | CASE WHEN precision IS NOT NULL AND precision + recall > 0
+         |      THEN round(CAST(2.0 AS DOUBLE) * precision * recall / (precision + recall), 6) END AS f1
+         |FROM pr ORDER BY lang""".stripMargin),
     // RM3-style pseudo-relevance feedback: expansion terms mined from
     // the top-10 BM25 hits, ranked by feedback-tf · ln(N/df), query
     // terms excluded — the classic recall move after a first pass
-    "rm3_expansion" -> ((s, d) => {
+    Q("rm3_expansion", (s, d) => {
       val docs = t(s, d).documents
       val fb = Retrieval.bm25TopK(docs, Bm25Terms, k = 10, maxDf = RetrievalMaxDf)
         .select(col("doc_id"))
@@ -2007,79 +3901,200 @@ object SparkEntry {
             * log(col("n_docs").cast("double") / col("df").cast("double")), 6).as("w"))
         .orderBy(desc("w"), col("word"))
         .limit(10)
-    }),
+    })(
+      // the bm25 twin (LIMIT 10 re-applied) feeds the feedback set;
+      // expansion weight = feedback-tf · ln(N/df), query terms excluded
+      s"""WITH fb AS (SELECT doc_id FROM ($bm25TwinSql) z ORDER BY score DESC, doc_id LIMIT 10),
+         | w0 AS (SELECT doc_id, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
+         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
+         | w AS (SELECT doc_id, word FROM w0 WHERE length(word) > 0),
+         | tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2),
+         | dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
+         | nd AS (SELECT count(*) AS n_docs FROM documents),
+         | fbt AS (SELECT tf.word, CAST(sum(tf.tf) AS BIGINT) AS tf_fb
+         |         FROM tf JOIN fb USING (doc_id)
+         |         WHERE tf.word NOT IN (${Bm25Terms.map(t => s"'$t'").mkString(", ")})
+         |         GROUP BY 1)
+         |SELECT fbt.word, fbt.tf_fb, dfq.df,
+         | round(CAST(fbt.tf_fb AS DOUBLE) * ln(CAST(nd.n_docs AS DOUBLE) / CAST(dfq.df AS DOUBLE)), 6) AS w
+         |FROM fbt JOIN dfq USING (word) CROSS JOIN nd
+         |ORDER BY w DESC, fbt.word LIMIT 10""".stripMargin),
     // classifier-quality report: n-gram language ID vs the labeled
     // lang column — the confusion matrix that says whether the router
     // can be trusted per language
-    "lang_id_confusion" -> ((s, d) => {
+    Q("lang_id_confusion", (s, d) => {
       val docs = t(s, d).documents
       TextQuality.langIdNgram(docs).select(col("doc_id"), col("pred_lang"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .groupBy(col("lang"), col("pred_lang")).agg(count(lit(1)).as("n"))
         .orderBy("lang", "pred_lang")
-    }),
+    })(
+      // the twin verbatim as a subquery, rolled up to the (label,
+      // prediction) confusion grain
+      s"""SELECT d.lang, p.pred_lang, count(*) AS n
+         |FROM ($langIdNgramTwin) p JOIN documents d USING (doc_id)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // ops report: exact duplicate pressure per source (sha256 groups)
     // — the number that decides which feed pays for better dedup
-    "dup_rate_by_source" -> ((s, d) =>
+    Q("dup_rate_by_source", (s, d) =>
       t(s, d).documents.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           count_distinct(sha2(col("text"), 256)).as("n_unique"))
         .select(col("source"), col("n_docs"), col("n_unique"),
           floor((col("n_docs") - col("n_unique")) * lit(1000000L) / col("n_docs"))
             .as("dup_ppm"))
-        .orderBy("source")),
+        .orderBy("source"))(
+      """SELECT source, count(*) AS n_docs, count(DISTINCT sha256(text)) AS n_unique,
+        | CAST(floor((count(*) - count(DISTINCT sha256(text))) * 1000000 / count(*)) AS BIGINT) AS dup_ppm
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // content-keyed train/val/test assignment — split follows the
     // TEXT hash, so re-crawls/re-partitions can never leak val→train
-    "dataset_split" -> ((s, d) =>
+    Q("dataset_split", (s, d) =>
       Corpus.datasetSplit(t(s, d).documents)
-        .select(col("doc_id"), col("lang"), col("split")).orderBy("doc_id")),
+        .select(col("doc_id"), col("lang"), col("split")).orderBy("doc_id"))(
+      s"""SELECT doc_id, lang,
+         | CASE WHEN $HashPermille < 800 THEN 'train'
+         |      WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
+         |FROM documents ORDER BY doc_id""".stripMargin),
     // the QA step after the split: held-out docs sharing >= 2 distinct
     // trigram shingles with ANY train doc — near-dups straddle a
     // content-hash boundary even though exact dups cannot
-    "split_leakage_audit" -> ((s, d) =>
-      Corpus.splitLeakageAudit(t(s, d).documents).orderBy("doc_id")),
+    Q("split_leakage_audit", (s, d) =>
+      Corpus.splitLeakageAudit(t(s, d).documents).orderBy("doc_id"))(
+      // decontaminate's shingle-overlap machinery turned inward: the
+      // held-out splits audited against the train shingle set; the twin
+      // counts TEXT shingles where Spark counts xxhash64 ids — identical
+      // short of a 64-bit collision (same budget as every shingle twin)
+      s"""WITH sp AS (SELECT doc_id, text,
+         |   CASE WHEN $HashPermille < 800 THEN 'train'
+         |        WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
+         |  FROM documents),
+         | toks AS (SELECT doc_id, split, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM sp),
+         | pos AS (SELECT doc_id, split, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+         | sh AS (SELECT DISTINCT doc_id, split, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+         | tsh AS (SELECT DISTINCT shingle FROM sh WHERE split = 'train'),
+         | ov AS (SELECT s.doc_id, count(*) AS n_train_overlap FROM sh s JOIN tsh USING (shingle)
+         |        WHERE s.split <> 'train' GROUP BY 1)
+         |SELECT e.doc_id, e.split, coalesce(ov.n_train_overlap, 0) AS n_train_overlap,
+         | coalesce(ov.n_train_overlap, 0) >= 2 AS leaked
+         |FROM sp e LEFT JOIN ov USING (doc_id) WHERE e.split <> 'train'
+         |ORDER BY e.doc_id""".stripMargin),
     // skyline curation: docs on the (size ↑, vocabulary-richness ↑)
     // Pareto frontier via the sample-prune-exact ladder — the
     // quadratic dominance check runs only on the undominated band,
     // never the corpus
-    "pareto_curation" -> ((s, d) => {
+    Q("pareto_curation", (s, d) => {
       val ld = TextQuality.lexicalDiversity(t(s, d).documents)
         .select(col("doc_id"), col("n_tokens"), col("ttr"))
       Corpus.paretoFrontier(ld, Seq("n_tokens" -> true, "ttr" -> true)).orderBy("doc_id")
-    }),
+    })(
+      // the NOT EXISTS spelling of Pareto dominance — the oracle runs
+      // the O(n²) definition the Spark ladder avoids; comparisons are on
+      // the 6-dp-rounded ttr both sides
+      s"""$WDoc,
+         | c AS (SELECT doc_id, word, count(*) AS n FROM w GROUP BY 1, 2),
+         | a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens, count(*) AS n_types FROM c GROUP BY 1),
+         | ld AS (SELECT doc_id, n_tokens,
+         |        round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr FROM a)
+         |SELECT p.doc_id, p.n_tokens, p.ttr FROM ld p
+         |WHERE NOT EXISTS (SELECT 1 FROM ld q
+         |  WHERE q.n_tokens >= p.n_tokens AND q.ttr >= p.ttr
+         |    AND (q.n_tokens > p.n_tokens OR q.ttr > p.ttr))
+         |ORDER BY p.doc_id""".stripMargin),
     // perplexity-proxy scoring: per-doc sum of ln p(word) under the
     // corpus's own unigram distribution — per-token logs rounded and
     // DECIMAL-summed so accumulation order cannot wiggle the hash
-    "unigram_logprob" -> ((s, d) =>
-      TextQuality.unigramLogProb(t(s, d).documents).orderBy("doc_id")),
+    Q("unigram_logprob", (s, d) =>
+      TextQuality.unigramLogProb(t(s, d).documents).orderBy("doc_id"))(
+      s"""$WDoc,
+         | c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
+         | t AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM c),
+         | lp AS (SELECT w.doc_id,
+         |   CAST(round(ln(CAST(c.cnt AS DOUBLE) / t.total), 12) AS DECIMAL(28,12)) AS l
+         |   FROM w JOIN c USING (word) CROSS JOIN t),
+         | s AS (SELECT doc_id, count(*) AS n_tokens, sum(l) AS sl FROM lp GROUP BY 1)
+         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
+         |       round(CAST(sl AS DOUBLE) / n_tokens, 6) AS avg_logprob
+         |FROM s ORDER BY doc_id""".stripMargin),
     // next rung up the perplexity ladder: ln p(cur|prev) under the
     // corpus's own min-count-pruned bigram model with stupid backoff
     // (alpha * unigram) for pruned pairs — same rounded-log DECIMAL
     // determinism as unigram_logprob
-    "bigram_logprob" -> ((s, d) =>
-      TextQuality.bigramLogProb(t(s, d).documents).orderBy("doc_id")),
+    Q("bigram_logprob", (s, d) =>
+      TextQuality.bigramLogProb(t(s, d).documents).orderBy("doc_id"))(
+      // ordered cleaned-word lists (the fingerprint_ref device) feed
+      // adjacent-pair bigrams via 1-based list indexing — unnest order
+      // is never relied on for sequence structure. Per-pair logs use
+      // the identical one-expression association as the Spark side,
+      // rounded 12 dp and DECIMAL-summed.
+      s"""$BigramCtes
+         |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
+         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
+         |       round(CAST(sl AS DOUBLE) / n_bigrams, 6) AS avg_logprob
+         |FROM s ORDER BY doc_id""".stripMargin),
     // eval-set seeding: the k best LM-scored exemplars PER LANGUAGE,
     // picked by the engine's own GroupedTopK physical operator
     // (bounded per-group heaps) over the bigram model's average —
     // composing the custom planner strategy with the LM ladder
-    "best_exemplars" -> ((s, d) => {
+    Q("best_exemplars", (s, d) => {
       val scored = TextQuality.bigramLogProb(t(s, d).documents)
         .join(t(s, d).documents.select(col("doc_id"), col("lang")), "doc_id")
         .select(col("lang"), col("doc_id"), col("avg_logprob"))
       graft.plans.GroupedTopK.topKPerKey(scored, Seq("lang"),
           Seq(("avg_logprob", true), ("doc_id", false)), k = 3)
         .orderBy(col("lang"), desc("avg_logprob"), asc("doc_id"))
-    }),
+    })(
+      s"""$BigramCtes,
+         | scd AS (SELECT d.lang, s.doc_id, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS avg_logprob
+         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
+         | rk AS (SELECT lang, doc_id, avg_logprob,
+         |        row_number() OVER (PARTITION BY lang ORDER BY avg_logprob DESC, doc_id) AS rn FROM scd)
+         |SELECT lang, doc_id, avg_logprob FROM rk WHERE rn <= 3
+         |ORDER BY lang, avg_logprob DESC, doc_id""".stripMargin),
     // top of the n-gram ladder: trigram model with two-level stupid
     // backoff (tri → bigram → unigram), pruned numerators, true-count
     // denominators
-    "trigram_logprob" -> ((s, d) =>
-      TextQuality.trigramLogProb(t(s, d).documents).orderBy("doc_id")),
+    Q("trigram_logprob", (s, d) =>
+      TextQuality.trigramLogProb(t(s, d).documents).orderBy("doc_id"))(
+      // trigram twin: same ordered-list CTEs; backoff CASE arms match
+      // the Spark when-chain's operand association exactly (0.4 * 0.4
+      // folds to the same IEEE double in both engines)
+      s"""WITH toks AS (SELECT doc_id,
+         |    list_filter(list_transform(
+         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |  FROM documents),
+         | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
+         | tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM uni),
+         | bg AS (SELECT ws[i] AS b1, ws[i+1] AS b2
+         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM toks WHERE len(ws) >= 2)),
+         | bi AS (SELECT b1, b2, count(*) AS bc FROM bg GROUP BY 1, 2),
+         | tg AS (SELECT doc_id, ws[i-1] AS p2, ws[i] AS p1, ws[i+1] AS cur
+         |        FROM (SELECT doc_id, ws, unnest(range(2, len(ws))) AS i FROM toks WHERE len(ws) >= 3)),
+         | tri AS (SELECT p2, p1, cur, count(*) AS tc FROM tg GROUP BY 1, 2, 3 HAVING count(*) >= 2),
+         | sc AS (SELECT tg.doc_id,
+         |     CAST(round(CASE
+         |       WHEN t3.tc IS NOT NULL THEN ln(CAST(t3.tc AS DOUBLE) / CAST(cx.bc AS DOUBLE))
+         |       WHEN bm.bc IS NOT NULL THEN ln(0.4 * CAST(bm.bc AS DOUBLE) / CAST(up.cnt AS DOUBLE))
+         |       ELSE ln(0.4 * 0.4 * CAST(uc.cnt AS DOUBLE) / t.total) END, 12) AS DECIMAL(28,12)) AS l
+         |   FROM tg
+         |   LEFT JOIN tri t3 ON tg.p2 = t3.p2 AND tg.p1 = t3.p1 AND tg.cur = t3.cur
+         |   LEFT JOIN (SELECT b1, b2, bc FROM bi WHERE bc >= 2) bm ON tg.p1 = bm.b1 AND tg.cur = bm.b2
+         |   JOIN bi cx ON tg.p2 = cx.b1 AND tg.p1 = cx.b2
+         |   JOIN uni up ON tg.p1 = up.word
+         |   JOIN uni uc ON tg.cur = uc.word
+         |   CROSS JOIN tot t),
+         | s AS (SELECT doc_id, count(*) AS n_trigrams, sum(l) AS sl FROM sc GROUP BY 1)
+         |SELECT doc_id, CAST(n_trigrams AS BIGINT) AS n_trigrams,
+         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
+         |       round(CAST(sl AS DOUBLE) / n_trigrams, 6) AS avg_logprob
+         |FROM s ORDER BY doc_id""".stripMargin),
     // MODEL-based quality cut: the bigram LM's per-doc avg log-prob
     // drives the histogram-two-pass quantile filter (keep the top
     // half per language) — perplexity filtering as a real corpus
     // pipeline stage, not just a score column
-    "perplexity_filter" -> ((s, d) => {
+    Q("perplexity_filter", (s, d) => {
       val tt = t(s, d)
       val docs = tt.documents
       val scored = docs.select(col("doc_id"), col("lang"))
@@ -2087,13 +4102,22 @@ object SparkEntry {
           .select(col("doc_id"), col("avg_logprob").as("score")), Seq("doc_id"))
       Corpus.quantileFilterByScore(scored, keep = 0.5,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
-    }),
+    })(
+      // model-based quality cut: the bigram chain's per-doc average
+      // feeds the naive percent_rank twin of the histogram filter —
+      // proven equal for quality_filter, reproven here on the LM score
+      s"""$BigramCtes,
+         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
+         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
+         | r AS (SELECT doc_id, lang, score,
+         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin),
     // the CCNet split (Wenzek et al.): per-language LM-perplexity
     // TERCILES — head/middle/tail buckets every row, where the filter
     // above keeps only the top half. Value-based buckets off the same
     // percent-rank-by-value relation, so ties stay together and the
     // DuckDB percent_rank twin hash-matches
-    "perplexity_buckets" -> ((s, d) => {
+    Q("perplexity_buckets", (s, d) => {
       val tt = t(s, d)
       val docs = tt.documents
       val scored = docs.select(col("doc_id"), col("lang"))
@@ -2101,12 +4125,23 @@ object SparkEntry {
           .select(col("doc_id"), col("avg_logprob").as("score")), Seq("doc_id"))
       Corpus.scoreBuckets(scored, nBuckets = 3,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
-    }),
+    })(
+      // the tercile twin: the same bigram chain, bucket from the naive
+      // percent_rank — floor(pr*3) is one IEEE multiply+floor on both
+      // engines, clamped at 2 for pr = 1.0
+      s"""$BigramCtes,
+         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
+         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
+         | r AS (SELECT doc_id, lang, score,
+         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+         |SELECT doc_id, lang, score, pr,
+         | least(2, CAST(floor(pr * 3) AS BIGINT)) AS bucket
+         |FROM r ORDER BY doc_id""".stripMargin),
     // the crawl-authority prior wired into curation: the engine's own
     // extracted link graph → PageRank → per-language quantile cut —
     // link authority as a corpus quality signal, through the same
     // histogram-two-pass seam the LM perplexity cut uses
-    "authority_filter" -> ((s, d) => {
+    Q("authority_filter", (s, d) => {
       val tt = t(s, d)
       val docs = tt.documents
       val rank = Graph.pageRank(Html.outlinks(Html.pageFromDocs(docs)))
@@ -2114,26 +4149,85 @@ object SparkEntry {
         .join(rank.select(col("node").as("doc_id"), col("pr").as("score")), Seq("doc_id"))
       Corpus.quantileFilterByScore(scored, keep = 0.5,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
-    }),
-    "token_count" -> ((s, d) => TextQuality.tokenCounts(t(s, d).documents).orderBy("doc_id")),
+    })(
+      // authority twin: the unrolled PageRank CTE chain over the
+      // closed-form crawl edges feeds the naive percent_rank filter —
+      // the same composition proven piecewise by crawl_rank and
+      // perplexity_filter
+      s"""${pageRankCtes(CrawlEdgesCte)},
+         | scd AS (SELECT d.doc_id, d.lang, round(r.rank, 8) AS score
+         |         FROM documents d JOIN r5 r ON d.doc_id = r.node),
+         | rk AS (SELECT doc_id, lang, score,
+         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+         |SELECT doc_id, lang, score, pr FROM rk WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin),
+    Q("token_count", (s, d) => TextQuality.tokenCounts(t(s, d).documents).orderBy("doc_id"))(
+      """SELECT doc_id,
+        | CAST(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS ws_tokens,
+        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens,
+        | CAST(ceil(length(text) / 4.0) AS BIGINT) AS approx_llm_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // real subword tokenization under the frozen BPE merge artifact
     // (Bpe.DefaultMerges, learned once from the corpus — tokenizers
     // ship as fixed files): corpus-wide token histogram, tokenizing
     // DISTINCT words once and joining frequencies back
-    "bpe_tokens" -> ((s, d) =>
+    Q("bpe_tokens", (s, d) =>
       Bpe.tokenHistogram(t(s, d).documents, Bpe.DefaultMerges,
-        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("token")),
+        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("token"))(
+      // the recursive CTE replays the applier's one-splice-per-iteration
+      // best-rank merges per DISTINCT word (BpeApplyCte), then weights
+      // tokens by word frequency — cross-engine hash equality proves the
+      // tokenizer itself
+      s"""WITH RECURSIVE
+         | wc AS (SELECT lower(t.tok) AS word, count(*) AS cnt
+         |        FROM (SELECT unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
+         |        WHERE length(t.tok) > 0 GROUP BY 1),
+         |$BpeApplyCte
+         |SELECT tok AS token, CAST(sum(cnt) AS BIGINT) AS n
+         |FROM (SELECT word, unnest(toks) AS tok FROM fin) f JOIN wc USING (word)
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // the packing-budget column: per-doc BPE vs whitespace token counts
-    "bpe_doc_tokens" -> ((s, d) =>
+    Q("bpe_doc_tokens", (s, d) =>
       Bpe.docTokenCounts(t(s, d).documents, Bpe.DefaultMerges,
-        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("doc_id")),
+        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("doc_id"))(
+      s"""WITH RECURSIVE
+         | dw AS (SELECT doc_id, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
+         |$BpeApplyCte
+         |SELECT doc_id, CAST(sum(len(toks)) AS BIGINT) AS bpe_tokens,
+         |       CAST(count(*) AS BIGINT) AS ws_tokens
+         |FROM dw JOIN fin USING (word) GROUP BY 1 ORDER BY 1""".stripMargin),
     // context-limit enforcement with EXACT accounting: each doc's
     // longest whole-word prefix fitting a 48-BPE-token budget (binding
     // for most docs at sf0.01, not all — both branches live), with
     // the kept counts and the truncation flag
-    "token_budget_truncate" -> ((s, d) =>
+    Q("token_budget_truncate", (s, d) =>
       Bpe.truncateToTokenBudget(t(s, d).documents, Bpe.DefaultMerges, budget = 48L,
-        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("doc_id")),
+        alphabet = Some(Bpe.DefaultAlphabet)).orderBy("doc_id"))(
+      // positional word relation + the recursive applier, then the same
+      // prefix-closed keep predicate as one window + filter; a doc
+      // whose first word overflows LEFT-JOINs to an empty prefix
+      s"""WITH RECURSIVE
+         | tl AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | dwp AS (SELECT doc_id, i AS pos, l[i] AS tok, lower(l[i]) AS word
+         |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM tl) z),
+         | wc AS (SELECT word, count(*) AS cnt FROM dwp GROUP BY 1),
+         |$BpeApplyCte,
+         | jo AS (SELECT dwp.doc_id, dwp.pos, dwp.tok, CAST(len(f.toks) AS BIGINT) AS n_toks
+         |        FROM dwp JOIN fin f USING (word)),
+         | cb AS (SELECT doc_id, pos, tok, n_toks,
+         |    coalesce(sum(n_toks) OVER (PARTITION BY doc_id ORDER BY pos
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM jo),
+         | tot AS (SELECT doc_id, CAST(sum(n_toks) AS BIGINT) AS bpe_total FROM jo GROUP BY 1),
+         | kept AS (SELECT doc_id, count(*) AS ws_tokens_kept, CAST(sum(n_toks) AS BIGINT) AS bpe_tokens_kept,
+         |    string_agg(tok, ' ' ORDER BY pos) AS prefix
+         |   FROM cb WHERE cum_before + n_toks <= 48 GROUP BY doc_id)
+         |SELECT tot.doc_id, coalesce(kept.ws_tokens_kept, 0) AS ws_tokens_kept,
+         | coalesce(kept.bpe_tokens_kept, 0) AS bpe_tokens_kept,
+         | tot.bpe_total > 48 AS truncated,
+         | coalesce(kept.prefix, '') AS prefix
+         |FROM tot LEFT JOIN kept USING (doc_id) ORDER BY doc_id""".stripMargin),
     // the artifact's SHAPE, not just its counts: corpus-weighted
     // subword-length histogram (occurrences weighted by word
     // frequency, types over distinct token strings) over the SAME
@@ -2144,7 +4238,7 @@ object SparkEntry {
     // histogram stuck at 1 means the merges never fire — the
     // one-glance realism check on a relearned artifact. Applier still
     // runs on DISTINCT words only; the output is token-length-sized
-    "bpe_token_lengths" -> ((s, d) => {
+    Q("bpe_token_lengths", (s, d) => {
       val tb = t(s, d)
       val corpus = tb.documents.select(col("text"))
         .unionByName(tb.part.select(
@@ -2167,14 +4261,35 @@ object SparkEntry {
         .agg(sum(col("cnt")).as("n_occurrences"),
           count_distinct(col("tok")).as("n_types"))
         .orderBy("tok_len")
-    }),
+    })(
+      // same recursive applier, histogram over the unnested terminal
+      // tokens of the LearnBpe composite corpus — occurrences via the
+      // word-frequency join, types via count(DISTINCT token string)
+      s"""WITH RECURSIVE
+         | corpus AS (SELECT text FROM documents
+         |   UNION ALL SELECT p_name || ' ' || p_type || ' ' || p_brand FROM part
+         |   UNION ALL SELECT c_name FROM customer
+         |   UNION ALL SELECT s_name FROM supplier
+         |   UNION ALL SELECT n_name FROM nation
+         |   UNION ALL SELECT r_name FROM region
+         |   UNION ALL SELECT event_type || ' ' || props FROM events),
+         | dw AS (SELECT lower(t.tok) AS word
+         |        FROM (SELECT unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM corpus) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
+         |$BpeApplyCte,
+         | tl AS (SELECT wc.cnt, unnest(f.toks) AS tok FROM wc JOIN fin f USING (word))
+         |SELECT CAST(length(tok) AS BIGINT) AS tok_len,
+         | CAST(sum(cnt) AS BIGINT) AS n_occurrences,
+         | CAST(count(DISTINCT tok) AS BIGINT) AS n_types
+         |FROM tl GROUP BY 1 ORDER BY 1""".stripMargin),
     // tokenizer COVERAGE audit: per-language byte-fallback share —
     // the zh documents sit entirely outside the learned 41-symbol
     // alphabet and take the <0xHH> path, en/de stay in-vocabulary;
     // a nonzero oov_ppm on a language the tokenizer claims to cover
     // is the one-glance artifact-mismatch alarm. Applier on DISTINCT
     // words only, occurrence-weighted by the doc join
-    "bpe_oov_rate" -> ((s, d) => {
+    Q("bpe_oov_rate", (s, d) => {
       val docs = t(s, d).documents
       // the raw corpus is alphabet-pure (zero fallback everywhere —
       // hash-proven), so zh docs get one planted CJK token, stitched
@@ -2199,11 +4314,31 @@ object SparkEntry {
         .select(col("lang"), col("bpe_tokens"), col("oov_tokens"),
           floor(col("oov_tokens") * lit(1000000L) / col("bpe_tokens")).as("oov_ppm"))
         .orderBy("lang")
-    }),
+    })(
+      // the byte-fallback census over the CJK-stitched corpus: the
+      // byte-faithful applier base expands the planted OOV chars to
+      // their <0xHH> marker sequences (from the same Scala constant the
+      // stitch uses), and the marker pattern is pure ASCII in the
+      // Java∩RE2 intersection
+      s"""WITH RECURSIVE
+         | sd AS (SELECT doc_id, CASE WHEN lang = 'zh' THEN text || ' ' || ${OovFixtureTok.map(c => s"chr(${c.toInt})").mkString(" || ")} ELSE text END AS text FROM documents),
+         | dw AS (SELECT doc_id, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM sd) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
+         |$BpeApplyCteByteFaithful,
+         | wt AS (SELECT word, CAST(len(toks) AS BIGINT) AS n_toks,
+         |        CAST(len(list_filter(toks, x -> regexp_matches(x, '^<0x[0-9a-f]{2}>$$'))) AS BIGINT) AS n_oov
+         |        FROM fin)
+         |SELECT d.lang, CAST(sum(wt.n_toks) AS BIGINT) AS bpe_tokens,
+         | CAST(sum(wt.n_oov) AS BIGINT) AS oov_tokens,
+         | CAST(floor(sum(wt.n_oov) * 1000000 / sum(wt.n_toks)) AS BIGINT) AS oov_ppm
+         |FROM dw JOIN wt USING (word) JOIN documents d USING (doc_id)
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // tokenizer-fertility report: BPE-per-whitespace-token ratio per
     // language — the budget-realism number packing reads; the applier
     // still runs on DISTINCT words only
-    "bpe_fertility" -> ((s, d) => {
+    Q("bpe_fertility", (s, d) => {
       val dt = Bpe.docTokenCounts(t(s, d).documents, Bpe.DefaultMerges,
         alphabet = Some(Bpe.DefaultAlphabet))
       dt.join(t(s, d).documents.select(col("doc_id"), col("lang")), "doc_id")
@@ -2215,35 +4350,97 @@ object SparkEntry {
           round(col("bpe_tokens").cast("double") / col("ws_tokens").cast("double"), 6)
             .as("fertility"))
         .orderBy("lang")
-    }),
+    })(
+      // same recursive applier CTE as bpe_doc_tokens, rolled up to the
+      // language grain; fertility is one division over exact sums
+      s"""WITH RECURSIVE
+         | dw AS (SELECT doc_id, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
+         |$BpeApplyCte,
+         | per AS (SELECT doc_id, CAST(sum(len(toks)) AS BIGINT) AS bpe_tokens,
+         |         CAST(count(*) AS BIGINT) AS ws_tokens
+         |         FROM dw JOIN fin USING (word) GROUP BY 1)
+         |SELECT d.lang, count(*) AS n_docs,
+         | CAST(sum(p.ws_tokens) AS BIGINT) AS ws_tokens,
+         | CAST(sum(p.bpe_tokens) AS BIGINT) AS bpe_tokens,
+         | round(CAST(sum(p.bpe_tokens) AS DOUBLE) / CAST(sum(p.ws_tokens) AS DOUBLE), 6) AS fertility
+         |FROM per p JOIN documents d USING (doc_id) GROUP BY 1 ORDER BY 1""".stripMargin),
     // per-label centroid table in long format: component-rounded
     // decimal sums (shuffle-order-proof), one posexplode + one
     // (label, dim) aggregate
-    "label_centroids" -> ((s, d) =>
-      Similarity.labelCentroids(t(s, d).embeddings).orderBy("label", "dim")),
+    Q("label_centroids", (s, d) =>
+      Similarity.labelCentroids(t(s, d).embeddings).orderBy("label", "dim"))(
+      // the embedding[i]/generate_series device; per-component rounded
+      // decimal sums mirror the Spark side exactly
+      """WITH c AS (SELECT label, CAST(embedding[i] AS DOUBLE) AS x, CAST(i AS BIGINT) AS dim
+        |   FROM (SELECT label, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
+        | r AS (SELECT label, dim, CAST(round(x, 9) AS DECIMAL(38,9)) AS vd FROM c),
+        | a AS (SELECT label, dim, count(*) AS n, sum(vd) AS s FROM r GROUP BY 1, 2)
+        |SELECT CAST(label AS BIGINT) AS label, dim, n,
+        | round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_v
+        |FROM a ORDER BY label, dim""".stripMargin),
     // the second-moment structure as a relation (dim_i <= dim_j upper
     // triangle): centering means and cross products rounded before
     // DECIMAL sums, one division per cell — PCA/whitening/Mahalanobis
     // all start here
-    "embedding_covariance" -> ((s, d) =>
-      Similarity.embeddingCovariance(t(s, d).embeddings).orderBy("dim_i", "dim_j")),
+    Q("embedding_covariance", (s, d) =>
+      Similarity.embeddingCovariance(t(s, d).embeddings).orderBy("dim_i", "dim_j"))(
+      // centered components + rounded(12)-product DECIMAL sums over the
+      // vec_id self-join — operation-for-operation the Spark chain
+      s"""$CovCtes
+         |SELECT dim_i, dim_j, n, cov FROM up ORDER BY dim_i, dim_j""".stripMargin),
     // dominant principal component: 3 power-iteration steps unrolled
     // over the exact covariance relation (the kmeans device — each
     // step one broadcast join + one d-row aggregate), λ = final ‖Cv‖
-    "pca_top_component" -> ((s, d) =>
-      Similarity.pcaTopComponent(t(s, d).embeddings, iters = 3).orderBy("dim")),
+    Q("pca_top_component", (s, d) =>
+      Similarity.pcaTopComponent(t(s, d).embeddings, iters = 3).orderBy("dim")) {
+      // the same covariance CTEs symmetrized, then 3 unrolled
+      // matvec/normalize steps (the kmeans/mmr device); λ from the
+      // final norm
+      val steps = (1 to 3).map { i =>
+        s""" w$i AS (SELECT f.i AS dim, round(CAST(sum(CAST(round(f.cov * v${i - 1}.v, 12) AS DECIMAL(38,12))) AS DOUBLE), 8) AS w
+           |   FROM fm f JOIN v${i - 1} ON v${i - 1}.dim = f.j GROUP BY 1),
+           | n$i AS (SELECT sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm FROM w$i),
+           | v$i AS (SELECT dim, round(w / (SELECT nrm FROM n$i), 8) AS v FROM w$i)""".stripMargin
+      }.mkString(",\n")
+      s"""$CovCtes,
+         | fm AS (SELECT dim_i AS i, dim_j AS j, cov FROM up
+         |   UNION ALL SELECT dim_j, dim_i, cov FROM up WHERE dim_i < dim_j),
+         | v0 AS (SELECT DISTINCT dim_i AS dim, CAST(1.0 AS DOUBLE) AS v FROM up),
+         |$steps
+         |SELECT v3.dim, v3.v, round((SELECT nrm FROM n3), 6) AS lambda
+         |FROM v3 ORDER BY dim""".stripMargin
+    },
     // diagonal whitening: per-dim z-scores from the exact rounded-
     // DECIMAL variance — what every distance-based downstream assumes
-    "embedding_standardize" -> ((s, d) =>
-      Similarity.embeddingStandardize(t(s, d).embeddings).orderBy("vec_id", "dim")),
+    Q("embedding_standardize", (s, d) =>
+      Similarity.embeddingStandardize(t(s, d).embeddings).orderBy("vec_id", "dim"))(
+      // z = rounded(cx/σ) with σ = round(sqrt(round(var,8)),8) — every
+      // rounding mirrored in order; zero-variance dims pinned to 0
+      s"""$StdCtes
+         |SELECT ce.vec_id, ce.dim,
+         | CASE WHEN st.sigma = 0 THEN 0.0 ELSE round(ce.cx / st.sigma, 8) END AS z
+         |FROM ce JOIN st USING (dim) ORDER BY vec_id, dim""".stripMargin),
     // hygiene screen: top-50 vectors by Σz² (diagonal Mahalanobis) —
     // scores far above d flag pipeline artifacts before modeling
-    "embedding_outliers" -> ((s, d) =>
-      Similarity.embeddingOutliers(t(s, d).embeddings, k = 50).orderBy("rank")),
+    Q("embedding_outliers", (s, d) =>
+      Similarity.embeddingOutliers(t(s, d).embeddings, k = 50).orderBy("rank"))(
+      // Σz² DECIMAL-summed per vector, total-ordered top-50
+      s"""$StdCtes,
+         | zr AS (SELECT ce.vec_id,
+         |    CASE WHEN st.sigma = 0 THEN 0.0 ELSE round(ce.cx / st.sigma, 8) END AS z
+         |   FROM ce JOIN st USING (dim)),
+         | m2 AS (SELECT vec_id,
+         |    round(CAST(sum(CAST(round(z * z, 12) AS DECIMAL(38,12))) AS DOUBLE), 6) AS m2
+         |   FROM zr GROUP BY 1)
+         |SELECT vec_id, m2, CAST(row_number() OVER (ORDER BY m2 DESC, vec_id) AS BIGINT) AS rank
+         |FROM m2 ORDER BY m2 DESC, vec_id LIMIT 50""".stripMargin),
     // vector hygiene: per-label norm spread (rounded-term decimal
     // norm², nearest-rank p50/p90 picks) — a drifting norm scale
     // silently breaks dot-product ANN
-    "embedding_norms" -> ((s, d) => {
+    Q("embedding_norms", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val n2 = t(s, d).embeddings
         .select(col("label").cast("long").as("label"), col("vec_id"),
@@ -2263,11 +4460,25 @@ object SparkEntry {
           max(when(col("rn") === ceil(col("n") * lit(0.5)).cast("long"), col("nrm"))).as("p50_norm"),
           max(when(col("rn") === ceil(col("n") * lit(0.9)).cast("long"), col("nrm"))).as("p90_norm"))
         .orderBy("label")
-    }),
+    })(
+      // the embedding[i] device: rounded-term decimal norm², one sqrt,
+      // nearest-rank picks over the rounded norms
+      """WITH c AS (SELECT CAST(label AS BIGINT) AS label, vec_id, CAST(embedding[i] AS DOUBLE) AS x
+        |   FROM (SELECT label, vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
+        | s2 AS (SELECT label, vec_id, sum(CAST(round(x * x, 12) AS DECIMAL(38,12))) AS s2
+        |        FROM c GROUP BY 1, 2),
+        | nr AS (SELECT label, vec_id, round(sqrt(CAST(s2 AS DOUBLE)), 6) AS nrm FROM s2),
+        | r AS (SELECT label, vec_id, nrm,
+        |       row_number() OVER (PARTITION BY label ORDER BY nrm, vec_id) AS rn,
+        |       count(*) OVER (PARTITION BY label) AS n FROM nr)
+        |SELECT label, max(n) AS n_vecs, min(nrm) AS min_norm, max(nrm) AS max_norm,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN nrm END) AS p50_norm,
+        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN nrm END) AS p90_norm
+        |FROM r GROUP BY label ORDER BY label""".stripMargin),
     // pack-efficiency rollup: per shard, pack count / entry count /
     // token total / mean fill vs the 64-token budget — the report that
     // tells you whether packing wastes context-window tokens
-    "pack_stats" -> ((s, d) => {
+    Q("pack_stats", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
           size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
@@ -2279,14 +4490,40 @@ object SparkEntry {
           sum(col("pack_tokens")).as("total_tokens"),
           (sum(col("pack_tokens")).cast("double") / (count(lit(1)) * 64)).as("mean_fill"))
         .orderBy("shard")
-    }),
+    })(
+      // pack-efficiency rollup over the same packing chain: per shard,
+      // pack count, entry count, token total, and mean fill against the
+      // 64-token budget
+      s"""$PackCtes,
+         | pp AS (SELECT shard, pack_id, count(*) AS n_entries, sum(n_tokens) AS pack_tokens
+         |   FROM p GROUP BY shard, pack_id)
+         |SELECT shard, count(*) AS n_packs, CAST(sum(n_entries) AS BIGINT) AS n_entries,
+         | CAST(sum(pack_tokens) AS BIGINT) AS total_tokens,
+         | CAST(sum(pack_tokens) AS DOUBLE) / (count(*) * 64) AS mean_fill
+         |FROM pp GROUP BY shard ORDER BY shard""".stripMargin),
     // Gopher-style repetition signals (dup-trigram fraction, top-bigram
     // share): boilerplate/spam detectors for corpus filtering
-    "repetition_stats" -> ((s, d) =>
-      TextQuality.repetitionStats(t(s, d).documents).orderBy("doc_id")),
+    Q("repetition_stats", (s, d) =>
+      TextQuality.repetitionStats(t(s, d).documents).orderBy("doc_id"))(
+      // duplicate-gram fractions: BIGINT/BIGINT divisions on both sides
+      // (DuckDB sum() widens to HUGEINT — cast back before dividing)
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | base AS (SELECT doc_id, l FROM toks WHERE len(l) >= 1),
+        | tg AS (SELECT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS g
+        |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM base WHERE len(l) >= 3)),
+        | tgs AS (SELECT doc_id, CAST(count(DISTINCT g) AS BIGINT) AS d, CAST(count(*) AS BIGINT) AS t FROM tg GROUP BY doc_id),
+        | bg AS (SELECT doc_id, l[i] || ' ' || l[i+1] AS g
+        |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM base WHERE len(l) >= 2)),
+        | bgc AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY doc_id, g),
+        | tb AS (SELECT doc_id, CAST(max(c) AS BIGINT) / CAST(sum(c) AS BIGINT) AS top_bigram_frac FROM bgc GROUP BY doc_id)
+        |SELECT b.doc_id, CAST(len(b.l) AS BIGINT) AS n_tokens,
+        | coalesce(1.0 - CAST(tgs.d AS BIGINT) / tgs.t, 0.0) AS dup_trigram_frac,
+        | coalesce(tb.top_bigram_frac, 0.0) AS top_bigram_frac
+        |FROM base b LEFT JOIN tgs USING (doc_id) LEFT JOIN tb USING (doc_id)
+        |ORDER BY b.doc_id""".stripMargin),
     // sequence packing: chunks → fixed token-budget packs, sharded for
     // parallelism (the context-window assembly step after chunking)
-    "packed_sequences" -> ((s, d) => {
+    Q("packed_sequences", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
           size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
@@ -2294,22 +4531,43 @@ object SparkEntry {
         .select(col("shard"), col("pack_id"), col("doc_id"), col("chunk_idx"),
           col("n_tokens"), col("start_off"))
         .orderBy("shard", "doc_id", "chunk_idx")
-    }),
+    })(
+      // chunk CTE (as doc_chunks) → per-chunk token counts → per-shard
+      // cumulative start offsets → pack = floor(start / budget)
+      s"""$PackCtes
+         |SELECT shard, pack_id, doc_id, chunk_idx, n_tokens, start_off
+         |FROM p ORDER BY shard, doc_id, chunk_idx""".stripMargin),
     // pack assembly: the packed training sequences themselves, ordered
     // chunk concatenation per (shard, pack)
-    "packed_text" -> ((s, d) => {
+    Q("packed_text", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
           size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
       Corpus.assemblePacks(Corpus.packChunks(ch, tokensPerPack = 64L, nShards = 8))
         .orderBy("shard", "pack_id")
-    }),
+    })(
+      // pack assembly twin: same chunk/token/offset CTEs, then DuckDB's
+      // ordered string_agg mirrors the sorted-collect_list concatenation
+      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM documents),
+        | u AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c),
+        | ch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM u),
+        | tok AS (SELECT doc_id, chunk_idx, chunk, doc_id % 8 AS shard,
+        |   CAST(len(list_filter(string_split_regex(chunk, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_tokens
+        |   FROM ch),
+        | off AS (SELECT doc_id, chunk_idx, chunk, shard, n_tokens,
+        |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
+        |   FROM tok)
+        |SELECT shard, CAST(floor(start_off / 64) AS BIGINT) AS pack_id,
+        |  string_agg(chunk, ' ' ORDER BY doc_id, chunk_idx) AS pack_text,
+        |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens, count(*) AS n_chunks
+        |FROM off GROUP BY shard, pack_id ORDER BY shard, pack_id""".stripMargin),
     // packing under REAL subword budgets: same chunk/shard/offset
     // machinery as packed_sequences, but n_tokens is the chunk's BPE
     // token count under the frozen merges — tokenized over the
     // CHUNK-level vocabulary (128-char chunk boundaries split words,
     // and a fragment tokenizes as itself, not as its parent word)
-    "packed_bpe" -> ((s, d) => {
+    Q("packed_bpe", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
       val chunkWords = ch
         .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
@@ -2326,21 +4584,85 @@ object SparkEntry {
         .select(col("shard"), col("pack_id"), col("doc_id"), col("chunk_idx"),
           col("n_tokens"), col("start_off"))
         .orderBy("shard", "doc_id", "chunk_idx")
-    }),
+    })(
+      // packing twin under BPE budgets: the chunk CTEs of
+      // packed_sequences + the recursive applier of bpe_tokens, with the
+      // word relation built from CHUNK tokens (boundary fragments
+      // tokenize as themselves on both engines)
+      s"""WITH RECURSIVE
+         | c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM documents),
+         | u AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c),
+         | ch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM u),
+         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM ch) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
+         |$BpeApplyCte,
+         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f.toks)) AS BIGINT) AS bpe_n
+         |        FROM cw JOIN fin f USING (word) GROUP BY 1, 2),
+         | tok AS (SELECT ch.doc_id, ch.chunk_idx, ch.doc_id % 8 AS shard,
+         |        coalesce(cb.bpe_n, 0) AS n_tokens
+         |        FROM ch LEFT JOIN cb USING (doc_id, chunk_idx)),
+         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
+         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
+         |   FROM tok)
+         |SELECT shard, CAST(floor(start_off / 64) AS BIGINT) AS pack_id, doc_id, chunk_idx, n_tokens, start_off
+         |FROM off ORDER BY shard, doc_id, chunk_idx""".stripMargin),
     // benchmark decontamination: docs sharing >= 2 trigram shingles with
     // the held-out set (doc_id % 97 == 0 stands in for the eval suite)
-    "decontaminate" -> ((s, d) => {
+    Q("decontaminate", (s, d) => {
       val docs = t(s, d).documents
       Corpus.decontaminate(
           docs.where(col("doc_id") % 97 =!= 0),
           docs.where(col("doc_id") % 97 === 0))
         .orderBy("doc_id")
-    }),
-    "lang_id" -> ((s, d) => TextQuality.langId(t(s, d).documents).orderBy("doc_id")),
+    })(
+      // text-shingle twin of the engine's 64-bit-id overlap count —
+      // identical values absent xxhash64 collisions (prob ~n²/2⁶⁵)
+      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+        | sh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+        | bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
+        | ov AS (SELECT s.doc_id, count(*) AS n_overlap FROM sh s JOIN bsh USING (shingle)
+        |         WHERE s.doc_id % 97 <> 0 GROUP BY s.doc_id)
+        |SELECT t.doc_id, coalesce(ov.n_overlap, 0) AS n_overlap,
+        | coalesce(ov.n_overlap, 0) >= 2 AS contaminated
+        |FROM toks t LEFT JOIN ov USING (doc_id) WHERE t.doc_id % 97 <> 0
+        |ORDER BY t.doc_id""".stripMargin),
+    Q("lang_id", (s, d) => TextQuality.langId(t(s, d).documents).orderBy("doc_id"))(
+      """WITH t AS (SELECT doc_id,
+        |  list_transform(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0), x -> lower(x)) AS tk
+        |  FROM documents),
+        | s AS (SELECT doc_id,
+        |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS BIGINT) AS s_en,
+        |  CAST(len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS BIGINT) AS s_de,
+        |  CAST(len(list_filter(tk, x -> list_contains(['el','la','los','y','en','que','un','se'], x))) AS BIGINT) AS s_es,
+        |  CAST(len(list_filter(tk, x -> list_contains(['le','les','et','une','est','dans','pour','que'], x))) AS BIGINT) AS s_fr,
+        |  CAST(len(list_filter(tk, x -> list_contains(['的','是','在','了','我','有','和','不'], x))) AS BIGINT) AS s_zh
+        | FROM t)
+        |SELECT doc_id,
+        | CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
+        |      WHEN s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
+        |      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
+        |      WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang,
+        | s_en, s_de, s_es, s_fr, s_zh
+        |FROM s ORDER BY doc_id""".stripMargin),
     // character-trigram language ID (the n-gram upgrade of the
     // stopword voter): counts are pure replace arithmetic, so the
     // twin computes identical integers
-    "lang_id_ngram" -> ((s, d) => TextQuality.langIdNgram(t(s, d).documents).orderBy("doc_id")),
+    Q("lang_id_ngram", (s, d) => TextQuality.langIdNgram(t(s, d).documents).orderBy("doc_id"))(
+      // per-language gram-hit totals generated from the SAME Scala
+      // profile constants the Spark expression uses (gram-length-aware
+      // divisor — CJK profiles are character bigrams); replace() is
+      // non-overlapping left-to-right in both engines, so the counts
+      // are identical integers. The comparison chain is generated from
+      // the same NgramLangs order and is provably the argmax with
+      // earliest-index tie win — the first language >= all later ones
+      // is a maximum (any earlier better one would have taken its
+      // branch), which equals Spark's greatest() over (score, priority)
+      // structs.
+      langIdNgramTwin),
     // cleaning/redaction pass: markup + entities + an email + a URL are
     // stitched around each document deterministically, then stripped,
     // redacted and whitespace-normalized back out (Cleaning.clean) —
@@ -2349,7 +4671,7 @@ object SparkEntry {
     // confusable-folding dedup: planted homoglyph-spoofed twins (pure
     // ASCII corpus — the card_scrub stitch device) defeat sha256
     // grouping until the fold; families group on the folded text
-    "homoglyph_dedup" -> ((s, d) => {
+    Q("homoglyph_dedup", (s, d) => {
       val docs = t(s, d).documents.select(col("doc_id"), col("text"))
       val spoofs = docs.where(col("doc_id") % 7 === 3)
         .select((col("doc_id") + 100000L).as("doc_id"),
@@ -2365,34 +4687,91 @@ object SparkEntry {
           sum(when(col("was_spoofed"), lit(1L)).otherwise(lit(0L))).as("n_spoofed"))
         .select(col("rep_id"), col("n_members"), col("n_spoofed"))
         .orderBy("rep_id")
-    }),
+    }) {
+      // the spoof map, the fold table and the fixture rule all render
+      // from the SAME Scala constants (chr() for every non-ASCII char)
+      val foldFrom = Cleaning.ConfusablesFrom.map(c => s"chr(${c.toInt})").mkString(" || ")
+      val foldTo = s"'${Cleaning.ConfusablesTo}'"
+      val spoofTo = "аеорсух".map(c => s"chr(${c.toInt})").mkString(" || ")
+      s"""WITH base AS (SELECT doc_id, text FROM documents),
+         | sp AS (SELECT doc_id + 100000 AS doc_id, translate(text, 'aeopcyx', $spoofTo) AS text
+         |        FROM documents WHERE doc_id % 7 = 3),
+         | allv AS (SELECT * FROM base UNION ALL SELECT * FROM sp),
+         | n AS (SELECT doc_id,
+         |    sha256(translate(text, $foldFrom, $foldTo)) AS nh,
+         |    sha256(text) <> sha256(translate(text, $foldFrom, $foldTo)) AS was_spoofed
+         |   FROM allv)
+         |SELECT min(doc_id) AS rep_id, count(*) AS n_members,
+         | CAST(sum(CASE WHEN was_spoofed THEN 1 ELSE 0 END) AS BIGINT) AS n_spoofed
+         |FROM n GROUP BY nh ORDER BY rep_id""".stripMargin
+    },
     // phone + IPv4 scan/redaction over stitched deterministic dirt —
     // the PII pass beyond clean()'s URL/email redaction
-    "pii_scan" -> ((s, d) => {
+    Q("pii_scan", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(col("text"), Cleaning.piiFixtureSuffix(col("doc_id"))).as("text"))
       Cleaning.piiScan(fx).orderBy("doc_id")
-    }),
-    "text_clean" -> ((s, d) => {
+    })(
+      // same regex constants as the Spark pass; DuckDB standard strings
+      // keep backslashes literal, so the patterns transfer verbatim
+      s"""WITH fx AS (SELECT doc_id, text ||
+         |   CASE doc_id % 5 WHEN 0 THEN ' call 555-867-5309 now'
+         |                   WHEN 1 THEN ' from 192.168.1.77 seen'
+         |                   WHEN 2 THEN ' dial +1 (415) 555-0199 via 10.0.0.255 today'
+         |                   ELSE '' END AS text FROM documents),
+         | np AS (SELECT doc_id, text,
+         |    regexp_replace(text, '${Cleaning.PhoneRe}', '<PHONE>', 'g') AS nop FROM fx)
+         |SELECT doc_id,
+         | CAST(len(regexp_extract_all(text, '${Cleaning.PhoneRe}')) AS BIGINT) AS n_phones,
+         | CAST(len(regexp_extract_all(nop, '${Cleaning.Ipv4Re}')) AS BIGINT) AS n_ips,
+         | regexp_replace(nop, '${Cleaning.Ipv4Re}', '<IP>', 'g') AS clean
+         |FROM np ORDER BY doc_id""".stripMargin),
+    Q("text_clean", (s, d) => {
       val dirty = t(s, d).documents.select(col("doc_id"),
         concat(lit("<p>Contact <b>user"), col("doc_id").cast("string"),
           lit("@example.com</b> &amp; see https://ex.org/p?id="),
           col("doc_id").cast("string"), lit("&u=1</p>\t\t  "), col("text")).as("text"))
       Cleaning.clean(dirty).orderBy("doc_id")
-    }),
+    })(
+      """WITH dirty AS (SELECT doc_id,
+        |  '<p>Contact <b>user' || CAST(doc_id AS VARCHAR) ||
+        |  '@example.com</b> &amp; see https://ex.org/p?id=' ||
+        |  CAST(doc_id AS VARCHAR) || '&u=1</p>' || chr(9) || chr(9) || '  ' || text AS text
+        |  FROM documents),
+        | um AS (SELECT doc_id,
+        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+        |    text, '<[^<>]*>', ' ', 'g'),
+        |    '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
+        |    '&#39;', '''', 'g'), '&amp;', '&', 'g') AS um
+        |  FROM dirty),
+        | nu AS (SELECT doc_id, um,
+        |  regexp_replace(um, 'https?://[^\s]+', '<URL>', 'g') AS nou FROM um)
+        |SELECT doc_id,
+        | CAST(len(regexp_extract_all(um, 'https?://[^\s]+')) AS BIGINT) AS n_urls,
+        | CAST(len(regexp_extract_all(nou, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        | trim(regexp_replace(regexp_replace(regexp_replace(
+        |   regexp_replace(nou, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |   '[\x00-\x08\x0b-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g'), '\s+', ' ', 'g')) AS clean
+        |FROM nu ORDER BY doc_id""".stripMargin),
     // low-entropy gate: per-doc deflate ratio (rows-only — no SQL
     // engine exposes deflate; determinism + separation pinned by spec)
-    "compression_ratio" -> ((s, d) =>
+    RowsOnly("compression_ratio", "no SQL engine exposes deflate")((s, d) =>
       TextQuality.compressionRatio(t(s, d).documents).orderBy("doc_id")),
     // sentence segmentation (the unit C4-style line rules and
     // per-sentence dedup operate on): terminators stitched on
     // deterministically — the corpus has none
-    "sentence_split" -> ((s, d) => {
+    Q("sentence_split", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(col("text"), lit(". Doc "), col("doc_id").cast("string"),
           lit(" ends! Is it done? yes")).as("text"))
       TextQuality.sentences(fx).orderBy("doc_id", "sent_idx")
-    }),
+    })(
+      """WITH fx AS (SELECT doc_id, text || '. Doc ' || CAST(doc_id AS VARCHAR) || ' ends! Is it done? yes' AS text FROM documents),
+        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
+        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q)
+        |SELECT doc_id, CAST(i AS BIGINT) AS sent_idx, l[i] AS sentence,
+        | CAST(len(list_filter(string_split_regex(l[i], '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_words
+        |FROM u ORDER BY doc_id, sent_idx""".stripMargin),
     // double-encoding screen BEFORE script routing: the UTF-8-read-
     // as-Latin-1 tell sequences (Ã/Â + continuation, â€ punctuation)
     // counted per doc — mojibake poisons tokenizers and lang ID
@@ -2400,7 +4779,7 @@ object SparkEntry {
     // deterministically (the card_scrub dirt device); clean docs MUST
     // count zero, which the twin re-proves by running the same regex
     // over the same stitched text
-    "mojibake_screen" -> ((s, d) => {
+    Q("mojibake_screen", (s, d) => {
       val dirty = t(s, d).documents.select(col("doc_id"),
         concat(col("text"),
           when(col("doc_id") % 5 === 0,
@@ -2409,11 +4788,23 @@ object SparkEntry {
             lit(" " + TextQuality.MojiQuote + "quoted")).otherwise(lit("")))
           .as("text"))
       TextQuality.mojibakeScreen(dirty).orderBy("doc_id")
-    }),
+    }) {
+      // the same stitched dirt, the same regex — pattern and fixture
+      // constants rendered via chr() from the ONE Scala source of truth
+      val pat = chrConcat(graft.operators.TextQuality.MojibakePattern)
+      s"""WITH d AS (SELECT doc_id,
+         |  text || (CASE WHEN doc_id % 5 = 0 THEN ' caf' || ${chrConcat(graft.operators.TextQuality.MojiAccent)} ELSE '' END)
+         |       || (CASE WHEN doc_id % 7 = 0 THEN ' ' || ${chrConcat(graft.operators.TextQuality.MojiQuote)} || 'quoted' ELSE '' END) AS tx
+         |  FROM documents)
+         |SELECT doc_id,
+         | CAST(len(regexp_extract_all(tx, $pat)) AS BIGINT) AS n_moji,
+         | len(regexp_extract_all(tx, $pat)) > 0 AS is_moji
+         |FROM d ORDER BY doc_id""".stripMargin
+    },
     // script routing before language ID: per-doc codepoint-range
     // census + dominant-script verdict; CJK/Cyrillic stitched on
     // deterministically (the corpus is pure ASCII)
-    "script_profile" -> ((s, d) => {
+    Q("script_profile", (s, d) => {
       val id = col("doc_id")
       val suffix = when(id % 4 === 0, lit(" " + CjkSample))
         .when(id % 4 === 1, lit(" " + CyrSample + " 99"))
@@ -2422,12 +4813,33 @@ object SparkEntry {
       TextQuality.scriptProfile(
         t(s, d).documents.select(id, concat(col("text"), suffix).as("text")))
         .orderBy("doc_id")
-    }),
+    }) {
+      def c(cls: String) = s"CAST(length(text) - length(regexp_replace(text, '$cls', '', 'g')) AS BIGINT)"
+      s"""WITH fx AS (SELECT doc_id, text || CASE doc_id % 4
+         |  WHEN 0 THEN ' ' || ${chrConcat(CjkSample)}
+         |  WHEN 1 THEN ' ' || ${chrConcat(CyrSample)} || ' 99'
+         |  WHEN 2 THEN ' ' || ${chrConcat(CjkSample)} || ' ' || ${chrConcat(CyrSample)}
+         |  ELSE '' END AS text FROM documents),
+         | p AS (SELECT doc_id,
+         |  ${c("[A-Za-z]")} AS n_latin,
+         |  ${c("[\\x{0400}-\\x{04FF}]")} AS n_cyrillic,
+         |  ${c("[\\x{4E00}-\\x{9FFF}]")} AS n_cjk,
+         |  ${c("[0-9]")} AS n_digit,
+         |  ${c("[ \\t\\n\\f\\r]")} AS n_space,
+         |  CAST(length(text) AS BIGINT) AS n FROM fx)
+         |SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_digit, n_space,
+         | n - n_latin - n_cyrillic - n_cjk - n_digit - n_space AS n_other,
+         | CASE WHEN n_latin + n_cyrillic + n_cjk = 0 THEN 'none'
+         |      WHEN n_cjk >= n_latin AND n_cjk >= n_cyrillic THEN 'cjk'
+         |      WHEN n_cyrillic >= n_latin THEN 'cyrillic'
+         |      ELSE 'latin' END AS dominant
+         |FROM p ORDER BY doc_id""".stripMargin
+    },
     // Unicode NFC via the native codegen Expression (no Spark
     // built-in): decomposed combining sequences and compatibility
     // singletons stitched on deterministically, recomposed in-plan —
     // the canonicalization exact-hash dedup needs upstream
-    "unicode_nfc" -> ((s, d) => {
+    Q("unicode_nfc", (s, d) => {
       val id = col("doc_id")
       val fx = t(s, d).documents.select(id,
         concat(col("text"), nfcSuffixCol(id)).as("text"))
@@ -2436,30 +4848,81 @@ object SparkEntry {
           length(col("text")).cast("long").as("n_before"),
           length(nfc).cast("long").as("n_after"))
         .orderBy("doc_id")
-    }),
+    })(
+      s"""WITH fx AS (SELECT doc_id, text || $NfcSuffixSql AS text FROM documents)
+        |SELECT doc_id, nfc_normalize(text) AS clean,
+        | nfc_normalize(text) <> text AS changed,
+        | CAST(length(text) AS BIGINT) AS n_before,
+        | CAST(length(nfc_normalize(text)) AS BIGINT) AS n_after
+        |FROM fx ORDER BY doc_id""".stripMargin),
     // checksum-validated PII: payment-card candidates by shape, Luhn
     // validation, valid matches redacted — invalid ones (order-id
     // shaped data) counted and kept. Fixture stitches standard TEST
     // numbers on deterministically (the text_clean device).
-    "card_scrub" -> ((s, d) =>
-      Cleaning.scrubCards(Cleaning.cardFixtureFromDocs(t(s, d).documents)).orderBy("doc_id")),
-    "doc_fingerprint" -> ((s, d) => TextQuality.fingerprint(t(s, d).documents).orderBy("doc_id")),
+    Q("card_scrub", (s, d) =>
+      Cleaning.scrubCards(Cleaning.cardFixtureFromDocs(t(s, d).documents)).orderBy("doc_id"))(
+      // mirrors Cleaning.clean stage by stage: dirt construction, tag
+      // strip, entity decode (amp LAST — same fold order as the Scala),
+      // URL-then-email redaction, control strip, whitespace collapse.
+      // All patterns are in the RE2 ∩ java.util.regex common subset.
+      cardScrubTwinSql),
+    Q("doc_fingerprint", (s, d) => TextQuality.fingerprint(t(s, d).documents).orderBy("doc_id"))(
+      // doc_fingerprint CONVERTED from rows-only (round 12): the rolling
+      // fold acc*FNV + xxhash64(word) replays via list_reduce over the
+      // ordered per-doc hash list in the same HUGEINT wrap arithmetic;
+      // wordless docs keep fp = 0 through the left join (Spark's
+      // aggregate() init value)
+      s"""WITH tl AS (SELECT doc_id,
+         |   list_filter(list_transform(string_split_regex(text, '[ \\t\\n\\f\\r]+'),
+         |     t -> lower(regexp_replace(t, '$P', '', 'g'))), x -> length(x) > 0) AS toks
+         |   FROM documents),
+         | xw AS (SELECT DISTINCT unnest(toks) AS word FROM tl),
+         |${xxh64WordCtes},
+         | tok AS (SELECT doc_id, unnest(toks) AS word, generate_subscripts(toks, 1) AS pos FROM tl),
+         | hs AS (SELECT doc_id, pos, h FROM tok JOIN xh USING (word)),
+         | lst AS (SELECT doc_id, list_prepend(0::HUGEINT, list(h ORDER BY pos)) AS hl FROM hs GROUP BY 1),
+         | fpu AS (SELECT doc_id, list_reduce(hl, (acc, x) -> ${xadd(xmul("acc", "1099511628211"), "x")}) AS u FROM lst)
+         |SELECT tl.doc_id,
+         |  CAST(CASE WHEN coalesce(u, 0) >= 9223372036854775808 THEN u - $XW ELSE coalesce(u, 0) END AS BIGINT) AS fp
+         |FROM tl LEFT JOIN fpu USING (doc_id) ORDER BY doc_id""".stripMargin),
     // the xxhash fingerprint's derived exact invariant: fp is a pure
     // function of text, so distinct-fp count ≤ distinct-text count
     // with equality iff collision-free — the property fingerprint
     // comparison stands on, now hash-checked (the 64-bit budget makes
     // a real collision ~n²/2⁶⁵; a broken fold shows up immediately)
-    "fingerprint_collision_audit" -> ((s, d) => {
+    Q("fingerprint_collision_audit", (s, d) => {
       val docs = t(s, d).documents
       val texts = docs.agg(count(lit(1)).as("n_docs"),
         countDistinct(sha2(col("text"), 256)).as("n_distinct_texts"))
       val nfp = TextQuality.fingerprint(docs)
         .agg(countDistinct(col("fp")).as("n_distinct_fps"))
       texts.crossJoin(broadcast(nfp))
-    }),
+    })(
+      // collision-freeness rendered relationally: distinct fingerprints
+      // must equal distinct texts (fp is a pure function of text)
+      """SELECT count(*) AS n_docs,
+        | count(DISTINCT sha256(text)) AS n_distinct_texts,
+        | count(DISTINCT sha256(text)) AS n_distinct_fps
+        |FROM documents""".stripMargin),
     // same rolling-hash construction with the reference's affine word
     // hash and a mod-1e9+7 fold — DuckDB-expressible, so hash-checked
-    "fingerprint_ref" -> ((s, d) => TextQuality.fingerprintRef(t(s, d).documents).orderBy("doc_id")),
+    Q("fingerprint_ref", (s, d) => TextQuality.fingerprintRef(t(s, d).documents).orderBy("doc_id"))(
+      // rolling fingerprint with the reference's affine word hash: the
+      // per-word char-sum folds through (acc*31 + h) mod 1e9+7 — every
+      // intermediate stays far inside 64 bits, so DuckDB's list_reduce
+      // reproduces Spark's aggregate() exactly (pmod mirrored the usual
+      // way for sign safety)
+      s"""WITH cw AS (SELECT doc_id,
+         |    list_filter(list_transform(
+         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |  FROM documents),
+         | h AS (SELECT doc_id, list_transform(ws, w ->
+         |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
+         |  FROM cw)
+         |SELECT doc_id, CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
+         |    (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
+         |FROM h ORDER BY doc_id""".stripMargin),
     // web-corpus front door: each doc is wrapped in a deterministic
     // boilerplated page (link-dense title/nav/footer chrome, body in
     // <p> paragraphs, entities escaped), then the Arc90/jusText-class
@@ -2467,13 +4930,21 @@ object SparkEntry {
     // 100% anchors → dropped; prose has none → kept; the oracle
     // asserts lossless recovery of the whitespace-collapsed text plus
     // the exact block bookkeeping (paras + 3 chrome blocks)
-    "html_extract" -> ((s, d) =>
-      Html.extractMain(Html.pageFromDocs(t(s, d).documents)).orderBy("doc_id")),
+    Q("html_extract", (s, d) =>
+      Html.extractMain(Html.pageFromDocs(t(s, d).documents)).orderBy("doc_id"))(
+      """WITH w AS (SELECT doc_id,
+        |    list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0) AS ws
+        |  FROM documents)
+        |SELECT doc_id,
+        | CAST((len(ws) + 11) // 12 + 3 AS BIGINT) AS n_blocks,
+        | CAST((len(ws) + 11) // 12 AS BIGINT) AS n_kept,
+        | array_to_string(ws, ' ') AS main_text
+        |FROM w ORDER BY doc_id""".stripMargin),
     // page-level robots directives planted into the fixture head by
     // doc_id rule; the Spark side must PARSE them back out of the full
     // page — the twin is the closed-form rule (the html_entities
     // device), so the hash proves the extraction end to end
-    "meta_robots" -> ((s, d) => {
+    Q("meta_robots", (s, d) => {
       val pages = Html.pageFromDocs(t(s, d).documents)
       val directive = when(col("doc_id") % 4 === 0, lit("noindex"))
         .when(col("doc_id") % 4 === 1, lit("noindex, nofollow"))
@@ -2484,73 +4955,146 @@ object SparkEntry {
             concat(lit("<head>\n<meta name=\"robots\" content=\""), directive, lit("\">"))))
           .otherwise(col("html")).as("html"))
       Html.metaRobots(fx).orderBy("doc_id")
-    }),
+    })(
+      // the closed-form directive rule the fixture planted — the Spark
+      // side must parse it back out of the page to hash-match
+      """SELECT doc_id,
+        | CASE doc_id % 4 WHEN 0 THEN 'noindex' WHEN 1 THEN 'noindex, nofollow'
+        |                 WHEN 2 THEN 'index, follow' ELSE '' END AS directive,
+        | doc_id % 4 IN (0, 1) AS noindex,
+        | doc_id % 4 = 1 AS nofollow
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // rendezvous sharding stability: assignments at 8 and at 9 shards
     // side by side — every mover must land on the NEW shard, and only
     // ~1/9 of docs move (mod-N would reshuffle 8/9)
-    "rendezvous_shards" -> ((s, d) => {
+    Q("rendezvous_shards", (s, d) => {
       val docs = t(s, d).documents.select(col("doc_id"))
       Corpus.rendezvousShard(
           Corpus.rendezvousShard(docs, 8, "shard8"), 9, "shard9")
         .select(col("doc_id"), col("shard8"), col("shard9"),
           (col("shard8") =!= col("shard9")).as("moved"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // the HRW argmax replayed: same "docId:shard" md5-prefix hash
+      // (HexInt40), max by (h, s) as a window rank per shard count
+      def pick(n: Int, out: String) =
+        s"""(SELECT doc_id, s AS $out FROM (
+           |  SELECT doc_id, s, row_number() OVER (PARTITION BY doc_id ORDER BY ${HexInt40(s"md5(doc_id || ':' || s)")} DESC, s DESC) AS rn
+           |  FROM documents, unnest(generate_series(0, ${n - 1})) AS t(s)) WHERE rn = 1)""".stripMargin
+      s"""SELECT a.doc_id, CAST(a.shard8 AS BIGINT) AS shard8,
+         | CAST(b.shard9 AS BIGINT) AS shard9, a.shard8 <> b.shard9 AS moved
+         |FROM ${pick(8, "shard8")} a JOIN ${pick(9, "shard9")} b USING (doc_id)
+         |ORDER BY a.doc_id""".stripMargin
+    },
     // the full entity decoder under load: the page fixture with an
     // entity-rich paragraph injected at the top of the body — named,
     // decimal, hex, double-escaped, unknown-name and invalid-codepoint
     // references all decode (or deliberately survive) per the HTML
     // one-pass rule; the twin inlines the closed-form decoded constant
-    "html_entities" -> ((s, d) => {
+    Q("html_entities", (s, d) => {
       val pages = Html.pageFromDocs(t(s, d).documents)
         .select(col("doc_id"),
           regexp_replace(col("html"), "<div>\n",
             java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.EntityFixtureRaw))
             .as("html"))
       Html.extractMain(pages).orderBy("doc_id")
-    }),
+    }) {
+      // html_extract plus one injected kept block whose decoded form is
+      // a compile-time constant from the SAME Scala object the fixture
+      // injects raw — the hash proves the entity decoder end to end
+      val dec = Html.EntityFixtureDecoded.replace("'", "''")
+      s"""WITH w AS (SELECT doc_id,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS ws
+         |  FROM documents)
+         |SELECT doc_id,
+         | CAST((len(ws) + 11) // 12 + 4 AS BIGINT) AS n_blocks,
+         | CAST((len(ws) + 11) // 12 + 1 AS BIGINT) AS n_kept,
+         | CASE WHEN len(ws) > 0 THEN '$dec' || ' ' || array_to_string(ws, ' ')
+         |      ELSE '$dec' END AS main_text
+         |FROM w ORDER BY doc_id""".stripMargin
+    },
     // crawl-graph builder: /doc/<id> hrefs parsed out of the raw
     // markup → deduped directed edges (the twin derives the same graph
     // from the fixture's closed-form link targets, so the hash proves
     // the extraction)
-    "html_outlinks" -> ((s, d) =>
-      Html.outlinks(Html.pageFromDocs(t(s, d).documents)).orderBy("src", "dst")),
+    Q("html_outlinks", (s, d) =>
+      Html.outlinks(Html.pageFromDocs(t(s, d).documents)).orderBy("src", "dst"))(
+      // the extractor provably inverts the page fixture: main_text is
+      // the whitespace-collapsed document text, n_kept the paragraph
+      // count (12 words each), n_blocks adds the 3 chrome blocks
+      // (title/nav/footer) that the link-density gate drops
+      outlinksTwinSql),
     // link-authority quality prior over the EXTRACTED graph — the
     // wordcount→inverted-index→PageRank MapReduce trilogy, fed by the
     // engine's own HTML ingestion instead of a prebuilt edge table
-    "crawl_rank" -> ((s, d) =>
-      Graph.pageRank(Html.outlinks(Html.pageFromDocs(t(s, d).documents))).orderBy("node")),
+    Q("crawl_rank", (s, d) =>
+      Graph.pageRank(Html.outlinks(Html.pageFromDocs(t(s, d).documents))).orderBy("node"))(pageRankUnrolled(CrawlEdgesCte)),
     // hubs-and-authorities over the same extracted graph: the frontier
     // wants BOTH scores — schedule fetches by hub (directory pages
     // surface new links), keep documents by auth (content pages)
-    "hits_rank" -> ((s, d) =>
-      Graph.hits(Html.outlinks(Html.pageFromDocs(t(s, d).documents))).orderBy("node")),
+    Q("hits_rank", (s, d) =>
+      Graph.hits(Html.outlinks(Html.pageFromDocs(t(s, d).documents))).orderBy("node"))(hitsUnrolled(CrawlEdgesCte)),
     // edge-weighted authority: rank splits across out-links by link
     // MULTIPLICITY (three nav slots vouching for one target beat a
     // single mention) instead of uniformly
-    "weighted_rank" -> ((s, d) =>
+    Q("weighted_rank", (s, d) =>
       Graph.weightedPageRank(
-        Html.outlinksWeighted(Html.pageFromDocs(t(s, d).documents))).orderBy("node")),
+        Html.outlinksWeighted(Html.pageFromDocs(t(s, d).documents))).orderBy("node")) {
+      // weighted-PR twin: multiplicity edges from the same t CTE (no
+      // DISTINCT), contribution = round(rank·w/wsum, 12)
+      val pre =
+        s"""WITH $CrawlEdgesBody,
+           | ew AS (SELECT doc_id AS src, dst, count(*) AS w FROM t WHERE dst <> doc_id GROUP BY 1, 2),
+           | nodes AS (SELECT DISTINCT src AS node FROM ew UNION SELECT DISTINCT dst AS node FROM ew),
+           | deg AS (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM ew GROUP BY src),
+           | nn AS (SELECT count(*) AS n FROM nodes),
+           | r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS rank FROM nodes)""".stripMargin
+      val iters = (1 to 5).map { i =>
+        s""" r$i AS (SELECT nodes.node,
+           |   (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
+           |     + CAST(0.85 AS DOUBLE) * CAST(coalesce(c.s, 0) AS DOUBLE) AS rank
+           |  FROM nodes LEFT JOIN (
+           |    SELECT e.dst AS node, sum(CAST(round(r.rank * CAST(e.w AS DOUBLE) / CAST(deg.wsum AS DOUBLE), 12) AS DECIMAL(38,12))) AS s
+           |    FROM r${i - 1} r JOIN deg ON deg.src = r.node JOIN ew e ON e.src = r.node
+           |    GROUP BY e.dst) c ON c.node = nodes.node)""".stripMargin
+      }.mkString(",\n")
+      s"$pre,\n$iters\nSELECT node, round(rank, 8) AS wpr FROM r5 ORDER BY node"
+    },
     // spam-ring tell: nodes mutually reachable within 3 directed hops
     // over the extracted link graph, labeled by minimum ring member
-    "link_rings" -> ((s, d) =>
+    Q("link_rings", (s, d) =>
       Graph.linkRings(Html.outlinks(Html.pageFromDocs(t(s, d).documents)), maxHops = 3)
-        .orderBy("node")),
+        .orderBy("node"))(
+      // bounded-hop reach by LEVEL (distinct per expansion), mutuality
+      // as a symmetric self-join, then transitive min-label closure over
+      // the mutual-pair graph (the dedup_clusters recursive device) so
+      // a ring that closes only through distant pairs labels consistently
+      s"""WITH RECURSIVE $CrawlEdgesBody,
+         | r1 AS (SELECT DISTINCT src AS u, dst AS v FROM edges WHERE src <> dst),
+         | r2 AS (SELECT DISTINCT u, v FROM (SELECT a.u, b.v FROM r1 a JOIN r1 b ON a.v = b.u
+         |         UNION SELECT u, v FROM r1) z WHERE u <> v),
+         | r3 AS (SELECT DISTINCT u, v FROM (SELECT a.u, b.v FROM r2 a JOIN r1 b ON a.v = b.u
+         |         UNION SELECT u, v FROM r2) z WHERE u <> v),
+         | m AS (SELECT a.u AS node, a.v AS peer FROM r3 a JOIN r3 b ON a.u = b.v AND a.v = b.u),
+         | nn AS (SELECT DISTINCT node FROM m),
+         | reach AS (SELECT node, node AS label FROM nn
+         |           UNION SELECT m.node, reach.label FROM m JOIN reach ON reach.node = m.peer)
+         |SELECT node, min(label) AS ring_id FROM reach GROUP BY node ORDER BY node""".stripMargin),
     // TrustRank: teleport only to curator-vouched seeds (every 50th
     // doc) — link farms with no seed path score ~0; the spam-resistant
     // authority prior a raw crawl needs
-    "trust_rank" -> ((s, d) =>
+    Q("trust_rank", (s, d) =>
       Graph.personalizedPageRank(
         Html.outlinks(Html.pageFromDocs(t(s, d).documents)),
         t(s, d).documents.where(col("doc_id") % 50 === 0).select(col("doc_id").as("node")))
-        .orderBy("node")),
+        .orderBy("node"))(trustRankUnrolled(CrawlEdgesCte)),
     // site-cluster discovery: undirected connected components over the
     // extracted link graph — large-star/small-star (Graph
     // .starComponents), the O(log n)-round formulation a real crawl
     // graph needs (min-label's O(diameter) is fine for shallow
     // near-dup families, where Dedup keeps using it: one join+agg per
     // round vs star's two — but crawl chains are unbounded)
-    "crawl_components" -> ((s, d) => {
+    Q("crawl_components", (s, d) => {
       val edges = Html.outlinks(Html.pageFromDocs(t(s, d).documents))
       val pairs = edges.select(col("src").as("doc_a"), col("dst").as("doc_b"))
       val nodes = edges.select(col("src").as("node"))
@@ -2558,29 +5102,83 @@ object SparkEntry {
       Graph.starComponents(pairs, nodes, idCol = "node")
         .select(col("doc_id").as("node"), col("cluster_id"))
         .orderBy("node")
-    }),
+    })(
+      // undirected closure over the closed-form crawl edges — min label
+      // reachable in either direction is the component id
+      s"""WITH RECURSIVE $CrawlEdgesBody,
+         | e AS (SELECT src, dst FROM edges UNION ALL SELECT dst AS src, src AS dst FROM edges),
+         | nodes AS (SELECT DISTINCT src AS node FROM edges UNION SELECT DISTINCT dst AS node FROM edges),
+         | reach(node, label) AS (
+         |   SELECT node, node FROM nodes
+         |   UNION
+         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node
+         | )
+         |SELECT node, min(label) AS cluster_id FROM reach GROUP BY node ORDER BY node""".stripMargin),
     // deterministic synchronous LPA over the crawl graph: the
     // community level between components (one bridge merges all) and
     // k-core (structure, not membership); fixed-tie mode, 4 rounds
-    "lpa_communities" -> ((s, d) => {
+    Q("lpa_communities", (s, d) => {
       val edges = Html.outlinks(Html.pageFromDocs(t(s, d).documents))
       Graph.lpaCommunities(edges).orderBy("node")
-    }),
+    }) {
+      // the 4 LPA rounds unrolled as CTEs (the kmeans device); mode =
+      // row_number over (cnt DESC, label ASC) — Spark's max_by struct
+      def round(i: Int, prev: String) =
+        s""" r$i AS (SELECT u.src AS node, l.label, count(*) AS cnt
+           |   FROM und u JOIN $prev l ON u.dst = l.node GROUP BY 1, 2),
+           | l$i AS (SELECT node, label FROM (
+           |   SELECT node, label, row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
+           |   FROM r$i) WHERE rn = 1)""".stripMargin
+      s"""WITH $CrawlEdgesBody,
+         | und AS (SELECT DISTINCT src, dst FROM
+         |   (SELECT src, dst FROM edges UNION ALL SELECT dst AS src, src AS dst FROM edges)),
+         | l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
+         |${round(1, "l0")},
+         |${round(2, "l1")},
+         |${round(3, "l2")},
+         |${round(4, "l3")}
+         |SELECT node, label AS community FROM l4 ORDER BY node""".stripMargin
+    },
     // small-sample-honest source ranking: Wilson lower bound of the
     // gate pass rate — 3/3 must not outrank 180/200
-    "source_quality_wilson" -> ((s, d) =>
-      TextQuality.sourceQualityWilson(t(s, d).documents).orderBy("quality_rank")),
+    Q("source_quality_wilson", (s, d) =>
+      TextQuality.sourceQualityWilson(t(s, d).documents).orderBy("quality_rank")) {
+      // the same gate CTEs as corpus_card, per source; the Wilson bound
+      // is one fixed float expression over exact integers with literal
+      // z-constants — identical shape in both engines
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      val pd = "CAST(n_pass AS DOUBLE) / CAST(n_docs AS DOUBLE)"
+      val nd = "CAST(n_docs AS DOUBLE)"
+      s"""WITH gf AS (SELECT doc_id, source, CAST(len(tkl) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
+         |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
+         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |   FROM (SELECT doc_id, source, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
+         | per AS (SELECT source, count(*) AS n_docs,
+         |    CAST(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
+         |      AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) AS BIGINT) AS n_pass
+         |   FROM gf GROUP BY 1),
+         | w AS (SELECT source, n_docs, n_pass,
+         |    round($pd, 6) AS pass_rate,
+         |    round(($pd + 1.9208 / $nd
+         |      - 1.96 * sqrt(($pd * (1.0 - $pd) + 0.9604 / $nd) / $nd))
+         |      / (1.0 + 3.8416 / $nd), 9) AS wilson_lb
+         |   FROM per)
+         |SELECT source, n_docs, n_pass, pass_rate, wilson_lb,
+         | CAST(row_number() OVER (ORDER BY wilson_lb DESC, source) AS BIGINT) AS quality_rank
+         |FROM w ORDER BY quality_rank""".stripMargin
+    },
     // 2-core of the crawl graph: iterative peeling separates the
     // interlinked site core from pendant tendrils; fixed rounds, the
     // twin unrolls the same peels as CTEs (the page_rank device)
-    "kcore_nodes" -> ((s, d) => {
+    Q("kcore_nodes", (s, d) => {
       val edges = Html.outlinks(Html.pageFromDocs(t(s, d).documents))
       Graph.kCore(edges, k = 2, rounds = KCoreRounds).orderBy("node")
-    }),
+    })(kCoreTwinSql),
     // power-law sanity: log2-binned undirected degree histogram of
     // the crawl graph — bucket from the BINARY-STRING length (exact
     // in both engines; log2 at power-of-two boundaries is not)
-    "degree_dist" -> ((s, d) => {
+    Q("degree_dist", (s, d) => {
       val edges = Html.outlinks(Html.pageFromDocs(t(s, d).documents))
       val e = edges.select(col("src").as("a"), col("dst").as("b"))
         .where(col("a") =!= col("b"))
@@ -2593,22 +5191,45 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_nodes"), min(col("deg")).as("min_deg"),
           max(col("deg")).as("max_deg"))
         .orderBy("bucket")
-    }),
+    })(
+      // log2 bucket from the binary-string length — exact in both
+      // engines where float log2 at 2^k boundaries is not
+      s"""$CrawlEdgesCte,
+         | e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+         |        FROM edges WHERE src <> dst),
+         | d AS (SELECT node, count(*) AS deg
+         |       FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
+         | k AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket, deg FROM d)
+         |SELECT bucket, count(*) AS n_nodes, min(deg) AS min_deg, max(deg) AS max_deg
+         |FROM k GROUP BY 1 ORDER BY 1""".stripMargin),
     // per-node triangle support via (deg, id)-oriented wedge
     // enumeration — out-degree-bounded wedges, one equi-join closure.
     // Graph: part co-purchase (parts sharing an order) — the dense
     // community structure the crawl fixture's link arithmetic lacks
-    "triangle_count" -> ((s, d) => {
+    Q("triangle_count", (s, d) => {
       val li = t(s, d).lineitem
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
       val edges = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
         .select(col("x.p").as("src"), col("y.p").as("dst"))
       Graph.triangleCounts(edges).orderBy("node")
-    }),
+    })(
+      // the canonical u<v<w three-way join — same triangle set the
+      // oriented wedge enumeration produces, corners exploded
+      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
+         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+         |        FROM ed WHERE src <> dst),
+         | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
+         |         FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+         | x AS (SELECT n1 AS node FROM tri
+         |       UNION ALL SELECT n2 FROM tri
+         |       UNION ALL SELECT n3 FROM tri)
+         |SELECT node, count(*) AS triangles FROM x GROUP BY 1 ORDER BY node""".stripMargin),
     // one-row graph census: nodes/edges/triangles/wedges and global
     // transitivity 3·tri/wedges (node-incident triangle sum IS 3·tri)
-    "graph_summary" -> ((s, d) => {
+    Q("graph_summary", (s, d) => {
       val li = t(s, d).lineitem
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
       val edges = li.as("x").join(li.as("y"),
@@ -2629,19 +5250,58 @@ object SparkEntry {
           (col("tri3") / 3).cast("long").as("n_triangles"),
           round(col("tri3").cast("double") / col("wedges").cast("double"), 6)
             .as("transitivity"))
-    }),
+    })(
+      // node-incident triangle sum = 3·|triangles|; wedges in integer
+      // div; transitivity one rounded division
+      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
+         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+         |        FROM ed WHERE src <> dst),
+         | deg AS (SELECT node, count(*) AS deg
+         |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
+         | tri AS (SELECT e1.a AS n1 FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+         | t3 AS (SELECT CAST(count(*) * 3 AS BIGINT) AS tri3 FROM tri),
+         | ds AS (SELECT count(*) AS n_nodes, CAST(max(deg) AS BIGINT) AS max_deg,
+         |        CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS wedges FROM deg),
+         | ne AS (SELECT count(*) AS n_edges FROM e)
+         |SELECT ds.n_nodes, ne.n_edges, ds.max_deg, ds.wedges,
+         | t3.tri3 // 3 AS n_triangles,
+         | round(CAST(t3.tri3 AS DOUBLE) / CAST(ds.wedges AS DOUBLE), 6) AS transitivity
+         |FROM ds CROSS JOIN ne CROSS JOIN t3""".stripMargin),
     // community-vs-hub discriminator: 2·tri/d(d−1) on the same graph
-    "clustering_coeff" -> ((s, d) => {
+    Q("clustering_coeff", (s, d) => {
       val li = t(s, d).lineitem
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
       val edges = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
         .select(col("x.p").as("src"), col("y.p").as("dst"))
       Graph.clusteringCoefficients(edges).orderBy("node")
-    }),
+    })(
+      // same triangle CTEs + the degree census; 2·tri/d(d−1) one
+      // rounded division, degree-<2 nodes report 0
+      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
+         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+         |        FROM ed WHERE src <> dst),
+         | deg AS (SELECT node, count(*) AS deg
+         |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
+         | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
+         |         FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+         | tc AS (SELECT node, count(*) AS triangles
+         |        FROM (SELECT n1 AS node FROM tri
+         |              UNION ALL SELECT n2 FROM tri
+         |              UNION ALL SELECT n3 FROM tri) z GROUP BY 1)
+         |SELECT d.node, d.deg, coalesce(tc.triangles, 0) AS triangles,
+         | CASE WHEN d.deg >= 2
+         |      THEN round(CAST(coalesce(tc.triangles, 0) * 2 AS DOUBLE)
+         |             / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6)
+         |      ELSE 0.0 END AS coeff
+         |FROM deg d LEFT JOIN tc ON d.node = tc.node ORDER BY d.node""".stripMargin),
     // week-over-week volume report per event type: lag to the
     // previous OBSERVED week, exact counts, one rounded division
-    "wow_change" -> ((s, d) => {
+    Q("wow_change", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val wk = t(s, d).events
         .groupBy(col("event_type"), date_trunc("week", col("ts")).cast("date").as("week"))
@@ -2653,12 +5313,22 @@ object SparkEntry {
             round((col("n") - col("prev_n")).cast("double")
               / col("prev_n").cast("double") * lit(100.0), 4)))
         .orderBy("event_type", "week")
-    }),
+    })(
+      // Monday-truncated weeks both engines; lag to the previous
+      // OBSERVED week; one rounded division
+      """WITH wk AS (SELECT event_type, CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week,
+        |            count(*) AS n FROM events GROUP BY 1, 2),
+        | l AS (SELECT event_type, week, n,
+        |       lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev_n FROM wk)
+        |SELECT event_type, week, n, prev_n,
+        | CASE WHEN prev_n IS NOT NULL
+        |      THEN round(CAST(n - prev_n AS DOUBLE) / CAST(prev_n AS DOUBLE) * 100.0, 4) END AS pct_change
+        |FROM l ORDER BY event_type, week""".stripMargin),
     // market-basket lift over (user, day) event-type sets: lift =
     // n_ab·N / (n_a·n_b) — exact integer numerator and denominator,
     // one rounded division; sequences are event_paths' job, SETS are
     // this one's
-    "basket_lift" -> ((s, d) => {
+    Q("basket_lift", (s, d) => {
       val b = t(s, d).events
         .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type")).distinct()
         .truncateLineage
@@ -2678,7 +5348,18 @@ object SparkEntry {
           round((col("n_ab") * col("n_baskets")).cast("double")
             / (col("n_a") * col("n_b")).cast("double"), 6).as("lift"))
         .orderBy("ta", "tb")
-    }),
+    })(
+      """WITH b AS (SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type FROM events),
+        | nt AS (SELECT count(*) AS n_baskets FROM (SELECT DISTINCT user_id, day FROM b) z),
+        | per AS (SELECT event_type, count(*) AS n_t FROM b GROUP BY 1),
+        | pr AS (SELECT x.event_type AS ta, y.event_type AS tb, count(*) AS n_ab
+        |        FROM b x JOIN b y ON x.user_id = y.user_id AND x.day = y.day
+        |          AND x.event_type < y.event_type
+        |        GROUP BY 1, 2)
+        |SELECT pr.ta, pr.tb, pr.n_ab, pa.n_t AS n_a, pb.n_t AS n_b,
+        | round(CAST(pr.n_ab * nt.n_baskets AS DOUBLE) / CAST(pa.n_t * pb.n_t AS DOUBLE), 6) AS lift
+        |FROM pr JOIN per pa ON pr.ta = pa.event_type JOIN per pb ON pr.tb = pb.event_type
+        |CROSS JOIN nt ORDER BY pr.ta, pr.tb""".stripMargin),
     // the crawl pipeline starting where real crawls start: WARC-shaped
     // record containers (header block + Content-Length + payload +
     // terminators, concatenated per container file) are SPLIT by
@@ -2686,7 +5367,7 @@ object SparkEntry {
     // runs on the recovered html. The twin rebuilds (url, ts,
     // collapsed text) closed-form — the hash proves framing recovered
     // every record byte-exactly
-    "warc_ingest" -> ((s, d) => {
+    Q("warc_ingest", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val withMeta = Html.pageFromDocs(docs).select(col("doc_id"),
@@ -2699,14 +5380,19 @@ object SparkEntry {
         .select(col("doc_id").as("url"), col("fetch_ts"),
           col("n_blocks"), col("n_kept"), col("main_text"))
         .orderBy("url")
-    }),
+    })(
+      // container framing + extraction: expected records rebuilt
+      // closed-form (url and fetch_ts from doc_id arithmetic, main_text
+      // the proven lossless collapse) — equality means the byte framing
+      // recovered every record exactly
+      warcIngestTwinSql),
     // the SAME front door over record-gzipped containers (the real
     // crawl-archive layout: each record independently deflated with
     // Content-Encoding: gzip in its header and Content-Length
     // counting the COMPRESSED payload, so containers stay splittable
     // at record bounds) — the parser inflates per record and the
     // chain must reproduce warc_ingest exactly; one twin serves both
-    "warc_gzip_ingest" -> ((s, d) => {
+    Q("warc_gzip_ingest", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val withMeta = Html.pageFromDocs(docs).select(col("doc_id"),
@@ -2719,7 +5405,10 @@ object SparkEntry {
         .select(col("doc_id").as("url"), col("fetch_ts"),
           col("n_blocks"), col("n_kept"), col("main_text"))
         .orderBy("url")
-    }),
+    })(
+      // record-gzipped containers inflate back to the identical record
+      // stream — the same twin is the decompression proof
+      warcIngestTwinSql),
     // MULTI-SIGNAL dedup fusion — the entity-resolution step after
     // the individual signals: exact-hash cliques (re-hosted copies
     // planted at id+10000) and canonical families (the id−id%3
@@ -2728,7 +5417,7 @@ object SparkEntry {
     // family id. Copies chain INTO canonical families through their
     // text twin — the 2-hop merge neither signal finds alone, which
     // is exactly what the closed-form twin pins
-    "dedup_graph_fusion" -> ((s, d) => {
+    Q("dedup_graph_fusion", (s, d) => {
       val docs = t(s, d).documents.select(col("doc_id"), col("text"))
       val copies = docs.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
@@ -2745,7 +5434,14 @@ object SparkEntry {
       Graph.starComponents(exactEdges.unionByName(canonEdges),
           all.select(col("doc_id")))
         .orderBy("doc_id")
-    }),
+    })(
+      // the 2-hop merge closed-form: every original lands in its
+      // canonical triple; every planted copy chains into its text
+      // twin's triple through the exact-hash edge
+      """SELECT doc_id, doc_id - (doc_id % 3) AS cluster_id FROM documents
+        |UNION ALL
+        |SELECT doc_id + 10000, doc_id - (doc_id % 3) FROM documents WHERE doc_id % 10 = 0
+        |ORDER BY 1""".stripMargin),
     // rel=canonical dedup — the polite-crawl dedup signal that beats
     // any content hash (the SITE tells you which copy is the master):
     // every page's head carries a deliberately messy canonical href
@@ -2754,7 +5450,7 @@ object SparkEntry {
     // yield per-page master URL, the is_canonical verdict, and the
     // duplicate-family size. One narrow regex pass + one group-by on
     // the normalized key — scales like any hash dedup
-    "canonical_dedup" -> ((s, d) => {
+    Q("canonical_dedup", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val m = id - (id % 3)
@@ -2781,14 +5477,25 @@ object SparkEntry {
       ext.join(fam, "canonical_url")
         .select(col("doc_id"), col("canonical_url"), col("is_canonical"), col("group_size"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // closed-form: master m = doc_id − (doc_id mod 3); the hash
+      // proves injection round-trip, extraction, normalization
+      // (scheme/host lowering, :443 and fragment stripping), grouping
+      val ss = Html.SiteSpace
+      s"""WITH x AS (SELECT doc_id, doc_id - (doc_id % 3) AS m FROM documents),
+         | c AS (SELECT doc_id, m,
+         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m AS canonical_url FROM x),
+         | g AS (SELECT canonical_url, count(*) AS group_size FROM c GROUP BY 1)
+         |SELECT c.doc_id, c.canonical_url, c.doc_id = c.m AS is_canonical, g.group_size
+         |FROM c JOIN g USING (canonical_url) ORDER BY c.doc_id""".stripMargin
+    },
     // tracking-parameter URL dedup — the OTHER url-level dup signal
     // after rel=canonical: each doc triple shares one resource URL but
     // carries different click-attribution junk (utm_*, gclid, fbclid)
     // and a different REAL-param order; stripping + param sort
     // collapses the triple onto one canonical fetch key. The hash
     // proves the strip set, the sort, and the family grouping
-    "url_strip_tracking" -> ((s, d) => {
+    Q("url_strip_tracking", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val m = id - (id % 3)
@@ -2807,7 +5514,25 @@ object SparkEntry {
         .select(col("doc_id"), col("raw_url"), col("canonical_url"),
           col("n_variants"), col("keep_id"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // closed-form canonical: every arm's strip+sort lands on
+      // base?a=1&page=2 — the twin derives it, the Spark side must
+      // EARN it through the split/filter/sort pipeline
+      val ss = Html.SiteSpace
+      s"""WITH x AS (SELECT doc_id, doc_id - (doc_id % 3) AS m FROM documents),
+         | c AS (SELECT doc_id, m,
+         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m AS base FROM x),
+         | r AS (SELECT doc_id, base || '?a=1&page=2' AS canonical_url,
+         |    CASE doc_id % 3
+         |      WHEN 0 THEN base || '?page=2&utm_source=feed&a=1&utm_campaign=c' || doc_id
+         |      WHEN 1 THEN base || '?a=1&gclid=g' || doc_id || '&page=2'
+         |      ELSE base || '?page=2&a=1&fbclid=f' || doc_id END AS raw_url
+         |   FROM c),
+         | g AS (SELECT canonical_url, count(*) AS n_variants,
+         |    min(doc_id) AS keep_id FROM r GROUP BY 1)
+         |SELECT r.doc_id, r.raw_url, r.canonical_url, g.n_variants, g.keep_id
+         |FROM r JOIN g USING (canonical_url) ORDER BY r.doc_id""".stripMargin
+    },
     // UT1-style blocklist verdicts over the page-URL fixture: three
     // deterministic rule families — whole-domain blocks (k%7 hosts),
     // path-prefix blocks (/doc/1 on k%5 hosts), and a dot-boundary
@@ -2815,7 +5540,7 @@ object SparkEntry {
     // k%3 host through the suffix-chain equi-join, never a substring
     // scan. The hash proves the chain explode, the join, the prefix
     // test, and the longest-prefix-wins pick
-    "url_blocklist_filter" -> ((s, d) => {
+    Q("url_blocklist_filter", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val urls = docs.select(id.as("doc_id"),
@@ -2832,13 +5557,39 @@ object SparkEntry {
         .select(col("doc_id"), col("url"), col("blocked"),
           col("rule_host"), col("rule_prefix"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // rule hits derived closed-form from the k arithmetic; the
+      // longest-prefix/host/prefix pick mirrors the Spark max(struct)
+      val ss = Html.SiteSpace
+      s"""WITH u AS (SELECT doc_id, doc_id % $ss AS k FROM documents),
+         | uu AS (SELECT doc_id, k,
+         |    'https://' || ${sqlHost("k")} || '/doc/' || doc_id AS url,
+         |    '/doc/' || doc_id AS path FROM u),
+         | cand AS (
+         |   SELECT doc_id, ${sqlHost("k")} AS rule_host, '' AS prefix
+         |     FROM uu WHERE k % 7 = 0
+         |   UNION ALL
+         |   SELECT doc_id, ${sqlHost("k")}, '/doc/1'
+         |     FROM uu WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
+         |   UNION ALL
+         |   SELECT doc_id, 'shop.example.co.uk', '/doc/7'
+         |     FROM uu WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
+         | best AS (SELECT doc_id, rule_host, prefix, row_number() OVER (
+         |    PARTITION BY doc_id
+         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
+         |   FROM cand)
+         |SELECT uu.doc_id, uu.url, b.doc_id IS NOT NULL AS blocked,
+         | coalesce(b.rule_host, '') AS rule_host,
+         | coalesce(b.prefix, '') AS rule_prefix
+         |FROM uu LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
+         |ORDER BY uu.doc_id""".stripMargin
+    },
     // domain-level quality gate (score SOURCES, not documents — the
     // spam-farm catch per-doc cuts miss): pooled stopword density per
     // fixture host vs the corpus-wide density, compared by exact
     // DECIMAL cross-multiply; only docs of at-or-above-average domains
     // survive, carrying their domain's pooled counts
-    "domain_quality_filter" -> ((s, d) => {
+    Q("domain_quality_filter", (s, d) => {
       // r15: pooled at PSL REGISTERED-DOMAIN granularity (the
       // RefinedWeb unit — spam farms spread across hosts of one
       // registrable domain), keyed by the bundled-snapshot PSL join
@@ -2850,7 +5601,32 @@ object SparkEntry {
         .select(col("doc_id"), col("lang"), col("host"), col("site"),
           col("domain_hits"), col("domain_tokens"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // pooled per-SITE stopword density vs the corpus density (r15:
+      // pooling key is the PSL registered domain from the pslCtes chain,
+      // the same published algorithm over the same bundled snapshot the
+      // engine broadcasts); both sides exact: HUGEINT cross-multiply ==
+      // Spark's DECIMAL(38,0)
+      val ss = Html.SiteSpace
+      s"""WITH t AS (SELECT doc_id, lang, ${sqlHost(s"doc_id%$ss")} AS host,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |   FROM documents),
+         |${pslCtes("t")},
+         | s AS (SELECT doc_id, lang, t.host, coalesce(m.site, lower(t.host)) AS site,
+         |    CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT) AS h,
+         |    CAST(len(tk) AS BIGINT) AS n
+         |   FROM t JOIN psl_map m ON m.host = t.host),
+         | d AS (SELECT site, CAST(sum(h) AS BIGINT) AS domain_hits,
+         |    CAST(sum(n) AS BIGINT) AS domain_tokens FROM s GROUP BY site),
+         | tot AS (SELECT CAST(sum(domain_hits) AS BIGINT) AS ch,
+         |    CAST(sum(domain_tokens) AS BIGINT) AS ct FROM d),
+         | keep AS (SELECT site, domain_hits, domain_tokens FROM d, tot
+         |   WHERE CAST(domain_hits AS HUGEINT) * CAST(ct AS HUGEINT) >=
+         |         CAST(ch AS HUGEINT) * CAST(domain_tokens AS HUGEINT))
+         |SELECT s.doc_id, s.lang, s.host, s.site,
+         | keep.domain_hits, keep.domain_tokens
+         |FROM s JOIN keep USING (site) ORDER BY s.doc_id""".stripMargin
+    },
     // the PSL algorithm itself as a relation: a host fixture touching
     // every rule class — multi-label ICANN suffixes, wildcard TLDs,
     // exception rules, the jp geographic wildcards, private-section
@@ -2858,7 +5634,7 @@ object SparkEntry {
     // (site, public_suffix) by the bounded candidate-key explode +
     // broadcast rules join; the twin replays the published algorithm
     // over the SAME bundled snapshot
-    "psl_registered_domain" -> ((s, d) => {
+    Q("psl_registered_domain", (s, d) => {
       val k = col("doc_id") % Html.SiteSpace
       val host = when(col("doc_id") % 7 === 0, Html.fixtureHost(k))
         .when(col("doc_id") % 7 === 1,
@@ -2875,7 +5651,23 @@ object SparkEntry {
       graft.operators.PublicSuffix.registeredDomains(
           t(s, d).documents.select(host.as("host")))
         .orderBy("host")
-    }),
+    }) {
+      // the PSL algorithm replayed end-to-end in SQL over the SAME
+      // bundled snapshot (candidate-key explosion, exception-then-most-
+      // labels prevailing rule, default `*`) on a host fixture touching
+      // every rule class
+      val ss = Html.SiteSpace
+      s"""WITH hsrc AS (SELECT DISTINCT CASE
+         |   WHEN doc_id%7=0 THEN ${sqlHost(s"doc_id%$ss")}
+         |   WHEN doc_id%7=1 THEN 'www.example' || (doc_id%$ss) || '.com'
+         |   WHEN doc_id%7=2 THEN 'sub' || (doc_id%$ss) || '.foo.ck'
+         |   WHEN doc_id%7=3 THEN 'a' || (doc_id%$ss) || '.www.ck'
+         |   WHEN doc_id%7=4 THEN 'blog' || (doc_id%$ss) || '.github.io'
+         |   WHEN doc_id%7=5 THEN 'x' || (doc_id%$ss) || '.kawasaki.jp'
+         |   ELSE 'city.kawasaki.jp' END AS host FROM documents),
+         |${pslCtes("hsrc")}
+         |SELECT host, site, public_suffix FROM psl_map ORDER BY host""".stripMargin
+    },
     // sitemap-driven discovery — the OTHER half of polite crawling
     // (robots says what you may fetch; the sitemap says what exists):
     // each host's sitemap XML is assembled deterministically from its
@@ -2884,7 +5676,7 @@ object SparkEntry {
     // the output is the uncrawled discovery list a frontier ingests.
     // The hash proves the XML build/parse round trip AND the
     // discovery anti-join
-    "sitemap_discovery" -> ((s, d) => {
+    Q("sitemap_discovery", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val url = concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
@@ -2908,7 +5700,16 @@ object SparkEntry {
         .select(col("doc_id"), Html.fixtureHost(col("hk")).as("host"),
           col("url"), col("lastmod_ts"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // closed-form discovery list: uncrawled = odd ids; url/lastmod
+      // rebuilt from doc_id arithmetic — the build/parse round trip is
+      // what the Spark side must invert losslessly
+      val ss = Html.SiteSpace
+      s"""SELECT doc_id, ${sqlHost(s"doc_id%$ss")} AS host,
+         | 'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || doc_id AS url,
+         | CAST(1700000000 + doc_id AS BIGINT) AS lastmod_ts
+         |FROM documents WHERE doc_id % 2 = 1 ORDER BY doc_id""".stripMargin
+    },
     // URL normalization as an oracle query: each doc's three raw href
     // forms (absolute with uppercase scheme/host + default port +
     // fragment; root-relative with query; dot-segment relative) are
@@ -2917,7 +5718,7 @@ object SparkEntry {
     // The twin builds the expected strings closed-form from doc_id
     // arithmetic — the hash proves resolution, lowercasing, port and
     // fragment stripping, dot-segment collapse, and suffix handling
-    "url_normalize" -> ((s, d) => {
+    Q("url_normalize", (s, d) => {
       val id = col("doc_id")
       val base = concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
         lit("/doc/"), id.cast("string"))
@@ -2940,7 +5741,35 @@ object SparkEntry {
         // registered query now replays the real published algorithm)
         .transform(graft.operators.PublicSuffix.withSite(_))
         .orderBy("doc_id", "kind")
-    }),
+    }) {
+      // expected normalized URLs built closed-form from doc_id
+      // arithmetic — the three raw forms' resolution/canonicalization is
+      // what the hash proves (50 | 1000, so t%50 == (expr)%50 holds)
+      val m = Html.DefaultLinkSpace
+      val ss = Html.SiteSpace
+      s"""WITH t AS (SELECT doc_id, (doc_id*7+3)%$m AS t1, (doc_id*13+5)%$m AS t2,
+         |                  (doc_id+1)%$m AS t3 FROM documents),
+         | rows AS (
+         |  SELECT doc_id, 'abs' AS kind,
+         |    'HTTP://' || upper(${sqlHost(s"t1%$ss")}) || ':80/doc/' || t1 || '#frag' AS raw_url,
+         |    'http://' || ${sqlHost(s"t1%$ss")} || '/doc/' || t1 AS norm_url,
+         |    ${sqlHost(s"t1%$ss")} AS host, ${sqlSite(s"t1%$ss")} AS site
+         |  FROM t
+         |  UNION ALL
+         |  SELECT doc_id, 'root',
+         |    '/doc/' || t2 || '?ref=nav',
+         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || t2 || '?ref=nav',
+         |    ${sqlHost(s"doc_id%$ss")}, ${sqlSite(s"doc_id%$ss")}
+         |  FROM t
+         |  UNION ALL
+         |  SELECT doc_id, 'rel',
+         |    '../doc/' || t3 || '#s2',
+         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || t3,
+         |    ${sqlHost(s"doc_id%$ss")}, ${sqlSite(s"doc_id%$ss")}
+         |  FROM t)
+         |SELECT doc_id, kind, raw_url, norm_url, host, site
+         |FROM rows ORDER BY doc_id, kind""".stripMargin
+    },
     // site-cluster discovery over REAL keys: the URL-page fixture's
     // hrefs are parsed by the general outlinksFull (resolve+normalize),
     // edges are lifted to host granularity, and large-star/small-star
@@ -2950,7 +5779,7 @@ object SparkEntry {
     // host and drop as self-loops), so the host graph is the
     // closed-form k → (7k+3) mod 50 permutation — cycles become
     // clusters
-    "site_components" -> ((s, d) => {
+    Q("site_components", (s, d) => {
       val pages = Html.urlPageFromDocs(t(s, d).documents)
       val hostEdges = Html.outlinksFull(pages)
         .select(Html.urlHost(col("src_url")).as("doc_a"),
@@ -2961,7 +5790,24 @@ object SparkEntry {
       Graph.starComponents(hostEdges, hosts, idCol = "host")
         .select(col("doc_id").as("host"), col("cluster_id"))
         .orderBy("host")
-    }),
+    }) {
+      // only the absolute href crosses hosts, so the host graph is the
+      // closed-form k → (7k+3) mod SiteSpace map; undirected closure
+      // over it (the crawl_components recursive device, on strings)
+      val ss = Html.SiteSpace
+      s"""WITH RECURSIVE e0 AS (
+         |  SELECT DISTINCT ${sqlHost(s"doc_id%$ss")} AS a, ${sqlHost(s"(doc_id*7+3)%$ss")} AS b
+         |  FROM documents
+         |  WHERE ${sqlHost(s"doc_id%$ss")} <> ${sqlHost(s"(doc_id*7+3)%$ss")}),
+         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
+         | nodes AS (SELECT DISTINCT src AS node FROM e),
+         | reach(node, label) AS (
+         |   SELECT node, node FROM nodes
+         |   UNION
+         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
+         |SELECT node AS host, min(label) AS cluster_id
+         |FROM reach GROUP BY node ORDER BY host""".stripMargin
+    },
     // the same component discovery at PSL REGISTERED-DOMAIN granularity
     // (r15): hosts carry a www label the PSL must drop, so the graph's
     // node identity comes from the real suffix-list algorithm (distinct
@@ -2969,7 +5815,7 @@ object SparkEntry {
     // — the site graph a per-domain budget system actually partitions
     // on; host-granularity site_components stays registered above (a
     // crawl frontier politeness-partitions on hosts, not sites)
-    "psl_site_components" -> ((s, d) => {
+    Q("psl_site_components", (s, d) => {
       val ss = Html.SiteSpace
       def host(c: org.apache.spark.sql.Column) =
         concat(lit("www.site"), c.cast("string"), lit(".co.uk"))
@@ -2991,14 +5837,37 @@ object SparkEntry {
       Graph.starComponents(edges, sites, idCol = "site")
         .select(col("doc_id").as("site"), col("cluster_id"))
         .orderBy("site")
-    }),
+    }) {
+      // the PSL hop replayed via pslCtes (www label dropped by the real
+      // algorithm), then the same undirected min-label closure over the
+      // registered-domain graph
+      val ss = Html.SiteSpace
+      s"""WITH RECURSIVE hraw AS (
+         |  SELECT DISTINCT 'www.site' || (doc_id%$ss) || '.co.uk' AS ha,
+         |         'www.site' || ((doc_id*7+3)%$ss) || '.co.uk' AS hb
+         |  FROM documents),
+         | hsrc AS (SELECT ha AS host FROM hraw UNION SELECT hb FROM hraw),
+         |${pslCtes("hsrc")},
+         | e0 AS (SELECT DISTINCT ma.site AS a, mb.site AS b
+         |   FROM hraw JOIN psl_map ma ON ma.host = hraw.ha
+         |             JOIN psl_map mb ON mb.host = hraw.hb
+         |   WHERE ma.site <> mb.site),
+         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
+         | nodes AS (SELECT DISTINCT src AS node FROM e),
+         | reach(node, label) AS (
+         |   SELECT node, node FROM nodes
+         |   UNION
+         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
+         |SELECT node AS site, min(label) AS cluster_id
+         |FROM reach GROUP BY node ORDER BY site""".stripMargin
+    },
     // internationalized hosts: the unicode and punycode (`xn--`)
     // spellings of one domain must key to the SAME PSL site — the fold
     // runs inside registeredDomains (JDK IDN per label, distinct-host
     // relation only), and the oracle pins the published punycode
     // constants (münchen → xn--mnchen-3ya; the 公司.cn PSL rule →
     // xn--55qx5d.cn), so the twin is independent of the JDK codec
-    "idn_host_fold" -> ((s, d) => {
+    Q("idn_host_fold", (s, d) => {
       val f = col("doc_id") % 4
       val m = (col("doc_id") % 7).cast("string")
       val host = when(f === 0, concat(lit("a"), m, lit(".münchen.de")))
@@ -3008,7 +5877,24 @@ object SparkEntry {
       graft.operators.PublicSuffix.registeredDomains(
           t(s, d).documents.select(host.as("host")))
         .orderBy("host")
-    }),
+    }) {
+      // the fold's expected outputs are PINNED punycode constants from
+      // public knowledge (münchen → xn--mnchen-3ya is the RFC 3492
+      // worked example class; xn--55qx5d.cn is the published ASCII form
+      // of the 公司.cn PSL rule) — NOT replayed through any IDN codec,
+      // so the twin independently proves both spellings key to one site
+      s"""WITH hsrc AS (SELECT DISTINCT doc_id%4 AS f, doc_id%7 AS m FROM documents),
+         | h AS (SELECT CASE f
+         |   WHEN 0 THEN 'a' || m || '.münchen.de'
+         |   WHEN 1 THEN 'a' || m || '.xn--mnchen-3ya.de'
+         |   WHEN 2 THEN 'b' || m || '.shop.公司.cn'
+         |   ELSE 'b' || m || '.shop.xn--55qx5d.cn' END AS host, f FROM hsrc)
+         |SELECT host,
+         | CASE WHEN f IN (0,1) THEN 'xn--mnchen-3ya.de'
+         |      ELSE 'shop.xn--55qx5d.cn' END AS site,
+         | CASE WHEN f IN (0,1) THEN 'de' ELSE 'xn--55qx5d.cn' END AS public_suffix
+         |FROM h ORDER BY host""".stripMargin
+    },
     // legacy-charset repair at the crawl front door: six byte-level
     // page classes (clean UTF-8, ISO-8859-1, Shift-JIS, windows-1251,
     // a malformed byte under a utf-8 declaration, pre-damaged
@@ -3016,7 +5902,7 @@ object SparkEntry {
     // malformed-unit accounting, report the naive-UTF-8 damage the
     // transcode repaired, and compose into mojibakeScreen — which
     // must flag the pre-damaged class and nothing else
-    "charset_transcode_audit" -> ((s, d) => {
+    Q("charset_transcode_audit", (s, d) => {
       import graft.operators.{Charsets, TextQuality}
       val audit = Charsets.transcodeAudit(
         Charsets.pagesFromDocs(t(s, d).documents.select(col("doc_id"))))
@@ -3027,13 +5913,40 @@ object SparkEntry {
           col("malformed_units"), col("utf8_malformed"),
           col("n_moji"), col("is_moji"), col("text"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // the twin is a pure closed form: expected texts rebuilt from the
+      // published charset tables (0xE9=é in ISO-8859-1, 0x83 65 93 FA=
+      // テ日 in Shift-JIS, 0xCF F0=Пр in windows-1251), malformed-unit
+      // counts from the UTF-8 spec's error-sequence segmentation (a
+      // planted 0xE9 before ASCII = 1 unit; the SJIS quad = 3; the 1251
+      // pair = 2; a lone 0xFF = 1) — nothing replayed through a codec
+      s"""WITH b AS (SELECT doc_id, doc_id%6 AS c,
+         |    CAST(doc_id%7 AS VARCHAR) AS m FROM documents)
+         |SELECT doc_id,
+         | CASE WHEN c=1 THEN 'iso-8859-1' WHEN c=2 THEN 'shift_jis'
+         |      WHEN c=3 THEN 'windows-1251' ELSE 'utf-8' END AS charset,
+         | c IN (1,2,3) AS transcoded,
+         | CAST(CASE WHEN c=4 THEN 1 ELSE 0 END AS BIGINT) AS malformed_units,
+         | CAST(CASE c WHEN 1 THEN 1 WHEN 2 THEN 3 WHEN 3 THEN 2
+         |             WHEN 4 THEN 1 ELSE 0 END AS BIGINT) AS utf8_malformed,
+         | CAST(CASE WHEN c=5 THEN 1 ELSE 0 END AS BIGINT) AS n_moji,
+         | c=5 AS is_moji,
+         | CASE c
+         |  WHEN 0 THEN '<meta charset="utf-8"><p>doc ' || m || ' caf' || chr(233) || ' ' || chr(26085) || '</p>'
+         |  WHEN 1 THEN '<meta charset="iso-8859-1"><p>doc ' || m || ' caf' || chr(233) || '</p>'
+         |  WHEN 2 THEN '<meta charset="shift_jis"><p>doc ' || m || ' ' || chr(12486) || chr(26085) || '</p>'
+         |  WHEN 3 THEN '<meta charset="windows-1251"><p>doc ' || m || ' ' || chr(1055) || chr(1088) || '</p>'
+         |  WHEN 4 THEN '<meta charset="utf-8"><p>doc ' || m || ' ' || chr(65533) || ' ok</p>'
+         |  ELSE '<meta charset="utf-8"><p>doc ' || m || ' mal ' || chr(195) || chr(169) || ' input</p>'
+         | END AS text
+         |FROM b ORDER BY doc_id""".stripMargin
+    },
     // the same planted byte classes with their meta tags REMOVED:
     // content-based detection must recover utf-8/latin-1/shift_jis/
     // cp1251 from the bytes alone (VERDICT r16 missing #1) — the
     // undeclared-0xFF class repairs to latin-1 ÿ with ZERO malformed
     // units where the old utf-8 default counted damage unrepaired
-    "charset_detect_audit" -> ((s, d) => {
+    Q("charset_detect_audit", (s, d) => {
       import graft.operators.Charsets
       Charsets.transcodeAudit(
         Charsets.pagesFromDocs(t(s, d).documents.select(col("doc_id")), declare = false))
@@ -3041,7 +5954,36 @@ object SparkEntry {
           col("transcoded"), col("malformed_units"), col("utf8_malformed"),
           col("ok"), col("text"))
         .orderBy("doc_id")
-    }),
+    }) {
+      // undeclared fixture, detection outcomes pinned closed-form per
+      // planted class (the detector's decision ladder is deterministic
+      // published-spec arithmetic, so the twin states its conclusions):
+      // 1 lone-high-byte → latin-1, 2 SJIS lead pair → shift_jis,
+      // 3 Cyrillic run → cp1251, 4 stray 0xFF → latin-1 ÿ REPAIRED
+      // (zero malformed vs the declared fixture's counted damage)
+      s"""WITH b AS (SELECT doc_id, doc_id%6 AS c,
+         |    CAST(doc_id%7 AS VARCHAR) AS m FROM documents)
+         |SELECT doc_id,
+         | CASE WHEN c=1 THEN 'iso-8859-1' WHEN c=2 THEN 'shift_jis'
+         |      WHEN c=3 THEN 'windows-1251' WHEN c=4 THEN 'iso-8859-1'
+         |      ELSE 'utf-8' END AS charset,
+         | false AS declared,
+         | true AS supported,
+         | c IN (1,2,3,4) AS transcoded,
+         | CAST(0 AS BIGINT) AS malformed_units,
+         | CAST(CASE c WHEN 1 THEN 1 WHEN 2 THEN 3 WHEN 3 THEN 2
+         |             WHEN 4 THEN 1 ELSE 0 END AS BIGINT) AS utf8_malformed,
+         | true AS ok,
+         | CASE c
+         |  WHEN 0 THEN '<p>doc ' || m || ' caf' || chr(233) || ' ' || chr(26085) || '</p>'
+         |  WHEN 1 THEN '<p>doc ' || m || ' caf' || chr(233) || '</p>'
+         |  WHEN 2 THEN '<p>doc ' || m || ' ' || chr(12486) || chr(26085) || '</p>'
+         |  WHEN 3 THEN '<p>doc ' || m || ' ' || chr(1055) || chr(1088) || '</p>'
+         |  WHEN 4 THEN '<p>doc ' || m || ' ' || chr(255) || ' ok</p>'
+         |  ELSE '<p>doc ' || m || ' mal ' || chr(195) || chr(169) || ' input</p>'
+         | END AS text
+         |FROM b ORDER BY doc_id""".stripMargin
+    },
     // post-training front door: the render→parse ROUND TRIP — the
     // deterministic transcript fixture (system turns, forced
     // same-role violations, blanked last turns, colliding assistant
@@ -3049,95 +5991,247 @@ object SparkEntry {
     // arithmetic, then parsed back by the real line parser; the twin
     // rebuilds the turn relation closed-form, so the hash proves the
     // parser grammar end-to-end
-    "sft_parse_turns" -> ((s, d) => {
+    Q("sft_parse_turns", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents))
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      // the turn relation rebuilt closed-form from the fixture
+      // arithmetic — never replayed through the renderer or the line
+      // parser, so the hash proves the render→parse round trip
+      s"""$SftTurnsCtes
+         |SELECT conv_id, turn_idx, role, content FROM sft_turns
+         |ORDER BY conv_id, turn_idx""".stripMargin),
     // per-conversation SFT integrity audit: role counts, adjacent
     // same-role runs, first-non-system-is-user, ends-on-assistant,
     // empty turns, composed verdict — the twin RECOMPUTES every flag
     // via its own lag window over the rebuilt turns, so the audit
     // logic is proven against an independent implementation
-    "sft_conversation_audit" -> ((s, d) => {
+    Q("sft_conversation_audit", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.conversationAudit(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)))
         .orderBy("conv_id")
-    }),
+    })(
+      // every audit flag RECOMPUTED independently: DuckDB's own lag
+      // window + conditional aggregates over the rebuilt turns
+      s"""$SftTurnsCtes,
+         | prevr AS (SELECT conv_id, turn_idx, role, content,
+         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
+         |   FROM sft_turns)
+         |SELECT conv_id, count(*) AS n_turns,
+         | CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS n_user,
+         | CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) AS BIGINT) AS n_assistant,
+         | CAST(sum(CASE WHEN role = 'system' THEN 1 ELSE 0 END) AS BIGINT) AS n_system,
+         | CAST(sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+         | CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS BIGINT) AS same_role_runs,
+         | coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+         |   coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+         |     9223372036854775807), FALSE) AS starts_ok,
+         | arg_max(role, turn_idx) = 'assistant' AS ends_assistant,
+         | max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 1 AS has_empty,
+         | (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
+         |  AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+         |    coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+         |      9223372036854775807), FALSE)
+         |  AND arg_max(role, turn_idx) = 'assistant'
+         |  AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
+         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
+         |FROM prevr GROUP BY conv_id ORDER BY conv_id""".stripMargin),
     // response-level dedup (the synthetic-data collapse screen):
     // assistant turns fingerprinted in order via md5, min-id keeper
     // per group, no-assistant conversations isolated as null-fp
     // singletons — assistant content keys on doc_id%41 so real
     // cross-conversation dup groups exist at every scale factor
-    "sft_response_dedup" -> ((s, d) => {
+    Q("sft_response_dedup", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.dedupByResponse(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)))
         .orderBy("conv_id")
-    }),
+    })(
+      // the same ordered-assistant md5 fingerprint via string_agg with
+      // an in-group ORDER BY; null-fp (no-assistant) singletons via the
+      // non-matching LEFT JOIN, exactly the engine's semantics
+      s"""$SftTurnsCtes,
+         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
+         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
+         | grp AS (SELECT resp_fp, count(*) AS group_size, min(conv_id) AS keeper
+         |   FROM fp GROUP BY resp_fp)
+         |SELECT c.conv_id, fp.resp_fp,
+         | coalesce(grp.group_size, 1) AS group_size,
+         | (fp.resp_fp IS NULL OR c.conv_id = grp.keeper) AS keep
+         |FROM (SELECT DISTINCT conv_id FROM sft_turns) c
+         |LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
+         |ORDER BY conv_id""".stripMargin),
     // conversation-granularity packing plan: exact exclusive prefix
     // sum of ceil(chars/4) token estimates over the conv_id total
     // order (TotalOrder.prefixSumAuto — window below the 4M cutover,
     // TeraSort above), bin = floor(prefix/budget); the twin replays
     // the same arithmetic with a SQL window, proving the plan exact
-    "sft_pack_plan" -> ((s, d) => {
+    Q("sft_pack_plan", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.packPlan(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("bin")
-    }),
+    })(
+      // the packing plan replayed with a SQL running-sum window: same
+      // ceil(chars/4) estimator, same exclusive-prefix bin arithmetic
+      s"""$SftTurnsCtes,
+         | per AS (SELECT conv_id, CAST(sum((length(content) + 3) // 4) AS BIGINT) AS tokens
+         |   FROM sft_turns GROUP BY conv_id),
+         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
+         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
+         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
+         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
+         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
+         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
     // the trainer-facing span table: per turn, [tok_start, tok_end)
     // into the packed global token stream, sequence bin, and the
     // trainable flag (assistant turns train, user/system masked) —
     // exact integer prefix sums at both levels, twin replays both
     // windows in SQL
-    "sft_loss_mask_spans" -> ((s, d) => {
+    Q("sft_loss_mask_spans", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.lossMaskSpans(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      // both prefix-sum levels replayed as SQL windows: global
+      // conversation starts over the conv_id order, turn offsets
+      // within each conversation — spans tile exactly or the hash breaks
+      s"""$SftTurnsCtes,
+         | ltt AS (SELECT conv_id, turn_idx, role,
+         |   CAST((length(content) + 3) // 4 AS BIGINT) AS turn_tokens FROM sft_turns),
+         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
+         |   FROM ltt GROUP BY conv_id),
+         | lpre AS (SELECT conv_id,
+         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |     - conv_tokens AS conv_start FROM lper),
+         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
+         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
+         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |     0) AS BIGINT) AS toff
+         |   FROM ltt t JOIN lpre p USING (conv_id))
+         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
+         | conv_start + toff AS tok_start,
+         | conv_start + toff + turn_tokens AS tok_end,
+         | role = 'assistant' AS trainable
+         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin),
     // the SAME packing plan at REAL subword grain (VERDICT r16 missing
     // #4): conversation token loads from the frozen BPE artifact's
     // distinct-words applier instead of ceil(chars/4) — the plan a
     // trainer's actual tokenizer budget sees; twin composes the
     // recursive-CTE applier with the identical running-sum arithmetic
-    "sft_pack_plan_bpe" -> ((s, d) => {
+    Q("sft_pack_plan_bpe", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.packPlanBpe(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("bin")
-    }),
+    })(
+      // the BPE-grain twins: the closed-form turn relation feeds the
+      // shared recursive-CTE applier (wc built from TURN words), then
+      // per-turn counts left-join back (empty-content turns pin 0) and
+      // the SAME packing / two-level-window arithmetic runs over them
+      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
+         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
+         |   FROM (SELECT conv_id, turn_idx,
+         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
+         |     FROM sft_turns) t
+         |   WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
+         |$BpeApplyCte,
+         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
+         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
+         | per AS (SELECT s.conv_id,
+         |   CAST(sum(coalesce(t.bt, 0)) AS BIGINT) AS tokens
+         |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)
+         |   GROUP BY 1),
+         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
+         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
+         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
+         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
+         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
+         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
     // the span table at BPE grain — offsets in real subword tokens,
     // empty-content turns spanning zero width but still present, spans
     // provably tiling (the twin's windows must reproduce every offset)
-    "sft_loss_mask_spans_bpe" -> ((s, d) => {
+    Q("sft_loss_mask_spans_bpe", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.lossMaskSpansBpe(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
+         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
+         |   FROM (SELECT conv_id, turn_idx,
+         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
+         |     FROM sft_turns) t
+         |   WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
+         |$BpeApplyCte,
+         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
+         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
+         | ltt AS (SELECT s.conv_id, s.turn_idx, s.role,
+         |   CAST(coalesce(t.bt, 0) AS BIGINT) AS turn_tokens
+         |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)),
+         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
+         |   FROM ltt GROUP BY conv_id),
+         | lpre AS (SELECT conv_id,
+         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |     - conv_tokens AS conv_start FROM lper),
+         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
+         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
+         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |     0) AS BIGINT) AS toff
+         |   FROM ltt t JOIN lpre p USING (conv_id))
+         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
+         | conv_start + toff AS tok_start,
+         | conv_start + toff + turn_tokens AS tok_end,
+         | role = 'assistant' AS trainable
+         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin),
     // tool-use turn integrity: call payload JSON validity, tool-name
     // extraction, arguments presence, registry membership (broadcast
     // equi-join), call/result pairing via one lead window — the
     // fixture plants truncated JSON, missing-arguments, unregistered
     // tools, and dropped result turns deterministically
-    "tool_call_audit" -> ((s, d) => {
+    Q("tool_call_audit", (s, d) => {
       import s.implicits._
       import graft.operators.PostTraining
       val registry = Seq("search", "calc", "fetch").toDF("tool")
       PostTraining.toolCallAudit(
           PostTraining.toolTurnsFromDocs(t(s, d).documents), registry)
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      // payload relation rebuilt closed-form, then DuckDB's OWN json
+      // machinery (json_valid / json_extract) grades each call — two
+      // independent JSON parsers agreeing on validity, name extraction,
+      // and arguments presence; pairing via the same lead-window device
+      s"""$ToolTurnsCtes,
+         | calls AS (SELECT conv_id, turn_idx, payload, next_kind,
+         |   json_valid(payload) AS json_ok,
+         |   CASE WHEN json_valid(payload)
+         |        THEN json_extract_string(payload, '$$.name') END AS tool_name,
+         |   CASE WHEN json_valid(payload)
+         |        THEN json_extract(payload, '$$.arguments') IS NOT NULL
+         |        ELSE FALSE END AS has_args,
+         |   coalesce(next_kind = 'result', FALSE) AS paired
+         |   FROM nk WHERE kind = 'call')
+         |SELECT conv_id, turn_idx, json_ok, tool_name, has_args,
+         | coalesce(tool_name IN ('search', 'calc', 'fetch'), FALSE) AS name_known,
+         | paired,
+         | (json_ok AND has_args
+         |  AND coalesce(tool_name IN ('search', 'calc', 'fetch'), FALSE)
+         |  AND paired) AS call_ok
+         |FROM calls ORDER BY conv_id, turn_idx""".stripMargin),
     // argument-SCHEMA validation (VERDICT r16 #8): the %53 wrong-arg-
     // name class ({"query": ...} where the tool takes q) passes every
     // tool_call_audit check — this audit diffs the payload's key set
     // against the (tool, arg) registry both ways; DuckDB's own
     // json_keys machinery is the independent grader
-    "tool_args_audit" -> ((s, d) => {
+    Q("tool_args_audit", (s, d) => {
       import s.implicits._
       import graft.operators.PostTraining
       val registryArgs = Seq(("search", "q"), ("calc", "q"), ("fetch", "q"))
@@ -3145,12 +6239,38 @@ object SparkEntry {
       PostTraining.toolArgsAudit(
           PostTraining.toolTurnsFromDocs(t(s, d).documents), registryArgs)
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      // DuckDB's own json_keys machinery grades the key-set diff — two
+      // independent JSON parsers must agree on present/missing/unknown
+      // argument names; the %53 wrong-arg-name class is the planted
+      // catch (it passes every tool_call_audit column)
+      s"""$ToolTurnsCtes,
+         | ca AS (SELECT conv_id, turn_idx,
+         |   CASE WHEN json_valid(payload)
+         |        THEN json_extract_string(payload, '$$.name') END AS tool_name,
+         |   coalesce(CASE WHEN json_valid(payload)
+         |     THEN list_sort(json_keys(payload, '$$.arguments')) END, []) AS present
+         |   FROM nk WHERE kind = 'call'),
+         | reg AS (SELECT * FROM (VALUES ('search', ['q']), ('calc', ['q']),
+         |   ('fetch', ['q'])) AS r(tool, req)),
+         | jd AS (SELECT c.conv_id, c.turn_idx, c.tool_name, c.present, r.req
+         |   FROM ca c LEFT JOIN reg r ON c.tool_name = r.tool)
+         |SELECT conv_id, turn_idx, tool_name,
+         | coalesce(array_to_string(present, ','), '') AS present_args,
+         | coalesce(array_to_string(list_filter(coalesce(req, []),
+         |   x -> NOT list_contains(present, x)), ','), '') AS missing_args,
+         | coalesce(array_to_string(list_filter(present,
+         |   x -> NOT list_contains(coalesce(req, []), x)), ','), '') AS unknown_args,
+         | (req IS NOT NULL
+         |  AND len(list_filter(coalesce(req, []), x -> NOT list_contains(present, x))) = 0
+         |  AND len(list_filter(present, x -> NOT list_contains(coalesce(req, []), x))) = 0)
+         |   AS args_ok
+         |FROM jd ORDER BY conv_id, turn_idx""".stripMargin),
     // the post-training batch chain in ONE query: parse → integrity
     // audit → response dedup → pack the ADMITTED conversations into
     // token-budgeted training sequences — proving the stages compose
     // (the crawl_curation_e2e device applied to the SFT stage)
-    "sft_admission_pack_e2e" -> ((s, d) => {
+    Q("sft_admission_pack_e2e", (s, d) => {
       import graft.operators.PostTraining
       val turns = PostTraining.parseTurns(
         PostTraining.renderTranscripts(t(s, d).documents))
@@ -3159,37 +6279,89 @@ object SparkEntry {
         .select(col("conv_id"))
       PostTraining.packPlan(turns.join(admitted, Seq("conv_id")), budgetTokens = 500L)
         .orderBy("bin")
-    }),
+    })(
+      // the composed chain in SQL: audit ∩ dedup-keeper filters the
+      // turn relation, then the same running-sum packing arithmetic
+      s"""$SftTurnsCtes,
+         | prevr AS (SELECT conv_id, turn_idx, role, content,
+         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
+         |   FROM sft_turns),
+         | aud AS (SELECT conv_id,
+         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
+         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+         |        9223372036854775807), FALSE)
+         |    AND arg_max(role, turn_idx) = 'assistant'
+         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
+         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
+         |   FROM prevr GROUP BY conv_id),
+         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
+         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
+         | grp AS (SELECT resp_fp, min(conv_id) AS keeper FROM fp GROUP BY resp_fp),
+         | adm AS (SELECT a.conv_id FROM aud a
+         |   LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
+         |   WHERE a.ok AND (fp.resp_fp IS NULL OR a.conv_id = grp.keeper)),
+         | per AS (SELECT t.conv_id, CAST(sum((length(t.content) + 3) // 4) AS BIGINT) AS tokens
+         |   FROM sft_turns t JOIN adm USING (conv_id) GROUP BY t.conv_id),
+         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
+         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
+         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
+         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
+         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
+         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
     // code-LLM front door: fenced code blocks extracted with language
     // tags (codegen'd regexp_extract_all, Java∩RE2 grammar, zero
     // shuffle), the twin rebuilds every expected block CLOSED-FORM —
     // the hash proves the extractor, including that an unclosed
     // trailing fence matches nothing instead of swallowing the tail
-    "markdown_code_blocks" -> ((s, d) => {
+    Q("markdown_code_blocks", (s, d) => {
       import graft.operators.Markdown
       Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .orderBy("doc_id", "block_idx")
-    }),
+    })(
+      // expected blocks rebuilt from the fixture arithmetic — no regex
+      // on the oracle side, so extractor and twin are fully independent
+      s"""$MdBlocksCtes
+         |SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, lang_tag, code,
+         | CAST(length(code) - length(replace(code, chr(10), '')) + 1 AS BIGINT) AS code_lines,
+         | CAST(length(code) AS BIGINT) AS code_chars
+         |FROM md_blocks ORDER BY doc_id, block_idx""".stripMargin),
     // structured-data front door: HTML tables lifted to a
     // (doc, table, row, col, cell) relation — three chained codegen'd
     // generators (tables → rows → th/td cells), zero UDF, zero
     // shuffle; the twin rebuilds every expected cell closed-form
-    "html_table_cells" -> ((s, d) => {
+    Q("html_table_cells", (s, d) => {
       Html.extractTables(Html.tablesFromDocs(t(s, d).documents))
         .orderBy("doc_id", "table_idx", "row_idx", "col_idx")
-    }),
+    })(
+      // every expected cell rebuilt closed-form from the fixture
+      // arithmetic — no regex on the oracle side; table_idx accounts
+      // for the %31 docs whose ONLY table is the appended one
+      s"""$HtmlCellsCtes
+         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
+         | CAST(row_idx AS BIGINT) AS row_idx, CAST(col_idx AS BIGINT) AS col_idx,
+         | is_header, cell
+         |FROM ht_cells ORDER BY doc_id, table_idx, row_idx, col_idx""".stripMargin),
     // per-table shapes: row/col counts, header presence, and the
     // RAGGED flag (unequal row widths — the malformed-table class a
     // table-reasoning pipeline must drop or repair; %11 plants it)
-    "html_table_shapes" -> ((s, d) => {
+    Q("html_table_shapes", (s, d) => {
       Html.tableShapes(Html.extractTables(Html.tablesFromDocs(t(s, d).documents)))
         .orderBy("doc_id", "table_idx")
-    }),
+    })(
+      // shapes regrouped in SQL over the same closed-form cell relation
+      s"""$HtmlCellsCtes,
+         | rw AS (SELECT doc_id, table_idx, row_idx, count(*) AS w,
+         |   max(is_header) AS h FROM ht_cells GROUP BY 1, 2, 3)
+         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
+         | count(*) AS n_rows, CAST(max(w) AS BIGINT) AS n_cols,
+         | max(h) AS has_header, count(DISTINCT w) > 1 AS ragged
+         |FROM rw GROUP BY doc_id, table_idx ORDER BY doc_id, table_idx""".stripMargin),
     // code-block dedup: vendored/boilerplate code collapsing to
     // (lang, code) groups with copy counts and the min-doc keeper —
     // the %7/%13/%5-keyed fixture code collides across documents by
     // construction, so real dup groups exist at every scale factor
-    "code_block_dedup" -> ((s, d) => {
+    Q("code_block_dedup", (s, d) => {
       import graft.operators.Markdown
       Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .groupBy(col("lang_tag"), col("code"))
@@ -3197,12 +6369,20 @@ object SparkEntry {
           countDistinct(col("doc_id")).as("n_docs"),
           min(col("doc_id")).as("keeper_doc"))
         .orderBy("lang_tag", "code")
-    }),
+    })(
+      // the dedup regrouped in SQL over the same closed-form relation:
+      // vendored/boilerplate code collapses to (lang, code) groups
+      s"""$MdBlocksCtes
+         |SELECT lang_tag, code, count(*) AS n_copies,
+         | CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         | min(doc_id) AS keeper_doc
+         |FROM md_blocks GROUP BY lang_tag, code
+         |ORDER BY lang_tag, code""".stripMargin),
     // mislabeled fences: %23 python blocks relabeled 'scala' IN THE
     // QUERY (the planted-phrase device — the shared fixture is
     // untouched), then the keyword-vote consistency screen must flag
     // exactly those; no-evidence blocks stay unflagged
-    "code_lang_consistency" -> ((s, d) => {
+    Q("code_lang_consistency", (s, d) => {
       import graft.operators.Markdown
       val blocks = Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .withColumn("lang_tag",
@@ -3213,26 +6393,87 @@ object SparkEntry {
           col("hits_python"), col("hits_scala"), col("hits_js"),
           col("guessed"), col("mismatch"))
         .orderBy("doc_id", "block_idx")
-    }),
+    })(
+      // hit counts via the same non-overlapping replace arithmetic and
+      // the SAME explicit CASE-chain argmax — identical integers, then
+      // identical verdicts, or the hash breaks
+      s"""$MdBlocksCtes,
+         | relab AS (SELECT doc_id, block_idx,
+         |   CASE WHEN doc_id % 23 = 0 AND lang_tag = 'python' THEN 'scala'
+         |        ELSE lang_tag END AS lang_tag, code FROM md_blocks),
+         | hits AS (SELECT doc_id, block_idx, lang_tag, code,
+         |   CAST((length(code) - length(replace(code, 'print(', ''))) // 6 +
+         |        (length(code) - length(replace(code, 'lambda ', ''))) // 7 +
+         |        (length(code) - length(replace(code, 'elif ', ''))) // 5 AS BIGINT) AS hits_python,
+         |   CAST((length(code) - length(replace(code, 'val ', ''))) // 4 +
+         |        (length(code) - length(replace(code, 'object ', ''))) // 7 +
+         |        (length(code) - length(replace(code, 'case class', ''))) // 10 AS BIGINT) AS hits_scala,
+         |   CAST((length(code) - length(replace(code, 'function ', ''))) // 9 +
+         |        (length(code) - length(replace(code, 'const ', ''))) // 6 +
+         |        (length(code) - length(replace(code, 'console.', ''))) // 8 AS BIGINT) AS hits_js
+         |   FROM relab),
+         | guessed AS (SELECT *,
+         |   CASE WHEN hits_python >= hits_scala AND hits_python >= hits_js AND hits_python > 0 THEN 'python'
+         |        WHEN hits_scala >= hits_js AND hits_scala > 0 THEN 'scala'
+         |        WHEN hits_js > 0 THEN 'js'
+         |        ELSE '' END AS guessed FROM hits)
+         |SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, lang_tag, code,
+         | hits_python, hits_scala, hits_js, guessed,
+         | (lang_tag IN ('python', 'scala', 'js') AND guessed <> ''
+         |  AND guessed <> lang_tag) AS mismatch
+         |FROM guessed ORDER BY doc_id, block_idx""".stripMargin),
     // the document-level fence audit: closed-block count vs raw ```
     // marker parity — independent arithmetic cross-checking the
     // extractor (marks == 2·n_blocks exactly when every fence closes;
     // the %31 truncation class must read odd)
-    "markdown_fence_audit" -> ((s, d) => {
+    Q("markdown_fence_audit", (s, d) => {
       import graft.operators.Markdown
       Markdown.fenceAudit(Markdown.mdFromDocs(t(s, d).documents))
         .orderBy("doc_id")
-    }),
+    })(
+      // marker parity from the block arithmetic: 2·blocks (+1 for the
+      // planted unclosed fence) — independent of both regexes
+      // closed-form from the fixture arithmetic: each planted block is 2
+      // line-anchored markers (backtick or tilde alike), each unclosed
+      // arm (%31 backtick, %41 tilde) is 1; the %5 INLINE ``` arm is
+      // deliberately absent — a mid-line marker must not count, and a
+      // mark-anywhere extractor hash-mismatches on exactly that class
+      s"""WITH mdd AS (SELECT doc_id, doc_id % 4 AS c4, doc_id % 19 = 0 AS hasb2,
+         |    doc_id % 31 = 0 AS uncb, doc_id % 41 = 0 AS unct FROM documents),
+         | nb AS (SELECT doc_id,
+         |   (CASE WHEN c4 IN (0, 1, 2) THEN 1 ELSE 0 END) +
+         |   (CASE WHEN hasb2 THEN 1 ELSE 0 END) AS n_blocks, uncb, unct FROM mdd)
+         |SELECT doc_id, CAST(n_blocks AS BIGINT) AS n_blocks,
+         | CAST(2 * n_blocks + CASE WHEN uncb THEN 1 ELSE 0 END
+         |   + CASE WHEN unct THEN 1 ELSE 0 END AS BIGINT) AS fence_marks,
+         | (uncb OR unct) AS unclosed
+         |FROM nb ORDER BY doc_id""".stripMargin),
     // chat-history truncation: system turns reserved first, then
     // non-system turns kept from the LAST backwards while the budget
     // holds — kept turns always a conversation suffix, never a split
     // turn; budget 12 actually truncates at fixture turn sizes
-    "sft_context_truncation" -> ((s, d) => {
+    Q("sft_context_truncation", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.truncateContext(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 12L)
         .orderBy("conv_id", "turn_idx")
-    }),
+    })(
+      // the reserved-system + descending running-sum rule in plain SQL
+      s"""$SftTurnsCtes,
+         | ctt AS (SELECT conv_id, turn_idx, role,
+         |   CAST((length(content) + 3) // 4 AS BIGINT) AS tokens,
+         |   role = 'system' AS is_sys FROM sft_turns),
+         | csys AS (SELECT conv_id,
+         |   CAST(sum(CASE WHEN is_sys THEN tokens ELSE 0 END) AS BIGINT) AS sys_tokens
+         |   FROM ctt GROUP BY conv_id),
+         | crev AS (SELECT t.conv_id, t.turn_idx, t.role, t.tokens, t.is_sys, s.sys_tokens,
+         |   CAST(sum(CASE WHEN t.is_sys THEN 0 ELSE t.tokens END) OVER (
+         |     PARTITION BY t.conv_id ORDER BY t.turn_idx DESC
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rev_cum
+         |   FROM ctt t JOIN csys s USING (conv_id))
+         |SELECT conv_id, turn_idx, role, tokens,
+         | (is_sys OR sys_tokens + rev_cum <= 12) AS kept
+         |FROM crev ORDER BY conv_id, turn_idx""".stripMargin),
     // eval-set leakage at the SFT stage: the decontaminate machinery
     // (trigram-shingle overlap, 8-byte hashed keys) turned on USER
     // PROMPTS — benchmark questions leaking into fine-tune prompts is
@@ -3241,7 +6482,7 @@ object SparkEntry {
     // (the shared transcript fixture is untouched), the benchmark is
     // a literal eval item, and the flag must land exactly on the
     // planted class — threshold semantics included (>= 2 shingles)
-    "sft_prompt_decontamination" -> ((s, d) => {
+    Q("sft_prompt_decontamination", (s, d) => {
       import graft.operators.PostTraining
       val turns = PostTraining.parseTurns(
         PostTraining.renderTranscripts(t(s, d).documents))
@@ -3256,13 +6497,41 @@ object SparkEntry {
       val benchmark = s.range(1).select(col("id").as("doc_id"),
         lit("eval item 7: the quick brown fox jumps over the lazy dog endeval").as("text"))
       Corpus.decontaminate(prompts, benchmark).orderBy("doc_id")
-    }),
+    })(
+      // prompt relation + planted phrase rebuilt closed-form, then the
+      // decontaminate twin's text-space shingle overlap (count of
+      // distinct TEXT shingles == count of distinct hashed shingles,
+      // the same collision budget the decontaminate twin documents)
+      s"""$SftTurnsCtes,
+         | prompts AS (SELECT conv_id AS doc_id,
+         |   CASE WHEN conv_id % 23 = 0
+         |        THEN string_agg(content, ' ' ORDER BY turn_idx) ||
+         |          ' the quick brown fox jumps over the lazy dog'
+         |        ELSE string_agg(content, ' ' ORDER BY turn_idx) END AS text
+         |   FROM sft_turns WHERE role = 'user' GROUP BY conv_id),
+         | ptoks AS (SELECT doc_id,
+         |   list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l
+         |   FROM prompts),
+         | ppos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i
+         |   FROM ptoks WHERE len(l) >= 3),
+         | psh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM ppos),
+         | btoks AS (SELECT list_filter(string_split_regex(
+         |     'eval item 7: the quick brown fox jumps over the lazy dog endeval',
+         |     '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l),
+         | bpos AS (SELECT l, unnest(generate_series(1, len(l) - 2)) AS i FROM btoks),
+         | bsh AS (SELECT DISTINCT l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM bpos),
+         | ov AS (SELECT s.doc_id, count(*) AS n_overlap
+         |   FROM psh s JOIN bsh USING (shingle) GROUP BY s.doc_id)
+         |SELECT p.doc_id, coalesce(ov.n_overlap, 0) AS n_overlap,
+         | coalesce(ov.n_overlap, 0) >= 2 AS contaminated
+         |FROM prompts p LEFT JOIN ov USING (doc_id)
+         |ORDER BY p.doc_id""".stripMargin),
     // rejection sampling (best-of-n): the argmax candidate per prompt
     // via the GroupedTopK physical operator (bounded per-key heaps —
     // never a full sort of the candidate pool), scores a deterministic
     // integer mix so the twin is exact; n_candidates reported per
     // prompt for acceptance-rate accounting
-    "best_of_n_selection" -> ((s, d) => {
+    Q("best_of_n_selection", (s, d) => {
       val samples = t(s, d).documents.select(
         (col("doc_id") % 127).as("prompt_id"),
         col("doc_id").as("sample_id"),
@@ -3271,39 +6540,81 @@ object SparkEntry {
         Seq(("score", true), ("sample_id", false)), k = 1)
       val n = samples.groupBy("prompt_id").agg(count(lit(1)).as("n_candidates"))
       best.join(n, Seq("prompt_id")).orderBy("prompt_id")
-    }),
+    })(
+      // the same argmax as a row_number window — the custom physical
+      // operator must agree with the SQL-standard form exactly
+      s"""WITH smp AS (SELECT doc_id % 127 AS prompt_id, doc_id AS sample_id,
+         |   (doc_id * 2654435761) % 1000003 AS score FROM documents),
+         | rk AS (SELECT prompt_id, sample_id, score,
+         |   row_number() OVER (PARTITION BY prompt_id ORDER BY score DESC, sample_id) AS rn,
+         |   count(*) OVER (PARTITION BY prompt_id) AS n_candidates FROM smp)
+         |SELECT prompt_id, sample_id, score, CAST(n_candidates AS BIGINT) AS n_candidates
+         |FROM rk WHERE rn = 1 ORDER BY prompt_id""".stripMargin),
     // preference-pair integrity: pairs grouped by the UNORDERED
     // (prompt, lo, hi) candidate key, orientation counts exposing
     // exact duplicates AND reversed-label conflicts, degenerate
     // (chosen==rejected) pairs counted per group — the fixture
     // plants all three classes deterministically
-    "preference_pair_audit" -> ((s, d) => {
+    Q("preference_pair_audit", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.preferenceAudit(
           PostTraining.preferencePairsFromDocs(t(s, d).documents))
         .orderBy("prompt", "lo", "hi")
-    }),
+    })(
+      // unordered-key grouping with orientation counts in plain SQL —
+      // least/greatest on ASCII strings, binary collation both engines
+      s"""$PrefPairsCtes
+         |SELECT prompt, least(chosen, rejected) AS lo, greatest(chosen, rejected) AS hi,
+         | count(*) AS n_pairs,
+         | CAST(sum(CASE WHEN chosen = rejected THEN 1 ELSE 0 END) AS BIGINT) AS n_degenerate,
+         | CAST(sum(CASE WHEN chosen <> rejected AND chosen = least(chosen, rejected)
+         |   THEN 1 ELSE 0 END) AS BIGINT) AS n_lo_chosen,
+         | CAST(sum(CASE WHEN chosen <> rejected AND chosen = greatest(chosen, rejected)
+         |   THEN 1 ELSE 0 END) AS BIGINT) AS n_hi_chosen,
+         | (sum(CASE WHEN chosen <> rejected AND chosen = least(chosen, rejected)
+         |    THEN 1 ELSE 0 END) > 0
+         |  AND sum(CASE WHEN chosen <> rejected AND chosen = greatest(chosen, rejected)
+         |    THEN 1 ELSE 0 END) > 0) AS conflicted
+         |FROM pref_pairs GROUP BY 1, 2, 3 ORDER BY prompt, lo, hi""".stripMargin),
     // length-bias screen over the preference relation: per-bucket
     // EXACT integer sum of len(chosen)−len(rejected) plus
     // longer/shorter/tie win counts — the "chosen is just longer"
     // reward-hacking signal, engine-exact (no float averaging)
-    "preference_length_bias" -> ((s, d) => {
+    Q("preference_length_bias", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.lengthBias(
           PostTraining.preferencePairsFromDocs(t(s, d).documents))
         .orderBy("bucket")
-    }),
+    })(
+      // exact-integer length-delta sums and win counts per bucket
+      s"""$PrefPairsCtes
+         |SELECT pair_id % 8 AS bucket, count(*) AS n_pairs,
+         | CAST(sum(length(chosen) - length(rejected)) AS BIGINT) AS len_delta_sum,
+         | CAST(sum(CASE WHEN length(chosen) > length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_longer,
+         | CAST(sum(CASE WHEN length(chosen) < length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_shorter,
+         | CAST(sum(CASE WHEN length(chosen) = length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_tie
+         |FROM pref_pairs GROUP BY 1 ORDER BY bucket""".stripMargin),
     // transitivity audit (VERDICT r16 #7): A≻B≻C≻A cycles within a
     // prompt — reward-model poison invisible to the pairwise audit —
     // via majority edges + one bounded per-prompt self-join chain;
     // the triple fixture plants cycles on exactly the base%5==0
     // prompts whose docs cover all three vote classes
-    "preference_cycle_audit" -> ((s, d) => {
+    Q("preference_cycle_audit", (s, d) => {
       import graft.operators.PostTraining
       PostTraining.preferenceCycles(
           PostTraining.preferenceTriplesFromDocs(t(s, d).documents))
         .orderBy("prompt")
-    }),
+    })(
+      // the planted-cycle prompts closed-form: a prompt cycles iff its
+      // base%5==0 AND its docs cover all three vote classes (class-2
+      // votes reversed close the A≻B≻C chain); candidate names from the
+      // same base arithmetic — the Spark side must find exactly these
+      // cycles via its edge self-join, nothing more
+      s"""WITH pt AS (SELECT DISTINCT doc_id % 89 AS base, doc_id % 3 AS cl FROM documents),
+         | full3 AS (SELECT base FROM pt GROUP BY base HAVING count(*) = 3)
+         |SELECT 'q ' || base AS prompt,
+         | 'cand a ' || base AS a, 'cand b ' || base AS b, 'cand c ' || base AS c
+         |FROM full3 WHERE base % 5 = 0 ORDER BY prompt""".stripMargin),
     // cross-corpus paragraph-frequency dedup (the MassiveText stage):
     // every page gets the SAME link-free cookie-banner paragraph
     // injected — the boilerplate class the per-page density gate
@@ -3313,17 +6624,27 @@ object SparkEntry {
     // twin rebuilds the paragraph relation closed-form (12-word slices
     // + the shared constant) and runs the same df-filter in SQL, so
     // the hash proves block extraction AND the frequency cut
-    "paragraph_dedup" -> ((s, d) => {
+    Q("paragraph_dedup", (s, d) => {
       val pages = Html.pageFromDocs(t(s, d).documents)
         .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
           java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
           .as("html"))
       Dedup.paragraphDedup(Html.extractBlocks(pages)).orderBy("doc_id")
-    }),
+    })(
+      // paragraph relation rebuilt closed-form (12-word slices + the
+      // shared cookie constant from the SAME Scala object the fixture
+      // injects), then the df-filter and ordered reassembly in plain SQL
+      s"""$ParaRelCtes,
+         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para)
+         |SELECT p.doc_id, count(*) AS n_paras,
+         | count(*) FILTER (WHERE df <= 1) AS n_kept,
+         | coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
+         |FROM paras p JOIN dfr USING (para)
+         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin),
     // the crawl-native curation chain in ONE query: boilerplated pages
     // → block extraction → cross-corpus paragraph dedup → Gopher
     // word-level gate on the CLEANED text → context-window chunking
-    "crawl_curation_e2e" -> ((s, d) => {
+    Q("crawl_curation_e2e", (s, d) => {
       val pages = Html.pageFromDocs(t(s, d).documents)
         .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
           java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
@@ -3339,7 +6660,40 @@ object SparkEntry {
       Corpus.chunk(gated, size = 256)
         .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }) {
+      // the crawl-native curation chain end to end: boilerplated pages →
+      // block extraction → cross-corpus paragraph dedup → Gopher
+      // word-level gate on the CLEANED text → context-window chunking —
+      // one hash proves the whole curation path a crawl corpus actually
+      // takes. The twin rebuilds the deduped text closed-form and then
+      // computes gate features and chunks TEXTUALLY from it
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""$ParaRelCtes,
+         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
+         | dd AS (SELECT p.doc_id,
+         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
+         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
+         | tk AS (SELECT doc_id, text,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM dd),
+         | f AS (SELECT doc_id, text,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
+         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
+         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |  FROM tk),
+         | g AS (SELECT doc_id, text FROM f
+         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
+         | j AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
+         | c AS (SELECT doc_id, lang, text,
+         |    CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM j),
+         | u AS (SELECT doc_id, lang, text,
+         |    unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin
+    },
     // the WHOLE product in ONE hash: crawl containers in, training
     // manifest out. Boilerplated pages are framed into WARC-shaped
     // containers and parsed back (the crawl front door), blocks are
@@ -3355,7 +6709,7 @@ object SparkEntry {
     // Every stage reuses an operator whose twin is already proven;
     // the one hash proves the COMPOSITION (stage contracts line up,
     // no stage re-orders or drops rows it shouldn't)
-    "warc_to_training_e2e" -> ((s, d) => {
+    Q("warc_to_training_e2e", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
       val pages = Html.pageFromDocs(docs)
@@ -3420,7 +6774,95 @@ object SparkEntry {
           col("pack_id"), col("start_off"), col("phase"), col("curr_shard"),
           col("seq"), col("w_est"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }) {
+      // the full-build twin: every stage's proven CTE chain stitched
+      // end to end — paragraph relation + df cut (paragraph_dedup),
+      // Gopher features (crawl_curation_e2e), solver arithmetic
+      // (mixture_solve), k+1 priority pick (priority_sample), histogram
+      // percent-rank curriculum (curriculum_shards), and the recursive
+      // BPE applier + shard-cumsum packing (packed_bpe). The WARC
+      // framing round-trip is byte-lossless (warc_ingest's proof), so
+      // the twin starts from the same paragraph relation
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
+         | dd AS (SELECT p.doc_id,
+         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
+         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
+         | tk AS (SELECT doc_id, text,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM dd),
+         | f AS (SELECT doc_id, text,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
+         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
+         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |  FROM tk),
+         | g AS (SELECT doc_id, text FROM f
+         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
+         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
+         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
+         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
+         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
+         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
+         | rates AS (SELECT lang,
+         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
+         |  FROM pj),
+         | mixed AS (SELECT mj.doc_id, mj.text FROM mj JOIN rates r ON mj.lang = r.lang
+         |          WHERE $HashPermille < r.keep_permille),
+         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
+         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
+         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
+         |   FROM mixed WHERE length(text) > 0),
+         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
+         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
+         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
+         | samp AS (SELECT doc_id, weight,
+         |   round(greatest(CAST(weight AS DOUBLE),
+         |     CASE WHEN (SELECT cnt FROM stats) = 101
+         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
+         |          ELSE 0.0 END), 6) AS w_est
+         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
+         | csc AS (SELECT doc_id, weight AS score FROM samp),
+         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
+         | cr AS (SELECT score,
+         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
+         |   sum(cnt) OVER () AS n FROM ch1),
+         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
+         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
+         | cj AS (SELECT csc.doc_id,
+         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
+         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
+         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
+         |  FROM csc JOIN cpr USING (score)),
+         | curr AS (SELECT doc_id, phase, curr_shard,
+         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
+         |  FROM cj),
+         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
+         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
+         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
+         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
+         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
+         |$BpeApplyCte,
+         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
+         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
+         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
+         |        coalesce(cb.bpe_n, 0) AS n_tokens
+         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
+         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
+         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
+         |   FROM tok)
+         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
+         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
+         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
+         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
+         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
+    },
     // the whole build STREAMED: the same crawl-to-manifest chain with
     // containers arriving one per micro-batch. Paragraph dedup flips
     // to FIRST-OCCURRENCE-WINS (a stream cannot retract landed docs;
@@ -3430,7 +6872,7 @@ object SparkEntry {
     // — yesterday's solve applied to today's stream; the sampler
     // lands k+1-row frontiers per batch and finishes exactly after
     // the drain; curriculum + BPE packing run on the ≤k-doc sample
-    "streaming_warc_to_training" -> ((s, d) => {
+    Q("streaming_warc_to_training", (s, d) => {
       val src = stageLayout(s, d, "warctrainstream") { tmp =>
         val docs = t(s, d).documents
         val id = col("doc_id")
@@ -3518,7 +6960,110 @@ object SparkEntry {
           col("pack_id"), col("start_off"), col("phase"), col("curr_shard"),
           col("seq"), col("w_est"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }) {
+      // the streamed build's twin: the batch chain (dd..rates) supplies
+      // the POLICY SNAPSHOT rates; the corpus itself takes the
+      // first-occurrence-wins dedup — one window ordered by the stream
+      // arrival order (container_id = doc_id % 8, then doc_id, pos) —
+      // and the sampler/curriculum/packing CTEs run on it
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
+         | dd AS (SELECT p.doc_id,
+         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
+         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
+         | tk AS (SELECT doc_id, text,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM dd),
+         | f AS (SELECT doc_id, text,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
+         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
+         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |  FROM tk),
+         | g AS (SELECT doc_id, text FROM f
+         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
+         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
+         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
+         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
+         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
+         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
+         | rates AS (SELECT lang,
+         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
+         |  FROM pj),
+         | rs AS (SELECT doc_id, pos, para,
+         |    row_number() OVER (PARTITION BY para ORDER BY doc_id % 8, doc_id, pos) AS rn FROM paras),
+         | sdd AS (SELECT doc_id,
+         |    coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE rn = 1), '') AS text
+         |  FROM rs GROUP BY doc_id),
+         | stk AS (SELECT doc_id, text,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk2
+         |  FROM sdd),
+         | sf AS (SELECT doc_id, text,
+         |    CAST(len(tk2) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk2, x -> length(x))) AS DOUBLE) / len(tk2) AS mean_word_len,
+         |    CAST(len(list_filter(tk2, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk2) AS alpha_frac,
+         |    CAST(len(list_filter(tk2, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |  FROM stk),
+         | sg AS (SELECT doc_id, text FROM sf
+         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
+         | smj AS (SELECT sg.doc_id, d3.lang, sg.text FROM sg JOIN documents d3 ON sg.doc_id = d3.doc_id),
+         | mixed AS (SELECT smj.doc_id, smj.text FROM smj JOIN rates r2 ON smj.lang = r2.lang
+         |          WHERE $HashPermille < r2.keep_permille),
+         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
+         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
+         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
+         |   FROM mixed WHERE length(text) > 0),
+         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
+         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
+         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
+         | samp AS (SELECT doc_id, weight,
+         |   round(greatest(CAST(weight AS DOUBLE),
+         |     CASE WHEN (SELECT cnt FROM stats) = 101
+         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
+         |          ELSE 0.0 END), 6) AS w_est
+         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
+         | csc AS (SELECT doc_id, weight AS score FROM samp),
+         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
+         | cr AS (SELECT score,
+         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
+         |   sum(cnt) OVER () AS n FROM ch1),
+         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
+         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
+         | cj AS (SELECT csc.doc_id,
+         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
+         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
+         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
+         |  FROM csc JOIN cpr USING (score)),
+         | curr AS (SELECT doc_id, phase, curr_shard,
+         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
+         |  FROM cj),
+         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
+         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
+         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
+         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
+         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
+         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
+         |        WHERE length(t.tok) > 0),
+         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
+         |$BpeApplyCte,
+         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
+         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
+         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
+         |        coalesce(cb.bpe_n, 0) AS n_tokens
+         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
+         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
+         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
+         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
+         |   FROM tok)
+         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
+         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
+         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
+         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
+         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
+    },
     // C4's line-level rules as an operator: the fixture decorates each
     // doc's 12-word lines with closed-form dirt — every 5th line loses
     // its terminal punctuation, every 7th gains a brace, and four
@@ -3528,26 +7073,61 @@ object SparkEntry {
     // none of the tells. The twin builds the same lines and applies
     // the same rules as independent SQL (regexp + split), so the hash
     // proves the rule engine, not the fixture
-    "c4_line_filter" -> ((s, d) =>
-      TextQuality.c4LineFilter(c4LineFixture(s, d)).orderBy("doc_id")),
+    Q("c4_line_filter", (s, d) =>
+      TextQuality.c4LineFilter(c4LineFixture(s, d)).orderBy("doc_id"))(
+      // the same decorated lines built by the fixture's arithmetic, then
+      // the C4 rules applied as INDEPENDENT SQL (regexp + split + tells)
+      s"""$C4LinesCtes,
+        | k AS (SELECT doc_id, pos, line,
+        |    (regexp_matches(line, '[.!?"]$$')
+        |     AND len(list_filter(string_split_regex(line, '\\s+'), x -> length(x) > 0)) >= 5
+        |     AND NOT contains(lower(line), 'javascript')
+        |     AND NOT contains(lower(line), 'lorem ipsum')
+        |     AND NOT contains(line, '{')) AS keep
+        |  FROM lines)
+        |SELECT doc_id, count(*) AS n_lines, count(*) FILTER (WHERE keep) AS n_kept,
+        | coalesce(string_agg(line, ' ' ORDER BY pos) FILTER (WHERE keep), '') AS text,
+        | count(*) FILTER (WHERE keep) >= 3 AS page_kept
+        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // C4's OTHER half: span-level decontamination with REMOVAL — every
     // 3-line span shared with the benchmark slice (doc_id%97==0, the
     // decontaminate device) is cut from the corpus docs and the rest
     // reassembled; the injected tell lines are identical across docs,
     // so cross-doc spans genuinely fire
-    "span_scrub" -> ((s, d) => {
+    Q("span_scrub", (s, d) => {
       val lines = c4LineFixture(s, d)
       Corpus.spanScrub(
         lines.where(col("doc_id") % 97 =!= 0),
         lines.where(col("doc_id") % 97 === 0)).orderBy("doc_id")
-    }),
+    })(
+      // spans via lead() windows over the shared line relation; removal
+      // set exploded from contaminated span starts; string equality
+      // where the engine uses the 8-byte span hash
+      s"""$C4LinesCtes,
+         | cl AS (SELECT * FROM lines WHERE doc_id % 97 <> 0),
+         | bl AS (SELECT * FROM lines WHERE doc_id % 97 = 0),
+         | cs AS (SELECT doc_id, pos AS start,
+         |    line || ' ' || lead(line, 1) OVER win || ' ' || lead(line, 2) OVER win AS txt,
+         |    lead(line, 2) OVER win IS NOT NULL AS okspan
+         |  FROM cl WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+         | bs AS (SELECT DISTINCT txt FROM (
+         |    SELECT line || ' ' || lead(line, 1) OVER win || ' ' || lead(line, 2) OVER win AS txt,
+         |      lead(line, 2) OVER win IS NOT NULL AS okspan
+         |    FROM bl WINDOW win AS (PARTITION BY doc_id ORDER BY pos)) WHERE okspan),
+         | rm AS (SELECT DISTINCT c.doc_id, u.p AS pos
+         |   FROM (SELECT doc_id, start, txt FROM cs WHERE okspan) c
+         |   JOIN bs USING (txt), unnest(generate_series(c.start, c.start + 2)) AS u(p))
+         |SELECT l.doc_id, count(*) AS n_lines, count(r.pos) AS n_removed,
+         | coalesce(string_agg(l.line, ' ' ORDER BY l.pos) FILTER (WHERE r.pos IS NULL), '') AS text
+         |FROM cl l LEFT JOIN rm r ON l.doc_id = r.doc_id AND l.pos = r.pos
+         |GROUP BY l.doc_id ORDER BY l.doc_id""".stripMargin),
     // latest-fetch snapshot dedup: two crawl snapshots of every third
     // URL (the re-fetch carries an appended marker word and a later
     // fetch_ts), one max((ts, payload)) per URL keeps the newest, and
     // the proven extractor runs on the WINNING html — the twin derives
     // (url, ts, n_snapshots, text) closed-form, so the hash proves the
     // argmax picked the right snapshot's content everywhere
-    "crawl_snapshot_dedup" -> ((s, d) => {
+    Q("crawl_snapshot_dedup", (s, d) => {
       val docs = t(s, d).documents
       def meta(pages: DataFrame, tsBase: Long) = {
         val id = col("doc_id")
@@ -3565,21 +7145,50 @@ object SparkEntry {
         .select(col("doc_id").as("url"), col("fetch_ts"), col("n_snapshots"),
           col("main_text"))
         .orderBy("url")
-    }),
+    })(
+      // closed-form latest-snapshot expectation: every third doc was
+      // re-fetched later with the marker appended; text length 48+ means
+      // ws is never empty, but the empty arm stays for smaller SFs
+      s"""WITH w AS (SELECT doc_id,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS ws
+         |  FROM documents)
+         |SELECT 'https://' || ${sqlHost(s"doc_id%${Html.SiteSpace}")} || '/doc/' || doc_id AS url,
+         | CAST(CASE WHEN doc_id % 3 = 0 THEN 1700500000 + doc_id
+         |           ELSE 1700000000 + doc_id END AS BIGINT) AS fetch_ts,
+         | CAST(CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_snapshots,
+         | CASE WHEN doc_id % 3 = 0 THEN
+         |        CASE WHEN len(ws) > 0 THEN array_to_string(ws, ' ') || ' updatemarker'
+         |             ELSE 'updatemarker' END
+         |      ELSE array_to_string(ws, ' ') END AS main_text
+         |FROM w ORDER BY url""".stripMargin),
     // anchor-text aggregation: how the corpus DESCRIBES each target
     // page (the off-page retrieval signal) — the fixture gives every
     // source its own anchor wording (first word + target id), and the
     // twin derives all of it from doc_id arithmetic, so the hash
     // proves paired href/text extraction, entity decode, self-link
     // drop, and the per-target distinct/min aggregation
-    "anchor_texts" -> ((s, d) =>
-      Html.anchorTexts(Html.anchorPageFromDocs(t(s, d).documents)).orderBy("dst")),
+    Q("anchor_texts", (s, d) =>
+      Html.anchorTexts(Html.anchorPageFromDocs(t(s, d).documents)).orderBy("dst")) {
+      // every anchor string derived closed-form: source's first word +
+      // target id, over the (7k+3, 13k+5, k+1) mod m link map
+      val m = Html.DefaultLinkSpace
+      s"""WITH w AS (SELECT doc_id,
+         |    coalesce(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0)[1], '') AS fw
+         |  FROM documents),
+         | e AS (SELECT doc_id AS src, fw,
+         |    unnest([(doc_id*7+3)%$m, (doc_id*13+5)%$m, (doc_id+1)%$m]) AS dst FROM w),
+         | p AS (SELECT src, CAST(dst AS BIGINT) AS dst, trim(fw || ' ' || dst) AS anchor
+         |   FROM e WHERE dst <> src)
+         |SELECT dst, count(DISTINCT src) AS n_inlinks,
+         | count(DISTINCT anchor) AS n_anchor_variants, min(anchor) AS top_anchor
+         |FROM p GROUP BY dst ORDER BY dst""".stripMargin
+    },
     // the corpus quality DASHBOARD: per source, document counts, mean
     // learned-classifier llr (DECIMAL-summed — rounded llrs are exact
     // 6-dp decimals), Gopher-gate pass fraction, and mean word count —
     // the report a curation team actually reads when deciding which
     // sources to keep
-    "source_quality_report" -> ((s, d) => {
+    Q("source_quality_report", (s, d) => {
       val docs = t(s, d).documents
       val nb = TextQuality.nbLogLikelihoodRatio(nbLabeled(s, d))
         .select(col("doc_id"), col("llr"))
@@ -3594,33 +7203,113 @@ object SparkEntry {
           (count(when(col("keep"), 1)).cast("double") / count(lit(1))).as("keep_frac"),
           (sum(col("n_words")).cast("double") / count(lit(1))).as("mean_words"))
         .orderBy("source")
-    }),
+    }) {
+      // NB chain + Gopher features joined per doc, rolled up per source
+      // with DECIMAL-safe means
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""$NbCtes,
+         | gtk AS (SELECT doc_id,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM documents),
+         | gf AS (SELECT doc_id,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    (CAST(len(tk) AS BIGINT) BETWEEN 50 AND 100000
+         |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) >= 3.0
+         |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) <= 10.0
+         |     AND CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) >= 0.8
+         |     AND len(list_filter(tk, x -> list_contains([$stops], lower(x)))) >= 2) AS keep
+         |  FROM gtk)
+         |SELECT d3.source, count(*) AS n_docs,
+         | round(CAST(sum(CAST(nb.llr AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS mean_llr,
+         | CAST(count(*) FILTER (WHERE gf.keep) AS DOUBLE) / count(*) AS keep_frac,
+         | CAST(sum(gf.n_words) AS DOUBLE) / count(*) AS mean_words
+         |FROM documents d3 JOIN nb USING (doc_id) JOIN gf USING (doc_id)
+         |GROUP BY d3.source ORDER BY d3.source""".stripMargin
+    },
     // corpus drift monitoring: per-term KL(new||old) contributions
     // between the even/odd doc_id slices (the stand-in for two crawl
     // snapshots), top positive movers — catches a source going stale
     // or a scraper change shifting the language
-    "corpus_drift" -> ((s, d) =>
+    Q("corpus_drift", (s, d) =>
       TextQuality.tokenDistributionDrift(
-        t(s, d).documents.withColumn("is_new", col("doc_id") % 2 === 1))),
+        t(s, d).documents.withColumn("is_new", col("doc_id") % 2 === 1)))(
+      // the same smoothed per-term KL chain: union-vocab counts, one
+      // scalar row, identically-associated double expression per term
+      corpusDriftTwin),
     // the FULL Gopher n-gram repetition gate: top-gram char coverage
     // for n=2..4, duplicated-gram char coverage for n=5..10, all nine
     // sizes in one explode pass; the twin is GENERATED from the same
     // band constants
-    "gopher_repetition" -> ((s, d) =>
-      TextQuality.gopherRepetitionGate(t(s, d).documents).orderBy("doc_id")),
+    Q("gopher_repetition", (s, d) =>
+      TextQuality.gopherRepetitionGate(t(s, d).documents).orderBy("doc_id")) {
+      // nine gram relations, the (count, chars, gram) deterministic top
+      // pick, and the band conjunction — all generated from the same
+      // Seq((n, threshold)) constants the operator defaults to
+      val topBands = Seq(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
+      val dupBands = Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)
+      val gramCtes = (topBands ++ dupBands).map(_._1).map(n =>
+        s"""SELECT doc_id, total_chars, $n AS n,
+           |   array_to_string(list_slice(ws, i, i + ${n - 1}), ' ') AS gram
+           | FROM t, unnest(generate_series(1, len(ws) - ${n - 1})) AS u(i)
+           | WHERE len(ws) >= $n""".stripMargin).mkString("(", ")\n UNION ALL (", ")")
+      val wideCols = (topBands.map { case (n, _) =>
+        s"coalesce(max(CASE WHEN n = $n THEN top_frac END), 0.0) AS top_${n}_frac"
+      } ++ dupBands.map { case (n, _) =>
+        s"coalesce(max(CASE WHEN n = $n THEN dup_frac END), 0.0) AS dup_${n}_frac"
+      }).mkString(",\n    ")
+      val keep = (topBands.map { case (n, t) => s"top_${n}_frac <= CAST($t AS DOUBLE)" } ++
+        dupBands.map { case (n, t) => s"dup_${n}_frac <= CAST($t AS DOUBLE)" })
+        .mkString(" AND ")
+      s"""WITH t0 AS (SELECT doc_id,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS ws
+         |  FROM documents),
+         | t AS (SELECT doc_id, ws, list_sum(list_transform(ws, x -> length(x))) AS total_chars
+         |  FROM t0 WHERE len(ws) >= 1),
+         | g AS ($gramCtes),
+         | c AS (SELECT doc_id, n, gram, any_value(total_chars) AS total_chars,
+         |    count(*) AS c, length(gram) - (n - 1) AS chars
+         |  FROM g GROUP BY doc_id, n, gram),
+         | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id, n
+         |    ORDER BY c DESC, chars DESC, gram DESC) AS rn FROM c),
+         | p AS (SELECT doc_id, n,
+         |    CAST(max(CASE WHEN rn = 1 THEN c * chars END) AS DOUBLE) / any_value(total_chars) AS top_frac,
+         |    CAST(coalesce(sum(CASE WHEN c >= 2 THEN c * chars END), 0) AS DOUBLE) / any_value(total_chars) AS dup_frac
+         |  FROM r GROUP BY doc_id, n),
+         | wdf AS (SELECT doc_id,
+         |    $wideCols
+         |  FROM p GROUP BY doc_id)
+         |SELECT *, ($keep) AS keep FROM wdf ORDER BY doc_id""".stripMargin
+    },
     // Gopher's word-level document gate: count/length/alpha/stopword
     // bands computed as exact integer counts with single IEEE
     // divisions, and the conjunction flag — the twin recomputes every
     // feature and band in SQL from the same constants
-    "gopher_rules" -> ((s, d) =>
-      TextQuality.gopherQualityGate(t(s, d).documents).orderBy("doc_id")),
+    Q("gopher_rules", (s, d) =>
+      TextQuality.gopherQualityGate(t(s, d).documents).orderBy("doc_id")) {
+      // every Gopher feature and band recomputed in SQL from the same
+      // constants (stop list generated from the Scala object)
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""WITH tk AS (SELECT doc_id,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM documents),
+         | f AS (SELECT doc_id,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
+         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
+         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |  FROM tk)
+         |SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop_hits,
+         | (n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+         |  AND alpha_frac >= 0.8 AND n_stop_hits >= 2) AS keep
+         |FROM f ORDER BY doc_id""".stripMargin
+    },
     // crawl frontier scheduling: outlink targets with NO crawled page
     // (the fixture's link space is 2x the corpus id space, so half the
     // targets are genuinely uncrawled), prioritized by distinct
     // inlinks with a deterministic dst tiebreak, top-50 via
     // TakeOrdered — "what to fetch next", composed from the proven
     // edge extraction
-    "crawl_frontier" -> ((s, d) => {
+    Q("crawl_frontier", (s, d) => {
       val docs = t(s, d).documents
       val edges = Html.outlinks(Html.pageFromDocs(docs))
       val frontier = edges
@@ -3631,18 +7320,38 @@ object SparkEntry {
           org.apache.spark.sql.expressions.Window
             .orderBy(col("n_inlinks").desc, col("dst"))).cast("long"))
         .orderBy("priority")
-    }),
+    })(
+      // uncrawled targets of the closed-form edge map, ranked by
+      // distinct inlinks with the same deterministic tiebreak
+      s"""$CrawlEdgesCte,
+         | f AS (SELECT dst, count(DISTINCT src) AS n_inlinks FROM edges e
+         |   WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.doc_id = e.dst)
+         |   GROUP BY dst),
+         | r AS (SELECT dst, n_inlinks,
+         |   row_number() OVER (ORDER BY n_inlinks DESC, dst) AS priority FROM f)
+         |SELECT dst, n_inlinks, priority FROM r WHERE priority <= 50
+         |ORDER BY priority""".stripMargin),
     // politeness on top of the frontier: wave = per-host fetch rank
     // (a host is hit once per wave), slot = cross-host order within a
     // wave — the mercator host-queue interleave, relationally
-    "crawl_schedule" -> ((s, d) => {
+    Q("crawl_schedule", (s, d) => {
       val docs = t(s, d).documents
       val frontier = Html.outlinks(Html.pageFromDocs(docs))
         .join(docs.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
         .groupBy(col("dst")).agg(countDistinct(col("src")).as("n_inlinks"))
         .withColumn("host", col("dst") % Html.SiteSpace)
       Html.politeSchedule(frontier).orderBy("dst")
-    }),
+    })(
+      s"""$CrawlEdgesCte,
+         | fr AS (SELECT e.dst, count(DISTINCT e.src) AS n_inlinks
+         |        FROM edges e LEFT JOIN documents d ON d.doc_id = e.dst
+         |        WHERE d.doc_id IS NULL GROUP BY e.dst),
+         | w1 AS (SELECT dst, n_inlinks, dst % ${Html.SiteSpace} AS host FROM fr),
+         | w2 AS (SELECT dst, n_inlinks, host,
+         |        CAST(row_number() OVER (PARTITION BY host ORDER BY n_inlinks DESC, dst) AS BIGINT) AS wave FROM w1)
+         |SELECT dst, n_inlinks, host, wave,
+         | CAST(row_number() OVER (PARTITION BY wave ORDER BY n_inlinks DESC, dst) AS BIGINT) AS slot
+         |FROM w2 ORDER BY dst""".stripMargin),
     // robots.txt end to end: per-host files built closed-form (a
     // decoy badbot group that must be IGNORED, a comment, an inert
     // /private/ rule, and k%4-keyed /doc/ rules incl. an Allow that
@@ -3650,7 +7359,7 @@ object SparkEntry {
     // every page URL gets the longest-prefix-match verdict — the twin
     // derives rules and verdicts from the same arithmetic, so the
     // hash proves group handling, parsing, and match resolution
-    "robots_filter" -> ((s, d) => {
+    Q("robots_filter", (s, d) => {
       val docs = t(s, d).documents
       val hosts = docs.select((col("doc_id") % Html.SiteSpace).as("k")).distinct()
       val content = concat(
@@ -3666,12 +7375,34 @@ object SparkEntry {
         Html.fixtureHost(col("doc_id") % Html.SiteSpace),
         lit("/doc/"), col("doc_id").cast("string")).as("url"))
       Html.robotsFilter(urls, rules).orderBy("url")
-    }),
+    }) {
+      // the k%4-keyed rule table and the longest-prefix verdict derived
+      // directly (no parsing — that is what the Spark side must prove)
+      val ss = Html.SiteSpace
+      s"""WITH hosts AS (SELECT DISTINCT doc_id % $ss AS k FROM documents),
+         | rules AS (
+         |   SELECT k, '/private/' AS prefix, false AS allow FROM hosts
+         |   UNION ALL SELECT k, '/doc/', false FROM hosts WHERE k % 4 = 0
+         |   UNION ALL SELECT k, '/doc/1', false FROM hosts WHERE k % 4 = 1
+         |   UNION ALL SELECT k, '/doc/12', true FROM hosts WHERE k % 4 = 1
+         |   UNION ALL SELECT k, '/doc/', true FROM hosts WHERE k % 4 = 2),
+         | urls AS (SELECT doc_id, doc_id % $ss AS k,
+         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || doc_id AS url,
+         |    '/doc/' || doc_id AS path
+         |   FROM documents),
+         | cand AS (SELECT u.url, r.prefix, r.allow
+         |   FROM urls u JOIN rules r USING (k) WHERE starts_with(u.path, r.prefix)),
+         | best AS (SELECT url, prefix, allow, row_number() OVER (PARTITION BY url
+         |    ORDER BY length(prefix) DESC, allow DESC, prefix DESC) AS rn FROM cand)
+         |SELECT u.url, coalesce(b.allow, true) AS allowed, coalesce(b.prefix, '') AS rule
+         |FROM urls u LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (url)
+         |ORDER BY u.url""".stripMargin
+    },
     // Hamming NEAR-dup pairs over the same aHash fixture: banded
     // candidates (lossless for dist<=3 by pigeonhole over 4 sixteen-bit
     // bands — wide bands keep buckets sparse at corpus scale), exact
     // bit_count verify — perceptual dedup's real form
-    "image_phash_near_dups" -> ((s, d) => {
+    Q("image_phash_near_dups", (s, d) => {
       val orig = Multimodal.pngMediaFromDocs(t(s, d).documents)
         .select(col("media_id"), col("content"))
       val variants = Multimodal
@@ -3679,7 +7410,17 @@ object SparkEntry {
         .select((col("media_id") + 1000000L).as("media_id"), col("content"))
       Multimodal.aHashNearDups(Multimodal.imageAHash(orig.unionByName(variants)))
         .orderBy("id_a", "id_b")
-    }),
+    })(
+      // the oracle may brute-force what the operator must not: all pairs
+      // with positional Hamming <= 6 over the same closed-form hashes
+      s"""$PhashBitsCtes,
+         | pairs AS (SELECT a.media_id AS id_a, b.media_id AS id_b,
+         |    CAST(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CASE WHEN substring(a.ahash, i, 1) <> substring(b.ahash, i, 1)
+         |           THEN 1 ELSE 0 END)) AS BIGINT) AS dist
+         |   FROM bits a JOIN bits b ON a.media_id < b.media_id)
+         |SELECT id_a, id_b, dist FROM pairs WHERE dist <= 3
+         |ORDER BY id_a, id_b""".stripMargin),
     // REAL-JPEG decode audit (r15): the dominant crawl image codec
     // through the same in-plan decode path as the PNG family. JPEG is
     // lossy, so the oracle pins exactly what the codec cannot move —
@@ -3688,26 +7429,39 @@ object SparkEntry {
     // closed-form pattern staying inside the bound (a verdict boolean
     // whose expected value is pinned; a broken decode flips it and the
     // hash gate screams)
-    "jpeg_decode_audit" -> ((s, d) => {
+    Q("jpeg_decode_audit", (s, d) => {
       Multimodal.jpegDecodeAudit(Multimodal.jpegMediaFromDocs(t(s, d).documents))
         .orderBy("media_id")
-    }),
+    })(
+      // lossy-codec invariants closed-form: dimensions are exact doc_id
+      // arithmetic; the marker/dims/luma verdicts are pinned TRUE (a
+      // broken decode path flips a boolean and the hash screams)
+      """SELECT doc_id AS media_id, true AS soi_ok, true AS eoi_ok,
+        | CAST(doc_id % 64 + 16 AS INTEGER) AS width,
+        | CAST(doc_id % 48 + 16 AS INTEGER) AS height,
+        | true AS dims_ok, true AS luma_ok
+        |FROM documents ORDER BY media_id""".stripMargin),
     // aHash drift of a lossy JPEG re-encode vs the PNG original —
     // perceptual dedup's premise as a measured per-image verdict: the
     // Hamming distance between the two aHashes stays inside the banded
     // near-dup join's working range (JpegSpec proves the bound over the
     // fixture's full 768-id pattern cycle, so it holds at any sf)
-    "jpeg_ahash_drift" -> ((s, d) => {
+    Q("jpeg_ahash_drift", (s, d) => {
       val docs = t(s, d).documents
       Multimodal.aHashDrift(
           Multimodal.pngMediaFromDocs(docs), Multimodal.jpegMediaFromDocs(docs))
         .select(col("media_id"), (col("dist") <= 16).as("drift_ok"))
         .orderBy("media_id")
-    }),
+    })(
+      // drift bound pinned TRUE per image — JpegSpec proves the bound
+      // over the fixture's full 768-id pattern cycle, so it holds at
+      // any scale factor
+      """SELECT doc_id AS media_id, true AS drift_ok
+        |FROM documents ORDER BY media_id""".stripMargin),
     // clipped-video dedup: every third clip also appears truncated to
     // its first frame (different container bytes); frame-0 aHash is a
     // prefix invariant, so the pair groups — byte digests cannot do it
-    "video_fingerprint_dedup" -> ((s, d) => {
+    Q("video_fingerprint_dedup", (s, d) => {
       val orig = Multimodal.videoFromDocs(t(s, d).documents)
         .select(col("media_id"), col("content"))
       val clipEnc = udf((id: Long) => Multimodal.encodeVideo(id, 1, 16, 12))
@@ -3719,13 +7473,27 @@ object SparkEntry {
         .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("keep_id"), col("n_copies"), col("vhash"))
         .orderBy("keep_id")
-    }),
+    })(
+      // frame-0 aHash closed-form: the fixture's 16x12 frame-0 pattern
+      // (pid*7) sampled at the 8x8 NN grid with the 64*v > sum bit rule
+      """WITH vids AS (
+        |   SELECT doc_id AS media_id, doc_id AS pid FROM documents
+        |   UNION ALL SELECT doc_id + 1000000, doc_id FROM documents WHERE doc_id % 3 = 0),
+        | lum AS (SELECT media_id, u.x, v.y,
+        |    (((pid * 7) % 256) * 31 + ((u.x * 16) // 8) * 7 + ((v.y * 12) // 8) * 13) % 256 AS lv
+        |   FROM vids, unnest(generate_series(0, 7)) u(x), unnest(generate_series(0, 7)) v(y)),
+        | s AS (SELECT media_id, sum(lv) AS total FROM lum GROUP BY media_id),
+        | bits AS (SELECT l.media_id,
+        |    string_agg(CASE WHEN 64 * l.lv > s.total THEN '1' ELSE '0' END, '' ORDER BY l.y * 8 + l.x) AS vhash
+        |   FROM lum l JOIN s USING (media_id) GROUP BY l.media_id)
+        |SELECT min(media_id) AS keep_id, count(*) AS n_copies, vhash
+        |FROM bits GROUP BY vhash ORDER BY keep_id""".stripMargin),
     // clipped-audio dedup: every fifth clip also appears HALF-LENGTH
     // re-encoded (different WAV bytes — byte digests cannot match it);
     // the truncation keeps the prefix waveform, so sign-bit prefix
     // fingerprints group original and clip; the twin evaluates the
     // closed-form waveform's sign bits directly
-    "audio_fingerprint_dedup" -> ((s, d) => {
+    Q("audio_fingerprint_dedup", (s, d) => {
       val orig = Multimodal.wavMediaFromDocs(t(s, d).documents)
         .select(col("media_id"), col("content"))
       val clipEnc = udf((id: Long) =>
@@ -3738,26 +7506,43 @@ object SparkEntry {
         .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("keep_id"), col("n_copies"), col("afp"))
         .orderBy("keep_id")
-    }),
+    })(
+      // 3-bit amplitude bands of the closed-form waveform over the first
+      // 64 samples; the clip rows reuse the original's formula because
+      // truncation does not change the prefix
+      """WITH clips AS (
+        |   SELECT doc_id AS media_id, doc_id AS pid FROM documents
+        |   UNION ALL SELECT doc_id + 1000000, doc_id FROM documents WHERE doc_id % 5 = 0),
+        | bits AS (SELECT media_id,
+        |    string_agg(CAST(((pid % 97) * 31 + i * 7919) % 65536 // 8192 AS VARCHAR), '' ORDER BY i) AS afp
+        |   FROM clips, unnest(generate_series(0, 63)) AS u(i) GROUP BY media_id)
+        |SELECT min(media_id) AS keep_id, count(*) AS n_copies, afp
+        |FROM bits GROUP BY afp ORDER BY keep_id""".stripMargin),
     // corrupt-payload tolerance: every tenth-ish image is truncated to
     // its 8-byte signature (undecodable); the safe audit reports
     // (decode_ok, dims-or-NULL) instead of killing the job — at 100 TB
     // one bad file must cost one row, not the run. The twin derives
     // ok-ness and dimensions from the same arithmetic
-    "media_decode_audit" -> ((s, d) => {
+    Q("media_decode_audit", (s, d) => {
       val media = Multimodal.pngMediaFromDocs(t(s, d).documents)
         .select(col("media_id"),
           when(col("media_id") % 10 === 3, substring(col("content"), 1, 8))
             .otherwise(col("content")).as("content"))
       Multimodal.imageDecodeAudit(media).orderBy("media_id")
-    }),
+    })(
+      // ok-ness and dimensions closed-form: corrupt iff media_id%10=3,
+      // dims from the fixture's %64/%48 arithmetic otherwise
+      """SELECT doc_id AS media_id, doc_id % 10 <> 3 AS decode_ok,
+        | CASE WHEN doc_id % 10 <> 3 THEN CAST(doc_id % 64 + 16 AS INT) END AS width,
+        | CASE WHEN doc_id % 10 <> 3 THEN CAST(doc_id % 48 + 16 AS INT) END AS height
+        |FROM documents ORDER BY media_id""".stripMargin),
     // perceptual image dedup: every fourth image also appears as a
     // nearest-neighbor 32x24 rescale (different PNG bytes, so byte
     // digests CANNOT match it) — the integer NN mapping composes
     // exactly, so the rescaled copy provably shares its original's
     // aHash and exact dedup on the hash finds the pair; the twin
     // computes every hash closed-form from the pattern formula
-    "image_phash_dedup" -> ((s, d) => {
+    Q("image_phash_dedup", (s, d) => {
       val orig = Multimodal.pngMediaFromDocs(t(s, d).documents)
         .select(col("media_id"), col("content"))
       val variants = Multimodal
@@ -3768,14 +7553,21 @@ object SparkEntry {
         .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("keep_id"), col("n_copies"), col("ahash"))
         .orderBy("keep_id")
-    }),
+    })(
+      // every aHash derived closed-form: the fixture pattern value at
+      // the 8x8 nearest-neighbor grid, bits by the integer-exact
+      // 64*v > sum rule, packed row-major; the rescaled variants reuse
+      // the ORIGINAL's formula because the NN mapping composes exactly
+      s"""$PhashBitsCtes
+         |SELECT min(media_id) AS keep_id, count(*) AS n_copies, ahash
+         |FROM bits GROUP BY ahash ORDER BY keep_id""".stripMargin),
     // crawl snapshot differencing: two closed-form snapshots (every
     // fifth URL dropped, every third re-rendered with a marker, an
     // extra host's pages added for every seventh doc) diffed by
     // content digest into added/removed/changed/unchanged — the
     // re-fetch scheduling view; the twin derives each URL's status
     // from the same arithmetic
-    "crawl_diff" -> ((s, d) => {
+    Q("crawl_diff", (s, d) => {
       val docs = t(s, d).documents
       def url(c: org.apache.spark.sql.Column) =
         concat(lit("https://"), Html.fixtureHost(c % Html.SiteSpace),
@@ -3791,7 +7583,19 @@ object SparkEntry {
         .select(concat(lit("https://extra.example.com/doc/"),
           col("doc_id").cast("string")).as("url"), col("html"))
       Dedup.snapshotDiff(oldSnap, newMain.unionByName(extra)).orderBy("url")
-    }),
+    })(
+      // each URL's diff status from the same %5 / %3 / %7 arithmetic the
+      // fixture snapshots are built with (removed wins over changed —
+      // a page absent from the new crawl has no content to compare)
+      s"""SELECT 'https://' || ${sqlHost(s"doc_id%${Html.SiteSpace}")} || '/doc/' || doc_id AS url,
+         | CASE WHEN doc_id % 5 = 0 THEN 'removed'
+         |      WHEN doc_id % 3 = 0 THEN 'changed'
+         |      ELSE 'unchanged' END AS status
+         |FROM documents
+         |UNION ALL
+         |SELECT 'https://extra.example.com/doc/' || doc_id AS url, 'added' AS status
+         |FROM documents WHERE doc_id % 7 = 0
+         |ORDER BY url""".stripMargin),
     // LEARNED quality scoring: multinomial Naive Bayes trained on a
     // deterministic curated-vs-crawl labeling (even source number =
     // positive class, doc_id%10<7 = train split), scored over the
@@ -3800,14 +7604,18 @@ object SparkEntry {
     // the LM perplexity cut. The twin replays the identical train +
     // score chain in SQL (12-dp rounded per-token evidence,
     // DECIMAL-summed), so the hash proves training AND inference
-    "nb_quality_score" -> ((s, d) =>
-      TextQuality.nbLogLikelihoodRatio(nbLabeled(s, d)).orderBy("doc_id")),
+    Q("nb_quality_score", (s, d) =>
+      TextQuality.nbLogLikelihoodRatio(nbLabeled(s, d)).orderBy("doc_id"))(
+      // the NB train + score chain replayed in SQL end to end
+      s"""$NbCtes
+         |SELECT doc_id, n_tokens, llr, llr > 0 AS pred_pos
+         |FROM nb ORDER BY doc_id""".stripMargin),
     // the classifier you can't trust is worse than none: reliability
     // diagram over the HELD-OUT split — sigmoid-calibrated llr binned
     // into 10 probability bins, mean predicted p vs empirical positive
     // rate per bin. exp() rounded(12) before the DECIMAL sum (the
     // decayed_counts device); every rate is one division of exact ints
-    "nb_calibration" -> ((s, d) => {
+    Q("nb_calibration", (s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(28, 12)
       val labeled = nbLabeled(s, d)
       val scored = TextQuality.nbLogLikelihoodRatio(labeled)
@@ -3826,35 +7634,78 @@ object SparkEntry {
           round(col("n_pos").cast("double") / col("n").cast("double"), 6))
         .withColumn("gap", round(abs(col("mean_p") - col("emp_rate")), 6))
         .orderBy("bin")
-    }),
+    })(
+      // held-out reliability bins off the same nb chain: identical
+      // sigmoid association, rounded(12) p DECIMAL-summed, rates as
+      // single divisions, gap from the two ROUNDED columns
+      s"""$NbCtes,
+         | ev AS (SELECT nb.llr, d.is_pos FROM nb JOIN d USING (doc_id) WHERE NOT d.is_train),
+         | pp AS (SELECT is_pos, round(1.0 / (1.0 + exp(-llr)), 12) AS p FROM ev),
+         | b AS (SELECT least(CAST(floor(p * 10) AS BIGINT), 9) AS bin, is_pos,
+         |        CAST(p AS DECIMAL(28,12)) AS p FROM pp),
+         | g AS (SELECT bin, count(*) AS n,
+         |        CAST(sum(CASE WHEN is_pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
+         |        round(CAST(sum(p) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_p
+         |        FROM b GROUP BY bin),
+         | g2 AS (SELECT bin, n, n_pos, mean_p,
+         |        round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS emp_rate FROM g)
+         |SELECT bin, n, n_pos, mean_p, emp_rate,
+         | round(abs(mean_p - emp_rate), 6) AS gap
+         |FROM g2 ORDER BY bin""".stripMargin),
     // the classifier ACTED ON: NB llr drives the per-language
     // histogram-two-pass quantile cut, beside perplexity_filter and
     // authority_filter on the same seam
-    "classifier_filter" -> ((s, d) => {
+    Q("classifier_filter", (s, d) => {
       val tt = t(s, d)
       val scored = tt.documents.select(col("doc_id"), col("lang"))
         .join(TextQuality.nbLogLikelihoodRatio(nbLabeled(s, d))
           .select(col("doc_id"), col("llr").as("score")), Seq("doc_id"))
       Corpus.quantileFilterByScore(scored, keep = 0.5,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
-    }),
+    })(
+      // NB llr through the same percent_rank cut as perplexity_filter
+      s"""$NbCtes,
+         | scd AS (SELECT d2.doc_id, d2.lang, nb.llr AS score
+         |         FROM documents d2 JOIN nb USING (doc_id)),
+         | r AS (SELECT doc_id, lang, score,
+         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin),
     // the eval every learned gate owes before it filters: exact
     // midrank-tie ROC AUC of the NB llr on the HELD-OUT split —
     // all-integer rank-sum (doubled midranks) with `below` from the
     // adaptive TotalOrder prefix sum, one double division at the end.
     // The twin keeps the naive cumulative-window formulation, so the
     // hash proves the decomposition, not just the arithmetic
-    "classifier_auc_eval" -> ((s, d) => {
+    Q("classifier_auc_eval", (s, d) => {
       val labeled = nbLabeled(s, d)
       val heldout = TextQuality.nbLogLikelihoodRatio(labeled)
         .join(labeled.select(col("doc_id"), col("is_pos"), col("is_train")), "doc_id")
         .where(!col("is_train"))
       TextQuality.rankAuc(heldout.withColumnRenamed("llr", "score"))
-    }),
+    })(
+      // the naive window formulation of midrank AUC — the Spark side
+      // must reproduce it through the histogram + TotalOrder prefix sum
+      s"""$NbCtes,
+         | ev AS (SELECT nb.llr AS s, d.is_pos FROM nb JOIN d USING (doc_id)
+         |        WHERE NOT d.is_train),
+         | h AS (SELECT s, count(*) AS c,
+         |    CAST(sum(CASE WHEN is_pos THEN 1 ELSE 0 END) AS BIGINT) AS c_pos
+         |   FROM ev GROUP BY s),
+         | p AS (SELECT s, c, c_pos, CAST(coalesce(sum(c) OVER (ORDER BY s
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS below
+         |   FROM h),
+         | a AS (SELECT
+         |    CAST(sum(CAST(c_pos AS HUGEINT) * (2*below + c + 1)) AS HUGEINT) AS tr,
+         |    CAST(sum(c_pos) AS BIGINT) AS n_pos,
+         |    CAST(sum(c - c_pos) AS BIGINT) AS n_neg FROM p)
+         |SELECT n_pos, n_neg,
+         | round(CAST(tr - CAST(n_pos AS HUGEINT)*(n_pos+1) AS DOUBLE) /
+         |       CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS DOUBLE), 6) AS auc
+         |FROM a""".stripMargin),
     // C4's document-level lexicon drop on CLEANED tokens (planted
     // spam words, one UPPERCASE+punctuated so the hash proves the
     // tokenizer path, not just the contains)
-    "badword_filter" -> ((s, d) => {
+    Q("badword_filter", (s, d) => {
       val id = col("doc_id")
       val planted = t(s, d).documents.withColumn("text",
         when(id % 11 === 0, concat(col("text"), lit(" casino")))
@@ -3862,27 +7713,65 @@ object SparkEntry {
           .otherwise(col("text")))
       TextQuality.badWordFilter(planted, Seq("casino", "viagra", "lottery"))
         .orderBy("doc_id")
-    }),
+    })(
+      // the planted-lexicon replay over the cleaned-token pipeline
+      s"""WITH pl AS (SELECT doc_id,
+         |   CASE WHEN doc_id % 11 = 0 THEN text || ' casino'
+         |        WHEN doc_id % 13 = 0 THEN text || ' VIAGRA!'
+         |        ELSE text END AS text FROM documents),
+         | w AS (SELECT doc_id, list_filter(list_transform(
+         |     list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+         |     t -> lower(regexp_replace(t, '$P', '', 'g'))), x -> length(x) > 0) AS ws
+         |   FROM pl),
+         | b AS (SELECT doc_id, CAST(len(list_filter(ws,
+         |     x -> list_contains(['casino','viagra','lottery'], x))) AS BIGINT) AS n_bad
+         |   FROM w)
+         |SELECT doc_id, n_bad, n_bad = 0 AS kept FROM b ORDER BY doc_id""".stripMargin),
     // logistic regression TRAINED IN THE ENGINE (3 full-batch GD steps
     // over the quality-feature ratios, driver holding only the d-sized
     // coefficient vector): the discriminative sibling of the NB
     // classifier. The twin unrolls the identical steps as CTEs — the
     // hash proves three rounds of distributed gradient aggregation
-    "logreg_quality_weights" -> ((s, d) => {
+    Q("logreg_quality_weights", (s, d) => {
       val w = TextQuality.logregTrainQuality(nbLabeled(s, d))
       val rows = TextQuality.LogregFeatures.zip(w).zipWithIndex
         .map { case ((f, wt), i) => (i.toLong, f, wt) }
       import s.implicits._
       rows.toDF("idx", "feature", "weight").orderBy("idx")
-    }),
+    })(
+      // three unrolled GD steps as CTEs; final weights unpivoted
+      s"""$LogregCtes
+         |SELECT * FROM (
+         |  SELECT CAST(0 AS BIGINT) AS idx, 'bias' AS feature, w1 AS weight FROM s3
+         |  UNION ALL SELECT CAST(1 AS BIGINT), 'stopword_ratio', w2 FROM s3
+         |  UNION ALL SELECT CAST(2 AS BIGINT), 'punct_ratio', w3 FROM s3
+         |  UNION ALL SELECT CAST(3 AS BIGINT), 'digit_ratio', w4 FROM s3
+         |  UNION ALL SELECT CAST(4 AS BIGINT), 'avg_token_len_d10', w5 FROM s3)
+         |ORDER BY idx""".stripMargin),
     // the trained model ACTED ON: held-out confusion + accuracy; the
     // scoring dot product is mul/add only, so the 0-threshold verdict
     // is bit-deterministic across engines
-    "logreg_quality_eval" -> ((s, d) => {
+    Q("logreg_quality_eval", (s, d) => {
       val labeled = nbLabeled(s, d)
       TextQuality.logregHeldoutEval(labeled,
         TextQuality.logregTrainQuality(labeled))
-    }),
+    })(
+      // held-out confusion off the same trained s3 weights; the scoring
+      // dot is mul/add only — bit-deterministic on both engines
+      s"""$LogregCtes,
+         | te AS (SELECT * FROM fx WHERE NOT is_train),
+         | scx AS (SELECT is_pos,
+         |    (s3.w1*x1 + s3.w2*x2 + s3.w3*x3 + s3.w4*x4 + s3.w5*x5) > 0 AS pred
+         |   FROM te, s3),
+         | cc AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
+         |    CAST(sum(CASE WHEN is_pos AND pred THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+         |    CAST(sum(CASE WHEN NOT is_pos AND pred THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+         |    CAST(sum(CASE WHEN is_pos AND NOT pred THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+         |    CAST(sum(CASE WHEN NOT is_pos AND NOT pred THEN 1 ELSE 0 END) AS BIGINT) AS tn
+         |   FROM scx)
+         |SELECT n_test, tp, fp, fn, tn,
+         | round(CAST(tp + tn AS DOUBLE) / CAST(n_test AS DOUBLE), 6) AS accuracy
+         |FROM cc""".stripMargin),
     // multi-signal quality fusion (the dedup_graph_fusion of the
     // quality ladder): NB llr, stopword density and mean token length
     // z-normalized off DECIMAL-summed moments and blended (+1, +1, −1)
@@ -3894,7 +7783,7 @@ object SparkEntry {
     // agreeing on the degenerate output. qualityEnsemble now fails
     // loud on sd = 0, and the registered blend uses avg_token_len,
     // which varies at all SFs.)
-    "quality_ensemble" -> ((s, d) => {
+    Q("quality_ensemble", (s, d) => {
       val llr = TextQuality.nbLogLikelihoodRatio(nbLabeled(s, d))
         .select(col("doc_id"), col("llr"))
       val feats = TextQuality.qualityFeatures(t(s, d).documents)
@@ -3905,14 +7794,44 @@ object SparkEntry {
           Seq(("llr", 1.0), ("stopword_ratio", 1.0), ("avg_token_len", -1.0)))
         .select(col("doc_id"), col("lang"), col("ensemble_score"), col("kept"))
         .orderBy("doc_id")
-    }),
+    })(
+      // the same three signals, naive formulation: per-signal moments
+      // from DECIMAL sums, z-blend replayed literally — bit-identical
+      // float path on both engines (avg token length = one double
+      // division of two exact integers on each engine)
+      s"""$NbCtes,
+         | tq AS (SELECT doc_id, lang, text,
+         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |   FROM documents),
+         | f AS (SELECT doc_id, lang,
+         |    len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], lower(x)))) / len(tk) AS stop_r,
+         |    list_sum(list_transform(tk, x -> length(x))) / len(tk) AS atl
+         |   FROM tq),
+         | j AS (SELECT nb.doc_id, f.lang, nb.llr, f.stop_r, f.atl
+         |   FROM nb JOIN f USING (doc_id)),
+         | mo AS (SELECT count(*) AS n,
+         |    CAST(sum(CAST(llr AS DECIMAL(28,12))) AS DOUBLE) AS s_l,
+         |    CAST(sum(CAST(round(llr*llr, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_l,
+         |    CAST(sum(CAST(stop_r AS DECIMAL(28,12))) AS DOUBLE) AS s_s,
+         |    CAST(sum(CAST(round(stop_r*stop_r, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_s,
+         |    CAST(sum(CAST(atl AS DECIMAL(28,12))) AS DOUBLE) AS s_p,
+         |    CAST(sum(CAST(round(atl*atl, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_p
+         |   FROM j),
+         | z AS (SELECT j.doc_id, j.lang,
+         |    round((1.0 * ((llr - s_l/n) / sqrt(greatest(q_l/n - (s_l/n)*(s_l/n), 0.0)))
+         |         + 1.0 * ((stop_r - s_s/n) / sqrt(greatest(q_s/n - (s_s/n)*(s_s/n), 0.0)))
+         |         + -1.0 * ((atl - s_p/n) / sqrt(greatest(q_p/n - (s_p/n)*(s_p/n), 0.0)))) / 3, 6)
+         |      AS ensemble_score
+         |   FROM j, mo)
+         |SELECT doc_id, lang, ensemble_score, ensemble_score >= 0 AS kept
+         |FROM z ORDER BY doc_id""".stripMargin),
     // the URL front door AS A STREAM: doc drops arrive file-by-file,
     // every batch's raw URLs (tracking junk + shuffled real params —
     // the url_strip_tracking fixture) canonicalize in-stream, the
     // stateful dedup admits each fetch key ONCE across batches, and
     // the UT1-style blocklist then grades the drained frontier — the
     // admitted verdict set must equal the batch closed form
-    "streaming_url_frontier" -> ((s, d) => {
+    Q("streaming_url_frontier", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -3941,7 +7860,35 @@ object SparkEntry {
         .unionByName(ss.range(1)
           .select(lit("shop.example.co.uk").as("host"), lit("/doc/7").as("prefix")))
       Html.blocklistFilter(admitted, rules).orderBy("url")
-    }),
+    }) {
+      // the drained frontier's closed form: one canonical key per m
+      // triple, graded by the same rule arithmetic as
+      // url_blocklist_filter (k = m%ss; path excludes the query)
+      val ss = Html.SiteSpace
+      s"""WITH x AS (SELECT DISTINCT doc_id - (doc_id % 3) AS m FROM documents),
+         | u AS (SELECT m, m % $ss AS k FROM x),
+         | uu AS (SELECT m, k,
+         |    'https://' || ${sqlHost("k")} || '/doc/' || m || '?a=1&page=2' AS url,
+         |    '/doc/' || m AS path FROM u),
+         | cand AS (
+         |   SELECT m, ${sqlHost("k")} AS rule_host, '' AS prefix
+         |     FROM uu WHERE k % 7 = 0
+         |   UNION ALL
+         |   SELECT m, ${sqlHost("k")}, '/doc/1'
+         |     FROM uu WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
+         |   UNION ALL
+         |   SELECT m, 'shop.example.co.uk', '/doc/7'
+         |     FROM uu WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
+         | best AS (SELECT m, rule_host, prefix, row_number() OVER (
+         |    PARTITION BY m
+         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
+         |   FROM cand)
+         |SELECT uu.url, b.m IS NOT NULL AS blocked,
+         | coalesce(b.rule_host, '') AS rule_host,
+         | coalesce(b.prefix, '') AS rule_prefix
+         |FROM uu LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (m)
+         |ORDER BY uu.url""".stripMargin
+    },
     // the FULL crawl admission policy under one streaming transaction
     // (r15): canonicalize (tracking-param strip) → stateful first-seen
     // dedup across micro-batches → UT1 blocklist (bounded suffix-chain
@@ -3951,7 +7898,7 @@ object SparkEntry {
     // url_blocklist_filter, robots_filter, streaming_url_frontier);
     // the drained output must equal the batch closed form, which is
     // the twin
-    "streaming_crawl_admission" -> ((s, d) => {
+    Q("streaming_crawl_admission", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -3988,7 +7935,51 @@ object SparkEntry {
       graft.streaming.IngestPipeline
         .runCrawlAdmission(ss, urlStream, blockRules, robotsRules, landDir)
         .orderBy("url")
-    }),
+    }) {
+      // the full admission policy as its batch closed form: canonical
+      // fetch keys (one per m), blocklist longest-prefix verdict, robots
+      // longest-prefix verdict (Allow wins ties), admitted = ¬blocked ∧
+      // allowed — the drained stream must equal this exactly
+      val ss = Html.SiteSpace
+      s"""WITH x AS (SELECT DISTINCT doc_id - (doc_id % 3) AS m FROM documents),
+         | u AS (SELECT m, m % $ss AS k,
+         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m || '?a=1&page=2' AS url,
+         |    '/doc/' || m AS path FROM x),
+         | bcand AS (
+         |   SELECT m, ${sqlHost("k")} AS rule_host, '' AS prefix
+         |     FROM u WHERE k % 7 = 0
+         |   UNION ALL
+         |   SELECT m, ${sqlHost("k")}, '/doc/1'
+         |     FROM u WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
+         |   UNION ALL
+         |   SELECT m, 'shop.example.co.uk', '/doc/7'
+         |     FROM u WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
+         | bbest AS (SELECT m, rule_host, prefix, row_number() OVER (
+         |    PARTITION BY m
+         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
+         |   FROM bcand),
+         | hosts AS (SELECT DISTINCT k FROM u),
+         | rrules AS (
+         |   SELECT k, '/private/' AS rprefix, false AS allow FROM hosts
+         |   UNION ALL SELECT k, '/doc/', false FROM hosts WHERE k % 4 = 0
+         |   UNION ALL SELECT k, '/doc/1', false FROM hosts WHERE k % 4 = 1
+         |   UNION ALL SELECT k, '/doc/12', true FROM hosts WHERE k % 4 = 1
+         |   UNION ALL SELECT k, '/doc/', true FROM hosts WHERE k % 4 = 2),
+         | rcand AS (SELECT u.m, r.rprefix, r.allow
+         |   FROM u JOIN rrules r USING (k) WHERE starts_with(u.path, r.rprefix)),
+         | rbest AS (SELECT m, rprefix, allow, row_number() OVER (PARTITION BY m
+         |    ORDER BY length(rprefix) DESC, allow DESC, rprefix DESC) AS rn
+         |   FROM rcand)
+         |SELECT u.url, bb.m IS NOT NULL AS blocked,
+         | coalesce(bb.rule_host, '') AS rule_host,
+         | coalesce(bb.prefix, '') AS rule_prefix,
+         | coalesce(rb.allow, true) AS allowed,
+         | coalesce(rb.rprefix, '') AS robots_rule,
+         | (bb.m IS NULL) AND coalesce(rb.allow, true) AS admitted
+         |FROM u LEFT JOIN (SELECT * FROM bbest WHERE rn = 1) bb USING (m)
+         |       LEFT JOIN (SELECT * FROM rbest WHERE rn = 1) rb USING (m)
+         |ORDER BY u.url""".stripMargin
+    },
     // the post-training front door AS A STREAM: transcript drops
     // arrive file-by-file, render→parse→audit→fingerprint run per
     // micro-batch (a conversation arrives whole in one row, so the
@@ -3997,7 +7988,7 @@ object SparkEntry {
     // the cross-batch response dedup is an EXACT FINISH on the
     // drained union (min-id keeper is order-independent); drained
     // output == the one-shot batch composition, which is the twin
-    "streaming_sft_admission" -> ((s, d) => {
+    Q("streaming_sft_admission", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -4008,20 +7999,56 @@ object SparkEntry {
       graft.streaming.IngestPipeline
         .runSftAdmission(ss, stream.select(col("doc_id"), col("text")), landDir)
         .orderBy("conv_id")
-    }),
+    })(
+      // the drained streaming admission equals the one-shot batch
+      // composition: audit flags recomputed via DuckDB's lag window,
+      // fingerprints via ordered string_agg, min-id keeper in SQL
+      s"""$SftTurnsCtes,
+         | prevr AS (SELECT conv_id, turn_idx, role, content,
+         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
+         |   FROM sft_turns),
+         | aud AS (SELECT conv_id, count(*) AS n_turns,
+         |   CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS BIGINT) AS same_role_runs,
+         |   coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+         |     coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+         |       9223372036854775807), FALSE) AS starts_ok,
+         |   arg_max(role, turn_idx) = 'assistant' AS ends_assistant,
+         |   max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 1 AS has_empty,
+         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
+         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+         |        9223372036854775807), FALSE)
+         |    AND arg_max(role, turn_idx) = 'assistant'
+         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
+         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
+         |   FROM prevr GROUP BY conv_id),
+         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
+         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
+         | grp AS (SELECT resp_fp, count(*) AS group_size, min(conv_id) AS keeper
+         |   FROM fp GROUP BY resp_fp)
+         |SELECT a.conv_id, a.n_turns, a.same_role_runs, a.starts_ok,
+         | a.ends_assistant, a.has_empty, a.ok, fp.resp_fp,
+         | coalesce(grp.group_size, 1) AS group_size,
+         | (fp.resp_fp IS NULL OR a.conv_id = grp.keeper) AS keep,
+         | (a.ok AND (fp.resp_fp IS NULL OR a.conv_id = grp.keeper)) AS admitted
+         |FROM aud a LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
+         |ORDER BY a.conv_id""".stripMargin),
     // the crawl front door AS A STREAM: page drops arrive file-by-file,
     // href extraction runs per micro-batch, and the edge dedup becomes
     // Structured Streaming's stateful Deduplicate (Html.outlinks'
     // distinct, unchanged) — drained output must equal the batch edge
     // list, so the closed-form twin is shared with html_outlinks
-    "streaming_outlinks" -> ((s, d) => {
+    Q("streaming_outlinks", (s, d) => {
       val src = stagePageStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       EventStreams.runToMemory(ss, Html.outlinks(readPageStream(ss, src)),
           s"stream_outlinks_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("src", "dst")
-    }),
+    })(
+      // drained stateful-dedup edge stream must converge to the batch
+      // edge list — same closed-form twin
+      outlinksTwinSql),
     // the FULL crawl-to-corpus pipeline as a stream: HTML page drops →
     // per-micro-batch boilerplate extraction (the batch-proven
     // lossless extractor, metadata passthrough) → exact dedup against
@@ -4030,7 +8057,7 @@ object SparkEntry {
     // transaction. The store seed and the oracle both work on the
     // COLLAPSED text (what extraction provably recovers), so the twin
     // is the one-shot batch chain over whitespace-normalized documents
-    "streaming_html_ingest" -> ((s, d) => {
+    Q("streaming_html_ingest", (s, d) => {
       val src = stagePageStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val collapsed = concat_ws(" ",
@@ -4048,7 +8075,34 @@ object SparkEntry {
         .runIngestStream(ss, docsStream, storeDir, rates, out,
           targetRowsPerFile = 5000L, bloomBits = 1L << 20)
         .orderBy("doc_id", "chunk_idx")
-    }),
+    })(
+      // the streaming ingest drained == ONE batch pass with the same
+      // store seed and the PROFILE-derived rates (n over the full
+      // documents table, not the survivors — the policy-snapshot
+      // distinction vs pipeline_ingest's self-derived rates)
+      // the crawl-to-corpus stream's twin: the SAME one-shot chain over
+      // whitespace-COLLAPSED documents (docsx) — what the lossless
+      // extractor provably recovers from the boilerplated pages — so the
+      // hash proves extraction, dedup, resample and chunking end-to-end
+      s"""WITH docsx AS (SELECT doc_id, lang,
+         |    array_to_string(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0), ' ') AS text
+         |  FROM documents),
+         | store AS (SELECT DISTINCT sha256(text) AS h FROM docsx WHERE doc_id % 2 = 0),
+         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM docsx GROUP BY 1),
+         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
+         | dd AS (SELECT d.doc_id, d.lang, d.text FROM docsx d JOIN fresh f ON d.doc_id = f.doc_id),
+         | n AS (SELECT lang, count(*) AS n_l FROM docsx GROUP BY lang),
+         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
+         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
+         |          WHERE $HashPermille < r.keep_permille),
+         | c AS (SELECT doc_id, lang, text,
+         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
+         | u AS (SELECT doc_id, lang, text, n_chunks,
+         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // paragraph dedup AS A STREAM: the cookie-boilerplated page drops
     // arrive in doc_id order, each micro-batch extracts blocks and
     // drops every paragraph already seen (first-occurrence-wins — a
@@ -4057,7 +8111,7 @@ object SparkEntry {
     // order makes first-occurrence global argmin by (doc_id, pos), so
     // the twin is one row_number window over the closed-form paragraph
     // relation
-    "streaming_paragraph_ingest" -> ((s, d) => {
+    Q("streaming_paragraph_ingest", (s, d) => {
       val src = stagePageStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-parastore").toString
@@ -4070,41 +8124,90 @@ object SparkEntry {
           .as("html"))
       graft.streaming.IngestPipeline.runParaIngest(ss, pages, storeDir, out)
         .orderBy("doc_id")
-    }),
+    })(
+      // first-occurrence-wins over the same closed-form paragraph
+      // relation as paragraph_dedup: one row_number window ordered by
+      // (doc_id, pos) — doc_id-ordered file drops make stream order and
+      // global order coincide
+      s"""$ParaRelCtes,
+         | r AS (SELECT doc_id, pos, para,
+         |    row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn FROM paras)
+         |SELECT doc_id, count(*) AS n_paras, count(*) FILTER (WHERE rn = 1) AS n_kept,
+         | coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE rn = 1), '') AS text
+         |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // ---- M3b: corpus construction (deterministic sampling / chunking /
     // mixture / quality cut — graft.operators.Corpus) ----
-    "sample_by_hash" -> ((s, d) =>
+    Q("sample_by_hash", (s, d) =>
       Corpus.sampleByHash(t(s, d).documents, permille = 200)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")),
-    "stratified_sample" -> ((s, d) =>
+        .select(col("doc_id"), col("lang")).orderBy("doc_id"))(
+      // the sampling hash is the reference's affine char-sum
+      // (map_reduce.cpp:214-217) over the first 64 chars — the same
+      // DuckDB formulation ref_bin_histogram uses
+      s"""SELECT doc_id, lang FROM documents
+         |WHERE $HashPermille < 200
+         |ORDER BY doc_id""".stripMargin),
+    Q("stratified_sample", (s, d) =>
       Corpus.stratifiedSample(t(s, d).documents,
           rates = Map("en" -> 100), defaultPermille = 300)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")),
+        .select(col("doc_id"), col("lang")).orderBy("doc_id"))(
+      s"""SELECT doc_id, lang FROM documents
+         |WHERE $HashPermille < CASE WHEN lang = 'en' THEN 100 ELSE 300 END
+         |ORDER BY doc_id""".stripMargin),
     // fixed-k weight-biased sample with unbiased subset-sum estimators
     // (Duffield-Lund-Thorup priority sampling); the corpus-wide work is
     // ONE TakeOrderedAndProject top-(k+1) pick
-    "priority_sample" -> ((s, d) =>
-      Corpus.prioritySample(t(s, d).documents, k = 200).orderBy("doc_id")),
+    Q("priority_sample", (s, d) =>
+      Corpus.prioritySample(t(s, d).documents, k = 200).orderBy("doc_id"))(
+      // priority sampling: rank by the integer key floor(h*2^20/w)
+      // (ascending == priority w/u descending), threshold from the
+      // 201st key, estimate max(w, tau) — identical Knuth-hash u and
+      // exact-integer arithmetic on both engines
+      prioritySampleTwinSql),
     // the textbook-exact Duffield-Lund-Thorup estimator: true-priority
     // ranking (h/w as one IEEE division) and tau from the threshold
     // row's own (h, w) — the unbiased max(w, tau) the floored-key
     // variant trades for integer-exact keys
-    "priority_sample_exact" -> ((s, d) =>
-      Corpus.prioritySampleExact(t(s, d).documents, k = 200).orderBy("doc_id")),
+    Q("priority_sample_exact", (s, d) =>
+      Corpus.prioritySampleExact(t(s, d).documents, k = 200).orderBy("doc_id"))(prioritySampleExactTwinSql),
     // materialized training ORDER: quality-quantile phases (histogram
     // percent rank — no corpus sort) round-robined across shards with
     // a deterministic within-shard sequence
-    "curriculum_shards" -> ((s, d) => {
+    Q("curriculum_shards", (s, d) => {
       val tt = t(s, d)
       Corpus.curriculumShards(
         tt.documents.select(col("doc_id"), length(col("text")).cast("long").as("score")),
         phases = 4, nShards = 8,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
-    }),
+    })(
+      // curriculum: percent rank from the score histogram, phase =
+      // clamped floor(pr*P), Knuth-hash shard + within-shard sequence
+      """WITH sc AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS score FROM documents),
+        | h AS (SELECT score, count(*) AS cnt FROM sc GROUP BY 1),
+        | r AS (SELECT score,
+        |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
+        |   sum(cnt) OVER () AS n FROM h),
+        | pr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
+        |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM r),
+        | j AS (SELECT sc.doc_id, sc.score, pr.pr,
+        |   CAST(least(3, floor(pr.pr * 4)) AS BIGINT) AS phase,
+        |   CAST((((sc.doc_id % 2147483648) * 2654435761) % 4294967296) % 8 AS BIGINT) AS shard,
+        |   (((sc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
+        |  FROM sc JOIN pr USING (score))
+        |SELECT doc_id, score, pr, phase, shard,
+        | CAST(row_number() OVER (PARTITION BY phase, shard ORDER BY ord, doc_id) AS BIGINT) AS seq
+        |FROM j ORDER BY doc_id""".stripMargin),
     // one-row dataset-card vocabulary profile off the wordcount
     // relation (TTR / hapax / top-share scrape-health tells)
-    "vocab_stats" -> ((s, d) => TextOps.vocabStats(t(s, d).documents)),
+    Q("vocab_stats", (s, d) => TextOps.vocabStats(t(s, d).documents))(
+      s"""$W, wc AS (SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word),
+         | a AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tokens, count(*) AS n_types,
+         |        CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, max(cnt) AS max_freq FROM wc)
+         |SELECT n_tokens, n_types, n_hapax, max_freq,
+         | round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS type_token_ratio,
+         | round(CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE), 6) AS hapax_frac,
+         | round(CAST(max_freq AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS top_share
+         |FROM a""".stripMargin),
     // the DATASET CARD in one row — the release artifact a corpus
     // ships with: sizes, language/source spread, top-language share,
     // exact-dup pressure (sha256, never text, over the wire), the
@@ -4113,7 +8216,10 @@ object SparkEntry {
     // the Gopher word-gate pass rate. All floor-ppm integer shares
     // and one histogram-sized window — every input relation is an
     // aggregate, so the card costs two corpus scans at any scale
-    "corpus_card" -> ((s, d) => Corpus.datasetCard(t(s, d).documents)),
+    Q("corpus_card", (s, d) => Corpus.datasetCard(t(s, d).documents))(
+      // one-row card: every sub-relation rebuilt as its own aggregate
+      // CTE off the same token split; ppm shares floored the same way
+      corpusCardTwinSql),
     // the go/no-go release artifact: every pre-release audit this
     // engine ships (exact-dup pressure, quality-gate rate, split
     // leakage, benchmark contamination, PII scan) as ONE relation of
@@ -4121,7 +8227,7 @@ object SparkEntry {
     // count — at sf0.01 the leakage check FAILS (the synthetic corpus
     // shares trigrams across every split boundary), so the verdict
     // demonstrably binds instead of rubber-stamping
-    "release_gate" -> ((s, d) => {
+    Q("release_gate", (s, d) => {
       val docs = t(s, d).documents
       val nd = count(lit(1))
       val dup = docs.agg(floor((nd - countDistinct(sha2(col("text"), 256))) * lit(1000000L) / nd)
@@ -4157,12 +8263,59 @@ object SparkEntry {
           lit(0L).as("threshold"), lit(false).as("higher_is_better"),
           (col("value") === 0L).as("pass"))
       checks.unionByName(summary).orderBy("check_name")
-    }),
+    }) {
+      // each check's proven CTE chain aggregated to its ppm; NOTE the
+      // denominators follow the Spark aggs — leakage over the HELD-OUT
+      // relation, contamination over the non-benchmark relation
+      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+      s"""WITH gf AS (SELECT CAST(len(tkl) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
+         |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
+         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |   FROM (SELECT list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
+         | gatev AS (SELECT CAST(floor(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
+         |    AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) * 1000000 / count(*)) AS BIGINT) AS gopher_pass_ppm FROM gf),
+         | sp AS (SELECT doc_id, text,
+         |   CASE WHEN $HashPermille < 800 THEN 'train'
+         |        WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
+         |  FROM documents),
+         | ltoks AS (SELECT doc_id, split, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM sp),
+         | lpos AS (SELECT doc_id, split, l, unnest(generate_series(1, len(l) - 2)) AS i FROM ltoks WHERE len(l) >= 3),
+         | lsh AS (SELECT DISTINCT doc_id, split, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM lpos),
+         | ltsh AS (SELECT DISTINCT shingle FROM lsh WHERE split = 'train'),
+         | lov AS (SELECT s.doc_id, count(*) AS n FROM lsh s JOIN ltsh USING (shingle)
+         |         WHERE s.split <> 'train' GROUP BY 1),
+         | leakv AS (SELECT CAST(floor(count(*) FILTER (WHERE coalesce(lov.n, 0) >= 2) * 1000000 / count(*)) AS BIGINT) AS leak_ppm
+         |   FROM sp e LEFT JOIN lov USING (doc_id) WHERE e.split <> 'train'),
+         | dtoks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+         | dpos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM dtoks WHERE len(l) >= 3),
+         | dsh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM dpos),
+         | dbsh AS (SELECT DISTINCT shingle FROM dsh WHERE doc_id % 97 = 0),
+         | dov AS (SELECT s.doc_id, count(*) AS n FROM dsh s JOIN dbsh USING (shingle)
+         |         WHERE s.doc_id % 97 <> 0 GROUP BY s.doc_id),
+         | contamv AS (SELECT CAST(floor(count(*) FILTER (WHERE coalesce(dov.n, 0) >= 2) * 1000000 / count(*)) AS BIGINT) AS contam_ppm
+         |   FROM dtoks t LEFT JOIN dov USING (doc_id) WHERE t.doc_id % 97 <> 0),
+         | piiv AS (SELECT CAST(floor(count(*) FILTER (WHERE len(regexp_extract_all(text, '${Cleaning.PhoneRe}')) > 0
+         |    OR len(regexp_extract_all(regexp_replace(text, '${Cleaning.PhoneRe}', '<PHONE>', 'g'), '${Cleaning.Ipv4Re}')) > 0) * 1000000 / count(*)) AS BIGINT) AS pii_ppm FROM documents),
+         | dupv AS (SELECT CAST(floor((count(*) - count(DISTINCT sha256(text))) * 1000000 / count(*)) AS BIGINT) AS dup_ppm FROM documents),
+         | vals AS (SELECT * FROM dupv CROSS JOIN gatev CROSS JOIN leakv CROSS JOIN contamv CROSS JOIN piiv),
+         | checks AS (
+         |  SELECT 'exact_dup_ppm' AS check_name, dup_ppm AS value, CAST(50000 AS BIGINT) AS threshold, false AS higher_is_better, dup_ppm <= 50000 AS pass FROM vals
+         |  UNION ALL SELECT 'gopher_pass_ppm', gopher_pass_ppm, 300000, true, gopher_pass_ppm >= 300000 FROM vals
+         |  UNION ALL SELECT 'split_leak_ppm', leak_ppm, 100000, false, leak_ppm <= 100000 FROM vals
+         |  UNION ALL SELECT 'contaminated_ppm', contam_ppm, 100000, false, contam_ppm <= 100000 FROM vals
+         |  UNION ALL SELECT 'pii_hit_ppm', pii_ppm, 0, false, pii_ppm <= 0 FROM vals)
+         |SELECT check_name, value, threshold, higher_is_better, pass FROM checks
+         |UNION ALL
+         |SELECT 'zz_failing_checks', CAST(count(*) FILTER (WHERE NOT pass) AS BIGINT), 0, false,
+         |  count(*) FILTER (WHERE NOT pass) = 0 FROM checks
+         |ORDER BY check_name""".stripMargin
+    },
     // the release artifact maintained INCREMENTALLY: each micro-batch
     // commits its histogram-sized cube delta + first-seen digests; the
     // finish recomputes the card from the drained stores, so the batch
     // corpus_card twin serves unchanged
-    "streaming_corpus_card" -> ((s, d) => {
+    Q("streaming_corpus_card", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4, withSource = true)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -4172,35 +8325,73 @@ object SparkEntry {
       val cubeDir = java.nio.file.Files.createTempDirectory("graft-card-cube").toString
       val digestDir = java.nio.file.Files.createTempDirectory("graft-card-digest").toString
       graft.streaming.IngestPipeline.runCardIngest(ss, stream, cubeDir, digestDir)
-    }),
-    "doc_chunks" -> ((s, d) =>
+    })(
+      // the drained incremental card converges to the one-shot batch
+      // card — same twin verbatim
+      corpusCardTwinSql),
+    Q("doc_chunks", (s, d) =>
       Corpus.chunk(t(s, d).documents, size = 128)
         .select(col("doc_id"), col("chunk_idx"), col("chunk"), col("n_chunks"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"))(
+      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks
+        |           FROM documents),
+        | u AS (SELECT doc_id, text, n_chunks,
+        |        unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+        |SELECT doc_id, chunk_idx,
+        | substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk, n_chunks
+        |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // overlapping windows (stride 96 under size 128 = 32-char
     // overlap): every span lives inside at least one chunk — the
     // boundary-blindness fix disjoint chunking can't offer
-    "doc_chunks_overlap" -> ((s, d) =>
+    Q("doc_chunks_overlap", (s, d) =>
       Corpus.chunkSliding(t(s, d).documents, size = 128, stride = 96)
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"))(
+      // windows every 96 chars, each 128 long — the stride denominator
+      // moves, the substring length doesn't
+      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 96.0) AS BIGINT) AS n_chunks
+        |           FROM documents),
+        | u AS (SELECT doc_id, text, n_chunks,
+        |        unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+        |SELECT doc_id, chunk_idx,
+        | substring(text, CAST(chunk_idx * 96 + 1 AS INT), 128) AS chunk, n_chunks
+        |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // sentence-aligned packing: whole sentences into ~256-char
     // chunks (the sentence_split stitch guarantees real multi-
     // sentence docs); no chunk ever cuts a sentence
-    "sentence_chunks" -> ((s, d) => {
+    Q("sentence_chunks", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(col("text"), lit(". Doc "), col("doc_id").cast("string"),
           lit(" ends! Is it done? yes")).as("text"))
       Corpus.sentenceChunks(fx, budget = 256).orderBy("doc_id", "chunk_idx")
-    }),
-    "mixture_weights" -> ((s, d) =>
+    })(
+      // the sentence_split CTEs + a per-doc prefix-char window; chunk
+      // id = floor(chars-before/256) with the joining space counted
+      """WITH fx AS (SELECT doc_id, text || '. Doc ' || CAST(doc_id AS VARCHAR) || ' ends! Is it done? yes' AS text FROM documents),
+        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
+        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q),
+        | sx AS (SELECT doc_id, i AS sent_idx, l[i] AS sentence FROM u),
+        | cb AS (SELECT doc_id, sent_idx, sentence,
+        |    coalesce(sum(length(sentence) + 1) OVER (PARTITION BY doc_id ORDER BY sent_idx
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM sx),
+        | g AS (SELECT doc_id, CAST(floor(cum_before / 256) AS BIGINT) AS chunk_idx, sent_idx, sentence FROM cb)
+        |SELECT doc_id, chunk_idx, count(*) AS n_sents,
+        | string_agg(sentence, ' ' ORDER BY sent_idx) AS chunk,
+        | CAST(length(string_agg(sentence, ' ' ORDER BY sent_idx)) AS BIGINT) AS n_chars
+        |FROM g GROUP BY doc_id, chunk_idx ORDER BY doc_id, chunk_idx""".stripMargin),
+    Q("mixture_weights", (s, d) =>
       Corpus.mixtureUpsample(t(s, d).documents, weights = Map("de" -> 3, "zh" -> 2))
-        .orderBy("doc_id", "copy_id")),
+        .orderBy("doc_id", "copy_id"))(
+      """WITH w AS (SELECT doc_id, lang,
+        |  CASE WHEN lang = 'de' THEN 3 WHEN lang = 'zh' THEN 2 ELSE 1 END AS wt
+        |  FROM documents)
+        |SELECT doc_id, lang, unnest(generate_series(1, wt)) AS copy_id
+        |FROM w ORDER BY doc_id, copy_id""".stripMargin),
     // the mixture SOLVER: given target shares, derive the largest
     // no-oversampling per-stratum keep rates (S = min n_l/t_l, rate =
     // t·S/n) and APPLY them with the deterministic content hash — one
     // hash proves solver + application; "50/30/20" stated directly
     // instead of hand-tuning rates until the mix lands nearby
-    "mixture_solve" -> ((s, d) => {
+    Q("mixture_solve", (s, d) => {
       val docs = t(s, d).documents
       val targets = Seq(("en", 0.5), ("de", 0.3), ("zh", 0.2))
       val prof = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
@@ -4218,7 +8409,20 @@ object SparkEntry {
         .select(col("lang"), col("n_l"), col("keep_permille"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"))
         .orderBy("lang")
-    }),
+    })(
+      // solver mirrored with e0-suffixed double targets; the same
+      // content-hash application as sample_by_hash
+      s"""WITH prof AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
+         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
+         | j AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
+         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM j),
+         | rates AS (SELECT lang, n_l,
+         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
+         |  FROM j),
+         | kept AS (SELECT d.lang, count(*) AS n_kept FROM documents d JOIN rates r ON d.lang = r.lang
+         |          WHERE $HashPermille < r.keep_permille GROUP BY 1)
+         |SELECT rates.lang, n_l, keep_permille, coalesce(kept.n_kept, 0) AS n_kept
+         |FROM rates LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin),
     // mixture_solve's data-constrained dual (Muennighoff et al. 2023,
     // public): given a TOKEN budget and target shares, how many
     // EPOCHS must each stratum repeat to fill its allocation?
@@ -4228,7 +8432,7 @@ object SparkEntry {
     // knee with the over-budget shortfall reported. Exact integer
     // arithmetic end to end — the planner a data-constrained
     // training run starts from
-    "epoch_allocation" -> ((s, d) => {
+    Q("epoch_allocation", (s, d) => {
       val budget = 50000L
       val targets = Seq(("en", 0.5), ("de", 0.3), ("zh", 0.2))
       val supply = t(s, d).documents
@@ -4246,20 +8450,49 @@ object SparkEntry {
           when(col("capped"), col("supply_tokens") * lit(4L)).otherwise(col("target_tokens")))
         .withColumn("shortfall_tokens", col("target_tokens") - col("granted_tokens"))
         .orderBy("lang")
-    }),
-    "quality_filter" -> ((s, d) => {
+    })(
+      // integer epoch planner: e0-suffixed double weights only in the
+      // one floor(B·w) product, everything after is BIGINT arithmetic
+      """WITH sup AS (SELECT lang,
+        |    CAST(sum(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0))) AS BIGINT) AS supply_tokens
+        |   FROM documents GROUP BY 1),
+        | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, w)),
+        | a AS (SELECT sup.lang, sup.supply_tokens,
+        |    CAST(floor(50000.0e0 * tt.w) AS BIGINT) AS target_tokens
+        |   FROM sup JOIN tt USING (lang)),
+        | b AS (SELECT lang, supply_tokens, target_tokens,
+        |    CAST(floor(target_tokens * 1000 / supply_tokens) AS BIGINT) AS epochs_permille FROM a)
+        |SELECT lang, supply_tokens, target_tokens, epochs_permille,
+        | epochs_permille > 4000 AS capped,
+        | CASE WHEN epochs_permille > 4000 THEN supply_tokens * 4 ELSE target_tokens END AS granted_tokens,
+        | target_tokens - (CASE WHEN epochs_permille > 4000 THEN supply_tokens * 4 ELSE target_tokens END) AS shortfall_tokens
+        |FROM b ORDER BY lang""".stripMargin),
+    Q("quality_filter", (s, d) => {
       val tt = t(s, d)
       Corpus.qualityQuantileFilter(tt.documents, keep = 0.5,
           sizeHint = Some(tt.rowCountStat("documents")))
         .select(col("doc_id"), col("lang"), col("score"), col("pr"))
         .orderBy("doc_id")
-    }),
+    })(
+      // stopword list generated from the SAME Scala constant the operator
+      // uses — the two sides cannot drift
+      s"""WITH t AS (SELECT doc_id, lang,
+         |  list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+         |  FROM documents),
+         | s AS (SELECT doc_id, lang,
+         |  CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT)
+         |    / CAST(len(tk) AS BIGINT) AS score
+         |  FROM t),
+         | r AS (SELECT doc_id, lang, score,
+         |  percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM s)
+         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5
+         |ORDER BY doc_id""".stripMargin),
     // the flagship composition: the corpus operators chained as a real
     // training-data build — exact dedup, per-language quality cut,
     // stratified downsample of the dominant language, context-window
     // chunking — every stage deterministic, the WHOLE pipeline
     // hash-checked against one DuckDB CTE chain
-    "pipeline_e2e" -> ((s, d) => {
+    Q("pipeline_e2e", (s, d) => {
       val tt = t(s, d)
       val deduped = tt.documents
         .groupBy(col("text"))
@@ -4274,14 +8507,36 @@ object SparkEntry {
       Corpus.chunk(sampled.select(col("doc_id"), col("lang"), col("text")), size = 256)
         .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    })(
+      // the whole pipeline as one CTE chain: every stage reuses the
+      // already-oracle-matched formulation of its standalone operator
+      s"""WITH dd AS (SELECT min(doc_id) AS doc_id, min(lang) AS lang, text
+         |            FROM documents GROUP BY text),
+         | tkk AS (SELECT doc_id, lang, text,
+         |   list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk FROM dd),
+         | sc AS (SELECT doc_id, lang, text,
+         |   CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT)
+         |     / CAST(len(tk) AS BIGINT) AS score
+         |   FROM tkk),
+         | rk AS (SELECT doc_id, lang, text, score,
+         |   percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM sc),
+         | q AS (SELECT doc_id, lang, text FROM rk WHERE pr >= 0.5),
+         | samp AS (SELECT * FROM q
+         |   WHERE $HashPermille < CASE WHEN lang = 'en' THEN 500 ELSE 1000 END),
+         | c AS (SELECT doc_id, lang, text,
+         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM samp),
+         | u AS (SELECT doc_id, lang, text, n_chunks,
+         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
 
     // the round-5 ingest cycle composed end-to-end: incremental digest
     // dedup against the persisted store → temperature-α=1/2 rebalance
     // over the survivors → context-window chunking; the whole chain
     // hash-checked against one DuckDB CTE chain (the incremental twin
     // of pipeline_e2e)
-    "pipeline_ingest" -> ((s, d) => {
+    Q("pipeline_ingest", (s, d) => {
       val docs = t(s, d).documents
       val store = docs.where(col("doc_id") % 2 === 0)
         .select(sha2(col("text"), 256).as("h"))
@@ -4293,30 +8548,67 @@ object SparkEntry {
       Corpus.chunk(kept, size = 256)
         .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    })(
+      // the ingest cycle as one CTE chain: store anti-join → temperature
+      // rates over survivors → chunk explode
+      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
+         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
+         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
+         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
+         | n AS (SELECT lang, count(*) AS n_l FROM dd GROUP BY lang),
+         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
+         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
+         |          WHERE $HashPermille < r.keep_permille),
+         | c AS (SELECT doc_id, lang, text,
+         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
+         | u AS (SELECT doc_id, lang, text, n_chunks,
+         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // temperature-α=1/2 multilingual rebalancing: per-stratum keep
     // rates derived from stratum counts (sqrt keeps every double
     // IEEE-exact → hash-checkable), rates broadcast back, keep
     // decision by content hash — zero row-scale shuffle
-    "temperature_sample" -> ((s, d) =>
+    Q("temperature_sample", (s, d) =>
       Corpus.temperatureResample(t(s, d).documents)
         .select(col("doc_id"), col("lang"), col("n_l"), col("keep_permille"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"))(
+      // temperature α=1/2 rebalancing: rate = sqrt(n_min)/sqrt(n_l) —
+      // sqrt/div/mul are IEEE correctly-rounded, so both engines
+      // compute bit-identical thresholds (pow(x, α) would not)
+      s"""WITH n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
+         | r AS (SELECT lang, n_l,
+         |   CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+         |        / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n)
+         |SELECT d.doc_id, d.lang, r.n_l, r.keep_permille
+         |FROM documents d JOIN r ON d.lang = r.lang
+         |WHERE $HashPermille < r.keep_permille
+         |ORDER BY d.doc_id""".stripMargin),
     // per-source quota capping (domain caps in a crawl build): the
     // custom two-phase-heap GroupedTopK operator applied to curation —
     // longest 20 docs per source, deterministic tie on doc_id
-    "source_cap" -> ((s, d) =>
+    Q("source_cap", (s, d) =>
       graft.plans.GroupedTopK.topKPerKey(
           t(s, d).documents.select(col("source"), col("doc_id"), col("n_chars")),
           Seq("source"), Seq(("n_chars", true), ("doc_id", false)), k = 20)
-        .orderBy(col("source"), desc("n_chars"), asc("doc_id"))),
+        .orderBy(col("source"), desc("n_chars"), asc("doc_id")))(
+      // per-source quota cap: the GroupedTopK physical operator's
+      // answer == the window-rank formulation
+      """WITH ranked AS (
+        |  SELECT source, doc_id, n_chars,
+        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
+        |  FROM documents)
+        |SELECT source, doc_id, n_chars FROM ranked WHERE rn <= 20
+        |ORDER BY source, n_chars DESC, doc_id""".stripMargin),
 
     // ---- M3c: table maintenance (CDC merge, dimension history,
     // global total order — graft.operators.{ChangeData, TotalOrder}) ----
     // MERGE a deterministic CDC batch (updates, deletes, inserts
     // derived from key residues) into the customer base table: one
     // full-outer join on the key, column-wise coalesce, delete filter
-    "merge_upsert" -> ((s, d) => {
+    Q("merge_upsert", (s, d) => {
       val base = t(s, d).customer
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       val existing = t(s, d).customer
@@ -4331,7 +8623,25 @@ object SparkEntry {
           lit("NEW").as("c_mktsegment"), lit(0.0).as("c_acctbal"))
       ChangeData.mergeApply(base, existing.unionAll(inserts), "c_custkey")
         .orderBy("c_custkey")
-    }),
+    })(
+      // CDC MERGE semantics spelled out relationally: the same derived
+      // change batch, full outer join, delete filter, column coalesce
+      """WITH base AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
+        | chg AS (
+        |   SELECT c_custkey,
+        |     CASE WHEN c_custkey % 7 = 3 THEN 'delete' ELSE 'upsert' END AS op,
+        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'REACTIVATED' END AS c_mktsegment,
+        |     CAST(NULL AS DOUBLE) AS c_acctbal
+        |   FROM customer WHERE c_custkey % 10 = 0 OR c_custkey % 7 = 3
+        |   UNION ALL
+        |   SELECT c_custkey + 100000, 'upsert', 'NEW', 0.0
+        |   FROM customer WHERE c_custkey % 100 = 0)
+        |SELECT coalesce(c.c_custkey, b.c_custkey) AS c_custkey,
+        |       coalesce(c.c_mktsegment, b.c_mktsegment) AS c_mktsegment,
+        |       coalesce(c.c_acctbal, b.c_acctbal) AS c_acctbal
+        |FROM base b FULL OUTER JOIN chg c ON b.c_custkey = c.c_custkey
+        |WHERE c.op IS NULL OR c.op = 'upsert'
+        |ORDER BY c_custkey""".stripMargin),
     // the transactional table lifecycle as ONE commit: init a
     // key-clustered LakeTable from customer, merge a KEY-LOCALIZED CDC
     // batch (updates/deletes/inserts confined to keys 300-400, so only
@@ -4339,19 +8649,23 @@ object SparkEntry {
     // LakeTableSpec counts them), read the new snapshot. The oracle is
     // the plain full recompute: hash-green proves the pruned partial
     // rewrite equals the full merge
-    "table_commit" -> ((s, d) => {
+    Q("table_commit", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
-    }),
+    })(
+      // the LakeTable commit (pruned partial rewrite + carried files)
+      // must equal the PLAIN full merge over the whole table — the
+      // full-recompute oracle for the transactional lifecycle
+      lakeMergeTwinSql),
     // merge-on-read deletes: an O(delta) delete-vector commit (ZERO
     // files rewritten — the read path subtracts the vector), then a
     // CoW merge that resurrects part of the band and must reconcile
     // the vector (fresh upserts may not stay masked). Oracle = the
     // equivalent filter/union recompute
-    "table_delete_vectors" -> ((s, d) => {
+    Q("table_delete_vectors", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-dv").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       val dv = LakeTable.commitDelete(
@@ -4364,12 +8678,20 @@ object SparkEntry {
             lit("BACK").as("c_mktsegment"), lit(0.0).as("c_acctbal")),
         dir, "c_custkey", targetRowsPerFile = 250)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
-    }),
+    })(
+      // delete band 350-380 via the vector, resurrect 360-365 via merge:
+      // survivors = outside the band, plus the resurrected rows
+      """SELECT c_custkey,
+        |  CASE WHEN c_custkey BETWEEN 360 AND 365 THEN 'BACK' ELSE c_mktsegment END AS c_mktsegment,
+        |  CASE WHEN c_custkey BETWEEN 360 AND 365 THEN 0.0 ELSE c_acctbal END AS c_acctbal
+        |FROM customer
+        |WHERE c_custkey NOT BETWEEN 350 AND 380 OR c_custkey BETWEEN 360 AND 365
+        |ORDER BY c_custkey""".stripMargin),
     // compaction commit on top of the merge: small files rewrite into
     // key-clustered larger ones, content untouched — the SAME oracle as
     // table_commit, so hash-green proves compaction is invisible to
     // readers
-    "table_compact" -> ((s, d) => {
+    Q("table_compact", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-cp").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
@@ -4377,13 +8699,15 @@ object SparkEntry {
       LakeTable.commitCompact(s, dir, "c_custkey",
         smallFileRows = 200, targetRowsPerFile = 1000)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
-    }),
+    })(
+      // compaction is reader-invisible: same rows, same oracle
+      lakeMergeTwinSql),
     // ADDITIVE SCHEMA EVOLUTION through a commit: the batch carries a
     // column the table never had (c_tier); touched rows take its
     // values, carried files read it as NULL via mergeSchema — Delta's
     // mergeSchema posture from plain column algebra, full-recompute
     // oracle with the same union-payload semantics
-    "table_evolve" -> ((s, d) => {
+    Q("table_evolve", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-ev").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       // [10, 110] — non-empty at EVERY shipped sf (sf0.001 keys stop at
@@ -4396,38 +8720,61 @@ object SparkEntry {
       LakeTable.readLatest(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"), col("c_tier"))
         .orderBy("c_custkey")
-    }),
+    })(
+      // the union-payload evolution: rows the batch upserted carry the
+      // new column's value; every other surviving row reads NULL
+      """WITH base AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
+        | chg AS (
+        |   SELECT c_custkey,
+        |     CASE WHEN c_custkey % 7 = 3 THEN 'delete' ELSE 'upsert' END AS op,
+        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'MOVED' END AS c_mktsegment,
+        |     CAST(NULL AS DOUBLE) AS c_acctbal,
+        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'GOLD' END AS c_tier
+        |   FROM customer WHERE c_custkey BETWEEN 10 AND 110
+        |   UNION ALL
+        |   SELECT c_custkey + 100000, 'upsert', 'NEW', 0.0, 'GOLD'
+        |   FROM customer WHERE c_custkey % 50 = 0 AND c_custkey BETWEEN 10 AND 110)
+        |SELECT coalesce(c.c_custkey, b.c_custkey) AS c_custkey,
+        |       coalesce(c.c_mktsegment, b.c_mktsegment) AS c_mktsegment,
+        |       coalesce(c.c_acctbal, b.c_acctbal) AS c_acctbal,
+        |       c.c_tier AS c_tier
+        |FROM base b FULL OUTER JOIN chg c ON b.c_custkey = c.c_custkey
+        |WHERE c.op IS NULL OR c.op = 'upsert'
+        |ORDER BY c_custkey""".stripMargin),
     // time travel: after the commit above, snapshot v0 must still read
     // as the ORIGINAL table, byte-for-byte (the oracle is the plain
     // base projection)
-    "table_time_travel" -> ((s, d) => {
+    Q("table_time_travel", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-tt").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250)
       LakeTable.readVersion(s, dir, 0L).orderBy("c_custkey")
-    }),
+    })(
+      // snapshot v0 read AFTER v1 was committed == the untouched base
+      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
+        |ORDER BY c_custkey""".stripMargin),
     // CHANGE DATA FEED between two snapshots, derived from the
     // manifest diff alone: only the commit's rewritten/replaced files
     // are read (carried bytes are shared and CANNOT differ), and rows
     // rewritten unchanged (the rest of the touched files' key ranges)
     // are dropped by the null-safe compare. Oracle = classified FULL
     // OUTER diff of the recomputed before/after states
-    "table_change_feed" -> ((s, d) => {
+    Q("table_change_feed", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-cdf").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250)
       LakeTable.changesBetween(s, dir, 0L, 1L, "c_custkey")
         .orderBy("c_custkey", "_op")
-    }),
+    })(lakeChangeFeedTwinSql),
     // Bloom-indexed POINT LOOKUP maintained through commits: the
     // per-file filter store blooms only newly-written files (data
     // files are immutable), and the lookup probes driver-side, reads
     // possible files only, and still sees the merge's update — exact
     // (no false negatives), oracle = the filter over the recomputed
     // merged state
-    "table_bloom_lookup" -> ((s, d) => {
+    Q("table_bloom_lookup", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-bl").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.ensureBlooms(s, dir, "c_acctbal")
@@ -4441,21 +8788,25 @@ object SparkEntry {
       val (rows, _, _) = LakeTable.lookupVersion(
         s, dir, LakeTable.versions(dir).last, "c_acctbal", probe)
       rows.orderBy("c_custkey")
-    }),
+    })(
+      s"""$lakeMergeCtes
+         |SELECT c_custkey, c_mktsegment, c_acctbal FROM merged
+         |WHERE c_acctbal = (SELECT c_acctbal FROM customer WHERE c_custkey = 42)
+         |ORDER BY c_custkey""".stripMargin),
     // CHECK-constrained commit: the same merge through the validation
     // seam (enforcement is O(merged rows), carried files can't newly
     // violate) — a passing batch must read exactly like table_commit
-    "table_checked_commit" -> ((s, d) => {
+    Q("table_checked_commit", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-ck").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMergeChecked(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250, check = col("c_mktsegment").isNotNull)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
-    }),
+    })(lakeMergeTwinSql),
     // OPTIMIZE/ZORDER layout evolution: a full reclustering rewrite on
     // a NEW expression must be invisible to readers — same twin as
     // table_commit, same hash
-    "table_recluster" -> ((s, d) => {
+    Q("table_recluster", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-rc").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
@@ -4463,11 +8814,11 @@ object SparkEntry {
       LakeTable.commitRecluster(s, dir, "c_custkey", col("c_acctbal"),
         targetRowsPerFile = 250)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
-    }),
+    })(lakeMergeTwinSql),
     // SHALLOW CLONE: the clone's v0 references the source's files —
     // zero data copied; reading it must equal the source's merged
     // state (same twin as table_commit, which is the point)
-    "table_clone" -> ((s, d) => {
+    Q("table_clone", (s, d) => {
       val src = java.nio.file.Files.createTempDirectory("graft-lake-csrc").toString
       val cln = java.nio.file.Files.createTempDirectory("graft-lake-ccln").toString
       LakeTable.init(tableCommitBase(s, d), src, "c_custkey", nFiles = 8)
@@ -4475,11 +8826,11 @@ object SparkEntry {
         targetRowsPerFile = 250)
       LakeTable.cloneShallow(s, src, cln)
       LakeTable.readLatest(s, cln).orderBy("c_custkey")
-    }),
+    })(lakeMergeTwinSql),
     // DESCRIBE HISTORY off the manifests alone (no data file read):
     // row counts per snapshot across init → merge → compaction, the
     // compaction row proving reader-count invariance
-    "table_history" -> ((s, d) => {
+    Q("table_history", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-h").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
@@ -4488,7 +8839,12 @@ object SparkEntry {
         smallFileRows = 200, targetRowsPerFile = 1000)
       LakeTable.history(s, dir).select(col("version"), col("n_rows"))
         .orderBy("version")
-    }),
+    })(
+      s"""$lakeMergeCtes
+         |SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_rows FROM base
+         |UNION ALL SELECT 1, count(*) FROM merged
+         |UNION ALL SELECT 2, count(*) FROM merged
+         |ORDER BY version""".stripMargin),
     // the change feed FEEDING incremental view maintenance: a
     // per-segment aggregate view built at v0 stays current through the
     // commit by consuming changesBetween's pre/post images as signed
@@ -4496,7 +8852,7 @@ object SparkEntry {
     // the lake table maintains its own materialized views without
     // re-reading itself. Oracle = the aggregate over the recomputed
     // merged state
-    "table_view_maintenance" -> ((s, d) => {
+    Q("table_view_maintenance", (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft-lake-mv").toString
       LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
       val view0 = ChangeData.aggView(LakeTable.readVersion(s, dir, 0L),
@@ -4513,7 +8869,11 @@ object SparkEntry {
           ChangeData.mergeViews(view0, delta, Seq("c_mktsegment")),
           Seq("c_mktsegment"))
         .orderBy("c_mktsegment")
-    }),
+    })(
+      s"""$lakeMergeCtes
+         |SELECT c_mktsegment, count(*) AS n,
+         |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         |FROM merged GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // incremental materialized-view maintenance: the per-priority
     // order-revenue view is refreshed from the CHANGE BATCH alone
     // (base view + signed delta aggregate, never re-scanning the
@@ -4521,7 +8881,7 @@ object SparkEntry {
     // oracle. Base = orders with key%10!=0; the batch inserts the
     // %10==0 tranche and deletes every %7==0 order (retractions
     // spanning both base rows and same-batch inserts)
-    "incremental_view" -> ((s, d) => {
+    Q("incremental_view", (s, d) => {
       val o = t(s, d).orders
       val keys = Seq("o_orderpriority")
       val base = ChangeData.aggView(
@@ -4533,14 +8893,20 @@ object SparkEntry {
       val merged = ChangeData.mergeViews(
         base, ChangeData.aggDelta(batch, keys, "o_totalprice"), keys)
       ChangeData.presentView(merged, keys).orderBy("o_orderpriority")
-    }),
+    })(
+      // the incrementally-maintained view must equal the full recompute
+      // over the post-change fact set (everything except %7==0 orders)
+      """SELECT o_orderpriority, count(*) AS n,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM orders WHERE o_orderkey % 7 <> 0
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
     // incremental JOIN-view maintenance: the orders⟕customer
     // enrichment view refreshed through a dim batch (segment rewrites
     // + dim deletes) THEN a fact batch (price upserts, deletes, new
     // orders) — fact source never re-scanned; dim deltas broadcast
     // against the view. Oracle = full LEFT JOIN over the
     // deltas-applied tables
-    "incremental_join_view" -> ((s, d) => {
+    Q("incremental_join_view", (s, d) => {
       val tt = t(s, d)
       val fact = tt.orders.select(col("o_orderkey"), col("o_custkey").as("c_custkey"),
         col("o_totalprice"))
@@ -4566,20 +8932,40 @@ object SparkEntry {
             lit(42L).as("c_custkey"), lit(1.0).as("o_totalprice")))
       ChangeData.enrichViewApplyFact(v1, factDelta, dim1, "o_orderkey", "c_custkey")
         .orderBy("o_orderkey")
-    }),
+    })(
+      // the incrementally-maintained enrichment view == a full LEFT JOIN
+      // over the deltas-applied tables (deltas reproduced as CASE/filter
+      // algebra on the base tables)
+      """WITH dim1 AS (
+        |  SELECT c_custkey,
+        |    CASE WHEN c_custkey BETWEEN 100 AND 150 THEN 'MOVED' ELSE c_mktsegment END AS c_mktsegment,
+        |    CASE WHEN c_custkey BETWEEN 100 AND 150 THEN c_acctbal * 2 ELSE c_acctbal END AS c_acctbal
+        |  FROM customer WHERE c_custkey NOT BETWEEN 151 AND 160),
+        | fact1 AS (
+        |  SELECT o_orderkey, o_custkey AS c_custkey,
+        |    CASE WHEN o_orderkey % 100 = 7 THEN o_totalprice + 10.0 ELSE o_totalprice END AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 100 <> 13
+        |  UNION ALL
+        |  SELECT o_orderkey + 500000, 42, 1.0 FROM orders WHERE o_orderkey % 1000 = 21)
+        |SELECT f.o_orderkey, f.c_custkey, f.o_totalprice, d.c_mktsegment, d.c_acctbal
+        |FROM fact1 f LEFT JOIN dim1 d ON f.c_custkey = d.c_custkey
+        |ORDER BY o_orderkey""".stripMargin),
     // SCD2 dimension history from the order log: per-customer status
     // runs with validity intervals — two key-partitioned windows
-    "scd2_dimension" -> ((s, d) =>
+    Q("scd2_dimension", (s, d) =>
       ChangeData.scd2Intervals(t(s, d).orders,
           keyCol = "o_custkey", attrCol = "o_orderstatus",
           tsCol = "o_orderdate", tieCol = "o_orderkey")
-        .orderBy("o_custkey", "version")),
+        .orderBy("o_custkey", "version"))(
+      // SCD2 run-collapse + validity intervals, the naive two-window
+      // formulation
+      scd2TwinSql),
     // INCREMENTAL SCD2: history built from pre-1997 orders, the 1997+
     // tranche folded in as an append batch — untouched keys and closed
     // intervals carry verbatim, only open segments recompute (seeded by
     // the current row, versions continuing). Oracle = the SAME full-log
     // recompute twin as scd2_dimension: incremental == full IS the hash
-    "scd2_incremental" -> ((s, d) => {
+    Q("scd2_incremental", (s, d) => {
       val o = t(s, d).orders
       val cut = lit(java.sql.Date.valueOf("1997-01-01"))
       val hist = ChangeData.scd2Intervals(o.where(col("o_orderdate") < cut),
@@ -4592,13 +8978,17 @@ object SparkEntry {
           keyCol = "o_custkey", attrCol = "o_orderstatus",
           tsCol = "o_orderdate", tieCol = "o_orderkey")
         .orderBy("o_custkey", "version")
-    }),
+    })(
+      // the SAME twin grades the incremental path: scd2Apply over the
+      // date-split history+batch must equal the full recompute over the
+      // whole log — incremental-exactness IS the hash match
+      scd2TwinSql),
     // temporal AS-OF enrichment against the SCD2 dimension: each probe
     // joins the one status version valid at its date — an EQUI-key
     // hash join with the interval as residual (1:1 because intervals
     // partition the key's timeline); backdated probes (%97 band) keep
     // NULL, the LEFT-join warehouse convention
-    "scd2_asof_join" -> ((s, d) => {
+    Q("scd2_asof_join", (s, d) => {
       val dim = ChangeData.scd2Intervals(t(s, d).orders,
         keyCol = "o_custkey", attrCol = "o_orderstatus",
         tsCol = "o_orderdate", tieCol = "o_orderkey")
@@ -4611,50 +9001,125 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_custkey"), col("probe_date"),
           col("o_orderstatus").as("status_asof"))
         .orderBy("o_orderkey")
-    }),
+    })(
+      s"""$scd2DimCtes,
+         | probes AS (
+         |   SELECT o_orderkey, o_custkey,
+         |     CASE WHEN o_orderkey % 97 = 0 THEN o_orderdate - INTERVAL 20000 DAY
+         |          ELSE o_orderdate + INTERVAL 10 DAY END AS probe_date
+         |   FROM orders)
+         |SELECT p.o_orderkey, p.o_custkey, p.probe_date,
+         |       d.o_orderstatus AS status_asof
+         |FROM probes p LEFT JOIN dim d ON p.o_custkey = d.o_custkey
+         |  AND p.probe_date >= d.valid_from
+         |  AND (d.valid_to IS NULL OR p.probe_date < d.valid_to)
+         |ORDER BY o_orderkey""".stripMargin),
     // exact global row_number without a single-task sort: TeraSort
     // range exchange + per-partition rank + broadcast prefix offsets
-    "global_rank" -> ((s, d) =>
+    Q("global_rank", (s, d) =>
       TotalOrder.globalRank(
           t(s, d).lineitem.select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice")),
           Seq(desc("l_extendedprice"), asc("l_orderkey"), asc("l_linenumber")))
-        .orderBy("global_rank")),
+        .orderBy("global_rank"))(
+      // the TeraSort-shaped distributed rank == the naive global window
+      """SELECT l_orderkey, l_linenumber, l_extendedprice,
+        |  CAST(row_number() OVER (ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
+        |       AS BIGINT) AS global_rank
+        |FROM lineitem ORDER BY global_rank""".stripMargin),
 
     // ---- M3: multimodal plumbing (binary columns; decode layer stubbed) ----
-    "media_features" -> ((s, d) =>
+    Q("media_features", (s, d) =>
       Multimodal.featureBuckets(Multimodal.fakeMediaFromDocs(t(s, d).documents))
-        .orderBy("media_id", "bucket")),
-    "frame_sample" -> ((s, d) =>
+        .orderBy("media_id", "bucket"))(
+      // the codec-free byte histogram is SQL-expressible: bucket =
+      // byte // 16, weight = float32(cnt)/float32(len). Corpus is ASCII
+      // (verified), so per-character ascii() == the UTF-8 byte value.
+      """WITH ch AS (SELECT doc_id AS media_id, length(text) AS n, unnest(string_split(text, '')) AS c
+        |            FROM documents WHERE length(text) > 0),
+        | cnt AS (SELECT media_id, n, CAST(ascii(c) // 16 AS BIGINT) AS bucket, count(*) AS cnt
+        |          FROM ch GROUP BY media_id, n, ascii(c) // 16)
+        |SELECT media_id, bucket, CAST(CAST(cnt AS REAL) / CAST(n AS REAL) AS DOUBLE) AS weight
+        |FROM cnt ORDER BY media_id, bucket""".stripMargin),
+    Q("frame_sample", (s, d) =>
       Multimodal.sampleFrames(Multimodal.fakeMediaFromDocs(t(s, d).documents))
         .groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
-        .orderBy("media_id")),
+        .orderBy("media_id"))(
+      // deterministic frame arithmetic: ceil(bytes/64) frames, stride 4
+      """SELECT doc_id AS media_id,
+        | (CAST(ceil(length(text) / 64.0) AS BIGINT) + 3) // 4 AS n_frames
+        |FROM documents WHERE length(text) > 0 ORDER BY media_id""".stripMargin),
     // REAL codec path: PNGs encoded and decoded with javax.imageio
     // inside the plan; the luminance histogram of the decoded raster is
     // hash-checked against the fixture pattern's closed form in DuckDB
-    "image_features" -> ((s, d) =>
+    Q("image_features", (s, d) =>
       Multimodal.imageLumaHistogram(Multimodal.pngMediaFromDocs(t(s, d).documents))
-        .orderBy("media_id", "bucket")),
+        .orderBy("media_id", "bucket"))(
+      // the REAL decode path's twin: the fixture writes gray pixel
+      // v = ((id%256)*31 + x*7 + y*13) % 256 at (x, y), PNG is lossless,
+      // luminance of gray is v — so the decoded histogram equals the
+      // pattern's closed form evaluated over the pixel grid
+      """WITH m AS (SELECT doc_id, doc_id % 64 + 16 AS w, doc_id % 48 + 16 AS h FROM documents),
+        | px AS (SELECT doc_id, w, unnest(generate_series(0, w * h - 1)) AS p FROM m),
+        | v AS (SELECT doc_id,
+        |   ((((doc_id % 256) * 31 + (p % w) * 7 + (p // w) * 13) % 256) // 16) AS bucket FROM px)
+        |SELECT doc_id AS media_id, CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
+        |FROM v GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin),
     // fused decode→resize→features (one codec pass; the re-encoding
     // storage path resizeImage is pixel-proven in MultimodalSpec)
-    "image_resize_features" -> ((s, d) =>
+    Q("image_resize_features", (s, d) =>
       Multimodal.imageLumaHistogramResized(
           Multimodal.pngMediaFromDocs(t(s, d).documents), 32, 24)
-        .orderBy("media_id", "bucket")),
+        .orderBy("media_id", "bucket"))(
+      // nearest-neighbor remap src = (dst * srcDim) // dstDim composed
+      // into the same closed form, evaluated over the 32x24 output grid
+      """WITH m AS (SELECT doc_id, doc_id % 64 + 16 AS w, doc_id % 48 + 16 AS h FROM documents),
+        | px AS (SELECT doc_id, w, h, unnest(generate_series(0, 32 * 24 - 1)) AS p FROM m),
+        | v AS (SELECT doc_id,
+        |   ((((doc_id % 256) * 31 + (((p % 32) * w) // 32) * 7
+        |      + (((p // 32) * h) // 24) * 13) % 256) // 16) AS bucket FROM px)
+        |SELECT doc_id AS media_id, CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
+        |FROM v GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin),
     // REAL audio path: WAV PCM encoded and decoded with
     // javax.sound.sampled inside the plan; features over actual
     // decoded samples, hash-checked against the waveform's closed form
-    "audio_features" -> ((s, d) =>
+    Q("audio_features", (s, d) =>
       Multimodal.audioAmplitudeHistogram(Multimodal.wavMediaFromDocs(t(s, d).documents))
-        .orderBy("media_id", "bucket")),
-    "audio_frame_energy" -> ((s, d) =>
+        .orderBy("media_id", "bucket"))(
+      // the REAL audio path's twin: the fixture writes signed sample
+      // s = ((id%97)*31 + i*7919) % 65536 - 32768 at index i, WAV PCM is
+      // lossless — the decoded amplitude histogram equals the closed
+      // form over the sample grid
+      """WITH m AS (SELECT doc_id, (doc_id % 50 + 10) * 80 AS n FROM documents),
+        | ix AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS i FROM m),
+        | s AS (SELECT doc_id, ((doc_id % 97) * 31 + i * 7919) % 65536 - 32768 AS s FROM ix)
+        |SELECT doc_id AS media_id, CAST((s + 32768) // 4096 AS BIGINT) AS bucket, count(*) AS n_samples
+        |FROM s GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin),
+    Q("audio_frame_energy", (s, d) =>
       Multimodal.audioFrameEnergy(Multimodal.wavMediaFromDocs(t(s, d).documents))
-        .orderBy("media_id", "frame_idx")),
+        .orderBy("media_id", "frame_idx"))(
+      """WITH m AS (SELECT doc_id, (doc_id % 50 + 10) * 80 AS n FROM documents),
+        | ix AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS i FROM m),
+        | s AS (SELECT doc_id, i, ((doc_id % 97) * 31 + i * 7919) % 65536 - 32768 AS s FROM ix)
+        |SELECT doc_id AS media_id, CAST(i // 256 AS BIGINT) AS frame_idx,
+        |  CAST(sum(CAST(s AS BIGINT) * s) AS BIGINT) AS energy
+        |FROM s GROUP BY 1, 2 ORDER BY media_id, frame_idx""".stripMargin),
     // REAL video path: GVID frame container, every sampled frame
     // PNG-decoded via javax.imageio and featurized on actual pixels
-    "video_frame_features" -> ((s, d) =>
+    Q("video_frame_features", (s, d) =>
       Multimodal.videoFrameFeatures(Multimodal.videoFromDocs(t(s, d).documents))
-        .orderBy("media_id", "frame_idx", "bucket")),
+        .orderBy("media_id", "frame_idx", "bucket"))(
+      // the video path's twin: sampled frames f ∈ {0, 2, 4}, per-frame
+      // pattern id doc_id*7+f, same pixel closed form as image_features
+      """WITH m AS (SELECT doc_id, doc_id % 4 + 2 AS nf FROM documents),
+        | fr AS (SELECT doc_id, unnest(generate_series(0, nf - 1, 2)) AS f FROM m),
+        | px AS (SELECT doc_id, f, unnest(generate_series(0, 16 * 12 - 1)) AS p FROM fr),
+        | v AS (SELECT doc_id, f,
+        |   ((((doc_id * 7 + f) % 256) * 31 + (p % 16) * 7 + (p // 16) * 13) % 256) // 16 AS bucket
+        |   FROM px)
+        |SELECT doc_id AS media_id, CAST(f AS BIGINT) AS frame_idx,
+        |  CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
+        |FROM v GROUP BY 1, 2, 3 ORDER BY media_id, frame_idx, bucket""".stripMargin),
 
     // ---- M4: Structured Streaming (micro-batched file source; result
     // must converge to the batch tumbling agg, so it shares its oracle) ----
@@ -4662,47 +9127,59 @@ object SparkEntry {
     // watermark-bounded per-(type, day) counters; the cross-day
     // lookback math runs on the tiny finished daily relation — so the
     // batch oracle serves unchanged
-    "streaming_rolling_anomaly" -> ((s, d) => {
+    Q("streaming_rolling_anomaly", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
       val finished = EventStreams.runToMemory(ss, daily,
         s"stream_daily_${System.nanoTime()}")
       Series.scoreDailyAnomalies(finished).orderBy("key", "day")
-    }),
+    })(
+      // the streaming path converges to the identical daily relation
+      // (watermarked 1-day windows), so one twin serves both
+      rollingAnomalyTwin),
     // the grow/decay screen over the SAME streamed daily relation
-    "streaming_trend" -> ((s, d) => {
+    Q("streaming_trend", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
       val finished = EventStreams.runToMemory(ss, daily,
         s"stream_daily_t_${System.nanoTime()}")
       Series.trendFromDaily(finished).orderBy("key")
-    }),
+    })(
+      // streaming daily relation converges to the batch one exactly
+      trendSlopesTwin),
     // the WHEN-did-it-change monitor over the same streamed daily
     // relation: CUSUM peak math on the finished (key, day, n) rows —
     // the stream holds only watermark-bounded daily counters, so the
     // batch change_points oracle serves unchanged
-    "streaming_change_points" -> ((s, d) => {
+    Q("streaming_change_points", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
       val finished = EventStreams.runToMemory(ss, daily,
         s"stream_daily_cp_${System.nanoTime()}")
       Series.changePointsFromDaily(finished).orderBy("key")
-    }),
+    })(
+      // same streamed-daily convergence: the CUSUM monitor's stream
+      // maintains only the (key, day, n) counters the batch twin builds
+      // in its first CTE
+      changePointsTwinSql),
     // the decomposition monitor joins the streamed feed-health family
     // (trend/anomaly/change-point): watermark-bounded per-(key, day)
     // counters in the stream, the micro-integer STL finish on the
     // finished daily relation — the batch twin serves unchanged
-    "streaming_stl" -> ((s, d) => {
+    Q("streaming_stl", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
       val finished = EventStreams.runToMemory(ss, daily,
         s"stream_daily_stl_${System.nanoTime()}")
       Series.stlFromDaily(finished).orderBy("key", "day")
-    }),
+    })(
+      // the streamed daily relation converges to the batch one — the
+      // micro-integer STL twin serves unchanged
+      stlTwinSql),
     // behavior-shift monitor, streamed: per-(user, day) ordered
     // type sequences frozen by sort_array inside the stream's state
     // (bounded by a user's DAILY activity; day-close eviction under
@@ -4710,7 +9187,7 @@ object SparkEntry {
     // relation. Day-bounded adjacency BY DESIGN — day-crossing pairs
     // excluded on both engines — so this carries its own twin rather
     // than sharing event_transitions' whole-history one
-    "streaming_event_transitions" -> ((s, d) => {
+    Q("streaming_event_transitions", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val seqs = EventStreams.dailyTypeSeqs(EventStreams.readEventStream(ss, tmp))
@@ -4718,13 +9195,23 @@ object SparkEntry {
         s"stream_seqs_${System.nanoTime()}")
       EventStreams.transitionsFromSeqs(finished)
         .orderBy("prev_type", "event_type")
-    }),
+    })(
+      // DAY-BOUNDED transitions (the streaming monitor's deliberate
+      // grain): lag partitioned by (user, day) — day-crossing pairs
+      // excluded, exactly as the per-day sequence lists exclude them
+      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+        | o AS (SELECT user_id, event_type,
+        |        lag(event_type) OVER (PARTITION BY user_id, CAST(tsu AS DATE) ORDER BY tsu, event_id) AS prev_type FROM e),
+        | c AS (SELECT prev_type, event_type, count(*) AS n FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT prev_type, event_type, n,
+        | round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
+        |FROM c ORDER BY prev_type, event_type""".stripMargin),
     // token-distribution drift, streamed: the stream's state is the
     // per-word (c_old, c_new) counter pair — vocabulary-sized, the
     // same bound as the batch aggregate's hashmap — and the smoothed
     // KL finish runs on the finished counts, so the batch
     // corpus_drift oracle serves unchanged
-    "streaming_corpus_drift" -> ((s, d) => {
+    Q("streaming_corpus_drift", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val docs = graft.streaming.IngestPipeline.readDocStream(ss, src)
@@ -4738,28 +9225,36 @@ object SparkEntry {
       val finished = EventStreams.runToMemory(ss, m,
         s"stream_drift_${System.nanoTime()}")
       TextQuality.driftFromCounts(finished)
-    }),
-    "streaming_tumbling_agg" -> ((s, d) => {
+    })(
+      // the streamed drift monitor maintains exactly the (word, c_old,
+      // c_new) counters the batch twin's m CTE builds — one twin, both
+      // paths
+      corpusDriftTwin),
+    Q("streaming_tumbling_agg", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val streamed = EventStreams.tumblingCounts(EventStreams.readEventStream(ss, tmp))
       EventStreams.runToMemory(ss, streamed, s"stream_tumbling_${System.nanoTime()}")
         .orderBy("win_start", "event_type")
-    }),
-    "streaming_sliding_agg" -> ((s, d) => {
+    })(
+      // the streaming pipeline must converge to the identical batch answer
+      tumblingAggTwinSql),
+    Q("streaming_sliding_agg", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val streamed = EventStreams.slidingCounts(EventStreams.readEventStream(ss, tmp))
       EventStreams.runToMemory(ss, streamed, s"stream_sliding_${System.nanoTime()}")
         .orderBy("win_start")
-    }),
-    "streaming_session_agg" -> ((s, d) => {
+    })(slidingAggTwinSql),
+    Q("streaming_session_agg", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val streamed = EventStreams.sessionize(EventStreams.readEventStream(ss, tmp))
       EventStreams.runToMemory(ss, streamed, s"stream_session_${System.nanoTime()}")
         .orderBy("user_id", "session_start")
-    }),
+    })(
+      // the streaming session pipeline converges to the identical batch answer
+      sessionAggTwinSql),
     // stream-stream interval join, Append mode; converges to the batch
     // interval_join, so it shares that oracle. The watermark is pinned
     // far beyond the corpus span (like streaming_dedup): exactness must
@@ -4767,7 +9262,7 @@ object SparkEntry {
     // with a 2h watermark, clicks arriving a batch behind their
     // purchases could be dropped as late and silently break the shared
     // oracle.
-    "streaming_interval_join" -> ((s, d) => {
+    Q("streaming_interval_join", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val streamed = EventStreams.clickPurchaseJoin(EventStreams.readEventStream(ss, tmp),
@@ -4775,14 +9270,17 @@ object SparkEntry {
       EventStreams.runToMemory(ss, streamed, s"stream_ssjoin_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("purchase_id", "click_id")
-    }),
+    })(
+      // the stream-stream join converges to the identical batch answer,
+      // so it shares the literal same oracle
+      IntervalJoinSql),
     // stream-stream LEFT OUTER interval join: unmatched purchases
     // surface with NULL click ids from state EVICTION after the
     // sentinel flush event pushes both watermarks past the corpus (the
     // watermark delay still exceeds the corpus span, so no REAL event
     // is ever late regardless of file order). Converges to the batch
     // LEFT JOIN — its own oracle below.
-    "streaming_interval_left_join" -> ((s, d) => {
+    Q("streaming_interval_left_join", (s, d) => {
       val tmp = stageEventsWithFlush(s, d)
       val ss = streamSession(s)
       val streamed = EventStreams.clickPurchaseLeftJoin(EventStreams.readEventStream(ss, tmp),
@@ -4791,14 +9289,23 @@ object SparkEntry {
           org.apache.spark.sql.streaming.OutputMode.Append())
         .where(col("user_id") =!= -1L) // drop the sentinel's own pair
         .orderBy("purchase_id", "click_id")
-    }),
+    })(
+      // LEFT JOIN twin of the interval join: the unmatched purchases
+      // carry NULL click_id — exactly the rows streaming eviction emits
+      """WITH e AS (SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events)
+        |SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
+        |FROM (SELECT * FROM e WHERE event_type = 'purchase') p
+        |LEFT JOIN (SELECT * FROM e WHERE event_type = 'click') c
+        | ON c.user_id = p.user_id
+        | AND c.tsu >= p.tsu - INTERVAL '30 minutes' AND c.tsu <= p.tsu
+        |ORDER BY purchase_id, click_id""".stripMargin),
     // streaming ANN ingest: embedding drops folded into the PERSISTED
     // IVF×PQ index per micro-batch (frozen geometry, batch-keyed
     // cells/codes commits, drift decisions recorded against the
     // build-time baseline). Output = queries answered by the GROWN
     // index — rows-only (approximate ANN); batch≡streaming equality
     // and replay idempotence are StreamingSpec's
-    "streaming_ann_ingest" -> ((s, d) => {
+    Q("streaming_ann_ingest", (s, d) => {
       val emb = t(s, d).embeddings.select(col("vec_id"), col("embedding"))
       val base = emb.where(col("vec_id") % 7 =!= 3)
       val dir = java.nio.file.Files.createTempDirectory("graft-annstream").toString
@@ -4812,7 +9319,8 @@ object SparkEntry {
       Similarity.ivfPqQuery(Similarity.ivfPqReadGrown(s, dir),
           emb.where(col("vec_id") % 70 === 3), emb)
         .orderBy("q_id", "rank")
-    }),
+    })(
+      ivfPqQueryTwinSql(" AND vec_id % 7 <> 3", " AND vec_id % 7 <> 3", "vec_id % 70 = 3")),
     // the streaming ingest's EXACT invariant, hash-checked: after the
     // stream drains, the grown index's CELLS relation must hold every
     // seed AND ingested vector exactly once, each assigned to its
@@ -4821,7 +9329,7 @@ object SparkEntry {
     // double-commit, or a drifted assignment all unhash it. The
     // approximate part (PQ codes → query answers) stays
     // streaming_ann_ingest's (rows-only) and StreamingSpec's
-    "streaming_ann_cells" -> ((s, d) => {
+    Q("streaming_ann_cells", (s, d) => {
       val emb = t(s, d).embeddings.select(col("vec_id"), col("embedding"))
       val base = emb.where(col("vec_id") % 7 =!= 3)
       val dir = java.nio.file.Files.createTempDirectory("graft-anncells").toString
@@ -4834,11 +9342,22 @@ object SparkEntry {
       graft.streaming.VectorIngest.runAnnIngest(ss, src, dir)
       Similarity.ivfPqReadGrown(s, dir).cells
         .select(col("vec_id"), col("cell")).orderBy("vec_id")
-    }),
+    })(
+      // the frozen-geometry cells relation is pure cosine argmax — any
+      // lost batch, double-commit replay, or drifted assignment unhashes
+      s"""WITH cents AS (SELECT vec_id AS cell, embedding AS ce
+         |               FROM embeddings WHERE vec_id % 10 = 0${coarseGuardOn("embeddings", " AND vec_id % 7 <> 3")} AND vec_id % 7 <> 3),
+        | sims AS (SELECT e.vec_id, c.cell,
+        |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) AS sim
+        |   FROM embeddings e CROSS JOIN cents c)
+        |SELECT vec_id, cell FROM (
+        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
+        |  FROM sims) z
+        |WHERE rn = 1 ORDER BY vec_id""".stripMargin),
     // streaming exact dedup: the source dir carries every event TWICE
     // (a simulated at-least-once redelivery); the deduped stream must
     // equal the single-copy batch table exactly
-    "streaming_dedup" -> ((s, d) => {
+    Q("streaming_dedup", (s, d) => {
       // source dir carries every event TWICE (2 copies × 2 files)
       val tmp = stageEvents(s, d, copies = 2, filesPerCopy = 2)
       // delay >> the corpus's ~30-day span: nothing may be dropped as
@@ -4850,12 +9369,14 @@ object SparkEntry {
       EventStreams.runToMemory(ss, deduped, s"stream_dedup_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("event_id")
-    }),
+    })(
+      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value
+        |FROM events ORDER BY event_id""".stripMargin),
     // stream-static enrichment: the event stream broadcast-joined to
     // the static customer dimension each micro-batch (no join state),
     // rolled up per day × market segment; converges to the identical
     // batch join+agg, which is the oracle
-    "streaming_static_join" -> ((s, d) => {
+    Q("streaming_static_join", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val dim = t(ss, d).customer.select(col("c_custkey"), col("c_mktsegment"))
@@ -4863,12 +9384,18 @@ object SparkEntry {
         EventStreams.readEventStream(ss, tmp), dim)
       EventStreams.runToMemory(ss, streamed, s"stream_enrich_${System.nanoTime()}")
         .orderBy("win_start", "c_mktsegment")
-    }),
+    })(
+      // stream-static enrichment converges to the identical batch
+      // join+agg (the static side carries no streaming state)
+      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS win_start, c_mktsegment,
+        | count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events JOIN customer ON user_id = c_custkey
+        |GROUP BY win_start, c_mktsegment ORDER BY win_start, c_mktsegment""".stripMargin),
     // bounded heavy-hitter state: a per-user Misra-Gries summary held
     // in typed transformWithState state (RocksDB provider), folded
     // across micro-batches; capacity 8 ≥ the 5 distinct event types,
     // so the drained stream equals the batch group-count top-1 exactly
-    "streaming_state_topk" -> ((s, d) => {
+    Q("streaming_state_topk", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -4887,12 +9414,20 @@ object SparkEntry {
       table.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
         .select(col("user_id"), col("top_type"), col("n_top"))
         .orderBy("user_id")
-    }),
+    })(
+      // capacity ≥ distinct types makes the Misra-Gries summary exact,
+      // so the streaming state answer is the batch top-1 per user
+      """WITH counts AS (SELECT user_id, event_type, count(*) AS n FROM events GROUP BY 1, 2),
+        | ranked AS (SELECT user_id, event_type, n,
+        |   row_number() OVER (PARTITION BY user_id ORDER BY n DESC, event_type) AS rn
+        |   FROM counts)
+        |SELECT user_id, event_type AS top_type, n AS n_top FROM ranked WHERE rn = 1
+        |ORDER BY user_id""".stripMargin),
     // streaming ingest through the size-governed sink: micro-batches
     // land replay-idempotent AND compacted (foreachBatch +
     // Sinks.writeCompacted), then the landed table is aggregated — the
     // whole loop (stream → sink → scan) must reproduce the batch answer
-    "streaming_compacted_sink" -> ((s, d) => {
+    Q("streaming_compacted_sink", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
       val ss = streamSession(s)
       val out = java.nio.file.Files.createTempDirectory("graft-fbc-sink").toString
@@ -4903,7 +9438,12 @@ object SparkEntry {
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("value")).as("sum_value"))
         .orderBy("user_id")
-    }),
+    })(
+      // stream → compacted sink → scan must reproduce the plain batch agg
+      """SELECT user_id, count(*) AS n,
+        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events WHERE event_type = 'purchase'
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
     // the CONTINUOUS corpus-ingest pipeline e2e: a 4-file document
     // stream → per-batch min-id dedup → anti-join against the growing
     // persisted digest store (seeded with the even-id history) →
@@ -4915,7 +9455,7 @@ object SparkEntry {
     // Luhn scrub → NFC → weight-biased priority sample → curriculum
     // shard assignment — each stage proven alone elsewhere; this
     // proves they compose
-    "clean_curate_e2e" -> ((s, d) => {
+    Q("clean_curate_e2e", (s, d) => {
       val fx = t(s, d).documents.select(col("doc_id"),
         concat(col("text"), Cleaning.cardFixtureSuffix(col("doc_id")),
           nfcSuffixCol(col("doc_id"))).as("text"))
@@ -4927,12 +9467,45 @@ object SparkEntry {
         sizeHint = Some(101L)) // priority sample ≤ k+1 rows by contract
       sampled.join(shards.select(col("doc_id"), col("phase"), col("shard"), col("seq")), "doc_id")
         .orderBy("doc_id")
-    }),
+    })(
+      // every stage's twin chained: scrub CTEs → nfc clean → priority
+      // keys/threshold → curriculum histogram/phases — one hash
+      s"""${cardScrubCtes(s"WITH fx AS (SELECT doc_id, text || $CardSuffixSql || $NfcSuffixSql AS text FROM documents)")},
+         | cl AS (SELECT doc_id, nfc_normalize(list_reduce(list_prepend(text, valids), (a, b) -> replace(a, b, '<CARD>'))) AS text FROM v),
+         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
+         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
+         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
+         |   FROM cl WHERE length(text) > 0),
+         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
+         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
+         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
+         | samp AS (SELECT doc_id, weight,
+         |   round(greatest(CAST(weight AS DOUBLE),
+         |     CASE WHEN (SELECT cnt FROM stats) = 101
+         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
+         |          ELSE 0.0 END), 6) AS w_est
+         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
+         | sc AS (SELECT doc_id, weight AS score FROM samp),
+         | h AS (SELECT score, count(*) AS cnt FROM sc GROUP BY 1),
+         | r AS (SELECT score,
+         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
+         |   sum(cnt) OVER () AS n FROM h),
+         | pr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
+         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM r),
+         | j AS (SELECT sc.doc_id, sc.score,
+         |   CAST(least(3, floor(pr.pr * 4)) AS BIGINT) AS phase,
+         |   CAST((((sc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS shard,
+         |   (((sc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
+         |  FROM sc JOIN pr USING (score))
+         |SELECT samp.doc_id, samp.weight, samp.w_est, j.phase, j.shard,
+         | CAST(row_number() OVER (PARTITION BY j.phase, j.shard ORDER BY j.ord, j.doc_id) AS BIGINT) AS seq
+         |FROM samp JOIN j ON j.doc_id = samp.doc_id
+         |ORDER BY samp.doc_id""".stripMargin),
     // the crawl front door, streaming: container files arrive one per
     // micro-batch (binaryFile stream), records split and main text
     // extracted per batch — stateless through the engine, so the
     // drained stream equals batch warc_ingest and SHARES its twin
-    "streaming_warc_ingest" -> ((s, d) => {
+    Q("streaming_warc_ingest", (s, d) => {
       val src = stageLayout(s, d, "warcstream") { tmp =>
         val docs = t(s, d).documents
         val id = col("doc_id")
@@ -4960,13 +9533,16 @@ object SparkEntry {
       EventStreams.runToMemory(ss, out, s"stream_warc_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("url")
-    }),
+    })(
+      // the streaming front door answers exactly what the batch one
+      // does — one twin serves both (the bm25 trio device)
+      warcIngestTwinSql),
     // the cleaning family as a streaming stage: per micro-batch (one
     // file per trigger) the SAME deterministic dirt is stitched on,
     // Luhn-scrubbed and NFC-normalized — stateless narrow transforms
     // ride the micro-batch engine unchanged, so the drained stream
     // equals the batch clean chain, which is the oracle
-    "streaming_clean_ingest" -> ((s, d) => {
+    Q("streaming_clean_ingest", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -4982,7 +9558,14 @@ object SparkEntry {
       EventStreams.runToMemory(ss, cleaned, s"stream_clean_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("doc_id")
-    }),
+    })(
+      // batch twin of the streaming clean chain: same dirt, same scrub,
+      // same normalization — micro-batching must be invisible
+      s"""${cardScrubCtes(s"WITH fx AS (SELECT doc_id, text || $CardSuffixSql || $NfcSuffixSql AS text FROM documents)")}
+         |SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
+         | CAST(len(valids) AS BIGINT) AS n_cards,
+         | nfc_normalize(list_reduce(list_prepend(text, valids), (a, b) -> replace(a, b, '<CARD>'))) AS clean
+         |FROM v ORDER BY doc_id""".stripMargin),
     // the corpus SAMPLER streamed: per micro-batch only the
     // batch-local top-(k+1) priority frontier lands (k-bounded state
     // — the frontier is associative, so batch frontiers compose
@@ -4991,7 +9574,7 @@ object SparkEntry {
     // streaming DSIR: frozen importance model broadcast against the
     // doc stream, fixed-threshold gate, zero cross-batch state — the
     // drained scores equal the one-shot batch scorer (the oracle)
-    "streaming_dsir_ingest" -> ((s, d) => {
+    Q("streaming_dsir_ingest", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val docs = t(ss, d).documents
@@ -5005,12 +9588,32 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-dsir").toString
       graft.streaming.IngestPipeline.runDsirIngest(ss, stream, model, out)
         .orderBy("doc_id")
-    }),
+    })(
+      // the streaming scorer's twin = the batch dsir_select chain up to
+      // the per-doc scores, thresholded at logw >= 0 instead of ranked
+      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
+         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
+         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
+         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
+         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
+         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
+         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
+         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
+         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
+         | delta AS (SELECT word,
+         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
+         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
+         |   FROM vocab CROSS JOIN sizes),
+         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
+         |   FROM pw JOIN delta USING (word) GROUP BY 1)
+         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
+         |  sl >= 0 AS selected
+         |FROM scored ORDER BY doc_id""".stripMargin),
     // the streaming DSIR gate under the m-bounded hashed model: the
     // per-batch broadcast is AT MOST m rows however large the firehose
     // vocabulary grows — the dsir_select_hashed posture applied to the
     // continuous feed (same frozen-model, zero-cross-batch-state shape)
-    "streaming_dsir_ingest_hashed" -> ((s, d) => {
+    Q("streaming_dsir_ingest_hashed", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val docs = t(ss, d).documents
@@ -5025,8 +9628,16 @@ object SparkEntry {
       graft.streaming.IngestPipeline.runDsirIngest(ss, stream, model, out,
         scorer = Corpus.dsirScoreHashed(_, _, m = 1024))
         .orderBy("doc_id")
-    }),
-    "streaming_priority_sample" -> ((s, d) => {
+    })(
+      // the hashed streaming gate's twin = the dsir_select_hashed chain
+      // up to the per-doc scores, thresholded at logw >= 0 (the same
+      // rank-free cut streaming_dsir_ingest uses — a stream cannot rank
+      // globally without unbounded state)
+      s"""$hashedDsirScoredCtes
+         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
+         |  sl >= 0 AS selected
+         |FROM scored ORDER BY doc_id""".stripMargin),
+    Q("streaming_priority_sample", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val stream = ss.readStream
@@ -5036,8 +9647,11 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-psample").toString
       graft.streaming.IngestPipeline.runPrioritySampleIngest(ss, stream, out, k = 200)
         .orderBy("doc_id")
-    }),
-    "streaming_pipeline_ingest" -> ((s, d) => {
+    })(
+      // the drained stream's union of batch-local top-201 frontiers
+      // finishes to the identical sample — one twin serves both
+      prioritySampleTwinSql),
+    Q("streaming_pipeline_ingest", (s, d) => {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-ingest-store").toString
@@ -5053,41 +9667,67 @@ object SparkEntry {
           // oracle hash ALSO proves the runtime-filter path loses nothing
           bloomBits = 1L << 20)
         .orderBy("doc_id", "chunk_idx")
-    }),
+    })(
+      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
+         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
+         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
+         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
+         | n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
+         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
+         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
+         |          WHERE $HashPermille < r.keep_permille),
+         | c AS (SELECT doc_id, lang, text,
+         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
+         | u AS (SELECT doc_id, lang, text, n_chunks,
+         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+         |SELECT doc_id, lang, chunk_idx,
+         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
     // streaming CDC → current snapshot: foreachBatch maintains a
     // versioned copy-on-write latest-image table, LWW by (ts,
     // event_id). The source redelivers every event twice (2 copies ×
     // 2 files) — LWW absorbs the duplicates with no dedup operator;
     // the oracle is the batch argmax per user over the SINGLE-copy
     // table
-    "streaming_latest_image" -> ((s, d) => {
+    Q("streaming_latest_image", (s, d) => {
       val tmp = stageEvents(s, d, copies = 2, filesPerCopy = 2)
       val ss = streamSession(s)
       val table = java.nio.file.Files.createTempDirectory("graft-cow-latest").toString
       EventStreams.runLatestImageMerge(ss, tmp, table).orderBy("user_id")
-    }),
+    })(
+      // the versioned CoW latest-image table must equal the batch argmax
+      // per user (LWW by (ts, event_id)) over the single-copy events
+      latestImageTwinSql),
     // the same CDC materialization, committed INTO a LakeTable: every
     // micro-batch is a version-pinned LWW commit with interval-pruned
     // partial rewrites and time travel across batch boundaries; the
     // doubled source (2 copies × 2 files) proves redelivery-safety
     // through the oracle, which is the same batch argmax
-    "streaming_table_commits" -> ((s, d) => {
+    Q("streaming_table_commits", (s, d) => {
       val tmp = stageEvents(s, d, copies = 2, filesPerCopy = 2)
       val ss = streamSession(s)
       val table = java.nio.file.Files.createTempDirectory("graft-lake-cdc").toString
       EventStreams.runLatestImageLake(ss, tmp, table).orderBy("user_id")
-    }),
+    })(
+      // LakeTable-committed variant: same final image, same oracle —
+      // the pruned partial rewrites are reader-invisible
+      latestImageTwinSql),
     // partitioned parquet layout + partition pruning: only the matching
     // o_orderpriority directory is scanned (SourcesSpec asserts the
     // PartitionFilters reach the file index)
-    "partitioned_scan" -> ((s, d) => {
+    Q("partitioned_scan", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
       t(s, d).orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
       s.read.parquet(tmp).where(col("o_orderpriority") === "1-URGENT")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
         .orderBy(col("o_orderstatus"))
-    }),
+    })(
+      """SELECT o_orderstatus, count(*) AS n,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // file-level data skipping: orders clustered on o_totalprice into
     // 16 files + a per-file min/max manifest; the range scan consults
     // the manifest and loads only intersecting files (the spec counts
@@ -5097,7 +9737,7 @@ object SparkEntry {
     // custkey interval spans the domain, so min/max pruning keeps all
     // 16 files while the blooms keep only the ones that might hold the
     // customer. No false negatives: the result is exact (the oracle)
-    "bloom_pruned_scan" -> ((s, d) => {
+    Q("bloom_pruned_scan", (s, d) => {
       val dir = stageLayout(s, d, "bloomscan") { tmp =>
         val o = t(s, d).orders.select(col("o_orderkey"), col("o_custkey"),
           col("o_orderdate"), col("o_totalprice"))
@@ -5111,8 +9751,14 @@ object SparkEntry {
         s, s.read.parquet(s"$dir/_blooms"), "o_custkey", 42L)
       df.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
-    "manifest_pruned_scan" -> ((s, d) => {
+    })(
+      // the manifest-pruned scan must equal the plain full-scan filter —
+      // skipping may never change an answer
+      // bloom skipping is exact: same rows as the unpruned point lookup
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders WHERE o_custkey = 42
+        |ORDER BY o_orderkey""".stripMargin),
+    Q("manifest_pruned_scan", (s, d) => {
       val dir = stageLayout(s, d, "price") { tmp =>
         graft.sources.StatsManifest.writeClustered(t(s, d).orders, tmp,
           col("o_totalprice"), Seq("o_totalprice"), nFiles = 16)
@@ -5122,12 +9768,16 @@ object SparkEntry {
       df.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
+    })(
+      """SELECT o_orderstatus, count(*) AS n,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders WHERE o_totalprice >= 200000.0 AND o_totalprice <= 300000.0
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // multi-dimensional skipping: the same table clustered on the
     // bit-interleaved Z-value of (custkey, price bucket) — BOTH box
     // dimensions get file-level min/max locality, so a 2-D box prunes
     // where a linear sort layout cannot (ZOrderSpec proves the gap)
-    "zorder_scan" -> ((s, d) => {
+    Q("zorder_scan", (s, d) => {
       val dir = stageLayout(s, d, "zorder") { tmp =>
         graft.sources.StatsManifest.writeClustered(t(s, d).orders, tmp,
           graft.sources.StatsManifest.zValue(col("o_custkey"), floor(col("o_totalprice") / 10000)),
@@ -5139,12 +9789,12 @@ object SparkEntry {
       df.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
+    })(boxScanTwinSql),
     // Hilbert-curve clustering over the SAME box predicates: strictly
     // better locality than the Z interleave (consecutive curve
     // positions are always grid-adjacent), so the same manifest prunes
     // more files — StatsManifestSpec counts both
-    "hilbert_scan" -> ((s, d) => {
+    Q("hilbert_scan", (s, d) => {
       val dir = stageLayout(s, d, "hilbert") { tmp =>
         graft.sources.StatsManifest.writeClustered(t(s, d).orders, tmp,
           graft.functions.HilbertIndex2.hilbert(
@@ -5157,12 +9807,15 @@ object SparkEntry {
       df.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
+    })(
+      // pruning changes which files are READ, never the answer — the
+      // oracle is the plain filtered aggregate, same as zorder_scan
+      boxScanTwinSql),
     // 3-D z-order: the k-ary interleave (zValueN) clusters custkey ×
     // price-bucket × orderkey-bucket at once, so a 3-predicate box
     // prunes files on ALL THREE dimensions (StatsManifestSpec counts
     // the skips vs a linear layout)
-    "zorder3_scan" -> ((s, d) => {
+    Q("zorder3_scan", (s, d) => {
       val dir = stageLayout(s, d, "zorder3") { tmp =>
         graft.sources.StatsManifest.writeClustered(t(s, d).orders, tmp,
           graft.sources.StatsManifest.zValueN(Seq(
@@ -5177,9 +9830,15 @@ object SparkEntry {
       df.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
+    })(
+      """SELECT o_orderstatus, count(*) AS n,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders WHERE o_custkey >= 300 AND o_custkey <= 600
+        | AND o_totalprice >= 100000.0 AND o_totalprice <= 200000.0
+        | AND o_orderkey >= 10000 AND o_orderkey <= 40000
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // ORC source/sink round trip: parquet -> orc -> orc scan -> agg
-    "orc_roundtrip" -> ((s, d) => {
+    Q("orc_roundtrip", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
       t(s, d).orders.select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .write.mode("overwrite").orc(tmp)
@@ -5187,9 +9846,12 @@ object SparkEntry {
         .groupBy(col("o_orderpriority"))
         .agg(graft.functions.dsum2(col("o_totalprice")).as("sum_price"), count(lit(1)).as("n"))
         .orderBy(col("o_orderpriority"))
-    }),
+    })(
+      """SELECT o_orderpriority,
+        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
     // Spark 4 built-in XML datasource (rowTag records)
-    "xml_roundtrip" -> ((s, d) => {
+    Q("xml_roundtrip", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-xml").toString
       t(s, d).nation.select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .write.mode("overwrite").option("rowTag", "nation").format("xml").save(tmp)
@@ -5199,15 +9861,27 @@ object SparkEntry {
         .groupBy(col("n_regionkey"))
         .agg(count(lit(1)).as("n"), min(col("n_name")).as("first_name"))
         .orderBy(col("n_regionkey"))
-    }),
+    })(
+      """SELECT n_regionkey, count(*) AS n, min(n_name) AS first_name
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
     // opaque-binary media ingestion: one row per file via the
     // binaryFile source; byte counts measured on the content column
     // prove the blobs flowed through the plan (sources.BinaryMedia)
-    "binary_source" -> ((s, d) => {
+    Q("binary_source", (s, d) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-bin").toString
       graft.sources.BinaryMedia.writeDocFiles(t(s, d).documents, tmp)
       graft.sources.BinaryMedia.docByteSizes(s, tmp).orderBy("doc_id")
-    }))
+    })(
+      // strlen = BYTE length in DuckDB; Spark measures length(content)
+      // on the binary column — both count UTF-8 bytes
+      """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes
+        |FROM documents ORDER BY doc_id""".stripMargin))
+
+  /** Name → Spark build, for every entry; builds no twin. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.queries
+
+  /** Name → DuckDB twin SQL, for every `Q` entry; built once, on first use. */
+  lazy val oracleSql: Map[String, String] = registry.oracleSql
 
   /** The C-ispunct character class, RE2 spelling, for the DuckDB twins. */
   private val P = "[!-/:-@\\[-`{-~]"
@@ -5808,6 +10482,69 @@ object SparkEntry {
     val w = 1.0 / (math.log(r + 1.0) / math.log(2.0))
     (r.toLong, BigDecimal(w).setScale(12, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
   }
+
+  /** The exact top-100 word count: the plain top-k and both aggregate
+    * top-k operators (`topk_udaf`, `topk_imperative`) must all return it. */
+  private lazy val wordcountTop100TwinSql: String =
+    s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY cnt DESC, word LIMIT 100"
+
+  /** Hourly tumbling windows, batch and streamed: the streaming pipeline
+    * converges to the batch answer. */
+  private lazy val tumblingAggTwinSql: String =
+    """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS win_start, event_type,
+      | count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY win_start, event_type ORDER BY win_start, event_type""".stripMargin
+
+  /** One-hour windows sliding by 30 minutes, batch and streamed. */
+  private lazy val slidingAggTwinSql: String =
+    """WITH e AS (SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS b, value FROM events),
+      | x AS (SELECT b AS win_start, value FROM e
+      |        UNION ALL SELECT b - INTERVAL '30 minutes' AS win_start, value FROM e)
+      |SELECT win_start, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM x GROUP BY win_start ORDER BY win_start""".stripMargin
+
+  /** 30-minute-gap sessions per user, batch and streamed. */
+  private lazy val sessionAggTwinSql: String =
+    """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS tsu FROM events),
+      | o AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
+      | f AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s FROM o),
+      | s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f)
+      |SELECT user_id, min(tsu) AS session_start, count(*) AS n_events,
+      | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
+
+  /** Daily CUSUM change point per event type, batch and streamed. */
+  private lazy val changePointsTwinSql: String =
+    """WITH daily AS (SELECT event_type AS key, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, count(*) AS n
+      |               FROM events GROUP BY 1, 2),
+      | r AS (SELECT key, day, n,
+      |        CAST(row_number() OVER (PARTITION BY key ORDER BY day) AS BIGINT) AS i,
+      |        CAST(sum(n) OVER (PARTITION BY key ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run,
+      |        count(*) OVER (PARTITION BY key) AS n_days,
+      |        CAST(sum(n) OVER (PARTITION BY key) AS BIGINT) AS total
+      |        FROM daily),
+      | c AS (SELECT key, day, n_days, n_days * run - i * total AS cusum_n
+      |        FROM r WHERE n_days >= 5),
+      | k AS (SELECT key, day, n_days, cusum_n,
+      |        row_number() OVER (PARTITION BY key ORDER BY abs(cusum_n) DESC, day) AS rk FROM c)
+      |SELECT key, day AS change_day, n_days,
+      | round(CAST(cusum_n AS DOUBLE) / CAST(n_days AS DOUBLE), 6) AS peak_cusum
+      |FROM k WHERE rk = 1 ORDER BY key""".stripMargin
+
+  /** The two-predicate box aggregate over orders: Z-order and Hilbert
+    * layouts prune different files, never change the answer. */
+  private lazy val boxScanTwinSql: String =
+    """SELECT o_orderstatus, count(*) AS n,
+      | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+      |FROM orders WHERE o_custkey >= 300 AND o_custkey <= 600
+      | AND o_totalprice >= 100000.0 AND o_totalprice <= 200000.0
+      |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+
+  /** The crawl edge list, batch-extracted and drained from the stream. */
+  private lazy val outlinksTwinSql: String =
+    s"""$CrawlEdgesCte
+       |SELECT src, dst FROM edges ORDER BY src, dst""".stripMargin
 
   /** One argmax twin serves both CDC materializations: the hand-rolled
     * version-dir table (`streaming_latest_image`) and the LakeTable-
@@ -6695,5498 +11432,6 @@ object SparkEntry {
        |    FROM htd WHERE has2
        |  UNION ALL SELECT doc_id, CASE WHEN not1 THEN 1 ELSE 2 END, 1, 2, false,
        |    CAST(m3 AS VARCHAR) FROM htd WHERE has2)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "wordcount" ->
-      s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY word",
-    "wordcount_top100" ->
-      s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY cnt DESC, word LIMIT 100",
-    "wordcount_x8" ->
-      s"$W SELECT word, count(*) * 8 AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY word",
-    "distinct_words" ->
-      s"$W SELECT DISTINCT word FROM w WHERE length(word) > 0 ORDER BY word",
-    "word_lengths_hist" ->
-      s"""$W SELECT CAST(length(word) AS INTEGER) AS len, count(*) AS cnt
-         | FROM w WHERE length(word) > 0 GROUP BY len ORDER BY len""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-        | CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT o_orderkey, o_orderdate,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_orderdate ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q5_nation_revenue" ->
-      """SELECT n_name,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM region
-        |JOIN nation ON n_regionkey = r_regionkey
-        |JOIN customer ON c_nationkey = n_nationkey
-        |JOIN orders ON o_custkey = c_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "bucketed_join" ->
-      """SELECT c_custkey, count(*) AS n_orders,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |FROM customer JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-
-    "cbo_star_join" ->
-      """SELECT c_mktsegment, count(*) AS n_items,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "left_join_agg" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders,
-        | coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS total_spend
-        |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-
-    "rollup_agg" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag, coalesce(l_linestatus, 'ALL') AS linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-
-    "cube_agg" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus, coalesce(o_orderpriority, 'ALL') AS orderpriority,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY orderstatus, orderpriority""".stripMargin,
-
-    "scalar_funcs" ->
-      """SELECT p_partkey, upper(p_name) AS name_upper, CAST(length(p_name) AS INTEGER) AS name_len,
-        | substring(p_type, 1, 6) AS type_prefix, string_split(p_type, ' ')[1] AS type_head,
-        | p_retailprice * 1.1 AS marked_up,
-        | CASE WHEN p_size > 25 THEN 'large' WHEN p_size > 10 THEN 'medium' ELSE 'small' END AS size_class
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "date_funcs" ->
-      """SELECT o_orderkey, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        | CAST(quarter(o_orderdate) AS INTEGER) AS o_quarter,
-        | CAST(month(o_orderdate) AS INTEGER) AS o_month,
-        | CAST(day(o_orderdate) AS INTEGER) AS o_day,
-        | date_trunc('month', o_orderdate) AS month_start,
-        | CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INTEGER) AS days_to_2002
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "agg_stats" ->
-      """SELECT c_mktsegment, count(*) AS n_customers, count(DISTINCT c_nationkey) AS n_nations,
-        | min(c_acctbal) AS min_bal, max(c_acctbal) AS max_bal,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_bal,
-        | (CAST(sum(CAST(c_acctbal*c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-        |   - CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-        |     * CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)) / count(*) AS var_pop_bal
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "set_ops" ->
-      """WITH cu AS (SELECT DISTINCT c_nationkey AS nationkey FROM customer),
-        | su AS (SELECT DISTINCT s_nationkey AS nationkey FROM supplier)
-        |SELECT nationkey, 'both' AS op FROM (SELECT nationkey FROM cu INTERSECT SELECT nationkey FROM su)
-        |UNION ALL
-        |SELECT nationkey, 'customer_only' AS op FROM (SELECT nationkey FROM cu EXCEPT SELECT nationkey FROM su)
-        |UNION ALL
-        |SELECT nationkey, 'supplier_only' AS op FROM (SELECT nationkey FROM su EXCEPT SELECT nationkey FROM cu)
-        |ORDER BY op, nationkey""".stripMargin,
-
-    "topk_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin,
-
-    "grouped_topk" ->
-      """SELECT o_orderstatus, o_orderkey, o_totalprice FROM (
-        | SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        | FROM orders)
-        |WHERE rn <= 3 ORDER BY o_orderstatus, o_totalprice DESC, o_orderkey""".stripMargin,
-
-    "salted_join" ->
-      """SELECT s_name, count(*) AS n_items,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY s_name""".stripMargin,
-
-    "string_agg" ->
-      """SELECT CAST(n_regionkey AS INTEGER) AS regionkey,
-        | string_agg(n_name, ',' ORDER BY n_name) AS names, count(*) AS n
-        |FROM nation GROUP BY n_regionkey ORDER BY regionkey""".stripMargin,
-
-    "array_funcs" ->
-      """WITH tk AS (SELECT doc_id,
-        |  list_sort(list_distinct(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0))) AS toks
-        |  FROM documents)
-        |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_distinct,
-        | array_to_string(toks[1:3], '|') AS first3
-        |FROM tk ORDER BY doc_id""".stripMargin,
-
-    "pivot_agg" ->
-      """SELECT l_linestatus,
-        | CAST(sum(CAST(CASE WHEN l_returnflag = 'A' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS A,
-        | CAST(sum(CAST(CASE WHEN l_returnflag = 'N' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS N,
-        | CAST(sum(CAST(CASE WHEN l_returnflag = 'R' THEN l_quantity END AS DECIMAL(18,2))) AS DOUBLE) AS R
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "unpivot_long" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-
-    "scalar_subquery" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-        |WHERE o_totalprice > 1.5 * (SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-        |                            FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "percentiles" ->
-      """SELECT o_orderstatus, round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-        | round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-        | round(quantile_cont(o_totalprice, 0.99), 4) AS p99, count(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // straight rollup + integer thresholds; year() is BIGINT in
-    // DuckDB, the Spark side casts to match
-    "k_anonymity_audit" ->
-      """SELECT o_orderstatus, o_orderpriority, year(o_orderdate) AS order_year,
-        | count(*) AS n_rows, count(DISTINCT o_custkey) AS n_distinct_sensitive,
-        | count(*) >= 150 AS k_anonymous,
-        | count(DISTINCT o_custkey) >= 143 AS l_diverse
-        |FROM orders GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // no-false-negatives is EXACT: true members that pass the filter
-    // == true members, both counts one relational semi-join
-    "bloom_no_false_negatives" ->
-      """WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
-        | c AS (SELECT count(*) AS n FROM lineitem l
-        |        WHERE EXISTS (SELECT 1 FROM u WHERE u.o_orderkey = l.l_orderkey))
-        |SELECT n AS n_true_members, n AS n_true_passed FROM c""".stripMargin,
-
-    // collision-freeness rendered relationally: distinct fingerprints
-    // must equal distinct texts (fp is a pure function of text)
-    "fingerprint_collision_audit" ->
-      """SELECT count(*) AS n_docs,
-        | count(DISTINCT sha256(text)) AS n_distinct_texts,
-        | count(DISTINCT sha256(text)) AS n_distinct_fps
-        |FROM documents""".stripMargin,
-
-    "corr_stats" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | (count(*) * CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-        |   - CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE))
-        | / (sqrt(count(*) * CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |      - CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE))
-        |    * sqrt(count(*) * CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-        |      - CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) * CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)))
-        |  AS corr_qty_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // identical moment formulas and parenthesization as the Spark side
-    // (closed-form OLS from exact decimal sums — see regressionByFlag)
-    "regression_agg" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |  CAST(sum(CAST(l_quantity*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sxy,
-        |  CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sxx,
-        |  CAST(sum(CAST(l_extendedprice*l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, n AS n_rows,
-        |  (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
-        |  (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept,
-        |  ((n*sxy - sx*sy) * (n*sxy - sx*sy)) / ((n*sxx - sx*sx) * (n*syy - sy*sy)) AS r2
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-
-    // trigram grid via generate_series — same tokenization (\s+ split,
-    // drop empties) as the WordNGrams generator
-    // explicit whitespace class: Java \s includes \x0B, RE2 \s does not
-    "ngram_udtf" ->
-      """WITH toks AS (SELECT list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l
-        |              FROM documents),
-        | tg AS (SELECT l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS ngram
-        |        FROM (SELECT l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3))
-        |SELECT ngram, count(*) AS n FROM tg GROUP BY ngram HAVING count(*) >= 3
-        |ORDER BY ngram""".stripMargin,
-
-    "json_roundtrip" ->
-      """SELECT o_orderstatus,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "jsonl_gz_roundtrip" ->
-      """SELECT lang, count(*) AS n_docs,
-        | CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-        | count(DISTINCT text) AS n_texts
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "streaming_sliding_agg" ->
-      """WITH e AS (SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS b, value FROM events),
-        | x AS (SELECT b AS win_start, value FROM e
-        |        UNION ALL SELECT b - INTERVAL '30 minutes' AS win_start, value FROM e)
-        |SELECT win_start, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM x GROUP BY win_start ORDER BY win_start""".stripMargin,
-
-    "topk_udaf" ->
-      s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY cnt DESC, word LIMIT 100",
-
-    // imperative-aggregate twin must produce the identical exact top-k
-    "topk_imperative" ->
-      s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY cnt DESC, word LIMIT 100",
-
-    // the reference's affine char-sum hash (map_reduce.cpp:214-217) is
-    // SQL-expressible — ASCII corpus, so ascii(c) == the byte the C
-    // code sums
-    "ref_bin_histogram" ->
-      s"""$W, dw AS (SELECT DISTINCT word FROM w WHERE length(word) > 0)
-         |SELECT CAST((coalesce(list_sum(list_transform(string_split(word, ''), c -> 22 + 23 * (ascii(c) - 14))), 0) % 1024 + 1024) % 1024 AS BIGINT) AS bin,
-         | count(*) AS n_words
-         |FROM dw GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "sql_api" ->
-      """SELECT label, count(*) AS n,
-        | round(max(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))), 6) AS max_sq_norm
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-
-    "grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        | coalesce(l_linestatus, 'ALL') AS linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | count(*) AS n
-        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY returnflag, linestatus""".stripMargin,
-
-    "csv_roundtrip" ->
-      """SELECT l_returnflag,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "full_outer_join" ->
-      """WITH cu AS (SELECT c_nationkey AS k, count(*) AS n_cust FROM customer GROUP BY c_nationkey),
-        | su AS (SELECT s_nationkey AS k, count(*) AS n_supp FROM supplier GROUP BY s_nationkey)
-        |SELECT CAST(coalesce(cu.k, su.k) AS INTEGER) AS nationkey,
-        | coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-        |FROM cu FULL JOIN su ON cu.k = su.k ORDER BY nationkey""".stripMargin,
-
-    "theta_join" ->
-      """SELECT o_orderstatus, count(*) AS n_late FROM lineitem JOIN orders
-        | ON l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL '30 days'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "range_join" ->
-      """WITH bands AS (SELECT x AS band, x * 50000.0 AS lo, (x + 1) * 50000.0 AS hi FROM range(12) t(x))
-        |SELECT band, count(*) AS n_orders,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-
-    // the oracle states the predicate directly (DuckDB handles the
-    // quadratic form fine at sf0.01); the engine side must produce the
-    // identical pair set through the bin rewrite
-    "binned_range_join" ->
-      """SELECT p.event_id AS purchase_id, count(*) AS n_close,
-        | min(c.value) AS min_cv, max(c.value) AS max_cv
-        |FROM events p JOIN events c
-        | ON p.event_type = 'purchase' AND c.event_type = 'click'
-        | AND abs(p.value - c.value) <= 0.25
-        |GROUP BY p.event_id ORDER BY purchase_id""".stripMargin,
-
-    "asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | x AS (SELECT event_id, user_id, event_type,
-        |   last_value(CASE WHEN event_type = 'click' THEN tsu END IGNORE NULLS) OVER w AS prev_click_ts,
-        |   last_value(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS) OVER w AS prev_click_value
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT event_id, user_id, prev_click_ts, prev_click_value FROM x
-        |WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-
-    "window_ranks" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS tsu FROM events)
-        |SELECT event_id, user_id, dense_rank() OVER w AS drnk, ntile(4) OVER w AS nt,
-        | percent_rank() OVER w AS prank, cume_dist() OVER w AS cdist
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    // sessionize-first: the same gaps-and-islands split (>= 12-hour
-    // µs-integer gap breaks, lag-null fall-through to 0) before the
-    // per-SESSION token string — a pattern cannot span sessions on
-    // either engine
-    "event_pattern_match" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu,
-        |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        | g AS (SELECT user_id, event_id, event_type, tsu,
-        |        CASE WHEN us - lag(us) OVER w >= 43200000000 THEN 1 ELSE 0 END AS brk
-        |       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)),
-        | sx AS (SELECT user_id, event_id, event_type, tsu,
-        |         sum(brk) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-        |        FROM g),
-        | t AS (SELECT user_id, sess,
-        |        string_agg('[' || event_type || ']', '' ORDER BY tsu, event_id) AS seq
-        |       FROM sx GROUP BY 1, 2),
-        | m AS (SELECT user_id,
-        |        CAST(sum(len(regexp_extract_all(seq, '\[view\]\[click\]\[purchase\]'))) AS BIGINT) AS n_matches
-        |        FROM t GROUP BY 1)
-        |SELECT user_id, n_matches FROM m WHERE n_matches > 0
-        |ORDER BY user_id""".stripMargin,
-
-    "cohort_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | cohort AS (SELECT user_id, min(date_trunc('week', tsu)) AS cohort_week FROM e GROUP BY 1),
-        | sizes AS (SELECT cohort_week, count(*) AS cohort_size FROM cohort GROUP BY 1),
-        | active AS (SELECT DISTINCT user_id, date_trunc('week', tsu) AS activity_week FROM e),
-        | m AS (SELECT cohort_week, activity_week, count(*) AS n_users
-        |       FROM active JOIN cohort USING (user_id) GROUP BY 1, 2)
-        |SELECT cohort_week, activity_week, n_users,
-        |       round(CAST(n_users AS DOUBLE) / cohort_size, 6) AS retention
-        |FROM m JOIN sizes USING (cohort_week)
-        |ORDER BY cohort_week, activity_week""".stripMargin,
-
-    // each stage: first qualifying event at-or-after the previous
-    // stage's anchor, per (day, user); day rollups join on the day
-    "funnel_daily" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id, event_type,
-        |                  CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | v AS (SELECT day, user_id, min(tsu) AS t_view FROM e WHERE event_type = 'view' GROUP BY 1, 2),
-        | c AS (SELECT e.day, e.user_id, min(e.tsu) AS t_click FROM e JOIN v USING (day, user_id)
-        |        WHERE e.event_type = 'click' AND e.tsu >= v.t_view GROUP BY 1, 2),
-        | b AS (SELECT e.day, e.user_id, min(e.tsu) AS t_buy FROM e JOIN c USING (day, user_id)
-        |        WHERE e.event_type = 'purchase' AND e.tsu >= c.t_click GROUP BY 1, 2),
-        | nv AS (SELECT day, count(*) AS n_view FROM v GROUP BY day),
-        | nc AS (SELECT day, count(*) AS n_click FROM c GROUP BY day),
-        | nb AS (SELECT day, count(*) AS n_buy FROM b GROUP BY day)
-        |SELECT nv.day, nv.n_view, coalesce(nc.n_click, 0) AS n_click, coalesce(nb.n_buy, 0) AS n_buy
-        |FROM nv LEFT JOIN nc USING (day) LEFT JOIN nb USING (day) ORDER BY nv.day""".stripMargin,
-
-    "recursive_spine" ->
-      """WITH RECURSIVE spine(mon) AS (
-        |  SELECT TIMESTAMP '1995-01-01 00:00:00'
-        |  UNION ALL
-        |  SELECT mon + INTERVAL 1 MONTH FROM spine WHERE mon < TIMESTAMP '2001-08-01 00:00:00'
-        |)
-        |SELECT s.mon, count(o.o_orderkey) AS n_orders,
-        |       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM spine s LEFT JOIN orders o ON date_trunc('month', o.o_orderdate) = s.mon
-        |GROUP BY s.mon ORDER BY s.mon""".stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """WITH rs AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'EUROPE'),
-        | cost AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS cost
-        |  FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM rs)
-        |  GROUP BY 1, 2),
-        | mc AS (SELECT l_partkey, min(cost) AS min_cost FROM cost GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, s_suppkey, cost
-        |FROM cost JOIN mc USING (l_partkey)
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN rs ON l_suppkey = s_suppkey
-        |WHERE cost = min_cost AND p_size <= 15 AND p_type = 'SMALL'
-        |ORDER BY s_acctbal DESC, p_partkey, s_suppkey LIMIT 20""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    - 0.8 * p_retailprice * l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q11_important_stock" ->
-      """WITH v AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(l_quantity * p_retailprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS vd
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1)
-        |SELECT l_partkey, CAST(vd AS DOUBLE) AS value FROM v
-        |WHERE vd * 1800 > (SELECT CAST(sum(vd) AS DECIMAL(38,2)) FROM v)
-        |ORDER BY value DESC, l_partkey""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS volume
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        | round(
-        |   CAST(sum(CAST(CASE WHEN n1.n_name = 'NATION_5'
-        |       THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-        |   / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE),
-        |   6) AS mkt_share
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
-        |  AND o_custkey IN (
-        |    SELECT c_custkey FROM customer
-        |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |    JOIN region ON n2.n_regionkey = r_regionkey
-        |    WHERE r_name = 'AMERICA')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1995-10-01'
-        |  AND o_orderdate < TIMESTAMP '1996-01-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q13_customer_distribution" ->
-      """WITH cc AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN (
-        |    SELECT o_orderkey, o_custkey FROM orders
-        |    WHERE o_orderpriority <> '1-URGENT') o
-        |  ON c_custkey = o_custkey
-        |  GROUP BY 1)
-        |SELECT c_count, count(*) AS custdist
-        |FROM cc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q4_priority_exists" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
-        |              AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q12_priority_split" ->
-      """SELECT l_linestatus,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """SELECT 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-        |       / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1995-09-01' AND l_shipdate < TIMESTAMP '1995-10-01'""".stripMargin,
-
-    // the revenue view appears twice (scalar max + row pick) — both
-    // derive total_revenue through the same exact-decimal sum, so the
-    // equality compares identical doubles on both engines
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev JOIN supplier ON s_suppkey = l_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    // integer-exact threshold: q < 0.2*avg(q) algebra'd to 5*n*q <
-    // sum(q) so no float division reaches the comparison on either side
-    "q17_small_qty_revenue" ->
-      """WITH li AS (
-        |  SELECT l_partkey, l_quantity, l_extendedprice
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#4'),
-        | pp AS (
-        |  SELECT l_partkey AS pk, sum(CAST(l_quantity AS BIGINT)) AS sum_qty, count(*) AS n_li
-        |  FROM li GROUP BY 1)
-        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / CAST(7.0 AS DOUBLE) AS avg_yearly
-        |FROM li JOIN pp ON l_partkey = pk
-        |WHERE CAST(l_quantity AS BIGINT) * 5 * n_li < sum_qty""".stripMargin,
-
-    // nested correlated aggregate, integer dominance test (6*qty_ps >
-    // qty_p, a >1/6 share) — the per-part rollup reads the
-    // (part,supplier) aggregate, never the fact table twice
-    "q20_dominant_suppliers" ->
-      """WITH shipped AS (
-        |  SELECT l_partkey, l_suppkey, sum(CAST(l_quantity AS BIGINT)) AS qty_ps
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_name LIKE 'red%'
-        |  GROUP BY 1, 2),
-        | pp AS (SELECT l_partkey, sum(qty_ps) AS qty_p FROM shipped GROUP BY 1)
-        |SELECT s_suppkey, s_name, s_acctbal
-        |FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT DISTINCT l_suppkey FROM shipped JOIN pp USING (l_partkey)
-        |  WHERE qty_ps * 6 > qty_p)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "page_rank" -> pageRankTwinSql,
-    "series_subseq_topk" -> seriesTwinSql,
-
-    // naive all-pairs twin of the q-gram-filtered fuzzy join — the
-    // operator is TOTAL (gram path for certifiable pairs, exact
-    // length-banded tail for the short rest), so the twin carries no
-    // length guard
-    "fuzzy_name_pairs" ->
-      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s FROM part GROUP BY p_name)
-        |SELECT a.id AS id_a, b.id AS id_b, CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
-        |FROM s a JOIN s b ON a.id < b.id
-        |WHERE levenshtein(a.s, b.s) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // exact-integer compare against DuckDB's builtin of the same name
-    "dl_name_pairs" ->
-      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s, substring(p_name, 1, 3) AS blk
-        |           FROM part GROUP BY p_name),
-        | p AS (SELECT a.id AS id_a, b.id AS id_b,
-        |       CAST(damerau_levenshtein(a.s, b.s) AS BIGINT) AS dl
-        |       FROM s a JOIN s b ON a.blk = b.blk AND a.id < b.id)
-        |SELECT id_a, id_b, dl FROM p WHERE dl <= 4 ORDER BY id_a, id_b""".stripMargin,
-
-    // raw-double compare: the Spark kernel is an op-for-op mirror of
-    // the RapidFuzz implementation behind this DuckDB builtin
-    "jw_name_match" ->
-      """WITH s AS (SELECT min(p_partkey) AS id, p_name AS s, substring(p_name, 1, 3) AS blk
-        |           FROM part GROUP BY p_name),
-        | p AS (SELECT a.id AS id_a, b.id AS id_b, jaro_winkler_similarity(a.s, b.s) AS jw
-        |       FROM s a JOIN s b ON a.blk = b.blk AND a.id < b.id)
-        |SELECT id_a, id_b, jw FROM p
-        |WHERE jw >= CAST(0.88 AS DOUBLE) ORDER BY id_a, id_b""".stripMargin,
-
-    "priority_dedup" ->
-      """WITH p AS (SELECT doc_id, lang, text, doc_id % 7 AS priority FROM documents),
-        | r AS (SELECT doc_id, lang, priority,
-        |   row_number() OVER (PARTITION BY text ORDER BY priority DESC, doc_id) AS rn
-        |   FROM p)
-        |SELECT doc_id, lang, priority FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "budget_cap" ->
-      """WITH w AS (SELECT doc_id, lang, length(text) AS n_chars,
-        |   ((doc_id % 2147483648) * 2654435761) % 4294967296 AS ord FROM documents),
-        | c AS (SELECT doc_id, lang, n_chars,
-        |   sum(n_chars) OVER (PARTITION BY lang ORDER BY ord, doc_id) AS cum FROM w)
-        |SELECT doc_id, lang, n_chars FROM c WHERE cum <= 20000 ORDER BY doc_id""".stripMargin,
-
-    // same window device partitioned on the closed-form fixture host
-    // site from the PSL CTE chain (r15) — no closed-form shortcut;
-    // the twin runs the same published algorithm over the same
-    // bundled snapshot the engine broadcasts
-    "domain_budget_cap" -> {
-      val ss = Html.SiteSpace
-      s"""WITH w AS (SELECT doc_id, ${sqlHost(s"doc_id%$ss")} AS host,
-         |   length(text) AS n_chars,
-         |   ((doc_id % 2147483648) * 2654435761) % 4294967296 AS ord FROM documents),
-         |${pslCtes("w")},
-         | c AS (SELECT doc_id, w.host, coalesce(m.site, lower(w.host)) AS site, n_chars,
-         |   sum(n_chars) OVER (PARTITION BY w.host ORDER BY ord, doc_id) AS cum
-         |  FROM w JOIN psl_map m ON m.host = w.host)
-         |SELECT doc_id, host, site, n_chars FROM c WHERE cum <= 800 ORDER BY doc_id""".stripMargin
-    },
-
-    "column_profile" -> {
-      val cols = Seq("c_custkey", "c_name", "c_mktsegment", "c_nationkey")
-      cols.map(c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-           | count(*) - count($c) AS n_null, count(DISTINCT $c) AS n_distinct,
-           | CAST(min($c) AS VARCHAR) AS min_s, CAST(max($c) AS VARCHAR) AS max_s
-           |FROM customer""".stripMargin)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-    },
-
-    "entity_resolution" ->
-      """WITH RECURSIVE s AS (SELECT min(p_partkey) AS id, p_name AS s FROM part GROUP BY p_name),
-        | j AS (SELECT a.id AS src, b.id AS dst FROM s a JOIN s b
-        |       ON a.id <> b.id AND levenshtein(a.s, b.s) <= 2),
-        | reach(id, label) AS (
-        |   SELECT id, id FROM s
-        |   UNION
-        |   SELECT j.dst, r.label FROM reach r JOIN j ON j.src = r.id
-        | ),
-        | lab AS (SELECT id, min(label) AS entity_id FROM reach GROUP BY id)
-        |SELECT l.id, s.s, l.entity_id, cs.s AS canonical
-        |FROM lab l JOIN s USING (id) JOIN s cs ON cs.id = l.entity_id
-        |ORDER BY id""".stripMargin,
-
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_size <= 15 AND p_type <> 'PROMO'
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type
-        |ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin,
-
-    "q18_large_volume" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 110.0)
-        |SELECT c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q19_disjunctive" ->
-      """SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q21_waiting_suppliers" ->
-      """WITH li AS (
-        |  SELECT l.l_orderkey, l.l_suppkey, l.l_shipdate, o.o_orderdate
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderstatus = 'F'),
-        | late AS (SELECT DISTINCT l_orderkey AS lo, l_suppkey AS ls FROM li
-        |          WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY),
-        | ontime AS (SELECT DISTINCT l_orderkey AS oo, l_suppkey AS os FROM li
-        |            WHERE l_shipdate <= o_orderdate + INTERVAL 90 DAY)
-        |SELECT s_suppkey, s_name, count(*) AS numwait
-        |FROM late JOIN supplier ON ls = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM ontime WHERE oo = lo AND os <> ls)
-        |GROUP BY s_suppkey, s_name ORDER BY numwait DESC, s_suppkey LIMIT 20""".stripMargin,
-
-    "q22_dormant_customers" ->
-      """WITH a AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS a
-        |  FROM customer WHERE c_acctbal > 0)
-        |SELECT c_nationkey, count(*) AS numcust,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer, a
-        |WHERE c_acctbal > 0.5 * a.a
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '1998-06-01')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "json_props_agg" ->
-      """SELECT event_type, count(DISTINCT CAST(json_extract(props, '$.k') AS INTEGER)) AS n_k,
-        | CAST(sum(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        | min(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
-        | max(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the variant round trip must preserve the typed values exactly
-    "variant_props_agg" ->
-      """SELECT event_type AS vtype, count(*) AS n,
-        | CAST(sum(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        | min(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
-        | max(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "interval_join" -> IntervalJoinSql,
-
-    // LEFT JOIN twin of the interval join: the unmatched purchases
-    // carry NULL click_id — exactly the rows streaming eviction emits
-    "streaming_interval_left_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events)
-        |SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
-        |FROM (SELECT * FROM e WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT * FROM e WHERE event_type = 'click') c
-        | ON c.user_id = p.user_id
-        | AND c.tsu >= p.tsu - INTERVAL '30 minutes' AND c.tsu <= p.tsu
-        |ORDER BY purchase_id, click_id""".stripMargin,
-
-    // the stream-stream join converges to the identical batch answer,
-    // so it shares the literal same oracle
-    "streaming_interval_join" -> IntervalJoinSql,
-
-    "streaming_dedup" ->
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "partitioned_scan" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "orc_roundtrip" ->
-      """SELECT o_orderpriority,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price, count(*) AS n
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "xml_roundtrip" ->
-      """SELECT n_regionkey, count(*) AS n, min(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-
-    // strlen = BYTE length in DuckDB; Spark measures length(content)
-    // on the binary column — both count UTF-8 bytes
-    "binary_source" ->
-      """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "embedding_near_dups" ->
-      """WITH s AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS sim
-        | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(sim, 4) AS sim_r FROM s WHERE sim >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // same centroid stride (40), assignment tie-break (sim DESC, cid
-    // ASC) and survivor rule as Similarity.semanticDedup
-    "semantic_dedup" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 40 = 0),
-        | sims AS (SELECT e.vec_id, c.cid,
-        |          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) AS sim
-        |          FROM embeddings e CROSS JOIN c),
-        | r AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn FROM sims),
-        | asg AS (SELECT e.vec_id, e.embedding, r.cid AS cell
-        |         FROM r JOIN embeddings e USING (vec_id) WHERE rn = 1),
-        | drops AS (SELECT DISTINCT b.vec_id FROM asg a JOIN asg b
-        |           ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |           AND round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 12) >= 0.4)
-        |SELECT vec_id, cell, vec_id NOT IN (SELECT vec_id FROM drops) AS kept
-        |FROM asg ORDER BY vec_id""".stripMargin,
-
-    "window_funcs" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value, CAST(ts AS TIMESTAMP) AS tsu FROM events)
-        |SELECT event_id, user_id, event_type, value,
-        | CAST(row_number() OVER w AS BIGINT) AS rn,
-        | lag(value, 1) OVER w AS prev_value,
-        | lead(event_type, 1) OVER w AS next_type,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
-        | count(*) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS events_so_far,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY tsu
-        |   RANGE BETWEEN INTERVAL '30 minutes' PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30m_value
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)
-        |ORDER BY user_id, rn""".stripMargin,
-
-    "tumbling_agg" ->
-      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS win_start, event_type,
-        | count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY win_start, event_type ORDER BY win_start, event_type""".stripMargin,
-
-    // stream → compacted sink → scan must reproduce the plain batch agg
-    "streaming_compacted_sink" ->
-      """SELECT user_id, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // the versioned CoW latest-image table must equal the batch argmax
-    // per user (LWW by (ts, event_id)) over the single-copy events
-    "streaming_latest_image" -> latestImageTwinSql,
-    // LakeTable-committed variant: same final image, same oracle —
-    // the pruned partial rewrites are reader-invisible
-    "streaming_table_commits" -> latestImageTwinSql,
-
-    // the streaming pipeline must converge to the identical batch answer
-    "streaming_tumbling_agg" ->
-      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS win_start, event_type,
-        | count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY win_start, event_type ORDER BY win_start, event_type""".stripMargin,
-
-    // the manifest-pruned scan must equal the plain full-scan filter —
-    // skipping may never change an answer
-    // bloom skipping is exact: same rows as the unpruned point lookup
-    "bloom_pruned_scan" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_custkey = 42
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "manifest_pruned_scan" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_totalprice >= 200000.0 AND o_totalprice <= 300000.0
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "zorder_scan" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_custkey >= 300 AND o_custkey <= 600
-        | AND o_totalprice >= 100000.0 AND o_totalprice <= 200000.0
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // pruning changes which files are READ, never the answer — the
-    // oracle is the plain filtered aggregate, same as zorder_scan
-    "hilbert_scan" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_custkey >= 300 AND o_custkey <= 600
-        | AND o_totalprice >= 100000.0 AND o_totalprice <= 200000.0
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "zorder3_scan" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_custkey >= 300 AND o_custkey <= 600
-        | AND o_totalprice >= 100000.0 AND o_totalprice <= 200000.0
-        | AND o_orderkey >= 10000 AND o_orderkey <= 40000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // capacity ≥ distinct types makes the Misra-Gries summary exact,
-    // so the streaming state answer is the batch top-1 per user
-    "streaming_state_topk" ->
-      """WITH counts AS (SELECT user_id, event_type, count(*) AS n FROM events GROUP BY 1, 2),
-        | ranked AS (SELECT user_id, event_type, n,
-        |   row_number() OVER (PARTITION BY user_id ORDER BY n DESC, event_type) AS rn
-        |   FROM counts)
-        |SELECT user_id, event_type AS top_type, n AS n_top FROM ranked WHERE rn = 1
-        |ORDER BY user_id""".stripMargin,
-
-    // stream-static enrichment converges to the identical batch
-    // join+agg (the static side carries no streaming state)
-    "streaming_static_join" ->
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS win_start, c_mktsegment,
-        | count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY win_start, c_mktsegment ORDER BY win_start, c_mktsegment""".stripMargin,
-
-    // the codec-free byte histogram is SQL-expressible: bucket =
-    // byte // 16, weight = float32(cnt)/float32(len). Corpus is ASCII
-    // (verified), so per-character ascii() == the UTF-8 byte value.
-    "media_features" ->
-      """WITH ch AS (SELECT doc_id AS media_id, length(text) AS n, unnest(string_split(text, '')) AS c
-        |            FROM documents WHERE length(text) > 0),
-        | cnt AS (SELECT media_id, n, CAST(ascii(c) // 16 AS BIGINT) AS bucket, count(*) AS cnt
-        |          FROM ch GROUP BY media_id, n, ascii(c) // 16)
-        |SELECT media_id, bucket, CAST(CAST(cnt AS REAL) / CAST(n AS REAL) AS DOUBLE) AS weight
-        |FROM cnt ORDER BY media_id, bucket""".stripMargin,
-
-    // the REAL decode path's twin: the fixture writes gray pixel
-    // v = ((id%256)*31 + x*7 + y*13) % 256 at (x, y), PNG is lossless,
-    // luminance of gray is v — so the decoded histogram equals the
-    // pattern's closed form evaluated over the pixel grid
-    "image_features" ->
-      """WITH m AS (SELECT doc_id, doc_id % 64 + 16 AS w, doc_id % 48 + 16 AS h FROM documents),
-        | px AS (SELECT doc_id, w, unnest(generate_series(0, w * h - 1)) AS p FROM m),
-        | v AS (SELECT doc_id,
-        |   ((((doc_id % 256) * 31 + (p % w) * 7 + (p // w) * 13) % 256) // 16) AS bucket FROM px)
-        |SELECT doc_id AS media_id, CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
-        |FROM v GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin,
-
-    // nearest-neighbor remap src = (dst * srcDim) // dstDim composed
-    // into the same closed form, evaluated over the 32x24 output grid
-    "image_resize_features" ->
-      """WITH m AS (SELECT doc_id, doc_id % 64 + 16 AS w, doc_id % 48 + 16 AS h FROM documents),
-        | px AS (SELECT doc_id, w, h, unnest(generate_series(0, 32 * 24 - 1)) AS p FROM m),
-        | v AS (SELECT doc_id,
-        |   ((((doc_id % 256) * 31 + (((p % 32) * w) // 32) * 7
-        |      + (((p // 32) * h) // 24) * 13) % 256) // 16) AS bucket FROM px)
-        |SELECT doc_id AS media_id, CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
-        |FROM v GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin,
-
-    // the REAL audio path's twin: the fixture writes signed sample
-    // s = ((id%97)*31 + i*7919) % 65536 - 32768 at index i, WAV PCM is
-    // lossless — the decoded amplitude histogram equals the closed
-    // form over the sample grid
-    "audio_features" ->
-      """WITH m AS (SELECT doc_id, (doc_id % 50 + 10) * 80 AS n FROM documents),
-        | ix AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS i FROM m),
-        | s AS (SELECT doc_id, ((doc_id % 97) * 31 + i * 7919) % 65536 - 32768 AS s FROM ix)
-        |SELECT doc_id AS media_id, CAST((s + 32768) // 4096 AS BIGINT) AS bucket, count(*) AS n_samples
-        |FROM s GROUP BY 1, 2 ORDER BY media_id, bucket""".stripMargin,
-
-    "audio_frame_energy" ->
-      """WITH m AS (SELECT doc_id, (doc_id % 50 + 10) * 80 AS n FROM documents),
-        | ix AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS i FROM m),
-        | s AS (SELECT doc_id, i, ((doc_id % 97) * 31 + i * 7919) % 65536 - 32768 AS s FROM ix)
-        |SELECT doc_id AS media_id, CAST(i // 256 AS BIGINT) AS frame_idx,
-        |  CAST(sum(CAST(s AS BIGINT) * s) AS BIGINT) AS energy
-        |FROM s GROUP BY 1, 2 ORDER BY media_id, frame_idx""".stripMargin,
-
-    // the video path's twin: sampled frames f ∈ {0, 2, 4}, per-frame
-    // pattern id doc_id*7+f, same pixel closed form as image_features
-    "video_frame_features" ->
-      """WITH m AS (SELECT doc_id, doc_id % 4 + 2 AS nf FROM documents),
-        | fr AS (SELECT doc_id, unnest(generate_series(0, nf - 1, 2)) AS f FROM m),
-        | px AS (SELECT doc_id, f, unnest(generate_series(0, 16 * 12 - 1)) AS p FROM fr),
-        | v AS (SELECT doc_id, f,
-        |   ((((doc_id * 7 + f) % 256) * 31 + (p % 16) * 7 + (p // 16) * 13) % 256) // 16 AS bucket
-        |   FROM px)
-        |SELECT doc_id AS media_id, CAST(f AS BIGINT) AS frame_idx,
-        |  CAST(bucket AS BIGINT) AS bucket, count(*) AS n_px
-        |FROM v GROUP BY 1, 2, 3 ORDER BY media_id, frame_idx, bucket""".stripMargin,
-
-    // deterministic frame arithmetic: ceil(bytes/64) frames, stride 4
-    "frame_sample" ->
-      """SELECT doc_id AS media_id,
-        | (CAST(ceil(length(text) / 64.0) AS BIGINT) + 3) // 4 AS n_frames
-        |FROM documents WHERE length(text) > 0 ORDER BY media_id""".stripMargin,
-
-    "sliding_agg" ->
-      """WITH e AS (SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS b, value FROM events),
-        | x AS (SELECT b AS win_start, value FROM e
-        |        UNION ALL SELECT b - INTERVAL '30 minutes' AS win_start, value FROM e)
-        |SELECT win_start, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM x GROUP BY win_start ORDER BY win_start""".stripMargin,
-
-    "session_agg" ->
-      """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | o AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        | f AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s FROM o),
-        | s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f)
-        |SELECT user_id, min(tsu) AS session_start, count(*) AS n_events,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    // the streaming session pipeline converges to the identical batch answer
-    "streaming_session_agg" ->
-      """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | o AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        | f AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s FROM o),
-        | s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f)
-        |SELECT user_id, min(tsu) AS session_start, count(*) AS n_events,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "dedup_exact" ->
-      "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents GROUP BY text ORDER BY keep_id",
-
-    "dedup_hash" ->
-      """SELECT sha256(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY sha256(text) ORDER BY h""".stripMargin,
-
-    // batch-internal dedup (min id per digest) then anti-join against
-    // the persisted store — the relational spelling of ingest dedup
-    "incremental_dedup" ->
-      """WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
-        | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1)
-        |SELECT b.h, b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h
-        |WHERE s.h IS NULL ORDER BY b.h""".stripMargin,
-
-    // stop-shingle cap mirrored from Dedup.DefaultMaxDf: shingles with
-    // document frequency > 10 are dropped from intersections AND set
-    // sizes on both sides (a no-op at sf0.01, where max df = 7)
-    "near_dup_jaccard" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
-        | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
-        |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
-        | sym AS (SELECT doc_a AS doc_id, doc_b AS other_id, jaccard FROM j
-        |          UNION ALL SELECT doc_b AS doc_id, doc_a AS other_id, jaccard FROM j),
-        | r AS (SELECT doc_id, other_id, jaccard,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY jaccard DESC, other_id) AS rn FROM sym)
-        |SELECT doc_id, other_id, jaccard FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // winnowing selection replayed verbatim: the packed-BIGINT window
-    // min IS the paper's "smallest hash, rightmost on ties" rule; the
-    // 40-bit md5-prefix hash comes from the same md5 string on both
-    // engines (HexInt40 expands DuckDB's missing conv(hex))
-    "winnowing_fingerprints" ->
-      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk)
-         |SELECT DISTINCT doc_id, sel // 1048576 AS fp, 1048575 - (sel % 1048576) AS fp_pos
-         |FROM sel WHERE gpos >= 3 ORDER BY doc_id, fp_pos""".stripMargin,
-
-    // the match step off the same selection chain: distinct (doc, fp),
-    // df-capped at 50 (the stop-shingle posture), pairs sharing >= 2
-    "winnowing_near_dups" ->
-      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
-         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
-         | rare AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 50),
-         | c AS (SELECT f.doc_id, f.fp FROM f JOIN rare USING (fp))
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-         |FROM c a JOIN c b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY 1, 2""".stripMargin,
-
-    // the jaccard pair chain joined to a threshold relation; the
-    // quotient is the same long/long double division on both sides
-    "dedup_threshold_sweep" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
-        | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
-        |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
-        | th AS (SELECT unnest([0.02, 0.05, 0.1, 0.5, 0.9]) AS threshold),
-        | f AS (SELECT th.threshold, j.doc_a, j.doc_b FROM j JOIN th ON j.jaccard >= th.threshold),
-        | np AS (SELECT threshold, count(*) AS n_pairs FROM f GROUP BY 1),
-        | nd AS (SELECT threshold, count(DISTINCT doc) AS n_docs_affected
-        |        FROM (SELECT threshold, unnest([doc_a, doc_b]) AS doc FROM f) GROUP BY 1)
-        |SELECT th.threshold, coalesce(np.n_pairs, 0) AS n_pairs,
-        | CAST(coalesce(nd.n_docs_affected, 0) AS BIGINT) AS n_docs_affected
-        |FROM th LEFT JOIN np USING (threshold) LEFT JOIN nd USING (threshold)
-        |ORDER BY th.threshold""".stripMargin,
-
-    // grams/windows by arithmetic off token counts, selections by the
-    // winnowing chain; density floored ppm
-    "winnowing_density_audit" ->
-      s"""WITH tc AS (SELECT CAST(len(list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_toks FROM documents),
-         | gsum AS (SELECT CAST(sum(n_toks - 2 - 3) AS BIGINT) AS n_windows, CAST(sum(n_toks - 2) AS BIGINT) AS n_grams FROM tc WHERE n_toks >= 6),
-         | toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
-         | ns AS (SELECT CAST(count(*) AS BIGINT) AS n_selected FROM
-         |   (SELECT DISTINCT doc_id, sel FROM sel WHERE gpos >= 3))
-         |SELECT g2.n_grams, g2.n_windows, ns.n_selected,
-         | CAST(floor(ns.n_selected * 1000000 / g2.n_grams) AS BIGINT) AS density_ppm,
-         | floor(ns.n_selected * 1000000 / g2.n_grams) BETWEEN 200000 AND 600000 AS near_theory
-         |FROM gsum g2 CROSS JOIN ns""".stripMargin,
-
-    // the 4 batch admissions unrolled: batch = doc_id // per (the
-    // stageDocStream range layout), per-batch df cap, pairwise shared
-    // counts once, then a_b = batch b minus (mate-rejected ∪ rejected
-    // against the union of EARLIER admitted sets) — the recursive
-    // store semantics as plain CTEs
-    "streaming_winnowing_ingest" -> {
-      def adm(b: Int, priors: Seq[String]) = {
-        val vsStore =
-          if (priors.isEmpty) ""
-          else priors.map(p =>
-            s"AND doc_id NOT IN (SELECT c.d FROM cand c JOIN $p p ON c.e = p.doc_id WHERE c.db = $b)")
-            .mkString(" ", " ", "")
-        s""" a$b AS (SELECT doc_id FROM dd WHERE b = $b
-           |   AND doc_id NOT IN (SELECT d FROM cand WHERE eb = db AND db = $b)$vsStore)""".stripMargin
-      }
-      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
-         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
-         | pc AS (SELECT CAST(max(doc_id) AS BIGINT) // 4 + 1 AS per FROM documents),
-         | fb AS (SELECT doc_id, fp, doc_id // (SELECT per FROM pc) AS b FROM f),
-         | rare AS (SELECT b, fp FROM fb GROUP BY b, fp HAVING count(*) <= 50),
-         | c0 AS (SELECT fb.doc_id, fb.fp, fb.b FROM fb JOIN rare USING (b, fp)),
-         | cand AS (SELECT a.doc_id AS e, d.doc_id AS d, a.b AS eb, d.b AS db
-         |          FROM c0 a JOIN c0 d ON a.fp = d.fp AND a.doc_id < d.doc_id
-         |          GROUP BY 1, 2, 3, 4 HAVING count(*) >= 2),
-         | dd AS (SELECT doc_id, doc_id // (SELECT per FROM pc) AS b FROM documents),
-         |${adm(0, Nil)},
-         |${adm(1, Seq("a0"))},
-         |${adm(2, Seq("a0", "a1"))},
-         |${adm(3, Seq("a0", "a1", "a2"))},
-         | adm AS (SELECT doc_id FROM a0 UNION ALL SELECT doc_id FROM a1
-         |         UNION ALL SELECT doc_id FROM a2 UNION ALL SELECT doc_id FROM a3)
-         |SELECT d.doc_id, (adm.doc_id IS NOT NULL) AS admitted
-         |FROM documents d LEFT JOIN adm ON d.doc_id = adm.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // same shingle/df-cap CTEs as near_dup_jaccard, then the DIRECTED
-    // containment projection: inter over the OWNING side's set size,
-    // rounded 6 dp before the >= cut
-    "containment_dups" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
-        | dir AS (SELECT i.doc_a AS doc_id, i.doc_b AS other_id, i.inter, ca.n_sh AS n_own
-        |          FROM inter i JOIN cnt ca ON ca.doc_id = i.doc_a
-        |          UNION ALL
-        |          SELECT i.doc_b AS doc_id, i.doc_a AS other_id, i.inter, cb.n_sh AS n_own
-        |          FROM inter i JOIN cnt cb ON cb.doc_id = i.doc_b),
-        | c AS (SELECT doc_id, other_id, inter, n_own,
-        |        round(CAST(inter AS DOUBLE) / CAST(n_own AS DOUBLE), 6) AS containment FROM dir)
-        |SELECT doc_id, other_id, inter, n_own, containment
-        |FROM c WHERE containment >= CAST(0.5 AS DOUBLE) ORDER BY doc_id, other_id""".stripMargin,
-
-    // strided 32-char window grid, grouped on the span itself
-    "dup_spans" ->
-      """WITH sp AS (
-        |  SELECT doc_id, substring(text, CAST(i AS INTEGER), 32) AS span
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 31, 8)) AS i
-        |        FROM documents WHERE length(text) >= 32) t)
-        |SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ
-        |FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2 ORDER BY span""".stripMargin,
-
-    "dup_regions" ->
-      """WITH sp AS (
-        |  SELECT doc_id, i AS pos, substring(text, CAST(i AS INTEGER), 32) AS span
-        |  FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 31, 8)) AS i
-        |        FROM documents WHERE length(text) >= 32) t),
-        | flagged AS (SELECT span FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-        | hits AS (SELECT doc_id, pos, pos + 31 AS e FROM sp JOIN flagged USING (span)),
-        | marked AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |         THEN 1 ELSE 0 END AS ni
-        |    FROM hits),
-        | isl AS (SELECT doc_id, pos, e,
-        |    sum(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM marked)
-        |SELECT doc_id, min(pos) AS region_start, max(e) AS region_end,
-        |       max(e) - min(pos) + 1 AS region_len
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, region_start""".stripMargin,
-
-    // HAVING df <= cap mirrors the enforced stop-term drop on the
-    // Spark side (Retrieval.cappedTermFreqs)
-    "inverted_index" ->
-      s"""$WDoc, tfq AS (SELECT word, doc_id, count(*) AS tf FROM w GROUP BY 1, 2)
-         |SELECT word, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf,
-         | string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-         |FROM tfq GROUP BY word HAVING count(*) <= $RetrievalMaxDf ORDER BY word""".stripMargin,
-
-    // BM25 with the Spark side's exact literals and association:
-    // ln(idf+1) * (tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)), summed
-    // over the terms in fixed order, rounded to 4 decimals after the
-    // sum; dfq's HAVING mirrors the enforced stop-term cap (a query
-    // term above it contributes 0 on both engines)
-    "bm25_topk" -> bm25TwinSql,
-    // the persisted-index path answers the SAME query from the stored
-    // relations — one oracle proves both (lifecycle parity = hash-green)
-    "bm25_from_index" -> bm25TwinSql,
-    // the appended index must answer exactly what a full rebuild
-    // answers — one twin serves all three BM25 paths
-    "bm25_after_append" -> bm25TwinSql,
-    "phrase_search" -> phraseTwinSql,
-    // same cleaned positional relation as the phrase twin, then the
-    // m-way per-doc occurrence join and exact min-span aggregate
-    "proximity_search" -> {
-      val ts = PhraseTerms
-      val inList = ts.distinct.map(t => s"'$t'").mkString(", ")
-      val eCtes = ts.zipWithIndex.map { case (t, i) =>
-        s" e$i AS (SELECT doc_id, pos AS p$i FROM px WHERE word = '$t')"
-      }.mkString(",\n")
-      val joins = (1 until ts.length).map(i => s"JOIN e$i USING (doc_id)").mkString(" ")
-      val plist = ts.indices.map(i => s"p$i").mkString(", ")
-      s"""WITH toksc AS (SELECT doc_id,
-         |   list_filter(list_transform(string_split_regex(text, '[ \\t\\n\\f\\r]+'),
-         |     x -> lower(regexp_replace(x, '$P', '', 'g'))), x -> length(x) > 0) AS l
-         |  FROM documents),
-         | px AS (SELECT doc_id, l[i] AS word, i AS pos
-         |   FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM toksc) z
-         |   WHERE l[i] IN ($inList)),
-         |$eCtes,
-         | j AS (SELECT e0.doc_id, greatest($plist) - least($plist) + 1 AS span
-         |   FROM e0 $joins)
-         |SELECT doc_id, CAST(min(span) AS BIGINT) AS min_window,
-         | count(*) AS n_combos, min(span) <= 12 AS within
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    "tfidf_embed" ->
-      s"""$TfidfVecCtes
-         |SELECT doc_id, dim_idx, v FROM vec ORDER BY doc_id, dim_idx""".stripMargin,
-    "mmr_topk" -> mmrTwinSql,
-    // per-dim code books from accumulation-free min/max; codes via
-    // floor(x/scale + 0.5) — floor of an identical IEEE double, not an
-    // engine-specific half-rounding cast; squared errors DECIMAL-summed
-    "embedding_quantize" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding[i] AS DOUBLE) AS x, i AS dim_idx
-        |   FROM (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
-        | st AS (SELECT dim_idx, min(x) AS mn, round((max(x) - min(x)) / 255.0, 12) AS scale FROM c GROUP BY 1),
-        | cd AS (SELECT c.vec_id, c.x, st.mn, st.scale,
-        |        CASE WHEN st.scale = 0.0 THEN 0
-        |             ELSE greatest(0, least(255, CAST(floor((c.x - st.mn) / st.scale + 0.5) AS BIGINT))) END AS code
-        |        FROM c JOIN st USING (dim_idx)),
-        | e AS (SELECT vec_id, code,
-        |        CAST(round((x - (mn + CAST(code AS DOUBLE) * scale)) * (x - (mn + CAST(code AS DOUBLE) * scale)), 12)
-        |          AS DECIMAL(38,12)) AS e2
-        |       FROM cd)
-        |SELECT vec_id, CAST(sum(code) AS BIGINT) AS code_sum,
-        | min(code) AS code_min, max(code) AS code_max,
-        | round(CAST(sum(e2) AS DOUBLE) / 64, 10) AS mse
-        |FROM e GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "tfidf_query_topk" -> tfidfTopkTwin,
-
-    // rank fusion over the two twins verbatim as subqueries: RRF =
-    // Σ 1/(60+rank), each term one division, missing rank → 0
-    "rrf_fusion" ->
-      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
-         |            FROM ($bm25TwinSql) z1),
-         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
-         |        FROM ($tfidfTopkTwin) z2),
-         | f AS (SELECT coalesce(ra.doc_id, rb.doc_id) AS doc_id, ra.r_bm, rb.r_tf
-         |        FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id)
-         |SELECT doc_id, r_bm, r_tf,
-         | round(coalesce(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r_bm AS DOUBLE)), 0.0)
-         |   + coalesce(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r_tf AS DOUBLE)), 0.0), 9) AS rrf
-         |FROM f ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // relevance = the conjunctive exact-match set off the shared WDoc
-    // tokenization; terms and count interpolated from the ONE Scala
-    // constant the Spark ranker queries use
-    // the negatives twin: bm25 ranking as a subquery, the SAME
-    // all-terms relevance CTE as retrieval_eval, NOT IN instead of
-    // the hit join
-    "hard_negative_mining" ->
-      s"""$WDoc,
-         | rk AS (SELECT doc_id, score,
-         |        CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS neg_rank
-         |        FROM ($bm25TwinSql) z1),
-         | $bm25RelCte
-         |SELECT doc_id, score, neg_rank FROM rk
-         |WHERE doc_id NOT IN (SELECT doc_id FROM rel)
-         |ORDER BY neg_rank""".stripMargin,
-
-    "retrieval_eval" ->
-      s"""$WDoc,
-         | rk AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r
-         |        FROM ($bm25TwinSql) z1),
-         | $bm25RelCte,
-         | n AS (SELECT count(*) AS n_rel FROM rel),
-         | h AS (SELECT r FROM rk JOIN rel USING (doc_id)),
-         | a AS (SELECT count(*) AS rel_in_top20,
-         |        coalesce(sum(CASE WHEN r <= 10 THEN 1 ELSE 0 END), 0) AS rel_in_top10,
-         |        min(r) AS fr FROM h)
-         |SELECT CAST(n.n_rel AS BIGINT) AS n_rel,
-         | CAST(a.rel_in_top10 AS BIGINT) AS rel_in_top10,
-         | CAST(a.rel_in_top20 AS BIGINT) AS rel_in_top20,
-         | round(CAST(a.rel_in_top10 AS DOUBLE) / 10.0, 6) AS p_at_10,
-         | round(CAST(a.rel_in_top20 AS DOUBLE) / CAST(n.n_rel AS DOUBLE), 6) AS recall_at_20,
-         | round(CAST(1.0 AS DOUBLE) / CAST(a.fr AS DOUBLE), 6) AS mrr
-         |FROM a CROSS JOIN n""".stripMargin,
-
-    // graded twin: same WDoc vocabulary, same BM25 twin ranking, and
-    // the SAME Scala-rounded discount constants in a VALUES table —
-    // gain·w rounded(12) DECIMAL-summed on both engines
-    "ndcg_eval" -> {
-      val wtVals = NdcgDiscounts.map { case (r, w) =>
-        val ws = if (w.toString.toLowerCase.contains("e")) w.toString else w.toString + "e0"
-        s"($r, $ws)"
-      }.mkString(", ")
-      s"""$WDoc,
-         | rk AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r
-         |        FROM ($bm25TwinSql) z1),
-         | graded AS (SELECT doc_id, count(DISTINCT word) AS grade FROM w
-         |            WHERE word IN (${Bm25Terms.map(x => s"'$x'").mkString(", ")})
-         |            GROUP BY doc_id),
-         | gg AS (SELECT doc_id, CASE WHEN grade = 1 THEN 1 WHEN grade = 2 THEN 3 ELSE 7 END AS gain FROM graded),
-         | wt(r, wgt) AS (VALUES $wtVals),
-         | dcg AS (SELECT coalesce(sum(CAST(round(gg.gain * wt.wgt, 12) AS DECIMAL(38,12))),
-         |                         CAST(0 AS DECIMAL(38,12))) AS dcg_s,
-         |         count(*) AS graded_in_top10
-         |        FROM rk JOIN gg USING (doc_id) JOIN wt ON wt.r = rk.r WHERE rk.r <= 10),
-         | ideal AS (SELECT gain, CAST(row_number() OVER (ORDER BY gain DESC, doc_id) AS BIGINT) AS ir FROM gg),
-         | idcg AS (SELECT sum(CAST(round(ideal.gain * wt.wgt, 12) AS DECIMAL(38,12))) AS idcg_s
-         |          FROM ideal JOIN wt ON wt.r = ideal.ir WHERE ideal.ir <= 10),
-         | n AS (SELECT count(*) AS n_graded FROM gg)
-         |SELECT CAST(n.n_graded AS BIGINT) AS n_graded,
-         | CAST(dcg.graded_in_top10 AS BIGINT) AS graded_in_top10,
-         | round(CAST(dcg.dcg_s AS DOUBLE), 6) AS dcg_at_10,
-         | round(CAST(idcg.idcg_s AS DOUBLE), 6) AS idcg_at_10,
-         | round(CAST(dcg.dcg_s AS DOUBLE) / CAST(idcg.idcg_s AS DOUBLE), 6) AS ndcg_at_10
-         |FROM dcg CROSS JOIN idcg CROSS JOIN n""".stripMargin
-    },
-
-    // both ranker twins embedded verbatim (the rrf_fusion device), so
-    // agreement numbers can never drift from the rankings they measure
-    "ranker_agreement" ->
-      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
-         |            FROM ($bm25TwinSql) z1),
-         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
-         |        FROM ($tfidfTopkTwin) z2),
-         | j AS (SELECT ra.doc_id, r_bm, r_tf FROM ra JOIN rb USING (doc_id)),
-         | m AS (SELECT (SELECT count(*) FROM ra) AS na, (SELECT count(*) FROM rb) AS nb,
-         |        count(*) AS n_overlap, coalesce(sum(abs(r_bm - r_tf)), 0) AS footrule FROM j)
-         |SELECT CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-         | CAST(n_overlap AS BIGINT) AS n_overlap,
-         | round(CAST(n_overlap AS DOUBLE) / CAST(na + nb - n_overlap AS DOUBLE), 6) AS jaccard,
-         | CAST(footrule AS BIGINT) AS footrule
-         |FROM m""".stripMargin,
-
-    // same capped-shingle Jaccard pipeline as near_dup_jaccard, then
-    // min-label transitive closure via a recursive CTE
-    "dedup_clusters" ->
-      s"""$dedupClustersCtes
-         |SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the embedding[i] device: rounded-term decimal norm², one sqrt,
-    // nearest-rank picks over the rounded norms
-    "embedding_norms" ->
-      """WITH c AS (SELECT CAST(label AS BIGINT) AS label, vec_id, CAST(embedding[i] AS DOUBLE) AS x
-        |   FROM (SELECT label, vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
-        | s2 AS (SELECT label, vec_id, sum(CAST(round(x * x, 12) AS DECIMAL(38,12))) AS s2
-        |        FROM c GROUP BY 1, 2),
-        | nr AS (SELECT label, vec_id, round(sqrt(CAST(s2 AS DOUBLE)), 6) AS nrm FROM s2),
-        | r AS (SELECT label, vec_id, nrm,
-        |       row_number() OVER (PARTITION BY label ORDER BY nrm, vec_id) AS rn,
-        |       count(*) OVER (PARTITION BY label) AS n FROM nr)
-        |SELECT label, max(n) AS n_vecs, min(nrm) AS min_norm, max(nrm) AS max_norm,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN nrm END) AS p50_norm,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN nrm END) AS p90_norm
-        |FROM r GROUP BY label ORDER BY label""".stripMargin,
-
-    // reachability labels + per-family size; keep iff
-    // hashPermille(text)·size < 1000 — one expected survivor/family
-    "dedup_weighted_sample" ->
-      s"""$dedupClustersCtes,
-         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         | sz AS (SELECT lab.doc_id, lab.cluster_id,
-         |        count(*) OVER (PARTITION BY lab.cluster_id) AS family_size FROM lab)
-         |SELECT sz.doc_id, sz.cluster_id, CAST(sz.family_size AS BIGINT) AS family_size
-         |FROM sz JOIN documents d ON d.doc_id = sz.doc_id
-         |WHERE $HashPermille * sz.family_size < 1000
-         |ORDER BY sz.doc_id""".stripMargin,
-
-    // same reachability CTEs rolled to family-size grain
-    "dedup_family_sizes" ->
-      s"""$dedupClustersCtes,
-         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         | cs AS (SELECT cluster_id, count(*) AS sz FROM lab GROUP BY 1)
-         |SELECT sz AS family_size, count(*) AS n_families
-         |FROM cs GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the skew_report entropy device at character grain
-    "char_entropy" ->
-      """WITH c AS (SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents),
-        | g AS (SELECT doc_id, ch, count(*) AS n FROM c WHERE length(ch) > 0 GROUP BY 1, 2),
-        | w AS (SELECT doc_id, ch, n, CAST(sum(n) OVER (PARTITION BY doc_id) AS BIGINT) AS tot FROM g),
-        | p AS (SELECT doc_id, tot, CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS p FROM w),
-        | h AS (SELECT doc_id, tot, CAST(round(p * -ln(p), 9) AS DECIMAL(38,9)) AS h_term FROM p),
-        | a AS (SELECT doc_id, max(tot) AS n_chars, count(*) AS n_distinct_chars,
-        |       sum(h_term) AS h_nats FROM h GROUP BY 1)
-        |SELECT doc_id, n_chars, n_distinct_chars,
-        | round(CAST(h_nats AS DOUBLE) / ln(2.0), 6) AS entropy_bits
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    "csv_quoted_roundtrip" ->
-      s"""WITH fx AS (SELECT doc_id, 'a,"q" ' || text || chr(10) || 'line2 ' || CAST(doc_id AS VARCHAR) AS text
-         |            FROM documents),
-         | cw AS (SELECT doc_id, list_filter(list_transform(
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |    t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws FROM fx),
-         | h AS (SELECT doc_id, list_transform(ws, w ->
-         |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
-         |  FROM cw),
-         | f AS (SELECT doc_id,
-         |    CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-         |      (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
-         |  FROM h)
-         |SELECT count(*) AS n_rows,
-         | (SELECT CAST(sum(length(text)) AS BIGINT) FROM fx) AS total_chars,
-         | CAST(sum(fp) AS BIGINT) AS fp_sum
-         |FROM f""".stripMargin,
-
-    "table_reconcile" -> {
-      def fpSum(srcCte: String, pfx: String): String =
-        s""" ${pfx}cw AS (SELECT doc_id, list_filter(list_transform(
-           |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-           |    t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws FROM $srcCte),
-           | ${pfx}h AS (SELECT doc_id, list_transform(ws, w ->
-           |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
-           |  FROM ${pfx}cw),
-           | ${pfx}fp AS (SELECT doc_id % 16 AS bucket,
-           |    CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-           |      (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
-           |  FROM ${pfx}h),
-           | ${pfx}s AS (SELECT bucket, count(*) AS n, CAST(sum(fp) AS BIGINT) AS f FROM ${pfx}fp GROUP BY 1)""".stripMargin
-      s"""WITH ta AS (SELECT doc_id, text FROM documents),
-         | tb AS (SELECT doc_id, CASE WHEN doc_id % 97 = 13 THEN text || ' tampered' ELSE text END AS text
-         |        FROM documents WHERE doc_id <> 42),
-         |${fpSum("ta", "ra")},
-         |${fpSum("tb", "rb")}
-         |SELECT coalesce(x.bucket, y.bucket) AS bucket,
-         | coalesce(x.n, 0) AS n_a, coalesce(y.n, 0) AS n_b,
-         | coalesce(x.f, 0) AS f_a, coalesce(y.f, 0) AS f_b,
-         | (coalesce(x.n, 0) <> coalesce(y.n, 0) OR coalesce(x.f, 0) <> coalesce(y.f, 0)) AS diverged
-         |FROM ras x FULL JOIN rbs y ON x.bucket = y.bucket
-         |ORDER BY bucket""".stripMargin
-    },
-
-    "dedup_funnel" ->
-      s"""$dedupClustersCtes,
-         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         | surv AS (SELECT doc_id FROM lab WHERE doc_id = cluster_id),
-         | raw AS (SELECT lang, count(*) AS n_raw,
-         |         CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_exact FROM documents GROUP BY 1),
-         | nn AS (SELECT d.lang, count(*) AS n_near FROM surv JOIN documents d USING (doc_id) GROUP BY 1)
-         |SELECT raw.lang, n_raw, n_exact, coalesce(nn.n_near, 0) AS n_near
-         |FROM raw LEFT JOIN nn USING (lang) ORDER BY raw.lang""".stripMargin,
-
-    "cluster_best_pick" ->
-      s"""$dedupClustersCtes,
-         | lab AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         | L AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS score FROM documents),
-         | r AS (SELECT cluster_id, lab.doc_id, score,
-         |        row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, lab.doc_id) AS rn
-         |        FROM lab JOIN L USING (doc_id))
-         |SELECT cluster_id, doc_id AS keep_id, score FROM r WHERE rn = 1
-         |ORDER BY cluster_id""".stripMargin,
-
-    // all three Lloyd iterations UNROLLED (the PageRank twin device):
-    // per iteration one rounded-score argmin assignment and one
-    // DECIMAL-mean centroid update, generated from the same (k, iters)
-    "kmeans_assign" ->
-      s"""$KmeansCtes
-         |SELECT vec_id, code FROM af ORDER BY vec_id""".stripMargin,
-
-    // SEMANTIC rebalancing: the kmeans chain feeds the same
-    // temperature-rate + hash-permille machinery temperature_sample
-    // proves, keyed on cluster instead of language
-    "cluster_balanced_sample" ->
-      s"""$KmeansCtes,
-         | n AS (SELECT code AS cluster, count(*) AS n_l FROM af GROUP BY code),
-         | r AS (SELECT cluster, n_l,
-         |   CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |        / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n)
-         |SELECT d.doc_id, af.code AS cluster, r.n_l, r.keep_permille
-         |FROM documents d JOIN af ON d.doc_id = af.vec_id JOIN r ON af.code = r.cluster
-         |WHERE $HashPermille < r.keep_permille
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-        | c AS (SELECT vec_id AS c_id, embedding FROM embeddings),
-        | s AS (SELECT q_id, c_id,
-        |        list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim
-        |        FROM q JOIN c ON q_id <> c_id),
-        | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
-        |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // the identical plane geometry inlined as literals; projections,
-    // both squared distances and the 3/k ratio replayed term-for-term
-    "jl_distortion_audit" -> {
-      val k = 16
-      val projList = (0 until k).map(j =>
-        s"round(list_dot_product(e, ${Similarity.planeSql(Similarity.JlPlaneOffset + j, 64)}), 9)")
-        .mkString("[", ",\n      ", "]")
-      val d2p = (1 to k).map(j => s"(pa[$j]-pb[$j])*(pa[$j]-pb[$j])").mkString(" + ")
-      s"""WITH pr AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | pj AS (SELECT vec_id, e, $projList AS proj FROM pr),
-         | a AS (SELECT vec_id AS id_a, e AS ea, proj AS pa FROM pj WHERE vec_id % 2 = 0),
-         | b AS (SELECT vec_id - 1 AS id_a, vec_id AS id_b, e AS eb, proj AS pb
-         |   FROM pj WHERE vec_id % 2 = 1),
-         | d AS (SELECT id_a, id_b,
-         |    round(list_dot_product(ea, ea), 9) + round(list_dot_product(eb, eb), 9)
-         |      - 2 * round(list_dot_product(ea, eb), 9) AS d2o,
-         |    $d2p AS d2p
-         |   FROM a JOIN b USING (id_a))
-         |SELECT id_a, id_b, round(d2o, 6) AS d2_orig, round(d2p, 6) AS d2_proj,
-         | round(d2p * 3 / $k / d2o, 6) AS distortion
-         |FROM d ORDER BY id_a""".stripMargin
-    },
-
-    // the k-occurrence census off the proven cosine-rank chain: every
-    // vector a query, rank <= 10 occurrences counted per candidate,
-    // antihubs restored by the left join
-    "knn_hubness" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | s AS (SELECT q_id, c_id, list_cosine_similarity(q.e, c.e) AS sim FROM q JOIN c ON q_id <> c_id),
-        | r AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s),
-        | occ AS (SELECT c_id, count(*) AS occ FROM r WHERE rank <= 10 GROUP BY 1)
-        |SELECT coalesce(occ.occ, 0) AS n_k, count(*) AS n_vectors
-        |FROM embeddings e LEFT JOIN occ ON e.vec_id = occ.c_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the margin math replayed: rounded(9)-DECIMAL cosines, k-NN mass
-    // sums, ONE division per margin rounded(6) before every rank
-    "bitext_margin_mining" ->
-      """WITH s AS (SELECT vec_id AS s_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 0),
-        | t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 1),
-        | sims AS (SELECT s_id, t_id,
-        |   CAST(round(list_cosine_similarity(s.e, t.e), 9) AS DECIMAL(18,9)) AS sim FROM s CROSS JOIN t),
-        | ks AS (SELECT s_id, sum(sim) AS degs FROM
-        |   (SELECT s_id, sim, row_number() OVER (PARTITION BY s_id ORDER BY sim DESC, t_id) AS rn FROM sims)
-        |   WHERE rn <= 4 GROUP BY 1),
-        | kt AS (SELECT t_id, sum(sim) AS degt FROM
-        |   (SELECT t_id, sim, row_number() OVER (PARTITION BY t_id ORDER BY sim DESC, s_id) AS rn FROM sims)
-        |   WHERE rn <= 4 GROUP BY 1),
-        | m AS (SELECT s_id, t_id,
-        |   round((CAST(sim AS DOUBLE) * 2.0) / (CAST(ks.degs + kt.degt AS DOUBLE) / 4), 6) AS margin
-        |   FROM sims JOIN ks USING (s_id) JOIN kt USING (t_id)),
-        | fwd AS (SELECT s_id, t_id, margin, row_number() OVER (PARTITION BY s_id ORDER BY margin DESC, t_id) AS rns FROM m),
-        | bwd AS (SELECT s_id, t_id, row_number() OVER (PARTITION BY t_id ORDER BY margin DESC, s_id) AS rnt FROM m)
-        |SELECT f.s_id, f.t_id, f.margin, (b.rnt = 1) AS mutual
-        |FROM fwd f JOIN bwd b USING (s_id, t_id)
-        |WHERE f.rns = 1 AND f.margin >= 1.05 ORDER BY f.s_id""".stripMargin,
-
-    // the LSH-shortlist margin miner, twinned end to end: bucket keys
-    // from the inlined splitmix planes, candidates from the co-bucket
-    // join, then the brute twin's margin chain verbatim
-    "bitext_margin_lsh" -> bitextMarginLshTwinSql,
-
-    // the IVF-shortlist hubness census: kCent-capped stride cells
-    // (vec_id % 25 = 0 AND vec_id < 25*64), nProbe probes,
-    // exact within-candidate cosine ranks, then knn_hubness's census
-    "knn_hubness_ivf" ->
-      """WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 25 = 0 AND vec_id < 1600),
-        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents),
-        | home AS (SELECT vec_id AS c_id, cell FROM asg WHERE rn = 1),
-        | probe AS (SELECT vec_id AS q_id, cell FROM asg WHERE rn <= 4),
-        | cand AS (SELECT DISTINCT q_id, c_id FROM probe JOIN home USING (cell) WHERE q_id <> c_id),
-        | s AS (SELECT q_id, c_id, list_cosine_similarity(q.e, c.e) AS sim
-        |       FROM cand JOIN v q ON q.vec_id = cand.q_id JOIN v c ON c.vec_id = cand.c_id),
-        | r AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s),
-        | occ AS (SELECT c_id, count(*) AS occ FROM r WHERE rank <= 10 GROUP BY 1)
-        |SELECT coalesce(occ.occ, 0) AS n_k, count(*) AS n_vectors
-        |FROM embeddings e LEFT JOIN occ ON e.vec_id = occ.c_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // lsh_topk's bucket geometry, exactly twinned via inlined planes
-    "lsh_buckets" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-         |SELECT vec_id, CAST(${lshBucketSql("e", 8, 0)} AS BIGINT) AS bucket
-         |FROM v ORDER BY vec_id""".stripMargin,
-
-    // ivf_topk's candidate structure: nProbe nearest kCent-capped
-    // stride-50 centroids (vec_id < 50*64) per vector with probe rank
-    // (rank 1 = home cell)
-    "ivf_cells" ->
-      """WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 3200),
-        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents)
-        |SELECT vec_id, CAST(rn AS BIGINT) AS rank, cell FROM asg
-        |WHERE rn <= 4 ORDER BY vec_id, rank""".stripMargin,
-
-    // ivf_pq_topk's cells relation under the batch-built index
-    "ivf_pq_cells" ->
-      s"""WITH cents AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings WHERE vec_id % 10 = 0$coarseGuard),
-        | v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | asg AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-        |   ORDER BY list_cosine_similarity(e, ce) DESC, cell) AS rn FROM v CROSS JOIN cents)
-        |SELECT vec_id, cell FROM asg WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // lsh_topk CONVERTED from rows-only to a full hash oracle (round
-    // 12): the bucket keys are deterministic splitmix planes (inlined
-    // literals, bit-identical dot products — see lsh_buckets), and the
-    // within-bucket ranking is exact cosine with id tie-break, so the
-    // ENTIRE approximate answer is replayable
-    "lsh_topk" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | b AS (SELECT vec_id, e, ${lshBucketSql("e", 8, 0)} AS bucket FROM v),
-         | s AS (SELECT x.vec_id AS q_id, y.vec_id AS c_id,
-         |        list_cosine_similarity(x.e, y.e) AS sim
-         |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-         | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
-         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
-         |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // ivf_topk CONVERTED from rows-only to a full hash oracle (round
-    // 12): kCent-capped stride-centroid cells (vec_id < 50*64),
-    // nProbe probes, exact within-
-    // candidate cosine ranking — the knn_hubness_ivf chain minus the
-    // census (the cells relation alone remains pinned by ivf_cells)
-    "ivf_topk" ->
-      s"""$ivfRankCtes
-         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
-         |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // the ANN quality gate: recall@10 of the IVF ranking against the
-    // exact cosine truth, reported as the hits histogram (0..10 —
-    // pure integers, no float mean to flap a hash); queries whose
-    // IVF list shares nothing with the truth are restored at 0 by
-    // the left join
-    "ann_recall_eval" ->
-      s"""$ivfRankCtes,
-         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
-         |        FROM v q JOIN v c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
-         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
-         | hits AS (SELECT a.q_id, count(*) AS hits
-         |          FROM (SELECT q_id, c_id FROM r WHERE rank <= 10 AND q_id % 50 = 0) a
-         |          JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
-         |          GROUP BY 1),
-         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
-         |FROM allq LEFT JOIN hits h USING (q_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // recall gate for the IVF×PQ funnel: the hash-proven ivf_pq_topk
-    // twin as a subquery, intersected with the exact cosine truth
-    "ivf_pq_recall_eval" ->
-      s"""WITH apx AS (SELECT q_id, c_id FROM (${ivfPqQueryTwinSql("", "", "vec_id % 50 = 0")}) z),
-         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
-         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
-         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
-         | hits AS (SELECT a.q_id, count(*) AS hits
-         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
-         |          GROUP BY 1),
-         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
-         |FROM allq LEFT JOIN hits h USING (q_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // recall gate for the hyperplane-LSH ranking: the hash-proven
-    // lsh_topk twin filtered to the bounded query sample
-    "lsh_recall_eval" -> {
-      val lshTwin =
-        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-           | b AS (SELECT vec_id, e, ${lshBucketSql("e", 8, 0)} AS bucket FROM v),
-           | s AS (SELECT x.vec_id AS q_id, y.vec_id AS c_id,
-           |        list_cosine_similarity(x.e, y.e) AS sim
-           |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-           | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
-           |SELECT q_id, c_id FROM r WHERE rank <= 10 AND q_id % 50 = 0""".stripMargin
-      s"""WITH apx AS (SELECT q_id, c_id FROM ($lshTwin) z),
-         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
-         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
-         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
-         | hits AS (SELECT a.q_id, count(*) AS hits
-         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
-         |          GROUP BY 1),
-         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
-         |FROM allq LEFT JOIN hits h USING (q_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    // embedding_near_dups_lsh CONVERTED from rows-only (round 12):
-    // candidates co-bucketed in ANY of 8 four-plane tables, scored
-    // exactly and thresholded — the brute embedding_near_dups twin
-    // with the candidate cut replayed from the same inlined planes
-    "embedding_near_dups_lsh" -> {
-      val keyed = (0 until 8).map(tb =>
-        s"SELECT vec_id, $tb AS tbl, ${lshBucketSql("e", 4, tb)} AS bucket FROM v")
-        .mkString(" UNION ALL ")
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | b AS ($keyed),
-         | cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-         |          FROM b x JOIN b y ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
-         | s AS (SELECT id_a, id_b, list_cosine_similarity(a.e, c.e) AS sim
-         |       FROM cand JOIN v a ON a.vec_id = id_a JOIN v c ON c.vec_id = id_b)
-         |SELECT id_a, id_b, round(sim, 4) AS sim_r FROM s WHERE sim >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    // the residual IVF×PQ family CONVERTED from rows-only to full hash
-    // oracles (round 12) — all four share ivfPqQueryTwinSql; the
-    // roundtrip/append/streaming variants answering IDENTICALLY to the
-    // direct computation is precisely their contract
-    "ivf_pq_topk" -> ivfPqQueryTwinSql("", "", "vec_id % 50 = 0"),
-    "ann_index_roundtrip" -> ivfPqQueryTwinSql("", "", "vec_id % 50 = 0"),
-    "ann_index_append" ->
-      ivfPqQueryTwinSql(" AND vec_id % 7 <> 3", " AND vec_id % 7 <> 3", "vec_id % 70 = 3"),
-    "streaming_ann_ingest" ->
-      ivfPqQueryTwinSql(" AND vec_id % 7 <> 3", " AND vec_id % 7 <> 3", "vec_id % 70 = 3"),
-
-    // pq_topk CONVERTED from rows-only to a full hash oracle (round
-    // 12): codes from the pq_codes device, query tables from
-    // bit-identical subspace dots, and the ADC score as an ORDERED
-    // list_reduce fold — double addition is order-sensitive and
-    // VecAdcScore sums subspaces sequentially, so the fold (not a SUM
-    // aggregate) is what makes the scores replay bit-for-bit
-    "pq_topk" ->
-      """WITH sv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | js AS (SELECT unnest(range(16)) AS j),
-        | cb0 AS (SELECT e, row_number() OVER (ORDER BY vec_id) - 1 AS code FROM sv WHERE vec_id % 50 = 0),
-        | cb AS MATERIALIZED (SELECT code, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS cs FROM cb0 CROSS JOIN js WHERE code < 48),
-        | sub AS (SELECT vec_id, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS s FROM sv CROSS JOIN js),
-        | d AS (SELECT vec_id, sub.j AS j, code,
-        |   list_dot_product(s, cs) * -2.0 + list_dot_product(cs, cs) AS d
-        |   FROM sub JOIN cb ON sub.j = cb.j),
-        | r AS (SELECT vec_id, j, code, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM d),
-        | codes AS MATERIALIZED (SELECT vec_id, j, code FROM r WHERE rn = 1),
-        | qd AS MATERIALIZED (SELECT q.vec_id AS q_id, cb.j, cb.code,
-        |   list_dot_product(q.e[CAST(cb.j*4+1 AS INT):CAST(cb.j*4+4 AS INT)], cs) AS dot
-        |   FROM sv q CROSS JOIN cb WHERE q.vec_id % 50 = 0),
-        | sc AS (SELECT q_id, c.vec_id AS c_id,
-        |   list_reduce(list_prepend(0.0, list(dot ORDER BY c.j)), (acc, x) -> acc + x) AS sim
-        |   FROM codes c JOIN qd ON qd.j = c.j AND qd.code = c.code
-        |   WHERE q_id <> c.vec_id
-        |   GROUP BY 1, 2),
-        | rk AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM sc)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(sim, 4) AS sim_r
-        |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // pq encoding replayed: stride codebook (dense-ranked first kCent
-    // stride vectors), per-subspace argmin of -2·s·c + |c|² with the
-    // min-code tie-break — m=16 subspaces of subDim=4 over dim 64
-    "pq_codes" ->
-      """WITH sv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        | js AS (SELECT unnest(range(16)) AS j),
-        | cb0 AS (SELECT e, row_number() OVER (ORDER BY vec_id) - 1 AS code FROM sv WHERE vec_id % 50 = 0),
-        | cb AS (SELECT code, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS cs FROM cb0 CROSS JOIN js WHERE code < 48),
-        | sub AS (SELECT vec_id, j, e[CAST(j*4+1 AS INT):CAST(j*4+4 AS INT)] AS s FROM sv CROSS JOIN js),
-        | d AS (SELECT vec_id, sub.j AS j, code,
-        |   list_dot_product(s, cs) * -2.0 + list_dot_product(cs, cs) AS d
-        |   FROM sub JOIN cb ON sub.j = cb.j),
-        | r AS (SELECT vec_id, j, code, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM d)
-        |SELECT vec_id, CAST(j AS BIGINT) AS j, CAST(code AS BIGINT) AS code
-        |FROM r WHERE rn = 1 ORDER BY vec_id, j""".stripMargin,
-
-    // DSIR replayed: add-1 unigram models of pool (lang<>'en') and
-    // target ('en') over the union vocab, per-word Δ of rounded(12)
-    // lns subtracted as DECIMALs, per-doc DECIMAL sums, rank on the
-    // EXACT decimal with doc_id tie-break, integer ceil for the cut
-    "dsir_select" ->
-      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
-         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
-         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
-         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
-         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
-         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
-         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
-         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
-         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
-         | delta AS (SELECT word,
-         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
-         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
-         |   FROM vocab CROSS JOIN sizes),
-         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
-         |   FROM pw JOIN delta USING (word) GROUP BY 1),
-         | nn AS (SELECT count(*) AS n FROM scored),
-         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
-         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin,
-
-    // the hashed-model DSIR twin: the dsir_select chain with every
-    // clean word collapsed to pmod(xxhash64(word), 1024) BEFORE the
-    // count/model/score stages — the hash replayed via xxh64WordCtes
-    // (unsigned HUGEINT -> signed two's-complement -> positive mod,
-    // Spark's pmod semantics), smoothing denominator = OCCUPIED
-    // bucket count, everything else byte-identical to the exact twin
-    "dsir_select_hashed" ->
-      s"""$hashedDsirScoredCtes,
-         | nn AS (SELECT count(*) AS n FROM scored),
-         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
-         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin,
-
-    // the composed hashed gate: dsir_select_hashed's selection chain,
-    // survivors rejoined to the corpus and chunked at 256 (the
-    // pipeline_e2e chunk template) — one hash over the whole build
-    "dsir_curate_e2e" ->
-      s"""$hashedDsirScoredCtes,
-         | nn AS (SELECT count(*) AS n FROM scored),
-         | r AS (SELECT doc_id, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored),
-         | sel AS (SELECT doc_id, round(CAST(sl AS DOUBLE), 6) AS dsir_logw
-         |   FROM r CROSS JOIN nn WHERE rk <= (nn.n * 250 + 999) // 1000),
-         | kept AS (SELECT d.doc_id, d.lang, sel.dsir_logw, d.text
-         |   FROM documents d JOIN sel USING (doc_id)),
-         | c AS (SELECT doc_id, lang, dsir_logw, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, dsir_logw, text,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, dsir_logw, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // the hashed streaming gate's twin = the dsir_select_hashed chain
-    // up to the per-doc scores, thresholded at logw >= 0 (the same
-    // rank-free cut streaming_dsir_ingest uses — a stream cannot rank
-    // globally without unbounded state)
-    "streaming_dsir_ingest_hashed" ->
-      s"""$hashedDsirScoredCtes
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  sl >= 0 AS selected
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // the streaming scorer's twin = the batch dsir_select chain up to
-    // the per-doc scores, thresholded at logw >= 0 instead of ranked
-    "streaming_dsir_ingest" ->
-      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
-         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
-         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
-         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
-         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
-         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
-         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
-         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
-         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
-         | delta AS (SELECT word,
-         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
-         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
-         |   FROM vocab CROSS JOIN sizes),
-         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
-         |   FROM pw JOIN delta USING (word) GROUP BY 1)
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  sl >= 0 AS selected
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // minhash_near_dups CONVERTED from rows-only to a full hash oracle
-    // (round 12): signatures, band keys, candidates AND the Jaccard
-    // verify all replay — see minhashNearDupsTwinSql
-    "minhash_near_dups" -> minhashNearDupsTwinSql,
-
-    // minhash_ingest CONVERTED (round 12): the incremental LSH
-    // admission gate replayed band-for-band — see minhashIngestTwinSql
-    "minhash_ingest" -> minhashIngestTwinSql,
-
-    // simhash CONVERTED from rows-only to a full hash oracle (round
-    // 12): the per-word xxhash64 is replayed by the XXH64-in-SQL
-    // device (xxh64WordCtes), bit sums and the 64-bit fingerprint
-    // assemble in exact integer arithmetic — the whole fingerprint
-    // relation, not just the clone invariant, now sits behind the gate
-    "simhash" ->
-      s"""$WDoc,
-         | xw AS (SELECT DISTINCT word FROM w),
-         |${xxh64WordCtes},
-         | wcc AS (SELECT doc_id, word, count(*) AS w_cnt FROM w GROUP BY 1, 2),
-         | hb AS (SELECT doc_id, w_cnt,
-         |   CAST(CASE WHEN h >= 9223372036854775808 THEN h - $XW ELSE h END AS BIGINT) AS hs
-         |   FROM wcc JOIN xh USING (word)),
-         | bits AS (SELECT doc_id, j, sum(CASE WHEN ((hs >> CAST(j AS INT)) & 1) = 1 THEN w_cnt ELSE -w_cnt END) AS b
-         |   FROM hb CROSS JOIN (SELECT unnest(range(64)) AS j) GROUP BY 1, 2),
-         | fpu AS (SELECT doc_id, sum(CASE WHEN b > 0 THEN (1::HUGEINT << CAST(j AS INT)) ELSE 0::HUGEINT END) AS u
-         |   FROM bits GROUP BY 1)
-         |SELECT doc_id, CAST(CASE WHEN u >= 9223372036854775808 THEN u - $XW ELSE u END AS BIGINT) AS simhash
-         |FROM fpu ORDER BY doc_id""".stripMargin,
-
-    // doc_fingerprint CONVERTED from rows-only (round 12): the rolling
-    // fold acc*FNV + xxhash64(word) replays via list_reduce over the
-    // ordered per-doc hash list in the same HUGEINT wrap arithmetic;
-    // wordless docs keep fp = 0 through the left join (Spark's
-    // aggregate() init value)
-    "doc_fingerprint" ->
-      s"""WITH tl AS (SELECT doc_id,
-         |   list_filter(list_transform(string_split_regex(text, '[ \\t\\n\\f\\r]+'),
-         |     t -> lower(regexp_replace(t, '$P', '', 'g'))), x -> length(x) > 0) AS toks
-         |   FROM documents),
-         | xw AS (SELECT DISTINCT unnest(toks) AS word FROM tl),
-         |${xxh64WordCtes},
-         | tok AS (SELECT doc_id, unnest(toks) AS word, generate_subscripts(toks, 1) AS pos FROM tl),
-         | hs AS (SELECT doc_id, pos, h FROM tok JOIN xh USING (word)),
-         | lst AS (SELECT doc_id, list_prepend(0::HUGEINT, list(h ORDER BY pos)) AS hl FROM hs GROUP BY 1),
-         | fpu AS (SELECT doc_id, list_reduce(hl, (acc, x) -> ${xadd(xmul("acc", "1099511628211"), "x")}) AS u FROM lst)
-         |SELECT tl.doc_id,
-         |  CAST(CASE WHEN coalesce(u, 0) >= 9223372036854775808 THEN u - $XW ELSE coalesce(u, 0) END AS BIGINT) AS fp
-         |FROM tl LEFT JOIN fpu USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // identical text ⇒ identical simhash: every planted clone with at
-    // least one clean word must collide with its original
-    "simhash_clone_invariant" ->
-      s"""$WDoc
-         |SELECT DISTINCT doc_id + 10000 AS doc_id FROM w
-         |WHERE doc_id % 10 = 0 ORDER BY 1""".stripMargin,
-
-    // the drift ratio recomputed relationally end to end: stride
-    // centroids, cosine-argmax assignment (cosine_topk's proven
-    // device) and decimal-summed residual energies for both the
-    // shifted batch and the corpus baseline — the PQ code books never
-    // touch this output, so nothing approximate remains
-    "ann_drift" ->
-      s"""WITH cents AS (SELECT vec_id AS cell, embedding AS ce FROM embeddings WHERE vec_id % 10 = 0$coarseGuard),
-         | batch AS (SELECT vec_id, list_transform(embedding, x -> CAST(x * -2.0 AS FLOAT)) AS embedding FROM embeddings),
-         | corpus AS (SELECT vec_id, embedding FROM embeddings),
-         | ${annEnergySql("b", "batch", "cents")},
-         | ${annEnergySql("c", "corpus", "cents")}
-         |SELECT b.cell, b.n AS n_batch, round(b.energy / c.energy, 4) AS drift_r,
-         | (b.n >= 4 AND b.energy / c.energy >= 1.5) AS rebuild
-         |FROM bagg b JOIN cagg c USING (cell) ORDER BY b.cell""".stripMargin,
-
-    // trigger AND rebuilt geometry recomputed relationally: old stride
-    // centroids → batch/baseline energies → EXISTS trip → new stride
-    // centroids over corpus ∪ batch → fresh per-cell baseline
-    "ann_rebuild" ->
-      s"""WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 <> 3),
-         | ood AS (SELECT vec_id + 1000000 AS vec_id,
-         |   list_transform(embedding, x -> CAST(x + CAST(3.0 AS FLOAT) AS FLOAT)) AS embedding
-         |   FROM embeddings WHERE vec_id % 7 = 3),
-         | cents AS (SELECT vec_id AS cell, embedding AS ce FROM base WHERE vec_id % 10 = 0${coarseGuardOn("base")}),
-         | ${annEnergySql("o", "ood", "cents")},
-         | ${annEnergySql("s", "base", "cents")},
-         | trip AS (SELECT count(*) > 0 AS tripped FROM oagg o JOIN sagg s USING (cell)
-         |          WHERE o.n >= 4 AND o.energy / s.energy >= 1.5),
-         | allv AS (SELECT * FROM base UNION ALL SELECT * FROM ood),
-         | cents2 AS (SELECT vec_id AS cell, embedding AS ce FROM allv WHERE vec_id % 10 = 0${coarseGuardOn("allv")}),
-         | ${annEnergySql("r", "allv", "cents2")}
-         |SELECT cell, n, round(energy, 4) AS energy_r, (SELECT tripped FROM trip) AS rebuilt
-         |FROM ragg ORDER BY cell""".stripMargin,
-
-    // the frozen-geometry cells relation is pure cosine argmax — any
-    // lost batch, double-commit replay, or drifted assignment unhashes
-    "streaming_ann_cells" ->
-      s"""WITH cents AS (SELECT vec_id AS cell, embedding AS ce
-         |               FROM embeddings WHERE vec_id % 10 = 0${coarseGuardOn("embeddings", " AND vec_id % 7 <> 3")} AND vec_id % 7 <> 3),
-        | sims AS (SELECT e.vec_id, c.cell,
-        |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) AS sim
-        |   FROM embeddings e CROSS JOIN cents c)
-        |SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-        |  FROM sims) z
-        |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // every planted store-clone with >= 3 tokens must be rejected by
-    // the LSH gate (identical text → identical signature → every band
-    // collides) — the rejected set is closed-form
-    "minhash_ingest_clone_rejects" ->
-      """WITH tk AS (SELECT doc_id,
-        |   list_filter(string_split_regex(text, '[ \t\n\f\r]+'), t -> length(t) > 0) AS tk
-        |   FROM documents)
-        |SELECT doc_id + 10000 AS doc_id FROM tk
-        |WHERE doc_id % 10 = 0 AND len(tk) >= 3 ORDER BY 1""".stripMargin,
-
-    "unigram_logprob" ->
-      s"""$WDoc,
-         | c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-         | t AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM c),
-         | lp AS (SELECT w.doc_id,
-         |   CAST(round(ln(CAST(c.cnt AS DOUBLE) / t.total), 12) AS DECIMAL(28,12)) AS l
-         |   FROM w JOIN c USING (word) CROSS JOIN t),
-         | s AS (SELECT doc_id, count(*) AS n_tokens, sum(l) AS sl FROM lp GROUP BY 1)
-         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
-         |       round(CAST(sl AS DOUBLE) / n_tokens, 6) AS avg_logprob
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // ordered cleaned-word lists (the fingerprint_ref device) feed
-    // adjacent-pair bigrams via 1-based list indexing — unnest order
-    // is never relied on for sequence structure. Per-pair logs use
-    // the identical one-expression association as the Spark side,
-    // rounded 12 dp and DECIMAL-summed.
-    "bigram_logprob" ->
-      s"""$BigramCtes
-         |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
-         |       round(CAST(sl AS DOUBLE) / n_bigrams, 6) AS avg_logprob
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    "best_exemplars" ->
-      s"""$BigramCtes,
-         | scd AS (SELECT d.lang, s.doc_id, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS avg_logprob
-         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
-         | rk AS (SELECT lang, doc_id, avg_logprob,
-         |        row_number() OVER (PARTITION BY lang ORDER BY avg_logprob DESC, doc_id) AS rn FROM scd)
-         |SELECT lang, doc_id, avg_logprob FROM rk WHERE rn <= 3
-         |ORDER BY lang, avg_logprob DESC, doc_id""".stripMargin,
-
-    // model-based quality cut: the bigram chain's per-doc average
-    // feeds the naive percent_rank twin of the histogram filter —
-    // proven equal for quality_filter, reproven here on the LM score
-    "perplexity_filter" ->
-      s"""$BigramCtes,
-         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
-         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
-         | r AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
-         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin,
-
-    // the tercile twin: the same bigram chain, bucket from the naive
-    // percent_rank — floor(pr*3) is one IEEE multiply+floor on both
-    // engines, clamped at 2 for pr = 1.0
-    "perplexity_buckets" ->
-      s"""$BigramCtes,
-         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
-         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
-         | r AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
-         |SELECT doc_id, lang, score, pr,
-         | least(2, CAST(floor(pr * 3) AS BIGINT)) AS bucket
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    // authority twin: the unrolled PageRank CTE chain over the
-    // closed-form crawl edges feeds the naive percent_rank filter —
-    // the same composition proven piecewise by crawl_rank and
-    // perplexity_filter
-    "authority_filter" ->
-      s"""${pageRankCtes(CrawlEdgesCte)},
-         | scd AS (SELECT d.doc_id, d.lang, round(r.rank, 8) AS score
-         |         FROM documents d JOIN r5 r ON d.doc_id = r.node),
-         | rk AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
-         |SELECT doc_id, lang, score, pr FROM rk WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin,
-
-    // trigram twin: same ordered-list CTEs; backoff CASE arms match
-    // the Spark when-chain's operand association exactly (0.4 * 0.4
-    // folds to the same IEEE double in both engines)
-    "trigram_logprob" ->
-      s"""WITH toks AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
-         |  FROM documents),
-         | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
-         | tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM uni),
-         | bg AS (SELECT ws[i] AS b1, ws[i+1] AS b2
-         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM toks WHERE len(ws) >= 2)),
-         | bi AS (SELECT b1, b2, count(*) AS bc FROM bg GROUP BY 1, 2),
-         | tg AS (SELECT doc_id, ws[i-1] AS p2, ws[i] AS p1, ws[i+1] AS cur
-         |        FROM (SELECT doc_id, ws, unnest(range(2, len(ws))) AS i FROM toks WHERE len(ws) >= 3)),
-         | tri AS (SELECT p2, p1, cur, count(*) AS tc FROM tg GROUP BY 1, 2, 3 HAVING count(*) >= 2),
-         | sc AS (SELECT tg.doc_id,
-         |     CAST(round(CASE
-         |       WHEN t3.tc IS NOT NULL THEN ln(CAST(t3.tc AS DOUBLE) / CAST(cx.bc AS DOUBLE))
-         |       WHEN bm.bc IS NOT NULL THEN ln(0.4 * CAST(bm.bc AS DOUBLE) / CAST(up.cnt AS DOUBLE))
-         |       ELSE ln(0.4 * 0.4 * CAST(uc.cnt AS DOUBLE) / t.total) END, 12) AS DECIMAL(28,12)) AS l
-         |   FROM tg
-         |   LEFT JOIN tri t3 ON tg.p2 = t3.p2 AND tg.p1 = t3.p1 AND tg.cur = t3.cur
-         |   LEFT JOIN (SELECT b1, b2, bc FROM bi WHERE bc >= 2) bm ON tg.p1 = bm.b1 AND tg.cur = bm.b2
-         |   JOIN bi cx ON tg.p2 = cx.b1 AND tg.p1 = cx.b2
-         |   JOIN uni up ON tg.p1 = up.word
-         |   JOIN uni uc ON tg.cur = uc.word
-         |   CROSS JOIN tot t),
-         | s AS (SELECT doc_id, count(*) AS n_trigrams, sum(l) AS sl FROM sc GROUP BY 1)
-         |SELECT doc_id, CAST(n_trigrams AS BIGINT) AS n_trigrams,
-         |       round(CAST(sl AS DOUBLE), 6) AS logprob,
-         |       round(CAST(sl AS DOUBLE) / n_trigrams, 6) AS avg_logprob
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    "text_quality" ->
-      s"""WITH t AS (SELECT doc_id, text, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |           FROM documents)
-         |SELECT doc_id,
-         | CAST(len(tk) AS BIGINT) AS n_tokens,
-         | CAST(length(text) AS BIGINT) AS n_chars,
-         | CAST(list_sum(list_transform(tk, x -> length(x))) AS BIGINT) / len(tk) AS avg_token_len,
-         | (length(text) - length(regexp_replace(text, '$P', '', 'g'))) / length(text) AS punct_ratio,
-         | (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-         | len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], lower(x)))) / len(tk) AS stopword_ratio
-         |FROM t ORDER BY doc_id""".stripMargin,
-
-    // three exact regexp counts; each ratio one IEEE division, both
-    // formulas left-associated identically, rounded 4 dp
-    "readability" ->
-      """WITH m AS (SELECT doc_id,
-        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS n_sents,
-        |  CAST(greatest(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)), 1) AS BIGINT) AS n_words,
-        |  CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS BIGINT) AS n_syll
-        | FROM documents),
-        | r AS (SELECT doc_id, n_sents, n_words, n_syll,
-        |   CAST(n_words AS DOUBLE) / CAST(n_sents AS DOUBLE) AS wps,
-        |   CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE) AS spw FROM m)
-        |SELECT doc_id, n_sents, n_words, n_syll,
-        | round(CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * wps - CAST(84.6 AS DOUBLE) * spw, 4) AS flesch_ease,
-        | round(CAST(0.39 AS DOUBLE) * wps + CAST(11.8 AS DOUBLE) * spw - CAST(15.59 AS DOUBLE), 4) AS fk_grade
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "lexical_diversity" ->
-      s"""$WDoc,
-         | c AS (SELECT doc_id, word, count(*) AS n FROM w GROUP BY 1, 2),
-         | a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens, count(*) AS n_types,
-         |       CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax FROM c GROUP BY 1)
-         |SELECT doc_id, n_tokens, n_types, n_hapax,
-         | round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
-         | round(CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE), 6) AS hapax_ratio
-         |FROM a ORDER BY doc_id""".stripMargin,
-
-    // first-occurrence per (doc, sentence), ordered string_agg —
-    // the same sentence CTEs as sentence_split, different stitch
-    "sentence_dedup_within" ->
-      """WITH fx AS (SELECT doc_id, text || ' Again now. Again now. Doc tail.' AS text FROM documents),
-        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
-        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q),
-        | s AS (SELECT doc_id, CAST(i AS BIGINT) AS sent_idx, l[i] AS sentence FROM u),
-        | r AS (SELECT doc_id, sent_idx, sentence,
-        |       row_number() OVER (PARTITION BY doc_id, sentence ORDER BY sent_idx) AS rn FROM s),
-        | k AS (SELECT doc_id, count(*) AS n_kept,
-        |       string_agg(sentence, ' ' ORDER BY sent_idx) AS clean_text FROM r WHERE rn = 1 GROUP BY 1),
-        | t AS (SELECT doc_id, count(*) AS n_sents FROM s GROUP BY 1)
-        |SELECT t.doc_id, t.n_sents, k.n_kept, k.clean_text
-        |FROM t JOIN k USING (doc_id) ORDER BY t.doc_id""".stripMargin,
-
-    // per-lang CASE over the SAME Scala stopword lists, interpolated —
-    // the two engines cannot drift on the word lists
-    "stopword_coverage" -> {
-      val langs = TextQuality.Stopwords.keys.toSeq.sorted
-      val caseArms = langs.map { l =>
-        val lst = TextQuality.Stopwords(l).map(w => s"'$w'").mkString("[", ",", "]")
-        s"WHEN lang = '$l' THEN CAST(len(list_filter(tk, x -> list_contains($lst, lower(x)))) AS BIGINT)"
-      }.mkString("\n        |       ")
-      s"""WITH t AS (SELECT lang, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk FROM documents),
-         | s AS (SELECT lang, CAST(len(tk) AS BIGINT) AS n_toks,
-         |       CASE $caseArms END AS n_stop
-         |       FROM t),
-         | f AS (SELECT lang, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_toks,
-         |       CAST(sum(n_stop) AS BIGINT) AS n_stop FROM s WHERE n_toks > 0 GROUP BY 1)
-         |SELECT lang, n_docs, n_toks, n_stop,
-         | round(CAST(n_stop AS DOUBLE) / CAST(n_toks AS DOUBLE), 6) AS coverage
-         |FROM f ORDER BY lang""".stripMargin
-    },
-
-    "joinability_report" -> Seq(
-      ("events.user_id~customer.c_custkey", "events", "user_id", "customer", "c_custkey"),
-      ("lineitem.l_partkey~part.p_partkey", "lineitem", "l_partkey", "part", "p_partkey"),
-      ("orders.o_custkey~customer.c_custkey", "orders", "o_custkey", "customer", "c_custkey"),
-      ("orders.o_orderkey~part.p_partkey", "orders", "o_orderkey", "part", "p_partkey"))
-      .map { case (name, lt, lc, rt, rc) =>
-        s"""(SELECT '$name' AS col_pair,
-           |  count(a.v) AS n_left, count(b.v) AS n_right,
-           |  CAST(sum(CASE WHEN a.v IS NOT NULL AND b.v IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-           |  round(CAST(sum(CASE WHEN a.v IS NOT NULL AND b.v IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-           |    / CAST(least(count(a.v), count(b.v)) AS DOUBLE), 6) AS overlap
-           | FROM (SELECT DISTINCT CAST($lc AS VARCHAR) AS v FROM $lt) a
-           | FULL JOIN (SELECT DISTINCT CAST($rc AS VARCHAR) AS v FROM $rt) b ON a.v = b.v)""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_pair"),
-
-    "seasonality_profile" ->
-      """WITH h AS (SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
-        |           count(*) AS n FROM events GROUP BY 1, 2),
-        | w AS (SELECT event_type, hr, n,
-        |       CAST(sum(n) OVER (PARTITION BY event_type) AS BIGINT) AS total,
-        |       row_number() OVER (PARTITION BY event_type ORDER BY n DESC, hr) AS rk FROM h)
-        |SELECT event_type, hr, n,
-        | CAST(floor(n * 1000000 / total) AS BIGINT) AS share_ppm, rk = 1 AS is_peak
-        |FROM w ORDER BY event_type, hr""".stripMargin,
-
-    // first-doc-credited types, 50-doc buckets, running integer sums
-    "heaps_curve" ->
-      s"""$WDoc,
-         | tb AS (SELECT doc_id // 50 AS bucket, count(*) AS n_tok FROM w GROUP BY 1),
-         | fd AS (SELECT word, min(doc_id) AS first_doc FROM w GROUP BY 1),
-         | nb AS (SELECT first_doc // 50 AS bucket, count(*) AS n_new FROM fd GROUP BY 1),
-         | j AS (SELECT tb.bucket, tb.n_tok, coalesce(nb.n_new, 0) AS n_new
-         |       FROM tb LEFT JOIN nb ON tb.bucket = nb.bucket)
-         |SELECT CAST(bucket AS BIGINT) AS bucket,
-         | CAST(sum(n_tok) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
-         | CAST(sum(n_new) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_types
-         |FROM j ORDER BY bucket""".stripMargin,
-
-    // max |c1·n2 − c2·n1| in pure BIGINTs, one rounded division
-    "ks_drift" ->
-      """WITH v AS (SELECT n_chars AS v, doc_id % 2 = 0 AS g1 FROM documents),
-        | per AS (SELECT v,
-        |         CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |         CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT) AS b
-        |         FROM v GROUP BY 1),
-        | tot AS (SELECT CAST(sum(a) AS BIGINT) AS n1, CAST(sum(b) AS BIGINT) AS n2 FROM per),
-        | c AS (SELECT v,
-        |       CAST(sum(a) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c1,
-        |       CAST(sum(b) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c2
-        |       FROM per),
-        | g AS (SELECT tot.n1, tot.n2, abs(c.c1 * tot.n2 - c.c2 * tot.n1) AS gap
-        |       FROM c CROSS JOIN tot)
-        |SELECT n1, n2, max(gap) AS d_num,
-        | round(CAST(max(gap) AS DOUBLE) / CAST(n1 * n2 AS DOUBLE), 6) AS ks_d
-        |FROM g GROUP BY n1, n2""".stripMargin,
-
-    // df/cf/Σc² exact; mean/variance/VMR the fixed three-op double
-    // sequence (the rollingAnomaly device)
-    "word_burstiness" ->
-      s"""$WDoc,
-         | c AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
-         | a AS (SELECT word, count(*) AS df, CAST(sum(c) AS BIGINT) AS cf,
-         |       CAST(sum(c * c) AS BIGINT) AS cf2 FROM c GROUP BY 1),
-         | m AS (SELECT word, df, cf, cf2,
-         |       CAST(cf AS DOUBLE) / CAST(df AS DOUBLE) AS mean_c FROM a WHERE cf >= 20),
-         | v AS (SELECT word, df, cf, mean_c,
-         |       (CAST(cf2 AS DOUBLE) - CAST(cf AS DOUBLE) * mean_c) / CAST(df AS DOUBLE) AS vr FROM m)
-         |SELECT word, df, cf, round(mean_c, 6) AS mean_tf, round(vr / mean_c, 6) AS vmr
-         |FROM v ORDER BY word""".stripMargin,
-
-    // tf·idf with idf = ln(N/df), one division + one ln + one mul;
-    // row_number top-3 mirrors the GroupedTopK heap semantics
-    "doc_keywords" ->
-      s"""$WDoc,
-         | tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2),
-         | dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-         | nd AS (SELECT count(*) AS n_docs FROM documents),
-         | wt AS (SELECT tf.doc_id, tf.word,
-         |   round(CAST(tf.tf AS DOUBLE) * ln(CAST(nd.n_docs AS DOUBLE) / CAST(dfq.df AS DOUBLE)), 6) AS w
-         |   FROM tf JOIN dfq USING (word) CROSS JOIN nd),
-         | r AS (SELECT doc_id, word, w,
-         |       row_number() OVER (PARTITION BY doc_id ORDER BY w DESC, word) AS rn FROM wt)
-         |SELECT doc_id, word, w FROM r WHERE rn <= 3 ORDER BY doc_id, w DESC, word""".stripMargin,
-
-    "dup_rate_by_source" ->
-      """SELECT source, count(*) AS n_docs, count(DISTINCT sha256(text)) AS n_unique,
-        | CAST(floor((count(*) - count(DISTINCT sha256(text))) * 1000000 / count(*)) AS BIGINT) AS dup_ppm
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // PMI per pair: one mul + one div + one ln in identical
-    // association; the (pmi desc, w1, w2) order is total so LIMIT
-    // can't flap on ties
-    "collocations" ->
-      s"""WITH toks AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
-         |  FROM documents),
-         | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
-         | tu AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM uni),
-         | bgp AS (SELECT ws[i] AS w1, ws[i+1] AS w2
-         |        FROM (SELECT ws, unnest(range(1, len(ws))) AS i FROM toks WHERE len(ws) >= 2)),
-         | bg AS (SELECT w1, w2, count(*) AS c12 FROM bgp GROUP BY 1, 2),
-         | tb AS (SELECT CAST(sum(c12) AS BIGINT) AS bt FROM bg),
-         | j AS (SELECT bg.w1, bg.w2, bg.c12,
-         |        CAST(bg.c12 AS DOUBLE) / CAST(tb.bt AS DOUBLE) AS p12,
-         |        CAST(u1.cnt AS DOUBLE) / CAST(tu.t AS DOUBLE) AS p1,
-         |        CAST(u2.cnt AS DOUBLE) / CAST(tu.t AS DOUBLE) AS p2
-         |        FROM bg JOIN uni u1 ON bg.w1 = u1.word JOIN uni u2 ON bg.w2 = u2.word
-         |        CROSS JOIN tu CROSS JOIN tb
-         |        WHERE bg.c12 >= 5)
-         |SELECT w1, w2, c12, round(ln(p12 / (p1 * p2)), 6) AS pmi
-         |FROM j ORDER BY pmi DESC, w1, w2 LIMIT 100""".stripMargin,
-
-    "dataset_split" ->
-      s"""SELECT doc_id, lang,
-         | CASE WHEN $HashPermille < 800 THEN 'train'
-         |      WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // decontaminate's shingle-overlap machinery turned inward: the
-    // held-out splits audited against the train shingle set; the twin
-    // counts TEXT shingles where Spark counts xxhash64 ids — identical
-    // short of a 64-bit collision (same budget as every shingle twin)
-    "split_leakage_audit" ->
-      s"""WITH sp AS (SELECT doc_id, text,
-         |   CASE WHEN $HashPermille < 800 THEN 'train'
-         |        WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
-         |  FROM documents),
-         | toks AS (SELECT doc_id, split, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM sp),
-         | pos AS (SELECT doc_id, split, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-         | sh AS (SELECT DISTINCT doc_id, split, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-         | tsh AS (SELECT DISTINCT shingle FROM sh WHERE split = 'train'),
-         | ov AS (SELECT s.doc_id, count(*) AS n_train_overlap FROM sh s JOIN tsh USING (shingle)
-         |        WHERE s.split <> 'train' GROUP BY 1)
-         |SELECT e.doc_id, e.split, coalesce(ov.n_train_overlap, 0) AS n_train_overlap,
-         | coalesce(ov.n_train_overlap, 0) >= 2 AS leaked
-         |FROM sp e LEFT JOIN ov USING (doc_id) WHERE e.split <> 'train'
-         |ORDER BY e.doc_id""".stripMargin,
-
-    // the NOT EXISTS spelling of Pareto dominance — the oracle runs
-    // the O(n²) definition the Spark ladder avoids; comparisons are on
-    // the 6-dp-rounded ttr both sides
-    "pareto_curation" ->
-      s"""$WDoc,
-         | c AS (SELECT doc_id, word, count(*) AS n FROM w GROUP BY 1, 2),
-         | a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens, count(*) AS n_types FROM c GROUP BY 1),
-         | ld AS (SELECT doc_id, n_tokens,
-         |        round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr FROM a)
-         |SELECT p.doc_id, p.n_tokens, p.ttr FROM ld p
-         |WHERE NOT EXISTS (SELECT 1 FROM ld q
-         |  WHERE q.n_tokens >= p.n_tokens AND q.ttr >= p.ttr
-         |    AND (q.n_tokens > p.n_tokens OR q.ttr > p.ttr))
-         |ORDER BY p.doc_id""".stripMargin,
-
-    // the keyword alternation interpolates the SAME Scala constant the
-    // Spark side compiles (CodeKeywordRe), so the two engines cannot
-    // drift on the reserved-word list; is_code compares the ROUNDED
-    // score so the cut is over an identical literal on both engines
-    "code_detect" ->
-      s"""WITH m AS (SELECT doc_id,
-         |  CAST(greatest(length(text), 1) AS BIGINT) AS n_chars,
-         |  CAST(len(regexp_extract_all(text, '\\n')) + 1 AS BIGINT) AS n_lines,
-         |  CAST(greatest(len(list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0)), 1) AS BIGINT) AS n_words,
-         |  CAST(len(regexp_extract_all(text, '[{}()\\[\\];=<>]')) AS BIGINT) AS sym,
-         |  CAST(len(regexp_extract_all(text, '(?m)^(  |\\t)')) AS BIGINT) AS indented,
-         |  CAST(len(regexp_extract_all(text, '(?m);[ \\t]*$$')) AS BIGINT) AS semi_eol,
-         |  CAST(len(regexp_extract_all(lower(text), '${TextQuality.CodeKeywordRe}')) AS BIGINT) AS kw
-         | FROM documents),
-         | r AS (SELECT doc_id,
-         |   CAST(sym AS DOUBLE) / CAST(n_chars AS DOUBLE) AS sym_r,
-         |   CAST(indented AS DOUBLE) / CAST(n_lines AS DOUBLE) AS indent_r,
-         |   CAST(semi_eol AS DOUBLE) / CAST(n_lines AS DOUBLE) AS semi_r,
-         |   CAST(kw AS DOUBLE) / CAST(n_words AS DOUBLE) AS kw_r FROM m),
-         | sc AS (SELECT doc_id,
-         |   round(sym_r, 6) AS sym_ratio, round(indent_r, 6) AS indent_ratio,
-         |   round(semi_r, 6) AS semi_ratio, round(kw_r, 6) AS kw_ratio,
-         |   round(CAST(2.0 AS DOUBLE) * sym_r + CAST(0.5 AS DOUBLE) * indent_r
-         |     + CAST(1.0 AS DOUBLE) * semi_r + CAST(1.5 AS DOUBLE) * kw_r, 6) AS code_score
-         |  FROM r)
-         |SELECT doc_id, sym_ratio, indent_ratio, semi_ratio, kw_ratio, code_score,
-         | code_score > CAST(0.12 AS DOUBLE) AS is_code
-         |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // the recursive CTE replays the applier's one-splice-per-iteration
-    // best-rank merges per DISTINCT word (BpeApplyCte), then weights
-    // tokens by word frequency — cross-engine hash equality proves the
-    // tokenizer itself
-    "bpe_tokens" ->
-      s"""WITH RECURSIVE
-         | wc AS (SELECT lower(t.tok) AS word, count(*) AS cnt
-         |        FROM (SELECT unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
-         |        WHERE length(t.tok) > 0 GROUP BY 1),
-         |$BpeApplyCte
-         |SELECT tok AS token, CAST(sum(cnt) AS BIGINT) AS n
-         |FROM (SELECT word, unnest(toks) AS tok FROM fin) f JOIN wc USING (word)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "bpe_doc_tokens" ->
-      s"""WITH RECURSIVE
-         | dw AS (SELECT doc_id, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
-         |$BpeApplyCte
-         |SELECT doc_id, CAST(sum(len(toks)) AS BIGINT) AS bpe_tokens,
-         |       CAST(count(*) AS BIGINT) AS ws_tokens
-         |FROM dw JOIN fin USING (word) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the byte-fallback census over the CJK-stitched corpus: the
-    // byte-faithful applier base expands the planted OOV chars to
-    // their <0xHH> marker sequences (from the same Scala constant the
-    // stitch uses), and the marker pattern is pure ASCII in the
-    // Java∩RE2 intersection
-    "bpe_oov_rate" ->
-      s"""WITH RECURSIVE
-         | sd AS (SELECT doc_id, CASE WHEN lang = 'zh' THEN text || ' ' || ${OovFixtureTok.map(c => s"chr(${c.toInt})").mkString(" || ")} ELSE text END AS text FROM documents),
-         | dw AS (SELECT doc_id, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM sd) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
-         |$BpeApplyCteByteFaithful,
-         | wt AS (SELECT word, CAST(len(toks) AS BIGINT) AS n_toks,
-         |        CAST(len(list_filter(toks, x -> regexp_matches(x, '^<0x[0-9a-f]{2}>$$'))) AS BIGINT) AS n_oov
-         |        FROM fin)
-         |SELECT d.lang, CAST(sum(wt.n_toks) AS BIGINT) AS bpe_tokens,
-         | CAST(sum(wt.n_oov) AS BIGINT) AS oov_tokens,
-         | CAST(floor(sum(wt.n_oov) * 1000000 / sum(wt.n_toks)) AS BIGINT) AS oov_ppm
-         |FROM dw JOIN wt USING (word) JOIN documents d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // same recursive applier CTE as bpe_doc_tokens, rolled up to the
-    // language grain; fertility is one division over exact sums
-    "bpe_fertility" ->
-      s"""WITH RECURSIVE
-         | dw AS (SELECT doc_id, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
-         |$BpeApplyCte,
-         | per AS (SELECT doc_id, CAST(sum(len(toks)) AS BIGINT) AS bpe_tokens,
-         |         CAST(count(*) AS BIGINT) AS ws_tokens
-         |         FROM dw JOIN fin USING (word) GROUP BY 1)
-         |SELECT d.lang, count(*) AS n_docs,
-         | CAST(sum(p.ws_tokens) AS BIGINT) AS ws_tokens,
-         | CAST(sum(p.bpe_tokens) AS BIGINT) AS bpe_tokens,
-         | round(CAST(sum(p.bpe_tokens) AS DOUBLE) / CAST(sum(p.ws_tokens) AS DOUBLE), 6) AS fertility
-         |FROM per p JOIN documents d USING (doc_id) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // positional word relation + the recursive applier, then the same
-    // prefix-closed keep predicate as one window + filter; a doc
-    // whose first word overflows LEFT-JOINs to an empty prefix
-    "token_budget_truncate" ->
-      s"""WITH RECURSIVE
-         | tl AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | dwp AS (SELECT doc_id, i AS pos, l[i] AS tok, lower(l[i]) AS word
-         |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM tl) z),
-         | wc AS (SELECT word, count(*) AS cnt FROM dwp GROUP BY 1),
-         |$BpeApplyCte,
-         | jo AS (SELECT dwp.doc_id, dwp.pos, dwp.tok, CAST(len(f.toks) AS BIGINT) AS n_toks
-         |        FROM dwp JOIN fin f USING (word)),
-         | cb AS (SELECT doc_id, pos, tok, n_toks,
-         |    coalesce(sum(n_toks) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM jo),
-         | tot AS (SELECT doc_id, CAST(sum(n_toks) AS BIGINT) AS bpe_total FROM jo GROUP BY 1),
-         | kept AS (SELECT doc_id, count(*) AS ws_tokens_kept, CAST(sum(n_toks) AS BIGINT) AS bpe_tokens_kept,
-         |    string_agg(tok, ' ' ORDER BY pos) AS prefix
-         |   FROM cb WHERE cum_before + n_toks <= 48 GROUP BY doc_id)
-         |SELECT tot.doc_id, coalesce(kept.ws_tokens_kept, 0) AS ws_tokens_kept,
-         | coalesce(kept.bpe_tokens_kept, 0) AS bpe_tokens_kept,
-         | tot.bpe_total > 48 AS truncated,
-         | coalesce(kept.prefix, '') AS prefix
-         |FROM tot LEFT JOIN kept USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // same recursive applier, histogram over the unnested terminal
-    // tokens of the LearnBpe composite corpus — occurrences via the
-    // word-frequency join, types via count(DISTINCT token string)
-    "bpe_token_lengths" ->
-      s"""WITH RECURSIVE
-         | corpus AS (SELECT text FROM documents
-         |   UNION ALL SELECT p_name || ' ' || p_type || ' ' || p_brand FROM part
-         |   UNION ALL SELECT c_name FROM customer
-         |   UNION ALL SELECT s_name FROM supplier
-         |   UNION ALL SELECT n_name FROM nation
-         |   UNION ALL SELECT r_name FROM region
-         |   UNION ALL SELECT event_type || ' ' || props FROM events),
-         | dw AS (SELECT lower(t.tok) AS word
-         |        FROM (SELECT unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM corpus) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM dw GROUP BY 1),
-         |$BpeApplyCte,
-         | tl AS (SELECT wc.cnt, unnest(f.toks) AS tok FROM wc JOIN fin f USING (word))
-         |SELECT CAST(length(tok) AS BIGINT) AS tok_len,
-         | CAST(sum(cnt) AS BIGINT) AS n_occurrences,
-         | CAST(count(DISTINCT tok) AS BIGINT) AS n_types
-         |FROM tl GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // centered components + rounded(12)-product DECIMAL sums over the
-    // vec_id self-join — operation-for-operation the Spark chain
-    "embedding_covariance" ->
-      s"""$CovCtes
-         |SELECT dim_i, dim_j, n, cov FROM up ORDER BY dim_i, dim_j""".stripMargin,
-
-    // the same covariance CTEs symmetrized, then 3 unrolled
-    // matvec/normalize steps (the kmeans/mmr device); λ from the
-    // final norm
-    "pca_top_component" -> {
-      val steps = (1 to 3).map { i =>
-        s""" w$i AS (SELECT f.i AS dim, round(CAST(sum(CAST(round(f.cov * v${i - 1}.v, 12) AS DECIMAL(38,12))) AS DOUBLE), 8) AS w
-           |   FROM fm f JOIN v${i - 1} ON v${i - 1}.dim = f.j GROUP BY 1),
-           | n$i AS (SELECT sqrt(CAST(sum(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm FROM w$i),
-           | v$i AS (SELECT dim, round(w / (SELECT nrm FROM n$i), 8) AS v FROM w$i)""".stripMargin
-      }.mkString(",\n")
-      s"""$CovCtes,
-         | fm AS (SELECT dim_i AS i, dim_j AS j, cov FROM up
-         |   UNION ALL SELECT dim_j, dim_i, cov FROM up WHERE dim_i < dim_j),
-         | v0 AS (SELECT DISTINCT dim_i AS dim, CAST(1.0 AS DOUBLE) AS v FROM up),
-         |$steps
-         |SELECT v3.dim, v3.v, round((SELECT nrm FROM n3), 6) AS lambda
-         |FROM v3 ORDER BY dim""".stripMargin
-    },
-
-    // z = rounded(cx/σ) with σ = round(sqrt(round(var,8)),8) — every
-    // rounding mirrored in order; zero-variance dims pinned to 0
-    "embedding_standardize" ->
-      s"""$StdCtes
-         |SELECT ce.vec_id, ce.dim,
-         | CASE WHEN st.sigma = 0 THEN 0.0 ELSE round(ce.cx / st.sigma, 8) END AS z
-         |FROM ce JOIN st USING (dim) ORDER BY vec_id, dim""".stripMargin,
-
-    // Σz² DECIMAL-summed per vector, total-ordered top-50
-    "embedding_outliers" ->
-      s"""$StdCtes,
-         | zr AS (SELECT ce.vec_id,
-         |    CASE WHEN st.sigma = 0 THEN 0.0 ELSE round(ce.cx / st.sigma, 8) END AS z
-         |   FROM ce JOIN st USING (dim)),
-         | m2 AS (SELECT vec_id,
-         |    round(CAST(sum(CAST(round(z * z, 12) AS DECIMAL(38,12))) AS DOUBLE), 6) AS m2
-         |   FROM zr GROUP BY 1)
-         |SELECT vec_id, m2, CAST(row_number() OVER (ORDER BY m2 DESC, vec_id) AS BIGINT) AS rank
-         |FROM m2 ORDER BY m2 DESC, vec_id LIMIT 50""".stripMargin,
-
-    // the embedding[i]/generate_series device; per-component rounded
-    // decimal sums mirror the Spark side exactly
-    "label_centroids" ->
-      """WITH c AS (SELECT label, CAST(embedding[i] AS DOUBLE) AS x, CAST(i AS BIGINT) AS dim
-        |   FROM (SELECT label, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
-        | r AS (SELECT label, dim, CAST(round(x, 9) AS DECIMAL(38,9)) AS vd FROM c),
-        | a AS (SELECT label, dim, count(*) AS n, sum(vd) AS s FROM r GROUP BY 1, 2)
-        |SELECT CAST(label AS BIGINT) AS label, dim, n,
-        | round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_v
-        |FROM a ORDER BY label, dim""".stripMargin,
-
-    "token_count" ->
-      """SELECT doc_id,
-        | CAST(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS ws_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens,
-        | CAST(ceil(length(text) / 4.0) AS BIGINT) AS approx_llm_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // duplicate-gram fractions: BIGINT/BIGINT divisions on both sides
-    // (DuckDB sum() widens to HUGEINT — cast back before dividing)
-    "repetition_stats" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | base AS (SELECT doc_id, l FROM toks WHERE len(l) >= 1),
-        | tg AS (SELECT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS g
-        |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM base WHERE len(l) >= 3)),
-        | tgs AS (SELECT doc_id, CAST(count(DISTINCT g) AS BIGINT) AS d, CAST(count(*) AS BIGINT) AS t FROM tg GROUP BY doc_id),
-        | bg AS (SELECT doc_id, l[i] || ' ' || l[i+1] AS g
-        |         FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM base WHERE len(l) >= 2)),
-        | bgc AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY doc_id, g),
-        | tb AS (SELECT doc_id, CAST(max(c) AS BIGINT) / CAST(sum(c) AS BIGINT) AS top_bigram_frac FROM bgc GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(len(b.l) AS BIGINT) AS n_tokens,
-        | coalesce(1.0 - CAST(tgs.d AS BIGINT) / tgs.t, 0.0) AS dup_trigram_frac,
-        | coalesce(tb.top_bigram_frac, 0.0) AS top_bigram_frac
-        |FROM base b LEFT JOIN tgs USING (doc_id) LEFT JOIN tb USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // chunk CTE (as doc_chunks) → per-chunk token counts → per-shard
-    // cumulative start offsets → pack = floor(start / budget)
-    "packed_sequences" ->
-      s"""$PackCtes
-         |SELECT shard, pack_id, doc_id, chunk_idx, n_tokens, start_off
-         |FROM p ORDER BY shard, doc_id, chunk_idx""".stripMargin,
-
-    // pack-efficiency rollup over the same packing chain: per shard,
-    // pack count, entry count, token total, and mean fill against the
-    // 64-token budget
-    "pack_stats" ->
-      s"""$PackCtes,
-         | pp AS (SELECT shard, pack_id, count(*) AS n_entries, sum(n_tokens) AS pack_tokens
-         |   FROM p GROUP BY shard, pack_id)
-         |SELECT shard, count(*) AS n_packs, CAST(sum(n_entries) AS BIGINT) AS n_entries,
-         | CAST(sum(pack_tokens) AS BIGINT) AS total_tokens,
-         | CAST(sum(pack_tokens) AS DOUBLE) / (count(*) * 64) AS mean_fill
-         |FROM pp GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // packing twin under BPE budgets: the chunk CTEs of
-    // packed_sequences + the recursive applier of bpe_tokens, with the
-    // word relation built from CHUNK tokens (boundary fragments
-    // tokenize as themselves on both engines)
-    "packed_bpe" ->
-      s"""WITH RECURSIVE
-         | c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM documents),
-         | u AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c),
-         | ch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM u),
-         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM ch) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
-         |$BpeApplyCte,
-         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f.toks)) AS BIGINT) AS bpe_n
-         |        FROM cw JOIN fin f USING (word) GROUP BY 1, 2),
-         | tok AS (SELECT ch.doc_id, ch.chunk_idx, ch.doc_id % 8 AS shard,
-         |        coalesce(cb.bpe_n, 0) AS n_tokens
-         |        FROM ch LEFT JOIN cb USING (doc_id, chunk_idx)),
-         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
-         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-         |   FROM tok)
-         |SELECT shard, CAST(floor(start_off / 64) AS BIGINT) AS pack_id, doc_id, chunk_idx, n_tokens, start_off
-         |FROM off ORDER BY shard, doc_id, chunk_idx""".stripMargin,
-
-    // pack assembly twin: same chunk/token/offset CTEs, then DuckDB's
-    // ordered string_agg mirrors the sorted-collect_list concatenation
-    "packed_text" ->
-      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM documents),
-        | u AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c),
-        | ch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM u),
-        | tok AS (SELECT doc_id, chunk_idx, chunk, doc_id % 8 AS shard,
-        |   CAST(len(list_filter(string_split_regex(chunk, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |   FROM ch),
-        | off AS (SELECT doc_id, chunk_idx, chunk, shard, n_tokens,
-        |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-        |   FROM tok)
-        |SELECT shard, CAST(floor(start_off / 64) AS BIGINT) AS pack_id,
-        |  string_agg(chunk, ' ' ORDER BY doc_id, chunk_idx) AS pack_text,
-        |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens, count(*) AS n_chunks
-        |FROM off GROUP BY shard, pack_id ORDER BY shard, pack_id""".stripMargin,
-
-    // rolling fingerprint with the reference's affine word hash: the
-    // per-word char-sum folds through (acc*31 + h) mod 1e9+7 — every
-    // intermediate stays far inside 64 bits, so DuckDB's list_reduce
-    // reproduces Spark's aggregate() exactly (pmod mirrored the usual
-    // way for sign safety)
-    "fingerprint_ref" ->
-      s"""WITH cw AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
-         |  FROM documents),
-         | h AS (SELECT doc_id, list_transform(ws, w ->
-         |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
-         |  FROM cw)
-         |SELECT doc_id, CAST(((list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
-         |    (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
-         |FROM h ORDER BY doc_id""".stripMargin,
-
-    // the extractor provably inverts the page fixture: main_text is
-    // the whitespace-collapsed document text, n_kept the paragraph
-    // count (12 words each), n_blocks adds the 3 chrome blocks
-    // (title/nav/footer) that the link-density gate drops
-    "html_outlinks" ->
-      s"""$CrawlEdgesCte
-         |SELECT src, dst FROM edges ORDER BY src, dst""".stripMargin,
-
-    // drained stateful-dedup edge stream must converge to the batch
-    // edge list — same closed-form twin
-    "streaming_outlinks" ->
-      s"""$CrawlEdgesCte
-         |SELECT src, dst FROM edges ORDER BY src, dst""".stripMargin,
-
-    "crawl_rank" -> pageRankUnrolled(CrawlEdgesCte),
-    "hits_rank" -> hitsUnrolled(CrawlEdgesCte),
-    "trust_rank" -> trustRankUnrolled(CrawlEdgesCte),
-    // weighted-PR twin: multiplicity edges from the same t CTE (no
-    // DISTINCT), contribution = round(rank·w/wsum, 12)
-    "weighted_rank" -> {
-      val pre =
-        s"""WITH $CrawlEdgesBody,
-           | ew AS (SELECT doc_id AS src, dst, count(*) AS w FROM t WHERE dst <> doc_id GROUP BY 1, 2),
-           | nodes AS (SELECT DISTINCT src AS node FROM ew UNION SELECT DISTINCT dst AS node FROM ew),
-           | deg AS (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM ew GROUP BY src),
-           | nn AS (SELECT count(*) AS n FROM nodes),
-           | r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS rank FROM nodes)""".stripMargin
-      val iters = (1 to 5).map { i =>
-        s""" r$i AS (SELECT nodes.node,
-           |   (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-           |     + CAST(0.85 AS DOUBLE) * CAST(coalesce(c.s, 0) AS DOUBLE) AS rank
-           |  FROM nodes LEFT JOIN (
-           |    SELECT e.dst AS node, sum(CAST(round(r.rank * CAST(e.w AS DOUBLE) / CAST(deg.wsum AS DOUBLE), 12) AS DECIMAL(38,12))) AS s
-           |    FROM r${i - 1} r JOIN deg ON deg.src = r.node JOIN ew e ON e.src = r.node
-           |    GROUP BY e.dst) c ON c.node = nodes.node)""".stripMargin
-      }.mkString(",\n")
-      s"$pre,\n$iters\nSELECT node, round(rank, 8) AS wpr FROM r5 ORDER BY node"
-    },
-    // bounded-hop reach by LEVEL (distinct per expansion), mutuality
-    // as a symmetric self-join, then transitive min-label closure over
-    // the mutual-pair graph (the dedup_clusters recursive device) so
-    // a ring that closes only through distant pairs labels consistently
-    "link_rings" ->
-      s"""WITH RECURSIVE $CrawlEdgesBody,
-         | r1 AS (SELECT DISTINCT src AS u, dst AS v FROM edges WHERE src <> dst),
-         | r2 AS (SELECT DISTINCT u, v FROM (SELECT a.u, b.v FROM r1 a JOIN r1 b ON a.v = b.u
-         |         UNION SELECT u, v FROM r1) z WHERE u <> v),
-         | r3 AS (SELECT DISTINCT u, v FROM (SELECT a.u, b.v FROM r2 a JOIN r1 b ON a.v = b.u
-         |         UNION SELECT u, v FROM r2) z WHERE u <> v),
-         | m AS (SELECT a.u AS node, a.v AS peer FROM r3 a JOIN r3 b ON a.u = b.v AND a.v = b.u),
-         | nn AS (SELECT DISTINCT node FROM m),
-         | reach AS (SELECT node, node AS label FROM nn
-         |           UNION SELECT m.node, reach.label FROM m JOIN reach ON reach.node = m.peer)
-         |SELECT node, min(label) AS ring_id FROM reach GROUP BY node ORDER BY node""".stripMargin,
-
-    // container framing + extraction: expected records rebuilt
-    // closed-form (url and fetch_ts from doc_id arithmetic, main_text
-    // the proven lossless collapse) — equality means the byte framing
-    // recovered every record exactly
-    "warc_ingest" -> warcIngestTwinSql,
-    // the streaming front door answers exactly what the batch one
-    // does — one twin serves both (the bm25 trio device)
-    "streaming_warc_ingest" -> warcIngestTwinSql,
-    // record-gzipped containers inflate back to the identical record
-    // stream — the same twin is the decompression proof
-    "warc_gzip_ingest" -> warcIngestTwinSql,
-
-    // the 2-hop merge closed-form: every original lands in its
-    // canonical triple; every planted copy chains into its text
-    // twin's triple through the exact-hash edge
-    "dedup_graph_fusion" ->
-      """SELECT doc_id, doc_id - (doc_id % 3) AS cluster_id FROM documents
-        |UNION ALL
-        |SELECT doc_id + 10000, doc_id - (doc_id % 3) FROM documents WHERE doc_id % 10 = 0
-        |ORDER BY 1""".stripMargin,
-
-    // closed-form: master m = doc_id − (doc_id mod 3); the hash
-    // proves injection round-trip, extraction, normalization
-    // (scheme/host lowering, :443 and fragment stripping), grouping
-    "canonical_dedup" -> {
-      val ss = Html.SiteSpace
-      s"""WITH x AS (SELECT doc_id, doc_id - (doc_id % 3) AS m FROM documents),
-         | c AS (SELECT doc_id, m,
-         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m AS canonical_url FROM x),
-         | g AS (SELECT canonical_url, count(*) AS group_size FROM c GROUP BY 1)
-         |SELECT c.doc_id, c.canonical_url, c.doc_id = c.m AS is_canonical, g.group_size
-         |FROM c JOIN g USING (canonical_url) ORDER BY c.doc_id""".stripMargin
-    },
-
-    // closed-form canonical: every arm's strip+sort lands on
-    // base?a=1&page=2 — the twin derives it, the Spark side must
-    // EARN it through the split/filter/sort pipeline
-    "url_strip_tracking" -> {
-      val ss = Html.SiteSpace
-      s"""WITH x AS (SELECT doc_id, doc_id - (doc_id % 3) AS m FROM documents),
-         | c AS (SELECT doc_id, m,
-         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m AS base FROM x),
-         | r AS (SELECT doc_id, base || '?a=1&page=2' AS canonical_url,
-         |    CASE doc_id % 3
-         |      WHEN 0 THEN base || '?page=2&utm_source=feed&a=1&utm_campaign=c' || doc_id
-         |      WHEN 1 THEN base || '?a=1&gclid=g' || doc_id || '&page=2'
-         |      ELSE base || '?page=2&a=1&fbclid=f' || doc_id END AS raw_url
-         |   FROM c),
-         | g AS (SELECT canonical_url, count(*) AS n_variants,
-         |    min(doc_id) AS keep_id FROM r GROUP BY 1)
-         |SELECT r.doc_id, r.raw_url, r.canonical_url, g.n_variants, g.keep_id
-         |FROM r JOIN g USING (canonical_url) ORDER BY r.doc_id""".stripMargin
-    },
-
-    // rule hits derived closed-form from the k arithmetic; the
-    // longest-prefix/host/prefix pick mirrors the Spark max(struct)
-    "url_blocklist_filter" -> {
-      val ss = Html.SiteSpace
-      s"""WITH u AS (SELECT doc_id, doc_id % $ss AS k FROM documents),
-         | uu AS (SELECT doc_id, k,
-         |    'https://' || ${sqlHost("k")} || '/doc/' || doc_id AS url,
-         |    '/doc/' || doc_id AS path FROM u),
-         | cand AS (
-         |   SELECT doc_id, ${sqlHost("k")} AS rule_host, '' AS prefix
-         |     FROM uu WHERE k % 7 = 0
-         |   UNION ALL
-         |   SELECT doc_id, ${sqlHost("k")}, '/doc/1'
-         |     FROM uu WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
-         |   UNION ALL
-         |   SELECT doc_id, 'shop.example.co.uk', '/doc/7'
-         |     FROM uu WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
-         | best AS (SELECT doc_id, rule_host, prefix, row_number() OVER (
-         |    PARTITION BY doc_id
-         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
-         |   FROM cand)
-         |SELECT uu.doc_id, uu.url, b.doc_id IS NOT NULL AS blocked,
-         | coalesce(b.rule_host, '') AS rule_host,
-         | coalesce(b.prefix, '') AS rule_prefix
-         |FROM uu LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-         |ORDER BY uu.doc_id""".stripMargin
-    },
-
-    // pooled per-SITE stopword density vs the corpus density (r15:
-    // pooling key is the PSL registered domain from the pslCtes chain,
-    // the same published algorithm over the same bundled snapshot the
-    // engine broadcasts); both sides exact: HUGEINT cross-multiply ==
-    // Spark's DECIMAL(38,0)
-    "domain_quality_filter" -> {
-      val ss = Html.SiteSpace
-      s"""WITH t AS (SELECT doc_id, lang, ${sqlHost(s"doc_id%$ss")} AS host,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |   FROM documents),
-         |${pslCtes("t")},
-         | s AS (SELECT doc_id, lang, t.host, coalesce(m.site, lower(t.host)) AS site,
-         |    CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT) AS h,
-         |    CAST(len(tk) AS BIGINT) AS n
-         |   FROM t JOIN psl_map m ON m.host = t.host),
-         | d AS (SELECT site, CAST(sum(h) AS BIGINT) AS domain_hits,
-         |    CAST(sum(n) AS BIGINT) AS domain_tokens FROM s GROUP BY site),
-         | tot AS (SELECT CAST(sum(domain_hits) AS BIGINT) AS ch,
-         |    CAST(sum(domain_tokens) AS BIGINT) AS ct FROM d),
-         | keep AS (SELECT site, domain_hits, domain_tokens FROM d, tot
-         |   WHERE CAST(domain_hits AS HUGEINT) * CAST(ct AS HUGEINT) >=
-         |         CAST(ch AS HUGEINT) * CAST(domain_tokens AS HUGEINT))
-         |SELECT s.doc_id, s.lang, s.host, s.site,
-         | keep.domain_hits, keep.domain_tokens
-         |FROM s JOIN keep USING (site) ORDER BY s.doc_id""".stripMargin
-    },
-
-    // the PSL algorithm replayed end-to-end in SQL over the SAME
-    // bundled snapshot (candidate-key explosion, exception-then-most-
-    // labels prevailing rule, default `*`) on a host fixture touching
-    // every rule class
-    "psl_registered_domain" -> {
-      val ss = Html.SiteSpace
-      s"""WITH hsrc AS (SELECT DISTINCT CASE
-         |   WHEN doc_id%7=0 THEN ${sqlHost(s"doc_id%$ss")}
-         |   WHEN doc_id%7=1 THEN 'www.example' || (doc_id%$ss) || '.com'
-         |   WHEN doc_id%7=2 THEN 'sub' || (doc_id%$ss) || '.foo.ck'
-         |   WHEN doc_id%7=3 THEN 'a' || (doc_id%$ss) || '.www.ck'
-         |   WHEN doc_id%7=4 THEN 'blog' || (doc_id%$ss) || '.github.io'
-         |   WHEN doc_id%7=5 THEN 'x' || (doc_id%$ss) || '.kawasaki.jp'
-         |   ELSE 'city.kawasaki.jp' END AS host FROM documents),
-         |${pslCtes("hsrc")}
-         |SELECT host, site, public_suffix FROM psl_map ORDER BY host""".stripMargin
-    },
-
-    // closed-form discovery list: uncrawled = odd ids; url/lastmod
-    // rebuilt from doc_id arithmetic — the build/parse round trip is
-    // what the Spark side must invert losslessly
-    "sitemap_discovery" -> {
-      val ss = Html.SiteSpace
-      s"""SELECT doc_id, ${sqlHost(s"doc_id%$ss")} AS host,
-         | 'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || doc_id AS url,
-         | CAST(1700000000 + doc_id AS BIGINT) AS lastmod_ts
-         |FROM documents WHERE doc_id % 2 = 1 ORDER BY doc_id""".stripMargin
-    },
-
-    // expected normalized URLs built closed-form from doc_id
-    // arithmetic — the three raw forms' resolution/canonicalization is
-    // what the hash proves (50 | 1000, so t%50 == (expr)%50 holds)
-    "url_normalize" -> {
-      val m = Html.DefaultLinkSpace
-      val ss = Html.SiteSpace
-      s"""WITH t AS (SELECT doc_id, (doc_id*7+3)%$m AS t1, (doc_id*13+5)%$m AS t2,
-         |                  (doc_id+1)%$m AS t3 FROM documents),
-         | rows AS (
-         |  SELECT doc_id, 'abs' AS kind,
-         |    'HTTP://' || upper(${sqlHost(s"t1%$ss")}) || ':80/doc/' || t1 || '#frag' AS raw_url,
-         |    'http://' || ${sqlHost(s"t1%$ss")} || '/doc/' || t1 AS norm_url,
-         |    ${sqlHost(s"t1%$ss")} AS host, ${sqlSite(s"t1%$ss")} AS site
-         |  FROM t
-         |  UNION ALL
-         |  SELECT doc_id, 'root',
-         |    '/doc/' || t2 || '?ref=nav',
-         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || t2 || '?ref=nav',
-         |    ${sqlHost(s"doc_id%$ss")}, ${sqlSite(s"doc_id%$ss")}
-         |  FROM t
-         |  UNION ALL
-         |  SELECT doc_id, 'rel',
-         |    '../doc/' || t3 || '#s2',
-         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || t3,
-         |    ${sqlHost(s"doc_id%$ss")}, ${sqlSite(s"doc_id%$ss")}
-         |  FROM t)
-         |SELECT doc_id, kind, raw_url, norm_url, host, site
-         |FROM rows ORDER BY doc_id, kind""".stripMargin
-    },
-
-    // only the absolute href crosses hosts, so the host graph is the
-    // closed-form k → (7k+3) mod SiteSpace map; undirected closure
-    // over it (the crawl_components recursive device, on strings)
-    "site_components" -> {
-      val ss = Html.SiteSpace
-      s"""WITH RECURSIVE e0 AS (
-         |  SELECT DISTINCT ${sqlHost(s"doc_id%$ss")} AS a, ${sqlHost(s"(doc_id*7+3)%$ss")} AS b
-         |  FROM documents
-         |  WHERE ${sqlHost(s"doc_id%$ss")} <> ${sqlHost(s"(doc_id*7+3)%$ss")}),
-         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
-         | nodes AS (SELECT DISTINCT src AS node FROM e),
-         | reach(node, label) AS (
-         |   SELECT node, node FROM nodes
-         |   UNION
-         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
-         |SELECT node AS host, min(label) AS cluster_id
-         |FROM reach GROUP BY node ORDER BY host""".stripMargin
-    },
-
-    // the PSL hop replayed via pslCtes (www label dropped by the real
-    // algorithm), then the same undirected min-label closure over the
-    // registered-domain graph
-    "psl_site_components" -> {
-      val ss = Html.SiteSpace
-      s"""WITH RECURSIVE hraw AS (
-         |  SELECT DISTINCT 'www.site' || (doc_id%$ss) || '.co.uk' AS ha,
-         |         'www.site' || ((doc_id*7+3)%$ss) || '.co.uk' AS hb
-         |  FROM documents),
-         | hsrc AS (SELECT ha AS host FROM hraw UNION SELECT hb FROM hraw),
-         |${pslCtes("hsrc")},
-         | e0 AS (SELECT DISTINCT ma.site AS a, mb.site AS b
-         |   FROM hraw JOIN psl_map ma ON ma.host = hraw.ha
-         |             JOIN psl_map mb ON mb.host = hraw.hb
-         |   WHERE ma.site <> mb.site),
-         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
-         | nodes AS (SELECT DISTINCT src AS node FROM e),
-         | reach(node, label) AS (
-         |   SELECT node, node FROM nodes
-         |   UNION
-         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
-         |SELECT node AS site, min(label) AS cluster_id
-         |FROM reach GROUP BY node ORDER BY site""".stripMargin
-    },
-
-    // the fold's expected outputs are PINNED punycode constants from
-    // public knowledge (münchen → xn--mnchen-3ya is the RFC 3492
-    // worked example class; xn--55qx5d.cn is the published ASCII form
-    // of the 公司.cn PSL rule) — NOT replayed through any IDN codec,
-    // so the twin independently proves both spellings key to one site
-    "idn_host_fold" -> {
-      s"""WITH hsrc AS (SELECT DISTINCT doc_id%4 AS f, doc_id%7 AS m FROM documents),
-         | h AS (SELECT CASE f
-         |   WHEN 0 THEN 'a' || m || '.münchen.de'
-         |   WHEN 1 THEN 'a' || m || '.xn--mnchen-3ya.de'
-         |   WHEN 2 THEN 'b' || m || '.shop.公司.cn'
-         |   ELSE 'b' || m || '.shop.xn--55qx5d.cn' END AS host, f FROM hsrc)
-         |SELECT host,
-         | CASE WHEN f IN (0,1) THEN 'xn--mnchen-3ya.de'
-         |      ELSE 'shop.xn--55qx5d.cn' END AS site,
-         | CASE WHEN f IN (0,1) THEN 'de' ELSE 'xn--55qx5d.cn' END AS public_suffix
-         |FROM h ORDER BY host""".stripMargin
-    },
-
-    // the twin is a pure closed form: expected texts rebuilt from the
-    // published charset tables (0xE9=é in ISO-8859-1, 0x83 65 93 FA=
-    // テ日 in Shift-JIS, 0xCF F0=Пр in windows-1251), malformed-unit
-    // counts from the UTF-8 spec's error-sequence segmentation (a
-    // planted 0xE9 before ASCII = 1 unit; the SJIS quad = 3; the 1251
-    // pair = 2; a lone 0xFF = 1) — nothing replayed through a codec
-    "charset_transcode_audit" -> {
-      s"""WITH b AS (SELECT doc_id, doc_id%6 AS c,
-         |    CAST(doc_id%7 AS VARCHAR) AS m FROM documents)
-         |SELECT doc_id,
-         | CASE WHEN c=1 THEN 'iso-8859-1' WHEN c=2 THEN 'shift_jis'
-         |      WHEN c=3 THEN 'windows-1251' ELSE 'utf-8' END AS charset,
-         | c IN (1,2,3) AS transcoded,
-         | CAST(CASE WHEN c=4 THEN 1 ELSE 0 END AS BIGINT) AS malformed_units,
-         | CAST(CASE c WHEN 1 THEN 1 WHEN 2 THEN 3 WHEN 3 THEN 2
-         |             WHEN 4 THEN 1 ELSE 0 END AS BIGINT) AS utf8_malformed,
-         | CAST(CASE WHEN c=5 THEN 1 ELSE 0 END AS BIGINT) AS n_moji,
-         | c=5 AS is_moji,
-         | CASE c
-         |  WHEN 0 THEN '<meta charset="utf-8"><p>doc ' || m || ' caf' || chr(233) || ' ' || chr(26085) || '</p>'
-         |  WHEN 1 THEN '<meta charset="iso-8859-1"><p>doc ' || m || ' caf' || chr(233) || '</p>'
-         |  WHEN 2 THEN '<meta charset="shift_jis"><p>doc ' || m || ' ' || chr(12486) || chr(26085) || '</p>'
-         |  WHEN 3 THEN '<meta charset="windows-1251"><p>doc ' || m || ' ' || chr(1055) || chr(1088) || '</p>'
-         |  WHEN 4 THEN '<meta charset="utf-8"><p>doc ' || m || ' ' || chr(65533) || ' ok</p>'
-         |  ELSE '<meta charset="utf-8"><p>doc ' || m || ' mal ' || chr(195) || chr(169) || ' input</p>'
-         | END AS text
-         |FROM b ORDER BY doc_id""".stripMargin
-    },
-
-    // undeclared fixture, detection outcomes pinned closed-form per
-    // planted class (the detector's decision ladder is deterministic
-    // published-spec arithmetic, so the twin states its conclusions):
-    // 1 lone-high-byte → latin-1, 2 SJIS lead pair → shift_jis,
-    // 3 Cyrillic run → cp1251, 4 stray 0xFF → latin-1 ÿ REPAIRED
-    // (zero malformed vs the declared fixture's counted damage)
-    "charset_detect_audit" -> {
-      s"""WITH b AS (SELECT doc_id, doc_id%6 AS c,
-         |    CAST(doc_id%7 AS VARCHAR) AS m FROM documents)
-         |SELECT doc_id,
-         | CASE WHEN c=1 THEN 'iso-8859-1' WHEN c=2 THEN 'shift_jis'
-         |      WHEN c=3 THEN 'windows-1251' WHEN c=4 THEN 'iso-8859-1'
-         |      ELSE 'utf-8' END AS charset,
-         | false AS declared,
-         | true AS supported,
-         | c IN (1,2,3,4) AS transcoded,
-         | CAST(0 AS BIGINT) AS malformed_units,
-         | CAST(CASE c WHEN 1 THEN 1 WHEN 2 THEN 3 WHEN 3 THEN 2
-         |             WHEN 4 THEN 1 ELSE 0 END AS BIGINT) AS utf8_malformed,
-         | true AS ok,
-         | CASE c
-         |  WHEN 0 THEN '<p>doc ' || m || ' caf' || chr(233) || ' ' || chr(26085) || '</p>'
-         |  WHEN 1 THEN '<p>doc ' || m || ' caf' || chr(233) || '</p>'
-         |  WHEN 2 THEN '<p>doc ' || m || ' ' || chr(12486) || chr(26085) || '</p>'
-         |  WHEN 3 THEN '<p>doc ' || m || ' ' || chr(1055) || chr(1088) || '</p>'
-         |  WHEN 4 THEN '<p>doc ' || m || ' ' || chr(255) || ' ok</p>'
-         |  ELSE '<p>doc ' || m || ' mal ' || chr(195) || chr(169) || ' input</p>'
-         | END AS text
-         |FROM b ORDER BY doc_id""".stripMargin
-    },
-
-    // the turn relation rebuilt closed-form from the fixture
-    // arithmetic — never replayed through the renderer or the line
-    // parser, so the hash proves the render→parse round trip
-    "sft_parse_turns" ->
-      s"""$SftTurnsCtes
-         |SELECT conv_id, turn_idx, role, content FROM sft_turns
-         |ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // every audit flag RECOMPUTED independently: DuckDB's own lag
-    // window + conditional aggregates over the rebuilt turns
-    "sft_conversation_audit" ->
-      s"""$SftTurnsCtes,
-         | prevr AS (SELECT conv_id, turn_idx, role, content,
-         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
-         |   FROM sft_turns)
-         |SELECT conv_id, count(*) AS n_turns,
-         | CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS n_user,
-         | CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) AS BIGINT) AS n_assistant,
-         | CAST(sum(CASE WHEN role = 'system' THEN 1 ELSE 0 END) AS BIGINT) AS n_system,
-         | CAST(sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-         | CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS BIGINT) AS same_role_runs,
-         | coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |   coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |     9223372036854775807), FALSE) AS starts_ok,
-         | arg_max(role, turn_idx) = 'assistant' AS ends_assistant,
-         | max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 1 AS has_empty,
-         | (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
-         |  AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |    coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |      9223372036854775807), FALSE)
-         |  AND arg_max(role, turn_idx) = 'assistant'
-         |  AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
-         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
-         |FROM prevr GROUP BY conv_id ORDER BY conv_id""".stripMargin,
-
-    // the same ordered-assistant md5 fingerprint via string_agg with
-    // an in-group ORDER BY; null-fp (no-assistant) singletons via the
-    // non-matching LEFT JOIN, exactly the engine's semantics
-    "sft_response_dedup" ->
-      s"""$SftTurnsCtes,
-         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
-         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
-         | grp AS (SELECT resp_fp, count(*) AS group_size, min(conv_id) AS keeper
-         |   FROM fp GROUP BY resp_fp)
-         |SELECT c.conv_id, fp.resp_fp,
-         | coalesce(grp.group_size, 1) AS group_size,
-         | (fp.resp_fp IS NULL OR c.conv_id = grp.keeper) AS keep
-         |FROM (SELECT DISTINCT conv_id FROM sft_turns) c
-         |LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
-         |ORDER BY conv_id""".stripMargin,
-
-    // the packing plan replayed with a SQL running-sum window: same
-    // ceil(chars/4) estimator, same exclusive-prefix bin arithmetic
-    "sft_pack_plan" ->
-      s"""$SftTurnsCtes,
-         | per AS (SELECT conv_id, CAST(sum((length(content) + 3) // 4) AS BIGINT) AS tokens
-         |   FROM sft_turns GROUP BY conv_id),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // both prefix-sum levels replayed as SQL windows: global
-    // conversation starts over the conv_id order, turn offsets
-    // within each conversation — spans tile exactly or the hash breaks
-    "sft_loss_mask_spans" ->
-      s"""$SftTurnsCtes,
-         | ltt AS (SELECT conv_id, turn_idx, role,
-         |   CAST((length(content) + 3) // 4 AS BIGINT) AS turn_tokens FROM sft_turns),
-         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
-         |   FROM ltt GROUP BY conv_id),
-         | lpre AS (SELECT conv_id,
-         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |     - conv_tokens AS conv_start FROM lper),
-         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
-         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
-         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |     0) AS BIGINT) AS toff
-         |   FROM ltt t JOIN lpre p USING (conv_id))
-         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
-         | conv_start + toff AS tok_start,
-         | conv_start + toff + turn_tokens AS tok_end,
-         | role = 'assistant' AS trainable
-         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // the BPE-grain twins: the closed-form turn relation feeds the
-    // shared recursive-CTE applier (wc built from TURN words), then
-    // per-turn counts left-join back (empty-content turns pin 0) and
-    // the SAME packing / two-level-window arithmetic runs over them
-    "sft_pack_plan_bpe" ->
-      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
-         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
-         |   FROM (SELECT conv_id, turn_idx,
-         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
-         |     FROM sft_turns) t
-         |   WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
-         |$BpeApplyCte,
-         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
-         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
-         | per AS (SELECT s.conv_id,
-         |   CAST(sum(coalesce(t.bt, 0)) AS BIGINT) AS tokens
-         |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)
-         |   GROUP BY 1),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "sft_loss_mask_spans_bpe" ->
-      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
-         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
-         |   FROM (SELECT conv_id, turn_idx,
-         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
-         |     FROM sft_turns) t
-         |   WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
-         |$BpeApplyCte,
-         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
-         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
-         | ltt AS (SELECT s.conv_id, s.turn_idx, s.role,
-         |   CAST(coalesce(t.bt, 0) AS BIGINT) AS turn_tokens
-         |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)),
-         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
-         |   FROM ltt GROUP BY conv_id),
-         | lpre AS (SELECT conv_id,
-         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |     - conv_tokens AS conv_start FROM lper),
-         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
-         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
-         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |     0) AS BIGINT) AS toff
-         |   FROM ltt t JOIN lpre p USING (conv_id))
-         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
-         | conv_start + toff AS tok_start,
-         | conv_start + toff + turn_tokens AS tok_end,
-         | role = 'assistant' AS trainable
-         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // payload relation rebuilt closed-form, then DuckDB's OWN json
-    // machinery (json_valid / json_extract) grades each call — two
-    // independent JSON parsers agreeing on validity, name extraction,
-    // and arguments presence; pairing via the same lead-window device
-    "tool_call_audit" ->
-      s"""$ToolTurnsCtes,
-         | calls AS (SELECT conv_id, turn_idx, payload, next_kind,
-         |   json_valid(payload) AS json_ok,
-         |   CASE WHEN json_valid(payload)
-         |        THEN json_extract_string(payload, '$$.name') END AS tool_name,
-         |   CASE WHEN json_valid(payload)
-         |        THEN json_extract(payload, '$$.arguments') IS NOT NULL
-         |        ELSE FALSE END AS has_args,
-         |   coalesce(next_kind = 'result', FALSE) AS paired
-         |   FROM nk WHERE kind = 'call')
-         |SELECT conv_id, turn_idx, json_ok, tool_name, has_args,
-         | coalesce(tool_name IN ('search', 'calc', 'fetch'), FALSE) AS name_known,
-         | paired,
-         | (json_ok AND has_args
-         |  AND coalesce(tool_name IN ('search', 'calc', 'fetch'), FALSE)
-         |  AND paired) AS call_ok
-         |FROM calls ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // DuckDB's own json_keys machinery grades the key-set diff — two
-    // independent JSON parsers must agree on present/missing/unknown
-    // argument names; the %53 wrong-arg-name class is the planted
-    // catch (it passes every tool_call_audit column)
-    "tool_args_audit" ->
-      s"""$ToolTurnsCtes,
-         | ca AS (SELECT conv_id, turn_idx,
-         |   CASE WHEN json_valid(payload)
-         |        THEN json_extract_string(payload, '$$.name') END AS tool_name,
-         |   coalesce(CASE WHEN json_valid(payload)
-         |     THEN list_sort(json_keys(payload, '$$.arguments')) END, []) AS present
-         |   FROM nk WHERE kind = 'call'),
-         | reg AS (SELECT * FROM (VALUES ('search', ['q']), ('calc', ['q']),
-         |   ('fetch', ['q'])) AS r(tool, req)),
-         | jd AS (SELECT c.conv_id, c.turn_idx, c.tool_name, c.present, r.req
-         |   FROM ca c LEFT JOIN reg r ON c.tool_name = r.tool)
-         |SELECT conv_id, turn_idx, tool_name,
-         | coalesce(array_to_string(present, ','), '') AS present_args,
-         | coalesce(array_to_string(list_filter(coalesce(req, []),
-         |   x -> NOT list_contains(present, x)), ','), '') AS missing_args,
-         | coalesce(array_to_string(list_filter(present,
-         |   x -> NOT list_contains(coalesce(req, []), x)), ','), '') AS unknown_args,
-         | (req IS NOT NULL
-         |  AND len(list_filter(coalesce(req, []), x -> NOT list_contains(present, x))) = 0
-         |  AND len(list_filter(present, x -> NOT list_contains(coalesce(req, []), x))) = 0)
-         |   AS args_ok
-         |FROM jd ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // the composed chain in SQL: audit ∩ dedup-keeper filters the
-    // turn relation, then the same running-sum packing arithmetic
-    "sft_admission_pack_e2e" ->
-      s"""$SftTurnsCtes,
-         | prevr AS (SELECT conv_id, turn_idx, role, content,
-         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
-         |   FROM sft_turns),
-         | aud AS (SELECT conv_id,
-         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
-         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |        9223372036854775807), FALSE)
-         |    AND arg_max(role, turn_idx) = 'assistant'
-         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
-         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
-         |   FROM prevr GROUP BY conv_id),
-         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
-         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
-         | grp AS (SELECT resp_fp, min(conv_id) AS keeper FROM fp GROUP BY resp_fp),
-         | adm AS (SELECT a.conv_id FROM aud a
-         |   LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
-         |   WHERE a.ok AND (fp.resp_fp IS NULL OR a.conv_id = grp.keeper)),
-         | per AS (SELECT t.conv_id, CAST(sum((length(t.content) + 3) // 4) AS BIGINT) AS tokens
-         |   FROM sft_turns t JOIN adm USING (conv_id) GROUP BY t.conv_id),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // every expected cell rebuilt closed-form from the fixture
-    // arithmetic — no regex on the oracle side; table_idx accounts
-    // for the %31 docs whose ONLY table is the appended one
-    "html_table_cells" ->
-      s"""$HtmlCellsCtes
-         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
-         | CAST(row_idx AS BIGINT) AS row_idx, CAST(col_idx AS BIGINT) AS col_idx,
-         | is_header, cell
-         |FROM ht_cells ORDER BY doc_id, table_idx, row_idx, col_idx""".stripMargin,
-
-    // shapes regrouped in SQL over the same closed-form cell relation
-    "html_table_shapes" ->
-      s"""$HtmlCellsCtes,
-         | rw AS (SELECT doc_id, table_idx, row_idx, count(*) AS w,
-         |   max(is_header) AS h FROM ht_cells GROUP BY 1, 2, 3)
-         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
-         | count(*) AS n_rows, CAST(max(w) AS BIGINT) AS n_cols,
-         | max(h) AS has_header, count(DISTINCT w) > 1 AS ragged
-         |FROM rw GROUP BY doc_id, table_idx ORDER BY doc_id, table_idx""".stripMargin,
-
-    // expected blocks rebuilt from the fixture arithmetic — no regex
-    // on the oracle side, so extractor and twin are fully independent
-    "markdown_code_blocks" ->
-      s"""$MdBlocksCtes
-         |SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, lang_tag, code,
-         | CAST(length(code) - length(replace(code, chr(10), '')) + 1 AS BIGINT) AS code_lines,
-         | CAST(length(code) AS BIGINT) AS code_chars
-         |FROM md_blocks ORDER BY doc_id, block_idx""".stripMargin,
-
-    // the dedup regrouped in SQL over the same closed-form relation:
-    // vendored/boilerplate code collapses to (lang, code) groups
-    "code_block_dedup" ->
-      s"""$MdBlocksCtes
-         |SELECT lang_tag, code, count(*) AS n_copies,
-         | CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         | min(doc_id) AS keeper_doc
-         |FROM md_blocks GROUP BY lang_tag, code
-         |ORDER BY lang_tag, code""".stripMargin,
-
-    // hit counts via the same non-overlapping replace arithmetic and
-    // the SAME explicit CASE-chain argmax — identical integers, then
-    // identical verdicts, or the hash breaks
-    "code_lang_consistency" ->
-      s"""$MdBlocksCtes,
-         | relab AS (SELECT doc_id, block_idx,
-         |   CASE WHEN doc_id % 23 = 0 AND lang_tag = 'python' THEN 'scala'
-         |        ELSE lang_tag END AS lang_tag, code FROM md_blocks),
-         | hits AS (SELECT doc_id, block_idx, lang_tag, code,
-         |   CAST((length(code) - length(replace(code, 'print(', ''))) // 6 +
-         |        (length(code) - length(replace(code, 'lambda ', ''))) // 7 +
-         |        (length(code) - length(replace(code, 'elif ', ''))) // 5 AS BIGINT) AS hits_python,
-         |   CAST((length(code) - length(replace(code, 'val ', ''))) // 4 +
-         |        (length(code) - length(replace(code, 'object ', ''))) // 7 +
-         |        (length(code) - length(replace(code, 'case class', ''))) // 10 AS BIGINT) AS hits_scala,
-         |   CAST((length(code) - length(replace(code, 'function ', ''))) // 9 +
-         |        (length(code) - length(replace(code, 'const ', ''))) // 6 +
-         |        (length(code) - length(replace(code, 'console.', ''))) // 8 AS BIGINT) AS hits_js
-         |   FROM relab),
-         | guessed AS (SELECT *,
-         |   CASE WHEN hits_python >= hits_scala AND hits_python >= hits_js AND hits_python > 0 THEN 'python'
-         |        WHEN hits_scala >= hits_js AND hits_scala > 0 THEN 'scala'
-         |        WHEN hits_js > 0 THEN 'js'
-         |        ELSE '' END AS guessed FROM hits)
-         |SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, lang_tag, code,
-         | hits_python, hits_scala, hits_js, guessed,
-         | (lang_tag IN ('python', 'scala', 'js') AND guessed <> ''
-         |  AND guessed <> lang_tag) AS mismatch
-         |FROM guessed ORDER BY doc_id, block_idx""".stripMargin,
-
-    // marker parity from the block arithmetic: 2·blocks (+1 for the
-    // planted unclosed fence) — independent of both regexes
-    // closed-form from the fixture arithmetic: each planted block is 2
-    // line-anchored markers (backtick or tilde alike), each unclosed
-    // arm (%31 backtick, %41 tilde) is 1; the %5 INLINE ``` arm is
-    // deliberately absent — a mid-line marker must not count, and a
-    // mark-anywhere extractor hash-mismatches on exactly that class
-    "markdown_fence_audit" ->
-      s"""WITH mdd AS (SELECT doc_id, doc_id % 4 AS c4, doc_id % 19 = 0 AS hasb2,
-         |    doc_id % 31 = 0 AS uncb, doc_id % 41 = 0 AS unct FROM documents),
-         | nb AS (SELECT doc_id,
-         |   (CASE WHEN c4 IN (0, 1, 2) THEN 1 ELSE 0 END) +
-         |   (CASE WHEN hasb2 THEN 1 ELSE 0 END) AS n_blocks, uncb, unct FROM mdd)
-         |SELECT doc_id, CAST(n_blocks AS BIGINT) AS n_blocks,
-         | CAST(2 * n_blocks + CASE WHEN uncb THEN 1 ELSE 0 END
-         |   + CASE WHEN unct THEN 1 ELSE 0 END AS BIGINT) AS fence_marks,
-         | (uncb OR unct) AS unclosed
-         |FROM nb ORDER BY doc_id""".stripMargin,
-
-    // the reserved-system + descending running-sum rule in plain SQL
-    "sft_context_truncation" ->
-      s"""$SftTurnsCtes,
-         | ctt AS (SELECT conv_id, turn_idx, role,
-         |   CAST((length(content) + 3) // 4 AS BIGINT) AS tokens,
-         |   role = 'system' AS is_sys FROM sft_turns),
-         | csys AS (SELECT conv_id,
-         |   CAST(sum(CASE WHEN is_sys THEN tokens ELSE 0 END) AS BIGINT) AS sys_tokens
-         |   FROM ctt GROUP BY conv_id),
-         | crev AS (SELECT t.conv_id, t.turn_idx, t.role, t.tokens, t.is_sys, s.sys_tokens,
-         |   CAST(sum(CASE WHEN t.is_sys THEN 0 ELSE t.tokens END) OVER (
-         |     PARTITION BY t.conv_id ORDER BY t.turn_idx DESC
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rev_cum
-         |   FROM ctt t JOIN csys s USING (conv_id))
-         |SELECT conv_id, turn_idx, role, tokens,
-         | (is_sys OR sys_tokens + rev_cum <= 12) AS kept
-         |FROM crev ORDER BY conv_id, turn_idx""".stripMargin,
-
-    // prompt relation + planted phrase rebuilt closed-form, then the
-    // decontaminate twin's text-space shingle overlap (count of
-    // distinct TEXT shingles == count of distinct hashed shingles,
-    // the same collision budget the decontaminate twin documents)
-    "sft_prompt_decontamination" ->
-      s"""$SftTurnsCtes,
-         | prompts AS (SELECT conv_id AS doc_id,
-         |   CASE WHEN conv_id % 23 = 0
-         |        THEN string_agg(content, ' ' ORDER BY turn_idx) ||
-         |          ' the quick brown fox jumps over the lazy dog'
-         |        ELSE string_agg(content, ' ' ORDER BY turn_idx) END AS text
-         |   FROM sft_turns WHERE role = 'user' GROUP BY conv_id),
-         | ptoks AS (SELECT doc_id,
-         |   list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l
-         |   FROM prompts),
-         | ppos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i
-         |   FROM ptoks WHERE len(l) >= 3),
-         | psh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM ppos),
-         | btoks AS (SELECT list_filter(string_split_regex(
-         |     'eval item 7: the quick brown fox jumps over the lazy dog endeval',
-         |     '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l),
-         | bpos AS (SELECT l, unnest(generate_series(1, len(l) - 2)) AS i FROM btoks),
-         | bsh AS (SELECT DISTINCT l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM bpos),
-         | ov AS (SELECT s.doc_id, count(*) AS n_overlap
-         |   FROM psh s JOIN bsh USING (shingle) GROUP BY s.doc_id)
-         |SELECT p.doc_id, coalesce(ov.n_overlap, 0) AS n_overlap,
-         | coalesce(ov.n_overlap, 0) >= 2 AS contaminated
-         |FROM prompts p LEFT JOIN ov USING (doc_id)
-         |ORDER BY p.doc_id""".stripMargin,
-
-    // the same argmax as a row_number window — the custom physical
-    // operator must agree with the SQL-standard form exactly
-    "best_of_n_selection" ->
-      s"""WITH smp AS (SELECT doc_id % 127 AS prompt_id, doc_id AS sample_id,
-         |   (doc_id * 2654435761) % 1000003 AS score FROM documents),
-         | rk AS (SELECT prompt_id, sample_id, score,
-         |   row_number() OVER (PARTITION BY prompt_id ORDER BY score DESC, sample_id) AS rn,
-         |   count(*) OVER (PARTITION BY prompt_id) AS n_candidates FROM smp)
-         |SELECT prompt_id, sample_id, score, CAST(n_candidates AS BIGINT) AS n_candidates
-         |FROM rk WHERE rn = 1 ORDER BY prompt_id""".stripMargin,
-
-    // unordered-key grouping with orientation counts in plain SQL —
-    // least/greatest on ASCII strings, binary collation both engines
-    "preference_pair_audit" ->
-      s"""$PrefPairsCtes
-         |SELECT prompt, least(chosen, rejected) AS lo, greatest(chosen, rejected) AS hi,
-         | count(*) AS n_pairs,
-         | CAST(sum(CASE WHEN chosen = rejected THEN 1 ELSE 0 END) AS BIGINT) AS n_degenerate,
-         | CAST(sum(CASE WHEN chosen <> rejected AND chosen = least(chosen, rejected)
-         |   THEN 1 ELSE 0 END) AS BIGINT) AS n_lo_chosen,
-         | CAST(sum(CASE WHEN chosen <> rejected AND chosen = greatest(chosen, rejected)
-         |   THEN 1 ELSE 0 END) AS BIGINT) AS n_hi_chosen,
-         | (sum(CASE WHEN chosen <> rejected AND chosen = least(chosen, rejected)
-         |    THEN 1 ELSE 0 END) > 0
-         |  AND sum(CASE WHEN chosen <> rejected AND chosen = greatest(chosen, rejected)
-         |    THEN 1 ELSE 0 END) > 0) AS conflicted
-         |FROM pref_pairs GROUP BY 1, 2, 3 ORDER BY prompt, lo, hi""".stripMargin,
-
-    // exact-integer length-delta sums and win counts per bucket
-    "preference_length_bias" ->
-      s"""$PrefPairsCtes
-         |SELECT pair_id % 8 AS bucket, count(*) AS n_pairs,
-         | CAST(sum(length(chosen) - length(rejected)) AS BIGINT) AS len_delta_sum,
-         | CAST(sum(CASE WHEN length(chosen) > length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_longer,
-         | CAST(sum(CASE WHEN length(chosen) < length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_shorter,
-         | CAST(sum(CASE WHEN length(chosen) = length(rejected) THEN 1 ELSE 0 END) AS BIGINT) AS n_tie
-         |FROM pref_pairs GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    // the planted-cycle prompts closed-form: a prompt cycles iff its
-    // base%5==0 AND its docs cover all three vote classes (class-2
-    // votes reversed close the A≻B≻C chain); candidate names from the
-    // same base arithmetic — the Spark side must find exactly these
-    // cycles via its edge self-join, nothing more
-    "preference_cycle_audit" ->
-      s"""WITH pt AS (SELECT DISTINCT doc_id % 89 AS base, doc_id % 3 AS cl FROM documents),
-         | full3 AS (SELECT base FROM pt GROUP BY base HAVING count(*) = 3)
-         |SELECT 'q ' || base AS prompt,
-         | 'cand a ' || base AS a, 'cand b ' || base AS b, 'cand c ' || base AS c
-         |FROM full3 WHERE base % 5 = 0 ORDER BY prompt""".stripMargin,
-
-    // paragraph relation rebuilt closed-form (12-word slices + the
-    // shared cookie constant from the SAME Scala object the fixture
-    // injects), then the df-filter and ordered reassembly in plain SQL
-    "paragraph_dedup" ->
-      s"""$ParaRelCtes,
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para)
-         |SELECT p.doc_id, count(*) AS n_paras,
-         | count(*) FILTER (WHERE df <= 1) AS n_kept,
-         | coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |FROM paras p JOIN dfr USING (para)
-         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-
-    // the crawl-native curation chain end to end: boilerplated pages →
-    // block extraction → cross-corpus paragraph dedup → Gopher
-    // word-level gate on the CLEANED text → context-window chunking —
-    // one hash proves the whole curation path a crawl corpus actually
-    // takes. The twin rebuilds the deduped text closed-form and then
-    // computes gate features and chunks TEXTUALLY from it
-    "crawl_curation_e2e" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""$ParaRelCtes,
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | j AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
-         | c AS (SELECT doc_id, lang, text,
-         |    CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM j),
-         | u AS (SELECT doc_id, lang, text,
-         |    unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin
-    },
-
-    // the full-build twin: every stage's proven CTE chain stitched
-    // end to end — paragraph relation + df cut (paragraph_dedup),
-    // Gopher features (crawl_curation_e2e), solver arithmetic
-    // (mixture_solve), k+1 priority pick (priority_sample), histogram
-    // percent-rank curriculum (curriculum_shards), and the recursive
-    // BPE applier + shard-cumsum packing (packed_bpe). The WARC
-    // framing round-trip is byte-lossless (warc_ingest's proof), so
-    // the twin starts from the same paragraph relation
-    "warc_to_training_e2e" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
-         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
-         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
-         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
-         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
-         | rates AS (SELECT lang,
-         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
-         |  FROM pj),
-         | mixed AS (SELECT mj.doc_id, mj.text FROM mj JOIN rates r ON mj.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
-         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
-         |   FROM mixed WHERE length(text) > 0),
-         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
-         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
-         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
-         | samp AS (SELECT doc_id, weight,
-         |   round(greatest(CAST(weight AS DOUBLE),
-         |     CASE WHEN (SELECT cnt FROM stats) = 101
-         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
-         |          ELSE 0.0 END), 6) AS w_est
-         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
-         | csc AS (SELECT doc_id, weight AS score FROM samp),
-         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
-         | cr AS (SELECT score,
-         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-         |   sum(cnt) OVER () AS n FROM ch1),
-         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
-         | cj AS (SELECT csc.doc_id,
-         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
-         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
-         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-         |  FROM csc JOIN cpr USING (score)),
-         | curr AS (SELECT doc_id, phase, curr_shard,
-         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
-         |  FROM cj),
-         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
-         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
-         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
-         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
-         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
-         |$BpeApplyCte,
-         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
-         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
-         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
-         |        coalesce(cb.bpe_n, 0) AS n_tokens
-         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
-         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
-         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-         |   FROM tok)
-         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
-         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
-         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
-         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
-         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
-    },
-
-    // the streamed build's twin: the batch chain (dd..rates) supplies
-    // the POLICY SNAPSHOT rates; the corpus itself takes the
-    // first-occurrence-wins dedup — one window ordered by the stream
-    // arrival order (container_id = doc_id % 8, then doc_id, pos) —
-    // and the sampler/curriculum/packing CTEs run on it
-    "streaming_warc_to_training" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
-         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
-         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
-         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
-         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
-         | rates AS (SELECT lang,
-         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
-         |  FROM pj),
-         | rs AS (SELECT doc_id, pos, para,
-         |    row_number() OVER (PARTITION BY para ORDER BY doc_id % 8, doc_id, pos) AS rn FROM paras),
-         | sdd AS (SELECT doc_id,
-         |    coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE rn = 1), '') AS text
-         |  FROM rs GROUP BY doc_id),
-         | stk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk2
-         |  FROM sdd),
-         | sf AS (SELECT doc_id, text,
-         |    CAST(len(tk2) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk2, x -> length(x))) AS DOUBLE) / len(tk2) AS mean_word_len,
-         |    CAST(len(list_filter(tk2, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk2) AS alpha_frac,
-         |    CAST(len(list_filter(tk2, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM stk),
-         | sg AS (SELECT doc_id, text FROM sf
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | smj AS (SELECT sg.doc_id, d3.lang, sg.text FROM sg JOIN documents d3 ON sg.doc_id = d3.doc_id),
-         | mixed AS (SELECT smj.doc_id, smj.text FROM smj JOIN rates r2 ON smj.lang = r2.lang
-         |          WHERE $HashPermille < r2.keep_permille),
-         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
-         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
-         |   FROM mixed WHERE length(text) > 0),
-         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
-         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
-         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
-         | samp AS (SELECT doc_id, weight,
-         |   round(greatest(CAST(weight AS DOUBLE),
-         |     CASE WHEN (SELECT cnt FROM stats) = 101
-         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
-         |          ELSE 0.0 END), 6) AS w_est
-         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
-         | csc AS (SELECT doc_id, weight AS score FROM samp),
-         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
-         | cr AS (SELECT score,
-         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-         |   sum(cnt) OVER () AS n FROM ch1),
-         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
-         | cj AS (SELECT csc.doc_id,
-         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
-         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
-         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-         |  FROM csc JOIN cpr USING (score)),
-         | curr AS (SELECT doc_id, phase, curr_shard,
-         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
-         |  FROM cj),
-         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
-         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
-         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
-         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
-         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
-         |$BpeApplyCte,
-         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
-         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
-         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
-         |        coalesce(cb.bpe_n, 0) AS n_tokens
-         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
-         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
-         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-         |   FROM tok)
-         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
-         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
-         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
-         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
-         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
-    },
-
-    // the same decorated lines built by the fixture's arithmetic, then
-    // the C4 rules applied as INDEPENDENT SQL (regexp + split + tells)
-    "c4_line_filter" ->
-      s"""$C4LinesCtes,
-        | k AS (SELECT doc_id, pos, line,
-        |    (regexp_matches(line, '[.!?"]$$')
-        |     AND len(list_filter(string_split_regex(line, '\\s+'), x -> length(x) > 0)) >= 5
-        |     AND NOT contains(lower(line), 'javascript')
-        |     AND NOT contains(lower(line), 'lorem ipsum')
-        |     AND NOT contains(line, '{')) AS keep
-        |  FROM lines)
-        |SELECT doc_id, count(*) AS n_lines, count(*) FILTER (WHERE keep) AS n_kept,
-        | coalesce(string_agg(line, ' ' ORDER BY pos) FILTER (WHERE keep), '') AS text,
-        | count(*) FILTER (WHERE keep) >= 3 AS page_kept
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // spans via lead() windows over the shared line relation; removal
-    // set exploded from contaminated span starts; string equality
-    // where the engine uses the 8-byte span hash
-    "span_scrub" ->
-      s"""$C4LinesCtes,
-         | cl AS (SELECT * FROM lines WHERE doc_id % 97 <> 0),
-         | bl AS (SELECT * FROM lines WHERE doc_id % 97 = 0),
-         | cs AS (SELECT doc_id, pos AS start,
-         |    line || ' ' || lead(line, 1) OVER win || ' ' || lead(line, 2) OVER win AS txt,
-         |    lead(line, 2) OVER win IS NOT NULL AS okspan
-         |  FROM cl WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-         | bs AS (SELECT DISTINCT txt FROM (
-         |    SELECT line || ' ' || lead(line, 1) OVER win || ' ' || lead(line, 2) OVER win AS txt,
-         |      lead(line, 2) OVER win IS NOT NULL AS okspan
-         |    FROM bl WINDOW win AS (PARTITION BY doc_id ORDER BY pos)) WHERE okspan),
-         | rm AS (SELECT DISTINCT c.doc_id, u.p AS pos
-         |   FROM (SELECT doc_id, start, txt FROM cs WHERE okspan) c
-         |   JOIN bs USING (txt), unnest(generate_series(c.start, c.start + 2)) AS u(p))
-         |SELECT l.doc_id, count(*) AS n_lines, count(r.pos) AS n_removed,
-         | coalesce(string_agg(l.line, ' ' ORDER BY l.pos) FILTER (WHERE r.pos IS NULL), '') AS text
-         |FROM cl l LEFT JOIN rm r ON l.doc_id = r.doc_id AND l.pos = r.pos
-         |GROUP BY l.doc_id ORDER BY l.doc_id""".stripMargin,
-
-    // closed-form latest-snapshot expectation: every third doc was
-    // re-fetched later with the marker appended; text length 48+ means
-    // ws is never empty, but the empty arm stays for smaller SFs
-    "crawl_snapshot_dedup" ->
-      s"""WITH w AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS ws
-         |  FROM documents)
-         |SELECT 'https://' || ${sqlHost(s"doc_id%${Html.SiteSpace}")} || '/doc/' || doc_id AS url,
-         | CAST(CASE WHEN doc_id % 3 = 0 THEN 1700500000 + doc_id
-         |           ELSE 1700000000 + doc_id END AS BIGINT) AS fetch_ts,
-         | CAST(CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_snapshots,
-         | CASE WHEN doc_id % 3 = 0 THEN
-         |        CASE WHEN len(ws) > 0 THEN array_to_string(ws, ' ') || ' updatemarker'
-         |             ELSE 'updatemarker' END
-         |      ELSE array_to_string(ws, ' ') END AS main_text
-         |FROM w ORDER BY url""".stripMargin,
-
-    // first-occurrence-wins over the same closed-form paragraph
-    // relation as paragraph_dedup: one row_number window ordered by
-    // (doc_id, pos) — doc_id-ordered file drops make stream order and
-    // global order coincide
-    "streaming_paragraph_ingest" ->
-      s"""$ParaRelCtes,
-         | r AS (SELECT doc_id, pos, para,
-         |    row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn FROM paras)
-         |SELECT doc_id, count(*) AS n_paras, count(*) FILTER (WHERE rn = 1) AS n_kept,
-         | coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE rn = 1), '') AS text
-         |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // every anchor string derived closed-form: source's first word +
-    // target id, over the (7k+3, 13k+5, k+1) mod m link map
-    "anchor_texts" -> {
-      val m = Html.DefaultLinkSpace
-      s"""WITH w AS (SELECT doc_id,
-         |    coalesce(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0)[1], '') AS fw
-         |  FROM documents),
-         | e AS (SELECT doc_id AS src, fw,
-         |    unnest([(doc_id*7+3)%$m, (doc_id*13+5)%$m, (doc_id+1)%$m]) AS dst FROM w),
-         | p AS (SELECT src, CAST(dst AS BIGINT) AS dst, trim(fw || ' ' || dst) AS anchor
-         |   FROM e WHERE dst <> src)
-         |SELECT dst, count(DISTINCT src) AS n_inlinks,
-         | count(DISTINCT anchor) AS n_anchor_variants, min(anchor) AS top_anchor
-         |FROM p GROUP BY dst ORDER BY dst""".stripMargin
-    },
-
-    // NB chain + Gopher features joined per doc, rolled up per source
-    // with DECIMAL-safe means
-    "source_quality_report" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""$NbCtes,
-         | gtk AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM documents),
-         | gf AS (SELECT doc_id,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    (CAST(len(tk) AS BIGINT) BETWEEN 50 AND 100000
-         |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) >= 3.0
-         |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) <= 10.0
-         |     AND CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) >= 0.8
-         |     AND len(list_filter(tk, x -> list_contains([$stops], lower(x)))) >= 2) AS keep
-         |  FROM gtk)
-         |SELECT d3.source, count(*) AS n_docs,
-         | round(CAST(sum(CAST(nb.llr AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS mean_llr,
-         | CAST(count(*) FILTER (WHERE gf.keep) AS DOUBLE) / count(*) AS keep_frac,
-         | CAST(sum(gf.n_words) AS DOUBLE) / count(*) AS mean_words
-         |FROM documents d3 JOIN nb USING (doc_id) JOIN gf USING (doc_id)
-         |GROUP BY d3.source ORDER BY d3.source""".stripMargin
-    },
-
-    // the streamed drift monitor maintains exactly the (word, c_old,
-    // c_new) counters the batch twin's m CTE builds — one twin, both
-    // paths
-    "streaming_corpus_drift" -> corpusDriftTwin,
-
-    // the same smoothed per-term KL chain: union-vocab counts, one
-    // scalar row, identically-associated double expression per term
-    "corpus_drift" -> corpusDriftTwin,
-
-    // nine gram relations, the (count, chars, gram) deterministic top
-    // pick, and the band conjunction — all generated from the same
-    // Seq((n, threshold)) constants the operator defaults to
-    "gopher_repetition" -> {
-      val topBands = Seq(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
-      val dupBands = Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)
-      val gramCtes = (topBands ++ dupBands).map(_._1).map(n =>
-        s"""SELECT doc_id, total_chars, $n AS n,
-           |   array_to_string(list_slice(ws, i, i + ${n - 1}), ' ') AS gram
-           | FROM t, unnest(generate_series(1, len(ws) - ${n - 1})) AS u(i)
-           | WHERE len(ws) >= $n""".stripMargin).mkString("(", ")\n UNION ALL (", ")")
-      val wideCols = (topBands.map { case (n, _) =>
-        s"coalesce(max(CASE WHEN n = $n THEN top_frac END), 0.0) AS top_${n}_frac"
-      } ++ dupBands.map { case (n, _) =>
-        s"coalesce(max(CASE WHEN n = $n THEN dup_frac END), 0.0) AS dup_${n}_frac"
-      }).mkString(",\n    ")
-      val keep = (topBands.map { case (n, t) => s"top_${n}_frac <= CAST($t AS DOUBLE)" } ++
-        dupBands.map { case (n, t) => s"dup_${n}_frac <= CAST($t AS DOUBLE)" })
-        .mkString(" AND ")
-      s"""WITH t0 AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS ws
-         |  FROM documents),
-         | t AS (SELECT doc_id, ws, list_sum(list_transform(ws, x -> length(x))) AS total_chars
-         |  FROM t0 WHERE len(ws) >= 1),
-         | g AS ($gramCtes),
-         | c AS (SELECT doc_id, n, gram, any_value(total_chars) AS total_chars,
-         |    count(*) AS c, length(gram) - (n - 1) AS chars
-         |  FROM g GROUP BY doc_id, n, gram),
-         | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id, n
-         |    ORDER BY c DESC, chars DESC, gram DESC) AS rn FROM c),
-         | p AS (SELECT doc_id, n,
-         |    CAST(max(CASE WHEN rn = 1 THEN c * chars END) AS DOUBLE) / any_value(total_chars) AS top_frac,
-         |    CAST(coalesce(sum(CASE WHEN c >= 2 THEN c * chars END), 0) AS DOUBLE) / any_value(total_chars) AS dup_frac
-         |  FROM r GROUP BY doc_id, n),
-         | wdf AS (SELECT doc_id,
-         |    $wideCols
-         |  FROM p GROUP BY doc_id)
-         |SELECT *, ($keep) AS keep FROM wdf ORDER BY doc_id""".stripMargin
-    },
-
-    // every Gopher feature and band recomputed in SQL from the same
-    // constants (stop list generated from the Scala object)
-    "gopher_rules" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""WITH tk AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM documents),
-         | f AS (SELECT doc_id,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk)
-         |SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop_hits,
-         | (n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |  AND alpha_frac >= 0.8 AND n_stop_hits >= 2) AS keep
-         |FROM f ORDER BY doc_id""".stripMargin
-    },
-
-    // uncrawled targets of the closed-form edge map, ranked by
-    // distinct inlinks with the same deterministic tiebreak
-    "crawl_frontier" ->
-      s"""$CrawlEdgesCte,
-         | f AS (SELECT dst, count(DISTINCT src) AS n_inlinks FROM edges e
-         |   WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.doc_id = e.dst)
-         |   GROUP BY dst),
-         | r AS (SELECT dst, n_inlinks,
-         |   row_number() OVER (ORDER BY n_inlinks DESC, dst) AS priority FROM f)
-         |SELECT dst, n_inlinks, priority FROM r WHERE priority <= 50
-         |ORDER BY priority""".stripMargin,
-
-    // the k%4-keyed rule table and the longest-prefix verdict derived
-    // directly (no parsing — that is what the Spark side must prove)
-    "robots_filter" -> {
-      val ss = Html.SiteSpace
-      s"""WITH hosts AS (SELECT DISTINCT doc_id % $ss AS k FROM documents),
-         | rules AS (
-         |   SELECT k, '/private/' AS prefix, false AS allow FROM hosts
-         |   UNION ALL SELECT k, '/doc/', false FROM hosts WHERE k % 4 = 0
-         |   UNION ALL SELECT k, '/doc/1', false FROM hosts WHERE k % 4 = 1
-         |   UNION ALL SELECT k, '/doc/12', true FROM hosts WHERE k % 4 = 1
-         |   UNION ALL SELECT k, '/doc/', true FROM hosts WHERE k % 4 = 2),
-         | urls AS (SELECT doc_id, doc_id % $ss AS k,
-         |    'https://' || ${sqlHost(s"doc_id%$ss")} || '/doc/' || doc_id AS url,
-         |    '/doc/' || doc_id AS path
-         |   FROM documents),
-         | cand AS (SELECT u.url, r.prefix, r.allow
-         |   FROM urls u JOIN rules r USING (k) WHERE starts_with(u.path, r.prefix)),
-         | best AS (SELECT url, prefix, allow, row_number() OVER (PARTITION BY url
-         |    ORDER BY length(prefix) DESC, allow DESC, prefix DESC) AS rn FROM cand)
-         |SELECT u.url, coalesce(b.allow, true) AS allowed, coalesce(b.prefix, '') AS rule
-         |FROM urls u LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (url)
-         |ORDER BY u.url""".stripMargin
-    },
-
-    // frame-0 aHash closed-form: the fixture's 16x12 frame-0 pattern
-    // (pid*7) sampled at the 8x8 NN grid with the 64*v > sum bit rule
-    "video_fingerprint_dedup" ->
-      """WITH vids AS (
-        |   SELECT doc_id AS media_id, doc_id AS pid FROM documents
-        |   UNION ALL SELECT doc_id + 1000000, doc_id FROM documents WHERE doc_id % 3 = 0),
-        | lum AS (SELECT media_id, u.x, v.y,
-        |    (((pid * 7) % 256) * 31 + ((u.x * 16) // 8) * 7 + ((v.y * 12) // 8) * 13) % 256 AS lv
-        |   FROM vids, unnest(generate_series(0, 7)) u(x), unnest(generate_series(0, 7)) v(y)),
-        | s AS (SELECT media_id, sum(lv) AS total FROM lum GROUP BY media_id),
-        | bits AS (SELECT l.media_id,
-        |    string_agg(CASE WHEN 64 * l.lv > s.total THEN '1' ELSE '0' END, '' ORDER BY l.y * 8 + l.x) AS vhash
-        |   FROM lum l JOIN s USING (media_id) GROUP BY l.media_id)
-        |SELECT min(media_id) AS keep_id, count(*) AS n_copies, vhash
-        |FROM bits GROUP BY vhash ORDER BY keep_id""".stripMargin,
-
-    // 3-bit amplitude bands of the closed-form waveform over the first
-    // 64 samples; the clip rows reuse the original's formula because
-    // truncation does not change the prefix
-    "audio_fingerprint_dedup" ->
-      """WITH clips AS (
-        |   SELECT doc_id AS media_id, doc_id AS pid FROM documents
-        |   UNION ALL SELECT doc_id + 1000000, doc_id FROM documents WHERE doc_id % 5 = 0),
-        | bits AS (SELECT media_id,
-        |    string_agg(CAST(((pid % 97) * 31 + i * 7919) % 65536 // 8192 AS VARCHAR), '' ORDER BY i) AS afp
-        |   FROM clips, unnest(generate_series(0, 63)) AS u(i) GROUP BY media_id)
-        |SELECT min(media_id) AS keep_id, count(*) AS n_copies, afp
-        |FROM bits GROUP BY afp ORDER BY keep_id""".stripMargin,
-
-    // ok-ness and dimensions closed-form: corrupt iff media_id%10=3,
-    // dims from the fixture's %64/%48 arithmetic otherwise
-    "media_decode_audit" ->
-      """SELECT doc_id AS media_id, doc_id % 10 <> 3 AS decode_ok,
-        | CASE WHEN doc_id % 10 <> 3 THEN CAST(doc_id % 64 + 16 AS INT) END AS width,
-        | CASE WHEN doc_id % 10 <> 3 THEN CAST(doc_id % 48 + 16 AS INT) END AS height
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // every aHash derived closed-form: the fixture pattern value at
-    // the 8x8 nearest-neighbor grid, bits by the integer-exact
-    // 64*v > sum rule, packed row-major; the rescaled variants reuse
-    // the ORIGINAL's formula because the NN mapping composes exactly
-    "image_phash_dedup" ->
-      s"""$PhashBitsCtes
-         |SELECT min(media_id) AS keep_id, count(*) AS n_copies, ahash
-         |FROM bits GROUP BY ahash ORDER BY keep_id""".stripMargin,
-
-    // the oracle may brute-force what the operator must not: all pairs
-    // with positional Hamming <= 6 over the same closed-form hashes
-    "image_phash_near_dups" ->
-      s"""$PhashBitsCtes,
-         | pairs AS (SELECT a.media_id AS id_a, b.media_id AS id_b,
-         |    CAST(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CASE WHEN substring(a.ahash, i, 1) <> substring(b.ahash, i, 1)
-         |           THEN 1 ELSE 0 END)) AS BIGINT) AS dist
-         |   FROM bits a JOIN bits b ON a.media_id < b.media_id)
-         |SELECT id_a, id_b, dist FROM pairs WHERE dist <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // lossy-codec invariants closed-form: dimensions are exact doc_id
-    // arithmetic; the marker/dims/luma verdicts are pinned TRUE (a
-    // broken decode path flips a boolean and the hash screams)
-    "jpeg_decode_audit" ->
-      """SELECT doc_id AS media_id, true AS soi_ok, true AS eoi_ok,
-        | CAST(doc_id % 64 + 16 AS INTEGER) AS width,
-        | CAST(doc_id % 48 + 16 AS INTEGER) AS height,
-        | true AS dims_ok, true AS luma_ok
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // drift bound pinned TRUE per image — JpegSpec proves the bound
-    // over the fixture's full 768-id pattern cycle, so it holds at
-    // any scale factor
-    "jpeg_ahash_drift" ->
-      """SELECT doc_id AS media_id, true AS drift_ok
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // each URL's diff status from the same %5 / %3 / %7 arithmetic the
-    // fixture snapshots are built with (removed wins over changed —
-    // a page absent from the new crawl has no content to compare)
-    "crawl_diff" ->
-      s"""SELECT 'https://' || ${sqlHost(s"doc_id%${Html.SiteSpace}")} || '/doc/' || doc_id AS url,
-         | CASE WHEN doc_id % 5 = 0 THEN 'removed'
-         |      WHEN doc_id % 3 = 0 THEN 'changed'
-         |      ELSE 'unchanged' END AS status
-         |FROM documents
-         |UNION ALL
-         |SELECT 'https://extra.example.com/doc/' || doc_id AS url, 'added' AS status
-         |FROM documents WHERE doc_id % 7 = 0
-         |ORDER BY url""".stripMargin,
-
-    // the NB train + score chain replayed in SQL end to end
-    "nb_quality_score" ->
-      s"""$NbCtes
-         |SELECT doc_id, n_tokens, llr, llr > 0 AS pred_pos
-         |FROM nb ORDER BY doc_id""".stripMargin,
-
-    // held-out reliability bins off the same nb chain: identical
-    // sigmoid association, rounded(12) p DECIMAL-summed, rates as
-    // single divisions, gap from the two ROUNDED columns
-    "nb_calibration" ->
-      s"""$NbCtes,
-         | ev AS (SELECT nb.llr, d.is_pos FROM nb JOIN d USING (doc_id) WHERE NOT d.is_train),
-         | pp AS (SELECT is_pos, round(1.0 / (1.0 + exp(-llr)), 12) AS p FROM ev),
-         | b AS (SELECT least(CAST(floor(p * 10) AS BIGINT), 9) AS bin, is_pos,
-         |        CAST(p AS DECIMAL(28,12)) AS p FROM pp),
-         | g AS (SELECT bin, count(*) AS n,
-         |        CAST(sum(CASE WHEN is_pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |        round(CAST(sum(p) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_p
-         |        FROM b GROUP BY bin),
-         | g2 AS (SELECT bin, n, n_pos, mean_p,
-         |        round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS emp_rate FROM g)
-         |SELECT bin, n, n_pos, mean_p, emp_rate,
-         | round(abs(mean_p - emp_rate), 6) AS gap
-         |FROM g2 ORDER BY bin""".stripMargin,
-
-    // the naive window formulation of midrank AUC — the Spark side
-    // must reproduce it through the histogram + TotalOrder prefix sum
-    "classifier_auc_eval" ->
-      s"""$NbCtes,
-         | ev AS (SELECT nb.llr AS s, d.is_pos FROM nb JOIN d USING (doc_id)
-         |        WHERE NOT d.is_train),
-         | h AS (SELECT s, count(*) AS c,
-         |    CAST(sum(CASE WHEN is_pos THEN 1 ELSE 0 END) AS BIGINT) AS c_pos
-         |   FROM ev GROUP BY s),
-         | p AS (SELECT s, c, c_pos, CAST(coalesce(sum(c) OVER (ORDER BY s
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS below
-         |   FROM h),
-         | a AS (SELECT
-         |    CAST(sum(CAST(c_pos AS HUGEINT) * (2*below + c + 1)) AS HUGEINT) AS tr,
-         |    CAST(sum(c_pos) AS BIGINT) AS n_pos,
-         |    CAST(sum(c - c_pos) AS BIGINT) AS n_neg FROM p)
-         |SELECT n_pos, n_neg,
-         | round(CAST(tr - CAST(n_pos AS HUGEINT)*(n_pos+1) AS DOUBLE) /
-         |       CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS DOUBLE), 6) AS auc
-         |FROM a""".stripMargin,
-
-    // the planted-lexicon replay over the cleaned-token pipeline
-    "badword_filter" ->
-      s"""WITH pl AS (SELECT doc_id,
-         |   CASE WHEN doc_id % 11 = 0 THEN text || ' casino'
-         |        WHEN doc_id % 13 = 0 THEN text || ' VIAGRA!'
-         |        ELSE text END AS text FROM documents),
-         | w AS (SELECT doc_id, list_filter(list_transform(
-         |     list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |     t -> lower(regexp_replace(t, '$P', '', 'g'))), x -> length(x) > 0) AS ws
-         |   FROM pl),
-         | b AS (SELECT doc_id, CAST(len(list_filter(ws,
-         |     x -> list_contains(['casino','viagra','lottery'], x))) AS BIGINT) AS n_bad
-         |   FROM w)
-         |SELECT doc_id, n_bad, n_bad = 0 AS kept FROM b ORDER BY doc_id""".stripMargin,
-
-    // the same three signals, naive formulation: per-signal moments
-    // from DECIMAL sums, z-blend replayed literally — bit-identical
-    // float path on both engines (avg token length = one double
-    // division of two exact integers on each engine)
-    "quality_ensemble" ->
-      s"""$NbCtes,
-         | tq AS (SELECT doc_id, lang, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |   FROM documents),
-         | f AS (SELECT doc_id, lang,
-         |    len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], lower(x)))) / len(tk) AS stop_r,
-         |    list_sum(list_transform(tk, x -> length(x))) / len(tk) AS atl
-         |   FROM tq),
-         | j AS (SELECT nb.doc_id, f.lang, nb.llr, f.stop_r, f.atl
-         |   FROM nb JOIN f USING (doc_id)),
-         | mo AS (SELECT count(*) AS n,
-         |    CAST(sum(CAST(llr AS DECIMAL(28,12))) AS DOUBLE) AS s_l,
-         |    CAST(sum(CAST(round(llr*llr, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_l,
-         |    CAST(sum(CAST(stop_r AS DECIMAL(28,12))) AS DOUBLE) AS s_s,
-         |    CAST(sum(CAST(round(stop_r*stop_r, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_s,
-         |    CAST(sum(CAST(atl AS DECIMAL(28,12))) AS DOUBLE) AS s_p,
-         |    CAST(sum(CAST(round(atl*atl, 12) AS DECIMAL(28,12))) AS DOUBLE) AS q_p
-         |   FROM j),
-         | z AS (SELECT j.doc_id, j.lang,
-         |    round((1.0 * ((llr - s_l/n) / sqrt(greatest(q_l/n - (s_l/n)*(s_l/n), 0.0)))
-         |         + 1.0 * ((stop_r - s_s/n) / sqrt(greatest(q_s/n - (s_s/n)*(s_s/n), 0.0)))
-         |         + -1.0 * ((atl - s_p/n) / sqrt(greatest(q_p/n - (s_p/n)*(s_p/n), 0.0)))) / 3, 6)
-         |      AS ensemble_score
-         |   FROM j, mo)
-         |SELECT doc_id, lang, ensemble_score, ensemble_score >= 0 AS kept
-         |FROM z ORDER BY doc_id""".stripMargin,
-
-    // the drained frontier's closed form: one canonical key per m
-    // triple, graded by the same rule arithmetic as
-    // url_blocklist_filter (k = m%ss; path excludes the query)
-    "streaming_url_frontier" -> {
-      val ss = Html.SiteSpace
-      s"""WITH x AS (SELECT DISTINCT doc_id - (doc_id % 3) AS m FROM documents),
-         | u AS (SELECT m, m % $ss AS k FROM x),
-         | uu AS (SELECT m, k,
-         |    'https://' || ${sqlHost("k")} || '/doc/' || m || '?a=1&page=2' AS url,
-         |    '/doc/' || m AS path FROM u),
-         | cand AS (
-         |   SELECT m, ${sqlHost("k")} AS rule_host, '' AS prefix
-         |     FROM uu WHERE k % 7 = 0
-         |   UNION ALL
-         |   SELECT m, ${sqlHost("k")}, '/doc/1'
-         |     FROM uu WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
-         |   UNION ALL
-         |   SELECT m, 'shop.example.co.uk', '/doc/7'
-         |     FROM uu WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
-         | best AS (SELECT m, rule_host, prefix, row_number() OVER (
-         |    PARTITION BY m
-         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
-         |   FROM cand)
-         |SELECT uu.url, b.m IS NOT NULL AS blocked,
-         | coalesce(b.rule_host, '') AS rule_host,
-         | coalesce(b.prefix, '') AS rule_prefix
-         |FROM uu LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (m)
-         |ORDER BY uu.url""".stripMargin
-    },
-
-    // the full admission policy as its batch closed form: canonical
-    // fetch keys (one per m), blocklist longest-prefix verdict, robots
-    // longest-prefix verdict (Allow wins ties), admitted = ¬blocked ∧
-    // allowed — the drained stream must equal this exactly
-    "streaming_crawl_admission" -> {
-      val ss = Html.SiteSpace
-      s"""WITH x AS (SELECT DISTINCT doc_id - (doc_id % 3) AS m FROM documents),
-         | u AS (SELECT m, m % $ss AS k,
-         |    'https://' || ${sqlHost(s"m%$ss")} || '/doc/' || m || '?a=1&page=2' AS url,
-         |    '/doc/' || m AS path FROM x),
-         | bcand AS (
-         |   SELECT m, ${sqlHost("k")} AS rule_host, '' AS prefix
-         |     FROM u WHERE k % 7 = 0
-         |   UNION ALL
-         |   SELECT m, ${sqlHost("k")}, '/doc/1'
-         |     FROM u WHERE k % 5 = 0 AND starts_with(path, '/doc/1')
-         |   UNION ALL
-         |   SELECT m, 'shop.example.co.uk', '/doc/7'
-         |     FROM u WHERE k % 3 = 0 AND starts_with(path, '/doc/7')),
-         | bbest AS (SELECT m, rule_host, prefix, row_number() OVER (
-         |    PARTITION BY m
-         |    ORDER BY length(prefix) DESC, rule_host DESC, prefix DESC) AS rn
-         |   FROM bcand),
-         | hosts AS (SELECT DISTINCT k FROM u),
-         | rrules AS (
-         |   SELECT k, '/private/' AS rprefix, false AS allow FROM hosts
-         |   UNION ALL SELECT k, '/doc/', false FROM hosts WHERE k % 4 = 0
-         |   UNION ALL SELECT k, '/doc/1', false FROM hosts WHERE k % 4 = 1
-         |   UNION ALL SELECT k, '/doc/12', true FROM hosts WHERE k % 4 = 1
-         |   UNION ALL SELECT k, '/doc/', true FROM hosts WHERE k % 4 = 2),
-         | rcand AS (SELECT u.m, r.rprefix, r.allow
-         |   FROM u JOIN rrules r USING (k) WHERE starts_with(u.path, r.rprefix)),
-         | rbest AS (SELECT m, rprefix, allow, row_number() OVER (PARTITION BY m
-         |    ORDER BY length(rprefix) DESC, allow DESC, rprefix DESC) AS rn
-         |   FROM rcand)
-         |SELECT u.url, bb.m IS NOT NULL AS blocked,
-         | coalesce(bb.rule_host, '') AS rule_host,
-         | coalesce(bb.prefix, '') AS rule_prefix,
-         | coalesce(rb.allow, true) AS allowed,
-         | coalesce(rb.rprefix, '') AS robots_rule,
-         | (bb.m IS NULL) AND coalesce(rb.allow, true) AS admitted
-         |FROM u LEFT JOIN (SELECT * FROM bbest WHERE rn = 1) bb USING (m)
-         |       LEFT JOIN (SELECT * FROM rbest WHERE rn = 1) rb USING (m)
-         |ORDER BY u.url""".stripMargin
-    },
-
-    // the drained streaming admission equals the one-shot batch
-    // composition: audit flags recomputed via DuckDB's lag window,
-    // fingerprints via ordered string_agg, min-id keeper in SQL
-    "streaming_sft_admission" ->
-      s"""$SftTurnsCtes,
-         | prevr AS (SELECT conv_id, turn_idx, role, content,
-         |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
-         |   FROM sft_turns),
-         | aud AS (SELECT conv_id, count(*) AS n_turns,
-         |   CAST(sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) AS BIGINT) AS same_role_runs,
-         |   coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |     coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |       9223372036854775807), FALSE) AS starts_ok,
-         |   arg_max(role, turn_idx) = 'assistant' AS ends_assistant,
-         |   max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 1 AS has_empty,
-         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
-         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |        9223372036854775807), FALSE)
-         |    AND arg_max(role, turn_idx) = 'assistant'
-         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
-         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
-         |   FROM prevr GROUP BY conv_id),
-         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
-         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
-         | grp AS (SELECT resp_fp, count(*) AS group_size, min(conv_id) AS keeper
-         |   FROM fp GROUP BY resp_fp)
-         |SELECT a.conv_id, a.n_turns, a.same_role_runs, a.starts_ok,
-         | a.ends_assistant, a.has_empty, a.ok, fp.resp_fp,
-         | coalesce(grp.group_size, 1) AS group_size,
-         | (fp.resp_fp IS NULL OR a.conv_id = grp.keeper) AS keep,
-         | (a.ok AND (fp.resp_fp IS NULL OR a.conv_id = grp.keeper)) AS admitted
-         |FROM aud a LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
-         |ORDER BY a.conv_id""".stripMargin,
-
-    // three unrolled GD steps as CTEs; final weights unpivoted
-    "logreg_quality_weights" ->
-      s"""$LogregCtes
-         |SELECT * FROM (
-         |  SELECT CAST(0 AS BIGINT) AS idx, 'bias' AS feature, w1 AS weight FROM s3
-         |  UNION ALL SELECT CAST(1 AS BIGINT), 'stopword_ratio', w2 FROM s3
-         |  UNION ALL SELECT CAST(2 AS BIGINT), 'punct_ratio', w3 FROM s3
-         |  UNION ALL SELECT CAST(3 AS BIGINT), 'digit_ratio', w4 FROM s3
-         |  UNION ALL SELECT CAST(4 AS BIGINT), 'avg_token_len_d10', w5 FROM s3)
-         |ORDER BY idx""".stripMargin,
-
-    // held-out confusion off the same trained s3 weights; the scoring
-    // dot is mul/add only — bit-deterministic on both engines
-    "logreg_quality_eval" ->
-      s"""$LogregCtes,
-         | te AS (SELECT * FROM fx WHERE NOT is_train),
-         | scx AS (SELECT is_pos,
-         |    (s3.w1*x1 + s3.w2*x2 + s3.w3*x3 + s3.w4*x4 + s3.w5*x5) > 0 AS pred
-         |   FROM te, s3),
-         | cc AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
-         |    CAST(sum(CASE WHEN is_pos AND pred THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         |    CAST(sum(CASE WHEN NOT is_pos AND pred THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         |    CAST(sum(CASE WHEN is_pos AND NOT pred THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         |    CAST(sum(CASE WHEN NOT is_pos AND NOT pred THEN 1 ELSE 0 END) AS BIGINT) AS tn
-         |   FROM scx)
-         |SELECT n_test, tp, fp, fn, tn,
-         | round(CAST(tp + tn AS DOUBLE) / CAST(n_test AS DOUBLE), 6) AS accuracy
-         |FROM cc""".stripMargin,
-
-    // NB llr through the same percent_rank cut as perplexity_filter
-    "classifier_filter" ->
-      s"""$NbCtes,
-         | scd AS (SELECT d2.doc_id, d2.lang, nb.llr AS score
-         |         FROM documents d2 JOIN nb USING (doc_id)),
-         | r AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
-         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin,
-
-    // undirected closure over the closed-form crawl edges — min label
-    // reachable in either direction is the component id
-    "crawl_components" ->
-      s"""WITH RECURSIVE $CrawlEdgesBody,
-         | e AS (SELECT src, dst FROM edges UNION ALL SELECT dst AS src, src AS dst FROM edges),
-         | nodes AS (SELECT DISTINCT src AS node FROM edges UNION SELECT DISTINCT dst AS node FROM edges),
-         | reach(node, label) AS (
-         |   SELECT node, node FROM nodes
-         |   UNION
-         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node
-         | )
-         |SELECT node, min(label) AS cluster_id FROM reach GROUP BY node ORDER BY node""".stripMargin,
-
-    "kcore_nodes" -> kCoreTwinSql,
-
-    // the 4 LPA rounds unrolled as CTEs (the kmeans device); mode =
-    // row_number over (cnt DESC, label ASC) — Spark's max_by struct
-    "lpa_communities" -> {
-      def round(i: Int, prev: String) =
-        s""" r$i AS (SELECT u.src AS node, l.label, count(*) AS cnt
-           |   FROM und u JOIN $prev l ON u.dst = l.node GROUP BY 1, 2),
-           | l$i AS (SELECT node, label FROM (
-           |   SELECT node, label, row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
-           |   FROM r$i) WHERE rn = 1)""".stripMargin
-      s"""WITH $CrawlEdgesBody,
-         | und AS (SELECT DISTINCT src, dst FROM
-         |   (SELECT src, dst FROM edges UNION ALL SELECT dst AS src, src AS dst FROM edges)),
-         | l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
-         |${round(1, "l0")},
-         |${round(2, "l1")},
-         |${round(3, "l2")},
-         |${round(4, "l3")}
-         |SELECT node, label AS community FROM l4 ORDER BY node""".stripMargin
-    },
-
-    // the same gate CTEs as corpus_card, per source; the Wilson bound
-    // is one fixed float expression over exact integers with literal
-    // z-constants — identical shape in both engines
-    "source_quality_wilson" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      val pd = "CAST(n_pass AS DOUBLE) / CAST(n_docs AS DOUBLE)"
-      val nd = "CAST(n_docs AS DOUBLE)"
-      s"""WITH gf AS (SELECT doc_id, source, CAST(len(tkl) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
-         |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
-         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |   FROM (SELECT doc_id, source, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
-         | per AS (SELECT source, count(*) AS n_docs,
-         |    CAST(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
-         |      AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) AS BIGINT) AS n_pass
-         |   FROM gf GROUP BY 1),
-         | w AS (SELECT source, n_docs, n_pass,
-         |    round($pd, 6) AS pass_rate,
-         |    round(($pd + 1.9208 / $nd
-         |      - 1.96 * sqrt(($pd * (1.0 - $pd) + 0.9604 / $nd) / $nd))
-         |      / (1.0 + 3.8416 / $nd), 9) AS wilson_lb
-         |   FROM per)
-         |SELECT source, n_docs, n_pass, pass_rate, wilson_lb,
-         | CAST(row_number() OVER (ORDER BY wilson_lb DESC, source) AS BIGINT) AS quality_rank
-         |FROM w ORDER BY quality_rank""".stripMargin
-    },
-
-    // the canonical u<v<w three-way join — same triangle set the
-    // oriented wedge enumeration produces, corners exploded
-    "triangle_count" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
-         | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
-         |         FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-         | x AS (SELECT n1 AS node FROM tri
-         |       UNION ALL SELECT n2 FROM tri
-         |       UNION ALL SELECT n3 FROM tri)
-         |SELECT node, count(*) AS triangles FROM x GROUP BY 1 ORDER BY node""".stripMargin,
-
-    // node-incident triangle sum = 3·|triangles|; wedges in integer
-    // div; transitivity one rounded division
-    "graph_summary" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
-         | deg AS (SELECT node, count(*) AS deg
-         |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
-         | tri AS (SELECT e1.a AS n1 FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-         | t3 AS (SELECT CAST(count(*) * 3 AS BIGINT) AS tri3 FROM tri),
-         | ds AS (SELECT count(*) AS n_nodes, CAST(max(deg) AS BIGINT) AS max_deg,
-         |        CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS wedges FROM deg),
-         | ne AS (SELECT count(*) AS n_edges FROM e)
-         |SELECT ds.n_nodes, ne.n_edges, ds.max_deg, ds.wedges,
-         | t3.tri3 // 3 AS n_triangles,
-         | round(CAST(t3.tri3 AS DOUBLE) / CAST(ds.wedges AS DOUBLE), 6) AS transitivity
-         |FROM ds CROSS JOIN ne CROSS JOIN t3""".stripMargin,
-
-    // same triangle CTEs + the degree census; 2·tri/d(d−1) one
-    // rounded division, degree-<2 nodes report 0
-    "clustering_coeff" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
-         | deg AS (SELECT node, count(*) AS deg
-         |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
-         | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
-         |         FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-         |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-         | tc AS (SELECT node, count(*) AS triangles
-         |        FROM (SELECT n1 AS node FROM tri
-         |              UNION ALL SELECT n2 FROM tri
-         |              UNION ALL SELECT n3 FROM tri) z GROUP BY 1)
-         |SELECT d.node, d.deg, coalesce(tc.triangles, 0) AS triangles,
-         | CASE WHEN d.deg >= 2
-         |      THEN round(CAST(coalesce(tc.triangles, 0) * 2 AS DOUBLE)
-         |             / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6)
-         |      ELSE 0.0 END AS coeff
-         |FROM deg d LEFT JOIN tc ON d.node = tc.node ORDER BY d.node""".stripMargin,
-
-    // Monday-truncated weeks both engines; lag to the previous
-    // OBSERVED week; one rounded division
-    "wow_change" ->
-      """WITH wk AS (SELECT event_type, CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week,
-        |            count(*) AS n FROM events GROUP BY 1, 2),
-        | l AS (SELECT event_type, week, n,
-        |       lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev_n FROM wk)
-        |SELECT event_type, week, n, prev_n,
-        | CASE WHEN prev_n IS NOT NULL
-        |      THEN round(CAST(n - prev_n AS DOUBLE) / CAST(prev_n AS DOUBLE) * 100.0, 4) END AS pct_change
-        |FROM l ORDER BY event_type, week""".stripMargin,
-
-    "basket_lift" ->
-      """WITH b AS (SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type FROM events),
-        | nt AS (SELECT count(*) AS n_baskets FROM (SELECT DISTINCT user_id, day FROM b) z),
-        | per AS (SELECT event_type, count(*) AS n_t FROM b GROUP BY 1),
-        | pr AS (SELECT x.event_type AS ta, y.event_type AS tb, count(*) AS n_ab
-        |        FROM b x JOIN b y ON x.user_id = y.user_id AND x.day = y.day
-        |          AND x.event_type < y.event_type
-        |        GROUP BY 1, 2)
-        |SELECT pr.ta, pr.tb, pr.n_ab, pa.n_t AS n_a, pb.n_t AS n_b,
-        | round(CAST(pr.n_ab * nt.n_baskets AS DOUBLE) / CAST(pa.n_t * pb.n_t AS DOUBLE), 6) AS lift
-        |FROM pr JOIN per pa ON pr.ta = pa.event_type JOIN per pb ON pr.tb = pb.event_type
-        |CROSS JOIN nt ORDER BY pr.ta, pr.tb""".stripMargin,
-
-    // distinct shingles (the near_dup CTE prefix), df = 1 share
-    "novelty_score" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | dfq AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY 1),
-        | a AS (SELECT doc_id, count(*) AS n_shingles,
-        |       CAST(sum(CASE WHEN dfq.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-        |       FROM sh0 JOIN dfq USING (shingle) GROUP BY 1)
-        |SELECT doc_id, n_shingles, n_unique,
-        | round(CAST(n_unique AS DOUBLE) / CAST(n_shingles AS DOUBLE), 6) AS novelty
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    "html_extract" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0) AS ws
-        |  FROM documents)
-        |SELECT doc_id,
-        | CAST((len(ws) + 11) // 12 + 3 AS BIGINT) AS n_blocks,
-        | CAST((len(ws) + 11) // 12 AS BIGINT) AS n_kept,
-        | array_to_string(ws, ' ') AS main_text
-        |FROM w ORDER BY doc_id""".stripMargin,
-
-    // the closed-form directive rule the fixture planted — the Spark
-    // side must parse it back out of the page to hash-match
-    "meta_robots" ->
-      """SELECT doc_id,
-        | CASE doc_id % 4 WHEN 0 THEN 'noindex' WHEN 1 THEN 'noindex, nofollow'
-        |                 WHEN 2 THEN 'index, follow' ELSE '' END AS directive,
-        | doc_id % 4 IN (0, 1) AS noindex,
-        | doc_id % 4 = 1 AS nofollow
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the HRW argmax replayed: same "docId:shard" md5-prefix hash
-    // (HexInt40), max by (h, s) as a window rank per shard count
-    "rendezvous_shards" -> {
-      def pick(n: Int, out: String) =
-        s"""(SELECT doc_id, s AS $out FROM (
-           |  SELECT doc_id, s, row_number() OVER (PARTITION BY doc_id ORDER BY ${HexInt40(s"md5(doc_id || ':' || s)")} DESC, s DESC) AS rn
-           |  FROM documents, unnest(generate_series(0, ${n - 1})) AS t(s)) WHERE rn = 1)""".stripMargin
-      s"""SELECT a.doc_id, CAST(a.shard8 AS BIGINT) AS shard8,
-         | CAST(b.shard9 AS BIGINT) AS shard9, a.shard8 <> b.shard9 AS moved
-         |FROM ${pick(8, "shard8")} a JOIN ${pick(9, "shard9")} b USING (doc_id)
-         |ORDER BY a.doc_id""".stripMargin
-    },
-
-    // html_extract plus one injected kept block whose decoded form is
-    // a compile-time constant from the SAME Scala object the fixture
-    // injects raw — the hash proves the entity decoder end to end
-    "html_entities" -> {
-      val dec = Html.EntityFixtureDecoded.replace("'", "''")
-      s"""WITH w AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS ws
-         |  FROM documents)
-         |SELECT doc_id,
-         | CAST((len(ws) + 11) // 12 + 4 AS BIGINT) AS n_blocks,
-         | CAST((len(ws) + 11) // 12 + 1 AS BIGINT) AS n_kept,
-         | CASE WHEN len(ws) > 0 THEN '$dec' || ' ' || array_to_string(ws, ' ')
-         |      ELSE '$dec' END AS main_text
-         |FROM w ORDER BY doc_id""".stripMargin
-    },
-
-    // text-shingle twin of the engine's 64-bit-id overlap count —
-    // identical values absent xxhash64 collisions (prob ~n²/2⁶⁵)
-    "decontaminate" ->
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
-        | ov AS (SELECT s.doc_id, count(*) AS n_overlap FROM sh s JOIN bsh USING (shingle)
-        |         WHERE s.doc_id % 97 <> 0 GROUP BY s.doc_id)
-        |SELECT t.doc_id, coalesce(ov.n_overlap, 0) AS n_overlap,
-        | coalesce(ov.n_overlap, 0) >= 2 AS contaminated
-        |FROM toks t LEFT JOIN ov USING (doc_id) WHERE t.doc_id % 97 <> 0
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // per-language gram-hit totals generated from the SAME Scala
-    // profile constants the Spark expression uses (gram-length-aware
-    // divisor — CJK profiles are character bigrams); replace() is
-    // non-overlapping left-to-right in both engines, so the counts
-    // are identical integers. The comparison chain is generated from
-    // the same NgramLangs order and is provably the argmax with
-    // earliest-index tie win — the first language >= all later ones
-    // is a maximum (any earlier better one would have taken its
-    // branch), which equals Spark's greatest() over (score, priority)
-    // structs.
-    "lang_id_ngram" -> langIdNgramTwin,
-
-    // the script census on RAW documents (no fixture stitching),
-    // rolled up to the (label, dominant-script) grain
-    "script_lang_matrix" -> {
-      def c(cls: String) = s"CAST(length(text) - length(regexp_replace(text, '$cls', '', 'g')) AS BIGINT)"
-      s"""WITH p AS (SELECT doc_id,
-         |  ${c("[A-Za-z]")} AS n_latin,
-         |  ${c("[\\x{0400}-\\x{04FF}]")} AS n_cyrillic,
-         |  ${c("[\\x{4E00}-\\x{9FFF}]")} AS n_cjk FROM documents),
-         | v AS (SELECT doc_id,
-         |  CASE WHEN n_latin + n_cyrillic + n_cjk = 0 THEN 'none'
-         |       WHEN n_cjk >= n_latin AND n_cjk >= n_cyrillic THEN 'cjk'
-         |       WHEN n_cyrillic >= n_latin THEN 'cyrillic'
-         |       ELSE 'latin' END AS dominant FROM p)
-         |SELECT d.lang, v.dominant, count(*) AS n
-         |FROM v JOIN documents d USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    // rt = (rs−1)(N−1) // (ns−1) + 1 in pure BIGINT arithmetic; the
-    // normalized score is a real value picked by global rank
-    "score_quantile_norm" ->
-      """WITH b AS (SELECT doc_id, source AS grp, CAST(n_chars AS BIGINT) AS score FROM documents),
-        | s AS (SELECT doc_id, grp, score,
-        |       CAST(row_number() OVER (PARTITION BY grp ORDER BY score, doc_id) AS BIGINT) AS rs,
-        |       count(*) OVER (PARTITION BY grp) AS ns FROM b),
-        | g AS (SELECT CAST(row_number() OVER (ORDER BY score, doc_id) AS BIGINT) AS rt,
-        |       score AS norm_score FROM b),
-        | n AS (SELECT count(*) AS ng FROM b),
-        | t AS (SELECT s.doc_id, s.grp, s.score,
-        |       CASE WHEN s.ns = 1 THEN 1
-        |            ELSE ((s.rs - 1) * (n.ng - 1)) // (s.ns - 1) + 1 END AS rt
-        |       FROM s CROSS JOIN n)
-        |SELECT t.doc_id, t.grp AS source, t.score, g.norm_score
-        |FROM t JOIN g ON g.rt = t.rt ORDER BY t.doc_id""".stripMargin,
-
-    // confusion rolled to per-language precision/recall/F1; F1 from
-    // the rounded p and r exactly as the Spark side computes it
-    "lang_id_metrics" ->
-      s"""WITH cm AS (SELECT d.lang, p.pred_lang
-         |            FROM ($langIdNgramTwin) p JOIN documents d USING (doc_id)),
-         | ba AS (SELECT lang, count(*) AS n_actual,
-         |        CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS tp
-         |        FROM cm GROUP BY 1),
-         | bp AS (SELECT pred_lang AS lang, count(*) AS n_pred FROM cm GROUP BY 1),
-         | j AS (SELECT ba.lang, ba.n_actual, coalesce(bp.n_pred, 0) AS n_pred, ba.tp
-         |       FROM ba LEFT JOIN bp ON ba.lang = bp.lang),
-         | pr AS (SELECT lang, n_actual, n_pred, tp,
-         |        CASE WHEN n_pred > 0
-         |             THEN round(CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE), 6) END AS precision,
-         |        round(CAST(tp AS DOUBLE) / CAST(n_actual AS DOUBLE), 6) AS recall
-         |        FROM j)
-         |SELECT lang, n_actual, n_pred, tp, precision, recall,
-         | CASE WHEN precision IS NOT NULL AND precision + recall > 0
-         |      THEN round(CAST(2.0 AS DOUBLE) * precision * recall / (precision + recall), 6) END AS f1
-         |FROM pr ORDER BY lang""".stripMargin,
-
-    // the bm25 twin (LIMIT 10 re-applied) feeds the feedback set;
-    // expansion weight = feedback-tf · ln(N/df), query terms excluded
-    "rm3_expansion" ->
-      s"""WITH fb AS (SELECT doc_id FROM ($bm25TwinSql) z ORDER BY score DESC, doc_id LIMIT 10),
-         | w0 AS (SELECT doc_id, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
-         |        FROM (SELECT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
-         | w AS (SELECT doc_id, word FROM w0 WHERE length(word) > 0),
-         | tf AS (SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2),
-         | dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-         | nd AS (SELECT count(*) AS n_docs FROM documents),
-         | fbt AS (SELECT tf.word, CAST(sum(tf.tf) AS BIGINT) AS tf_fb
-         |         FROM tf JOIN fb USING (doc_id)
-         |         WHERE tf.word NOT IN (${Bm25Terms.map(t => s"'$t'").mkString(", ")})
-         |         GROUP BY 1)
-         |SELECT fbt.word, fbt.tf_fb, dfq.df,
-         | round(CAST(fbt.tf_fb AS DOUBLE) * ln(CAST(nd.n_docs AS DOUBLE) / CAST(dfq.df AS DOUBLE)), 6) AS w
-         |FROM fbt JOIN dfq USING (word) CROSS JOIN nd
-         |ORDER BY w DESC, fbt.word LIMIT 10""".stripMargin,
-
-    // the twin verbatim as a subquery, rolled up to the (label,
-    // prediction) confusion grain
-    "lang_id_confusion" ->
-      s"""SELECT d.lang, p.pred_lang, count(*) AS n
-         |FROM ($langIdNgramTwin) p JOIN documents d USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "lang_id" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_transform(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0), x -> lower(x)) AS tk
-        |  FROM documents),
-        | s AS (SELECT doc_id,
-        |  CAST(len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS BIGINT) AS s_en,
-        |  CAST(len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS BIGINT) AS s_de,
-        |  CAST(len(list_filter(tk, x -> list_contains(['el','la','los','y','en','que','un','se'], x))) AS BIGINT) AS s_es,
-        |  CAST(len(list_filter(tk, x -> list_contains(['le','les','et','une','est','dans','pour','que'], x))) AS BIGINT) AS s_fr,
-        |  CAST(len(list_filter(tk, x -> list_contains(['的','是','在','了','我','有','和','不'], x))) AS BIGINT) AS s_zh
-        | FROM t)
-        |SELECT doc_id,
-        | CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-        |      WHEN s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-        |      WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-        |      WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang,
-        | s_en, s_de, s_es, s_fr, s_zh
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // mirrors Cleaning.clean stage by stage: dirt construction, tag
-    // strip, entity decode (amp LAST — same fold order as the Scala),
-    // URL-then-email redaction, control strip, whitespace collapse.
-    // All patterns are in the RE2 ∩ java.util.regex common subset.
-    "card_scrub" -> cardScrubTwinSql,
-    // every stage's twin chained: scrub CTEs → nfc clean → priority
-    // keys/threshold → curriculum histogram/phases — one hash
-    "clean_curate_e2e" ->
-      s"""${cardScrubCtes(s"WITH fx AS (SELECT doc_id, text || $CardSuffixSql || $NfcSuffixSql AS text FROM documents)")},
-         | cl AS (SELECT doc_id, nfc_normalize(list_reduce(list_prepend(text, valids), (a, b) -> replace(a, b, '<CARD>'))) AS text FROM v),
-         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
-         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
-         |   FROM cl WHERE length(text) > 0),
-         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
-         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
-         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
-         | samp AS (SELECT doc_id, weight,
-         |   round(greatest(CAST(weight AS DOUBLE),
-         |     CASE WHEN (SELECT cnt FROM stats) = 101
-         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
-         |          ELSE 0.0 END), 6) AS w_est
-         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
-         | sc AS (SELECT doc_id, weight AS score FROM samp),
-         | h AS (SELECT score, count(*) AS cnt FROM sc GROUP BY 1),
-         | r AS (SELECT score,
-         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-         |   sum(cnt) OVER () AS n FROM h),
-         | pr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM r),
-         | j AS (SELECT sc.doc_id, sc.score,
-         |   CAST(least(3, floor(pr.pr * 4)) AS BIGINT) AS phase,
-         |   CAST((((sc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS shard,
-         |   (((sc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-         |  FROM sc JOIN pr USING (score))
-         |SELECT samp.doc_id, samp.weight, samp.w_est, j.phase, j.shard,
-         | CAST(row_number() OVER (PARTITION BY j.phase, j.shard ORDER BY j.ord, j.doc_id) AS BIGINT) AS seq
-         |FROM samp JOIN j ON j.doc_id = samp.doc_id
-         |ORDER BY samp.doc_id""".stripMargin,
-
-    // batch twin of the streaming clean chain: same dirt, same scrub,
-    // same normalization — micro-batching must be invisible
-    "streaming_clean_ingest" ->
-      s"""${cardScrubCtes(s"WITH fx AS (SELECT doc_id, text || $CardSuffixSql || $NfcSuffixSql AS text FROM documents)")}
-         |SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
-         | CAST(len(valids) AS BIGINT) AS n_cards,
-         | nfc_normalize(list_reduce(list_prepend(text, valids), (a, b) -> replace(a, b, '<CARD>'))) AS clean
-         |FROM v ORDER BY doc_id""".stripMargin,
-    "rfm_scores" ->
-      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        | a AS (SELECT max(us) AS anchor_us FROM e),
-        | per AS (SELECT user_id, max(us) AS last_us, count(*) AS freq,
-        |         CAST(sum(v) AS DOUBLE) AS mon FROM e GROUP BY 1),
-        | w AS (SELECT user_id, freq, mon, (SELECT anchor_us FROM a) - last_us AS rec_us FROM per),
-        | q AS (SELECT user_id, freq, mon, rec_us,
-        |   CAST(ntile(4) OVER (ORDER BY rec_us, user_id) AS BIGINT) AS r,
-        |   CAST(ntile(4) OVER (ORDER BY freq DESC, user_id) AS BIGINT) AS f,
-        |   CAST(ntile(4) OVER (ORDER BY mon DESC, user_id) AS BIGINT) AS m
-        |  FROM w)
-        |SELECT user_id, freq, round(mon, 2) AS mon, rec_us, r, f, m,
-        | CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) AS rfm
-        |FROM q ORDER BY user_id""".stripMargin,
-
-    // the decay constant is interpolated from the SAME Scala double
-    // (shortest round-trip repr), so both engines start from one bit
-    // pattern; exp + round(12) is the accepted rounded-log device
-    "decayed_counts" ->
-      s"""WITH e AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-         | a AS (SELECT max(epoch_us(tsu)) AS anchor_us FROM e),
-         | w AS (SELECT event_type,
-         |   CAST(round(exp(${-math.log(2.0) / 7.0} *
-         |     (CAST((SELECT anchor_us FROM a) - epoch_us(tsu) AS DOUBLE) / 86400000000.0)), 12)
-         |     AS DECIMAL(38,12)) AS w
-         |  FROM e)
-         |SELECT event_type, count(*) AS n, round(CAST(sum(w) AS DOUBLE), 6) AS decayed_n
-         |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // nearest-rank picks on exact integer µs lags; ties at a rank all
-    // carry the same value, so tie order cannot flap the pick
-    "conversion_lags" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id, event_type,
-        |           epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        | v AS (SELECT day, user_id, min(us) AS t_view FROM e WHERE event_type = 'view' GROUP BY 1, 2),
-        | p AS (SELECT e.day, e.user_id, v.t_view, min(e.us) AS t_buy
-        |       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
-        |       WHERE e.event_type = 'purchase' AND e.us >= v.t_view GROUP BY 1, 2, 3),
-        | l AS (SELECT day, t_buy - t_view AS lag_us FROM p),
-        | r AS (SELECT day, lag_us, row_number() OVER (PARTITION BY day ORDER BY lag_us) AS rn,
-        |       count(*) OVER (PARTITION BY day) AS n FROM l)
-        |SELECT day, max(n) AS n_conversions,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN lag_us END) AS p50_lag_us,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN lag_us END) AS p90_lag_us,
-        | max(lag_us) AS max_lag_us
-        |FROM r GROUP BY day ORDER BY day""".stripMargin,
-
-    // last_value IGNORE NULLS over the (us, event_id)-ordered stream
-    "attribution_last_touch" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |           epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        | t AS (SELECT user_id, event_type, day,
-        |       last_value(CASE WHEN event_type IN ('click', 'view') THEN event_type END IGNORE NULLS)
-        |         OVER (PARTITION BY user_id ORDER BY us, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt
-        |       FROM e)
-        |SELECT day, coalesce(lt, 'none') AS attributed, count(*) AS n
-        |FROM t WHERE event_type = 'purchase' GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // log2 bucket from the binary-string length — exact in both
-    // engines where float log2 at 2^k boundaries is not
-    "degree_dist" ->
-      s"""$CrawlEdgesCte,
-         | e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM edges WHERE src <> dst),
-         | d AS (SELECT node, count(*) AS deg
-         |       FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
-         | k AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket, deg FROM d)
-         |SELECT bucket, count(*) AS n_nodes, min(deg) AS min_deg, max(deg) AS max_deg
-         |FROM k GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // ordered list() per user (rn-keyed, never unnest order), trigram
-    // paths by 1-based list indexing; (n desc, path) is total
-    "event_paths" ->
-      """WITH o AS (SELECT user_id, event_type,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |        FROM events),
-        | s AS (SELECT user_id, list(event_type ORDER BY rn) AS types FROM o GROUP BY 1),
-        | p AS (SELECT types[i] || '>' || types[i+1] || '>' || types[i+2] AS path
-        |       FROM (SELECT types, unnest(generate_series(1, len(types) - 2)) AS i
-        |             FROM s WHERE len(types) >= 3) z)
-        |SELECT path, count(*) AS n FROM p GROUP BY 1 ORDER BY n DESC, path LIMIT 50""".stripMargin,
-
-    "event_transitions" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | o AS (SELECT user_id, event_type,
-        |        lag(event_type) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev_type FROM e),
-        | c AS (SELECT prev_type, event_type, count(*) AS n FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev_type, event_type, n,
-        | round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
-        |FROM c ORDER BY prev_type, event_type""".stripMargin,
-
-    "value_outliers" ->
-      """WITH e AS (SELECT event_type AS grp, event_id AS id, CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        | r1 AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY v, id) AS rn,
-        |        count(*) OVER (PARTITION BY grp) AS n FROM e),
-        | med AS (SELECT grp, v AS med FROM r1 WHERE rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT)),
-        | dv AS (SELECT e.grp, e.id, e.v, med.med, abs(e.v - med.med) AS dev FROM e JOIN med USING (grp)),
-        | r2 AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY dev, id) AS rn,
-        |        count(*) OVER (PARTITION BY grp) AS n FROM dv),
-        | mad AS (SELECT grp, dev AS mad FROM r2 WHERE rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT))
-        |SELECT dv.grp AS event_type, count(*) AS n,
-        | CAST(max(dv.med) AS DOUBLE) AS med, CAST(max(mad.mad) AS DOUBLE) AS mad,
-        | CAST(sum(CASE WHEN dv.dev > mad.mad * 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        | CAST(max(dv.dev) AS DOUBLE) AS max_dev
-        |FROM dv JOIN mad USING (grp)
-        |GROUP BY dv.grp ORDER BY dv.grp""".stripMargin,
-
-    // all four moment sums exact BIGINTs; slope/intercept are the
-    // same fixed-order double ops as the Spark side
-    "trend_slopes" -> trendSlopesTwin,
-
-    // streaming daily relation converges to the batch one exactly
-    "streaming_trend" -> trendSlopesTwin,
-
-
-    // n·Sᵢ − i·Σy in pure BIGINT arithmetic — segment-tree window
-    // aggregation can't move an integer sum; top-1 by |peak|, day asc
-    "change_points" ->
-      """WITH daily AS (SELECT event_type AS key, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, count(*) AS n
-        |               FROM events GROUP BY 1, 2),
-        | r AS (SELECT key, day, n,
-        |        CAST(row_number() OVER (PARTITION BY key ORDER BY day) AS BIGINT) AS i,
-        |        CAST(sum(n) OVER (PARTITION BY key ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run,
-        |        count(*) OVER (PARTITION BY key) AS n_days,
-        |        CAST(sum(n) OVER (PARTITION BY key) AS BIGINT) AS total
-        |        FROM daily),
-        | c AS (SELECT key, day, n_days, n_days * run - i * total AS cusum_n
-        |        FROM r WHERE n_days >= 5),
-        | k AS (SELECT key, day, n_days, cusum_n,
-        |        row_number() OVER (PARTITION BY key ORDER BY abs(cusum_n) DESC, day) AS rk FROM c)
-        |SELECT key, day AS change_day, n_days,
-        | round(CAST(cusum_n AS DOUBLE) / CAST(n_days AS DOUBLE), 6) AS peak_cusum
-        |FROM k WHERE rk = 1 ORDER BY key""".stripMargin,
-
-    // same daily CTE in micro-integer units (floor of int*1e6/cnt is
-    // provably exact — see the operator doc); dow via
-    // (day − epoch-Monday) % 7, not DAYOFWEEK (anchors differ)
-    "stl_decompose" -> stlTwinSql,
-    // the streamed daily relation converges to the batch one — the
-    // micro-integer STL twin serves unchanged
-    "streaming_stl" -> stlTwinSql,
-
-    // row-based lookback frame of exact integer sums; mean/var/z in a
-    // fixed-association float finish; the anomaly cut compares the
-    // ROUNDED z on both engines
-    "rolling_anomaly" -> rollingAnomalyTwin,
-
-    // the streaming path converges to the identical daily relation
-    // (watermarked 1-day windows), so one twin serves both
-    "streaming_rolling_anomaly" -> rollingAnomalyTwin,
-
-    // same streamed-daily convergence: the CUSUM monitor's stream
-    // maintains only the (key, day, n) counters the batch twin builds
-    // in its first CTE
-    "streaming_change_points" ->
-      """WITH daily AS (SELECT event_type AS key, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, count(*) AS n
-        |               FROM events GROUP BY 1, 2),
-        | r AS (SELECT key, day, n,
-        |        CAST(row_number() OVER (PARTITION BY key ORDER BY day) AS BIGINT) AS i,
-        |        CAST(sum(n) OVER (PARTITION BY key ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run,
-        |        count(*) OVER (PARTITION BY key) AS n_days,
-        |        CAST(sum(n) OVER (PARTITION BY key) AS BIGINT) AS total
-        |        FROM daily),
-        | c AS (SELECT key, day, n_days, n_days * run - i * total AS cusum_n
-        |        FROM r WHERE n_days >= 5),
-        | k AS (SELECT key, day, n_days, cusum_n,
-        |        row_number() OVER (PARTITION BY key ORDER BY abs(cusum_n) DESC, day) AS rk FROM c)
-        |SELECT key, day AS change_day, n_days,
-        | round(CAST(cusum_n AS DOUBLE) / CAST(n_days AS DOUBLE), 6) AS peak_cusum
-        |FROM k WHERE rk = 1 ORDER BY key""".stripMargin,
-
-    // DAY-BOUNDED transitions (the streaming monitor's deliberate
-    // grain): lag partitioned by (user, day) — day-crossing pairs
-    // excluded, exactly as the per-day sequence lists exclude them
-    "streaming_event_transitions" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | o AS (SELECT user_id, event_type,
-        |        lag(event_type) OVER (PARTITION BY user_id, CAST(tsu AS DATE) ORDER BY tsu, event_id) AS prev_type FROM e),
-        | c AS (SELECT prev_type, event_type, count(*) AS n FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev_type, event_type, n,
-        | round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
-        |FROM c ORDER BY prev_type, event_type""".stripMargin,
-
-
-    // rank by (cnt desc, word), cumulative occurrence mass, per-cutoff
-    // max — the whole curve in exact integers; the ppm scale-up runs
-    // in HUGEINT (Spark: DECIMAL(38,0)) so a 100 TB token total
-    // cannot wrap the 64-bit multiply on either engine
-    "vocab_coverage_curve" ->
-      s"""$WDoc,
-         | c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-         | tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
-         | r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS rk FROM c),
-         | cum AS (SELECT rk, CAST(sum(cnt) OVER (ORDER BY rk) AS BIGINT) AS cum FROM r),
-         | cuts(vocab_size) AS (VALUES (4),(8),(16),(32),(64))
-         |SELECT CAST(vocab_size AS BIGINT) AS vocab_size, max(cum) AS covered,
-         | (SELECT total FROM tot) AS total,
-         | CAST((CAST(max(cum) AS HUGEINT) * 1000000) // (SELECT total FROM tot) AS BIGINT) AS covered_ppm
-         |FROM cum JOIN cuts ON rk <= vocab_size
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // identical rounded-log terms DECIMAL-summed; slope/intercept the
-    // same fixed-association double ops (the trend_slopes device);
-    // the twin's row_number window is the single-task sort globalRank
-    // replaces
-    "zipf_fit" ->
-      s"""$WDoc,
-         | wc AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-         | rk AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS r FROM wc),
-         | t AS (SELECT
-         |   CAST(round(ln(CAST(r AS DOUBLE)), 12) AS DECIMAL(28,12)) AS x,
-         |   CAST(round(ln(CAST(cnt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS y,
-         |   CAST(round(ln(CAST(r AS DOUBLE)) * ln(CAST(cnt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS xy,
-         |   CAST(round(ln(CAST(r AS DOUBLE)) * ln(CAST(r AS DOUBLE)), 12) AS DECIMAL(28,12)) AS xx
-         |   FROM rk),
-         | m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy, sum(xy) AS sxy, sum(xx) AS sxx FROM t),
-         | f AS (SELECT n, sx, sy,
-         |   (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         |     / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
-         |   FROM m)
-         |SELECT CAST(n AS BIGINT) AS n_words, round(slope, 6) AS slope,
-         | round((CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept
-         |FROM f""".stripMargin,
-
-    // the twin's plain ntile window IS the single-task sort the Spark
-    // side's range-partitioned globalNtile avoids — same answer by
-    // the SQL-standard bucket arithmetic (TotalOrderSpec proves the
-    // equivalence for even and ragged bucket counts)
-    // ntile window twin of the range-partitioned globalNtile (the
-    // equidepth device); pad arithmetic is exact BIGINT, ppm floored
-    "length_bucket_plan" ->
-      """WITH tc AS (SELECT doc_id, CAST(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_toks FROM documents),
-        | b AS (SELECT doc_id, n_toks, ntile(8) OVER (ORDER BY n_toks, doc_id) AS bucket FROM tc),
-        | g AS (SELECT max(n_toks) AS gmax FROM tc),
-        | a AS (SELECT bucket, count(*) AS n_docs, min(n_toks) AS min_len,
-        |        max(n_toks) AS max_len, CAST(sum(n_toks) AS BIGINT) AS sum_tokens
-        |       FROM b GROUP BY 1)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, n_docs, min_len, max_len, sum_tokens,
-        | n_docs * max_len - sum_tokens AS pad_tokens,
-        | CAST(floor((n_docs * max_len - sum_tokens) * 1000000 / (n_docs * max_len)) AS BIGINT) AS pad_ppm,
-        | n_docs * g.gmax - sum_tokens AS naive_pad_tokens
-        |FROM a CROSS JOIN g ORDER BY bucket""".stripMargin,
-
-    "equidepth_bins" ->
-      """WITH li AS (SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-        |            l_orderkey AS ok, l_linenumber AS ln FROM lineitem),
-        | b AS (SELECT v, ntile(10) OVER (ORDER BY v, ok, ln) AS bin FROM li)
-        |SELECT CAST(bin AS BIGINT) AS bin, count(*) AS n,
-        | CAST(min(v) AS DOUBLE) AS lo, CAST(max(v) AS DOUBLE) AS hi,
-        | CAST(sum(v) AS DOUBLE) AS mass
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // exact-decimal cumulative-weight pick; DECIMAL compares, one
-    // presentation cast at the end
-    "weighted_median" ->
-      """WITH g AS (SELECT l_returnflag AS grp, CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-        |           sum(CAST(l_quantity AS DECIMAL(18,2))) AS w FROM lineitem GROUP BY 1, 2),
-        | r AS (SELECT grp, v, w,
-        |       sum(w) OVER (PARTITION BY grp ORDER BY v ROWS UNBOUNDED PRECEDING) AS cw,
-        |       sum(w) OVER (PARTITION BY grp) AS tw FROM g)
-        |SELECT grp AS l_returnflag, CAST(min(v) AS DOUBLE) AS weighted_median,
-        |       CAST(max(tw) AS DOUBLE) AS total_weight
-        |FROM r WHERE cw * 2 >= tw GROUP BY grp ORDER BY grp""".stripMargin,
-
-    "fk_integrity" -> Seq(
-      ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-      ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-      ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-      ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"))
-      .map { case (name, child, fk, parent, pk) =>
-        s"""(SELECT '$name' AS fk_edge, count(*) AS n_rows,
-           |  CAST(sum(CASE WHEN p.k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-           | FROM (SELECT $fk AS k FROM $child) c
-           | LEFT JOIN (SELECT DISTINCT $pk AS k FROM $parent) p ON c.k = p.k)""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY fk_edge"),
-
-    // digit via string extraction from floor(|x|); expectation is the
-    // same ln/ln-10 two-op double on both engines, floored to ppm
-    "benford_screen" ->
-      """WITH d AS (SELECT CAST(substring(CAST(CAST(floor(abs(l_extendedprice)) AS DECIMAL(38,0)) AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        |           FROM lineitem WHERE abs(l_extendedprice) >= 1),
-        | c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-        | t AS (SELECT digit, n, sum(n) OVER () AS total FROM c),
-        | f AS (SELECT digit, n,
-        |        CAST((CAST(n AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS share_ppm,
-        |        CAST(floor(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0) * 1000000.0) AS BIGINT) AS benford_ppm
-        |        FROM t)
-        |SELECT digit, n, share_ppm, benford_ppm, share_ppm - benford_ppm AS dev_ppm
-        |FROM f ORDER BY digit""".stripMargin,
-
-    // the strict n·k > total cut in pure BIGINT arithmetic; ppm via
-    // floor of one identical IEEE division (DuckDB CAST would round)
-    "heavy_hitters" ->
-      s"""$WDoc,
-         | c AS (SELECT word AS key, count(*) AS n FROM w GROUP BY 1),
-         | t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
-         |SELECT key, n, CAST((CAST(n AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS share_ppm
-         |FROM c CROSS JOIN t WHERE n * 2000 > total ORDER BY key""".stripMargin,
-
-    // per-key-column block UNION ALL'd; entropy terms are
-    // round(p·-ln p, 9) DECIMAL-summed (the LM-ladder device), bits =
-    // nats / ln 2 in one final double op
-    "skew_report" -> Seq("l_orderkey", "l_suppkey", "l_returnflag", "l_linestatus")
-      .map { kc =>
-        s"""(WITH c AS (SELECT CAST($kc AS VARCHAR) AS key, count(*) AS n FROM lineitem GROUP BY 1),
-           |  r AS (SELECT key, n, row_number() OVER (ORDER BY n DESC, key) AS rk,
-           |        sum(n) OVER () AS tot FROM c),
-           |  t AS (SELECT key, n, rk, tot, CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS p FROM r),
-           |  h AS (SELECT key, n, rk, tot, CAST(round(p * -ln(p), 9) AS DECIMAL(38,9)) AS h_term FROM t),
-           |  a AS (SELECT count(*) AS n_keys, CAST(max(tot) AS BIGINT) AS total,
-           |        max(CASE WHEN rk = 1 THEN n END) AS top1,
-           |        CAST(sum(CASE WHEN rk <= 10 THEN n ELSE 0 END) AS BIGINT) AS top10,
-           |        sum(h_term) AS h_nats FROM h)
-           | SELECT '$kc' AS key_col, n_keys, total,
-           |  CAST((CAST(top1 AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS top1_ppm,
-           |  CAST((CAST(top10 AS HUGEINT) * 1000000) // CAST(total AS HUGEINT) AS BIGINT) AS top10_ppm,
-           |  round(CAST(h_nats AS DOUBLE) / ln(2.0), 6) AS entropy_bits,
-           |  round(CASE WHEN n_keys > 1
-           |        THEN CAST(h_nats AS DOUBLE) / ln(CAST(n_keys AS DOUBLE))
-           |        ELSE 0.0 END, 6) AS entropy_norm
-           | FROM a)""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY key_col"),
-
-    // nearest-rank band edges (q forced DOUBLE), decimal clamp,
-    // exact-decimal sums with one presentation division each
-    "winsorized_stats" ->
-      """WITH e AS (SELECT event_type AS grp, event_id AS id, CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        | r AS (SELECT grp, id, v, row_number() OVER (PARTITION BY grp ORDER BY v, id) AS rn,
-        |       count(*) OVER (PARTITION BY grp) AS n FROM e),
-        | ed AS (SELECT grp,
-        |        max(CASE WHEN rn = greatest(CAST(ceil(n * CAST(0.05 AS DOUBLE)) AS BIGINT), 1) THEN v END) AS p_lo,
-        |        max(CASE WHEN rn = CAST(ceil(n * CAST(0.95 AS DOUBLE)) AS BIGINT) THEN v END) AS p_hi
-        |        FROM r GROUP BY grp),
-        | c AS (SELECT e.grp, e.v, ed.p_lo, ed.p_hi,
-        |       CASE WHEN e.v < ed.p_lo THEN ed.p_lo
-        |            WHEN e.v > ed.p_hi THEN ed.p_hi ELSE e.v END AS cv
-        |       FROM e JOIN ed USING (grp))
-        |SELECT grp AS event_type, count(*) AS n,
-        | CAST(max(p_lo) AS DOUBLE) AS p05, CAST(max(p_hi) AS DOUBLE) AS p95,
-        | round(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_raw,
-        | round(CAST(sum(cv) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_winsorized
-        |FROM c GROUP BY grp ORDER BY grp""".stripMargin,
-
-    // per-line amount = one fixed-association double product rounded
-    // 4 dp, DECIMAL-summed; verdicts compare exact decimals
-    "order_reconcile" ->
-      """WITH line AS (SELECT l_orderkey AS ok,
-        |  CAST(round(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax), 4) AS DECIMAL(28,4)) AS amt
-        |  FROM lineitem),
-        | comp AS (SELECT ok, sum(amt) AS computed FROM line GROUP BY 1),
-        | j AS (SELECT CAST(o.o_totalprice AS DECIMAL(18,2)) AS tot,
-        |       c.computed IS NULL AS no_lines,
-        |       abs(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DECIMAL(28,4))
-        |         - coalesce(c.computed, CAST(0 AS DECIMAL(28,4)))) AS dev
-        |       FROM orders o LEFT JOIN comp c ON o.o_orderkey = c.ok)
-        |SELECT count(*) AS n_orders,
-        | CAST(sum(CASE WHEN no_lines THEN 1 ELSE 0 END) AS BIGINT) AS n_no_lines,
-        | CAST(sum(CASE WHEN dev = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-        | CAST(sum(CASE WHEN dev * 1000 <= CAST(tot AS DECIMAL(28,4)) * 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_within_tol,
-        | CAST(max(dev) AS DOUBLE) AS max_dev
-        |FROM j""".stripMargin,
-
-    // nearest-rank pick: ceil(q·n) with q forced to DOUBLE (DuckDB's
-    // bare 0.9 is DECIMAL — exact 9.0 where IEEE gives 9.000…002, a
-    // different ceil)
-    "event_gaps" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu FROM events),
-        | o AS (SELECT user_id, event_id, tsu,
-        |        lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        | g AS (SELECT user_id, epoch_us(tsu) - epoch_us(prev) AS gap_us FROM o WHERE prev IS NOT NULL),
-        | r AS (SELECT user_id, gap_us,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
-        |        count(*) OVER (PARTITION BY user_id) AS n FROM g)
-        |SELECT user_id, count(*) AS n_gaps,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.5 AS DOUBLE)) AS BIGINT) THEN gap_us END) AS p50_gap,
-        | max(CASE WHEN rn = CAST(ceil(n * CAST(0.9 AS DOUBLE)) AS BIGINT) THEN gap_us END) AS p90_gap,
-        | max(gap_us) AS max_gap
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "crawl_schedule" ->
-      s"""$CrawlEdgesCte,
-         | fr AS (SELECT e.dst, count(DISTINCT e.src) AS n_inlinks
-         |        FROM edges e LEFT JOIN documents d ON d.doc_id = e.dst
-         |        WHERE d.doc_id IS NULL GROUP BY e.dst),
-         | w1 AS (SELECT dst, n_inlinks, dst % ${Html.SiteSpace} AS host FROM fr),
-         | w2 AS (SELECT dst, n_inlinks, host,
-         |        CAST(row_number() OVER (PARTITION BY host ORDER BY n_inlinks DESC, dst) AS BIGINT) AS wave FROM w1)
-         |SELECT dst, n_inlinks, host, wave,
-         | CAST(row_number() OVER (PARTITION BY wave ORDER BY n_inlinks DESC, dst) AS BIGINT) AS slot
-         |FROM w2 ORDER BY dst""".stripMargin,
-
-    // the damage is doc_id arithmetic, so the audit is closed-form
-    "json_bad_records" ->
-      """SELECT count(*) AS n_rows,
-        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_good,
-        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-        | CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 0 ELSE doc_id END) AS BIGINT) AS good_id_sum
-        |FROM documents""".stripMargin,
-
-    "sentence_split" ->
-      """WITH fx AS (SELECT doc_id, text || '. Doc ' || CAST(doc_id AS VARCHAR) || ' ends! Is it done? yes' AS text FROM documents),
-        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
-        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q)
-        |SELECT doc_id, CAST(i AS BIGINT) AS sent_idx, l[i] AS sentence,
-        | CAST(len(list_filter(string_split_regex(l[i], '[ \t\n\f\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_words
-        |FROM u ORDER BY doc_id, sent_idx""".stripMargin,
-
-    // the same stitched dirt, the same regex — pattern and fixture
-    // constants rendered via chr() from the ONE Scala source of truth
-    "mojibake_screen" -> {
-      val pat = chrConcat(graft.operators.TextQuality.MojibakePattern)
-      s"""WITH d AS (SELECT doc_id,
-         |  text || (CASE WHEN doc_id % 5 = 0 THEN ' caf' || ${chrConcat(graft.operators.TextQuality.MojiAccent)} ELSE '' END)
-         |       || (CASE WHEN doc_id % 7 = 0 THEN ' ' || ${chrConcat(graft.operators.TextQuality.MojiQuote)} || 'quoted' ELSE '' END) AS tx
-         |  FROM documents)
-         |SELECT doc_id,
-         | CAST(len(regexp_extract_all(tx, $pat)) AS BIGINT) AS n_moji,
-         | len(regexp_extract_all(tx, $pat)) > 0 AS is_moji
-         |FROM d ORDER BY doc_id""".stripMargin
-    },
-
-    "script_profile" -> {
-      def c(cls: String) = s"CAST(length(text) - length(regexp_replace(text, '$cls', '', 'g')) AS BIGINT)"
-      s"""WITH fx AS (SELECT doc_id, text || CASE doc_id % 4
-         |  WHEN 0 THEN ' ' || ${chrConcat(CjkSample)}
-         |  WHEN 1 THEN ' ' || ${chrConcat(CyrSample)} || ' 99'
-         |  WHEN 2 THEN ' ' || ${chrConcat(CjkSample)} || ' ' || ${chrConcat(CyrSample)}
-         |  ELSE '' END AS text FROM documents),
-         | p AS (SELECT doc_id,
-         |  ${c("[A-Za-z]")} AS n_latin,
-         |  ${c("[\\x{0400}-\\x{04FF}]")} AS n_cyrillic,
-         |  ${c("[\\x{4E00}-\\x{9FFF}]")} AS n_cjk,
-         |  ${c("[0-9]")} AS n_digit,
-         |  ${c("[ \\t\\n\\f\\r]")} AS n_space,
-         |  CAST(length(text) AS BIGINT) AS n FROM fx)
-         |SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_digit, n_space,
-         | n - n_latin - n_cyrillic - n_cjk - n_digit - n_space AS n_other,
-         | CASE WHEN n_latin + n_cyrillic + n_cjk = 0 THEN 'none'
-         |      WHEN n_cjk >= n_latin AND n_cjk >= n_cyrillic THEN 'cjk'
-         |      WHEN n_cyrillic >= n_latin THEN 'cyrillic'
-         |      ELSE 'latin' END AS dominant
-         |FROM p ORDER BY doc_id""".stripMargin
-    },
-    "unicode_nfc" ->
-      s"""WITH fx AS (SELECT doc_id, text || $NfcSuffixSql AS text FROM documents)
-        |SELECT doc_id, nfc_normalize(text) AS clean,
-        | nfc_normalize(text) <> text AS changed,
-        | CAST(length(text) AS BIGINT) AS n_before,
-        | CAST(length(nfc_normalize(text)) AS BIGINT) AS n_after
-        |FROM fx ORDER BY doc_id""".stripMargin,
-    // the spoof map, the fold table and the fixture rule all render
-    // from the SAME Scala constants (chr() for every non-ASCII char)
-    "homoglyph_dedup" -> {
-      val foldFrom = Cleaning.ConfusablesFrom.map(c => s"chr(${c.toInt})").mkString(" || ")
-      val foldTo = s"'${Cleaning.ConfusablesTo}'"
-      val spoofTo = "аеорсух".map(c => s"chr(${c.toInt})").mkString(" || ")
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         | sp AS (SELECT doc_id + 100000 AS doc_id, translate(text, 'aeopcyx', $spoofTo) AS text
-         |        FROM documents WHERE doc_id % 7 = 3),
-         | allv AS (SELECT * FROM base UNION ALL SELECT * FROM sp),
-         | n AS (SELECT doc_id,
-         |    sha256(translate(text, $foldFrom, $foldTo)) AS nh,
-         |    sha256(text) <> sha256(translate(text, $foldFrom, $foldTo)) AS was_spoofed
-         |   FROM allv)
-         |SELECT min(doc_id) AS rep_id, count(*) AS n_members,
-         | CAST(sum(CASE WHEN was_spoofed THEN 1 ELSE 0 END) AS BIGINT) AS n_spoofed
-         |FROM n GROUP BY nh ORDER BY rep_id""".stripMargin
-    },
-
-    // same regex constants as the Spark pass; DuckDB standard strings
-    // keep backslashes literal, so the patterns transfer verbatim
-    "pii_scan" ->
-      s"""WITH fx AS (SELECT doc_id, text ||
-         |   CASE doc_id % 5 WHEN 0 THEN ' call 555-867-5309 now'
-         |                   WHEN 1 THEN ' from 192.168.1.77 seen'
-         |                   WHEN 2 THEN ' dial +1 (415) 555-0199 via 10.0.0.255 today'
-         |                   ELSE '' END AS text FROM documents),
-         | np AS (SELECT doc_id, text,
-         |    regexp_replace(text, '${Cleaning.PhoneRe}', '<PHONE>', 'g') AS nop FROM fx)
-         |SELECT doc_id,
-         | CAST(len(regexp_extract_all(text, '${Cleaning.PhoneRe}')) AS BIGINT) AS n_phones,
-         | CAST(len(regexp_extract_all(nop, '${Cleaning.Ipv4Re}')) AS BIGINT) AS n_ips,
-         | regexp_replace(nop, '${Cleaning.Ipv4Re}', '<IP>', 'g') AS clean
-         |FROM np ORDER BY doc_id""".stripMargin,
-
-    "text_clean" ->
-      """WITH dirty AS (SELECT doc_id,
-        |  '<p>Contact <b>user' || CAST(doc_id AS VARCHAR) ||
-        |  '@example.com</b> &amp; see https://ex.org/p?id=' ||
-        |  CAST(doc_id AS VARCHAR) || '&u=1</p>' || chr(9) || chr(9) || '  ' || text AS text
-        |  FROM documents),
-        | um AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    text, '<[^<>]*>', ' ', 'g'),
-        |    '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-        |    '&#39;', '''', 'g'), '&amp;', '&', 'g') AS um
-        |  FROM dirty),
-        | nu AS (SELECT doc_id, um,
-        |  regexp_replace(um, 'https?://[^\s]+', '<URL>', 'g') AS nou FROM um)
-        |SELECT doc_id,
-        | CAST(len(regexp_extract_all(um, 'https?://[^\s]+')) AS BIGINT) AS n_urls,
-        | CAST(len(regexp_extract_all(nou, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        | trim(regexp_replace(regexp_replace(regexp_replace(
-        |   regexp_replace(nou, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '[\x00-\x08\x0b-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g'), '\s+', ' ', 'g')) AS clean
-        |FROM nu ORDER BY doc_id""".stripMargin,
-
-    // the sampling hash is the reference's affine char-sum
-    // (map_reduce.cpp:214-217) over the first 64 chars — the same
-    // DuckDB formulation ref_bin_histogram uses
-    "sample_by_hash" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE $HashPermille < 200
-         |ORDER BY doc_id""".stripMargin,
-
-    "stratified_sample" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE $HashPermille < CASE WHEN lang = 'en' THEN 100 ELSE 300 END
-         |ORDER BY doc_id""".stripMargin,
-
-    // curriculum: percent rank from the score histogram, phase =
-    // clamped floor(pr*P), Knuth-hash shard + within-shard sequence
-    "curriculum_shards" ->
-      """WITH sc AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS score FROM documents),
-        | h AS (SELECT score, count(*) AS cnt FROM sc GROUP BY 1),
-        | r AS (SELECT score,
-        |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-        |   sum(cnt) OVER () AS n FROM h),
-        | pr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-        |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM r),
-        | j AS (SELECT sc.doc_id, sc.score, pr.pr,
-        |   CAST(least(3, floor(pr.pr * 4)) AS BIGINT) AS phase,
-        |   CAST((((sc.doc_id % 2147483648) * 2654435761) % 4294967296) % 8 AS BIGINT) AS shard,
-        |   (((sc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-        |  FROM sc JOIN pr USING (score))
-        |SELECT doc_id, score, pr, phase, shard,
-        | CAST(row_number() OVER (PARTITION BY phase, shard ORDER BY ord, doc_id) AS BIGINT) AS seq
-        |FROM j ORDER BY doc_id""".stripMargin,
-
-    "vocab_stats" ->
-      s"""$W, wc AS (SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word),
-         | a AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tokens, count(*) AS n_types,
-         |        CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, max(cnt) AS max_freq FROM wc)
-         |SELECT n_tokens, n_types, n_hapax, max_freq,
-         | round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS type_token_ratio,
-         | round(CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE), 6) AS hapax_frac,
-         | round(CAST(max_freq AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS top_share
-         |FROM a""".stripMargin,
-
-    // one-row card: every sub-relation rebuilt as its own aggregate
-    // CTE off the same token split; ppm shares floored the same way
-    "corpus_card" -> corpusCardTwinSql,
-
-    // each check's proven CTE chain aggregated to its ppm; NOTE the
-    // denominators follow the Spark aggs — leakage over the HELD-OUT
-    // relation, contamination over the non-benchmark relation
-    "release_gate" -> {
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
-      s"""WITH gf AS (SELECT CAST(len(tkl) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
-         |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
-         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |   FROM (SELECT list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
-         | gatev AS (SELECT CAST(floor(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
-         |    AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) * 1000000 / count(*)) AS BIGINT) AS gopher_pass_ppm FROM gf),
-         | sp AS (SELECT doc_id, text,
-         |   CASE WHEN $HashPermille < 800 THEN 'train'
-         |        WHEN $HashPermille < 900 THEN 'val' ELSE 'test' END AS split
-         |  FROM documents),
-         | ltoks AS (SELECT doc_id, split, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM sp),
-         | lpos AS (SELECT doc_id, split, l, unnest(generate_series(1, len(l) - 2)) AS i FROM ltoks WHERE len(l) >= 3),
-         | lsh AS (SELECT DISTINCT doc_id, split, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM lpos),
-         | ltsh AS (SELECT DISTINCT shingle FROM lsh WHERE split = 'train'),
-         | lov AS (SELECT s.doc_id, count(*) AS n FROM lsh s JOIN ltsh USING (shingle)
-         |         WHERE s.split <> 'train' GROUP BY 1),
-         | leakv AS (SELECT CAST(floor(count(*) FILTER (WHERE coalesce(lov.n, 0) >= 2) * 1000000 / count(*)) AS BIGINT) AS leak_ppm
-         |   FROM sp e LEFT JOIN lov USING (doc_id) WHERE e.split <> 'train'),
-         | dtoks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | dpos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM dtoks WHERE len(l) >= 3),
-         | dsh AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM dpos),
-         | dbsh AS (SELECT DISTINCT shingle FROM dsh WHERE doc_id % 97 = 0),
-         | dov AS (SELECT s.doc_id, count(*) AS n FROM dsh s JOIN dbsh USING (shingle)
-         |         WHERE s.doc_id % 97 <> 0 GROUP BY s.doc_id),
-         | contamv AS (SELECT CAST(floor(count(*) FILTER (WHERE coalesce(dov.n, 0) >= 2) * 1000000 / count(*)) AS BIGINT) AS contam_ppm
-         |   FROM dtoks t LEFT JOIN dov USING (doc_id) WHERE t.doc_id % 97 <> 0),
-         | piiv AS (SELECT CAST(floor(count(*) FILTER (WHERE len(regexp_extract_all(text, '${Cleaning.PhoneRe}')) > 0
-         |    OR len(regexp_extract_all(regexp_replace(text, '${Cleaning.PhoneRe}', '<PHONE>', 'g'), '${Cleaning.Ipv4Re}')) > 0) * 1000000 / count(*)) AS BIGINT) AS pii_ppm FROM documents),
-         | dupv AS (SELECT CAST(floor((count(*) - count(DISTINCT sha256(text))) * 1000000 / count(*)) AS BIGINT) AS dup_ppm FROM documents),
-         | vals AS (SELECT * FROM dupv CROSS JOIN gatev CROSS JOIN leakv CROSS JOIN contamv CROSS JOIN piiv),
-         | checks AS (
-         |  SELECT 'exact_dup_ppm' AS check_name, dup_ppm AS value, CAST(50000 AS BIGINT) AS threshold, false AS higher_is_better, dup_ppm <= 50000 AS pass FROM vals
-         |  UNION ALL SELECT 'gopher_pass_ppm', gopher_pass_ppm, 300000, true, gopher_pass_ppm >= 300000 FROM vals
-         |  UNION ALL SELECT 'split_leak_ppm', leak_ppm, 100000, false, leak_ppm <= 100000 FROM vals
-         |  UNION ALL SELECT 'contaminated_ppm', contam_ppm, 100000, false, contam_ppm <= 100000 FROM vals
-         |  UNION ALL SELECT 'pii_hit_ppm', pii_ppm, 0, false, pii_ppm <= 0 FROM vals)
-         |SELECT check_name, value, threshold, higher_is_better, pass FROM checks
-         |UNION ALL
-         |SELECT 'zz_failing_checks', CAST(count(*) FILTER (WHERE NOT pass) AS BIGINT), 0, false,
-         |  count(*) FILTER (WHERE NOT pass) = 0 FROM checks
-         |ORDER BY check_name""".stripMargin
-    },
-    // the drained incremental card converges to the one-shot batch
-    // card — same twin verbatim
-    "streaming_corpus_card" -> corpusCardTwinSql,
-
-    // integer epoch planner: e0-suffixed double weights only in the
-    // one floor(B·w) product, everything after is BIGINT arithmetic
-    "epoch_allocation" ->
-      """WITH sup AS (SELECT lang,
-        |    CAST(sum(len(list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0))) AS BIGINT) AS supply_tokens
-        |   FROM documents GROUP BY 1),
-        | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, w)),
-        | a AS (SELECT sup.lang, sup.supply_tokens,
-        |    CAST(floor(50000.0e0 * tt.w) AS BIGINT) AS target_tokens
-        |   FROM sup JOIN tt USING (lang)),
-        | b AS (SELECT lang, supply_tokens, target_tokens,
-        |    CAST(floor(target_tokens * 1000 / supply_tokens) AS BIGINT) AS epochs_permille FROM a)
-        |SELECT lang, supply_tokens, target_tokens, epochs_permille,
-        | epochs_permille > 4000 AS capped,
-        | CASE WHEN epochs_permille > 4000 THEN supply_tokens * 4 ELSE target_tokens END AS granted_tokens,
-        | target_tokens - (CASE WHEN epochs_permille > 4000 THEN supply_tokens * 4 ELSE target_tokens END) AS shortfall_tokens
-        |FROM b ORDER BY lang""".stripMargin,
-
-    // solver mirrored with e0-suffixed double targets; the same
-    // content-hash application as sample_by_hash
-    "mixture_solve" ->
-      s"""WITH prof AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
-         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
-         | j AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
-         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM j),
-         | rates AS (SELECT lang, n_l,
-         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
-         |  FROM j),
-         | kept AS (SELECT d.lang, count(*) AS n_kept FROM documents d JOIN rates r ON d.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille GROUP BY 1)
-         |SELECT rates.lang, n_l, keep_permille, coalesce(kept.n_kept, 0) AS n_kept
-         |FROM rates LEFT JOIN kept USING (lang) ORDER BY lang""".stripMargin,
-
-    // priority sampling: rank by the integer key floor(h*2^20/w)
-    // (ascending == priority w/u descending), threshold from the
-    // 201st key, estimate max(w, tau) — identical Knuth-hash u and
-    // exact-integer arithmetic on both engines
-    "priority_sample" -> prioritySampleTwinSql,
-    "priority_sample_exact" -> prioritySampleExactTwinSql,
-    // the drained stream's union of batch-local top-201 frontiers
-    // finishes to the identical sample — one twin serves both
-    "streaming_priority_sample" -> prioritySampleTwinSql,
-
-    // the ingest cycle as one CTE chain: store anti-join → temperature
-    // rates over survivors → chunk explode
-    "pipeline_ingest" ->
-      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM dd GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // the streaming ingest drained == ONE batch pass with the same
-    // store seed and the PROFILE-derived rates (n over the full
-    // documents table, not the survivors — the policy-snapshot
-    // distinction vs pipeline_ingest's self-derived rates)
-    // the crawl-to-corpus stream's twin: the SAME one-shot chain over
-    // whitespace-COLLAPSED documents (docsx) — what the lossless
-    // extractor provably recovers from the boilerplated pages — so the
-    // hash proves extraction, dedup, resample and chunking end-to-end
-    "streaming_html_ingest" ->
-      s"""WITH docsx AS (SELECT doc_id, lang,
-         |    array_to_string(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0), ' ') AS text
-         |  FROM documents),
-         | store AS (SELECT DISTINCT sha256(text) AS h FROM docsx WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM docsx GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM docsx d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM docsx GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "streaming_pipeline_ingest" ->
-      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // temperature α=1/2 rebalancing: rate = sqrt(n_min)/sqrt(n_l) —
-    // sqrt/div/mul are IEEE correctly-rounded, so both engines
-    // compute bit-identical thresholds (pow(x, α) would not)
-    "temperature_sample" ->
-      s"""WITH n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
-         | r AS (SELECT lang, n_l,
-         |   CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |        / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n)
-         |SELECT d.doc_id, d.lang, r.n_l, r.keep_permille
-         |FROM documents d JOIN r ON d.lang = r.lang
-         |WHERE $HashPermille < r.keep_permille
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // per-source quota cap: the GroupedTopK physical operator's
-    // answer == the window-rank formulation
-    "source_cap" ->
-      """WITH ranked AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM documents)
-        |SELECT source, doc_id, n_chars FROM ranked WHERE rn <= 20
-        |ORDER BY source, n_chars DESC, doc_id""".stripMargin,
-
-    // CDC MERGE semantics spelled out relationally: the same derived
-    // change batch, full outer join, delete filter, column coalesce
-    "merge_upsert" ->
-      """WITH base AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
-        | chg AS (
-        |   SELECT c_custkey,
-        |     CASE WHEN c_custkey % 7 = 3 THEN 'delete' ELSE 'upsert' END AS op,
-        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'REACTIVATED' END AS c_mktsegment,
-        |     CAST(NULL AS DOUBLE) AS c_acctbal
-        |   FROM customer WHERE c_custkey % 10 = 0 OR c_custkey % 7 = 3
-        |   UNION ALL
-        |   SELECT c_custkey + 100000, 'upsert', 'NEW', 0.0
-        |   FROM customer WHERE c_custkey % 100 = 0)
-        |SELECT coalesce(c.c_custkey, b.c_custkey) AS c_custkey,
-        |       coalesce(c.c_mktsegment, b.c_mktsegment) AS c_mktsegment,
-        |       coalesce(c.c_acctbal, b.c_acctbal) AS c_acctbal
-        |FROM base b FULL OUTER JOIN chg c ON b.c_custkey = c.c_custkey
-        |WHERE c.op IS NULL OR c.op = 'upsert'
-        |ORDER BY c_custkey""".stripMargin,
-
-    // the LakeTable commit (pruned partial rewrite + carried files)
-    // must equal the PLAIN full merge over the whole table — the
-    // full-recompute oracle for the transactional lifecycle
-    "table_commit" -> lakeMergeTwinSql,
-    "table_change_feed" -> lakeChangeFeedTwinSql,
-    "table_bloom_lookup" ->
-      s"""$lakeMergeCtes
-         |SELECT c_custkey, c_mktsegment, c_acctbal FROM merged
-         |WHERE c_acctbal = (SELECT c_acctbal FROM customer WHERE c_custkey = 42)
-         |ORDER BY c_custkey""".stripMargin,
-    "table_clone" -> lakeMergeTwinSql,
-    "table_recluster" -> lakeMergeTwinSql,
-    "table_checked_commit" -> lakeMergeTwinSql,
-    "table_history" ->
-      s"""$lakeMergeCtes
-         |SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_rows FROM base
-         |UNION ALL SELECT 1, count(*) FROM merged
-         |UNION ALL SELECT 2, count(*) FROM merged
-         |ORDER BY version""".stripMargin,
-    "table_view_maintenance" ->
-      s"""$lakeMergeCtes
-         |SELECT c_mktsegment, count(*) AS n,
-         |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         |FROM merged GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // delete band 350-380 via the vector, resurrect 360-365 via merge:
-    // survivors = outside the band, plus the resurrected rows
-    "table_delete_vectors" ->
-      """SELECT c_custkey,
-        |  CASE WHEN c_custkey BETWEEN 360 AND 365 THEN 'BACK' ELSE c_mktsegment END AS c_mktsegment,
-        |  CASE WHEN c_custkey BETWEEN 360 AND 365 THEN 0.0 ELSE c_acctbal END AS c_acctbal
-        |FROM customer
-        |WHERE c_custkey NOT BETWEEN 350 AND 380 OR c_custkey BETWEEN 360 AND 365
-        |ORDER BY c_custkey""".stripMargin,
-    // compaction is reader-invisible: same rows, same oracle
-    "table_compact" -> lakeMergeTwinSql,
-    // the union-payload evolution: rows the batch upserted carry the
-    // new column's value; every other surviving row reads NULL
-    "table_evolve" ->
-      """WITH base AS (SELECT c_custkey, c_mktsegment, c_acctbal FROM customer),
-        | chg AS (
-        |   SELECT c_custkey,
-        |     CASE WHEN c_custkey % 7 = 3 THEN 'delete' ELSE 'upsert' END AS op,
-        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'MOVED' END AS c_mktsegment,
-        |     CAST(NULL AS DOUBLE) AS c_acctbal,
-        |     CASE WHEN c_custkey % 7 = 3 THEN NULL ELSE 'GOLD' END AS c_tier
-        |   FROM customer WHERE c_custkey BETWEEN 10 AND 110
-        |   UNION ALL
-        |   SELECT c_custkey + 100000, 'upsert', 'NEW', 0.0, 'GOLD'
-        |   FROM customer WHERE c_custkey % 50 = 0 AND c_custkey BETWEEN 10 AND 110)
-        |SELECT coalesce(c.c_custkey, b.c_custkey) AS c_custkey,
-        |       coalesce(c.c_mktsegment, b.c_mktsegment) AS c_mktsegment,
-        |       coalesce(c.c_acctbal, b.c_acctbal) AS c_acctbal,
-        |       c.c_tier AS c_tier
-        |FROM base b FULL OUTER JOIN chg c ON b.c_custkey = c.c_custkey
-        |WHERE c.op IS NULL OR c.op = 'upsert'
-        |ORDER BY c_custkey""".stripMargin,
-
-    // snapshot v0 read AFTER v1 was committed == the untouched base
-    "table_time_travel" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-        |ORDER BY c_custkey""".stripMargin,
-
-    // the incrementally-maintained view must equal the full recompute
-    // over the post-change fact set (everything except %7==0 orders)
-    "incremental_view" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM orders WHERE o_orderkey % 7 <> 0
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    // SCD2 run-collapse + validity intervals, the naive two-window
-    // formulation
-    "scd2_dimension" -> scd2TwinSql,
-    // the SAME twin grades the incremental path: scd2Apply over the
-    // date-split history+batch must equal the full recompute over the
-    // whole log — incremental-exactness IS the hash match
-    "scd2_incremental" -> scd2TwinSql,
-    "scd2_asof_join" ->
-      s"""$scd2DimCtes,
-         | probes AS (
-         |   SELECT o_orderkey, o_custkey,
-         |     CASE WHEN o_orderkey % 97 = 0 THEN o_orderdate - INTERVAL 20000 DAY
-         |          ELSE o_orderdate + INTERVAL 10 DAY END AS probe_date
-         |   FROM orders)
-         |SELECT p.o_orderkey, p.o_custkey, p.probe_date,
-         |       d.o_orderstatus AS status_asof
-         |FROM probes p LEFT JOIN dim d ON p.o_custkey = d.o_custkey
-         |  AND p.probe_date >= d.valid_from
-         |  AND (d.valid_to IS NULL OR p.probe_date < d.valid_to)
-         |ORDER BY o_orderkey""".stripMargin,
-
-    // the incrementally-maintained enrichment view == a full LEFT JOIN
-    // over the deltas-applied tables (deltas reproduced as CASE/filter
-    // algebra on the base tables)
-    "incremental_join_view" ->
-      """WITH dim1 AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey BETWEEN 100 AND 150 THEN 'MOVED' ELSE c_mktsegment END AS c_mktsegment,
-        |    CASE WHEN c_custkey BETWEEN 100 AND 150 THEN c_acctbal * 2 ELSE c_acctbal END AS c_acctbal
-        |  FROM customer WHERE c_custkey NOT BETWEEN 151 AND 160),
-        | fact1 AS (
-        |  SELECT o_orderkey, o_custkey AS c_custkey,
-        |    CASE WHEN o_orderkey % 100 = 7 THEN o_totalprice + 10.0 ELSE o_totalprice END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 100 <> 13
-        |  UNION ALL
-        |  SELECT o_orderkey + 500000, 42, 1.0 FROM orders WHERE o_orderkey % 1000 = 21)
-        |SELECT f.o_orderkey, f.c_custkey, f.o_totalprice, d.c_mktsegment, d.c_acctbal
-        |FROM fact1 f LEFT JOIN dim1 d ON f.c_custkey = d.c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // the TeraSort-shaped distributed rank == the naive global window
-    "global_rank" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |  CAST(row_number() OVER (ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
-        |       AS BIGINT) AS global_rank
-        |FROM lineitem ORDER BY global_rank""".stripMargin,
-
-    "doc_chunks" ->
-      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks
-        |           FROM documents),
-        | u AS (SELECT doc_id, text, n_chunks,
-        |        unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-        |SELECT doc_id, chunk_idx,
-        | substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk, n_chunks
-        |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // windows every 96 chars, each 128 long — the stride denominator
-    // moves, the substring length doesn't
-    "doc_chunks_overlap" ->
-      """WITH c AS (SELECT doc_id, text, CAST(ceil(length(text) / 96.0) AS BIGINT) AS n_chunks
-        |           FROM documents),
-        | u AS (SELECT doc_id, text, n_chunks,
-        |        unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-        |SELECT doc_id, chunk_idx,
-        | substring(text, CAST(chunk_idx * 96 + 1 AS INT), 128) AS chunk, n_chunks
-        |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // the sentence_split CTEs + a per-doc prefix-char window; chunk
-    // id = floor(chars-before/256) with the joining space counted
-    "sentence_chunks" ->
-      """WITH fx AS (SELECT doc_id, text || '. Doc ' || CAST(doc_id AS VARCHAR) || ' ends! Is it done? yes' AS text FROM documents),
-        | q AS (SELECT doc_id, list_filter(list_transform(regexp_extract_all(text, '[^.!?]+[.!?]*'), x -> trim(x)), x -> length(x) > 0) AS l FROM fx),
-        | u AS (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS i FROM q),
-        | sx AS (SELECT doc_id, i AS sent_idx, l[i] AS sentence FROM u),
-        | cb AS (SELECT doc_id, sent_idx, sentence,
-        |    coalesce(sum(length(sentence) + 1) OVER (PARTITION BY doc_id ORDER BY sent_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM sx),
-        | g AS (SELECT doc_id, CAST(floor(cum_before / 256) AS BIGINT) AS chunk_idx, sent_idx, sentence FROM cb)
-        |SELECT doc_id, chunk_idx, count(*) AS n_sents,
-        | string_agg(sentence, ' ' ORDER BY sent_idx) AS chunk,
-        | CAST(length(string_agg(sentence, ' ' ORDER BY sent_idx)) AS BIGINT) AS n_chars
-        |FROM g GROUP BY doc_id, chunk_idx ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "mixture_weights" ->
-      """WITH w AS (SELECT doc_id, lang,
-        |  CASE WHEN lang = 'de' THEN 3 WHEN lang = 'zh' THEN 2 ELSE 1 END AS wt
-        |  FROM documents)
-        |SELECT doc_id, lang, unnest(generate_series(1, wt)) AS copy_id
-        |FROM w ORDER BY doc_id, copy_id""".stripMargin,
-
-    // the whole pipeline as one CTE chain: every stage reuses the
-    // already-oracle-matched formulation of its standalone operator
-    "pipeline_e2e" ->
-      s"""WITH dd AS (SELECT min(doc_id) AS doc_id, min(lang) AS lang, text
-         |            FROM documents GROUP BY text),
-         | tkk AS (SELECT doc_id, lang, text,
-         |   list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk FROM dd),
-         | sc AS (SELECT doc_id, lang, text,
-         |   CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT)
-         |     / CAST(len(tk) AS BIGINT) AS score
-         |   FROM tkk),
-         | rk AS (SELECT doc_id, lang, text, score,
-         |   percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM sc),
-         | q AS (SELECT doc_id, lang, text FROM rk WHERE pr >= 0.5),
-         | samp AS (SELECT * FROM q
-         |   WHERE $HashPermille < CASE WHEN lang = 'en' THEN 500 ELSE 1000 END),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM samp),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // stopword list generated from the SAME Scala constant the operator
-    // uses — the two sides cannot drift
-    "quality_filter" ->
-      s"""WITH t AS (SELECT doc_id, lang,
-         |  list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM documents),
-         | s AS (SELECT doc_id, lang,
-         |  CAST(len(list_filter(tk, x -> list_contains([$AllStopwordsSqlList], lower(x)))) AS BIGINT)
-         |    / CAST(len(tk) AS BIGINT) AS score
-         |  FROM t),
-         | r AS (SELECT doc_id, lang, score,
-         |  percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM s)
-         |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5
-         |ORDER BY doc_id""".stripMargin)
 
   /** The image-phash fixture's closed-form aHash bits (originals +
     * rescaled variants), ending in CTE `bits` — shared by the exact

@@ -3,7 +3,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, plus
   * failures.json naming every query that threw. */
 object Verify {
@@ -27,23 +27,24 @@ object Verify {
   def writeOracleSql(outDir: String, oracle: Map[String, String]): Unit =
     mapper.writeValue(Paths.get(outDir, "oracle_sql.json").toFile, oracle)
 
-  /** Builds and consumes every registered query that passes `only`. A
+  /** Builds and consumes every registered query named by `only` (all
+    * when `None`), in registration order. An unknown name in `only`
+    * throws before any query is built (see [[QueryRegistry.select]]). A
     * query that throws is named on stderr as `[tag] <name> failed: <msg>`
     * and recorded in `<outDir>/failures.json` as `{query, error}`; the
     * file is `[]` when none failed. */
   def eachQuery(spark: SparkSession, sfDir: String, outDir: String,
                 only: Option[Set[String]], tag: String)
                (consume: (String, DataFrame) => Unit): Unit = {
+    val selected = SparkEntry.registry.select(only)
     Files.createDirectories(Paths.get(outDir))
-    val failures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        try { consume(name, fn(spark, sfDir)); None }
-        catch { case e: Throwable =>
-          System.err.println(s"[$tag] $name failed: ${e.getMessage}")
-          Some(Map("query" -> name, "error" -> e.toString))
-        }
+    val failures = selected.flatMap { q =>
+      try { consume(q.name, q.build(spark, sfDir)); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] ${q.name} failed: ${e.getMessage}")
+        Some(Map("query" -> q.name, "error" -> e.toString))
       }
+    }
     mapper.writeValue(Paths.get(outDir, "failures.json").toFile, failures)
   }
 }

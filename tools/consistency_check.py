@@ -1,25 +1,28 @@
 #!/usr/bin/env python3
 """Docs-vs-registry consistency gate (round 11): the round-10 verdict's
-"ledger drifted at round close" failure mode, automated. Cross-checks
+"ledger drifted at round close" failure mode, automated. Reads the
+query names from the one registry in SparkEntry.scala (`Q("<name>"`
+entries have a DuckDB twin, `RowsOnly("<name>"` entries do not) and
+cross-checks
 
-  1. SparkEntry.queries keys  vs  SparkEntry.oracleSql keys
-     (every query needs an oracle or a deliberate rows-only status),
-  2. README's "<N> oracle-verified + <M> rows-only (<T> registered)"
-     line against the actual registry,
-  3. README's "other <K> registered queries" line (K == T - 2:
+  1. README's "<N> oracle-verified + <M> rows-only (<T> registered)"
+     line against the registry,
+  2. README's "other <K> registered queries" line (K == T - 2:
      wordcount and wordcount_x8 are the parity pair),
-  4. every registered query name appears somewhere in SURVEY.md
+  3. every registered query name appears somewhere in SURVEY.md
      (the §8 ledger is the auditable coverage record),
-  5. bench-history monotonicity (tools/history_check.py),
-  6. one session builder: no `SparkSession.builder` under src/ outside
+  4. bench-history monotonicity (tools/history_check.py),
+  5. one session builder: no `SparkSession.builder` under src/ outside
      GraftSession.scala, and no `SPARK_GRAFT_FANOUT` env override,
-  7. no `/*"` glob path in a src/main file that builds a DataFrameReader
+  6. no `/*"` glob path in a src/main file that builds a DataFrameReader
      (`spark.read.…`): a glob that expands past 32 paths is listed by a
      Spark job, where one directory root with `recursiveFileLookup` is
      listed on the driver.
 
-Exit 0 = consistent; nonzero prints every drift. Run before the
-end-of-round snapshot.
+A query with no twin and no rows-only reason cannot be registered, and
+a name cannot be registered twice (QueryRegistry throws), so no check
+audits the twins against the queries. Exit 0 = consistent; nonzero
+prints every drift. Run before the end-of-round snapshot.
 """
 import pathlib
 import re
@@ -27,21 +30,17 @@ import sys
 
 def main() -> int:
     src = open("src/main/scala/graft/SparkEntry.scala", encoding="utf-8").read()
-    qstart = src.index("def queries")
-    ostart = src.index("def oracleSql")
-    queries = set(re.findall(r'"([a-z0-9_]+)" -> \(\(', src[qstart:ostart]))
-    # Anchor oracle keys to actual map entries — line start at the
-    # map's 4-space indent — so a quoted name followed by '->' inside
-    # SQL text or a comment can't masquerade as an orphan oracle
-    # (ADVICE r11: the old union-intersect line was a no-op).
-    oracles = set(re.findall(r'^    "([a-z0-9_]+)" ->', src[ostart:], re.M))
+    registry = src[src.index("lazy val registry"):src.index("lazy val queries")]
+    # entries sit at the registry's 4-space indent, so a quoted name in
+    # SQL text or a comment cannot masquerade as one
+    entries = re.findall(r'^    (Q|RowsOnly)\("([a-z0-9_]+)"', registry, re.M)
+    if not entries:
+        print("DRIFT: no Q(\"…\" / RowsOnly(\"…\" entries found in SparkEntry's registry")
+        return 1
+    queries = {name for _, name in entries}
+    rows_only = sorted(name for kind, name in entries if kind == "RowsOnly")
+    n_oracle = len(queries) - len(rows_only)
     problems = []
-
-    orphan_oracles = sorted(o for o in oracles if o not in queries)
-    if orphan_oracles:
-        problems.append(f"oracleSql keys with no query: {orphan_oracles}")
-    rows_only = sorted(q for q in queries if q not in oracles)
-    n_oracle = len(queries & oracles)
 
     readme = open("README.md", encoding="utf-8").read()
     m = re.search(r"\*\*(\d+) oracle-verified \+ (\d+) rows-only queries \((\d+)\s*\nregistered\)\*\*", readme)
@@ -65,7 +64,7 @@ def main() -> int:
     if unledgered:
         problems.append(f"registered queries absent from SURVEY.md: {unledgered}")
 
-    # 5. bench-history monotonicity (VERDICT r16 #1): any upward best
+    # 4. bench-history monotonicity (VERDICT r16 #1): any upward best
     # revision vs HEAD must carry a bench_adoptions.jsonl record.
     import subprocess, os
     hc = subprocess.run(
@@ -74,7 +73,7 @@ def main() -> int:
     if hc.returncode != 0:
         problems.append("bench_history monotonicity: " + hc.stdout.strip())
 
-    # 6. one session builder, no fan-out env override: copies of the
+    # 5. one session builder, no fan-out env override: copies of the
     # builder drift apart, and an env-read A/B device outlives its A/B.
     for path in sorted(pathlib.Path("src").rglob("*.scala")):
         text = path.read_text(encoding="utf-8")
@@ -83,7 +82,7 @@ def main() -> int:
         if 'sys.env.get("SPARK_GRAFT_FANOUT"' in text:
             problems.append(f"{path}: SPARK_GRAFT_FANOUT env override")
 
-    # 7. no directory glob read: each expanded path is a root path, and
+    # 6. no directory glob read: each expanded path is a root path, and
     # past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     # the roots are listed by a Spark job.
     for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
