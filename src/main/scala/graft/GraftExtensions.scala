@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{DamerauLevenshtein, DeflateSize, JaroWinkler, NfcNormalize, UrlResolve, VecDot, VecSelfDotRule, WordNGrams}
+import graft.functions.{CleanTokens, DamerauLevenshtein, DeflateSize, JaroWinkler, NfcNormalize, UrlResolve, VecDot, VecSelfDotRule, WordNGrams}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_dot
@@ -56,6 +56,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
       (exprs: Seq[Expression]) => WordNGrams(exprs(0), exprs(1))))
+    // the reference tokenizer in one byte pass: cleaned, non-empty
+    // tokens in order (TextOps.cleanTokens)
+    ext.injectFunction((
+      FunctionIdentifier("clean_tokens"),
+      new ExpressionInfo(classOf[CleanTokens].getName, "clean_tokens"),
+      (exprs: Seq[Expression]) => CleanTokens(exprs(0))))
     // true (unrestricted) Damerau-Levenshtein — Spark ships plain
     // levenshtein only; DuckDB's SQL name, exact-integer oracle
     ext.injectFunction((

@@ -2239,8 +2239,7 @@ object SparkEntry {
           row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
         .select(col("doc_id"), col("r"))
       val graded = docs.select(col("doc_id"),
-          filter(transform(TextOps.tokens(col("text")), tk => TextOps.cleanWord(tk)),
-            w => length(w) > 0).as("ws"))
+          TextOps.cleanTokens(col("text")).as("ws"))
         .select(col("doc_id"),
           Bm25Terms.map(term => when(array_contains(col("ws"), term), lit(1L))
             .otherwise(lit(0L))).reduce(_ + _).as("grade"))
@@ -9215,8 +9214,7 @@ object SparkEntry {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val docs = graft.streaming.IngestPipeline.readDocStream(ss, src)
-      val ws = filter(transform(TextOps.tokens(col("text")),
-        tk => TextOps.cleanWord(tk)), w => length(w) > 0)
+      val ws = TextOps.cleanTokens(col("text"))
       val toks = docs.select((col("doc_id") % 2 === 1).as("is_new"),
         explode(ws).as("word"))
       val m = toks.groupBy(col("word")).agg(
@@ -9748,7 +9746,7 @@ object SparkEntry {
           .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_blooms")
       }
       val (df, _, _) = graft.sources.StatsManifest.scanBloomPruned(
-        s, s.read.parquet(s"$dir/_blooms"), "o_custkey", 42L)
+        s, graft.sources.FsUtil.readParquetDir(s, s"$dir/_blooms"), "o_custkey", 42L)
       df.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy("o_orderkey")
     })(
@@ -10454,8 +10452,7 @@ object SparkEntry {
     * can never diverge. */
   private def bm25RelevanceSet(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"),
-        filter(transform(TextOps.tokens(col("text")), tk => TextOps.cleanWord(tk)),
-          w => length(w) > 0).as("ws"))
+        TextOps.cleanTokens(col("text")).as("ws"))
       .where(Bm25Terms.map(term => array_contains(col("ws"), term)).reduce(_ && _))
       .select(col("doc_id"))
 

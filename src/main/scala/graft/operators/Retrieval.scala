@@ -105,7 +105,7 @@ object Retrieval {
     val tf = docTermFreqs(docs, textCol, idCol).where(col("word").isin(terms: _*))
     val dl = docs.select(
       col(idCol).as("doc_id"),
-      size(filter(TextOps.tokens(col(textCol)), t => length(TextOps.cleanWord(t)) > 0)).as("dl"))
+      size(TextOps.cleanTokens(col(textCol))).as("dl"))
     // corpus constants: exact integer sums, one double division — ride a broadcast
     val stats = dl.agg(
       count(lit(1)).as("n_docs"),
@@ -174,7 +174,7 @@ object Retrieval {
   private def docLengths(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs.select(
       col(idCol).as("doc_id"),
-      size(filter(TextOps.tokens(col(textCol)), t => length(TextOps.cleanWord(t)) > 0)).as("dl"))
+      size(TextOps.cleanTokens(col(textCol))).as("dl"))
 
   private def statsOf(dl: DataFrame, maxDf: Int): DataFrame =
     dl.agg(
@@ -276,9 +276,7 @@ object Retrieval {
     * index needs one. */
   def positionalPostings(docs: DataFrame, terms: Seq[String],
                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val cleaned = filter(
-      transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val cleaned = TextOps.cleanTokens(col(textCol))
     docs
       .select(col(idCol).as("doc_id"), posexplode(cleaned).as(Seq("pos0", "word")))
       .where(col("word").isin(terms.distinct: _*))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.functions._
+import graft.functions.CleanTokens
 
 /** The reference's entire query surface — word count over whitespace
   * tokens with C-`ispunct` stripping and lowercasing (reference
@@ -40,27 +41,32 @@ object TextOps {
     * `don't`→`dont`, `end.`→`end`, `co-op`→`coop`; digits kept. */
   def cleanWord(tok: Column): Column = lower(regexp_replace(tok, IspunctClass, ""))
 
+  /** The cleaned, non-empty tokens of `text`, in order: exactly
+    * `filter(transform(tokens(text), cleanWord), length > 0)`, computed
+    * by the one-pass byte kernel [[graft.functions.CleanTokens]] (see
+    * [[graft.functions.CleanTokenizer]] for why it is exact). Use it
+    * wherever that composed shape would go; `tools/consistency_check.py`
+    * flags the composed shape under src/main. */
+  def cleanTokens(text: Column): Column =
+    GraftSqlShim.column(CleanTokens(GraftSqlShim.expression(text)))
+
   /** One row per cleaned, non-empty word (empty-token filter:
-    * map_reduce.cpp:166).
-    *
-    * Each document is cleaned ONCE and then tokenized, instead of
-    * cleaning every token: one regex pass and one `lower` per document
-    * rather than per token. The multiset of non-empty words is the
-    * same as `explode(tokens(text))` → [[cleanWord]] → non-empty:
-    * [[IspunctClass]] and [[TokenSepRe]] are disjoint, so stripping
-    * punctuation never removes or adds a separator, and `lower` maps no
-    * character to a separator. A token that cleans to nothing becomes
-    * an empty split (or none), which the length filter drops either
-    * way. The order stays strip, then lower. `TextOpsSpec` checks the
-    * equivalence against the per-token formula. */
+    * map_reduce.cpp:166): `explode` of [[cleanTokens]]. Each document
+    * is tokenized and cleaned in one pass over its bytes; only a token
+    * with a non-ASCII byte runs [[cleanWord]], on that token alone,
+    * which is exact because no case mapping looks across a separator. */
   def words(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .select(explode(tokens(cleanWord(col(textCol)))).as("word"))
-      .where(length(col("word")) > 0)
+    docs.select(explode(cleanTokens(col(textCol))).as("word"))
 
   /** The flagship: global (word, count). Catalyst plans partial+final
     * HashAggregate around one Exchange — the map-side combine
-    * (map_reduce.cpp:218-231) and MPI shuffle+merge (:286-438) for free. */
+    * (map_reduce.cpp:218-231) and MPI shuffle+merge (:286-438) for free.
+    *
+    * The kernel's tokens go straight into the partial aggregate. A
+    * per-document combine in the kernel (a generator emitting one
+    * `(word, n)` row per distinct word of a document, 2.19 M token rows
+    * → 781 k rows on the 16 MB bench corpus, then `sum(n)`) measured no
+    * faster end to end and was not kept (CHANGES.md has the figures). */
   def wordCount(docs: DataFrame): DataFrame =
     words(docs).groupBy("word").agg(count(lit(1)).as("cnt"))
 

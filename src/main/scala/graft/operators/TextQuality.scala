@@ -143,8 +143,7 @@ object TextQuality {
     * 2 cleaned words have no bigrams and drop out on both sides. */
   def bigramLogProb(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                     minBigramCount: Int = 2, alpha: Double = 0.4): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     // tokenize + cleanWord ONCE (optimization r18, the collocations
     // device): unigram counts and the bigram type relation both
     // consume the cleaned arrays — unpinned, each re-ran the clean
@@ -213,8 +212,7 @@ object TextQuality {
     * to 12 dp and DECIMAL-summed. Docs with < 3 cleaned words drop. */
   def trigramLogProb(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                      minCount: Int = 2, alpha: Double = 0.4): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     // tokenize + cleanWord ONCE (optimization r18, the collocations
     // device): THREE consumers (unigram counts, bigram counts, the
     // trigram type relation) each re-ran the clean pass from the
@@ -408,8 +406,7 @@ object TextQuality {
     * 12 dp; ordering carries the word tie-break. */
   def tokenDistributionDrift(docs: DataFrame, splitCol: String = "is_new",
                              textCol: String = "text", topK: Int = 50): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     val toks = docs.select(col(splitCol).as("is_new"), explode(ws).as("word"))
     val m = toks.groupBy(col("word")).agg(
       count(when(!col("is_new"), 1)).as("c_old"),
@@ -524,8 +521,7 @@ object TextQuality {
   def nbLogLikelihoodRatio(docs: DataFrame, textCol: String = "text",
                            idCol: String = "doc_id", posCol: String = "is_pos",
                            trainCol: String = "is_train"): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"), col(posCol).as("is_pos"),
       col(trainCol).as("is_train"), ws.as("ws"))
     val toks = base.select(col("doc_id"), col("is_pos"), col("is_train"),
@@ -615,8 +611,7 @@ object TextQuality {
     * narrow per-row array computation, no shuffle, no UDF. */
   def badWordFilter(docs: DataFrame, words: Seq[String],
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     val nBad = size(filter(ws, w => array_contains(array(words.map(lit): _*), w)))
     docs.select(col(idCol).as("doc_id"), nBad.cast(LongType).as("n_bad"),
       (nBad === 0).as("kept"))
@@ -1021,8 +1016,7 @@ object TextQuality {
     * (pmi desc, w1, w2) order is total. */
   def collocations(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                    minCount: Int = 5, k: Int = 100): DataFrame = {
-    val ws = filter(transform(TextOps.tokens(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val ws = TextOps.cleanTokens(col(textCol))
     // tokenize + cleanWord ONCE (optimization r18): the unigram and
     // bigram aggregates both consume the cleaned arrays, and unpinned
     // each re-ran the regex-heavy clean pass from the single-task

@@ -73,7 +73,7 @@ object LakeTable {
     * [[commitDelete]]). None == empty. */
   private def deleteSet(spark: SparkSession, tableDir: String, v: Long): Option[DataFrame] =
     if (new java.io.File(deletesDir(tableDir, v)).exists())
-      Some(spark.read.parquet(deletesDir(tableDir, v)))
+      Some(FsUtil.readParquetDir(spark, deletesDir(tableDir, v)))
     else None
 
   /** Subtract a delete vector from visible rows — THE merge-on-read
@@ -83,10 +83,6 @@ object LakeTable {
     * vector is delta-sized by construction. */
   private def minusVector(df: DataFrame, vec: Option[DataFrame]): DataFrame =
     vec.fold(df)(d => df.join(broadcast(d), d.columns.toSeq, "left_anti"))
-
-  private def listFiles(dir: String): Seq[String] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
 
   /** Snapshot versions present, ascending (zero-padded dir names make
     * lexicographic = numeric, same device as the CDC latest-image). */
@@ -110,14 +106,14 @@ object LakeTable {
     val cluster = clusterExpr.getOrElse(col(keyCol))
     df.repartitionByRange(nFiles, cluster).sortWithinPartitions(cluster)
       .write.mode("overwrite").parquet(commitDir(tableDir, 0L))
-    val files = listFiles(commitDir(tableDir, 0L))
+    val files = FsUtil.parquetFiles(commitDir(tableDir, 0L))
     StatsManifest.statsOf(spark, files, keyCol +: statsCols.filterNot(_ == keyCol))
       .coalesce(1).write.mode("overwrite").parquet(manifestDir(tableDir, 0L))
     Commit(0L, files.size.toLong, 0L)
   }
 
   def manifest(spark: SparkSession, tableDir: String, v: Long): DataFrame =
-    spark.read.parquet(manifestDir(tableDir, v))
+    FsUtil.readParquetDir(spark, manifestDir(tableDir, v))
 
   /** The columns a manifest carries stats for (its min_X/max_X pairs). */
   private def statsColsOf(m: DataFrame): Seq[String] =
@@ -242,7 +238,7 @@ object LakeTable {
         merged.repartitionByRange(nFiles, clusterCol).sortWithinPartitions(clusterCol)
           .write.mode("overwrite").option("maxRecordsPerFile", targetRowsPerFile)
           .parquet(dataDir)
-        listFiles(dataDir)
+        FsUtil.parquetFiles(dataDir)
       }
     val newStats =
       if (newFiles.isEmpty) None
@@ -545,7 +541,7 @@ object LakeTable {
       .repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol)
       .write.mode("overwrite").option("maxRecordsPerFile", targetRowsPerFile)
       .parquet(dataDir)
-    val newFiles = listFiles(dataDir)
+    val newFiles = FsUtil.parquetFiles(dataDir)
     publishAtomic(
       m.where(!col("file").isin(small.toIndexedSeq: _*))
         .unionByName(StatsManifest.statsOf(spark, newFiles, statsColsOf(m))),

@@ -72,9 +72,7 @@ object StatsManifest {
   }
 
   /** The data files currently in the layout, absolute paths. */
-  def listDataFiles(dir: String): Seq[String] =
-    Option(new java.io.File(dataDir(dir)).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
+  def listDataFiles(dir: String): Seq[String] = FsUtil.parquetFiles(dataDir(dir))
 
   /** Write `df` into `nFiles` parquet files clustered on `clusterExpr`
     * (range partition + in-file sort), then write a per-file manifest
@@ -121,7 +119,7 @@ object StatsManifest {
   }
 
   def readManifest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(manifestDir(dir))
+    FsUtil.readParquetDir(spark, manifestDir(dir))
 
   /** Per-file BLOOM FILTERS over `colName` — point-lookup skipping for
     * a column the layout is NOT clustered on, where min/max intervals

@@ -113,6 +113,78 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
+  // Byte-level pieces for the kernel: the string pieces above plus NBSP
+  // and U+2019 (neither ASCII, so neither splits nor strips), a final
+  // sigma before punctuation, and invalid UTF-8 (a lone continuation, a
+  // truncated 2-, 3- and 4-byte lead, an overlong form, 0xFF) that the
+  // random documents put next to punctuation and separators.
+  private val bytePieces: Vector[Array[Byte]] =
+    (pieces ++ Vector("\u00A0", "\u2019", "don\u2019t", "ΟΔΟΣ.", "ΟΔΟΣ,ΟΔΟΣ", "ΣΑΣ'", "a\u0308"))
+      .map(_.getBytes("UTF-8")) ++
+      Vector(Array(0x80), Array(0xC3), Array(0xE2, 0x82), Array(0xF0, 0x9F, 0x98), Array(0xC0, 0xAF),
+        Array(0xFF), Array(0xE2, 0x82, '.'), Array('.', 0xC3), Array(0xC3, ' ', 'A'), Array('!', 0x80, '\t'))
+        .map(_.map(_.toByte))
+
+  private def randomBytes(rnd: scala.util.Random): Array[Byte] =
+    Array.fill(rnd.nextInt(30))(bytePieces(rnd.nextInt(bytePieces.size))).flatten
+
+  /** Documents as raw bytes cast to string, so invalid UTF-8 reaches the
+    * kernel as it would from a file: null, empty, whitespace-only and
+    * punctuation-only documents first, then seeded random ones. */
+  private def byteDocs(seed: Int) = {
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(seed)
+    val fixed: Seq[Array[Byte]] = Seq(null, Array.emptyByteArray, " \t\n\f\r".getBytes("UTF-8"),
+      "!-/:-@[-`{-~ ... --".getBytes("UTF-8"), "ΟΔΟΣ. ΛΟΓΟΣ\u000BΣ ΟΔΟΣ".getBytes("UTF-8"))
+    (fixed ++ Seq.fill(300)(randomBytes(rnd))).zipWithIndex
+      .map { case (b, i) => (i.toLong, b) }.toDF("doc_id", "raw")
+      .select(col("doc_id"), col("raw").cast("string").as("text"))
+  }
+
+  /** The composed formula the kernel replaces. */
+  private def composedClean(text: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions.{filter, length, transform}
+    filter(transform(TextOps.tokens(text), t => TextOps.cleanWord(t)), w => length(w) > 0)
+  }
+
+  test("property: cleanTokens == filter(transform(tokens, cleanWord), non-empty), element by element") {
+    import org.apache.spark.sql.functions.col
+    for (seed <- Seq(1, 2, 3)) {
+      val rows = byteDocs(seed)
+        .select(col("doc_id"), TextOps.cleanTokens(col("text")).as("got"), composedClean(col("text")).as("want"))
+        .collect()
+      rows.foreach { r =>
+        val (got, want) = (Option(r.getSeq[String](1)), Option(r.getSeq[String](2)))
+        assert(got === want, s"seed $seed doc ${r.getLong(0)}")
+      }
+      val all = rows.flatMap(r => Option(r.getSeq[String](2)).getOrElse(Nil))
+      // the documents reached the context-sensitive, growing and invalid cases
+      assert(all.exists(_.endsWith("ς")) && all.exists(_.contains("i\u0307")) &&
+        all.exists(_.contains("\uFFFD")) && all.exists(_.contains("\u2019")), s"seed $seed")
+      assert(rows.exists(_.isNullAt(1)))
+    }
+  }
+
+  test("wordCount: rows and schema (nullability included) equal the explode + count formula") {
+    import org.apache.spark.sql.functions.{col, count, explode, length, lit}
+    for (seed <- Seq(1, 2)) {
+      val df = byteDocs(seed)
+      val got = TextOps.wordCount(df)
+      // wordCount before the kernel: clean each document, split, count
+      val want = df.select(explode(TextOps.tokens(TextOps.cleanWord(col("text")))).as("word"))
+        .where(length(col("word")) > 0)
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+      assert(got.schema === want.schema)
+      assert(got.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ===
+        want.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq, s"seed $seed")
+    }
+  }
+
+  test("clean_tokens resolves in SQL") {
+    val r = spark.sql("SELECT clean_tokens('Don\\'t  STOP, me-now!') AS t").head()
+    assert(r.getSeq[String](0) === Seq("dont", "stop", "menow"))
+  }
+
   test("top-k is count-desc with word tie-break") {
     val rows = TextOps.wordCountTopK(docs("b b a a c"), 2).collect()
     assert(rows.map(_.getString(0)).toSeq === Seq("a", "b"))

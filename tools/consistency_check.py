@@ -17,7 +17,11 @@ cross-checks
   6. no `/*"` glob path in a src/main file that builds a DataFrameReader
      (`spark.read.…`): a glob that expands past 32 paths is listed by a
      Spark job, where one directory root with `recursiveFileLookup` is
-     listed on the driver.
+     listed on the driver,
+  7. no composed token clean under src/main: `filter(transform(
+     TextOps.tokens(x), … cleanWord …), … length … > 0)` or
+     `size(filter(TextOps.tokens(x), … length(… cleanWord …) > 0))` is
+     `TextOps.cleanTokens(x)`, the one-pass byte kernel, and `size` of it.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -92,6 +96,20 @@ def main() -> int:
         for n, line in enumerate(text.splitlines(), 1):
             if '/*"' in line:
                 problems.append(f"{path}:{n}: glob read path, list the directory instead")
+
+    # 7. the composed clean is the kernel's job: it splits, strips and
+    # lowercases through regexes and a String round trip per token.
+    composed = re.compile(
+        r"filter\(\s*transform\(\s*TextOps\.tokens\([^;]{0,200}?cleanWord[^;]{0,200}?"
+        r"length\([^;]{0,40}?>\s*0\s*\)"
+        r"|filter\(\s*TextOps\.tokens\([^;]{0,200}?length\(\s*TextOps\.cleanWord[^;]{0,80}?>\s*0\s*\)",
+        re.S)
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        for m in composed.finditer(text):
+            n = text.count("\n", 0, m.start()) + 1
+            problems.append(f"{path}:{n}: composed tokens/cleanWord/length filter, "
+                            "use TextOps.cleanTokens")
 
     if problems:
         for p in problems:
