@@ -159,7 +159,7 @@ object Html {
     * oracle asserts (the twin never needs to build the page). */
   /** Target-id space of the page fixture's nav links — interpolated
     * into BOTH [[pageFromDocs]] and the DuckDB closed-form edge twin
-    * (SparkEntry.CrawlEdgesBody), so fixture and twin cannot drift. */
+    * (queries.Twins.CrawlEdgesBody), so fixture and twin cannot drift. */
   val DefaultLinkSpace: Int = 1000
 
   def pageFromDocs(docs: DataFrame, textCol: String = "text",

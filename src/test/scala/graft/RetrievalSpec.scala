@@ -306,7 +306,7 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("NdcgDiscounts: rank 1 undiscounted, strictly decreasing, 12-dp stable") {
-    val w = SparkEntry.NdcgDiscounts
+    val w = queries.DedupSearchQueries.NdcgDiscounts
     assert(w.map(_._1) === (1L to 10L))
     assert(w.head._2 === 1.0) // 1/log2(2)
     assert(w.map(_._2).sliding(2).forall { case Seq(a, b) => a > b })
