@@ -78,15 +78,36 @@ object SparkEntry {
       write(tmp)
       tmp
     })
-  /** The single part file of a coalesce(1) stage write, with a loud
-    * failure naming the stage dir (a bare .get threw an anonymous
-    * NoSuchElementException when a stripe wrote no part — e.g. sparse
-    * doc_ids leaving a range empty). */
-  private[graft] def stagedPart(stage: String): java.io.File = {
+  /** Lands `df` as the one flat file `<dir>/<name>.parquet` with
+    * modification time `mtime`: a coalesce(1) write to a hidden stage
+    * dir, then a rename. The file stream lists the LEAVES of its source
+    * dir and orders them by mtime, so `mtime` sets the arrival order.
+    * A stage that wrote no part fails loudly, naming the stage dir (a
+    * bare .get threw an anonymous NoSuchElementException when a stripe
+    * wrote no part — e.g. sparse doc_ids leaving a range empty). */
+  private def landFile(df: DataFrame, dir: String, name: String, mtime: Long): Unit = {
+    val stage = s"$dir/.stage-$name"
+    df.coalesce(1).write.parquet(stage)
     val files = Option(new java.io.File(stage).listFiles()).getOrElse(Array.empty)
-    files.find(_.getName.endsWith(".parquet")).getOrElse(
+    val part = files.find(_.getName.endsWith(".parquet")).getOrElse(
       sys.error(s"fixture stage $stage wrote no parquet part " +
         s"(files: ${files.map(_.getName).mkString(", ")}) — empty id stripe?"))
+    val dest = new java.io.File(s"$dir/$name.parquet")
+    require(part.renameTo(dest), s"staging move failed for $dest")
+    dest.setLastModified(mtime)
+    graft.sources.FsUtil.deleteRecursively(new java.io.File(stage))
+  }
+
+  /** Lands `df` as `nFiles` files `<prefix><i>.parquet` holding
+    * contiguous doc_id ranges, modification times strictly increasing
+    * with the range. */
+  private def landIdRanges(df: DataFrame, dir: String, prefix: String, nFiles: Int): Unit = {
+    val maxId = df.agg(max(col("doc_id"))).head().getLong(0)
+    val per = maxId / nFiles + 1
+    (0 until nFiles).foreach { i =>
+      landFile(df.where(col("doc_id") >= i * per && col("doc_id") < (i + 1) * per),
+        dir, s"$prefix$i", 1000000L * (i + 1))
+    }
   }
   /** The LakeTable fixture: base projection + a KEY-LOCALIZED CDC batch
     * (updates/deletes over keys 300-400, inserts at key+100000), shared
@@ -103,7 +124,7 @@ object SparkEntry {
     * evolves only where data lands — but the query would then select a
     * column the table never grew). */
   private[graft] def tableCommitChanges(s: SparkSession, d: String,
-                                 lo: Long = 300, hi: Long = 400): DataFrame = {
+                                        lo: Long = 300, hi: Long = 400): DataFrame = {
     val inRange = t(s, d).customer.where(col("c_custkey").between(lo, hi))
     val updates = inRange.select(col("c_custkey"),
       when(col("c_custkey") % 7 === 3, "delete").otherwise("upsert").as("op"),
@@ -116,66 +137,51 @@ object SparkEntry {
     updates.unionAll(inserts)
   }
 
-  /** Staged document drops for the streaming ingest: `nFiles` parquet
-    * files holding contiguous doc_id ranges, modification times
-    * strictly increasing with the range, so the file stream (sorted by
+  /** Staged document drops for the streaming ingest: 4 parquet files
+    * holding contiguous doc_id ranges, modification times strictly
+    * increasing with the range, so the file stream (sorted by
     * timestamp) delivers documents in id order — making the streaming
     * run's "first occurrence wins" equal the batch oracle's min-id
     * rule. Memoized per sfDir like the other fixtures. */
-  private[graft] def stageDocStream(s: SparkSession, d: String, nFiles: Int,
-                             withSource: Boolean = false): String =
-    stageLayout(s, d, s"docstream$nFiles${if (withSource) "s" else ""}") { tmp =>
+  private[graft] def stageDocStream(s: SparkSession, d: String,
+                                    withSource: Boolean = false): String =
+    stageLayout(s, d, s"docstream4${if (withSource) "s" else ""}") { tmp =>
       val cols = if (withSource) Seq(col("doc_id"), col("lang"), col("source"), col("text"))
                  else Seq(col("doc_id"), col("lang"), col("text"))
-      val docs = t(s, d).documents.select(cols: _*)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val per = maxId / nFiles + 1
-      (0 until nFiles).foreach { i =>
-        // the file stream lists LEAVES of the source dir: land each
-        // range as one flat file with a timestamp encoding its order
-        val stage = s"$tmp/.stage$i"
-        docs.where(col("doc_id") >= i * per && col("doc_id") < (i + 1) * per)
-          .coalesce(1).write.parquet(stage)
-        val part = stagedPart(stage)
-        val dest = new java.io.File(s"$tmp/d$i.parquet")
-        require(part.renameTo(dest), s"staging move failed for $dest")
-        dest.setLastModified(1000000L * (i + 1))
-        graft.sources.FsUtil.deleteRecursively(new java.io.File(stage))
-      }
+      landIdRanges(t(s, d).documents.select(cols: _*), tmp, "d", nFiles = 4)
     }
 
+  /** The streamed corpus: [[stageDocStream]]'s files read one per
+    * micro-batch in a fresh [[streamSession]], which is returned with
+    * the stream. */
+  private[graft] def docStream(s: SparkSession, d: String,
+                               withSource: Boolean = false): (SparkSession, DataFrame) = {
+    val src = stageDocStream(s, d, withSource)
+    val ss = streamSession(s)
+    val schema = if (withSource) "doc_id LONG, lang STRING, source STRING, text STRING"
+                 else "doc_id LONG, lang STRING, text STRING"
+    (ss, ss.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src))
+  }
+
   /** Staged HTML-page drops (the crawl-stream fixture): pageFromDocs
-    * over the corpus, split into `nFiles` ordered files like
+    * over the corpus, split into 4 ordered files like
     * [[stageDocStream]]. */
-  private[graft] def stagePageStream(s: SparkSession, d: String, nFiles: Int): String =
-    stageLayout(s, d, s"pagestream$nFiles") { tmp =>
+  private[graft] def stagePageStream(s: SparkSession, d: String): String =
+    stageLayout(s, d, "pagestream4") { tmp =>
       // lang rides along as crawl metadata (page-level language header)
       val pages = Html.pageFromDocs(t(s, d).documents)
         .join(t(s, d).documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      val maxId = pages.agg(max(col("doc_id"))).head().getLong(0)
-      val per = maxId / nFiles + 1
-      (0 until nFiles).foreach { i =>
-        val stage = s"$tmp/.stage$i"
-        pages.where(col("doc_id") >= i * per && col("doc_id") < (i + 1) * per)
-          .coalesce(1).write.parquet(stage)
-        val part = stagedPart(stage)
-        val dest = new java.io.File(s"$tmp/p$i.parquet")
-        require(part.renameTo(dest), s"staging move failed for $dest")
-        dest.setLastModified(1000000L * (i + 1))
-        graft.sources.FsUtil.deleteRecursively(new java.io.File(stage))
-      }
+      landIdRanges(pages, tmp, "p", nFiles = 4)
     }
 
-  /** File-stream reader over a [[stagePageStream]] dir. */
-  private[graft] def readPageStream(ss: SparkSession, src: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    ss.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("html", StringType),
-        StructField("lang", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+  /** The streamed crawl: [[stagePageStream]]'s files read one per
+    * micro-batch in a fresh [[streamSession]], which is returned with
+    * the stream. */
+  private[graft] def pageStream(s: SparkSession, d: String): (SparkSession, DataFrame) = {
+    val src = stagePageStream(s, d)
+    val ss = streamSession(s)
+    (ss, ss.readStream.schema("doc_id LONG, html STRING, lang STRING")
+      .option("maxFilesPerTrigger", "1").parquet(src))
   }
 
   private[graft] def stageEvents(s: SparkSession, d: String, copies: Int, filesPerCopy: Int): String =
@@ -201,19 +207,47 @@ object SparkEntry {
   private[graft] def stageEventsWithFlush(s: SparkSession, d: String): String =
     stageLayout(s, d, "events-flush") { tmp =>
       t(s, d).events.coalesce(4).write.mode("overwrite").parquet(tmp)
-      val stage = s"$tmp/.stage-sentinel"
-      t(s, d).events.limit(1).select(
+      val sentinel = t(s, d).events.limit(1).select(
           lit(-1L).as("event_id"),
           expr("timestamp'2199-01-01 00:00:00'").as("ts"),
           lit(-1L).as("user_id"),
           explode(array(lit("click"), lit("purchase"))).as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-        .coalesce(1).write.parquet(stage)
-      val part = stagedPart(stage)
-      val dest = new java.io.File(s"$tmp/sentinel.parquet")
-      require(part.renameTo(dest), s"sentinel staging failed for $dest")
-      dest.setLastModified(4102444800000L) // year 2100 ≫ any staged mtime
-      graft.sources.FsUtil.deleteRecursively(new java.io.File(stage))
+      landFile(sentinel, tmp, "sentinel", 4102444800000L) // year 2100 ≫ any staged mtime
+    }
+
+  /** The boilerplated page fixture: the shared cookie paragraph
+    * ([[Html.BoilerFixturePara]]) injected after every `<div>` opener
+    * of each (doc_id, html) page. */
+  private[graft] def boilerplated(pages: DataFrame): DataFrame =
+    pages.select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
+      java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara)).as("html"))
+
+  /** WARC record metadata for the crawl fixtures: each (doc_id, html)
+    * page gets its fixture URL and the fetch_ts stamp
+    * 1700000000 + doc_id. */
+  private[graft] def warcMeta(pages: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    pages.select(col("doc_id"),
+      concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
+        lit("/doc/"), id.cast("string")).as("url"),
+      (lit(1700000000L) + id).as("fetch_ts"), col("html"))
+  }
+
+  /** Staged WARC container drops (the crawl-stream fixture): `pages`
+    * with [[warcMeta]], framed into 8 containers, each landed as
+    * `c<id>.warc` with an mtime in container order. Memoized per
+    * (sfDir, kind) like the other fixtures. */
+  private[graft] def stageWarcStream(s: SparkSession, d: String, kind: String)
+                                    (pages: => DataFrame): String =
+    stageLayout(s, d, kind) { tmp =>
+      graft.sources.Warc.containersFromDocs(warcMeta(pages), nContainers = 8)
+        .collect().foreach { r => // 8 container blobs — fixture staging
+          val cid = r.getLong(0)
+          val f = new java.io.File(s"$tmp/c$cid.warc")
+          java.nio.file.Files.write(f.toPath, r.getAs[Array[Byte]](1))
+          f.setLastModified(1000000L * (cid + 1))
+        }
     }
 
   /** Staged embedding drops for the streaming ANN ingest: the held-out
@@ -223,13 +257,7 @@ object SparkEntry {
       val batch = t(s, d).embeddings.where(col("vec_id") % 7 === 3)
         .select(col("vec_id"), col("embedding"))
       (0 until nFiles).foreach { i =>
-        val stage = s"$tmp/.stage$i"
-        batch.where(col("vec_id") % nFiles === i).coalesce(1).write.parquet(stage)
-        val part = stagedPart(stage)
-        val dest = new java.io.File(s"$tmp/v$i.parquet")
-        require(part.renameTo(dest), s"staging move failed for $dest")
-        dest.setLastModified(1000000L * (i + 1))
-        graft.sources.FsUtil.deleteRecursively(new java.io.File(stage))
+        landFile(batch.where(col("vec_id") % nFiles === i), tmp, s"v$i", 1000000L * (i + 1))
       }
     }
 

@@ -8,12 +8,11 @@ import graft.QuerySpec.Q
 import graft.SparkEntry._
 import graft.queries.Twins._
 
-/** Corpus construction: deterministic sampling, chunking, mixture
-  * weights and the end-to-end curation pipelines. */
+/** Corpus construction (graft.operators.Corpus): deterministic
+  * sampling, chunking, mixture weights, the quality cut and the
+  * end-to-end curation pipelines. */
 object CorpusQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M3b: corpus construction (deterministic sampling / chunking /
-    // mixture / quality cut — graft.operators.Corpus) ----
     Q("sample_by_hash", (s, d) =>
       Corpus.sampleByHash(t(s, d).documents, permille = 200)
         .select(col("doc_id"), col("lang")).orderBy("doc_id"))(
@@ -143,11 +142,10 @@ object CorpusQueries {
       // each check's proven CTE chain aggregated to its ppm; NOTE the
       // denominators follow the Spark aggs — leakage over the HELD-OUT
       // relation, contamination over the non-benchmark relation
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""WITH gf AS (SELECT CAST(len(tkl) AS BIGINT) AS n_words,
          |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
          |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
-         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |    CAST(len(list_filter(tkl, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
          |   FROM (SELECT list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
          | gatev AS (SELECT CAST(floor(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
          |    AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) * 1000000 / count(*)) AS BIGINT) AS gopher_pass_ppm FROM gf),
@@ -192,12 +190,7 @@ object CorpusQueries {
     // finish recomputes the card from the drained stores, so the batch
     // corpus_card twin serves unchanged
     Q("streaming_corpus_card", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4, withSource = true)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, source STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d, withSource = true)
       val cubeDir = java.nio.file.Files.createTempDirectory("graft-card-cube").toString
       val digestDir = java.nio.file.Files.createTempDirectory("graft-card-digest").toString
       graft.streaming.IngestPipeline.runCardIngest(ss, stream, cubeDir, digestDir)
@@ -427,22 +420,7 @@ object CorpusQueries {
     })(
       // the ingest cycle as one CTE chain: store anti-join → temperature
       // rates over survivors → chunk explode
-      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM dd GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
+      s"WITH${ingestCycleSql("documents", profile = "dd")}"),
     // temperature-α=1/2 multilingual rebalancing: per-stratum keep
     // rates derived from stratum counts (sqrt keeps every double
     // IEEE-exact → hash-checkable), rates broadcast back, keep
@@ -485,7 +463,6 @@ object CorpusQueries {
     * sub-relation rebuilt as its own aggregate CTE off the same token
     * split; ppm shares floored the same way. */
   private lazy val corpusCardTwinSql: String = {
-    val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
     s"""WITH tk AS (SELECT doc_id, lang, source, text,
        |    CAST(len(list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0)) AS BIGINT) AS n_toks,
        |    CAST(length(text) AS BIGINT) AS n_chars FROM documents),
@@ -504,7 +481,7 @@ object CorpusQueries {
        | gf AS (SELECT CAST(len(tkl) AS BIGINT) AS n_words,
        |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
        |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
-       |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+       |    CAST(len(list_filter(tkl, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
        |   FROM (SELECT list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
        | gate AS (SELECT count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
        |           AND mean_word_len <= 10.0 AND alpha_frac >= 0.8 AND n_stop_hits >= 2) AS n_pass FROM gf)

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.streaming.EventStreams
@@ -19,18 +19,11 @@ object CrawlPipelineQueries {
     // → block extraction → cross-corpus paragraph dedup → Gopher
     // word-level gate on the CLEANED text → context-window chunking
     Q("crawl_curation_e2e", (s, d) => {
-      val pages = Html.pageFromDocs(t(s, d).documents)
-        .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
-          java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-          .as("html"))
+      val pages = boilerplated(Html.pageFromDocs(t(s, d).documents))
       val deduped = Dedup.paragraphDedup(Html.extractBlocks(pages))
         .select(col("doc_id"), col("text"))
         .truncateLineage // consumed by the gate AND the rejoin
-      val gated = TextQuality.gopherQualityGate(deduped)
-        .where(col("keep"))
-        .join(deduped, Seq("doc_id"))
-        .join(t(s, d).documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("text"))
+      val gated = gopherGated(deduped, t(s, d).documents)
       Corpus.chunk(gated, size = 256)
         .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
         .orderBy("doc_id", "chunk_idx")
@@ -41,24 +34,8 @@ object CrawlPipelineQueries {
       // one hash proves the whole curation path a crawl corpus actually
       // takes. The twin rebuilds the deduped text closed-form and then
       // computes gate features and chunks TEXTUALLY from it
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""$ParaRelCtes,
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
+         |$DedupGopherCtes
          | j AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
          | c AS (SELECT doc_id, lang, text,
          |    CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM j),
@@ -85,15 +62,8 @@ object CrawlPipelineQueries {
     // no stage re-orders or drops rows it shouldn't)
     Q("warc_to_training_e2e", (s, d) => {
       val docs = t(s, d).documents
-      val id = col("doc_id")
-      val pages = Html.pageFromDocs(docs)
-        .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
-          java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-          .as("html"))
-      val withMeta = pages.select(col("doc_id"),
-        concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
-          lit("/doc/"), id.cast("string")).as("url"),
-        (lit(1700000000L) + id).as("fetch_ts"), col("html"))
+      val pages = boilerplated(Html.pageFromDocs(docs))
+      val withMeta = warcMeta(pages)
       val recs = graft.sources.Warc.records(
         graft.sources.Warc.containersFromDocs(withMeta, nContainers = 8))
       // the fixture's fetch_ts stamp is invertible — recover doc_id
@@ -102,11 +72,7 @@ object CrawlPipelineQueries {
       val deduped = Dedup.paragraphDedup(Html.extractBlocks(pagesBack))
         .select(col("doc_id"), col("text"))
         .truncateLineage // consumed by the gate AND the rejoin
-      val gated = TextQuality.gopherQualityGate(deduped)
-        .where(col("keep"))
-        .join(deduped, Seq("doc_id"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("text"))
+      val gated = gopherGated(deduped, docs)
       // mixture solve over the gated profile (not the raw corpus):
       // rates reflect what survived quality, the order a real build
       // runs the stages in
@@ -123,31 +89,7 @@ object CrawlPipelineQueries {
         .select(col("doc_id"), col("text"))
         .truncateLineage // consumed by the sample AND the rejoin
       val samp = Corpus.prioritySample(mixed, k = 100).truncateLineage
-      val shards = Corpus.curriculumShards(
-        samp.select(col("doc_id"), col("weight").as("score")), phases = 4, nShards = 4,
-        sizeHint = Some(101L)) // priority sample ≤ k+1 rows by contract
-      val chosen = mixed.join(samp.select("doc_id"), "doc_id")
-      val ch = Corpus.chunk(chosen.select(col("doc_id"), col("text")), size = 128)
-      val chunkWords = ch
-        .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
-        .select(col("doc_id"), col("chunk_idx"), lower(col("tok")).as("word"))
-        .where(length(col("word")) > 0)
-      val perWord = chunkWords.select(col("word")).distinct()
-        .select(col("word"), size(Bpe.tokens(col("word"), Bpe.DefaultMerges,
-          Some(Bpe.DefaultAlphabet))).cast("long").as("n_toks"))
-      val cb = chunkWords.join(perWord, Seq("word"))
-        .groupBy(col("doc_id"), col("chunk_idx")).agg(sum(col("n_toks")).as("bpe_n"))
-      val withTok = ch.join(cb, Seq("doc_id", "chunk_idx"), "left")
-        .withColumn("n_tokens", coalesce(col("bpe_n"), lit(0L)))
-      val packed = Corpus.packChunks(withTok, tokensPerPack = 64L, nShards = 8)
-      packed
-        .join(broadcast(shards.select(col("doc_id"), col("phase"),
-          col("shard").as("curr_shard"), col("seq"))), "doc_id")
-        .join(broadcast(samp.select(col("doc_id"), col("w_est"))), "doc_id")
-        .select(col("doc_id"), col("chunk_idx"), col("n_tokens"), col("shard"),
-          col("pack_id"), col("start_off"), col("phase"), col("curr_shard"),
-          col("seq"), col("w_est"))
-        .orderBy("doc_id", "chunk_idx")
+      trainingManifest(samp, mixed.join(samp.select("doc_id"), "doc_id"))
     }) {
       // the full-build twin: every stage's proven CTE chain stitched
       // end to end — paragraph relation + df cut (paragraph_dedup),
@@ -157,85 +99,12 @@ object CrawlPipelineQueries {
       // BPE applier + shard-cumsum packing (packed_bpe). The WARC
       // framing round-trip is byte-lossless (warc_ingest's proof), so
       // the twin starts from the same paragraph relation
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
-         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
-         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
-         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
-         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
-         | rates AS (SELECT lang,
-         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
-         |  FROM pj),
+         |$DedupGopherCtes
+         |$MixtureRatesCtes
          | mixed AS (SELECT mj.doc_id, mj.text FROM mj JOIN rates r ON mj.lang = r.lang
          |          WHERE $HashPermille < r.keep_permille),
-         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
-         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
-         |   FROM mixed WHERE length(text) > 0),
-         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
-         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
-         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
-         | samp AS (SELECT doc_id, weight,
-         |   round(greatest(CAST(weight AS DOUBLE),
-         |     CASE WHEN (SELECT cnt FROM stats) = 101
-         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
-         |          ELSE 0.0 END), 6) AS w_est
-         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
-         | csc AS (SELECT doc_id, weight AS score FROM samp),
-         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
-         | cr AS (SELECT score,
-         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-         |   sum(cnt) OVER () AS n FROM ch1),
-         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
-         | cj AS (SELECT csc.doc_id,
-         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
-         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
-         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-         |  FROM csc JOIN cpr USING (score)),
-         | curr AS (SELECT doc_id, phase, curr_shard,
-         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
-         |  FROM cj),
-         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
-         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
-         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
-         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
-         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
-         |$BpeApplyCte,
-         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
-         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
-         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
-         |        coalesce(cb.bpe_n, 0) AS n_tokens
-         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
-         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
-         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-         |   FROM tok)
-         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
-         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
-         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
-         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
-         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
+         |$SampleChunkPackSql""".stripMargin
     },
     // the whole build STREAMED: the same crawl-to-manifest chain with
     // containers arriving one per micro-batch. Paragraph dedup flips
@@ -247,25 +116,8 @@ object CrawlPipelineQueries {
     // lands k+1-row frontiers per batch and finishes exactly after
     // the drain; curriculum + BPE packing run on the ≤k-doc sample
     Q("streaming_warc_to_training", (s, d) => {
-      val src = stageLayout(s, d, "warctrainstream") { tmp =>
-        val docs = t(s, d).documents
-        val id = col("doc_id")
-        val pages = Html.pageFromDocs(docs)
-          .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
-            java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-            .as("html"))
-        val withMeta = pages.select(col("doc_id"),
-          concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
-            lit("/doc/"), id.cast("string")).as("url"),
-          (lit(1700000000L) + id).as("fetch_ts"), col("html"))
-        graft.sources.Warc.containersFromDocs(withMeta, nContainers = 8)
-          .collect().foreach { r =>
-            val cid = r.getLong(0)
-            val f = new java.io.File(s"$tmp/c$cid.warc")
-            java.nio.file.Files.write(f.toPath, r.getAs[Array[Byte]](1))
-            f.setLastModified(1000000L * (cid + 1))
-          }
-      }
+      val src = stageWarcStream(s, d, "warctrainstream")(
+        boilerplated(Html.pageFromDocs(t(s, d).documents)))
       val ss = streamSession(s)
       // policy snapshot: the batch e2e's rate solve, reused verbatim.
       // Computed in the OUTER session deliberately (optimization r17):
@@ -276,17 +128,10 @@ object CrawlPipelineQueries {
       // rates relation is tiny and session-independent (one shared
       // SparkContext), and its VALUES are unchanged.
       val docs = t(s, d).documents
-      val pagesB = Html.pageFromDocs(docs)
-        .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
-          java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-          .as("html"))
+      val pagesB = boilerplated(Html.pageFromDocs(docs))
       val dedupedB = Dedup.paragraphDedup(Html.extractBlocks(pagesB))
         .select(col("doc_id"), col("text")).truncateLineage
-      val gatedB = TextQuality.gopherQualityGate(dedupedB)
-        .where(col("keep"))
-        .join(dedupedB, Seq("doc_id"))
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("text"))
+      val gatedB = gopherGated(dedupedB, docs)
       val targets = Seq(("en", 0.5), ("de", 0.3), ("zh", 0.2))
       val prof = gatedB.groupBy("lang").agg(count(lit(1)).as("n_l"))
       val joinedP = prof.join(broadcast(ss.createDataFrame(targets).toDF("lang", "t")), "lang")
@@ -308,64 +153,17 @@ object CrawlPipelineQueries {
           storeDir, landDir, frontierDir,
           docs.select(col("doc_id"), col("lang")), rates, k = 100)
         .truncateLineage
-      val shards = Corpus.curriculumShards(
-        samp.select(col("doc_id"), col("weight").as("score")), phases = 4, nShards = 4,
-        sizeHint = Some(101L)) // priority sample ≤ k+1 rows by contract
-      val chosen = ss.read.parquet(landDir).select(col("doc_id"), col("text"))
-        .join(samp.select("doc_id"), "doc_id")
-      val ch = Corpus.chunk(chosen.select(col("doc_id"), col("text")), size = 128)
-      val chunkWords = ch
-        .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
-        .select(col("doc_id"), col("chunk_idx"), lower(col("tok")).as("word"))
-        .where(length(col("word")) > 0)
-      val perWord = chunkWords.select(col("word")).distinct()
-        .select(col("word"), size(Bpe.tokens(col("word"), Bpe.DefaultMerges,
-          Some(Bpe.DefaultAlphabet))).cast("long").as("n_toks"))
-      val cb = chunkWords.join(perWord, Seq("word"))
-        .groupBy(col("doc_id"), col("chunk_idx")).agg(sum(col("n_toks")).as("bpe_n"))
-      val withTok = ch.join(cb, Seq("doc_id", "chunk_idx"), "left")
-        .withColumn("n_tokens", coalesce(col("bpe_n"), lit(0L)))
-      val packed = Corpus.packChunks(withTok, tokensPerPack = 64L, nShards = 8)
-      packed
-        .join(broadcast(shards.select(col("doc_id"), col("phase"),
-          col("shard").as("curr_shard"), col("seq"))), "doc_id")
-        .join(broadcast(samp.select(col("doc_id"), col("w_est"))), "doc_id")
-        .select(col("doc_id"), col("chunk_idx"), col("n_tokens"), col("shard"),
-          col("pack_id"), col("start_off"), col("phase"), col("curr_shard"),
-          col("seq"), col("w_est"))
-        .orderBy("doc_id", "chunk_idx")
+      trainingManifest(samp, ss.read.parquet(landDir).select(col("doc_id"), col("text"))
+        .join(samp.select("doc_id"), "doc_id"))
     }) {
       // the streamed build's twin: the batch chain (dd..rates) supplies
       // the POLICY SNAPSHOT rates; the corpus itself takes the
       // first-occurrence-wins dedup — one window ordered by the stream
       // arrival order (container_id = doc_id % 8, then doc_id, pos) —
       // and the sampler/curriculum/packing CTEs run on it
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""${ParaRelCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         | dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
-         | dd AS (SELECT p.doc_id,
-         |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
-         |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
-         | tk AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
-         |  FROM dd),
-         | f AS (SELECT doc_id, text,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
-         |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
-         |  FROM tk),
-         | g AS (SELECT doc_id, text FROM f
-         |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),
-         | mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
-         | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
-         | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
-         | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
-         | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
-         | rates AS (SELECT lang,
-         |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
-         |  FROM pj),
+         |$DedupGopherCtes
+         |$MixtureRatesCtes
          | rs AS (SELECT doc_id, pos, para,
          |    row_number() OVER (PARTITION BY para ORDER BY doc_id % 8, doc_id, pos) AS rn FROM paras),
          | sdd AS (SELECT doc_id,
@@ -378,7 +176,7 @@ object CrawlPipelineQueries {
          |    CAST(len(tk2) AS BIGINT) AS n_words,
          |    CAST(list_sum(list_transform(tk2, x -> length(x))) AS DOUBLE) / len(tk2) AS mean_word_len,
          |    CAST(len(list_filter(tk2, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk2) AS alpha_frac,
-         |    CAST(len(list_filter(tk2, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |    CAST(len(list_filter(tk2, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
          |  FROM stk),
          | sg AS (SELECT doc_id, text FROM sf
          |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
@@ -386,57 +184,7 @@ object CrawlPipelineQueries {
          | smj AS (SELECT sg.doc_id, d3.lang, sg.text FROM sg JOIN documents d3 ON sg.doc_id = d3.doc_id),
          | mixed AS (SELECT smj.doc_id, smj.text FROM smj JOIN rates r2 ON smj.lang = r2.lang
          |          WHERE $HashPermille < r2.keep_permille),
-         | keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
-         |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
-         |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
-         |   FROM mixed WHERE length(text) > 0),
-         | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
-         | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
-         | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
-         | samp AS (SELECT doc_id, weight,
-         |   round(greatest(CAST(weight AS DOUBLE),
-         |     CASE WHEN (SELECT cnt FROM stats) = 101
-         |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
-         |          ELSE 0.0 END), 6) AS w_est
-         |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
-         | csc AS (SELECT doc_id, weight AS score FROM samp),
-         | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
-         | cr AS (SELECT score,
-         |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
-         |   sum(cnt) OVER () AS n FROM ch1),
-         | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
-         |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
-         | cj AS (SELECT csc.doc_id,
-         |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
-         |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
-         |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
-         |  FROM csc JOIN cpr USING (score)),
-         | curr AS (SELECT doc_id, phase, curr_shard,
-         |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
-         |  FROM cj),
-         | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
-         | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
-         | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
-         | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
-         | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
-         |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
-         |        WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
-         |$BpeApplyCte,
-         | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
-         |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
-         | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
-         |        coalesce(cb.bpe_n, 0) AS n_tokens
-         |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
-         | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
-         |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
-         |   FROM tok)
-         |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
-         | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
-         | curr.phase, curr.curr_shard, curr.seq, samp.w_est
-         |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
-         |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
+         |$SampleChunkPackSql""".stripMargin
     },
     // C4's line-level rules as an operator: the fixture decorates each
     // doc's 12-word lines with closed-form dirt — every 5th line loses
@@ -580,7 +328,6 @@ object CrawlPipelineQueries {
     }) {
       // NB chain + Gopher features joined per doc, rolled up per source
       // with DECIMAL-safe means
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""$NbCtes,
          | gtk AS (SELECT doc_id,
          |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
@@ -591,7 +338,7 @@ object CrawlPipelineQueries {
          |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) >= 3.0
          |     AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) <= 10.0
          |     AND CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) >= 0.8
-         |     AND len(list_filter(tk, x -> list_contains([$stops], lower(x)))) >= 2) AS keep
+         |     AND len(list_filter(tk, x -> list_contains([$EnStopsSqlList], lower(x)))) >= 2) AS keep
          |  FROM gtk)
          |SELECT d3.source, count(*) AS n_docs,
          | round(CAST(sum(CAST(nb.llr AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS mean_llr,
@@ -662,7 +409,6 @@ object CrawlPipelineQueries {
       TextQuality.gopherQualityGate(t(s, d).documents).orderBy("doc_id")) {
       // every Gopher feature and band recomputed in SQL from the same
       // constants (stop list generated from the Scala object)
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       s"""WITH tk AS (SELECT doc_id,
          |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
          |  FROM documents),
@@ -670,7 +416,7 @@ object CrawlPipelineQueries {
          |    CAST(len(tk) AS BIGINT) AS n_words,
          |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
          |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
-         |    CAST(len(list_filter(tk, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |    CAST(len(list_filter(tk, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
          |  FROM tk)
          |SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop_hits,
          | (n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
@@ -736,13 +482,7 @@ object CrawlPipelineQueries {
     Q("robots_filter", (s, d) => {
       val docs = t(s, d).documents
       val hosts = docs.select((col("doc_id") % Html.SiteSpace).as("k")).distinct()
-      val content = concat(
-        lit("# graft robots fixture\nUser-agent: badbot\nDisallow: /\n\n" +
-          "User-agent: *\nDisallow: /private/\n"),
-        when(col("k") % 4 === 0, lit("Disallow: /doc/\n"))
-          .when(col("k") % 4 === 1, lit("Disallow: /doc/1\nAllow: /doc/12\n"))
-          .when(col("k") % 4 === 2, lit("Allow: /doc/\n"))
-          .otherwise(lit("")))
+      val content = robotsFixture
       val rules = Html.robotsRules(
         hosts.select(Html.fixtureHost(col("k")).as("host"), content.as("content")))
       val urls = docs.select(concat(lit("https://"),
@@ -777,12 +517,7 @@ object CrawlPipelineQueries {
     // bands — wide bands keep buckets sparse at corpus scale), exact
     // bit_count verify — perceptual dedup's real form
     Q("image_phash_near_dups", (s, d) => {
-      val orig = Multimodal.pngMediaFromDocs(t(s, d).documents)
-        .select(col("media_id"), col("content"))
-      val variants = Multimodal
-        .resizeImage(orig.where(col("media_id") % 4 === 0), 32, 24)
-        .select((col("media_id") + 1000000L).as("media_id"), col("content"))
-      Multimodal.aHashNearDups(Multimodal.imageAHash(orig.unionByName(variants)))
+      Multimodal.aHashNearDups(Multimodal.imageAHash(pngWithResized(s, d)))
         .orderBy("id_a", "id_b")
     })(
       // the oracle may brute-force what the operator must not: all pairs
@@ -917,12 +652,7 @@ object CrawlPipelineQueries {
     // aHash and exact dedup on the hash finds the pair; the twin
     // computes every hash closed-form from the pattern formula
     Q("image_phash_dedup", (s, d) => {
-      val orig = Multimodal.pngMediaFromDocs(t(s, d).documents)
-        .select(col("media_id"), col("content"))
-      val variants = Multimodal
-        .resizeImage(orig.where(col("media_id") % 4 === 0), 32, 24)
-        .select((col("media_id") + 1000000L).as("media_id"), col("content"))
-      Multimodal.imageAHash(orig.unionByName(variants))
+      Multimodal.imageAHash(pngWithResized(s, d))
         .groupBy(col("ahash"))
         .agg(min(col("media_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("keep_id"), col("n_copies"), col("ahash"))
@@ -1206,33 +936,15 @@ object CrawlPipelineQueries {
     // the UT1-style blocklist then grades the drained frontier — the
     // admitted verdict set must equal the batch closed form
     Q("streaming_url_frontier", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      val id = col("doc_id")
-      val m = id - (id % 3)
-      val base = concat(lit("https://"), Html.fixtureHost(m % Html.SiteSpace),
-        lit("/doc/"), m.cast("string"))
-      val raw = when(id % 3 === 0,
-          concat(base, lit("?page=2&utm_source=feed&a=1&utm_campaign=c"), id.cast("string")))
-        .when(id % 3 === 1,
-          concat(base, lit("?a=1&gclid=g"), id.cast("string"), lit("&page=2")))
-        .otherwise(concat(base, lit("?page=2&a=1&fbclid=f"), id.cast("string")))
+      val (ss, stream) = docStream(s, d)
+      val raw = trackedUrl
       val canon = stream.select(Html.stripTrackingParams(raw).as("url"))
         .dropDuplicates("url")
       val admitted = graft.streaming.EventStreams.runToMemory(ss, canon,
         s"stream_urlfrontier_${System.nanoTime()}",
         org.apache.spark.sql.streaming.OutputMode.Append())
       val ks = t(ss, d).documents.select((col("doc_id") % Html.SiteSpace).as("k")).distinct()
-      val rules = ks.where(col("k") % 7 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("").as("prefix"))
-        .unionByName(ks.where(col("k") % 5 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("/doc/1").as("prefix")))
-        .unionByName(ss.range(1)
-          .select(lit("shop.example.co.uk").as("host"), lit("/doc/7").as("prefix")))
+      val rules = blocklistRules(ks)
       Html.blocklistFilter(admitted, rules).orderBy("url")
     }) {
       // the drained frontier's closed form: one canonical key per m
@@ -1273,36 +985,13 @@ object CrawlPipelineQueries {
     // the drained output must equal the batch closed form, which is
     // the twin
     Q("streaming_crawl_admission", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d)
       val id = col("doc_id")
-      val m = id - (id % 3)
-      val base = concat(lit("https://"), Html.fixtureHost(m % Html.SiteSpace),
-        lit("/doc/"), m.cast("string"))
-      val raw = when(id % 3 === 0,
-          concat(base, lit("?page=2&utm_source=feed&a=1&utm_campaign=c"), id.cast("string")))
-        .when(id % 3 === 1,
-          concat(base, lit("?a=1&gclid=g"), id.cast("string"), lit("&page=2")))
-        .otherwise(concat(base, lit("?page=2&a=1&fbclid=f"), id.cast("string")))
+      val raw = trackedUrl
       val urlStream = stream.select(raw.as("url"))
       val ks = t(ss, d).documents.select((col("doc_id") % Html.SiteSpace).as("k")).distinct()
-      val blockRules = ks.where(col("k") % 7 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("").as("prefix"))
-        .unionByName(ks.where(col("k") % 5 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("/doc/1").as("prefix")))
-        .unionByName(ss.range(1)
-          .select(lit("shop.example.co.uk").as("host"), lit("/doc/7").as("prefix")))
-      val robotsContent = concat(
-        lit("# graft robots fixture\nUser-agent: badbot\nDisallow: /\n\n" +
-          "User-agent: *\nDisallow: /private/\n"),
-        when(col("k") % 4 === 0, lit("Disallow: /doc/\n"))
-          .when(col("k") % 4 === 1, lit("Disallow: /doc/1\nAllow: /doc/12\n"))
-          .when(col("k") % 4 === 2, lit("Allow: /doc/\n"))
-          .otherwise(lit("")))
+      val blockRules = blocklistRules(ks)
+      val robotsContent = robotsFixture
       val robotsRules = Html.robotsRules(
         ks.select(Html.fixtureHost(col("k")).as("host"), robotsContent.as("content")))
       val landDir = java.nio.file.Files.createTempDirectory("graft-admission").toString
@@ -1363,12 +1052,7 @@ object CrawlPipelineQueries {
     // drained union (min-id keeper is order-independent); drained
     // output == the one-shot batch composition, which is the twin
     Q("streaming_sft_admission", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d)
       val landDir = java.nio.file.Files.createTempDirectory("graft-sft-admission").toString
       graft.streaming.IngestPipeline
         .runSftAdmission(ss, stream.select(col("doc_id"), col("text")), landDir)
@@ -1388,16 +1072,7 @@ object CrawlPipelineQueries {
          |       9223372036854775807), FALSE) AS starts_ok,
          |   arg_max(role, turn_idx) = 'assistant' AS ends_assistant,
          |   max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 1 AS has_empty,
-         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
-         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |        9223372036854775807), FALSE)
-         |    AND arg_max(role, turn_idx) = 'assistant'
-         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
-         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
-         |   FROM prevr GROUP BY conv_id),
-         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
-         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
+         |$SftOkFpCtes
          | grp AS (SELECT resp_fp, count(*) AS group_size, min(conv_id) AS keeper
          |   FROM fp GROUP BY resp_fp)
          |SELECT a.conv_id, a.n_turns, a.same_role_runs, a.starts_ok,
@@ -1413,9 +1088,8 @@ object CrawlPipelineQueries {
     // distinct, unchanged) — drained output must equal the batch edge
     // list, so the closed-form twin is shared with html_outlinks
     Q("streaming_outlinks", (s, d) => {
-      val src = stagePageStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      EventStreams.runToMemory(ss, Html.outlinks(readPageStream(ss, src)),
+      val (ss, pages) = pageStream(s, d)
+      EventStreams.runToMemory(ss, Html.outlinks(pages),
           s"stream_outlinks_${System.nanoTime()}",
           org.apache.spark.sql.streaming.OutputMode.Append())
         .orderBy("src", "dst")
@@ -1432,8 +1106,7 @@ object CrawlPipelineQueries {
     // COLLAPSED text (what extraction provably recovers), so the twin
     // is the one-shot batch chain over whitespace-normalized documents
     Q("streaming_html_ingest", (s, d) => {
-      val src = stagePageStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
+      val (ss, pages) = pageStream(s, d)
       val collapsed = concat_ws(" ",
         filter(split(col("text"), "\\s+"), w => length(w) > 0))
       val storeDir = java.nio.file.Files.createTempDirectory("graft-htmlingest-store").toString
@@ -1443,7 +1116,7 @@ object CrawlPipelineQueries {
       val rates = Corpus.temperatureRates(
         t(ss, d).documents.select(col("doc_id"), col("lang"), collapsed.as("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-htmlingest-out").toString
-      val docsStream = Html.extractMain(readPageStream(ss, src))
+      val docsStream = Html.extractMain(pages)
         .select(col("doc_id"), col("lang"), col("main_text").as("text"))
       graft.streaming.IngestPipeline
         .runIngestStream(ss, docsStream, storeDir, rates, out,
@@ -1461,22 +1134,7 @@ object CrawlPipelineQueries {
       s"""WITH docsx AS (SELECT doc_id, lang,
          |    array_to_string(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0), ' ') AS text
          |  FROM documents),
-         | store AS (SELECT DISTINCT sha256(text) AS h FROM docsx WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM docsx GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM docsx d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM docsx GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
+         |${ingestCycleSql("docsx", profile = "docsx")}""".stripMargin),
     // paragraph dedup AS A STREAM: the cookie-boilerplated page drops
     // arrive in doc_id order, each micro-batch extracts blocks and
     // drops every paragraph already seen (first-occurrence-wins — a
@@ -1486,16 +1144,12 @@ object CrawlPipelineQueries {
     // the twin is one row_number window over the closed-form paragraph
     // relation
     Q("streaming_paragraph_ingest", (s, d) => {
-      val src = stagePageStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
+      val (ss, rawPages) = pageStream(s, d)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-parastore").toString
       ss.range(0).select(col("id").as("ph"))
         .write.mode("overwrite").parquet(s"$storeDir/seed")
       val out = java.nio.file.Files.createTempDirectory("graft-paraout").toString
-      val pages = readPageStream(ss, src).select(col("doc_id"),
-        regexp_replace(col("html"), "<div>\n",
-          java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-          .as("html"))
+      val pages = boilerplated(rawPages)
       graft.streaming.IngestPipeline.runParaIngest(ss, pages, storeDir, out)
         .orderBy("doc_id")
     })(
@@ -1510,10 +1164,6 @@ object CrawlPipelineQueries {
          | coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE rn = 1), '') AS text
          |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin))
 
-  /** Shared bigram-LM CTE chain (bigram_logprob + perplexity_filter
-    * twins): ordered cleaned-word lists → adjacent pairs → min-count-
-    * pruned model with stupid backoff → per-doc DECIMAL-summed logs in
-    * `s(doc_id, n_bigrams, sl)`. */
   /** Naive-Bayes train + score chain, shared by the nb_quality_score
     * and classifier_filter twins: identical labels (even source number
     * positive, doc_id%10<7 train), identical smoothing and division
@@ -1523,9 +1173,7 @@ object CrawlPipelineQueries {
     s"""WITH d AS (SELECT doc_id,
        |    (CAST(substr(source, 4, 10) AS INT) % 2) = 0 AS is_pos,
        |    doc_id % 10 < 7 AS is_train,
-       |    list_filter(list_transform(
-       |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-       |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+       |    $CleanTokensSql AS ws
        |  FROM documents),
        | toks AS (SELECT doc_id, is_pos, is_train, unnest(ws) AS word FROM d),
        | m AS (SELECT word,
@@ -1627,4 +1275,144 @@ object CrawlPipelineQueries {
       |   UNION ALL SELECT doc_id, pos, line FROM body
       |   UNION ALL SELECT doc_id, n + 2 + off, 'Lorem ipsum dolor sit amet consectetur adipiscing elit.' FROM np
       |   UNION ALL SELECT doc_id, n + 3 + off, 'Too short.' FROM np)""".stripMargin
+
+  /** Paragraph dedup (paragraph_dedup's df cut) and the Gopher gate over
+    * the deduped text, after the paragraph relation: dfr, dd, tk, f, g. */
+  private lazy val DedupGopherCtes: String =
+    s"""| dfr AS (SELECT para, count(DISTINCT doc_id) AS df FROM paras GROUP BY para),
+       | dd AS (SELECT p.doc_id,
+       |    coalesce(string_agg(p.para, ' ' ORDER BY p.pos) FILTER (WHERE df <= 1), '') AS text
+       |  FROM paras p JOIN dfr USING (para) GROUP BY p.doc_id),
+       | tk AS (SELECT doc_id, text,
+       |    list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tk
+       |  FROM dd),
+       | f AS (SELECT doc_id, text,
+       |    CAST(len(tk) AS BIGINT) AS n_words,
+       |    CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len,
+       |    CAST(len(list_filter(tk, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tk) AS alpha_frac,
+       |    CAST(len(list_filter(tk, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
+       |  FROM tk),
+       | g AS (SELECT doc_id, text FROM f
+       |  WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+       |    AND alpha_frac >= 0.8 AND n_stop_hits >= 2),""".stripMargin
+
+  /** mixture_solve's rate arithmetic over the gated docs (mj), ending
+    * in `rates` (lang, keep_permille). */
+  private lazy val MixtureRatesCtes: String =
+    s"""| mj AS (SELECT g.doc_id, d2.lang, g.text FROM g JOIN documents d2 ON g.doc_id = d2.doc_id),
+       | prof AS (SELECT lang, count(*) AS n_l FROM mj GROUP BY 1),
+       | tt AS (SELECT * FROM (VALUES ('en', 0.5e0), ('de', 0.3e0), ('zh', 0.2e0)) AS t(lang, t)),
+       | pj AS (SELECT prof.lang, prof.n_l, tt.t FROM prof JOIN tt USING (lang)),
+       | sr AS (SELECT min(CAST(n_l AS DOUBLE) / t) AS scale FROM pj),
+       | rates AS (SELECT lang,
+       |   CAST(floor(1000.0e0 * t * (SELECT scale FROM sr) / CAST(n_l AS DOUBLE)) AS BIGINT) AS keep_permille
+       |  FROM pj),""".stripMargin
+
+  /** The warc-to-training twins' tail over `mixed`: the k+1 priority
+    * pick (priority_sample), the percent-rank curriculum
+    * (curriculum_shards), 128-char chunks, the recursive BPE applier
+    * and the shard-cumsum packing (packed_bpe). */
+  private lazy val SampleChunkPackSql: String =
+    s"""| keyed AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS weight,
+       |    greatest(CAST(floor((CASE WHEN (((doc_id % 2147483648) * 2654435761) % 4294967296) = 0 THEN 4294967296 ELSE (((doc_id % 2147483648) * 2654435761) % 4294967296) END) * 1048576
+       |         / CAST(length(text) AS DOUBLE)) AS BIGINT), 1) AS pkey
+       |   FROM mixed WHERE length(text) > 0),
+       | top AS (SELECT * FROM keyed ORDER BY pkey, doc_id LIMIT 101),
+       | ranked AS (SELECT top.*, row_number() OVER (ORDER BY pkey, doc_id) AS rn FROM top),
+       | stats AS (SELECT count(*) AS cnt, max(pkey) AS mx FROM top),
+       | samp AS (SELECT doc_id, weight,
+       |   round(greatest(CAST(weight AS DOUBLE),
+       |     CASE WHEN (SELECT cnt FROM stats) = 101
+       |          THEN 4503599627370496.0 / CAST((SELECT mx FROM stats) AS DOUBLE)
+       |          ELSE 0.0 END), 6) AS w_est
+       |  FROM ranked WHERE (SELECT cnt FROM stats) <= 100 OR rn <= 100),
+       | csc AS (SELECT doc_id, weight AS score FROM samp),
+       | ch1 AS (SELECT score, count(*) AS cnt FROM csc GROUP BY 1),
+       | cr AS (SELECT score,
+       |   coalesce(sum(cnt) OVER (ORDER BY score ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_below,
+       |   sum(cnt) OVER () AS n FROM ch1),
+       | cpr AS (SELECT score, CASE WHEN n = 1 THEN 0.0
+       |        ELSE CAST(cnt_below AS DOUBLE) / CAST(n - 1 AS DOUBLE) END AS pr FROM cr),
+       | cj AS (SELECT csc.doc_id,
+       |   CAST(least(3, floor(cpr.pr * 4)) AS BIGINT) AS phase,
+       |   CAST((((csc.doc_id % 2147483648) * 2654435761) % 4294967296) % 4 AS BIGINT) AS curr_shard,
+       |   (((csc.doc_id % 2147483648) * 2654435761) % 4294967296) AS ord
+       |  FROM csc JOIN cpr USING (score)),
+       | curr AS (SELECT doc_id, phase, curr_shard,
+       |   CAST(row_number() OVER (PARTITION BY phase, curr_shard ORDER BY ord, doc_id) AS BIGINT) AS seq
+       |  FROM cj),
+       | chosen AS (SELECT m.doc_id, m.text FROM mixed m JOIN samp USING (doc_id)),
+       | pc AS (SELECT doc_id, text, CAST(ceil(length(text) / 128.0) AS BIGINT) AS n_chunks FROM chosen),
+       | pu AS (SELECT doc_id, text, n_chunks, unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM pc),
+       | pch AS (SELECT doc_id, chunk_idx, substring(text, CAST(chunk_idx * 128 + 1 AS INT), 128) AS chunk FROM pu),
+       | cw AS (SELECT doc_id, chunk_idx, lower(t.tok) AS word
+       |        FROM (SELECT doc_id, chunk_idx, unnest(string_split_regex(chunk, '[ \\t\\n\\f\\r]+')) AS tok FROM pch) t
+       |        WHERE length(t.tok) > 0),
+       | wc AS (SELECT word, count(*) AS cnt FROM cw GROUP BY 1),
+       |$BpeApplyCte,
+       | cb AS (SELECT cw.doc_id, cw.chunk_idx, CAST(sum(len(f2.toks)) AS BIGINT) AS bpe_n
+       |        FROM cw JOIN fin f2 USING (word) GROUP BY 1, 2),
+       | tok AS (SELECT pch.doc_id, pch.chunk_idx, pch.doc_id % 8 AS shard,
+       |        coalesce(cb.bpe_n, 0) AS n_tokens
+       |        FROM pch LEFT JOIN cb USING (doc_id, chunk_idx)),
+       | off AS (SELECT doc_id, chunk_idx, shard, n_tokens,
+       |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id, chunk_idx
+       |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_off
+       |   FROM tok)
+       |SELECT o.doc_id, o.chunk_idx, o.n_tokens, o.shard,
+       | CAST(floor(o.start_off / 64) AS BIGINT) AS pack_id, o.start_off,
+       | curr.phase, curr.curr_shard, curr.seq, samp.w_est
+       |FROM off o JOIN curr USING (doc_id) JOIN samp USING (doc_id)
+       |ORDER BY o.doc_id, o.chunk_idx""".stripMargin
+
+  /** The warc-to-training builds' tail: the curriculum over the priority
+    * sample `samp`, then the `chosen` docs cut into 128-char chunks,
+    * packed under BPE budgets and joined to their phase, shard and
+    * weight estimate. */
+  private def trainingManifest(samp: DataFrame, chosen: DataFrame): DataFrame = {
+    val shards = Corpus.curriculumShards(
+      samp.select(col("doc_id"), col("weight").as("score")), phases = 4, nShards = 4,
+      sizeHint = Some(101L)) // priority sample ≤ k+1 rows by contract
+    bpePackedChunks(Corpus.chunk(chosen.select(col("doc_id"), col("text")), size = 128))
+      .join(broadcast(shards.select(col("doc_id"), col("phase"),
+        col("shard").as("curr_shard"), col("seq"))), "doc_id")
+      .join(broadcast(samp.select(col("doc_id"), col("w_est"))), "doc_id")
+      .select(col("doc_id"), col("chunk_idx"), col("n_tokens"), col("shard"),
+        col("pack_id"), col("start_off"), col("phase"), col("curr_shard"),
+        col("seq"), col("w_est"))
+      .orderBy("doc_id", "chunk_idx")
+  }
+
+  /** The robots.txt fixture for host key `k`: a badbot-only block,
+    * a /private/ disallow for everyone, and per k % 4 a /doc/
+    * disallow, a /doc/1 disallow with a longer /doc/12 allow, a /doc/
+    * allow, or nothing. */
+  private def robotsFixture: Column =
+    concat(
+    lit("# graft robots fixture\nUser-agent: badbot\nDisallow: /\n\n" +
+      "User-agent: *\nDisallow: /private/\n"),
+    when(col("k") % 4 === 0, lit("Disallow: /doc/\n"))
+      .when(col("k") % 4 === 1, lit("Disallow: /doc/1\nAllow: /doc/12\n"))
+      .when(col("k") % 4 === 2, lit("Allow: /doc/\n"))
+      .otherwise(lit("")))
+
+  /** The Gopher gate's kept docs of `deduped` (doc_id, text), with
+    * their lang from `docs`. */
+  private def gopherGated(deduped: DataFrame, docs: DataFrame): DataFrame =
+    TextQuality.gopherQualityGate(deduped)
+      .where(col("keep"))
+      .join(deduped, Seq("doc_id"))
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+      .select(col("doc_id"), col("lang"), col("text"))
+
+  /** The PNG media fixture plus a nearest-neighbor 32x24 rescale of
+    * every 4th image under media_id + 1000000 (media_id, content). */
+  private def pngWithResized(s: SparkSession, d: String): DataFrame = {
+    val orig = Multimodal.pngMediaFromDocs(t(s, d).documents)
+      .select(col("media_id"), col("content"))
+    val variants = Multimodal
+      .resizeImage(orig.where(col("media_id") % 4 === 0), 32, 24)
+      .select((col("media_id") + 1000000L).as("media_id"), col("content"))
+    orig.unionByName(variants)
+  }
 }

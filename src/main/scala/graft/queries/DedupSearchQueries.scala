@@ -1,7 +1,8 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.plans.Lineage.TruncateOps
@@ -9,12 +10,11 @@ import graft.QuerySpec.{Q, RowsOnly}
 import graft.SparkEntry._
 import graft.queries.Twins._
 
-/** LLM-pipeline operators, part 1: exact and near-duplicate detection,
+/** LLM-pipeline operators (SURVEY.md §2.11), part 1: exact and near-duplicate detection,
   * retrieval and ranking, fuzzy name matching, entity resolution and
   * MinHash/SimHash. */
 object DedupSearchQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M3: LLM-pipeline operators (SURVEY.md §2.11) ----
     Q("dedup_exact", (s, d) => Dedup.exactGroups(t(s, d).documents).orderBy("keep_id"))(
       "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents GROUP BY text ORDER BY keep_id"),
     Q("dedup_hash", (s, d) => Dedup.hashGroups(t(s, d).documents).orderBy("h"))(
@@ -39,15 +39,7 @@ object DedupSearchQueries {
       // stop-shingle cap mirrored from Dedup.DefaultMaxDf: shingles with
       // document frequency > 10 are dropped from intersections AND set
       // sizes on both sides (a no-op at sf0.01, where max df = 7)
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
+      s"""$RareShingleCtes
         | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
         |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
         | sym AS (SELECT doc_a AS doc_id, doc_b AS other_id, jaccard FROM j
@@ -76,12 +68,7 @@ object DedupSearchQueries {
       Dedup.winnowingNearDups(t(s, d).documents).orderBy("doc_a", "doc_b"))(
       // the match step off the same selection chain: distinct (doc, fp),
       // df-capped at 50 (the stop-shingle posture), pairs sharing >= 2
-      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
-         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
+      s"""$WinnowFpCtes
          | rare AS (SELECT fp FROM f GROUP BY fp HAVING count(*) <= 50),
          | c AS (SELECT f.doc_id, f.fp FROM f JOIN rare USING (fp))
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
@@ -113,15 +100,7 @@ object DedupSearchQueries {
     })(
       // the jaccard pair chain joined to a threshold relation; the
       // quotient is the same long/long double division on both sides
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
+      s"""$RareShingleCtes
         | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
         |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
         | th AS (SELECT unnest([0.02, 0.05, 0.1, 0.5, 0.9]) AS threshold),
@@ -173,12 +152,7 @@ object DedupSearchQueries {
     // caught by the detection guarantee, batch mates by the lower-id
     // rule — the twin unrolls the 4 batch admissions
     Q("streaming_winnowing_ingest", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d)
       val fpDir = java.nio.file.Files.createTempDirectory("graft-winnow-store").toString
       val out = java.nio.file.Files.createTempDirectory("graft-winnow-out").toString
       val admitted = graft.streaming.IngestPipeline
@@ -203,12 +177,7 @@ object DedupSearchQueries {
         s""" a$b AS (SELECT doc_id FROM dd WHERE b = $b
            |   AND doc_id NOT IN (SELECT d FROM cand WHERE eb = db AND db = $b)$vsStore)""".stripMargin
       }
-      s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
-         | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
-         | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
-         | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
-         | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
-         | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),
+      s"""$WinnowFpCtes
          | pc AS (SELECT CAST(max(doc_id) AS BIGINT) // 4 + 1 AS per FROM documents),
          | fb AS (SELECT doc_id, fp, doc_id // (SELECT per FROM pc) AS b FROM f),
          | rare AS (SELECT b, fp FROM fb GROUP BY b, fp HAVING count(*) <= 50),
@@ -237,15 +206,7 @@ object DedupSearchQueries {
       // same shingle/df-cap CTEs as near_dup_jaccard, then the DIRECTED
       // containment projection: inter over the OWNING side's set size,
       // rounded 6 dp before the >= cut
-      """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-        | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-        | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-        | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-        | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-        | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |            GROUP BY a.doc_id, b.doc_id),
+      s"""$RareShingleCtes
         | dir AS (SELECT i.doc_a AS doc_id, i.doc_b AS other_id, i.inter, ca.n_sh AS n_own
         |          FROM inter i JOIN cnt ca ON ca.doc_id = i.doc_a
         |          UNION ALL
@@ -383,16 +344,9 @@ object DedupSearchQueries {
     // rankings — Σ 1/(60+rank), the standard-constant RRF; hits found
     // by only one ranker keep their single term via the outer join
     Q("rrf_fusion", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
-      val ra = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
-        .withColumn("r_bm",
-          row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r_bm"))
-      val rb = Retrieval.tfidfQueryTopK(docs, queryId = 0L, k = 20, dim = 64)
-        .withColumn("r_tf",
-          row_number().over(Window.orderBy(desc("cos"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r_tf"))
+      val ra = bm25Ranks(docs, "r_bm")
+      val rb = tfidfRanks(docs)
       ra.join(rb, Seq("doc_id"), "full_outer")
         .select(col("doc_id"), col("r_bm"), col("r_tf"),
           round(coalesce(lit(1.0) / (lit(60.0) + col("r_bm").cast("double")), lit(0.0))
@@ -403,10 +357,7 @@ object DedupSearchQueries {
     })(
       // rank fusion over the two twins verbatim as subqueries: RRF =
       // Σ 1/(60+rank), each term one division, missing rank → 0
-      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
-         |            FROM ($bm25TwinSql) z1),
-         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
-         |        FROM ($tfidfTopkTwin) z2),
+      s"""$RankerRanksCtes
          | f AS (SELECT coalesce(ra.doc_id, rb.doc_id) AS doc_id, ra.r_bm, rb.r_tf
          |        FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id)
          |SELECT doc_id, r_bm, r_tf,
@@ -418,12 +369,8 @@ object DedupSearchQueries {
     // MRR — the numbers that decide whether BM25 constants or the
     // df cap need touching, all exact integers + single divisions
     Q("retrieval_eval", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
-      val ranked = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
-        .withColumn("r",
-          row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r"))
+      val ranked = bm25Ranks(docs, "r")
       val rel = bm25RelevanceSet(docs)
       val nRel = rel.agg(count(lit(1)).as("n_rel"))
       ranked.join(rel, "doc_id")
@@ -462,7 +409,6 @@ object DedupSearchQueries {
     // k-bounded ranked relation; positives = the same all-terms
     // relevance set
     Q("hard_negative_mining", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val ranked = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
         .withColumn("neg_rank",
@@ -495,13 +441,9 @@ object DedupSearchQueries {
     // gain·w terms are DECIMAL-summed, and the final nDCG is one
     // division of two such sums
     Q("ndcg_eval", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dec = org.apache.spark.sql.types.DecimalType(38, 12)
       val docs = t(s, d).documents
-      val ranked = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
-        .withColumn("r",
-          row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r"))
+      val ranked = bm25Ranks(docs, "r")
       val graded = docs.select(col("doc_id"),
           TextOps.cleanTokens(col("text")).as("ws"))
         .select(col("doc_id"),
@@ -564,16 +506,9 @@ object DedupSearchQueries {
     // High overlap + low footrule means RRF adds nothing; disjoint
     // lists mean one ranker is broken or they see different signals
     Q("ranker_agreement", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
-      val ra = Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
-        .withColumn("r_bm",
-          row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r_bm"))
-      val rb = Retrieval.tfidfQueryTopK(docs, queryId = 0L, k = 20, dim = 64)
-        .withColumn("r_tf",
-          row_number().over(Window.orderBy(desc("cos"), asc("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("r_tf"))
+      val ra = bm25Ranks(docs, "r_bm")
+      val rb = tfidfRanks(docs)
       val na = ra.agg(count(lit(1)).as("na"))
       val nb = rb.agg(count(lit(1)).as("nb"))
       ra.join(rb, "doc_id")
@@ -587,10 +522,7 @@ object DedupSearchQueries {
     })(
       // both ranker twins embedded verbatim (the rrf_fusion device), so
       // agreement numbers can never drift from the rankings they measure
-      s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
-         |            FROM ($bm25TwinSql) z1),
-         | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
-         |        FROM ($tfidfTopkTwin) z2),
+      s"""$RankerRanksCtes
          | j AS (SELECT ra.doc_id, r_bm, r_tf FROM ra JOIN rb USING (doc_id)),
          | m AS (SELECT (SELECT count(*) FROM ra) AS na, (SELECT count(*) FROM rb) AS nb,
          |        count(*) AS n_overlap, coalesce(sum(abs(r_bm - r_tf)), 0) AS footrule FROM j)
@@ -669,10 +601,7 @@ object DedupSearchQueries {
     // Damerau-Levenshtein over the same prefix blocks — exact integer
     // distances, swap-typo pairs plain levenshtein over-penalizes
     Q("dl_name_pairs", (s, d) => {
-      val names = t(s, d).part.groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
-        .select(col("id"), col("p_name").as("s"), substring(col("p_name"), 1, 3).as("blk"))
-      names.as("a").join(names.as("b"),
-          col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
+      blockedNamePairs(s, d)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
           graft.functions.DamerauLevenshtein.damerauLevenshtein(col("a.s"), col("b.s"))
             .cast("long").as("dl"))
@@ -691,10 +620,7 @@ object DedupSearchQueries {
     // block shares) — raw doubles compared, since the kernel mirrors
     // DuckDB's RapidFuzz implementation operation-for-operation
     Q("jw_name_match", (s, d) => {
-      val names = t(s, d).part.groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
-        .select(col("id"), col("p_name").as("s"), substring(col("p_name"), 1, 3).as("blk"))
-      names.as("a").join(names.as("b"),
-          col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
+      blockedNamePairs(s, d)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
           graft.functions.JaroWinkler.jaroWinkler(col("a.s"), col("b.s")).as("jw"))
         .where(col("jw") >= 0.88)
@@ -819,7 +745,6 @@ object DedupSearchQueries {
     // near-dup family (content-hash keyed) — the corpus keeps ONE
     // expected copy per family instead of rewarding replication
     Q("dedup_weighted_sample", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d).documents
       val pairs = Dedup.jaccardPairs(docs).where(col("jaccard") >= 0.3)
       Dedup.nearDupClusters(pairs, docs)
@@ -866,7 +791,7 @@ object DedupSearchQueries {
           explode(filter(split(col("text"), ""), c => length(c) > 0)).as("ch"))
         .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("n"))
         .withColumn("tot", sum(col("n")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))))
+          Window.partitionBy(col("doc_id"))))
         .withColumn("p", col("n").cast("double") / col("tot").cast("double"))
         .withColumn("h_term", round(col("p") * -log(col("p")), 9).cast("decimal(38,9)"))
         .groupBy(col("doc_id"))
@@ -1083,15 +1008,7 @@ object DedupSearchQueries {
     * min-label closure), shared by `dedup_clusters` and
     * `cluster_best_pick`. */
   private lazy val dedupClustersCtes: String =
-    """WITH RECURSIVE toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
-      | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
-      | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
-      | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
-      | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
-      | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-      |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |            GROUP BY a.doc_id, b.doc_id),
+    s"""${RareShingleCtes.replaceFirst("WITH ", "WITH RECURSIVE ")}
       | j AS (SELECT doc_a, doc_b, inter / (ca.n_sh + cb.n_sh - inter) AS jaccard
       |        FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b),
       | e AS (SELECT doc_a AS src, doc_b AS dst FROM j WHERE jaccard >= 0.3
@@ -1102,17 +1019,6 @@ object DedupSearchQueries {
       |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.doc_id
       | )""".stripMargin
 
-  /** The minhash_near_dups twin: Spark's ENTIRE MinHash+LSH pipeline
-    * replayed in DuckDB — shingle xxhash64 ids (xxh64WordCtes), the 32
-    * a·h+b wrapping permutations with SIGNED-long minimums (Spark's
-    * min() orders two's-complement longs), per-band key = Spark
-    * XXH64.hashInt(band, 42) chained through four XXH64.hashLong
-    * element rounds (each with its own avalanche — the multi-input
-    * xxhash64 semantics), co-band candidates, and the df-capped exact
-    * Jaccard verify. Every hash step runs as a fine-grained CTE stage
-    * (intermediates are COLUMNS — a nested expression would duplicate
-    * subtrees exponentially), with MATERIALIZED hints on the reused
-    * relations so the planner never inlines the 60-stage chain. */
   /** The shared shingle → signature → band-key prefix, built once. */
   private lazy val minhashPrefixSql: String = {
     def sm(x0: Long): Long = {
@@ -1155,6 +1061,17 @@ object DedupSearchQueries {
     minhashChainPrefix(sigAggs, sigList, r, bands, stages.mkString(",\n"), prev)
   }
 
+  /** The minhash_near_dups twin: Spark's ENTIRE MinHash+LSH pipeline
+    * replayed in DuckDB — shingle xxhash64 ids (xxh64WordCtes), the 32
+    * a·h+b wrapping permutations with SIGNED-long minimums (Spark's
+    * min() orders two's-complement longs), per-band key = Spark
+    * XXH64.hashInt(band, 42) chained through four XXH64.hashLong
+    * element rounds (each with its own avalanche — the multi-input
+    * xxhash64 semantics), co-band candidates, and the df-capped exact
+    * Jaccard verify. Every hash step runs as a fine-grained CTE stage
+    * (intermediates are COLUMNS — a nested expression would duplicate
+    * subtrees exponentially), with MATERIALIZED hints on the reused
+    * relations so the planner never inlines the 60-stage chain. */
   private def minhashNearDupsTwinSql: String =
     s"""WITH $minhashPrefixSql,
        | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -1310,5 +1227,62 @@ object DedupSearchQueries {
        |$steps
        |${(1 to 5).map(i => s"SELECT CAST($i AS BIGINT) AS rank, doc_id, score FROM p$i").mkString("\nUNION ALL\n")}
        |ORDER BY rank""".stripMargin
+  }
+
+  /** Whitespace-token 3-shingles with the stop-shingle cap mirrored
+    * from Dedup.DefaultMaxDf (document frequency > 10 dropped from
+    * intersections AND set sizes), per-doc set sizes (`cnt`) and the
+    * pairwise intersections (`inter`). */
+  private val RareShingleCtes: String =
+    """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\f\r]+'), x -> length(x) > 0) AS l FROM documents),
+      | pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 3),
+      | sh0 AS (SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle FROM pos),
+      | rare AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= 10),
+      | sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN rare USING (shingle)),
+      | cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      | inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+      |            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |            GROUP BY a.doc_id, b.doc_id),""".stripMargin
+
+  /** The BM25 top-20 for Bm25Terms as (doc_id, `rank`): rank 1 is the
+    * best score, doc_id breaks ties. */
+  private def bm25Ranks(docs: DataFrame, rank: String): DataFrame =
+    Retrieval.bm25TopK(docs, Bm25Terms, k = 20, maxDf = RetrievalMaxDf)
+      .withColumn(rank,
+        row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
+      .select(col("doc_id"), col(rank))
+
+  /** The TF-IDF top-20 for query 0 as (doc_id, r_tf), ranked like
+    * [[bm25Ranks]]. */
+  private def tfidfRanks(docs: DataFrame): DataFrame =
+    Retrieval.tfidfQueryTopK(docs, queryId = 0L, k = 20, dim = 64)
+      .withColumn("r_tf",
+        row_number().over(Window.orderBy(desc("cos"), asc("doc_id"))).cast("long"))
+      .select(col("doc_id"), col("r_tf"))
+
+  /** Both ranker twins as rank relations `ra` (doc_id, r_bm) and `rb`
+    * (doc_id, r_tf), each twin embedded verbatim. */
+  private lazy val RankerRanksCtes: String =
+    s"""WITH ra AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_bm
+       |            FROM ($bm25TwinSql) z1),
+       | rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_tf
+       |        FROM ($tfidfTopkTwin) z2),""".stripMargin
+
+  /** Winnowing fingerprints (`f`: doc_id, fp): md5 3-shingles from
+    * docs of >= 6 tokens, the rightmost min per 4-wide window. */
+  private lazy val WinnowFpCtes: String =
+    s"""WITH toks AS (SELECT doc_id, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS l FROM documents),
+       | g AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i FROM toks WHERE len(l) >= 6),
+       | gr AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS gpos, md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS m FROM g),
+       | pk AS (SELECT doc_id, gpos, ${HexInt40("m")} * 1048576 + (1048575 - gpos) AS pk FROM gr),
+       | sel AS (SELECT doc_id, gpos, min(pk) OVER (PARTITION BY doc_id ORDER BY gpos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel FROM pk),
+       | f AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp FROM sel WHERE gpos >= 3),""".stripMargin
+
+  /** Distinct part names (id = min partkey, s = name) self-joined
+    * within their 3-char prefix block, id_a < id_b; columns a.* / b.*. */
+  private def blockedNamePairs(s: SparkSession, d: String): DataFrame = {
+    val names = t(s, d).part.groupBy(col("p_name")).agg(min(col("p_partkey")).as("id"))
+      .select(col("id"), col("p_name").as("s"), substring(col("p_name"), 1, 3).as("blk"))
+    names.as("a").join(names.as("b"), col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.QuerySpec.Q
@@ -126,24 +127,11 @@ object EmbeddingQueries {
     })(
       // the margin math replayed: rounded(9)-DECIMAL cosines, k-NN mass
       // sums, ONE division per margin rounded(6) before every rank
-      """WITH s AS (SELECT vec_id AS s_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 0),
+      s"""WITH s AS (SELECT vec_id AS s_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 0),
         | t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id % 2 = 1),
         | sims AS (SELECT s_id, t_id,
         |   CAST(round(list_cosine_similarity(s.e, t.e), 9) AS DECIMAL(18,9)) AS sim FROM s CROSS JOIN t),
-        | ks AS (SELECT s_id, sum(sim) AS degs FROM
-        |   (SELECT s_id, sim, row_number() OVER (PARTITION BY s_id ORDER BY sim DESC, t_id) AS rn FROM sims)
-        |   WHERE rn <= 4 GROUP BY 1),
-        | kt AS (SELECT t_id, sum(sim) AS degt FROM
-        |   (SELECT t_id, sim, row_number() OVER (PARTITION BY t_id ORDER BY sim DESC, s_id) AS rn FROM sims)
-        |   WHERE rn <= 4 GROUP BY 1),
-        | m AS (SELECT s_id, t_id,
-        |   round((CAST(sim AS DOUBLE) * 2.0) / (CAST(ks.degs + kt.degt AS DOUBLE) / 4), 6) AS margin
-        |   FROM sims JOIN ks USING (s_id) JOIN kt USING (t_id)),
-        | fwd AS (SELECT s_id, t_id, margin, row_number() OVER (PARTITION BY s_id ORDER BY margin DESC, t_id) AS rns FROM m),
-        | bwd AS (SELECT s_id, t_id, row_number() OVER (PARTITION BY t_id ORDER BY margin DESC, s_id) AS rnt FROM m)
-        |SELECT f.s_id, f.t_id, f.margin, (b.rnt = 1) AS mutual
-        |FROM fwd f JOIN bwd b USING (s_id, t_id)
-        |WHERE f.rns = 1 AND f.margin >= 1.05 ORDER BY f.s_id""".stripMargin),
+        |$MarginMineSql""".stripMargin),
     // the 100-TB margin miner: hyperplane-LSH shortlist candidates
     // into the IDENTICAL margin chain — the twin recomputes the same
     // splitmix plane geometry (literals inlined by planeSql), so the
@@ -248,26 +236,8 @@ object EmbeddingQueries {
       // target ('en') over the union vocab, per-word Δ of rounded(12)
       // lns subtracted as DECIMALs, per-doc DECIMAL sums, rank on the
       // EXACT decimal with doc_id tie-break, integer ceil for the cut
-      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
-         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
-         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
-         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
-         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
-         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
-         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
-         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
-         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
-         | delta AS (SELECT word,
-         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
-         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
-         |   FROM vocab CROSS JOIN sizes),
-         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
-         |   FROM pw JOIN delta USING (word) GROUP BY 1),
-         | nn AS (SELECT count(*) AS n FROM scored),
-         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
-         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin),
+      s"""$DsirScoredCtes,
+         |$DsirRankSql""".stripMargin),
     // the DSIR memory-bound variant (the paper's actual posture): the
     // SAME importance-resampling selection with the model keyed on
     // xxhash64(word) % 1024 — the scorer's broadcast relation is
@@ -286,11 +256,7 @@ object EmbeddingQueries {
       // Spark's pmod semantics), smoothing denominator = OCCUPIED
       // bucket count, everything else byte-identical to the exact twin
       s"""$hashedDsirScoredCtes,
-         | nn AS (SELECT count(*) AS n FROM scored),
-         | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
-         |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
-         |  rk <= (nn.n * 250 + 999) // 1000 AS selected
-         |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin),
+         |$DsirRankSql""".stripMargin),
     // the hashed gate COMPOSED into a build (VERDICT r13 #6): the
     // m-bounded model — the 100 TB shape, broadcast ≤ m rows at any
     // vocabulary — drives a real curation chain: select on the hashed
@@ -428,17 +394,8 @@ object EmbeddingQueries {
       // stride device): the gate needs a recall estimate, not an
       // N x N all-pairs truth — unbounded, bruteForceTopK(e, e) is
       // the quadratic shape plan_audit exists to flag (r14 review)
-      val queries = e.where(col("vec_id") % 50 === 0)
-      val ivf = Similarity.ivfTopK(e).where(col("q_id") % 50 === 0)
-        .select(col("q_id"), col("c_id"))
-      val exact = Similarity.bruteForceTopK(e, queries).select(col("q_id"), col("c_id"))
-      val hits = ivf.join(exact, Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(coalesce(col("hits"), lit(0L)).as("hits"))
-        .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
-        .orderBy("hits")
+      recallHistogram(e, Similarity.ivfTopK(e).where(col("q_id") % 50 === 0)
+        .select(col("q_id"), col("c_id")))
     })(
       // the ANN quality gate: recall@10 of the IVF ranking against the
       // exact cosine truth, reported as the hits histogram (0..10 —
@@ -464,46 +421,17 @@ object EmbeddingQueries {
     // restored by the left join
     Q("ivf_pq_recall_eval", (s, d) => {
       val e = t(s, d).embeddings
-      val queries = e.where(col("vec_id") % 50 === 0)
-      val approx = Similarity.ivfPqTopK(e).select(col("q_id"), col("c_id"))
-      val exact = Similarity.bruteForceTopK(e, queries).select(col("q_id"), col("c_id"))
-      val hits = approx.join(exact, Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(coalesce(col("hits"), lit(0L)).as("hits"))
-        .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
-        .orderBy("hits")
+      recallHistogram(e, Similarity.ivfPqTopK(e).select(col("q_id"), col("c_id")))
     })(
       // recall gate for the IVF×PQ funnel: the hash-proven ivf_pq_topk
       // twin as a subquery, intersected with the exact cosine truth
-      s"""WITH apx AS (SELECT q_id, c_id FROM (${ivfPqQueryTwinSql("", "", "vec_id % 50 = 0")}) z),
-         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
-         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
-         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
-         | hits AS (SELECT a.q_id, count(*) AS hits
-         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
-         |          GROUP BY 1),
-         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
-         |FROM allq LEFT JOIN hits h USING (q_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin),
+      recallTwinSql(ivfPqQueryTwinSql("", "", "vec_id % 50 = 0"))),
     // and for the hyperplane-LSH ranking — same bounded query sample
     // (the exact truth is never an unbounded N×N brute force)
     Q("lsh_recall_eval", (s, d) => {
       val e = t(s, d).embeddings
-      val queries = e.where(col("vec_id") % 50 === 0)
-      val approx = Similarity.lshTopK(e).where(col("q_id") % 50 === 0)
-        .select(col("q_id"), col("c_id"))
-      val exact = Similarity.bruteForceTopK(e, queries).select(col("q_id"), col("c_id"))
-      val hits = approx.join(exact, Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("q_id"))
-        .join(hits, Seq("q_id"), "left")
-        .select(coalesce(col("hits"), lit(0L)).as("hits"))
-        .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
-        .orderBy("hits")
+      recallHistogram(e, Similarity.lshTopK(e).where(col("q_id") % 50 === 0)
+        .select(col("q_id"), col("c_id")))
     }) {
       // recall gate for the hyperplane-LSH ranking: the hash-proven
       // lsh_topk twin filtered to the bounded query sample
@@ -515,18 +443,7 @@ object EmbeddingQueries {
            |        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
            | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)
            |SELECT q_id, c_id FROM r WHERE rank <= 10 AND q_id % 50 = 0""".stripMargin
-      s"""WITH apx AS (SELECT q_id, c_id FROM ($lshTwin) z),
-         | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
-         |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
-         | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
-         | hits AS (SELECT a.q_id, count(*) AS hits
-         |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
-         |          GROUP BY 1),
-         | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
-         |FROM allq LEFT JOIN hits h USING (q_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin
+      recallTwinSql(lshTwin)
     },
     // product-quantization ANN (rows-only: approximate by design;
     // recall vs brute force asserted in SimilaritySpec)
@@ -707,10 +624,6 @@ object EmbeddingQueries {
         |SELECT vec_id, cell, vec_id NOT IN (SELECT vec_id FROM drops) AS kept
         |FROM asg ORDER BY vec_id""".stripMargin))
 
-  /** One BM25 twin serves both the recompute path (`bm25_topk`) and
-    * the persisted-index path (`bm25_from_index`): the index stores
-    * exactly the relations this SQL derives, so lifecycle parity is
-    * proven by both queries hashing against the same oracle. */
   /** The IVF candidate-and-rank CTE chain — shared by the ivf_topk
     * twin and the ann_recall_eval twin, ending at
     * `r(q_id, c_id, sim, rank)` over `v(vec_id, e)`. */
@@ -726,13 +639,6 @@ object EmbeddingQueries {
       |       FROM cand JOIN v q ON q.vec_id = cand.q_id JOIN v c ON c.vec_id = cand.c_id),
       | r AS (SELECT q_id, c_id, sim, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM s)""".stripMargin
 
-  /** The assign-and-energy CTE chain shared by the ANN drift twins:
-    * nearest stride centroid by cosine argmax (raw-double compare,
-    * min-cell tie-break — the cosine_topk device) + per-cell
-    * residual energies as rounded(9) DECIMAL sums with ONE final
-    * division (cellResidualEnergy's own discipline). `vecs` must
-    * expose (vec_id, embedding); `cents` (cell, ce). Emits CTEs
-    * `${p}sims`/`${p}best`/`${p}e`/`${p}agg`. */
   /** Sign-LSH bucket key as DuckDB SQL over list column `eCol`
     * (DOUBLE[]): bit p of table `tableId`'s key is the sign of
     * <e, plane>, with the plane constants INLINED by
@@ -764,24 +670,18 @@ object EmbeddingQueries {
        | sims AS (SELECT s_id, t_id,
        |   CAST(round(list_cosine_similarity(s0.e, t0.e), 9) AS DECIMAL(18,9)) AS sim
        |   FROM cand JOIN s0 USING (s_id) JOIN t0 USING (t_id)),
-       | ks AS (SELECT s_id, sum(sim) AS degs FROM
-       |   (SELECT s_id, sim, row_number() OVER (PARTITION BY s_id ORDER BY sim DESC, t_id) AS rn FROM sims)
-       |   WHERE rn <= 4 GROUP BY 1),
-       | kt AS (SELECT t_id, sum(sim) AS degt FROM
-       |   (SELECT t_id, sim, row_number() OVER (PARTITION BY t_id ORDER BY sim DESC, s_id) AS rn FROM sims)
-       |   WHERE rn <= 4 GROUP BY 1),
-       | m AS (SELECT s_id, t_id,
-       |   round((CAST(sim AS DOUBLE) * 2.0) / (CAST(ks.degs + kt.degt AS DOUBLE) / 4), 6) AS margin
-       |   FROM sims JOIN ks USING (s_id) JOIN kt USING (t_id)),
-       | fwd AS (SELECT s_id, t_id, margin, row_number() OVER (PARTITION BY s_id ORDER BY margin DESC, t_id) AS rns FROM m),
-       | bwd AS (SELECT s_id, t_id, row_number() OVER (PARTITION BY t_id ORDER BY margin DESC, s_id) AS rnt FROM m)
-       |SELECT f.s_id, f.t_id, f.margin, (b.rnt = 1) AS mutual
-       |FROM fwd f JOIN bwd b USING (s_id, t_id)
-       |WHERE f.rns = 1 AND f.margin >= 1.05 ORDER BY f.s_id""".stripMargin
+       |$MarginMineSql""".stripMargin
   }
 
   private lazy val coarseGuard: String = coarseGuardOn("embeddings")
 
+  /** The assign-and-energy CTE chain shared by the ANN drift twins:
+    * nearest stride centroid by cosine argmax (raw-double compare,
+    * min-cell tie-break — the cosine_topk device) + per-cell
+    * residual energies as rounded(9) DECIMAL sums with ONE final
+    * division (cellResidualEnergy's own discipline). `vecs` must
+    * expose (vec_id, embedding); `cents` (cell, ce). Emits CTEs
+    * `${p}sims`/`${p}best`/`${p}e`/`${p}agg`. */
   private def annEnergySql(p: String, vecs: String, cents: String): String =
     s"""${p}sims AS (SELECT v.vec_id, c.cell,
        |   list_cosine_similarity(CAST(v.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) AS sim
@@ -825,4 +725,63 @@ object EmbeddingQueries {
        | $steps,
        | ${assignCte("af", s"cents$iters")}""".stripMargin
   }
+
+  /** DSIR's cut over `scored`: rank on the exact decimal score with a
+    * doc_id tie-break, keep the top 25% (integer ceil). */
+  private val DsirRankSql: String =
+    """ nn AS (SELECT count(*) AS n FROM scored),
+      | r AS (SELECT doc_id, n_tokens, sl, row_number() OVER (ORDER BY sl DESC, doc_id) AS rk FROM scored)
+      |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
+      |  rk <= (nn.n * 250 + 999) // 1000 AS selected
+      |FROM r CROSS JOIN nn ORDER BY doc_id""".stripMargin
+
+  /** The recall@10 histogram of an approximate top-10 `approx`
+    * (q_id, c_id) against the exact cosine truth, over the query sample
+    * vec_id % 50 == 0: (hits, n_queries), hits 0..10, queries with no
+    * hit restored at 0 by the left join. */
+  private def recallHistogram(e: DataFrame, approx: DataFrame): DataFrame = {
+    val queries = e.where(col("vec_id") % 50 === 0)
+    val exact = Similarity.bruteForceTopK(e, queries).select(col("q_id"), col("c_id"))
+    val hits = approx.join(exact, Seq("q_id", "c_id"))
+      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
+    queries.select(col("vec_id").as("q_id"))
+      .join(hits, Seq("q_id"), "left")
+      .select(coalesce(col("hits"), lit(0L)).as("hits"))
+      .groupBy(col("hits")).agg(count(lit(1)).as("n_queries"))
+      .orderBy("hits")
+  }
+
+  /** [[recallHistogram]]'s twin over an approximate ranking's twin
+    * `apxSql` (q_id, c_id). */
+  private def recallTwinSql(apxSql: String): String =
+    s"""WITH apx AS (SELECT q_id, c_id FROM ($apxSql) z),
+       | ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+       | exs AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, list_cosine_similarity(q.e, c.e) AS sim
+       |        FROM ev q JOIN ev c ON q.vec_id <> c.vec_id WHERE q.vec_id % 50 = 0),
+       | exr AS (SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank FROM exs),
+       | hits AS (SELECT a.q_id, count(*) AS hits
+       |          FROM apx a JOIN (SELECT q_id, c_id FROM exr WHERE rank <= 10) b USING (q_id, c_id)
+       |          GROUP BY 1),
+       | allq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id % 50 = 0)
+       |SELECT CAST(coalesce(h.hits, 0) AS BIGINT) AS hits, count(*) AS n_queries
+       |FROM allq LEFT JOIN hits h USING (q_id)
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Margin mining over `sims` (s_id, t_id, sim): k=4 neighbourhood
+    * masses, one rounded division per margin, mutual best pairs. */
+  private val MarginMineSql: String =
+    """ ks AS (SELECT s_id, sum(sim) AS degs FROM
+      |   (SELECT s_id, sim, row_number() OVER (PARTITION BY s_id ORDER BY sim DESC, t_id) AS rn FROM sims)
+      |   WHERE rn <= 4 GROUP BY 1),
+      | kt AS (SELECT t_id, sum(sim) AS degt FROM
+      |   (SELECT t_id, sim, row_number() OVER (PARTITION BY t_id ORDER BY sim DESC, s_id) AS rn FROM sims)
+      |   WHERE rn <= 4 GROUP BY 1),
+      | m AS (SELECT s_id, t_id,
+      |   round((CAST(sim AS DOUBLE) * 2.0) / (CAST(ks.degs + kt.degt AS DOUBLE) / 4), 6) AS margin
+      |   FROM sims JOIN ks USING (s_id) JOIN kt USING (t_id)),
+      | fwd AS (SELECT s_id, t_id, margin, row_number() OVER (PARTITION BY s_id ORDER BY margin DESC, t_id) AS rns FROM m),
+      | bwd AS (SELECT s_id, t_id, row_number() OVER (PARTITION BY t_id ORDER BY margin DESC, s_id) AS rnt FROM m)
+      |SELECT f.s_id, f.t_id, f.margin, (b.rnt = 1) AS mutual
+      |FROM fwd f JOIN bwd b USING (s_id, t_id)
+      |WHERE f.rns = 1 AND f.margin >= 1.05 ORDER BY f.s_id""".stripMargin
 }

@@ -9,7 +9,6 @@ import graft.SparkEntry._
 /** Multimodal plumbing: binary columns, with the decode layer stubbed. */
 object MultimodalQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M3: multimodal plumbing (binary columns; decode layer stubbed) ----
     Q("media_features", (s, d) =>
       Multimodal.featureBuckets(Multimodal.fakeMediaFromDocs(t(s, d).documents))
         .orderBy("media_id", "bucket"))(

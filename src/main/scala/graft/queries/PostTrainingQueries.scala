@@ -19,7 +19,6 @@ object PostTrainingQueries {
     // rebuilds the turn relation closed-form, so the hash proves the
     // parser grammar end-to-end
     Q("sft_parse_turns", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents))
         .orderBy("conv_id", "turn_idx")
@@ -36,7 +35,6 @@ object PostTrainingQueries {
     // via its own lag window over the rebuilt turns, so the audit
     // logic is proven against an independent implementation
     Q("sft_conversation_audit", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.conversationAudit(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)))
         .orderBy("conv_id")
@@ -72,7 +70,6 @@ object PostTrainingQueries {
     // singletons — assistant content keys on doc_id%41 so real
     // cross-conversation dup groups exist at every scale factor
     Q("sft_response_dedup", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.dedupByResponse(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)))
         .orderBy("conv_id")
@@ -97,7 +94,6 @@ object PostTrainingQueries {
     // TeraSort above), bin = floor(prefix/budget); the twin replays
     // the same arithmetic with a SQL window, proving the plan exact
     Q("sft_pack_plan", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.packPlan(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("bin")
@@ -107,19 +103,13 @@ object PostTrainingQueries {
       s"""$SftTurnsCtes,
          | per AS (SELECT conv_id, CAST(sum((length(content) + 3) // 4) AS BIGINT) AS tokens
          |   FROM sft_turns GROUP BY conv_id),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
+         |$PackBinsSql""".stripMargin),
     // the trainer-facing span table: per turn, [tok_start, tok_end)
     // into the packed global token stream, sequence bin, and the
     // trainable flag (assistant turns train, user/system masked) —
     // exact integer prefix sums at both levels, twin replays both
     // windows in SQL
     Q("sft_loss_mask_spans", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.lossMaskSpans(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("conv_id", "turn_idx")
@@ -130,29 +120,13 @@ object PostTrainingQueries {
       s"""$SftTurnsCtes,
          | ltt AS (SELECT conv_id, turn_idx, role,
          |   CAST((length(content) + 3) // 4 AS BIGINT) AS turn_tokens FROM sft_turns),
-         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
-         |   FROM ltt GROUP BY conv_id),
-         | lpre AS (SELECT conv_id,
-         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |     - conv_tokens AS conv_start FROM lper),
-         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
-         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
-         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |     0) AS BIGINT) AS toff
-         |   FROM ltt t JOIN lpre p USING (conv_id))
-         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
-         | conv_start + toff AS tok_start,
-         | conv_start + toff + turn_tokens AS tok_end,
-         | role = 'assistant' AS trainable
-         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin),
+         |$SpanOffsetsSql""".stripMargin),
     // the SAME packing plan at REAL subword grain (VERDICT r16 missing
     // #4): conversation token loads from the frozen BPE artifact's
     // distinct-words applier instead of ceil(chars/4) — the plan a
     // trainer's actual tokenizer budget sees; twin composes the
     // recursive-CTE applier with the identical running-sum arithmetic
     Q("sft_pack_plan_bpe", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.packPlanBpe(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("bin")
@@ -161,64 +135,25 @@ object PostTrainingQueries {
       // shared recursive-CTE applier (wc built from TURN words), then
       // per-turn counts left-join back (empty-content turns pin 0) and
       // the SAME packing / two-level-window arithmetic runs over them
-      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
-         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
-         |   FROM (SELECT conv_id, turn_idx,
-         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
-         |     FROM sft_turns) t
-         |   WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
-         |$BpeApplyCte,
-         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
-         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
+      s"""$TurnBpeCtes
          | per AS (SELECT s.conv_id,
          |   CAST(sum(coalesce(t.bt, 0)) AS BIGINT) AS tokens
          |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)
          |   GROUP BY 1),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
+         |$PackBinsSql""".stripMargin),
     // the span table at BPE grain — offsets in real subword tokens,
     // empty-content turns spanning zero width but still present, spans
     // provably tiling (the twin's windows must reproduce every offset)
     Q("sft_loss_mask_spans_bpe", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.lossMaskSpansBpe(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 500L)
         .orderBy("conv_id", "turn_idx")
     })(
-      s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
-         | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
-         |   FROM (SELECT conv_id, turn_idx,
-         |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
-         |     FROM sft_turns) t
-         |   WHERE length(t.tok) > 0),
-         | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
-         |$BpeApplyCte,
-         | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
-         |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),
+      s"""$TurnBpeCtes
          | ltt AS (SELECT s.conv_id, s.turn_idx, s.role,
          |   CAST(coalesce(t.bt, 0) AS BIGINT) AS turn_tokens
          |   FROM sft_turns s LEFT JOIN twt t USING (conv_id, turn_idx)),
-         | lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
-         |   FROM ltt GROUP BY conv_id),
-         | lpre AS (SELECT conv_id,
-         |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |     - conv_tokens AS conv_start FROM lper),
-         | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
-         |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
-         |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |     0) AS BIGINT) AS toff
-         |   FROM ltt t JOIN lpre p USING (conv_id))
-         |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
-         | conv_start + toff AS tok_start,
-         | conv_start + toff + turn_tokens AS tok_end,
-         | role = 'assistant' AS trainable
-         |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin),
+         |$SpanOffsetsSql""".stripMargin),
     // tool-use turn integrity: call payload JSON validity, tool-name
     // extraction, arguments presence, registry membership (broadcast
     // equi-join), call/result pairing via one lead window — the
@@ -226,7 +161,6 @@ object PostTrainingQueries {
     // tools, and dropped result turns deterministically
     Q("tool_call_audit", (s, d) => {
       import s.implicits._
-      import graft.operators.PostTraining
       val registry = Seq("search", "calc", "fetch").toDF("tool")
       PostTraining.toolCallAudit(
           PostTraining.toolTurnsFromDocs(t(s, d).documents), registry)
@@ -260,7 +194,6 @@ object PostTrainingQueries {
     // json_keys machinery is the independent grader
     Q("tool_args_audit", (s, d) => {
       import s.implicits._
-      import graft.operators.PostTraining
       val registryArgs = Seq(("search", "q"), ("calc", "q"), ("fetch", "q"))
         .toDF("tool", "arg")
       PostTraining.toolArgsAudit(
@@ -298,7 +231,6 @@ object PostTrainingQueries {
     // token-budgeted training sequences — proving the stages compose
     // (the crawl_curation_e2e device applied to the SFT stage)
     Q("sft_admission_pack_e2e", (s, d) => {
-      import graft.operators.PostTraining
       val turns = PostTraining.parseTurns(
         PostTraining.renderTranscripts(t(s, d).documents))
       val admitted = PostTraining.conversationAudit(turns).where(col("ok"))
@@ -314,35 +246,20 @@ object PostTrainingQueries {
          |   lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
          |   FROM sft_turns),
          | aud AS (SELECT conv_id,
-         |   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
-         |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
-         |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
-         |        9223372036854775807), FALSE)
-         |    AND arg_max(role, turn_idx) = 'assistant'
-         |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
-         |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
-         |   FROM prevr GROUP BY conv_id),
-         | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
-         |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),
+         |$SftOkFpCtes
          | grp AS (SELECT resp_fp, min(conv_id) AS keeper FROM fp GROUP BY resp_fp),
          | adm AS (SELECT a.conv_id FROM aud a
          |   LEFT JOIN fp USING (conv_id) LEFT JOIN grp USING (resp_fp)
          |   WHERE a.ok AND (fp.resp_fp IS NULL OR a.conv_id = grp.keeper)),
          | per AS (SELECT t.conv_id, CAST(sum((length(t.content) + 3) // 4) AS BIGINT) AS tokens
          |   FROM sft_turns t JOIN adm USING (conv_id) GROUP BY t.conv_id),
-         | cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
-         |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
-         | CAST(sum(tokens) AS BIGINT) AS total_tokens,
-         | min(conv_id) AS first_conv, max(conv_id) AS last_conv
-         |FROM cums GROUP BY bin ORDER BY bin""".stripMargin),
+         |$PackBinsSql""".stripMargin),
     // code-LLM front door: fenced code blocks extracted with language
     // tags (codegen'd regexp_extract_all, Java∩RE2 grammar, zero
     // shuffle), the twin rebuilds every expected block CLOSED-FORM —
     // the hash proves the extractor, including that an unclosed
     // trailing fence matches nothing instead of swallowing the tail
     Q("markdown_code_blocks", (s, d) => {
-      import graft.operators.Markdown
       Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .orderBy("doc_id", "block_idx")
     })(
@@ -389,7 +306,6 @@ object PostTrainingQueries {
     // the %7/%13/%5-keyed fixture code collides across documents by
     // construction, so real dup groups exist at every scale factor
     Q("code_block_dedup", (s, d) => {
-      import graft.operators.Markdown
       Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .groupBy(col("lang_tag"), col("code"))
         .agg(count(lit(1)).as("n_copies"),
@@ -410,7 +326,6 @@ object PostTrainingQueries {
     // untouched), then the keyword-vote consistency screen must flag
     // exactly those; no-evidence blocks stay unflagged
     Q("code_lang_consistency", (s, d) => {
-      import graft.operators.Markdown
       val blocks = Markdown.extractCodeBlocks(Markdown.mdFromDocs(t(s, d).documents))
         .withColumn("lang_tag",
           when(col("doc_id") % 23 === 0 && col("lang_tag") === "python", "scala")
@@ -454,7 +369,6 @@ object PostTrainingQueries {
     // extractor (marks == 2·n_blocks exactly when every fence closes;
     // the %31 truncation class must read odd)
     Q("markdown_fence_audit", (s, d) => {
-      import graft.operators.Markdown
       Markdown.fenceAudit(Markdown.mdFromDocs(t(s, d).documents))
         .orderBy("doc_id")
     })(
@@ -480,7 +394,6 @@ object PostTrainingQueries {
     // holds — kept turns always a conversation suffix, never a split
     // turn; budget 12 actually truncates at fixture turn sizes
     Q("sft_context_truncation", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.truncateContext(PostTraining.parseTurns(
           PostTraining.renderTranscripts(t(s, d).documents)), budgetTokens = 12L)
         .orderBy("conv_id", "turn_idx")
@@ -510,7 +423,6 @@ object PostTrainingQueries {
     // a literal eval item, and the flag must land exactly on the
     // planted class — threshold semantics included (>= 2 shingles)
     Q("sft_prompt_decontamination", (s, d) => {
-      import graft.operators.PostTraining
       val turns = PostTraining.parseTurns(
         PostTraining.renderTranscripts(t(s, d).documents))
       val prompts = turns.where(col("role") === "user")
@@ -583,7 +495,6 @@ object PostTrainingQueries {
     // (chosen==rejected) pairs counted per group — the fixture
     // plants all three classes deterministically
     Q("preference_pair_audit", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.preferenceAudit(
           PostTraining.preferencePairsFromDocs(t(s, d).documents))
         .orderBy("prompt", "lo", "hi")
@@ -608,7 +519,6 @@ object PostTrainingQueries {
     // longer/shorter/tie win counts — the "chosen is just longer"
     // reward-hacking signal, engine-exact (no float averaging)
     Q("preference_length_bias", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.lengthBias(
           PostTraining.preferencePairsFromDocs(t(s, d).documents))
         .orderBy("bucket")
@@ -627,7 +537,6 @@ object PostTrainingQueries {
     // the triple fixture plants cycles on exactly the base%5==0
     // prompts whose docs cover all three vote classes
     Q("preference_cycle_audit", (s, d) => {
-      import graft.operators.PostTraining
       PostTraining.preferenceCycles(
           PostTraining.preferenceTriplesFromDocs(t(s, d).documents))
         .orderBy("prompt")
@@ -652,10 +561,7 @@ object PostTrainingQueries {
     // + the shared constant) and runs the same df-filter in SQL, so
     // the hash proves block extraction AND the frequency cut
     Q("paragraph_dedup", (s, d) => {
-      val pages = Html.pageFromDocs(t(s, d).documents)
-        .select(col("doc_id"), regexp_replace(col("html"), "<div>\n",
-          java.util.regex.Matcher.quoteReplacement("<div>\n" + Html.BoilerFixturePara))
-          .as("html"))
+      val pages = boilerplated(Html.pageFromDocs(t(s, d).documents))
       Dedup.paragraphDedup(Html.extractBlocks(pages)).orderBy("doc_id")
     })(
       // paragraph relation rebuilt closed-form (12-word slices + the
@@ -756,4 +662,50 @@ object PostTrainingQueries {
        |    FROM htd WHERE has2
        |  UNION ALL SELECT doc_id, CASE WHEN not1 THEN 1 ELSE 2 END, 1, 2, false,
        |    CAST(m3 AS VARCHAR) FROM htd WHERE has2)""".stripMargin
+
+  /** The packing plan's bins from `per` (conv_id, tokens): the running
+    * sum over the conv_id order and the exclusive-prefix bin
+    * arithmetic (500-token budget). */
+  private val PackBinsSql: String =
+    """ cums AS (SELECT conv_id, tokens, CAST(sum(tokens) OVER (ORDER BY conv_id
+      |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM per)
+      |SELECT CAST((cum - tokens) // 500 AS BIGINT) AS bin, count(*) AS n_convs,
+      | CAST(sum(tokens) AS BIGINT) AS total_tokens,
+      | min(conv_id) AS first_conv, max(conv_id) AS last_conv
+      |FROM cums GROUP BY bin ORDER BY bin""".stripMargin
+
+  /** The span table from `ltt` (conv_id, turn_idx, role, turn_tokens):
+    * both prefix-sum levels as SQL windows — global conversation starts
+    * over the conv_id order, turn offsets within each conversation. */
+  private val SpanOffsetsSql: String =
+    """ lper AS (SELECT conv_id, CAST(sum(turn_tokens) AS BIGINT) AS conv_tokens
+      |   FROM ltt GROUP BY conv_id),
+      | lpre AS (SELECT conv_id,
+      |   CAST(sum(conv_tokens) OVER (ORDER BY conv_id
+      |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |     - conv_tokens AS conv_start FROM lper),
+      | loffs AS (SELECT t.conv_id, t.turn_idx, t.role, t.turn_tokens, p.conv_start,
+      |   CAST(coalesce(sum(t.turn_tokens) OVER (PARTITION BY t.conv_id
+      |     ORDER BY t.turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+      |     0) AS BIGINT) AS toff
+      |   FROM ltt t JOIN lpre p USING (conv_id))
+      |SELECT conv_id, turn_idx, role, CAST(conv_start // 500 AS BIGINT) AS bin,
+      | conv_start + toff AS tok_start,
+      | conv_start + toff + turn_tokens AS tok_end,
+      | role = 'assistant' AS trainable
+      |FROM loffs ORDER BY conv_id, turn_idx""".stripMargin
+
+  /** The turn relation with each turn's BPE token count (`twt`): turn
+    * words (`tw`, `wc`) fed to the shared recursive-CTE applier. */
+  private lazy val TurnBpeCtes: String =
+    s"""${"WITH RECURSIVE " + SftTurnsCtes.stripPrefix("WITH ")},
+       | tw AS (SELECT conv_id, turn_idx, lower(t.tok) AS word
+       |   FROM (SELECT conv_id, turn_idx,
+       |     unnest(string_split_regex(content, '[ \\t\\n\\f\\r]+')) AS tok
+       |     FROM sft_turns) t
+       |   WHERE length(t.tok) > 0),
+       | wc AS (SELECT word, count(*) AS cnt FROM tw GROUP BY 1),
+       |$BpeApplyCte,
+       | twt AS (SELECT conv_id, turn_idx, CAST(sum(len(toks)) AS BIGINT) AS bt
+       |   FROM tw JOIN fin USING (word) GROUP BY 1, 2),""".stripMargin
 }

@@ -11,7 +11,6 @@ import graft.queries.Twins._
   * statistics (SURVEY.md §2 [REF] rows). */
 object ReferenceQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M1: the reference surface (SURVEY.md §2 [REF] rows) ----
     Q("wordcount", (s, d) => TextOps.wordCount(t(s, d).documents).orderBy("word"))(
       s"$W SELECT word, count(*) AS cnt FROM w WHERE length(word) > 0 GROUP BY word ORDER BY word"),
     // tokenizer/embedding-table sizing: token-occurrence mass covered
@@ -46,7 +45,6 @@ object ReferenceQueries {
     // and every log term is rounded(12) and DECIMAL-summed with one
     // fixed-association double finish (the trend_slopes discipline)
     Q("zipf_fit", (s, d) => {
-      import graft.operators.TotalOrder
       val dec = org.apache.spark.sql.types.DecimalType(28, 12)
       val wc = TextOps.wordCount(t(s, d).documents)
       val ranked = TotalOrder.globalRankAuto(wc,

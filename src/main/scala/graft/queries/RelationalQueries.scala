@@ -13,7 +13,6 @@ import graft.queries.Twins._
   * (SURVEY.md §2 [ABSENT]/[NS] rows). */
 object RelationalQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M2: relational breadth (SURVEY.md §2 [ABSENT]/[NS] rows) ----
     Q("q1_pricing_summary", (s, d) => Relational.pricingSummary(t(s, d).lineitem))(
       """SELECT l_returnflag, l_linestatus,
         | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,

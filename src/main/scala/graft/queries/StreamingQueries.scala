@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.LakeTable
@@ -15,31 +16,19 @@ import graft.queries.Twins._
   * ORC, XML and binary-file sources. */
 object StreamingQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M4: Structured Streaming (micro-batched file source; result
-    // must converge to the batch tumbling agg, so it shares its oracle) ----
     // the anomaly tripwire, streamed: the STREAM maintains only
     // watermark-bounded per-(type, day) counters; the cross-day
     // lookback math runs on the tiny finished daily relation — so the
     // batch oracle serves unchanged
     Q("streaming_rolling_anomaly", (s, d) => {
-      val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
-      val ss = streamSession(s)
-      val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
-      val finished = EventStreams.runToMemory(ss, daily,
-        s"stream_daily_${System.nanoTime()}")
-      Series.scoreDailyAnomalies(finished).orderBy("key", "day")
+      Series.scoreDailyAnomalies(streamedDaily(s, d, "")).orderBy("key", "day")
     })(
       // the streaming path converges to the identical daily relation
       // (watermarked 1-day windows), so one twin serves both
       rollingAnomalyTwin),
     // the grow/decay screen over the SAME streamed daily relation
     Q("streaming_trend", (s, d) => {
-      val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
-      val ss = streamSession(s)
-      val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
-      val finished = EventStreams.runToMemory(ss, daily,
-        s"stream_daily_t_${System.nanoTime()}")
-      Series.trendFromDaily(finished).orderBy("key")
+      Series.trendFromDaily(streamedDaily(s, d, "_t")).orderBy("key")
     })(
       // streaming daily relation converges to the batch one exactly
       trendSlopesTwin),
@@ -48,12 +37,7 @@ object StreamingQueries {
     // the stream holds only watermark-bounded daily counters, so the
     // batch change_points oracle serves unchanged
     Q("streaming_change_points", (s, d) => {
-      val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
-      val ss = streamSession(s)
-      val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
-      val finished = EventStreams.runToMemory(ss, daily,
-        s"stream_daily_cp_${System.nanoTime()}")
-      Series.changePointsFromDaily(finished).orderBy("key")
+      Series.changePointsFromDaily(streamedDaily(s, d, "_cp")).orderBy("key")
     })(
       // same streamed-daily convergence: the CUSUM monitor's stream
       // maintains only the (key, day, n) counters the batch twin builds
@@ -64,12 +48,7 @@ object StreamingQueries {
     // counters in the stream, the micro-integer STL finish on the
     // finished daily relation — the batch twin serves unchanged
     Q("streaming_stl", (s, d) => {
-      val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
-      val ss = streamSession(s)
-      val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
-      val finished = EventStreams.runToMemory(ss, daily,
-        s"stream_daily_stl_${System.nanoTime()}")
-      Series.stlFromDaily(finished).orderBy("key", "day")
+      Series.stlFromDaily(streamedDaily(s, d, "_stl")).orderBy("key", "day")
     })(
       // the streamed daily relation converges to the batch one — the
       // micro-integer STL twin serves unchanged
@@ -106,9 +85,7 @@ object StreamingQueries {
     // KL finish runs on the finished counts, so the batch
     // corpus_drift oracle serves unchanged
     Q("streaming_corpus_drift", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val docs = graft.streaming.IngestPipeline.readDocStream(ss, src)
+      val (ss, docs) = docStream(s, d)
       val ws = TextOps.cleanTokens(col("text"))
       val toks = docs.select((col("doc_id") % 2 === 1).as("is_new"),
         explode(ws).as("word"))
@@ -200,15 +177,7 @@ object StreamingQueries {
     // and replay idempotence are StreamingSpec's
     Q("streaming_ann_ingest", (s, d) => {
       val emb = t(s, d).embeddings.select(col("vec_id"), col("embedding"))
-      val base = emb.where(col("vec_id") % 7 =!= 3)
-      val dir = java.nio.file.Files.createTempDirectory("graft-annstream").toString
-      val idx = Similarity.ivfPqBuild(base)
-      Similarity.ivfPqWrite(idx, dir)
-      Similarity.cellResidualEnergy(idx, base)
-        .write.mode("overwrite").parquet(s"$dir/baseline")
-      val src = stageVecStream(s, d, 3)
-      val ss = streamSession(s)
-      graft.streaming.VectorIngest.runAnnIngest(ss, src, dir)
+      val dir = annIngested(s, d, emb, "graft-annstream")
       Similarity.ivfPqQuery(Similarity.ivfPqReadGrown(s, dir),
           emb.where(col("vec_id") % 70 === 3), emb)
         .orderBy("q_id", "rank")
@@ -224,15 +193,7 @@ object StreamingQueries {
     // streaming_ann_ingest's (rows-only) and StreamingSpec's
     Q("streaming_ann_cells", (s, d) => {
       val emb = t(s, d).embeddings.select(col("vec_id"), col("embedding"))
-      val base = emb.where(col("vec_id") % 7 =!= 3)
-      val dir = java.nio.file.Files.createTempDirectory("graft-anncells").toString
-      val idx = Similarity.ivfPqBuild(base)
-      Similarity.ivfPqWrite(idx, dir)
-      Similarity.cellResidualEnergy(idx, base)
-        .write.mode("overwrite").parquet(s"$dir/baseline")
-      val src = stageVecStream(s, d, 3)
-      val ss = streamSession(s)
-      graft.streaming.VectorIngest.runAnnIngest(ss, src, dir)
+      val dir = annIngested(s, d, emb, "graft-anncells")
       Similarity.ivfPqReadGrown(s, dir).cells
         .select(col("vec_id"), col("cell")).orderBy("vec_id")
     })(
@@ -399,21 +360,7 @@ object StreamingQueries {
     // extracted per batch — stateless through the engine, so the
     // drained stream equals batch warc_ingest and SHARES its twin
     Q("streaming_warc_ingest", (s, d) => {
-      val src = stageLayout(s, d, "warcstream") { tmp =>
-        val docs = t(s, d).documents
-        val id = col("doc_id")
-        val withMeta = Html.pageFromDocs(docs).select(col("doc_id"),
-          concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
-            lit("/doc/"), id.cast("string")).as("url"),
-          (lit(1700000000L) + id).as("fetch_ts"), col("html"))
-        graft.sources.Warc.containersFromDocs(withMeta, nContainers = 8)
-          .collect().foreach { r => // 8 container blobs — fixture staging
-            val cid = r.getLong(0)
-            val f = new java.io.File(s"$tmp/c$cid.warc")
-            java.nio.file.Files.write(f.toPath, r.getAs[Array[Byte]](1))
-            f.setLastModified(1000000L * (cid + 1))
-          }
-      }
+      val src = stageWarcStream(s, d, "warcstream")(Html.pageFromDocs(t(s, d).documents))
       val ss = streamSession(s)
       val stream = ss.readStream.format("binaryFile")
         // file streams need an explicit schema; binaryFile's is fixed
@@ -436,12 +383,7 @@ object StreamingQueries {
     // ride the micro-batch engine unchanged, so the drained stream
     // equals the batch clean chain, which is the oracle
     Q("streaming_clean_ingest", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d)
       val dirty = stream.select(col("doc_id"),
         concat(col("text"), Cleaning.cardFixtureSuffix(col("doc_id")),
           nfcSuffixCol(col("doc_id"))).as("text"))
@@ -468,37 +410,18 @@ object StreamingQueries {
     // doc stream, fixed-threshold gate, zero cross-batch state — the
     // drained scores equal the one-shot batch scorer (the oracle)
     Q("streaming_dsir_ingest", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
+      val (ss, docs0) = docStream(s, d)
+      val stream = docs0.where(col("lang") =!= "en")
       val docs = t(ss, d).documents
       val model = Corpus.dsirModel(docs.where(col("lang") =!= "en"),
         docs.where(col("lang") === "en"))
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .where(col("lang") =!= "en")
       val out = java.nio.file.Files.createTempDirectory("graft-dsir").toString
       graft.streaming.IngestPipeline.runDsirIngest(ss, stream, model, out)
         .orderBy("doc_id")
     })(
       // the streaming scorer's twin = the batch dsir_select chain up to
       // the per-doc scores, thresholded at logw >= 0 instead of ranked
-      s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
-         |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
-         | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
-         | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
-         | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
-         | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
-         | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
-         |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
-         | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
-         | delta AS (SELECT word,
-         |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
-         |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
-         |   FROM vocab CROSS JOIN sizes),
-         | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
-         |   FROM pw JOIN delta USING (word) GROUP BY 1)
+      s"""$DsirScoredCtes
          |SELECT doc_id, n_tokens, round(CAST(sl AS DOUBLE), 6) AS dsir_logw,
          |  sl >= 0 AS selected
          |FROM scored ORDER BY doc_id""".stripMargin),
@@ -507,16 +430,11 @@ object StreamingQueries {
     // vocabulary grows — the dsir_select_hashed posture applied to the
     // continuous feed (same frozen-model, zero-cross-batch-state shape)
     Q("streaming_dsir_ingest_hashed", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
+      val (ss, docs0) = docStream(s, d)
+      val stream = docs0.where(col("lang") =!= "en")
       val docs = t(ss, d).documents
       val model = Corpus.dsirModelHashed(docs.where(col("lang") =!= "en"),
         docs.where(col("lang") === "en"), m = 1024)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .where(col("lang") =!= "en")
       val out = java.nio.file.Files.createTempDirectory("graft-dsirh").toString
       graft.streaming.IngestPipeline.runDsirIngest(ss, stream, model, out,
         scorer = Corpus.dsirScoreHashed(_, _, m = 1024))
@@ -531,12 +449,7 @@ object StreamingQueries {
          |  sl >= 0 AS selected
          |FROM scored ORDER BY doc_id""".stripMargin),
     Q("streaming_priority_sample", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
-      val ss = streamSession(s)
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+      val (ss, stream) = docStream(s, d)
       val out = java.nio.file.Files.createTempDirectory("graft-psample").toString
       graft.streaming.IngestPipeline.runPrioritySampleIngest(ss, stream, out, k = 200)
         .orderBy("doc_id")
@@ -545,7 +458,7 @@ object StreamingQueries {
       // finishes to the identical sample — one twin serves both
       prioritySampleTwinSql),
     Q("streaming_pipeline_ingest", (s, d) => {
-      val src = stageDocStream(s, d, nFiles = 4)
+      val src = stageDocStream(s, d)
       val ss = streamSession(s)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-ingest-store").toString
       t(ss, d).documents.where(col("doc_id") % 2 === 0)
@@ -561,22 +474,7 @@ object StreamingQueries {
           bloomBits = 1L << 20)
         .orderBy("doc_id", "chunk_idx")
     })(
-      s"""WITH store AS (SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id % 2 = 0),
-         | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1),
-         | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
-         | dd AS (SELECT d.doc_id, d.lang, d.text FROM documents d JOIN fresh f ON d.doc_id = f.doc_id),
-         | n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
-         | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
-         |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
-         | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
-         |          WHERE $HashPermille < r.keep_permille),
-         | c AS (SELECT doc_id, lang, text,
-         |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
-         | u AS (SELECT doc_id, lang, text, n_chunks,
-         |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
-         |SELECT doc_id, lang, chunk_idx,
-         | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
-         |FROM u ORDER BY doc_id, chunk_idx""".stripMargin),
+      s"WITH${ingestCycleSql("documents", profile = "documents")}"),
     // streaming CDC → current snapshot: foreachBatch maintains a
     // versioned copy-on-write latest-image table, LWW by (ts,
     // event_id). The source redelivers every event twice (2 copies ×
@@ -656,11 +554,8 @@ object StreamingQueries {
         graft.sources.StatsManifest.writeClustered(t(s, d).orders, tmp,
           col("o_totalprice"), Seq("o_totalprice"), nFiles = 16)
       }
-      val (df, _, _) = graft.sources.StatsManifest.scanPruned(s, dir,
+      prunedStatusTotals(s, dir,
         Seq(("o_totalprice", lit(200000.0), lit(300000.0))))
-      df.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderstatus")
     })(
       """SELECT o_orderstatus, count(*) AS n,
         | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
@@ -676,12 +571,9 @@ object StreamingQueries {
           graft.sources.StatsManifest.zValue(col("o_custkey"), floor(col("o_totalprice") / 10000)),
           Seq("o_custkey", "o_totalprice"), nFiles = 16)
       }
-      val (df, _, _) = graft.sources.StatsManifest.scanPruned(s, dir,
+      prunedStatusTotals(s, dir,
         Seq(("o_custkey", lit(300L), lit(600L)),
           ("o_totalprice", lit(100000.0), lit(200000.0))))
-      df.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderstatus")
     })(boxScanTwinSql),
     // Hilbert-curve clustering over the SAME box predicates: strictly
     // better locality than the Z interleave (consecutive curve
@@ -694,12 +586,9 @@ object StreamingQueries {
             col("o_custkey"), floor(col("o_totalprice") / 10000).cast("long")),
           Seq("o_custkey", "o_totalprice"), nFiles = 16)
       }
-      val (df, _, _) = graft.sources.StatsManifest.scanPruned(s, dir,
+      prunedStatusTotals(s, dir,
         Seq(("o_custkey", lit(300L), lit(600L)),
           ("o_totalprice", lit(100000.0), lit(200000.0))))
-      df.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderstatus")
     })(
       // pruning changes which files are READ, never the answer — the
       // oracle is the plain filtered aggregate, same as zorder_scan
@@ -716,13 +605,10 @@ object StreamingQueries {
             floor(col("o_orderkey") / 64))),
           Seq("o_custkey", "o_totalprice", "o_orderkey"), nFiles = 16)
       }
-      val (df, _, _) = graft.sources.StatsManifest.scanPruned(s, dir,
+      prunedStatusTotals(s, dir,
         Seq(("o_custkey", lit(300L), lit(600L)),
           ("o_totalprice", lit(100000.0), lit(200000.0)),
           ("o_orderkey", lit(10000L), lit(40000L))))
-      df.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderstatus")
     })(
       """SELECT o_orderstatus, count(*) AS n,
         | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
@@ -789,4 +675,39 @@ object StreamingQueries {
       |SELECT user_id, tsu AS last_ts, event_id AS last_event_id,
       |       event_type AS last_type, value AS last_value
       |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin
+
+  /** The events stream's finished daily relation (key, day, n): the
+    * stream keeps only watermark-bounded per-(type, day) counters,
+    * drained to the memory sink `stream_daily<tag>_<nanos>`. */
+  private def streamedDaily(s: SparkSession, d: String, tag: String): DataFrame = {
+    val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
+    val ss = streamSession(s)
+    val daily = EventStreams.dailyCounts(EventStreams.readEventStream(ss, tmp))
+    EventStreams.runToMemory(ss, daily, s"stream_daily${tag}_${System.nanoTime()}")
+  }
+
+  /** An IVF-PQ index over `emb` minus the held-out residue class
+    * (vec_id % 7 == 3), written with its per-cell energy baseline to a
+    * fresh temp dir `prefix*`, then grown by streaming the held-out
+    * vectors in ([[stageVecStream]], 3 files). Returns the index dir. */
+  private def annIngested(s: SparkSession, d: String, emb: DataFrame, prefix: String): String = {
+    val base = emb.where(col("vec_id") % 7 =!= 3)
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val idx = Similarity.ivfPqBuild(base)
+    Similarity.ivfPqWrite(idx, dir)
+    Similarity.cellResidualEnergy(idx, base)
+      .write.mode("overwrite").parquet(s"$dir/baseline")
+    graft.streaming.VectorIngest.runAnnIngest(streamSession(s), stageVecStream(s, d, 3), dir)
+    dir
+  }
+
+  /** Per-status order count and price total over the manifest-pruned
+    * scan of `dir` under the range predicates `preds`. */
+  private def prunedStatusTotals(s: SparkSession, dir: String,
+                                 preds: Seq[(String, Column, Column)]): DataFrame = {
+    val (df, _, _) = graft.sources.StatsManifest.scanPruned(s, dir, preds)
+    df.groupBy(col("o_orderstatus"))
+      .agg(count(lit(1)).as("n"), graft.functions.dsum2(col("o_totalprice")).as("sum_price"))
+      .orderBy("o_orderstatus")
+  }
 }

@@ -1,18 +1,19 @@
 package graft
 package queries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.LakeTable
 import graft.QuerySpec.Q
 import graft.SparkEntry._
 
-/** Table maintenance: CDC merge, the lake table's commits and history,
-  * view maintenance and dimension history. */
+/** Table maintenance (graft.operators.ChangeData, TotalOrder and
+  * sources.LakeTable): CDC merge, the lake table's commits and
+  * history, view maintenance, dimension history and the global total
+  * order. */
 object TableMaintenanceQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M3c: table maintenance (CDC merge, dimension history,
-    // global total order — graft.operators.{ChangeData, TotalOrder}) ----
     // MERGE a deterministic CDC batch (updates, deletes, inserts
     // derived from key residues) into the customer base table: one
     // full-outer join on the key, column-wise coalesce, delete filter
@@ -58,10 +59,7 @@ object TableMaintenanceQueries {
     // the plain full recompute: hash-green proves the pruned partial
     // rewrite equals the full merge
     Q("table_commit", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
+      val dir = lake(s, d, "graft-lake")
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
     })(
       // the LakeTable commit (pruned partial rewrite + carried files)
@@ -74,8 +72,7 @@ object TableMaintenanceQueries {
     // the vector (fresh upserts may not stay masked). Oracle = the
     // equivalent filter/union recompute
     Q("table_delete_vectors", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-dv").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+      val dir = lake(s, d, "graft-lake-dv", merge = false)
       val dv = LakeTable.commitDelete(
         tableCommitBase(s, d).where(col("c_custkey").between(350, 380))
           .select(col("c_custkey")), dir, "c_custkey")
@@ -100,12 +97,8 @@ object TableMaintenanceQueries {
     // table_commit, so hash-green proves compaction is invisible to
     // readers
     Q("table_compact", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-cp").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
-      LakeTable.commitCompact(s, dir, "c_custkey",
-        smallFileRows = 200, targetRowsPerFile = 1000)
+      val dir = lake(s, d, "graft-lake-cp")
+      LakeTable.commitCompact(s, dir, "c_custkey", smallFileRows = 200, targetRowsPerFile = 1000)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
     })(
       // compaction is reader-invisible: same rows, same oracle
@@ -116,8 +109,7 @@ object TableMaintenanceQueries {
     // mergeSchema posture from plain column algebra, full-recompute
     // oracle with the same union-payload semantics
     Q("table_evolve", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-ev").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+      val dir = lake(s, d, "graft-lake-ev", merge = false)
       // [10, 110] — non-empty at EVERY shipped sf (sf0.001 keys stop at
       // 149) AND keeps the % 50 == 0 insert arm populated (keys 50,
       // 100), so schema evolution lands on updates and inserts alike
@@ -153,10 +145,7 @@ object TableMaintenanceQueries {
     // as the ORIGINAL table, byte-for-byte (the oracle is the plain
     // base projection)
     Q("table_time_travel", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-tt").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
+      val dir = lake(s, d, "graft-lake-tt")
       LakeTable.readVersion(s, dir, 0L).orderBy("c_custkey")
     })(
       // snapshot v0 read AFTER v1 was committed == the untouched base
@@ -169,10 +158,7 @@ object TableMaintenanceQueries {
     // are dropped by the null-safe compare. Oracle = classified FULL
     // OUTER diff of the recomputed before/after states
     Q("table_change_feed", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-cdf").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
+      val dir = lake(s, d, "graft-lake-cdf")
       LakeTable.changesBetween(s, dir, 0L, 1L, "c_custkey")
         .orderBy("c_custkey", "_op")
     })(lakeChangeFeedTwinSql),
@@ -183,8 +169,7 @@ object TableMaintenanceQueries {
     // (no false negatives), oracle = the filter over the recomputed
     // merged state
     Q("table_bloom_lookup", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-bl").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+      val dir = lake(s, d, "graft-lake-bl", merge = false)
       LakeTable.ensureBlooms(s, dir, "c_acctbal")
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250)
@@ -205,8 +190,7 @@ object TableMaintenanceQueries {
     // seam (enforcement is O(merged rows), carried files can't newly
     // violate) — a passing batch must read exactly like table_commit
     Q("table_checked_commit", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-ck").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+      val dir = lake(s, d, "graft-lake-ck", merge = false)
       LakeTable.commitMergeChecked(tableCommitChanges(s, d), dir, "c_custkey",
         targetRowsPerFile = 250, check = col("c_mktsegment").isNotNull)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
@@ -215,10 +199,7 @@ object TableMaintenanceQueries {
     // a NEW expression must be invisible to readers — same twin as
     // table_commit, same hash
     Q("table_recluster", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-rc").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
+      val dir = lake(s, d, "graft-lake-rc")
       LakeTable.commitRecluster(s, dir, "c_custkey", col("c_acctbal"),
         targetRowsPerFile = 250)
       LakeTable.readLatest(s, dir).orderBy("c_custkey")
@@ -239,12 +220,8 @@ object TableMaintenanceQueries {
     // row counts per snapshot across init → merge → compaction, the
     // compaction row proving reader-count invariance
     Q("table_history", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-h").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
-      LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
-        targetRowsPerFile = 250)
-      LakeTable.commitCompact(s, dir, "c_custkey",
-        smallFileRows = 200, targetRowsPerFile = 1000)
+      val dir = lake(s, d, "graft-lake-h")
+      LakeTable.commitCompact(s, dir, "c_custkey", smallFileRows = 200, targetRowsPerFile = 1000)
       LakeTable.history(s, dir).select(col("version"), col("n_rows"))
         .orderBy("version")
     })(
@@ -261,8 +238,7 @@ object TableMaintenanceQueries {
     // re-reading itself. Oracle = the aggregate over the recomputed
     // merged state
     Q("table_view_maintenance", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lake-mv").toString
-      LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+      val dir = lake(s, d, "graft-lake-mv", merge = false)
       val view0 = ChangeData.aggView(LakeTable.readVersion(s, dir, 0L),
         Seq("c_mktsegment"), "c_acctbal")
       LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
@@ -514,4 +490,15 @@ object TableMaintenanceQueries {
        |UNION ALL
        |SELECT nk, nm, na, 'update_post' FROM d WHERE ok IS NOT NULL AND nk IS NOT NULL
        |ORDER BY c_custkey, _op""".stripMargin
+
+  /** The lake table fixture in a fresh temp dir `prefix*`: init over
+    * [[tableCommitBase]] (8 files), then, when `merge`, the CDC batch
+    * [[tableCommitChanges]] merged in. Returns the dir. */
+  private def lake(s: SparkSession, d: String, prefix: String, merge: Boolean = true): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    LakeTable.init(tableCommitBase(s, d), dir, "c_custkey", nFiles = 8)
+    if (merge) LakeTable.commitMerge(tableCommitChanges(s, d), dir, "c_custkey",
+      targetRowsPerFile = 250)
+    dir
+  }
 }

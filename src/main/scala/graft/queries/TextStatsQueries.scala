@@ -1,6 +1,8 @@
 package graft
 package queries
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.plans.Lineage.TruncateOps
@@ -95,9 +97,7 @@ object TextStatsQueries {
       // association; the (pmi desc, w1, w2) order is total so LIMIT
       // can't flap on ties
       s"""WITH toks AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |    $CleanTokensSql AS ws
          |  FROM documents),
          | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
          | tu AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM uni),
@@ -136,7 +136,6 @@ object TextStatsQueries {
     // the crawl is re-fetching known material; types are credited to
     // the FIRST doc containing them (exact, no sampling)
     Q("heaps_curve", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dw = t(s, d).documents
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
         .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
@@ -176,7 +175,6 @@ object TextStatsQueries {
     // max |c1·n2 − c2·n1| in pure integers, ONE division at the end —
     // the numeric-drift gate (corpus_drift covers token frequencies)
     Q("ks_drift", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val v = t(s, d).documents.select(col("n_chars").as("v"),
         (col("doc_id") % 2 === 0).as("g1"))
       val per = v.groupBy(col("v")).agg(
@@ -282,7 +280,6 @@ object TextStatsQueries {
     // hour-of-day load shape per event type with floor-ppm shares and
     // a deterministic peak flag
     Q("seasonality_profile", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       t(s, d).events
         .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hr"))
         .agg(count(lit(1)).as("n"))
@@ -594,9 +591,7 @@ object TextStatsQueries {
       // the Spark when-chain's operand association exactly (0.4 * 0.4
       // folds to the same IEEE double in both engines)
       s"""WITH toks AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |    $CleanTokensSql AS ws
          |  FROM documents),
          | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
          | tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM uni),
@@ -629,21 +624,14 @@ object TextStatsQueries {
     // pipeline stage, not just a score column
     Q("perplexity_filter", (s, d) => {
       val tt = t(s, d)
-      val docs = tt.documents
-      val scored = docs.select(col("doc_id"), col("lang"))
-        .join(TextQuality.bigramLogProb(docs)
-          .select(col("doc_id"), col("avg_logprob").as("score")), Seq("doc_id"))
+      val scored = bigramScored(tt.documents)
       Corpus.quantileFilterByScore(scored, keep = 0.5,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
     })(
       // model-based quality cut: the bigram chain's per-doc average
       // feeds the naive percent_rank twin of the histogram filter —
       // proven equal for quality_filter, reproven here on the LM score
-      s"""$BigramCtes,
-         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
-         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
-         | r AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+      s"""$BigramRankCtes
          |SELECT doc_id, lang, score, pr FROM r WHERE pr >= 0.5 ORDER BY doc_id""".stripMargin),
     // the CCNet split (Wenzek et al.): per-language LM-perplexity
     // TERCILES — head/middle/tail buckets every row, where the filter
@@ -652,21 +640,14 @@ object TextStatsQueries {
     // DuckDB percent_rank twin hash-matches
     Q("perplexity_buckets", (s, d) => {
       val tt = t(s, d)
-      val docs = tt.documents
-      val scored = docs.select(col("doc_id"), col("lang"))
-        .join(TextQuality.bigramLogProb(docs)
-          .select(col("doc_id"), col("avg_logprob").as("score")), Seq("doc_id"))
+      val scored = bigramScored(tt.documents)
       Corpus.scoreBuckets(scored, nBuckets = 3,
         sizeHint = Some(tt.rowCountStat("documents"))).orderBy("doc_id")
     })(
       // the tercile twin: the same bigram chain, bucket from the naive
       // percent_rank — floor(pr*3) is one IEEE multiply+floor on both
       // engines, clamped at 2 for pr = 1.0
-      s"""$BigramCtes,
-         | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
-         |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
-         | r AS (SELECT doc_id, lang, score,
-         |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)
+      s"""$BigramRankCtes
          |SELECT doc_id, lang, score, pr,
          | least(2, CAST(floor(pr * 3) AS BIGINT)) AS bucket
          |FROM r ORDER BY doc_id""".stripMargin),
@@ -974,7 +955,6 @@ object TextStatsQueries {
     // norm², nearest-rank p50/p90 picks) — a drifting norm scale
     // silently breaks dot-product ANN
     Q("embedding_norms", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val n2 = t(s, d).embeddings
         .select(col("label").cast("long").as("label"), col("vec_id"),
           posexplode(col("embedding")).as(Seq("i", "x")))
@@ -1101,19 +1081,8 @@ object TextStatsQueries {
     // CHUNK-level vocabulary (128-char chunk boundaries split words,
     // and a fragment tokenizes as itself, not as its parent word)
     Q("packed_bpe", (s, d) => {
-      val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
-      val chunkWords = ch
-        .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
-        .select(col("doc_id"), col("chunk_idx"), lower(col("tok")).as("word"))
-        .where(length(col("word")) > 0)
-      val perWord = chunkWords.select(col("word")).distinct()
-        .select(col("word"), size(Bpe.tokens(col("word"), Bpe.DefaultMerges,
-          Some(Bpe.DefaultAlphabet))).cast("long").as("n_toks"))
-      val cb = chunkWords.join(perWord, Seq("word"))
-        .groupBy(col("doc_id"), col("chunk_idx")).agg(sum(col("n_toks")).as("bpe_n"))
-      val withTok = ch.join(cb, Seq("doc_id", "chunk_idx"), "left")
-        .withColumn("n_tokens", coalesce(col("bpe_n"), lit(0L)))
-      Corpus.packChunks(withTok, tokensPerPack = 64L, nShards = 8)
+      bpePackedChunks(
+        Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128))
         .select(col("shard"), col("pack_id"), col("doc_id"), col("chunk_idx"),
           col("n_tokens"), col("start_off"))
         .orderBy("shard", "doc_id", "chunk_idx")
@@ -1446,9 +1415,7 @@ object TextStatsQueries {
       // reproduces Spark's aggregate() exactly (pmod mirrored the usual
       // way for sign safety)
       s"""WITH cw AS (SELECT doc_id,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |    $CleanTokensSql AS ws
          |  FROM documents),
          | h AS (SELECT doc_id, list_transform(ws, w ->
          |    CAST(coalesce(list_sum(list_transform(string_split(w, ''), c -> 22 + 23*(ascii(c) - 14))), 0) AS BIGINT)) AS hs
@@ -1457,19 +1424,23 @@ object TextStatsQueries {
          |    (acc, x) -> (acc * 31 + x) % 1000000007) % 1000000007) + 1000000007) % 1000000007 AS BIGINT) AS fp
          |FROM h ORDER BY doc_id""".stripMargin))
 
-  /** Per-document variant of [[W]] for the retrieval family. */
+  /** Per-dim components rounded(9) (`c`), the DECIMAL mean per dim
+    * (`m`) and the centered components (`ce`). */
+  private val CenteredCtes: String =
+    """WITH c AS (SELECT vec_id, CAST(i AS BIGINT) AS dim, round(CAST(embedding[i] AS DOUBLE), 9) AS x
+      |   FROM (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
+      | m AS (SELECT dim, count(*) AS n,
+      |    round(CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mu
+      |   FROM c GROUP BY 1),
+      | ce AS (SELECT c.vec_id, c.dim, round(c.x - m.mu, 9) AS cx FROM c JOIN m USING (dim)),""".stripMargin
+
   /** Shared covariance CTE chain (embedding_covariance +
     * pca_top_component): rounded(9) components, DECIMAL-mean
     * centering, rounded(12) cross products DECIMAL-summed over the
     * vec_id self-join — mirrors Similarity.embeddingCovariance
     * operation-for-operation. */
   private lazy val CovCtes: String =
-    """WITH c AS (SELECT vec_id, CAST(i AS BIGINT) AS dim, round(CAST(embedding[i] AS DOUBLE), 9) AS x
-      |   FROM (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
-      | m AS (SELECT dim, count(*) AS n,
-      |    round(CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mu
-      |   FROM c GROUP BY 1),
-      | ce AS (SELECT c.vec_id, c.dim, round(c.x - m.mu, 9) AS cx FROM c JOIN m USING (dim)),
+    s"""$CenteredCtes
       | up AS (SELECT a.dim AS dim_i, b.dim AS dim_j, count(*) AS n,
       |    round(CAST(sum(CAST(round(a.cx * b.cx, 12) AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE), 8) AS cov
       |   FROM ce a JOIN ce b ON a.vec_id = b.vec_id AND a.dim <= b.dim GROUP BY 1, 2)""".stripMargin
@@ -1478,12 +1449,7 @@ object TextStatsQueries {
     * embedding_outliers): CovCtes' centered components + the per-dim
     * rounded σ — mirrors Similarity.embeddingStandardize. */
   private lazy val StdCtes: String =
-    """WITH c AS (SELECT vec_id, CAST(i AS BIGINT) AS dim, round(CAST(embedding[i] AS DOUBLE), 9) AS x
-      |   FROM (SELECT vec_id, embedding, unnest(generate_series(1, len(embedding))) AS i FROM embeddings) z),
-      | m AS (SELECT dim, count(*) AS n,
-      |    round(CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mu
-      |   FROM c GROUP BY 1),
-      | ce AS (SELECT c.vec_id, c.dim, round(c.x - m.mu, 9) AS cx FROM c JOIN m USING (dim)),
+    s"""$CenteredCtes
       | st AS (SELECT dim,
       |    round(sqrt(round(CAST(sum(CAST(round(cx * cx, 12) AS DECIMAL(38,12))) AS DOUBLE)
       |      / CAST(count(*) AS DOUBLE), 8)), 8) AS sigma
@@ -1500,11 +1466,13 @@ object TextStatsQueries {
       s"flatten(list_transform(list_filter(string_split(word, ''), c -> length(c) > 0), c -> CASE $cases ELSE [c] END))")
   }
 
+  /** Shared bigram-LM CTE chain (bigram_logprob + perplexity_filter
+    * twins): ordered cleaned-word lists → adjacent pairs → min-count-
+    * pruned model with stupid backoff → per-doc DECIMAL-summed logs in
+    * `s(doc_id, n_bigrams, sl)`. */
   private val BigramCtes =
     s"""WITH toks AS (SELECT doc_id,
-       |    list_filter(list_transform(
-       |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-       |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+       |    $CleanTokensSql AS ws
        |  FROM documents),
        | uni AS (SELECT w AS word, count(*) AS cnt FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY 1),
        | tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM uni),
@@ -1561,6 +1529,10 @@ object TextStatsQueries {
        |FROM sc ORDER BY doc_id""".stripMargin
   }
 
+  /** Card-scrub twin: fixture stitched from the SAME TestCards /
+    * TestNonCards constants; Luhn replayed as integer lambda
+    * arithmetic; redaction folded with list_reduce(list_prepend) —
+    * text as init, candidates in document order. */
   private lazy val cardScrubTwinSql: String =
     s"""${cardScrubCtes(s"WITH fx AS (SELECT doc_id, text || $CardSuffixSql AS text FROM documents)")}
        |SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
@@ -1584,4 +1556,19 @@ object TextStatsQueries {
       |   FROM tok),
       | p AS (SELECT shard, CAST(floor(start_off / 64) AS BIGINT) AS pack_id,
       |   doc_id, chunk_idx, n_tokens, start_off FROM off)""".stripMargin
+
+  /** Each doc's (doc_id, lang, score): its bigram LM average
+    * log-prob. */
+  private def bigramScored(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"))
+      .join(TextQuality.bigramLogProb(docs)
+        .select(col("doc_id"), col("avg_logprob").as("score")), Seq("doc_id"))
+
+  /** [[bigramScored]]'s twin `scd` and its per-lang percent rank `r`. */
+  private lazy val BigramRankCtes: String =
+    s"""$BigramCtes,
+       | scd AS (SELECT d.doc_id, d.lang, round(CAST(s.sl AS DOUBLE) / s.n_bigrams, 6) AS score
+       |         FROM documents d JOIN s ON d.doc_id = s.doc_id),
+       | r AS (SELECT doc_id, lang, score,
+       |         percent_rank() OVER (PARTITION BY lang ORDER BY score) AS pr FROM scd)""".stripMargin
 }

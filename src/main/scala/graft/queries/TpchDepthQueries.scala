@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.QuerySpec.Q
@@ -12,7 +13,6 @@ import graft.queries.Twins._
   * event queries share their twin with a streaming query. */
 object TpchDepthQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- deep-relational plan shapes (TPC-H-flavored, TpchDepth) ----
     Q("q2_min_cost_supplier", (s, d) => TpchDepth.q2MinCostSupplier(t(s, d)))(
       """WITH rs AS (
         |  SELECT s_suppkey, s_name, s_acctbal, n_name
@@ -267,7 +267,6 @@ object TpchDepthQueries {
     // bucket arithmetic, so even a billion-user dimension never hits
     // a single-task ORDER BY (the plain ntile window would)
     Q("rfm_scores", (s, d) => {
-      import graft.operators.TotalOrder
       val e = t(s, d).events
       val anchor = e.agg(max(unix_micros(col("ts"))).as("anchor_us"))
       val per = e.groupBy(col("user_id")).agg(
@@ -284,7 +283,6 @@ object TpchDepthQueries {
           .withColumn("rec_us", col("anchor_us") - col("last_us")))
       val tiled =
         if (small) {
-          import org.apache.spark.sql.expressions.Window
           base
             .withColumn("r", ntile(4).over(
               Window.orderBy(col("rec_us"), col("user_id"))).cast("long"))
@@ -348,7 +346,6 @@ object TpchDepthQueries {
     // (user, day); per-day nearest-rank p50/p90 of the exact-integer
     // µs lag (the event_gaps discipline — no interpolation)
     Q("conversion_lags", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = t(s, d).events.select(to_date(col("ts")).as("day"), col("user_id"),
         col("event_type"), unix_micros(col("ts")).as("us"))
       val v = e.where(col("event_type") === "view")
@@ -388,7 +385,6 @@ object TpchDepthQueries {
     // latest preceding click/view (last_value IGNORE NULLS over the
     // time-ordered stream — no self-join), 'none' when cold
     Q("attribution_last_touch", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = t(s, d).events.select(col("user_id"), col("event_id"), col("event_type"),
         to_date(col("ts")).as("day"), unix_micros(col("ts")).as("us"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
@@ -442,7 +438,6 @@ object TpchDepthQueries {
     // consecutive event types per user, with rounded row-conditional
     // probabilities
     Q("event_transitions", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val pairs = t(s, d).events
         .withColumn("prev_type", lag(col("event_type"), 1).over(w))
@@ -600,7 +595,6 @@ object TpchDepthQueries {
         | n_docs * g.gmax - sum_tokens AS naive_pad_tokens
         |FROM a CROSS JOIN g ORDER BY bucket""".stripMargin),
     Q("equidepth_bins", (s, d) => {
-      import graft.operators.TotalOrder
       val li = t(s, d).lineitem.select(
         col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("v"),
         col("l_orderkey").as("ok"), col("l_linenumber").as("ln"))
@@ -716,7 +710,6 @@ object TpchDepthQueries {
     // integer, so the hash can't flap) — the burst/bot tell a raw
     // event feed gets screened with
     Q("event_gaps", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val gaps = t(s, d).events
         .withColumn("prev", lag(col("ts"), 1).over(w))

@@ -1,12 +1,13 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
-/** The DuckDB-twin fragments and shared constants that two or more
-  * query families use (a fragment used by one family lives in that
-  * family's file). */
+/** The DuckDB-twin fragments, shared constants and Spark-side helpers
+  * that two or more query families use (one used by a single family
+  * lives in that family's file). */
 object Twins {
   /** The C-ispunct character class, RE2 spelling, for the DuckDB twins. */
   private[queries] val P = "[!-/:-@\\[-`{-~]"
@@ -21,12 +22,6 @@ object Twins {
       | AND c.tsu >= p.tsu - INTERVAL '30 minutes' AND c.tsu <= p.tsu
       |ORDER BY purchase_id, click_id""".stripMargin
 
-  /** PageRank twin: the 5 fixed iterations UNROLLED as chained CTEs
-    * (straight-line SQL sidesteps engines' recursive-CTE aggregation
-    * restrictions while computing the identical fold). Every arithmetic
-    * step mirrors Graph.pageRank operation-for-operation: double init
-    * 1/n, per-edge round(rank/deg, 12), exact DECIMAL(38,12) sums,
-    * then (1−0.85)·… as single IEEE double ops. */
   /** 5-iteration PageRank twin over a pluggable `edges(src, dst)` CTE
     * prefix (must start with WITH) — shared by `page_rank` (trade
     * graph) and `crawl_rank` (extracted HTML link graph). */
@@ -49,6 +44,12 @@ object Twins {
     s"$pre,\n$iters"
   }
 
+  /** PageRank twin: the 5 fixed iterations UNROLLED as chained CTEs
+    * (straight-line SQL sidesteps engines' recursive-CTE aggregation
+    * restrictions while computing the identical fold). Every arithmetic
+    * step mirrors Graph.pageRank operation-for-operation: double init
+    * 1/n, per-edge round(rank/deg, 12), exact DECIMAL(38,12) sums,
+    * then (1−0.85)·… as single IEEE double ops. */
   private[queries] def pageRankUnrolled(edgesCtePrefix: String): String =
     s"${pageRankCtes(edgesCtePrefix)}\nSELECT node, round(rank, 8) AS pr FROM r5 ORDER BY node"
 
@@ -161,6 +162,7 @@ object Twins {
       |WHERE (SELECT cnt FROM stats) <= 200 OR rn <= 200
       |ORDER BY doc_id""".stripMargin
 
+  /** Per-document variant of [[W]] for the retrieval family. */
   private[queries] val WDoc =
     s"""WITH w0 AS (
        |  SELECT doc_id, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
@@ -173,10 +175,6 @@ object Twins {
   private[queries] val BpeMergesValues = Bpe.DefaultMerges.zipWithIndex
     .map { case ((l, r), i) => s"($i,'$l','$r')" }.mkString(", ")
 
-  /** Shared recursive-CTE BPE applier (the bpe_* twins): one-splice-
-    * per-iteration best-rank merge, bit-identical to Bpe.applyMerges —
-    * `fin` holds each distinct word's terminal tokenization. Expects a
-    * CTE `wc(word, cnt)` in scope. */
   /** The stitched-on OOV fixture token for bpe_oov_rate ("数据"): the
     * raw corpus is alphabet-pure (n_oov = 0 for every language —
     * hash-proven), so the byte-fallback path needs planted dirt, the
@@ -220,6 +218,10 @@ object Twins {
        |       m.l || ' ' || m.r))
        | )""".stripMargin
 
+  /** Shared recursive-CTE BPE applier (the bpe_* twins): one-splice-
+    * per-iteration best-rank merge, bit-identical to Bpe.applyMerges —
+    * `fin` holds each distinct word's terminal tokenization. Expects a
+    * CTE `wc(word, cnt)` in scope. */
   private[queries] val BpeApplyCte = bpeApplyCte()
 
   private[graft] val Bm25Terms = Seq("spark", "hash", "dup")
@@ -287,6 +289,10 @@ object Twins {
     s"""$CrawlEdgesCte
        |SELECT src, dst FROM edges ORDER BY src, dst""".stripMargin
 
+  /** One BM25 twin serves both the recompute path (`bm25_topk`) and
+    * the persisted-index path (`bm25_from_index`): the index stores
+    * exactly the relations this SQL derives, so lifecycle parity is
+    * proven by both queries hashing against the same oracle. */
   private[queries] lazy val bm25TwinSql: String = {
     val termCols = Bm25Terms.zipWithIndex.map { case (t, i) =>
       s"max(CASE WHEN word = '$t' THEN w_score END) AS s$i"
@@ -401,21 +407,6 @@ object Twins {
        | xh AS MATERIALIZED (SELECT word, ${xxor("h", "h // 4294967296")} AS h FROM xa4)""".stripMargin
   }
 
-  /** The complete residual-encoded IVF×PQ query funnel as ONE DuckDB
-    * twin (round 12): frozen stride-10 coarse cells → corpus residuals
-    * in FLOAT arithmetic (Spark's zip_with subtracts float32s; the
-    * cast to DOUBLE[] happens only at the dot products, mirroring
-    * VecDot's per-element widening) → dense-ranked stride-50 residual
-    * codebooks → argmin PQ encode → nProbe=12 probed cells with
-    * per-(query, cell) residual L2 ADC tables → candidate scores as
-    * ORDERED list_reduce folds (double addition is order-sensitive;
-    * this matches VecAdcScore's sequential loop bit-for-bit) → 40-row
-    * shortlist → exact cosine rerank. Parameterized by the cents/
-    * codebook/query filters so ivf_pq_topk, the parquet-roundtrip
-    * lifecycle, the frozen-geometry append AND the streaming ingest
-    * all share one validated builder — the roundtrip/append/stream
-    * variants MUST answer identically to the direct computation, which
-    * is exactly what their oracles now assert. */
   /** Loud regime guard for the IVF×PQ coarse-cents twins (round 13):
     * the Spark side now ranks stride points by xxhash64(vec_id) and
     * keeps kCoarse=256 (Similarity.hashRankedCentroids) — provably a
@@ -455,6 +446,21 @@ object Twins {
          | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
          |   FROM pw JOIN delta USING (bucket) GROUP BY 1)""".stripMargin
 
+  /** The complete residual-encoded IVF×PQ query funnel as ONE DuckDB
+    * twin (round 12): frozen stride-10 coarse cells → corpus residuals
+    * in FLOAT arithmetic (Spark's zip_with subtracts float32s; the
+    * cast to DOUBLE[] happens only at the dot products, mirroring
+    * VecDot's per-element widening) → dense-ranked stride-50 residual
+    * codebooks → argmin PQ encode → nProbe=12 probed cells with
+    * per-(query, cell) residual L2 ADC tables → candidate scores as
+    * ORDERED list_reduce folds (double addition is order-sensitive;
+    * this matches VecAdcScore's sequential loop bit-for-bit) → 40-row
+    * shortlist → exact cosine rerank. Parameterized by the cents/
+    * codebook/query filters so ivf_pq_topk, the parquet-roundtrip
+    * lifecycle, the frozen-geometry append AND the streaming ingest
+    * all share one validated builder — the roundtrip/append/stream
+    * variants MUST answer identically to the direct computation, which
+    * is exactly what their oracles now assert. */
   private[queries] def ivfPqQueryTwinSql(centsWhere: String, bookWhere: String,
                                 queryWhere: String): String =
     s"""WITH v AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -515,9 +521,7 @@ object Twins {
     * counter pair the batch aggregate builds). */
   private[queries] lazy val corpusDriftTwin: String =
       s"""WITH d AS (SELECT doc_id % 2 = 1 AS is_new,
-         |    list_filter(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
-         |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0) AS ws
+         |    $CleanTokensSql AS ws
          |  FROM documents),
          | toks AS (SELECT is_new, unnest(ws) AS word FROM d),
          | m AS (SELECT word,
@@ -575,10 +579,6 @@ object Twins {
         | (z IS NOT NULL AND abs(z) > CAST(3.0 AS DOUBLE)) AS is_anomaly
         |FROM z ORDER BY key, day""".stripMargin
 
-  /** Card-scrub twin: fixture stitched from the SAME TestCards /
-    * TestNonCards constants; Luhn replayed as integer lambda
-    * arithmetic; redaction folded with list_reduce(list_prepend) —
-    * text as init, candidates in document order. */
   /** SQL form of Cleaning.cardFixtureSuffix — shared by card_scrub
     * and the streaming clean-ingest twin. */
   private[queries] lazy val CardSuffixSql: String = {
@@ -694,4 +694,122 @@ object Twins {
 
   private[queries] def AllStopwordsSqlList: String =
     Corpus.AllStopwords.map(w => s"'$w'").mkString(",")
+
+  /** The English stop list as a SQL list body, generated from the same
+    * Scala object the Spark side gates on. */
+  private[queries] lazy val EnStopsSqlList: String =
+    TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
+
+  /** packed_bpe's Spark side: each chunk's BPE token count under the
+    * frozen merges, tokenized over the CHUNK-level vocabulary (a
+    * boundary fragment tokenizes as itself, not as its parent word),
+    * then packed 64 tokens a pack over 8 shards. */
+  private[queries] def bpePackedChunks(ch: DataFrame): DataFrame = {
+    val chunkWords = ch
+      .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
+      .select(col("doc_id"), col("chunk_idx"), lower(col("tok")).as("word"))
+      .where(length(col("word")) > 0)
+    val perWord = chunkWords.select(col("word")).distinct()
+      .select(col("word"), size(Bpe.tokens(col("word"), Bpe.DefaultMerges,
+        Some(Bpe.DefaultAlphabet))).cast("long").as("n_toks"))
+    val cb = chunkWords.join(perWord, Seq("word"))
+      .groupBy(col("doc_id"), col("chunk_idx")).agg(sum(col("n_toks")).as("bpe_n"))
+    val withTok = ch.join(cb, Seq("doc_id", "chunk_idx"), "left")
+      .withColumn("n_tokens", coalesce(col("bpe_n"), lit(0L)))
+    Corpus.packChunks(withTok, tokensPerPack = 64L, nShards = 8)
+  }
+
+  /** The ingest cycle's twin after WITH: the store anti-join over
+    * `docs` (content hashes of even doc_ids seed the store), the
+    * temperature rates from the per-lang counts of `profile`, the
+    * hash-permille keep, and 256-char chunks of what is kept. */
+  private[queries] def ingestCycleSql(docs: String, profile: String): String =
+    s""" store AS (SELECT DISTINCT sha256(text) AS h FROM $docs WHERE doc_id % 2 = 0),
+       | batch AS (SELECT sha256(text) AS h, min(doc_id) AS doc_id FROM $docs GROUP BY 1),
+       | fresh AS (SELECT b.doc_id FROM batch b LEFT JOIN store s ON b.h = s.h WHERE s.h IS NULL),
+       | dd AS (SELECT d.doc_id, d.lang, d.text FROM $docs d JOIN fresh f ON d.doc_id = f.doc_id),
+       | n AS (SELECT lang, count(*) AS n_l FROM $profile GROUP BY lang),
+       | r AS (SELECT lang, CAST(floor(1000.0 * sqrt((SELECT CAST(min(n_l) AS DOUBLE) FROM n))
+       |   / sqrt(CAST(n_l AS DOUBLE))) AS BIGINT) AS keep_permille FROM n),
+       | kept AS (SELECT dd.doc_id, dd.lang, dd.text FROM dd JOIN r ON dd.lang = r.lang
+       |          WHERE $HashPermille < r.keep_permille),
+       | c AS (SELECT doc_id, lang, text,
+       |   CAST(ceil(length(text) / 256.0) AS BIGINT) AS n_chunks FROM kept),
+       | u AS (SELECT doc_id, lang, text, n_chunks,
+       |   unnest(generate_series(0, n_chunks - 1)) AS chunk_idx FROM c)
+       |SELECT doc_id, lang, chunk_idx,
+       | substring(text, CAST(chunk_idx * 256 + 1 AS INT), 256) AS chunk
+       |FROM u ORDER BY doc_id, chunk_idx""".stripMargin
+
+  /** DSIR's per-doc scores (`scored`: doc_id, n_tokens, sl): add-1
+    * unigram models of pool (lang<>'en') and target ('en') over the
+    * union vocab, per-word Δ of rounded(12) lns subtracted as DECIMALs,
+    * per-doc DECIMAL sums. */
+  private[queries] lazy val DsirScoredCtes: String =
+    s"""WITH w0 AS (SELECT doc_id, lang, lower(regexp_replace(t.tok, '$P', '', 'g')) AS word
+       |   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '[ \\t\\n\\f\\r]+')) AS tok FROM documents) t),
+       | w AS (SELECT doc_id, lang, word FROM w0 WHERE length(word) > 0),
+       | pw AS (SELECT doc_id, word FROM w WHERE lang <> 'en'),
+       | pc AS (SELECT word, count(*) AS pc FROM pw GROUP BY 1),
+       | tc AS (SELECT word, count(*) AS tc FROM w WHERE lang = 'en' GROUP BY 1),
+       | vocab AS (SELECT word, coalesce(pc.pc, 0) AS pc, coalesce(tc.tc, 0) AS tc
+       |   FROM (SELECT word FROM pc UNION SELECT word FROM tc) u LEFT JOIN pc USING (word) LEFT JOIN tc USING (word)),
+       | sizes AS (SELECT sum(pc) AS np, sum(tc) AS nt, count(*) AS v FROM vocab),
+       | delta AS (SELECT word,
+       |   CAST(round(ln(CAST(tc + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE)), 12) AS DECIMAL(28,12))
+       |   - CAST(round(ln(CAST(pc + 1 AS DOUBLE) / CAST(np + v AS DOUBLE)), 12) AS DECIMAL(28,12)) AS delta
+       |   FROM vocab CROSS JOIN sizes),
+       | scored AS (SELECT doc_id, count(*) AS n_tokens, sum(delta) AS sl
+       |   FROM pw JOIN delta USING (word) GROUP BY 1)""".stripMargin
+
+  /** The url_strip_tracking fixture URL: each doc triple
+    * m = doc_id - doc_id % 3 shares one resource URL but carries
+    * different click-attribution junk (utm_*, gclid, fbclid) and a
+    * different REAL-param order. */
+  private[queries] def trackedUrl: Column = {
+    val id = col("doc_id")
+    val m = id - (id % 3)
+    val base = concat(lit("https://"), Html.fixtureHost(m % Html.SiteSpace),
+      lit("/doc/"), m.cast("string"))
+    when(id % 3 === 0,
+        concat(base, lit("?page=2&utm_source=feed&a=1&utm_campaign=c"), id.cast("string")))
+      .when(id % 3 === 1,
+        concat(base, lit("?a=1&gclid=g"), id.cast("string"), lit("&page=2")))
+      .otherwise(concat(base, lit("?page=2&a=1&fbclid=f"), id.cast("string")))
+  }
+
+  /** The UT1-style blocklist fixture over the host keys `ks` (k): whole
+    * hosts at k % 7 == 0, the /doc/1 prefix at k % 5 == 0, and one
+    * public-suffix host with the /doc/7 prefix. */
+  private[queries] def blocklistRules(ks: DataFrame): DataFrame =
+    ks.where(col("k") % 7 === 0)
+        .select(Html.fixtureHost(col("k")).as("host"), lit("").as("prefix"))
+      .unionByName(ks.where(col("k") % 5 === 0)
+        .select(Html.fixtureHost(col("k")).as("host"), lit("/doc/1").as("prefix")))
+      .unionByName(ks.sparkSession.range(1)
+        .select(lit("shop.example.co.uk").as("host"), lit("/doc/7").as("prefix")))
+
+  /** The cleaned-token list of `text` as one DuckDB expression
+    * (whitespace split, ispunct strip, lowercase, empties dropped): the
+    * twin of TextOps.cleanTokens. Its continuation lines carry the
+    * indent of the twins that share it. */
+  private[queries] lazy val CleanTokensSql: String =
+    s"""list_filter(list_transform(
+       |      list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), t -> length(t) > 0),
+       |      t -> lower(regexp_replace(t, '$P', '', 'g'))), w -> length(w) > 0)""".stripMargin
+
+  /** The conversation audit's `ok` column closing `aud` over `prevr`,
+    * then the ordered assistant-response fingerprints `fp`: shared by
+    * the SFT admission twins. */
+  private[queries] val SftOkFpCtes: String =
+    """   (sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END) = 0
+      |    AND coalesce(min(CASE WHEN role = 'user' THEN turn_idx END) <
+      |      coalesce(min(CASE WHEN role = 'assistant' THEN turn_idx END),
+      |        9223372036854775807), FALSE)
+      |    AND arg_max(role, turn_idx) = 'assistant'
+      |    AND max(CASE WHEN content = '' THEN 1 ELSE 0 END) = 0
+      |  AND sum(CASE WHEN role = 'invalid' THEN 1 ELSE 0 END) = 0) AS ok
+      |   FROM prevr GROUP BY conv_id),
+      | fp AS (SELECT conv_id, md5(string_agg(md5(content), '' ORDER BY turn_idx)) AS resp_fp
+      |   FROM sft_turns WHERE role = 'assistant' GROUP BY conv_id),""".stripMargin
 }

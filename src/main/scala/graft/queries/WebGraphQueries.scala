@@ -1,6 +1,8 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.plans.Lineage.TruncateOps
@@ -235,13 +237,12 @@ object WebGraphQueries {
       // the same gate CTEs as corpus_card, per source; the Wilson bound
       // is one fixed float expression over exact integers with literal
       // z-constants — identical shape in both engines
-      val stops = TextQuality.Stopwords("en").map(w => s"'$w'").mkString(", ")
       val pd = "CAST(n_pass AS DOUBLE) / CAST(n_docs AS DOUBLE)"
       val nd = "CAST(n_docs AS DOUBLE)"
       s"""WITH gf AS (SELECT doc_id, source, CAST(len(tkl) AS BIGINT) AS n_words,
          |    CAST(list_sum(list_transform(tkl, x -> length(x))) AS DOUBLE) / len(tkl) AS mean_word_len,
          |    CAST(len(list_filter(tkl, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE) / len(tkl) AS alpha_frac,
-         |    CAST(len(list_filter(tkl, x -> list_contains([$stops], lower(x)))) AS BIGINT) AS n_stop_hits
+         |    CAST(len(list_filter(tkl, x -> list_contains([$EnStopsSqlList], lower(x)))) AS BIGINT) AS n_stop_hits
          |   FROM (SELECT doc_id, source, list_filter(string_split_regex(text, '[ \\t\\n\\f\\r]+'), x -> length(x) > 0) AS tkl FROM documents) z),
          | per AS (SELECT source, count(*) AS n_docs,
          |    CAST(count(*) FILTER (WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len >= 3.0
@@ -296,19 +297,12 @@ object WebGraphQueries {
     // Graph: part co-purchase (parts sharing an order) — the dense
     // community structure the crawl fixture's link arithmetic lacks
     Q("triangle_count", (s, d) => {
-      val li = t(s, d).lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
-      val edges = li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst"))
+      val edges = copurchaseEdges(s, d)
       Graph.triangleCounts(edges).orderBy("node")
     })(
       // the canonical u<v<w three-way join — same triangle set the
       // oriented wedge enumeration produces, corners exploded
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
+      s"""$CopurchaseEdgeCtes
          | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
          |         FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
          |         JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
@@ -319,11 +313,7 @@ object WebGraphQueries {
     // one-row graph census: nodes/edges/triangles/wedges and global
     // transitivity 3·tri/wedges (node-incident triangle sum IS 3·tri)
     Q("graph_summary", (s, d) => {
-      val li = t(s, d).lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
-      val edges = li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst"))
+      val edges = copurchaseEdges(s, d)
       val e = edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .where(col("a") =!= col("b")).distinct().truncateLineage
@@ -342,10 +332,7 @@ object WebGraphQueries {
     })(
       // node-incident triangle sum = 3·|triangles|; wedges in integer
       // div; transitivity one rounded division
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
+      s"""$CopurchaseEdgeCtes
          | deg AS (SELECT node, count(*) AS deg
          |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
          | tri AS (SELECT e1.a AS n1 FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
@@ -360,19 +347,12 @@ object WebGraphQueries {
          |FROM ds CROSS JOIN ne CROSS JOIN t3""".stripMargin),
     // community-vs-hub discriminator: 2·tri/d(d−1) on the same graph
     Q("clustering_coeff", (s, d) => {
-      val li = t(s, d).lineitem
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
-      val edges = li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst"))
+      val edges = copurchaseEdges(s, d)
       Graph.clusteringCoefficients(edges).orderBy("node")
     })(
       // same triangle CTEs + the degree census; 2·tri/d(d−1) one
       // rounded division, degree-<2 nodes report 0
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-         | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
-         | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM ed WHERE src <> dst),
+      s"""$CopurchaseEdgeCtes
          | deg AS (SELECT node, count(*) AS deg
          |         FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e) z GROUP BY 1),
          | tri AS (SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
@@ -391,7 +371,6 @@ object WebGraphQueries {
     // week-over-week volume report per event type: lag to the
     // previous OBSERVED week, exact counts, one rounded division
     Q("wow_change", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val wk = t(s, d).events
         .groupBy(col("event_type"), date_trunc("week", col("ts")).cast("date").as("week"))
         .agg(count(lit(1)).as("n"))
@@ -458,11 +437,7 @@ object WebGraphQueries {
     // every record byte-exactly
     Q("warc_ingest", (s, d) => {
       val docs = t(s, d).documents
-      val id = col("doc_id")
-      val withMeta = Html.pageFromDocs(docs).select(col("doc_id"),
-        concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
-          lit("/doc/"), id.cast("string")).as("url"),
-        (lit(1700000000L) + id).as("fetch_ts"), col("html"))
+      val withMeta = warcMeta(Html.pageFromDocs(docs))
       val recs = graft.sources.Warc.records(
         graft.sources.Warc.containersFromDocs(withMeta, nContainers = 8))
       Html.extractMain(recs.drop("truncated"), idCol = "url")
@@ -483,11 +458,7 @@ object WebGraphQueries {
     // chain must reproduce warc_ingest exactly; one twin serves both
     Q("warc_gzip_ingest", (s, d) => {
       val docs = t(s, d).documents
-      val id = col("doc_id")
-      val withMeta = Html.pageFromDocs(docs).select(col("doc_id"),
-        concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
-          lit("/doc/"), id.cast("string")).as("url"),
-        (lit(1700000000L) + id).as("fetch_ts"), col("html"))
+      val withMeta = warcMeta(Html.pageFromDocs(docs))
       val recs = graft.sources.Warc.records(
         graft.sources.Warc.containersFromDocs(withMeta, nContainers = 8, gzip = true))
       Html.extractMain(recs.drop("truncated"), idCol = "url")
@@ -587,14 +558,7 @@ object WebGraphQueries {
     Q("url_strip_tracking", (s, d) => {
       val docs = t(s, d).documents
       val id = col("doc_id")
-      val m = id - (id % 3)
-      val base = concat(lit("https://"), Html.fixtureHost(m % Html.SiteSpace),
-        lit("/doc/"), m.cast("string"))
-      val raw = when(id % 3 === 0,
-          concat(base, lit("?page=2&utm_source=feed&a=1&utm_campaign=c"), id.cast("string")))
-        .when(id % 3 === 1,
-          concat(base, lit("?a=1&gclid=g"), id.cast("string"), lit("&page=2")))
-        .otherwise(concat(base, lit("?page=2&a=1&fbclid=f"), id.cast("string")))
+      val raw = trackedUrl
       val stripped = docs.select(id.as("doc_id"), raw.as("raw_url"),
         Html.stripTrackingParams(raw).as("canonical_url"))
       val fam = stripped.groupBy(col("canonical_url"))
@@ -636,12 +600,7 @@ object WebGraphQueries {
         concat(lit("https://"), Html.fixtureHost(id % Html.SiteSpace),
           lit("/doc/"), id.cast("string")).as("url"))
       val ks = docs.select((id % Html.SiteSpace).as("k")).distinct()
-      val rules = ks.where(col("k") % 7 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("").as("prefix"))
-        .unionByName(ks.where(col("k") % 5 === 0)
-          .select(Html.fixtureHost(col("k")).as("host"), lit("/doc/1").as("prefix")))
-        .unionByName(s.range(1)
-          .select(lit("shop.example.co.uk").as("host"), lit("/doc/7").as("prefix")))
+      val rules = blocklistRules(ks)
       urls.join(Html.blocklistFilter(urls, rules), Seq("url"))
         .select(col("doc_id"), col("url"), col("blocked"),
           col("rule_host"), col("rule_prefix"))
@@ -888,12 +847,7 @@ object WebGraphQueries {
          |  SELECT DISTINCT ${sqlHost(s"doc_id%$ss")} AS a, ${sqlHost(s"(doc_id*7+3)%$ss")} AS b
          |  FROM documents
          |  WHERE ${sqlHost(s"doc_id%$ss")} <> ${sqlHost(s"(doc_id*7+3)%$ss")}),
-         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
-         | nodes AS (SELECT DISTINCT src AS node FROM e),
-         | reach(node, label) AS (
-         |   SELECT node, node FROM nodes
-         |   UNION
-         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
+         |$ReachCtes
          |SELECT node AS host, min(label) AS cluster_id
          |FROM reach GROUP BY node ORDER BY host""".stripMargin
     },
@@ -941,12 +895,7 @@ object WebGraphQueries {
          |   FROM hraw JOIN psl_map ma ON ma.host = hraw.ha
          |             JOIN psl_map mb ON mb.host = hraw.hb
          |   WHERE ma.site <> mb.site),
-         | e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
-         | nodes AS (SELECT DISTINCT src AS node FROM e),
-         | reach(node, label) AS (
-         |   SELECT node, node FROM nodes
-         |   UNION
-         |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)
+         |$ReachCtes
          |SELECT node AS site, min(label) AS cluster_id
          |FROM reach GROUP BY node ORDER BY site""".stripMargin
     },
@@ -992,7 +941,6 @@ object WebGraphQueries {
     // transcode repaired, and compose into mojibakeScreen — which
     // must flag the pre-damaged class and nothing else
     Q("charset_transcode_audit", (s, d) => {
-      import graft.operators.{Charsets, TextQuality}
       val audit = Charsets.transcodeAudit(
         Charsets.pagesFromDocs(t(s, d).documents.select(col("doc_id"))))
       audit
@@ -1036,7 +984,6 @@ object WebGraphQueries {
     // undeclared-0xFF class repairs to latin-1 ÿ with ZERO malformed
     // units where the old utf-8 default counted damage unrepaired
     Q("charset_detect_audit", (s, d) => {
-      import graft.operators.Charsets
       Charsets.transcodeAudit(
         Charsets.pagesFromDocs(t(s, d).documents.select(col("doc_id")), declare = false))
         .select(col("doc_id"), col("charset"), col("declared"), col("supported"),
@@ -1162,4 +1109,31 @@ object WebGraphQueries {
 
   private def sqlSite(k: String): String =
     s"(CASE WHEN ($k)%3=0 THEN 'example.co.uk' ELSE 'example.com' END)"
+
+  /** The part co-purchase graph (parts sharing an order) as directed
+    * edges (src, dst), src < dst. */
+  private def copurchaseEdges(s: SparkSession, d: String): DataFrame = {
+    val li = t(s, d).lineitem
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
+    li.as("x").join(li.as("y"), col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
+      .select(col("x.p").as("src"), col("y.p").as("dst"))
+  }
+
+  /** [[copurchaseEdges]]' twin as canonical undirected edges `e` (a, b),
+    * a < b. */
+  private val CopurchaseEdgeCtes: String =
+    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+      | ed AS (SELECT x.p AS src, y.p AS dst FROM li x JOIN li y ON x.ok = y.ok AND x.p < y.p),
+      | e AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |        FROM ed WHERE src <> dst),""".stripMargin
+
+  /** Connected components of the undirected edges `e0` (a, b) by
+    * recursive min-label propagation: `reach` (node, label). */
+  private val ReachCtes: String =
+    """ e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
+      | nodes AS (SELECT DISTINCT src AS node FROM e),
+      | reach(node, label) AS (
+      |   SELECT node, node FROM nodes
+      |   UNION
+      |   SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node)""".stripMargin
 }

@@ -11,7 +11,6 @@ import graft.queries.Twins._
   * cohorts. */
 object WindowQueries {
   val specs: Seq[QuerySpec] = Seq(
-    // ---- M2: windows (analytic + event-time) ----
     Q("window_funcs", (s, d) => Windows.perUserAnalytics(t(s, d).events))(
       """WITH e AS (SELECT event_id, user_id, event_type, value, CAST(ts AS TIMESTAMP) AS tsu FROM events)
         |SELECT event_id, user_id, event_type, value,
