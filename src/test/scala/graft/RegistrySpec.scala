@@ -65,6 +65,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(n.get === 0)
   }
 
+  // perfbench's harness stages the events fixture during set-up by
+  // finding this method on SparkEntry by reflection (it is private to
+  // graft); if it moved or changed arity the staging would silently
+  // fall into the first timed streaming pass
+  test("SparkEntry keeps the 4-argument stageEvents the bench harness finds by reflection") {
+    val found = SparkEntry.getClass.getDeclaredMethods
+      .filter(m => m.getName.endsWith("stageEvents") && m.getParameterCount == 4)
+    assert(found.length === 1, found.map(_.getName).mkString(", "))
+    val m = found.head
+    m.setAccessible(true)
+    def stage(): String = m.invoke(SparkEntry, TestSpark.spark, "/root/testdata/sf0.001",
+      Int.box(1), Int.box(4)).asInstanceOf[String]
+    val dir = stage()
+    assert(new java.io.File(dir).isDirectory)
+    // memoized per (sfDir, copies, filesPerCopy): the streaming queries
+    // read the directory the harness staged
+    assert(stage() === dir)
+  }
+
   test("eachQuery with an unknown name throws, names it, and builds no query") {
     val out = Files.createTempDirectory("graft-filter").resolve("out")
     var consumed = List.empty[String]

@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
 """Docs-vs-registry consistency gate (round 11): the round-10 verdict's
 "ledger drifted at round close" failure mode, automated. Reads the
-query names from the one registry in SparkEntry.scala (`Q("<name>"`
-entries have a DuckDB twin, `RowsOnly("<name>"` entries do not) and
+query names from the one registry: `SparkEntry.registry` concatenates
+query families (`<Family>Queries.specs`), one file each under
+src/main/scala/graft/queries/, and the names are read from those files
+in that order (`Q("<name>"` entries have a DuckDB twin,
+`RowsOnly("<name>"` entries do not). A listed family file with no
+entry, or an entry outside the listed files, is drift. Then it
 cross-checks
 
   1. README's "<N> oracle-verified + <M> rows-only (<T> registered)"
@@ -32,19 +36,50 @@ import pathlib
 import re
 import sys
 
-def main() -> int:
+QUERIES_DIR = pathlib.Path("src/main/scala/graft/queries")
+# entries sit at the registry's 4-space indent, so a quoted name in SQL
+# text or a comment cannot masquerade as one
+ENTRY = re.compile(r'^    (Q|RowsOnly)\("([a-z0-9_]+)"', re.M)
+
+
+def registry_entries(problems):
+    """(kind, name) per registry entry, in registration order: the
+    family files `SparkEntry.registry` lists, read in its order."""
     src = open("src/main/scala/graft/SparkEntry.scala", encoding="utf-8").read()
-    registry = src[src.index("lazy val registry"):src.index("lazy val queries")]
-    # entries sit at the registry's 4-space indent, so a quoted name in
-    # SQL text or a comment cannot masquerade as one
-    entries = re.findall(r'^    (Q|RowsOnly)\("([a-z0-9_]+)"', registry, re.M)
+    start = src.index("lazy val registry")
+    registry = src[start:src.index("lazy val queries", start)]
+    families = re.findall(r"\b(\w+Queries)\.specs\b", registry)
+    if not families:
+        problems.append("no <Family>Queries.specs found in SparkEntry.registry")
+    entries, listed = [], set()
+    for family in families:
+        path = QUERIES_DIR / f"{family}.scala"
+        listed.add(path)
+        if not path.is_file():
+            problems.append(f"{path}: listed in SparkEntry.registry but missing")
+            continue
+        found = ENTRY.findall(path.read_text(encoding="utf-8"))
+        if not found:
+            problems.append(f"{path}: no Q(\"…\" / RowsOnly(\"…\" entries")
+        entries += found
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        if path not in listed and ENTRY.search(path.read_text(encoding="utf-8")):
+            problems.append(f"{path}: registry-indent entries outside the families "
+                            "SparkEntry.registry lists (not registered)")
+    return entries
+
+
+def main() -> int:
+    problems = []
+    entries = registry_entries(problems)
     if not entries:
-        print("DRIFT: no Q(\"…\" / RowsOnly(\"…\" entries found in SparkEntry's registry")
+        for p in problems:
+            print(f"DRIFT: {p}")
+        print("DRIFT: no Q(\"…\" / RowsOnly(\"…\" entries found in the registry")
         return 1
     queries = {name for _, name in entries}
     rows_only = sorted(name for kind, name in entries if kind == "RowsOnly")
     n_oracle = len(queries) - len(rows_only)
-    problems = []
 
     readme = open("README.md", encoding="utf-8").read()
     m = re.search(r"\*\*(\d+) oracle-verified \+ (\d+) rows-only queries \((\d+)\s*\nregistered\)\*\*", readme)

@@ -3,12 +3,12 @@
 
 Usage:
   sbt "runMain graft.Explain /root/testdata/sf0.001 /tmp/plans"
-  python3 tools/plan_audit.py /tmp/plans [expected_plan_count]
+  python3 tools/plan_audit.py /tmp/plans
 
-Pass the registry size (the README's registered-query count) as the
-second argument: graft.Explain swallows per-query failures (no .txt is
-written), so a missing plan would otherwise escape the cartesian gate
-silently — with the expected count, a partial dump exits 2.
+graft.Explain writes failures.json next to the plans: every query whose
+plan could not be built, as [{query, error}]. A failed query has no
+plan to audit, so any entry in it exits 2 naming every failed query,
+and so does a dump without failures.json (not an Explain dump).
 
 Verdicts:
   - CartesianProduct: always a finding — no registered query may plan one.
@@ -19,23 +19,26 @@ Verdicts:
     is data-scale IS a finding; the list keeps that check one glance away.
 """
 import glob
+import json
 import os
 import sys
 
 
 def main() -> int:
     d = sys.argv[1] if len(sys.argv) > 1 else "/tmp/plans"
-    files = sorted(glob.glob(f"{d}/*.txt"))
-    if not files:
-        print(f"no plans under {d} — run graft.Explain first", file=sys.stderr)
+    failures_path = os.path.join(d, "failures.json")
+    if not os.path.isfile(failures_path):
+        print(f"no failures.json under {d} — run graft.Explain first", file=sys.stderr)
         return 2
-    if len(sys.argv) > 2:
-        expected = int(sys.argv[2])
-        if len(files) != expected:
-            print(f"PARTIAL DUMP: {len(files)} plans, expected {expected} — "
-                  "some queries failed to explain (check Explain's stderr); "
-                  "the missing plans are UNAUDITED", file=sys.stderr)
-            return 2
+    with open(failures_path, encoding="utf-8") as fh:
+        failures = json.load(fh)
+    if failures:
+        print(f"{len(failures)} queries failed to explain; their plans are UNAUDITED:",
+              file=sys.stderr)
+        for f in failures:
+            print(f"  {f['query']}: {f['error']}", file=sys.stderr)
+        return 2
+    files = sorted(glob.glob(f"{d}/*.txt"))
     cart, bnlj = [], []
     for f in files:
         t = open(f, encoding="utf-8").read()
