@@ -75,13 +75,19 @@ class RegistrySpec extends AnyFunSuite {
     assert(found.length === 1, found.map(_.getName).mkString(", "))
     val m = found.head
     m.setAccessible(true)
-    def stage(): String = m.invoke(SparkEntry, TestSpark.spark, "/root/testdata/sf0.001",
-      Int.box(1), Int.box(4)).asInstanceOf[String]
+    val sf = Files.createTempDirectory("graft-stage-sf").toString
+    TestSpark.spark.range(8).selectExpr("id AS event_id",
+        "timestamp_seconds(1700000000 + id * 60) AS ts", "id % 3 AS user_id",
+        "'click' AS event_type", "CAST(id AS DOUBLE) AS value", "'{}' AS props")
+      .coalesce(1).write.parquet(s"$sf/events.parquet")
+    def stage(): String =
+      m.invoke(SparkEntry, TestSpark.spark, sf, Int.box(1), Int.box(4)).asInstanceOf[String]
     val dir = stage()
     assert(new java.io.File(dir).isDirectory)
     // memoized per (sfDir, copies, filesPerCopy): the streaming queries
     // read the directory the harness staged
     assert(stage() === dir)
+    graft.sources.FsUtil.deleteRecursively(new java.io.File(sf))
   }
 
   test("eachQuery with an unknown name throws, names it, and builds no query") {

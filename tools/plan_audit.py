@@ -2,7 +2,7 @@
 """Scan a graft.Explain dump for scale-killer operators.
 
 Usage:
-  sbt "runMain graft.Explain /root/testdata/sf0.001 /tmp/plans"
+  sbt "runMain graft.Explain <sfDir> /tmp/plans"
   python3 tools/plan_audit.py /tmp/plans
 
 graft.Explain writes failures.json next to the plans: every query whose
