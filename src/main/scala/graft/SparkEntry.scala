@@ -287,7 +287,7 @@ object SparkEntry {
     * too-short cases. pos is the array index (injected head at 0-1,
     * body at 2.., tail last); the twin mirrors the same arithmetic. */
   private[graft] def c4LineFixture(s: SparkSession, d: String): DataFrame = {
-    val ws = filter(split(col("text"), "\\s+"), w => length(w) > 0)
+    val ws = TextOps.rawTokens(col("text"))
     val docs = t(s, d).documents.select(col("doc_id"), ws.as("ws"))
       .withColumn("np", ceil(size(col("ws")).cast("double") / 12).cast("int"))
     val body = when(col("np") > 0, transform(sequence(lit(1), col("np")), i => {

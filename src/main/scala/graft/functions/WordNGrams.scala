@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.operators.TextOps
 
 /** Native table-valued generator: word n-grams of a text column, one
   * output row per n-gram — the 2.10 taxonomy's missing species (scalar
@@ -57,7 +58,7 @@ case class WordNGrams(child: Expression, n: Expression)
     if (t == null) Iterator.empty
     else {
       val words = t.asInstanceOf[UTF8String].toString
-        .split("[ \t\n\f\r]+").iterator.filter(_.nonEmpty).toArray
+        .split(TextOps.TokenSepRe).iterator.filter(_.nonEmpty).toArray
       if (words.length < k) Iterator.empty
       else new Iterator[InternalRow] {
         private[this] var i = 0

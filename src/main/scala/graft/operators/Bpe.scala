@@ -101,9 +101,8 @@ object Bpe {
   def learnMerges(docs: DataFrame, numMerges: Int, vocabCap: Int = 50000,
                   textCol: String = "text"): Seq[(String, String)] = {
     val freqRows = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("tok"))
+      .select(explode(TextOps.rawTokens(col(textCol))).as("tok"))
       .select(lower(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word"))
       .limit(vocabCap)
@@ -189,9 +188,8 @@ object Bpe {
                      textCol: String = "text",
                      alphabet: Option[Set[String]] = None): DataFrame = {
     val words = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("tok"))
+      .select(explode(TextOps.rawTokens(col(textCol))).as("tok"))
       .select(lower(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     words
       .select(explode(tokens(col("word"), merges, alphabet)).as("token"), col("cnt"))
@@ -209,9 +207,8 @@ object Bpe {
                      textCol: String = "text", idCol: String = "doc_id",
                      alphabet: Option[Set[String]] = None): DataFrame = {
     val docWords = docs
-      .select(col(idCol).as("doc_id"), explode(TextOps.tokens(col(textCol))).as("tok"))
+      .select(col(idCol).as("doc_id"), explode(TextOps.rawTokens(col(textCol))).as("tok"))
       .select(col("doc_id"), lower(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
     val perWord = docWords.select(col("word")).distinct()
       .select(col("word"), size(tokens(col("word"), merges, alphabet)).cast(LongType).as("n_toks"))
     docWords.join(perWord, Seq("word"))

@@ -571,7 +571,7 @@ object Corpus {
   def domainQualityGate(docs: DataFrame, domainCol: String = "host",
                         textCol: String = "text",
                         idCol: String = "doc_id"): DataFrame = {
-    val tk = filter(split(col(textCol), TextOps.TokenSepRe), t => length(t) > 0)
+    val tk = TextOps.rawTokens(col(textCol))
     val hits = size(filter(tk, t =>
       array_contains(array(AllStopwords.map(lit): _*), lower(t))))
     val perDoc = docs.select(col(domainCol),
@@ -662,7 +662,7 @@ object Corpus {
                             idCol: String = "doc_id",
                             sizeHint: Option[Long] = None,
                             cutover: Long = TotalOrder.WindowCutover): DataFrame = {
-    val tk = filter(split(col(textCol), TextOps.TokenSepRe), t => length(t) > 0)
+    val tk = TextOps.rawTokens(col(textCol))
     val hits = size(filter(tk, t =>
       array_contains(array(AllStopwords.map(lit): _*), lower(t))))
     val score = hits.cast(LongType) / size(tk).cast(LongType)
@@ -946,8 +946,7 @@ object Corpus {
   def lengthBucketPlan(docs: DataFrame, nBuckets: Int = 8,
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val tc = docs.select(col(idCol).as("doc_id"),
-      size(filter(split(col(textCol), TextOps.TokenSepRe), t => length(t) > 0))
-        .cast(LongType).as("n_toks"))
+      size(TextOps.rawTokens(col(textCol))).cast(LongType).as("n_toks"))
     val binned = TotalOrder.globalNtile(tc,
       Seq(col("n_toks").asc, col("doc_id").asc), nBuckets, "bucket")
     val global = tc.agg(max(col("n_toks")).as("gmax"))
@@ -974,8 +973,7 @@ object Corpus {
     * from any union of deltas. */
   def datasetCardCube(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("source"),
-        size(filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))
-          .cast(LongType).as("n_toks"),
+        size(TextOps.rawTokens(col("text"))).cast(LongType).as("n_toks"),
         length(col("text")).cast(LongType).as("n_chars"))
       .join(TextQuality.gopherQualityGate(docs).select(col("doc_id"), col("keep")), "doc_id")
       .groupBy(col("lang"), col("source"), col("n_toks"))
@@ -1147,11 +1145,6 @@ object Corpus {
         (col("__rk") <= expr(s"(__n * $keepPermille + 999) div 1000")).as("selected"))
   }
 
-  private def dsirWords(df: DataFrame, textCol: String, idCol: String) = df
-    .select(col(idCol).as("doc_id"), explode(TextOps.tokens(col(textCol))).as("tok"))
-    .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-    .where(length(col("word")) > 0)
-
   /** The frozen importance model behind [[dsirSelect]] — the per-word
     * Δ = ln p_target(w) − ln p_pool(w) relation under add-1-smoothed
     * unigram models over the union vocabulary. Exposed on its own so
@@ -1161,8 +1154,8 @@ object Corpus {
     * aggregates behind it. */
   def dsirModel(pool: DataFrame, target: DataFrame,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    dsirModelKeyed(dsirWords(pool, textCol, idCol),
-      dsirWords(target, textCol, idCol), "word")
+    dsirModelKeyed(TextOps.docWords(pool, textCol, idCol),
+      TextOps.docWords(target, textCol, idCol), "word")
 
   /** [[dsirModel]] under the hashed memory bound: identical smoothing
     * and Δ arithmetic, keyed on xxhash64(word) mod `m` — AT MOST m
@@ -1179,10 +1172,10 @@ object Corpus {
       dsirBuckets(target, m, textCol, idCol), "bucket")
   }
 
-  /** The per-doc hashed token→bucket relation: the [[dsirWords]]
+  /** The per-doc hashed token→bucket relation: the [[TextOps.docWords]]
     * stream with each clean word collapsed to xxhash64(word) mod m. */
   private def dsirBuckets(df: DataFrame, m: Long, textCol: String, idCol: String) =
-    dsirWords(df, textCol, idCol)
+    TextOps.docWords(df, textCol, idCol)
       .select(col("doc_id"), pmod(xxhash64(col("word")), lit(m)).as("bucket"))
 
   /** The model body shared by the exact and hashed variants: add-1
@@ -1236,7 +1229,7 @@ object Corpus {
     * omission. */
   def dsirScore(docs: DataFrame, model: DataFrame,
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    dsirScoreKeyed(dsirWords(docs, textCol, idCol), model, "word")
+    dsirScoreKeyed(TextOps.docWords(docs, textCol, idCol), model, "word")
 
   /** Score documents against a frozen [[dsirModelHashed]]: the same
     * per-doc DECIMAL fold, but the broadcast relation is m-bounded —

@@ -161,9 +161,7 @@ object Dedup {
     // scans and sizes the fan by source bytes, and the downstream
     // 8-byte distinct is unchanged
     graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        // drop empty tokens (split keeps a trailing "" on trailing whitespace)
-        filter(split(col(textCol), TextOps.TokenSepRe), t => length(t) > 0).as("toks"))
+      .select(col(idCol).as("doc_id"), TextOps.rawTokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= w)
       .select(col("doc_id"),
         explode(expr(s"transform(sequence(0, size(toks) - $w), i -> concat_ws(' ', slice(toks, i + 1, $w)))")).as("shingle"))
@@ -207,8 +205,7 @@ object Dedup {
   def winnowingFingerprints(docs: DataFrame, k: Int = 3, w: Int = 4,
                             textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val grams = docs
-      .select(col(idCol).as("doc_id"),
-        filter(split(col(textCol), TextOps.TokenSepRe), t => length(t) > 0).as("toks"))
+      .select(col(idCol).as("doc_id"), TextOps.rawTokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= k + w - 1) // at least one full window
       .select(col("doc_id"),
         posexplode(expr(s"transform(sequence(0, size(toks) - $k), i -> concat_ws(' ', slice(toks, i + 1, $k)))")))
@@ -596,10 +593,7 @@ object Dedup {
     * of bit j over all term hashes is positive. Two shuffles: word
     * counts per doc, then 64 conditional sums per doc. */
   def simhash(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val wordCounts = docs
-      .select(col(idCol).as("doc_id"), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    val wordCounts = TextOps.docWords(docs, textCol, idCol)
       .groupBy("doc_id", "word")
       .agg(count(lit(1)).as("w_cnt"))
       .withColumn("h", xxhash64(col("word")))

@@ -175,7 +175,7 @@ object Html {
     // already wide skips it, a tiny fixture fans to a few tasks, not
     // blindly to core count. Row-wise results are unchanged.
     val fanned = graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol))
-    val ws = filter(split(escapeHtml(col(textCol)), "\\s+"), w => length(w) > 0)
+    val ws = TextOps.rawTokens(escapeHtml(col(textCol)))
     val nPara = ceil(size(col("ws")).cast(DoubleType) / wordsPerPara).cast(IntegerType)
     // guard the empty case: sequence(1, 0) would step BACKWARDS
     val paras = when(col("np") > 0,
@@ -270,8 +270,7 @@ object Html {
   def anchorPageFromDocs(docs: DataFrame, textCol: String = "text",
                          idCol: String = "doc_id",
                          linkSpace: Int = DefaultLinkSpace): DataFrame = {
-    val first = coalesce(
-      element_at(filter(split(col(textCol), "\\s+"), w => length(w) > 0), 1), lit(""))
+    val first = coalesce(element_at(TextOps.rawTokens(col(textCol)), 1), lit(""))
     docs.select(col(idCol).as("doc_id"), escapeHtml(first).as("fw"),
         array((col(idCol) * 7 + 3) % linkSpace,
           (col(idCol) * 13 + 5) % linkSpace,

@@ -54,15 +54,6 @@ object Multimodal {
     graft.plans.FanOut.fanOutIfNarrow(docs, col("doc_id"),
       graft.plans.FanOut.CodecBytesPerTask)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("n_bytes", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType))))))
-
   /** Build an opaque media table from the documents table: text bytes
     * stand in for an encoded payload (deterministic fake acquisition).
     * Metadata derives width/height from byte length so downstream
@@ -98,10 +89,6 @@ object Multimodal {
     while (j < featureDim) { hist(j) /= bytes.length; j += 1 }
     hist
   }
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("features", ArrayType(FloatType, containsNull = false))))
 
   /** Feature extraction INSIDE the Catalyst plan: the stub decoder runs
     * as a scalar UDF over the binary column, so column pruning, AQE and

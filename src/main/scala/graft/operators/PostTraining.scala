@@ -204,9 +204,8 @@ object PostTraining {
                     alphabet: Option[Set[String]] = Some(Bpe.DefaultAlphabet)): DataFrame = {
     val tw = turns
       .select(col("conv_id"), col("turn_idx"),
-        explode(TextOps.tokens(col("content"))).as("tok"))
+        explode(TextOps.rawTokens(col("content"))).as("tok"))
       .select(col("conv_id"), col("turn_idx"), lower(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
     val perWord = tw.select(col("word")).distinct()
       .select(col("word"),
         size(Bpe.tokens(col("word"), merges, alphabet)).cast(LongType).as("__n"))

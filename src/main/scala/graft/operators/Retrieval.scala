@@ -43,17 +43,14 @@ object Retrieval {
     * before grouping. Tokenization is the reference-exact pipeline
     * (TextOps.words) so index terms agree with the wordcount family. */
   def docTermFreqs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    // Optimization r18: the tokenize + cleanWord explode runs inside
+    // Optimization r18: the tokenize + clean explode runs inside
     // the SCAN task until the (word, doc) aggregate's exchange — one
     // task end-to-end on the single-file documents fixture — for every
     // retrieval consumer (bm25/tfidf/mmr/inverted-index families).
     // Same gated device and explode weight as the TextQuality n-gram
     // tokenize passes; wide scans skip it (the 100 TB arm).
-    graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol),
-        graft.plans.FanOut.ExplodeBytesPerTask)
-      .select(col(idCol).as("doc_id"), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    TextOps.docWords(graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol),
+        graft.plans.FanOut.ExplodeBytesPerTask), textCol, idCol)
       .groupBy(col("word"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
 

@@ -37,6 +37,12 @@ object TextOps {
     * [[TokenSepRe]] for the \x0B caveat). */
   def tokens(text: Column): Column = split(text, TokenSepRe)
 
+  /** The non-empty raw tokens of `text`, in order: [[tokens]] without
+    * the `""` a leading or trailing separator (or an empty document)
+    * leaves. The shingle, stopword and token-count operators use it;
+    * keep [[tokens]] only where raw positions must count the empties. */
+  def rawTokens(text: Column): Column = filter(tokens(text), t => length(t) > 0)
+
   /** Strip punctuation then lowercase (map_reduce.cpp:160-167):
     * `don't`→`dont`, `end.`→`end`, `co-op`→`coop`; digits kept. */
   def cleanWord(tok: Column): Column = lower(regexp_replace(tok, IspunctClass, ""))
@@ -57,6 +63,11 @@ object TextOps {
     * which is exact because no case mapping looks across a separator. */
   def words(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(explode(cleanTokens(col(textCol))).as("word"))
+
+  /** [[words]] keyed by document: one `(doc_id, word)` row per cleaned,
+    * non-empty word, `doc_id` being `idCol`. */
+  def docWords(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    docs.select(col(idCol).as("doc_id"), explode(cleanTokens(col(textCol))).as("word"))
 
   /** The flagship: global (word, count). Catalyst plans partial+final
     * HashAggregate around one Exchange — the map-side combine
@@ -151,9 +162,7 @@ object TextOps {
     * vocabulary above the floor. */
   def wordBurstiness(docs: DataFrame, minCf: Int = 20,
                      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    docWords(docs, textCol, idCol)
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("df"), sum(col("c")).as("cf"),

@@ -14,9 +14,6 @@ import graft.plans.Lineage.TruncateOps
   */
 object TextQuality {
 
-  /** Non-empty whitespace tokens of a text column. */
-  private def toks(c: Column): Column = filter(split(c, TextOps.TokenSepRe), t => length(t) > 0)
-
   /** Tokenizer-sizing coverage curve: for each candidate vocabulary
     * cutoff N, how much of the corpus's token OCCURRENCE mass the N
     * most frequent clean words cover (ties broken word-asc) — the
@@ -43,10 +40,7 @@ object TextQuality {
                          textCol: String = "text"): DataFrame = {
     require(cutoffs.nonEmpty && cutoffs.forall(_ > 0),
       s"vocabCoverageCurve needs positive cutoffs, got $cutoffs")
-    val counts = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("tok"))
-      .select(TextOps.cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    val counts = TextOps.words(docs, textCol)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     val ranked = TotalOrder.globalRankAuto(counts,
       Seq(desc("cnt"), asc("word")), rankCol = "rk")
@@ -98,10 +92,7 @@ object TextQuality {
     // into DECIMAL(38,6) and silently rounds the term (caught by the
     // oracle at 1 ulp). 28+9+1 = 38 keeps scale 12 exact; occ is a
     // per-doc occurrence count, far below 10^9 for any row-sized doc.
-    val dw = graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol))
-      .select(col(idCol).as("doc_id"), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    val dw = TextOps.docWords(graft.plans.FanOut.fanOutIfNarrow(docs, col(idCol)), textCol, idCol)
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("occ"))
       .truncateLineage // three consumers: vocab counts, total, probe join
     val counts = dw.groupBy(col("word")).agg(sum(col("occ")).as("cnt"))
@@ -307,7 +298,7 @@ object TextQuality {
                    idCol: String = "doc_id", posCol: String = "pos",
                    lineCol: String = "line"): DataFrame = {
     val l = col(lineCol)
-    val nWords = size(filter(split(l, "\\s+"), w => length(w) > 0))
+    val nWords = size(TextOps.rawTokens(l))
     val keep = l.rlike("[.!?\"]$") && nWords >= minWords &&
       !lower(l).contains("javascript") && !lower(l).contains("lorem ipsum") &&
       !l.contains("{")
@@ -346,7 +337,7 @@ object TextQuality {
                            dupBands: Seq[(Int, Double)] = Seq(5 -> 0.15, 6 -> 0.14,
                              7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)): DataFrame = {
     val ns = (topBands ++ dupBands).map(_._1)
-    val tk = toks(col(textCol))
+    val tk = TextOps.rawTokens(col(textCol))
     // two SMALL generators instead of one 9-transform concat: building
     // all nine gram arrays as one fused struct expression evaluated
     // the full 9-way when/transform/slice tree per document row —
@@ -446,7 +437,7 @@ object TextQuality {
                         minWords: Int = 50, maxWords: Int = 100000,
                         minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                         minAlphaFrac: Double = 0.8, minStopHits: Int = 2): DataFrame = {
-    val tk = toks(col(textCol))
+    val tk = TextOps.rawTokens(col(textCol))
     val n = size(tk)
     val meanLen = aggregate(tk, lit(0L), (acc, x) => acc + length(x))
       .cast(DoubleType) / n
@@ -558,7 +549,7 @@ object TextQuality {
     * IEEE divisions of integer counts — deterministic. */
   def qualityFeatures(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val t = col(textCol)
-    val tk = toks(t)
+    val tk = TextOps.rawTokens(t)
     val nTok = size(tk)
     val punctStripped = regexp_replace(t, TextOps.IspunctClass, "")
     val digitStripped = regexp_replace(t, "[0-9]", "")
@@ -708,7 +699,7 @@ object TextQuality {
     * gram)) because a per-row mode over an unbounded gram vocabulary is
     * not an array-fold at 100 TB document sizes. */
   def repetitionStats(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val tk = toks(col(textCol))
+    val tk = TextOps.rawTokens(col(textCol))
     def grams(w: Int) = expr(
       s"transform(sequence(0, size(toks) - $w), i -> concat_ws(' ', slice(toks, i + 1, $w)))")
     val narrow = docs
@@ -740,7 +731,7 @@ object TextQuality {
     val t = col(textCol)
     docs.select(
       col(idCol).as("doc_id"),
-      size(toks(t)).cast(LongType).as("ws_tokens"),
+      size(TextOps.rawTokens(t)).cast(LongType).as("ws_tokens"),
       size(regexp_extract_all(t, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))).cast(LongType).as("bpe_ish_tokens"),
       ceil(length(t) / lit(4.0)).cast(LongType).as("approx_llm_tokens"))
   }
@@ -750,7 +741,7 @@ object TextQuality {
     * emits the per-language scores so downstream filters can threshold
     * confidence. */
   def langId(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val tk = toks(col(textCol))
+    val tk = TextOps.rawTokens(col(textCol))
     val langs = Seq("en", "de", "es", "fr", "zh")
     val scored = docs.select(
       col(idCol).as("doc_id") +: langs.map(l => stopHits(tk, l).cast(LongType).as(s"s_$l")): _*)
@@ -830,9 +821,8 @@ object TextQuality {
     * content digest (Dedup.hashGroups) this is computable incrementally
     * and composable over chunks. */
   def fingerprint(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val cleaned = transform(toks(col(textCol)), t => TextOps.cleanWord(t))
-    val nonEmpty = filter(cleaned, w => length(w) > 0)
-    val fp = aggregate(nonEmpty, lit(0L), (acc, w) => acc * lit(1099511628211L) + xxhash64(w))
+    val fp = aggregate(TextOps.cleanTokens(col(textCol)), lit(0L),
+      (acc, w) => acc * lit(1099511628211L) + xxhash64(w))
     docs.select(col(idCol).as("doc_id"), fp.as("fp"))
   }
 
@@ -845,8 +835,7 @@ object TextQuality {
     * rows-only to hash-checked. Collision budget is ~n²/2·10⁹ per
     * corpus — fine for fingerprint comparison, not for dedup keys. */
   def fingerprintRef(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val cleaned = filter(transform(toks(col(textCol)), t => TextOps.cleanWord(t)),
-      w => length(w) > 0)
+    val cleaned = TextOps.cleanTokens(col(textCol))
     val wordHash = (w: Column) => coalesce(
       aggregate(filter(split(w, ""), c => length(c) > 0), lit(0L),
         (acc, ch) => acc + lit(22L) + lit(23L) * (ascii(ch) - lit(14L))), lit(0L))
@@ -888,7 +877,7 @@ object TextQuality {
     val cleaned = filter(transform(pieces, p => trim(p)), p => length(p) > 0)
     docs.select(col(idCol).as("doc_id"), posexplode(cleaned).as(Seq("i", "sentence")))
       .select(col("doc_id"), (col("i") + 1).cast(LongType).as("sent_idx"), col("sentence"),
-        size(filter(split(col("sentence"), TextOps.TokenSepRe), t => length(t) > 0))
+        size(TextOps.rawTokens(col("sentence")))
           .cast(LongType).as("n_words"))
   }
 
@@ -983,7 +972,7 @@ object TextQuality {
     * report null coverage rather than a lie. */
   def stopwordCoverage(docs: DataFrame, textCol: String = "text",
                        langCol: String = "lang"): DataFrame = {
-    val tk = toks(col(textCol))
+    val tk = TextOps.rawTokens(col(textCol))
     val langs = Stopwords.keys.toSeq.sorted
     val hits = langs.foldLeft(lit(null).cast(IntegerType): Column) { (acc, l) =>
       when(col(langCol) === l, stopHits(tk, l)).otherwise(acc)
@@ -1068,7 +1057,7 @@ object TextQuality {
                   idCol: String = "doc_id"): DataFrame = {
     val t = col(textCol)
     val nS = greatest(regexp_count(t, lit("[.!?]+")), lit(1)).cast(LongType)
-    val nW = greatest(size(toks(t)), lit(1)).cast(LongType)
+    val nW = greatest(size(TextOps.rawTokens(t)), lit(1)).cast(LongType)
     val nSy = greatest(regexp_count(lower(t), lit("[aeiouy]+")), lit(1)).cast(LongType)
     docs.select(col(idCol).as("doc_id"),
         nS.as("n_sents"), nW.as("n_words"), nSy.as("n_syll"))
@@ -1095,9 +1084,7 @@ object TextQuality {
     * per-doc state is its vocabulary, never its token list. */
   def lexicalDiversity(docs: DataFrame, textCol: String = "text",
                        idCol: String = "doc_id"): DataFrame = {
-    docs.select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("tok"))
-      .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
+    TextOps.docWords(docs, textCol, idCol)
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("n"))
       .groupBy(col("doc_id"))
       .agg(sum(col("n")).as("n_tokens"),
@@ -1135,7 +1122,7 @@ object TextQuality {
     val t = col(textCol)
     val nChars = greatest(length(t), lit(1)).cast(LongType)
     val nLines = (regexp_count(t, lit("\n")) + lit(1)).cast(LongType)
-    val nW = greatest(size(toks(t)), lit(1)).cast(LongType)
+    val nW = greatest(size(TextOps.rawTokens(t)), lit(1)).cast(LongType)
     val sym = regexp_count(t, lit("[{}()\\[\\];=<>]")).cast(LongType)
     val indented = regexp_count(t, lit("(?m)^(  |\t)")).cast(LongType)
     val semiEol = regexp_count(t, lit("(?m);[ \t]*$")).cast(LongType)

@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 /** Lineage truncation — the single seam through which EVERY relation
   * pin in the engine flows: the per-round state of iterative operators
   * (PageRank, HITS, LPA, k-core, star components, k-means, MMR) and
-  * the ~80 one-shot pins that materialize a relation consumed by two+
+  * the one-shot pins that materialize a relation consumed by two+
   * downstream plans (shingle tables, term frequencies, LakeTable merge
-  * bases, ...). Each pinned result must cut its plan lineage or the
+  * bases, ...): 120 `truncateLineage` / `Lineage.truncate` call sites
+  * under src/main. Each pinned result must cut its plan lineage or the
   * optimizer re-analyzes a plan that doubles per iteration (loops) or
   * recomputes the shared subplan per consumer (one-shots).
   *

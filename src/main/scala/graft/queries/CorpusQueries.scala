@@ -306,8 +306,7 @@ object CorpusQueries {
       val targets = Seq(("en", 0.5), ("de", 0.3), ("zh", 0.2))
       val supply = t(s, d).documents
         .select(col("lang"),
-          size(filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))
-            .cast("long").as("n_toks"))
+          size(TextOps.rawTokens(col("text"))).cast("long").as("n_toks"))
         .groupBy(col("lang")).agg(sum(col("n_toks")).as("supply_tokens"))
       supply.join(broadcast(s.createDataFrame(targets).toDF("lang", "w")), "lang")
         .select(col("lang"), col("supply_tokens"),

@@ -1107,8 +1107,7 @@ object CrawlPipelineQueries {
     // is the one-shot batch chain over whitespace-normalized documents
     Q("streaming_html_ingest", (s, d) => {
       val (ss, pages) = pageStream(s, d)
-      val collapsed = concat_ws(" ",
-        filter(split(col("text"), "\\s+"), w => length(w) > 0))
+      val collapsed = concat_ws(" ", TextOps.rawTokens(col("text")))
       val storeDir = java.nio.file.Files.createTempDirectory("graft-htmlingest-store").toString
       t(ss, d).documents.where(col("doc_id") % 2 === 0)
         .select(sha2(collapsed, 256).as("h"))

@@ -118,8 +118,7 @@ object DedupSearchQueries {
     Q("winnowing_density_audit", (s, d) => {
       val docs = t(s, d).documents
       val grams = docs
-        .select(size(filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))
-          .cast("long").as("n_toks"))
+        .select(size(TextOps.rawTokens(col("text"))).cast("long").as("n_toks"))
         .where(col("n_toks") >= 6)
         .agg(sum(col("n_toks") - 2 - 3).as("n_windows"),
           sum(col("n_toks") - 2).as("n_grams"))
@@ -935,8 +934,7 @@ object DedupSearchQueries {
       clones
         // a clone with < 3 whitespace tokens has no shingles, hence no
         // bands to collide on — outside the guarantee on both engines
-        .where(size(filter(split(col("text"), TextOps.TokenSepRe),
-          tk => length(tk) > 0)) >= 3)
+        .where(size(TextOps.rawTokens(col("text"))) >= 3)
         .join(admitted, Seq("doc_id"), "left_anti")
         .select(col("doc_id")).orderBy("doc_id")
     })(

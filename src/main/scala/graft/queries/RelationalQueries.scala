@@ -247,8 +247,7 @@ object RelationalQueries {
     // slice, join — all codegen'd builtins
     Q("array_funcs", (s, d) => t(s, d).documents
       .select(col("doc_id"),
-        array_sort(array_distinct(
-          filter(split(col("text"), TextOps.TokenSepRe), x => length(x) > 0))).as("toks"))
+        array_sort(array_distinct(TextOps.rawTokens(col("text")))).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_distinct"),
         concat_ws("|", slice(col("toks"), 1, 3)).as("first3"))

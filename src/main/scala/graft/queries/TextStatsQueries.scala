@@ -136,10 +136,7 @@ object TextStatsQueries {
     // the crawl is re-fetching known material; types are credited to
     // the FIRST doc containing them (exact, no sampling)
     Q("heaps_curve", (s, d) => {
-      val dw = t(s, d).documents
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-        .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
-        .where(length(col("word")) > 0)
+      val dw = TextOps.docWords(t(s, d).documents)
       val tokensPerBucket = dw
         .groupBy((col("doc_id") / 50).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_tok"))
@@ -764,8 +761,7 @@ object TextStatsQueries {
         .unionByName(tb.events.select(
           concat_ws(" ", col("event_type"), col("props")).as("text")))
       val words = corpus
-        .select(explode(TextOps.tokens(col("text"))).as("tok"))
-        .where(length(col("tok")) > 0)
+        .select(explode(TextOps.rawTokens(col("text"))).as("tok"))
         .select(lower(col("tok")).as("word"))
       val wc = words.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       wc.select(col("cnt"),
@@ -812,8 +808,7 @@ object TextStatsQueries {
         when(col("lang") === "zh", concat(col("text"), lit(" " + OovFixtureTok)))
           .otherwise(col("text")).as("text"))
       val dw = stitched.select(col("doc_id"),
-          explode(TextOps.tokens(col("text"))).as("tok"))
-        .where(length(col("tok")) > 0)
+          explode(TextOps.rawTokens(col("text"))).as("tok"))
         .select(col("doc_id"), lower(col("tok")).as("word"))
       val wt = dw.select(col("word")).distinct()
         .select(col("word"),
@@ -994,7 +989,7 @@ object TextStatsQueries {
     Q("pack_stats", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
-          size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
+          size(TextOps.rawTokens(col("chunk"))).cast("long"))
       Corpus.packChunks(ch, tokensPerPack = 64L, nShards = 8)
         .groupBy(col("shard"), col("pack_id"))
         .agg(count(lit(1)).as("n_entries"), sum(col("n_tokens")).as("pack_tokens"))
@@ -1039,7 +1034,7 @@ object TextStatsQueries {
     Q("packed_sequences", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
-          size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
+          size(TextOps.rawTokens(col("chunk"))).cast("long"))
       Corpus.packChunks(ch, tokensPerPack = 64L, nShards = 8)
         .select(col("shard"), col("pack_id"), col("doc_id"), col("chunk_idx"),
           col("n_tokens"), col("start_off"))
@@ -1055,7 +1050,7 @@ object TextStatsQueries {
     Q("packed_text", (s, d) => {
       val ch = Corpus.chunk(t(s, d).documents.select(col("doc_id"), col("text")), size = 128)
         .withColumn("n_tokens",
-          size(filter(split(col("chunk"), TextOps.TokenSepRe), x => length(x) > 0)).cast("long"))
+          size(TextOps.rawTokens(col("chunk"))).cast("long"))
       Corpus.assemblePacks(Corpus.packChunks(ch, tokensPerPack = 64L, nShards = 8))
         .orderBy("shard", "pack_id")
     })(

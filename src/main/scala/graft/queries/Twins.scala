@@ -706,9 +706,8 @@ object Twins {
     * then packed 64 tokens a pack over 8 shards. */
   private[queries] def bpePackedChunks(ch: DataFrame): DataFrame = {
     val chunkWords = ch
-      .select(col("doc_id"), col("chunk_idx"), explode(TextOps.tokens(col("chunk"))).as("tok"))
+      .select(col("doc_id"), col("chunk_idx"), explode(TextOps.rawTokens(col("chunk"))).as("tok"))
       .select(col("doc_id"), col("chunk_idx"), lower(col("tok")).as("word"))
-      .where(length(col("word")) > 0)
     val perWord = chunkWords.select(col("word")).distinct()
       .select(col("word"), size(Bpe.tokens(col("word"), Bpe.DefaultMerges,
         Some(Bpe.DefaultAlphabet))).cast("long").as("n_toks"))

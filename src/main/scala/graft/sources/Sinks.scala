@@ -26,16 +26,6 @@ object Sinks {
   def referenceLineFormat(word: String = "word", cnt: String = "cnt"): Column =
     concat(lit("<"), col(word), lit(", "), col(cnt), lit("> "))
 
-  /** Columnar sink for engine-to-engine handoff. */
-  def writeParquet(df: DataFrame, outPath: String, partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(outPath)
-  }
-
-  /** CSV sink with header — interchange with the DuckDB/pandas world. */
-  def writeCsv(df: DataFrame, outPath: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(outPath)
-
   /** Size-governed parquet sink — the small-files antidote. At scale
     * the default failure mode is a shuffle.partitions-sized write
     * producing thousands of KB-files per job (and millions across a

@@ -43,7 +43,7 @@ object LearnBpe {
         concat_ws(" ", col("event_type"), col("props")).as("text")))
     val merges = Bpe.learnMerges(corpus, numMerges)
     val alphabet = corpus
-      .select(explode(TextOps.tokens(col("text"))).as("tok"))
+      .select(explode(TextOps.rawTokens(col("text"))).as("tok"))
       .select(explode(split(lower(col("tok")), "")).as("ch"))
       .where(length(col("ch")) > 0)
       .distinct().orderBy("ch")

@@ -73,11 +73,12 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   /** The per-token formula `words` had before it cleaned each document
-    * once: split, clean every token, drop the empty ones. */
+    * once: split, clean every token, drop the empty ones; keyed by
+    * `doc_id`, the formula `docWords` replaced. */
   private def perTokenWords(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions.{col, explode, length}
-    df.select(explode(TextOps.tokens(col("text"))).as("tok"))
-      .select(TextOps.cleanWord(col("tok")).as("word"))
+    df.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), TextOps.cleanWord(col("tok")).as("word"))
       .where(length(col("word")) > 0)
   }
 
@@ -105,9 +106,14 @@ class TextOpsSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val texts = Seq("", " \t\n\f\r", "ΟΔΟΣ. ΛΟΓΟΣ\u000BΣ") ++ Seq.fill(300)(randomDoc(rnd))
       val df = docs(texts: _*)
+      val perToken = perTokenWords(df)
+      val keyed = perToken.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       val got = TextOps.words(df).collect().map(_.getString(0)).sorted.toSeq
-      val want = perTokenWords(df).collect().map(_.getString(0)).sorted.toSeq
+      val want = keyed.map(_._2).sorted
       assert(got === want, s"seed $seed")
+      val byDoc = TextOps.docWords(df)
+      assert(byDoc.schema === perToken.schema, s"seed $seed")
+      assert(byDoc.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq === keyed, s"seed $seed")
       // the generator reached the context-sensitive and growing mappings
       assert(want.exists(_.endsWith("ς")) && want.exists(_.contains("i\u0307")), s"seed $seed")
     }
@@ -148,14 +154,21 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("property: cleanTokens == filter(transform(tokens, cleanWord), non-empty), element by element") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, filter, length, lower, split, transform}
     for (seed <- Seq(1, 2, 3)) {
+      val text = col("text")
       val rows = byteDocs(seed)
-        .select(col("doc_id"), TextOps.cleanTokens(col("text")).as("got"), composedClean(col("text")).as("want"))
+        .select(col("doc_id"), TextOps.cleanTokens(text).as("got"), composedClean(text).as("want"),
+          TextOps.rawTokens(text), filter(split(text, TextOps.TokenSepRe), t => length(t) > 0),
+          // the BPE word shape: lower after the empty drop == lower, then drop
+          transform(TextOps.rawTokens(text), t => lower(t)),
+          filter(transform(TextOps.tokens(text), t => lower(t)), w => length(w) > 0))
         .collect()
       rows.foreach { r =>
-        val (got, want) = (Option(r.getSeq[String](1)), Option(r.getSeq[String](2)))
+        val Seq(got, want, raw, rawWant, low, lowWant) = (1 to 6).map(i => Option(r.getSeq[String](i)))
         assert(got === want, s"seed $seed doc ${r.getLong(0)}")
+        assert(raw === rawWant, s"rawTokens, seed $seed doc ${r.getLong(0)}")
+        assert(low === lowWant, s"lowered rawTokens, seed $seed doc ${r.getLong(0)}")
       }
       val all = rows.flatMap(r => Option(r.getSeq[String](2)).getOrElse(Nil))
       // the documents reached the context-sensitive, growing and invalid cases
@@ -178,6 +191,18 @@ class TextOpsSpec extends AnyFunSuite {
       assert(got.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ===
         want.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq, s"seed $seed")
     }
+  }
+
+  test("\\x0B is not a separator: c4LineFilter and anchorPageFromDocs split like the RE2 twin") {
+    import graft.operators.{Html, TextQuality}
+    // DuckDB: string_split_regex('a' || chr(11) || 'b c', '\s+') = ['a\x0bb', 'c'];
+    // Java's \s would split at the \x0B as well
+    val vt = "a\u000Bb"
+    val lines = Seq((0L, 0, s"$vt c d e.")).toDF("doc_id", "pos", "line")
+    val r = TextQuality.c4LineFilter(lines, minWords = 5).head()
+    assert((r.getAs[Long]("n_lines"), r.getAs[Long]("n_kept")) === ((1L, 0L)), "4 words, not 5")
+    val html = Html.anchorPageFromDocs(docs(s"$vt c")).head().getAs[String]("html")
+    assert(html.contains(s">$vt 3</a>"), html)
   }
 
   test("clean_tokens resolves in SQL") {

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Docs-vs-registry consistency gate (round 11): the round-10 verdict's
+r"""Docs-vs-registry consistency gate (round 11): the round-10 verdict's
 "ledger drifted at round close" failure mode, automated. Reads the
 query names from the one registry: `SparkEntry.registry` concatenates
 query families (`<Family>Queries.specs`), one file each under
@@ -22,10 +22,17 @@ cross-checks
      (`spark.read.…`): a glob that expands past 32 paths is listed by a
      Spark job, where one directory root with `recursiveFileLookup` is
      listed on the driver,
-  7. no composed token clean under src/main: `filter(transform(
+  7. one tokenizer vocabulary under src/main: `filter(transform(
      TextOps.tokens(x), … cleanWord …), … length … > 0)` or
      `size(filter(TextOps.tokens(x), … length(… cleanWord …) > 0))` is
-     `TextOps.cleanTokens(x)`, the one-pass byte kernel, and `size` of it.
+     `TextOps.cleanTokens(x)`, the one-pass byte kernel, and `size` of
+     it. Outside TextOps.scala, three more shapes are flagged:
+     `explode(TextOps.tokens(x))` followed within two lines by
+     `cleanWord` is `TextOps.docWords`/`TextOps.words`;
+     `filter(split(x, …TokenSepRe), …)` is `TextOps.rawTokens(x)`; and a
+     Spark `split(x, "\\s+")` is `TextOps.rawTokens(x)` too, since Java's
+     `\s` matches \x0B where the DuckDB twin's RE2 `\s` does not. Twin
+     SQL (`string_split_regex`, `list_filter`) matches none of them.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -67,6 +74,26 @@ def registry_entries(problems):
             problems.append(f"{path}: registry-indent entries outside the families "
                             "SparkEntry.registry lists (not registered)")
     return entries
+
+
+def call_args(text, open_paren):
+    """The text between the parenthesis at `open_paren` and its match,
+    skipping double-quoted Scala string literals."""
+    depth, i = 0, open_paren
+    while i < len(text):
+        c = text[i]
+        if c == '"':
+            i += 1
+            while i < len(text) and text[i] not in '"\n':
+                i += 2 if text[i] == "\\" else 1
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return text[open_paren + 1:i]
+        i += 1
+    return text[open_paren + 1:]
 
 
 def main() -> int:
@@ -139,12 +166,32 @@ def main() -> int:
         r"length\([^;]{0,40}?>\s*0\s*\)"
         r"|filter\(\s*TextOps\.tokens\([^;]{0,200}?length\(\s*TextOps\.cleanWord[^;]{0,80}?>\s*0\s*\)",
         re.S)
+    # the tokenizer spelt out by hand; an identifier character (or `.`)
+    # before the call name keeps out DuckDB's `list_filter(` and
+    # `string_split_regex(` and Java's `String.split(`
+    explode_clean = re.compile(
+        r"(?<![\w.])explode\(\s*TextOps\.tokens\((?:[^\n]*\n){0,2}?[^\n]*?cleanWord")
+    raw_split = re.compile(r"(?<![\w.])filter\(\s*split\(")
+    ws_split = re.compile(r"(?<![\w.])split\(")
     for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
         text = path.read_text(encoding="utf-8")
+        line = lambda i: text.count("\n", 0, i) + 1
         for m in composed.finditer(text):
-            n = text.count("\n", 0, m.start()) + 1
-            problems.append(f"{path}:{n}: composed tokens/cleanWord/length filter, "
-                            "use TextOps.cleanTokens")
+            problems.append(f"{path}:{line(m.start())}: composed tokens/cleanWord/length "
+                            "filter, use TextOps.cleanTokens")
+        if path.name == "TextOps.scala":
+            continue
+        for m in explode_clean.finditer(text):
+            problems.append(f"{path}:{line(m.start())}: explode(TextOps.tokens) then "
+                            "cleanWord, use TextOps.docWords or TextOps.words")
+        for m in raw_split.finditer(text):
+            if "TokenSepRe" in call_args(text, m.end() - 1):
+                problems.append(f"{path}:{line(m.start())}: filter(split(…, TokenSepRe)), "
+                                "use TextOps.rawTokens")
+        for m in ws_split.finditer(text):
+            if re.search(r',\s*"\\\\s\+"\s*$', call_args(text, m.end() - 1)):
+                problems.append(f"{path}:{line(m.start())}: split on \"\\\\s+\" (Java \\s "
+                                "matches \\x0B, RE2's does not), use TextOps.rawTokens")
 
     if problems:
         for p in problems:
