@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.LocalFs
 
 /** The one place a graft `SparkSession` is built. Every main (Verify,
   * Bench, Explain, CutoverBench, tools.LearnBpe) and the test suites get
@@ -20,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   *  - UI off, and tight `retained*` limits: long many-query sessions
   *    must not retain per-query UI state (plan strings for wide codegen
   *    plans are MBs each);
-  *  - log level WARN, so Spark INFO lines do not bury failures.
+  *  - log level WARN, so Spark INFO lines do not bury failures;
+  *  - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` (as
+  *    `spark.hadoop.` keys) name `sources.LocalFs`: local file I/O with
+  *    no `chmod`/`readlink` process per created or renamed file.
   */
 object GraftSession {
 
@@ -29,7 +33,7 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
 
   def apply(cores: Int): SparkSession = {
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
+    val builder = SparkSession.builder().withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -42,6 +46,7 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "50")
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "2000")
+    val spark = LocalFs.conf.foldLeft(builder) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.queries._
 
 /** The query entry points (build plan: SURVEY.md §7).
@@ -40,12 +40,41 @@ object SparkEntry {
     * is sized to key cardinality and state volume, not executor count.
     * newSession() shares the SparkContext but isolates SQL conf — no
     * global session state is mutated (the loader-side-effect
-    * anti-pattern flagged in round 1). */
-  private[graft] def streamSession(s: SparkSession, partitions: Int = 4): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", partitions)
-    ss
-  }
+    * anti-pattern flagged in round 1).
+    *
+    * One stream session per (session, partitions, state-store
+    * provider), made on first use: every session that starts a stream
+    * registers a listener bus on the shared one and never removes it,
+    * so a session per query kept each one, its catalog and its memory
+    * sinks reachable. `stateStore` names a provider class (e.g.
+    * [[RocksDbStateStore]]); None is Spark's default. The session also
+    * - checkpoints through `sources.LocalFs` (FileContext reads
+    *   `fs.AbstractFileSystem.file.impl` from this session's conf,
+    *   whoever built the SparkContext);
+    * - runs state-store maintenance every second, which unloads a
+    *   stopped query's providers (the coordinator has deactivated
+    *   them) instead of holding them for the default 60 s. */
+  private[graft] def streamSession(s: SparkSession, partitions: Int = 4,
+                                   stateStore: Option[String] = None): SparkSession =
+    streamSessions.synchronized {
+      streamSessions.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
+        .getOrElseUpdate((partitions, stateStore), {
+          val ss = s.newSession()
+          ss.conf.set("spark.sql.shuffle.partitions", partitions)
+          ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
+          stateStore.foreach(ss.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+          ss.conf.set(LocalFs.ContextKey, LocalFs.conf(LocalFs.ContextKey))
+          ss
+        })
+    }
+
+  /** [[streamSession]]'s sessions, weakly keyed by the session they were
+    * cut from. */
+  private val streamSessions = scala.collection.mutable.WeakHashMap.empty[SparkSession,
+    scala.collection.mutable.Map[(Int, Option[String]), SparkSession]]
+
+  private[graft] val RocksDbStateStore =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Staged micro-batch source dirs, memoized per (sfDir, copies,
     * filesPerCopy). Staging the events table into N parquet files is

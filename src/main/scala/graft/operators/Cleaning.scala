@@ -50,9 +50,11 @@ object Cleaning {
     regexp_replace(regexp_replace(c, UrlRe, "<URL>"), EmailRe, "<EMAIL>")
 
   /** Collapse whitespace runs to one space and trim the ends; strip
-    * control characters first so they can't glue tokens together. */
+    * control characters first so they can't glue tokens together.
+    * After [[CtrlRe]] (which maps \x0B to a space) the runs left are
+    * exactly [[TextOps.TokenSepRe]]'s. */
   def normalizeWhitespace(c: Column): Column =
-    trim(regexp_replace(regexp_replace(c, CtrlRe, " "), "\\s+", " "))
+    trim(regexp_replace(regexp_replace(c, CtrlRe, " "), TextOps.TokenSepRe, " "))
 
   /** Full cleaning pass: markup strip → URL/email redaction →
     * control-char strip + whitespace collapse, with match counts kept

@@ -241,7 +241,8 @@ object Html {
     * (href, inner text) pairs out of raw markup with two aligned
     * regexp_extract_all passes (same pattern, groups 1 and 2 — match
     * order is identical, so zipping is exact), entity-decodes and
-    * whitespace-collapses the text, drops self-links, and aggregates
+    * whitespace-collapses the text (on [[TextOps.TokenSepRe]], so \x0B
+    * stays, as in the twin), drops self-links, and aggregates
     * per target: distinct referring pages, distinct anchor variants,
     * and the lexicographic-min variant (a deterministic
     * representative). One narrow projection + one aggregate keyed on
@@ -253,7 +254,7 @@ object Html {
         regexp_extract_all(col(htmlCol), lit(pat), lit(1)).as("d"),
         regexp_extract_all(col(htmlCol), lit(pat), lit(2)).as("a"))).as("z"))
       .select(col("src"), col("z.d").cast(LongType).as("dst"),
-        trim(regexp_replace(unescapeHtml(col("z.a")), "\\s+", " ")).as("anchor"))
+        trim(regexp_replace(unescapeHtml(col("z.a")), TextOps.TokenSepRe, " ")).as("anchor"))
       .where(col("dst") =!= col("src"))
     pairs.groupBy(col("dst"))
       .agg(countDistinct(col("src")).as("n_inlinks"),
@@ -565,9 +566,10 @@ object Html {
   }
 
   /** Per-block cleaned text: strip remaining (inline) tags to spaces,
-    * decode entities, collapse whitespace, trim. */
+    * decode entities, collapse whitespace runs ([[TextOps.TokenSepRe]],
+    * the twin's RE2 `\s`: \x0B is kept), trim. */
   private def cleanBlock(b: Column): Column =
-    trim(regexp_replace(unescapeHtml(regexp_replace(b, "<[^<>]*>", " ")), "\\s+", " "))
+    trim(regexp_replace(unescapeHtml(regexp_replace(b, "<[^<>]*>", " ")), TextOps.TokenSepRe, " "))
 
   /** Total anchor-text chars of a block (link-density numerator). */
   private def anchorLen(b: Column): Column =

@@ -251,9 +251,7 @@ object StreamingQueries {
     // so the drained stream equals the batch group-count top-1 exactly
     Q("streaming_state_topk", (s, d) => {
       val tmp = stageEvents(s, d, copies = 1, filesPerCopy = 4)
-      val ss = streamSession(s)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val ss = streamSession(s, stateStore = Some(RocksDbStateStore))
       import ss.implicits._
       val stream = EventStreams.readEventStream(ss, tmp).as[EventStreams.Event]
       val snaps = EventStreams.topTypePerUser(stream, capacity = 8).toDF()

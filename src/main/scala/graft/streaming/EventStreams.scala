@@ -544,8 +544,10 @@ object EventStreams {
   }
 
   /** Convenience: run a streaming DataFrame to completion against a
-    * bounded source dir and return the final result via a named
-    * in-memory sink table. */
+    * bounded source dir through a memory sink named `table`, and
+    * return the sink's rows as a local relation with the sink table's
+    * schema. The sink's view is dropped, so neither the view nor the
+    * sink outlives the call in `spark`'s catalog. */
   def runToMemory(spark: SparkSession, streamed: DataFrame, table: String,
                   mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val q = streamed.writeStream
@@ -553,8 +555,13 @@ object EventStreams {
       .queryName(table)
       .outputMode(mode)
       .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(table)
+    try q.processAllAvailable() finally q.stop()
+    val view = spark.table(table)
+    val sink = view.queryExecution.analyzed.collectFirst {
+      case p: org.apache.spark.sql.execution.streaming.sources.MemoryPlan => p.sink
+    }.getOrElse(sys.error(s"$table is not a memory sink"))
+    val out = spark.createDataFrame(java.util.Arrays.asList(sink.allData: _*), view.schema)
+    spark.catalog.dropTempView(table)
+    out
   }
 }

@@ -21,6 +21,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.adaptive.enabled") === "true")
     assert(conf.get("spark.sql.shuffle.partitions").toInt ===
       spark.sparkContext.defaultParallelism)
+    graft.sources.LocalFs.conf.foreach { case (k, v) =>
+      assert(spark.sparkContext.hadoopConfiguration.get(k) === v, k)
+    }
   }
 
   test("GraftExtensions are installed: vec_dot resolves in SQL") {

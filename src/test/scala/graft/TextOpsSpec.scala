@@ -203,6 +203,13 @@ class TextOpsSpec extends AnyFunSuite {
     assert((r.getAs[Long]("n_lines"), r.getAs[Long]("n_kept")) === ((1L, 0L)), "4 words, not 5")
     val html = Html.anchorPageFromDocs(docs(s"$vt c")).head().getAs[String]("html")
     assert(html.contains(s">$vt 3</a>"), html)
+    // whitespace collapse too: RE2's regexp_replace(x, '\s+', ' ') keeps the \x0B
+    val anchor = Html.anchorTexts(Html.anchorPageFromDocs(docs(s"$vt c")))
+      .where("dst = 3").head().getAs[String]("top_anchor")
+    assert(anchor === s"$vt 3")
+    val main = Html.extractMain(Seq((0L, s"<html><body><p> $vt\t c </p></body></html>"))
+      .toDF("doc_id", "html")).head().getAs[String]("main_text")
+    assert(main === s"$vt c")
   }
 
   test("clean_tokens resolves in SQL") {

@@ -31,8 +31,18 @@ cross-checks
      `cleanWord` is `TextOps.docWords`/`TextOps.words`;
      `filter(split(x, …TokenSepRe), …)` is `TextOps.rawTokens(x)`; and a
      Spark `split(x, "\\s+")` is `TextOps.rawTokens(x)` too, since Java's
-     `\s` matches \x0B where the DuckDB twin's RE2 `\s` does not. Twin
-     SQL (`string_split_regex`, `list_filter`) matches none of them.
+     `\s` matches \x0B where the DuckDB twin's RE2 `\s` does not. A
+     Spark `regexp_replace(x, "\\s+", …)` is flagged for the same
+     reason, everywhere: collapse on `TextOps.TokenSepRe`. Twin SQL
+     (`string_split_regex`, `list_filter`, single-quoted patterns)
+     matches none of them,
+  8. one stream session per (session, partitions, state-store
+     provider): `.newSession()` under src/main only in
+     `SparkEntry.streamSession` and in plans/Cbo.scala (which starts no
+     stream), and the `"spark.sql.streaming.stateStore.providerClass"`
+     key only in `SparkEntry.streamSession`. A session per stream
+     registers a listener bus that is never removed, and a provider set
+     on a shared stream session leaks into the next query.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -76,8 +86,8 @@ def registry_entries(problems):
     return entries
 
 
-def call_args(text, open_paren):
-    """The text between the parenthesis at `open_paren` and its match,
+def call_args(text, open_paren, pair="()"):
+    """The text between the bracket at `open_paren` and its match,
     skipping double-quoted Scala string literals."""
     depth, i = 0, open_paren
     while i < len(text):
@@ -86,14 +96,25 @@ def call_args(text, open_paren):
             i += 1
             while i < len(text) and text[i] not in '"\n':
                 i += 2 if text[i] == "\\" else 1
-        elif c == "(":
+        elif c == pair[0]:
             depth += 1
-        elif c == ")":
+        elif c == pair[1]:
             depth -= 1
             if depth == 0:
                 return text[open_paren + 1:i]
         i += 1
     return text[open_paren + 1:]
+
+
+def def_span(text, name):
+    """(start, end) of `def name(…)…{ … }` in `text`: its parameter
+    list, then its brace-delimited body; None if there is no such def."""
+    m = re.search(r"\bdef " + name + r"\(", text)
+    if not m:
+        return None
+    params = m.end() - 1
+    body = text.index("{", params + len(call_args(text, params)) + 2)
+    return m.start(), body + len(call_args(text, body, "{}")) + 2
 
 
 def main() -> int:
@@ -173,12 +194,17 @@ def main() -> int:
         r"(?<![\w.])explode\(\s*TextOps\.tokens\((?:[^\n]*\n){0,2}?[^\n]*?cleanWord")
     raw_split = re.compile(r"(?<![\w.])filter\(\s*split\(")
     ws_split = re.compile(r"(?<![\w.])split\(")
+    ws_replace = re.compile(r"(?<![\w.])regexp_replace\(")
     for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
         text = path.read_text(encoding="utf-8")
         line = lambda i: text.count("\n", 0, i) + 1
         for m in composed.finditer(text):
             problems.append(f"{path}:{line(m.start())}: composed tokens/cleanWord/length "
                             "filter, use TextOps.cleanTokens")
+        for m in ws_replace.finditer(text):
+            if re.search(r',\s*"\\\\s\+"\s*,', call_args(text, m.end() - 1)):
+                problems.append(f"{path}:{line(m.start())}: regexp_replace on \"\\\\s+\" (Java \\s "
+                                "matches \\x0B, RE2's does not), use TextOps.TokenSepRe")
         if path.name == "TextOps.scala":
             continue
         for m in explode_clean.finditer(text):
@@ -192,6 +218,27 @@ def main() -> int:
             if re.search(r',\s*"\\\\s\+"\s*$', call_args(text, m.end() - 1)):
                 problems.append(f"{path}:{line(m.start())}: split on \"\\\\s+\" (Java \\s "
                                 "matches \\x0B, RE2's does not), use TextOps.rawTokens")
+
+    # 8. stream sessions come from SparkEntry.streamSession, keyed by
+    # (session, partitions, provider): a session per stream leaks its
+    # listener bus, catalog and sinks.
+    entry = pathlib.Path("src/main/scala/graft/SparkEntry.scala")
+    span = def_span(entry.read_text(encoding="utf-8"), "streamSession")
+    if span is None:
+        problems.append(f"{entry}: no def streamSession")
+    provider = re.compile(r'"spark\.sql\.streaming\.stateStore\.providerClass"')
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        line = lambda i: text.count("\n", 0, i) + 1
+        inside = lambda i: path == entry and span is not None and span[0] <= i < span[1]
+        for m in re.finditer(r"\.newSession\(\)", text):
+            if not inside(m.start()) and path.as_posix() != "src/main/scala/graft/plans/Cbo.scala":
+                problems.append(f"{path}:{line(m.start())}: newSession() outside "
+                                "SparkEntry.streamSession, take a streamSession")
+        for m in provider.finditer(text):
+            if not inside(m.start()):
+                problems.append(f"{path}:{line(m.start())}: stateStore.providerClass set outside "
+                                "SparkEntry.streamSession, pass streamSession(s, stateStore = …)")
 
     if problems:
         for p in problems:
