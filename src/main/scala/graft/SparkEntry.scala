@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators._
 import graft.sources.{LocalFs, Tables}
+import graft.streaming.EventStreams
 import graft.queries._
 
 /** The query entry points (build plan: SURVEY.md §7).
@@ -191,7 +193,7 @@ object SparkEntry {
     val ss = streamSession(s)
     val schema = if (withSource) "doc_id LONG, lang STRING, source STRING, text STRING"
                  else "doc_id LONG, lang STRING, text STRING"
-    (ss, ss.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src))
+    (ss, EventStreams.fileStream(ss, src, StructType.fromDDL(schema)))
   }
 
   /** Staged HTML-page drops (the crawl-stream fixture): pageFromDocs
@@ -211,9 +213,16 @@ object SparkEntry {
   private[graft] def pageStream(s: SparkSession, d: String): (SparkSession, DataFrame) = {
     val src = stagePageStream(s, d)
     val ss = streamSession(s)
-    (ss, ss.readStream.schema("doc_id LONG, html STRING, lang STRING")
-      .option("maxFilesPerTrigger", "1").parquet(src))
+    (ss, EventStreams.fileStream(ss, src,
+      StructType.fromDDL("doc_id LONG, html STRING, lang STRING")))
   }
+
+  /** The streamed crawl containers: the `.warc` files of a
+    * [[stageWarcStream]] dir, one per micro-batch, as `binaryFile` rows
+    * (a file stream needs an explicit schema; binaryFile's is fixed). */
+  private[graft] def warcStream(ss: SparkSession, src: String): DataFrame =
+    EventStreams.fileStream(ss, s"$src/*.warc", StructType.fromDDL(
+      "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"), "binaryFile")
 
   /** The events table staged as `copies` writes of `filesPerCopy`
     * parquet files, memoized in [[stagedEvents]]. perfbench's harness

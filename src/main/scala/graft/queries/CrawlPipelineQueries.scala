@@ -146,9 +146,7 @@ object CrawlPipelineQueries {
         .write.mode("overwrite").parquet(s"$storeDir/seed")
       val landDir = java.nio.file.Files.createTempDirectory("graft-wtland").toString
       val frontierDir = java.nio.file.Files.createTempDirectory("graft-wtfront").toString
-      val stream = ss.readStream.format("binaryFile")
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("pathGlobFilter", "*.warc").option("maxFilesPerTrigger", "1").load(src)
+      val stream = warcStream(ss, src)
       val samp = graft.streaming.IngestPipeline.runWarcTrainingIngest(ss, stream,
           storeDir, landDir, frontierDir,
           docs.select(col("doc_id"), col("lang")), rates, k = 100)

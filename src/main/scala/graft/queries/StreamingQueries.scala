@@ -360,10 +360,7 @@ object StreamingQueries {
     Q("streaming_warc_ingest", (s, d) => {
       val src = stageWarcStream(s, d, "warcstream")(Html.pageFromDocs(t(s, d).documents))
       val ss = streamSession(s)
-      val stream = ss.readStream.format("binaryFile")
-        // file streams need an explicit schema; binaryFile's is fixed
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("pathGlobFilter", "*.warc").option("maxFilesPerTrigger", "1").load(src)
+      val stream = warcStream(ss, src)
       val recs = graft.sources.Warc.records(stream.select(col("content")))
       val out = Html.extractMain(recs.drop("truncated"), idCol = "url")
         .select(col("doc_id").as("url"), col("fetch_ts"),
@@ -456,8 +453,7 @@ object StreamingQueries {
       // finishes to the identical sample — one twin serves both
       prioritySampleTwinSql),
     Q("streaming_pipeline_ingest", (s, d) => {
-      val src = stageDocStream(s, d)
-      val ss = streamSession(s)
+      val (ss, docs) = docStream(s, d)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-ingest-store").toString
       t(ss, d).documents.where(col("doc_id") % 2 === 0)
         .select(sha2(col("text"), 256).as("h"))
@@ -466,7 +462,7 @@ object StreamingQueries {
         t(ss, d).documents.select(col("doc_id"), col("lang"), col("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-ingest-out").toString
       graft.streaming.IngestPipeline
-        .runIngest(ss, src, storeDir, rates, out, targetRowsPerFile = 5000L,
+        .runIngestStream(ss, docs, storeDir, rates, out, targetRowsPerFile = 5000L,
           // bloom-fronted store scan: exact (no false negatives), so the
           // oracle hash ALSO proves the runtime-filter path loses nothing
           bloomBits = 1L << 20)

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 import graft.functions._
 
@@ -17,8 +17,54 @@ import graft.functions._
   * The aggregations here deliberately mirror Windows.tumblingCounts /
   * sessionize so batch output is the oracle for streaming output
   * (exactly-once file/memory sinks converge to the batch answer).
+  *
+  * Every bounded stream in graft is read, run to its end and landed
+  * through one seam here: [[fileStream]] reads a directory of drops one
+  * file per micro-batch, [[drain]] runs a query until its backlog is
+  * spent and it stops by itself (`Trigger.AvailableNow`, the poison
+  * pill's Spark form), [[drainEach]] is its `foreachBatch` form, and
+  * [[batchDir]] is where a batch-keyed sink lands batch N. A drained
+  * query has ended before `stop()`, which therefore cancels no job
+  * group (stopping a still-running query, even an idle one, logs two
+  * "Failed to cancel job group" warnings).
   */
 object EventStreams {
+
+  /** The one file-stream reader: `dir`'s files (a glob is allowed) in
+    * modification-time order, ONE per micro-batch, so a bounded drain
+    * runs one batch per drop and exercises incremental state. */
+  def fileStream(spark: SparkSession, dir: String, schema: StructType,
+                 format: String = "parquet"): DataFrame =
+    spark.readStream
+      .format(format)
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .load(dir)
+
+  /** Run a bounded query to its end: start it under
+    * `Trigger.AvailableNow`, which plans the backlog present at start
+    * (rate limits such as one file per trigger respected), runs every
+    * batch of it, including the trailing no-data batch a watermark
+    * needs, and then terminates. A failed batch rethrows here as the
+    * `StreamingQueryException` carrying its cause; the query is
+    * stopped either way, so none outlives the call. */
+  def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** [[drain]] through `foreachBatch`: `f(batch, batchId)` runs once
+    * per micro-batch, batch ids counting from 0. */
+  def drainEach(stream: DataFrame)(f: (DataFrame, Long) => Unit): Unit =
+    drain(stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      f(batch, batchId)
+    })
+
+  /** Where a batch-keyed sink lands micro-batch `batchId` of `dir`: a
+    * re-delivered batch overwrites its own directory instead of
+    * appending duplicates, and `spark.read.parquet(dir)` reads the
+    * landed batches back with `batch_id` as a partition column. */
+  def batchDir(dir: String, batchId: Long): String = s"$dir/batch_id=$batchId"
 
   /** The events table schema with ts already as a microsecond
     * timestamp (see graft.sources.Tables.events for the NANOS issue —
@@ -31,13 +77,9 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-based micro-batch source over a directory of parquet drops.
-    * `maxFilesPerTrigger=1` exercises multi-batch incremental state. */
+  /** The events stream over a directory of parquet drops. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    fileStream(spark, dir, eventSchema)
 
   /** Streaming tumbling counts — same logical agg as
     * Windows.tumblingCounts; late data beyond the watermark is dropped
@@ -387,22 +429,6 @@ object EventStreams {
       }
   }
 
-  /** foreachBatch parquet sink with replay-idempotence: each micro-batch
-    * overwrites its OWN batch_id=<n> directory, so a batch re-delivered
-    * after a failure overwrites instead of appending duplicates — the
-    * standard exactly-once recipe for sinks without transactional
-    * commit. Read the target back with spark.read.parquet(outDir)
-    * (batch_id becomes a partition column). */
-  def runToParquet(streamed: DataFrame, outDir: String): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
   /** foreachBatch composed with the size-governed batch sink
     * (Sinks.writeCompacted): each micro-batch lands as
     * `batch_id=<n>/` with file count ⌈rows/target⌉ and a
@@ -413,16 +439,17 @@ object EventStreams {
     * recipe: exactly-once landing + compaction policy in ONE hop,
     * instead of a separate compaction job rewriting the table later. */
   def runToCompactedParquet(streamed: DataFrame, outDir: String,
-                            targetRowsPerFile: Long): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.Sinks.writeCompacted(batch, s"$outDir/batch_id=$batchId", targetRowsPerFile)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                            targetRowsPerFile: Long): Unit =
+    drainEach(streamed) { (batch, batchId) =>
+      graft.sources.Sinks.writeCompacted(batch, batchDir(outDir, batchId), targetRowsPerFile)
+      ()
+    }
+
+  /** The latest-image table's schema, for a drain that landed nothing. */
+  private val latestImageSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType), StructField("last_ts", TimestampType),
+    StructField("last_event_id", LongType), StructField("last_type", StringType),
+    StructField("last_value", DoubleType)))
 
   /** Streaming CDC → current-snapshot materialization: foreachBatch
     * maintains a copy-on-write LATEST-IMAGE table (one row per key,
@@ -472,36 +499,29 @@ object EventStreams {
           case s if s.startsWith("v") => scala.util.Try(s.drop(1).toLong).toOption.map(_ -> f)
           case _ => None
         })
-    val q = readEventStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val images = latestOf(batch.select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-          col("value").as("last_value")))
-        // the replay contract needs "the version my original run read":
-        // versions are batchIds, so that is max(v) strictly below mine
-        val prev = versions(new java.io.File(tableDir))
-          .filter(_._1 < batchId).sortBy(_._1).lastOption
-        val merged = prev match {
-          case Some((_, dir)) => latestOf(ss.read.parquet(dir.toString).unionByName(images))
-          case None => images
-        }
-        merged.write.mode("overwrite")
-          .parquet(f"$tableDir/v$batchId%09d") // zero-padded: lexicographic = numeric
+    drainEach(readEventStream(spark, srcDir)) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val images = latestOf(batch.select(col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
+        col("value").as("last_value")))
+      // the replay contract needs "the version my original run read":
+      // versions are batchIds, so that is max(v) strictly below mine
+      val prev = versions(new java.io.File(tableDir))
+        .filter(_._1 < batchId).sortBy(_._1).lastOption
+      val merged = prev match {
+        case Some((_, dir)) => latestOf(ss.read.parquet(dir.toString).unionByName(images))
+        case None => images
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      merged.write.mode("overwrite")
+        .parquet(f"$tableDir/v$batchId%09d") // zero-padded: lexicographic = numeric
+    }
     // an empty source dir yields zero micro-batches and zero versions —
     // return an empty latest-image relation instead of throwing on .last
     versions(new java.io.File(tableDir)).sortBy(_._1).lastOption match {
       case Some((_, dir)) => spark.read.parquet(dir.toString)
       case None =>
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(
-            StructField("user_id", LongType), StructField("last_ts", TimestampType),
-            StructField("last_event_id", LongType), StructField("last_type", StringType),
-            StructField("last_value", DoubleType))))
+          latestImageSchema)
     }
   }
 
@@ -521,41 +541,29 @@ object EventStreams {
                          targetRowsPerFile: Long = 5000L): DataFrame = {
     require(graft.sources.LakeTable.versions(tableDir).isEmpty,
       s"runLatestImageLake needs a fresh tableDir: $tableDir (no checkpoint → batchIds restart)")
-    val q = readEventStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val images = batch.select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-          col("value").as("last_value"))
-        graft.sources.LakeTable.commitLatestImageAt(images, tableDir, "user_id",
-          Seq("last_ts", "last_event_id", "last_type", "last_value"),
-          targetRowsPerFile, version = batchId)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(readEventStream(spark, srcDir)) { (batch, batchId) =>
+      val images = batch.select(col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
+        col("value").as("last_value"))
+      graft.sources.LakeTable.commitLatestImageAt(images, tableDir, "user_id",
+        Seq("last_ts", "last_event_id", "last_type", "last_value"),
+        targetRowsPerFile, version = batchId)
+      ()
+    }
     if (graft.sources.LakeTable.versions(tableDir).isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(
-          StructField("user_id", LongType), StructField("last_ts", TimestampType),
-          StructField("last_event_id", LongType), StructField("last_type", StringType),
-          StructField("last_value", DoubleType))))
+        latestImageSchema)
     else graft.sources.LakeTable.readLatest(spark, tableDir)
   }
 
-  /** Convenience: run a streaming DataFrame to completion against a
-    * bounded source dir through a memory sink named `table`, and
-    * return the sink's rows as a local relation with the sink table's
-    * schema. The sink's view is dropped, so neither the view nor the
-    * sink outlives the call in `spark`'s catalog. */
+  /** Convenience: [[drain]] a streaming DataFrame over a bounded
+    * source dir into a memory sink named `table`, and return the sink's
+    * rows as a local relation with the sink table's schema. The sink's
+    * view is dropped, so neither the view nor the sink outlives the
+    * call in `spark`'s catalog. */
   def runToMemory(spark: SparkSession, streamed: DataFrame, table: String,
                   mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q = streamed.writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode(mode)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drain(streamed.writeStream.format("memory").queryName(table).outputMode(mode))
     val view = spark.table(table)
     val sink = view.queryExecution.analyzed.collectFirst {
       case p: org.apache.spark.sql.execution.streaming.sources.MemoryPlan => p.sink

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Corpus, Dedup}
 import graft.plans.Lineage.TruncateOps
+import graft.streaming.EventStreams.{batchDir, drainEach}
 
 /** The CONTINUOUS twin of the batch `pipeline_ingest` composition:
   * document drops arriving as a file stream, each micro-batch run as
@@ -55,12 +56,6 @@ object IngestPipeline {
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("text", StringType)))
 
-  def readDocStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-
   private def storeBatchIds(storeDir: String): Seq[Long] =
     Option(new java.io.File(storeDir).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("b"))
@@ -79,6 +74,20 @@ object IngestPipeline {
       require(next.renameTo(seed), s"store heal failed in $storeDir")
     graft.sources.FsUtil.deleteRecursively(new java.io.File(s"$storeDir/.seed_old"))
   }
+
+  /** A batch-keyed store AS OF batch `batchId`: the seed plus every
+    * STRICTLY earlier batch commit, read after [[healStore]], so a
+    * replayed batch sees exactly the store its original run saw. */
+  private def storeAsOf(ss: SparkSession, storeDir: String, batchId: Long): DataFrame = {
+    healStore(storeDir)
+    ss.read.parquet(s"$storeDir/seed" +:
+      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i"): _*)
+  }
+
+  /** An empty seed: a store whose stream starts with no history. */
+  private def writeEmptySeed(spark: SparkSession, storeDir: String, schema: StructType): Unit =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      .write.mode("overwrite").parquet(s"$storeDir/seed")
 
   /** One micro-batch of the ingest, exposed so the spec can re-run a
     * batch verbatim and prove replay idempotence. `rates` must be the
@@ -108,11 +117,7 @@ object IngestPipeline {
                   bandStoreDir: Option[String] = None): Unit = {
     val ss = batch.sparkSession
     val batchP = fanOut(batch, "doc_id") // sha256/minhash/chunk work parallel
-    healStore(storeDir) // finish any interrupted compaction swap first
-    // the store AS OF this batch: seed + strictly earlier commits
-    val priorDirs = s"$storeDir/seed" +:
-      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i")
-    val storeAll = ss.read.parquet(priorDirs: _*)
+    val storeAll = storeAsOf(ss, storeDir, batchId)
     val store =
       if (bloomBits <= 0L) storeAll
       else graft.operators.Sketches.bloomSemiFilter(
@@ -127,16 +132,14 @@ object IngestPipeline {
       .select(col("doc_id"), col("lang"), col("text"))
     // near-dup admission against the band store AS OF this batch
     val admitted = bandStoreDir.fold(survivors) { bd =>
-      val bandPrior = ss.read.parquet(s"$bd/seed" +:
-        storeBatchIds(bd).filter(_ < batchId).map(i => s"$bd/b$i"): _*)
-      Dedup.incrementalMinhashDedup(survivors, bandPrior)
+      Dedup.incrementalMinhashDedup(survivors, storeAsOf(ss, bd, batchId))
         .truncateLineage // consumed twice: resample + band commit
     }
     val kept = Corpus.resampleWithRates(admitted, rates)
       .select(col("doc_id"), col("lang"), col("text"))
     val chunks = Corpus.chunk(kept, chunkSize)
       .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
-    graft.sources.Sinks.writeCompacted(chunks, s"$outDir/batch_id=$batchId", targetRowsPerFile)
+    graft.sources.Sinks.writeCompacted(chunks, batchDir(outDir, batchId), targetRowsPerFile)
     // commit the batch's digests LAST (post-resample docs included:
     // a later duplicate of a sampled-out doc is still a duplicate)
     fresh.select(col("h")).write.mode("overwrite").parquet(s"$storeDir/b$batchId")
@@ -179,11 +182,7 @@ object IngestPipeline {
     * re-run the whole dedup. */
   private def paraIngestLand(paras: DataFrame, batchId: Long, storeDir: String,
                              outDir: String, pinLanded: Boolean): DataFrame = {
-    val ss = paras.sparkSession
-    healStore(storeDir)
-    val priorDirs = s"$storeDir/seed" +:
-      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
+    val store = storeAsOf(paras.sparkSession, storeDir, batchId)
     val hashed = paras.select(col("doc_id"), col("pos"), col("para"),
       xxhash64(col("para")).as("ph"))
     val w = org.apache.spark.sql.expressions.Window
@@ -201,7 +200,7 @@ object IngestPipeline {
             when(col("keep"), struct(col("pos"), col("para"))))),
           s => s.getField("para"))).as("text"))
     val landed = if (pinLanded) docsOut.truncateLineage else docsOut
-    landed.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    landed.write.mode("overwrite").parquet(batchDir(outDir, batchId))
     // commit ONLY newly-first hashes: in-store repeats are already there
     flagged.where(col("keep")).select(col("ph")).distinct()
       .write.mode("overwrite").parquet(s"$storeDir/b$batchId")
@@ -214,14 +213,10 @@ object IngestPipeline {
     * paragraph granularity). Returns the landed per-document table. */
   def runParaIngest(spark: SparkSession, pageStream: DataFrame, storeDir: String,
                     outDir: String): DataFrame = {
-    val q = pageStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        paraIngestBatch(graft.operators.Html.extractBlocks(fanOut(batch.toDF(), "doc_id")),
-          batchId, storeDir, outDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(pageStream) { (batch, batchId) =>
+      paraIngestBatch(graft.operators.Html.extractBlocks(fanOut(batch, "doc_id")),
+        batchId, storeDir, outDir)
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_paras"), col("n_kept"), col("text"))
   }
@@ -249,32 +244,27 @@ object IngestPipeline {
     // loop-invariant dimension pinned once — a per-batch broadcast of
     // an unpinned langDim re-scans the dimension source every batch
     val langFrozen = langDim.truncateLineage
-    val q = containerStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val recs = graft.sources.Warc.records(batch.toDF().select(col("content")))
-        // the fixture's fetch_ts stamp is invertible (warc_ingest)
-        val pages = fanOut(
-          recs.select((col("fetch_ts") - 1700000000L).as("doc_id"), col("html")), "doc_id")
-        // pinLanded: the gate below reuses the batch's landed docs
-        // from the pin instead of re-reading the just-written parquet
-        val landed = paraIngestLand(graft.operators.Html.extractBlocks(pages),
-            batchId, storeDir, landDir, pinLanded = true)
-          .select(col("doc_id"), col("text"))
-        val gated = graft.operators.TextQuality.gopherQualityGate(landed)
-          .where(col("keep")).select(col("doc_id"))
-          .join(landed, Seq("doc_id"))
-          .join(langFrozen, Seq("doc_id"))
-        val mixed = gated.join(broadcast(rates), "lang")
-          .where(graft.operators.Corpus.hashPermille(col("text")) < col("keep_permille"))
-          .select(col("doc_id"), col("text"))
-        graft.operators.Corpus.priorityKeyed(mixed)
-          .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-          .write.mode("overwrite").parquet(s"$frontierDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(containerStream) { (batch, batchId) =>
+      val recs = graft.sources.Warc.records(batch.select(col("content")))
+      // the fixture's fetch_ts stamp is invertible (warc_ingest)
+      val pages = fanOut(
+        recs.select((col("fetch_ts") - 1700000000L).as("doc_id"), col("html")), "doc_id")
+      // pinLanded: the gate below reuses the batch's landed docs
+      // from the pin instead of re-reading the just-written parquet
+      val landed = paraIngestLand(graft.operators.Html.extractBlocks(pages),
+          batchId, storeDir, landDir, pinLanded = true)
+        .select(col("doc_id"), col("text"))
+      val gated = graft.operators.TextQuality.gopherQualityGate(landed)
+        .where(col("keep")).select(col("doc_id"))
+        .join(landed, Seq("doc_id"))
+        .join(langFrozen, Seq("doc_id"))
+      val mixed = gated.join(broadcast(rates), "lang")
+        .where(graft.operators.Corpus.hashPermille(col("text")) < col("keep_permille"))
+        .select(col("doc_id"), col("text"))
+      graft.operators.Corpus.priorityKeyed(mixed)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
+        .write.mode("overwrite").parquet(batchDir(frontierDir, batchId))
+    }
     graft.operators.Corpus.priorityFinish(
       spark.read.parquet(frontierDir).select(col("doc_id"), col("weight"), col("__key")), k)
   }
@@ -321,19 +311,13 @@ object IngestPipeline {
     val canon = urlStream
       .select(Html.stripTrackingParams(col("url")).as("url"))
       .dropDuplicates("url")
-    val q = canon.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val urls = batch.toDF()
-        val graded = Html.blocklistFilter(urls, blockFrozen)
-          .join(Html.robotsFilter(urls, robotsFrozen)
-            .withColumnRenamed("rule", "robots_rule"), Seq("url"))
-          .withColumn("admitted", !col("blocked") && col("allowed"))
-        graded.write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(canon) { (urls, batchId) =>
+      val graded = Html.blocklistFilter(urls, blockFrozen)
+        .join(Html.robotsFilter(urls, robotsFrozen)
+          .withColumnRenamed("rule", "robots_rule"), Seq("url"))
+        .withColumn("admitted", !col("blocked") && col("allowed"))
+      graded.write.mode("overwrite").parquet(batchDir(landDir, batchId))
+    }
     spark.read.parquet(landDir)
       .select(col("url"), col("blocked"), col("rule_host"), col("rule_prefix"),
         col("allowed"), col("robots_rule"), col("admitted"))
@@ -353,18 +337,13 @@ object IngestPipeline {
   def runPrioritySampleIngest(spark: SparkSession, docStream: DataFrame,
                               outDir: String, k: Int): DataFrame = {
     require(k > 0, "runPrioritySampleIngest needs k > 0")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured a NET LOSS here (priority keys are one md5
-        // per row — cheaper than shuffling the text): keep single-scan
-        graft.operators.Corpus.priorityKeyed(batch.toDF())
-          .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(docStream) { (batch, batchId) =>
+      // fanOut measured a NET LOSS here (priority keys are one md5
+      // per row — cheaper than shuffling the text): keep single-scan
+      graft.operators.Corpus.priorityKeyed(batch)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
+        .write.mode("overwrite").parquet(batchDir(outDir, batchId))
+    }
     graft.operators.Corpus.priorityFinish(
       spark.read.parquet(outDir).select(col("doc_id"), col("weight"), col("__key")), k)
   }
@@ -379,14 +358,10 @@ object IngestPipeline {
     * overwrites — replays are idempotent. */
   def cardBatch(batch: DataFrame, batchId: Long, cubeDir: String,
                 digestDir: String): Unit = {
-    val ss = batch.sparkSession
     val batchP = fanOut(batch, "doc_id") // sha256 + token histogram parallel
-    healStore(digestDir)
     graft.operators.Corpus.datasetCardCube(batchP)
       .write.mode("overwrite").parquet(s"$cubeDir/b$batchId")
-    val priorDirs = s"$digestDir/seed" +:
-      storeBatchIds(digestDir).filter(_ < batchId).map(i => s"$digestDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
+    val store = storeAsOf(batch.sparkSession, digestDir, batchId)
     Dedup.incrementalDigestDedup(batchP, store).select(col("h"))
       .write.mode("overwrite").parquet(s"$digestDir/b$batchId")
   }
@@ -398,26 +373,14 @@ object IngestPipeline {
     * [[graft.operators.Corpus.datasetCard]], which is the oracle. */
   def runCardIngest(spark: SparkSession, docStream: DataFrame,
                     cubeDir: String, digestDir: String): DataFrame = {
-    // empty digest seed: the stream starts with no history
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("h", StringType))))
-      .write.mode("overwrite").parquet(s"$digestDir/seed")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cardBatch(batch.toDF(), batchId, cubeDir, digestDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    writeEmptySeed(spark, digestDir, StructType(Seq(StructField("h", StringType))))
+    drainEach(docStream)(cardBatch(_, _, cubeDir, digestDir))
     val cube = spark.read.parquet(
       storeBatchIds(cubeDir).map(i => s"$cubeDir/b$i"): _*)
       .groupBy(col("lang"), col("source"), col("n_toks"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("chars")).as("chars"),
         sum(col("n_pass")).as("n_pass"))
-    healStore(digestDir)
-    val digestDirs = s"$digestDir/seed" +:
-      storeBatchIds(digestDir).map(i => s"$digestDir/b$i")
-    val nDistinct = spark.read.parquet(digestDirs: _*)
+    val nDistinct = storeAsOf(spark, digestDir, Long.MaxValue)
       .agg(count(lit(1)).as("n_distinct"))
     graft.operators.Corpus.datasetCardFromCube(cube, nDistinct)
   }
@@ -440,8 +403,6 @@ object IngestPipeline {
   def winnowBatch(batch: DataFrame, batchId: Long, fpStoreDir: String,
                   outDir: String, minShared: Int = 2, maxDf: Int = 50,
                   k: Int = 3, w: Int = 4): Unit = {
-    val ss = batch.sparkSession
-    healStore(fpStoreDir)
     val fpsAll = Dedup.winnowingFingerprints(fanOut(batch, "doc_id"), k, w)
       .select(col("doc_id"), col("fp")).distinct()
     val rare = fpsAll.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -452,9 +413,7 @@ object IngestPipeline {
       .groupBy(col("x.doc_id").as("doc_id"), col("y.doc_id").as("mate"))
       .agg(count(lit(1)).as("n")).where(col("n") >= minShared)
       .select(col("doc_id"))
-    val priorDirs = s"$fpStoreDir/seed" +:
-      storeBatchIds(fpStoreDir).filter(_ < batchId).map(i => s"$fpStoreDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
+    val store = storeAsOf(batch.sparkSession, fpStoreDir, batchId)
     val storeRej = fps.join(store.select(col("doc_id").as("e"), col("fp")), "fp")
       .groupBy(col("doc_id"), col("e")).agg(count(lit(1)).as("n"))
       .where(col("n") >= minShared).select(col("doc_id"))
@@ -462,7 +421,7 @@ object IngestPipeline {
     val admitted = batch.select(col("doc_id")).join(rejected, Seq("doc_id"), "left_anti")
     fps.join(admitted, Seq("doc_id")).select(col("doc_id"), col("fp"))
       .write.mode("overwrite").parquet(s"$fpStoreDir/b$batchId")
-    admitted.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    admitted.write.mode("overwrite").parquet(batchDir(outDir, batchId))
   }
 
   /** Drain the doc stream through [[winnowBatch]] and return the
@@ -470,16 +429,9 @@ object IngestPipeline {
   def runWinnowIngest(spark: SparkSession, docStream: DataFrame,
                       fpStoreDir: String, outDir: String,
                       minShared: Int = 2, maxDf: Int = 50): DataFrame = {
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("doc_id", LongType), StructField("fp", LongType))))
-      .write.mode("overwrite").parquet(s"$fpStoreDir/seed")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        winnowBatch(batch.toDF(), batchId, fpStoreDir, outDir, minShared, maxDf)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    writeEmptySeed(spark, fpStoreDir,
+      StructType(Seq(StructField("doc_id", LongType), StructField("fp", LongType))))
+    drainEach(docStream)(winnowBatch(_, _, fpStoreDir, outDir, minShared, maxDf))
     spark.read.parquet(outDir).select(col("doc_id"))
   }
 
@@ -520,21 +472,13 @@ object IngestPipeline {
     ids.size.toLong
   }
 
-  /** Run the ingest against a bounded source dir to completion and
-    * return the landed chunk table. `storeDir` must contain the
-    * pre-seeded digest history under `seed/`. */
-  def runIngest(spark: SparkSession, srcDir: String, storeDir: String,
-                rates: DataFrame, outDir: String, targetRowsPerFile: Long,
-                chunkSize: Int = 256, bloomBits: Long = 0L,
-                bloomItems: Long = 100000L,
-                bandStoreDir: Option[String] = None): DataFrame =
-    runIngestStream(spark, readDocStream(spark, srcDir), storeDir, rates,
-      outDir, targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
-
-  /** [[runIngest]] over a CALLER-BUILT streaming DataFrame of
-    * (doc_id, lang, text) — the seam that lets an upstream extraction
-    * stage (e.g. HTML boilerplate removal) run inside the same
-    * micro-batch transaction as the ingest itself. */
+  /** Run the ingest over a streaming DataFrame of (doc_id, lang, text)
+    * to completion and return the landed chunk table. `storeDir` must
+    * contain the pre-seeded digest history under `seed/`. The stream
+    * is the caller's, so an upstream extraction stage (e.g. HTML
+    * boilerplate removal) runs inside the same micro-batch transaction
+    * as the ingest itself; a bounded source dir of drops is
+    * `EventStreams.fileStream(spark, dir, docSchema)`. */
   def runIngestStream(spark: SparkSession, docStream: DataFrame, storeDir: String,
                       rates: DataFrame, outDir: String, targetRowsPerFile: Long,
                       chunkSize: Int = 256, bloomBits: Long = 0L,
@@ -544,14 +488,10 @@ object IngestPipeline {
     // typically a corpus-scale aggregate, and the per-batch broadcast
     // otherwise recomputes it from source every micro-batch
     val frozenRates = rates.truncateLineage
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), batchId, storeDir, frozenRates, outDir,
-          targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(docStream) { (batch, batchId) =>
+      ingestBatch(batch, batchId, storeDir, frozenRates, outDir,
+        targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
   }
@@ -580,17 +520,12 @@ object IngestPipeline {
     // stays ≤ m rows on a firehose whose union vocabulary would not
     // ship (the dsir_select_hashed posture, streaming half)
     val frozen = model.truncateLineage
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured +26% here (the scorer's explode+broadcast
-        // probe is cheaper than shuffling the text payload): single-scan
-        scorer(batch.toDF(), frozen)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(docStream) { (batch, batchId) =>
+      // fanOut measured +26% here (the scorer's explode+broadcast
+      // probe is cheaper than shuffling the text payload): single-scan
+      scorer(batch, frozen)
+        .write.mode("overwrite").parquet(batchDir(outDir, batchId))
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_tokens"),
         round(col("sl").cast(DoubleType), 6).as("dsir_logw"),
@@ -628,21 +563,15 @@ object IngestPipeline {
     val landPath = new org.apache.hadoop.fs.Path(landDir)
     landPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(landPath, true)
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured 2.15x SLOWER here — render/parse is one
-        // regex split per transcript, far cheaper than shuffling the
-        // transcripts; keep the batch single-scan
-        val turns = PostTraining.parseTurns(
-          PostTraining.renderTranscripts(batch.toDF()))
-        PostTraining.conversationAudit(turns)
-          .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
-          .write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainEach(docStream) { (batch, batchId) =>
+      // fanOut measured 2.15x SLOWER here — render/parse is one
+      // regex split per transcript, far cheaper than shuffling the
+      // transcripts; keep the batch single-scan
+      val turns = PostTraining.parseTurns(PostTraining.renderTranscripts(batch))
+      PostTraining.conversationAudit(turns)
+        .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
+        .write.mode("overwrite").parquet(batchDir(landDir, batchId))
+    }
     // zero-micro-batch guard (ADVICE r16): the landing dir was
     // cleared up front, so a stream that delivered nothing leaves no
     // directory to read — return an empty, schema-bearing admission

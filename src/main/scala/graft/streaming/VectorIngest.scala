@@ -37,12 +37,6 @@ object VectorIngest {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  def readVecStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-
   /** One micro-batch: encode under frozen geometry, land batch-keyed,
     * record the drift decision. Exposed so the spec can replay a batch
     * verbatim and prove idempotence. Reads the geometry + baseline
@@ -91,14 +85,10 @@ object VectorIngest {
     val cents = spark.read.parquet(s"$indexDir/coarse_cents").truncateLineage
     val books = spark.read.parquet(s"$indexDir/books").truncateLineage
     val baseline = spark.read.parquet(s"$indexDir/baseline").truncateLineage
-    val q = readVecStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatchFrozen(batch.toDF(), batchId, indexDir, cents, books, baseline,
-          m, dim, threshold, minBatchPerCell)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    EventStreams.drainEach(EventStreams.fileStream(spark, srcDir, vecSchema)) { (batch, batchId) =>
+      ingestBatchFrozen(batch, batchId, indexDir, cents, books, baseline,
+        m, dim, threshold, minBatchPerCell)
+    }
     // a drain that found nothing to drain is a no-op, not an error:
     // with zero micro-batches the drift dir was never created
     if (new java.io.File(s"$indexDir/drift").exists())

@@ -351,24 +351,42 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("Trigger.AvailableNow drains the backlog in bounded batches and converges to batch") {
-    import org.apache.spark.sql.streaming.Trigger
     val dir = Files.createTempDirectory("graft-availnow").toString
     writeBatches(dir)
-    val streamed = EventStreams.tumblingCounts(
-      EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2}"))
-    val q = streamed.writeStream.format("memory").queryName("availnow_out")
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // AvailableNow terminates BY ITSELF once the backlog drains — the
-    // production batch-over-streaming trigger (rate limits respected,
-    // then exit); processAllAvailable would be the wrong wait here
-    assert(q.awaitTermination(120000), "AvailableNow did not self-terminate")
-    val got = spark.table("availnow_out")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val want = Windows.tumblingCounts(eventsDf)
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(got === want)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+    val want = rows(Windows.tumblingCounts(eventsDf)).toSet
+    // drain's AvailableNow query terminates BY ITSELF once the backlog
+    // drains (rate limits respected, then exit), and none outlives it
+    EventStreams.drain(EventStreams.tumblingCounts(
+        EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2}"))
+      .writeStream.format("memory").queryName("availnow_out").outputMode(OutputMode.Complete()))
+    assert(spark.streams.active.isEmpty)
+    assert(rows(spark.table("availnow_out")).toSet === want)
+    // Append mode: a far-future drop moves the watermark past every
+    // window, which the trailing NO-DATA batch then emits — batch ids
+    // 0..4 for 4 drops, and exactly the batch oracle's rows
+    eventsDf.limit(1).withColumn("ts", org.apache.spark.sql.functions.lit(ts(24 * 60)))
+      .withColumn("event_type", org.apache.spark.sql.functions.lit("flush"))
+      .coalesce(1).write.parquet(s"$dir/b3")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Array[(Timestamp, String, Long, Double)])]
+    EventStreams.drainEach(EventStreams.tumblingCounts(
+        EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2,b3}"))) { (batch, batchId) =>
+      seen.add(batchId -> rows(batch))
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.map(_._1).toSeq === (0L to 4L))
+    val emitted = seen.asScala.toSeq.flatMap(_._2)
+    assert(emitted.size === want.size && emitted.toSet === want)
+    // a failing batch rethrows with its cause and stops the query
+    val boom = new IllegalStateException("batch 1 fails")
+    val err = intercept[Exception] {
+      EventStreams.drainEach(EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2}")) {
+        (_, batchId) => if (batchId == 1L) throw boom
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).contains(boom), err)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("Misra-Gries top-type state: exact at capacity, heavy hitter survives under-capacity") {
@@ -432,19 +450,6 @@ class StreamingSpec extends AnyFunSuite {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-  }
-
-  test("foreachBatch parquet sink lands every micro-batch exactly once") {
-    val dir = Files.createTempDirectory("graft-stream-fb").toString
-    writeBatches(dir)
-    val out = Files.createTempDirectory("graft-fb-out").toString
-    EventStreams.runToParquet(
-      EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2}"), out)
-    val landed = spark.read.parquet(out)
-    assert(landed.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-      === events.map(_._1).sorted)
-    // multi-batch source really produced multiple batch_id partitions
-    assert(landed.select("batch_id").distinct().count() === 3)
   }
 
   test("foreachBatch compacted sink governs file sizes and loses nothing") {
@@ -547,6 +552,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(replayed === fin)
   }
 
+  private def docStream(dir: String) =
+    EventStreams.fileStream(spark, dir, graft.streaming.IngestPipeline.docSchema)
+
   test("streaming ingest: cross-batch + store dedup, fixed rates, replayed batch idempotent") {
     import org.apache.spark.sql.functions.{col, lit, sha2}
     import graft.streaming.IngestPipeline
@@ -575,7 +583,7 @@ class StreamingSpec extends AnyFunSuite {
     val rates = Seq(("en", 3L, 1000L), ("fr", 1L, 1000L))
       .toDF("lang", "n_l", "keep_permille")
     val out = Files.createTempDirectory("graft-ingest-o").toString
-    val got = IngestPipeline.runIngest(spark, src, storeDir, rates, out,
+    val got = IngestPipeline.runIngestStream(spark, docStream(src), storeDir, rates, out,
         targetRowsPerFile = 100L, chunkSize = 8)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3))).toSet
     // doc 3 deduped against the store, doc 5 against doc 1's committed
@@ -600,7 +608,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq("stored text").toDF("text").select(sha2($"text", 256).as("h"))
       .write.parquet(s"$storeDir2/seed")
     val out2 = Files.createTempDirectory("graft-ingest-o2").toString
-    val bloomed = IngestPipeline.runIngest(spark, src, storeDir2, rates, out2,
+    val bloomed = IngestPipeline.runIngestStream(spark, docStream(src), storeDir2, rates, out2,
         targetRowsPerFile = 100L, chunkSize = 8, bloomBits = 1L << 16)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3))).toSet
     assert(bloomed === got)
@@ -656,7 +664,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("band"), col("bh")).write.parquet(s"$bandDir/seed")
     val rates = Seq(("en", 5L, 1000L)).toDF("lang", "n_l", "keep_permille")
     val out = Files.createTempDirectory("graft-nd-o").toString
-    val got = IngestPipeline.runIngest(spark, src, storeDir, rates, out,
+    val got = IngestPipeline.runIngestStream(spark, docStream(src), storeDir, rates, out,
         targetRowsPerFile = 100L, chunkSize = 64, bandStoreDir = Some(bandDir))
       .collect().map(_.getLong(0)).toSet
     assert(got === Set(2L, 6L))
@@ -667,6 +675,31 @@ class StreamingSpec extends AnyFunSuite {
     val replayed = spark.read.parquet(out).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     assert(replayed === Set(2L, 6L))
+  }
+
+  test("streaming ingest heals a band store left between its compaction renames") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    import graft.streaming.IngestPipeline
+    import graft.operators.Dedup
+    // a crash between compactStore's two renames leaves no seed and a
+    // complete .seed_next: the batch must finish the swap, then dedup
+    // against it (doc 1 is a whitespace variant of the band seed's doc)
+    val storeDir = Files.createTempDirectory("graft-heal-st").toString
+    Seq("unrelated seed digest").toDF("text").select(sha2($"text", 256).as("h"))
+      .write.parquet(s"$storeDir/seed")
+    val bandDir = Files.createTempDirectory("graft-heal-bs").toString
+    Dedup.bandKeys(Seq((100L, "quick brown fox jumps high")).toDF("doc_id", "text"))
+      .select(col("band"), col("bh")).write.parquet(s"$bandDir/.seed_next")
+    val batch = Seq((1L, "en", "quick  brown fox   jumps high"),
+      (2L, "en", "totally novel words appear here")).toDF("doc_id", "lang", "text")
+    val rates = Seq(("en", 2L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    val out = Files.createTempDirectory("graft-heal-o").toString
+    IngestPipeline.ingestBatch(batch, 0L, storeDir, rates, out,
+      targetRowsPerFile = 100L, chunkSize = 64, bandStoreDir = Some(bandDir))
+    assert(new java.io.File(s"$bandDir/seed").isDirectory)
+    assert(!new java.io.File(s"$bandDir/.seed_next").exists())
+    assert(spark.read.parquet(out).select(col("doc_id")).distinct()
+      .collect().map(_.getLong(0)).toSet === Set(2L))
   }
 
   test("streaming ANN ingest: grown index == batch append, replay idempotent, OOD batch flags rebuild") {

@@ -42,7 +42,14 @@ cross-checks
      stream), and the `"spark.sql.streaming.stateStore.providerClass"`
      key only in `SparkEntry.streamSession`. A session per stream
      registers a listener bus that is never removed, and a provider set
-     on a shared stream session leaks into the next query.
+     on a shared stream session leaks into the next query,
+  9. one drain seam: every bounded stream under src/main is read by
+     `EventStreams.fileStream` (the only `"maxFilesPerTrigger"`) and
+     run to its end by `EventStreams.drainEach` or `runToMemory` (the
+     only `.writeStream`s, both through `drain`'s
+     `Trigger.AvailableNow`). `processAllAvailable(` is flagged
+     everywhere: a `processAllAvailable()` + `stop()` pair logs two
+     "Failed to cancel job group" warnings per query.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -115,6 +122,17 @@ def def_span(text, name):
     params = m.end() - 1
     body = text.index("{", params + len(call_args(text, params)) + 2)
     return m.start(), body + len(call_args(text, body, "{}")) + 2
+
+
+def member_span(text, name):
+    """(start, end) of the object member `def name` (2-space indent):
+    from its line to the next line at that indent, so a brace-less
+    body counts too; None if there is no such member."""
+    m = re.search(r"^  def " + name + r"\b", text, re.M)
+    if not m:
+        return None
+    nxt = re.compile(r"^  \S", re.M).search(text, m.end())
+    return m.start(), nxt.start() if nxt else len(text)
 
 
 def main() -> int:
@@ -239,6 +257,24 @@ def main() -> int:
             if not inside(m.start()):
                 problems.append(f"{path}:{line(m.start())}: stateStore.providerClass set outside "
                                 "SparkEntry.streamSession, pass streamSession(s, stateStore = …)")
+
+    # 9. bounded streams are read and drained in one place: the shape,
+    # the EventStreams members that may spell it, and what to call.
+    seam = pathlib.Path("src/main/scala/graft/streaming/EventStreams.scala")
+    seam_text = seam.read_text(encoding="utf-8")
+    drain_shapes = [
+        (r"\.writeStream\b", ("drainEach", "runToMemory"), "EventStreams.drainEach or runToMemory"),
+        (r"\bprocessAllAvailable\(", (), "EventStreams.drainEach or runToMemory"),
+        (r'"maxFilesPerTrigger"', ("fileStream",), "EventStreams.fileStream")]
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        line = lambda i: text.count("\n", 0, i) + 1
+        for pattern, members, use in drain_shapes:
+            spans = [member_span(seam_text, n) for n in members] if path == seam else []
+            for m in re.finditer(pattern, text):
+                if not any(sp and sp[0] <= m.start() < sp[1] for sp in spans):
+                    problems.append(f"{path}:{line(m.start())}: {m.group(0)} outside the "
+                                    f"drain seam, use {use}")
 
     if problems:
         for p in problems:
