@@ -966,15 +966,14 @@ object Similarity {
   }
 
   /** Read an index whose cells/codes GREW under the streaming ingest:
-    * the seed relations live as root files, each micro-batch's rows in
-    * a `b<id>/` subdir (batch-keyed so replays overwrite their own
-    * commit — the ingest-store device), and a recursive listing reads
-    * them as one relation. Geometry stays the flat layout. */
+    * the [[ivfPqRead]] relations plus every batch in the index's
+    * [[graft.streaming.VectorIngest.grown]] store. */
   def ivfPqReadGrown(spark: SparkSession, dir: String, m: Int = 16, dim: Int = 64): IvfPqIndex = {
-    val subDim = dim / m
-    def rec(p: String) = spark.read.option("recursiveFileLookup", "true").parquet(p)
-    IvfPqIndex(rec(s"$dir/cells"), rec(s"$dir/codes"),
-      spark.read.parquet(s"$dir/coarse_cents"), spark.read.parquet(s"$dir/books"), m, subDim)
+    val seed = ivfPqRead(spark, dir, m, dim)
+    val grown = graft.streaming.VectorIngest.grown(dir)
+    def withGrown(rel: DataFrame, name: String) =
+      rel.unionByName(grown.all(spark, name, ifEmpty = Some(rel.schema)))
+    seed.copy(cells = withGrown(seed.cells, "cells"), codes = withGrown(seed.codes, "codes"))
   }
 
   /** Query an IVF×PQ index (in-memory or reloaded): probe → ADC

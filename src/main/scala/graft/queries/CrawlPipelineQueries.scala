@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.streaming.EventStreams
+import graft.streaming.{BatchStore, EventStreams}
 import graft.plans.Lineage.TruncateOps
 import graft.QuerySpec.Q
 import graft.SparkEntry._
@@ -142,8 +142,7 @@ object CrawlPipelineQueries {
             .cast("long").as("keep_permille"))
         .truncateLineage
       val storeDir = java.nio.file.Files.createTempDirectory("graft-wtstore").toString
-      ss.range(0).select(col("id").as("ph"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      BatchStore(storeDir).seed(ss.range(0).select(col("id").as("ph")))
       val landDir = java.nio.file.Files.createTempDirectory("graft-wtland").toString
       val frontierDir = java.nio.file.Files.createTempDirectory("graft-wtfront").toString
       val stream = warcStream(ss, src)
@@ -151,7 +150,7 @@ object CrawlPipelineQueries {
           storeDir, landDir, frontierDir,
           docs.select(col("doc_id"), col("lang")), rates, k = 100)
         .truncateLineage
-      trainingManifest(samp, ss.read.parquet(landDir).select(col("doc_id"), col("text"))
+      trainingManifest(samp, BatchStore(landDir).all(ss).select(col("doc_id"), col("text"))
         .join(samp.select("doc_id"), "doc_id"))
     }) {
       // the streamed build's twin: the batch chain (dd..rates) supplies
@@ -1107,9 +1106,8 @@ object CrawlPipelineQueries {
       val (ss, pages) = pageStream(s, d)
       val collapsed = concat_ws(" ", TextOps.rawTokens(col("text")))
       val storeDir = java.nio.file.Files.createTempDirectory("graft-htmlingest-store").toString
-      t(ss, d).documents.where(col("doc_id") % 2 === 0)
-        .select(sha2(collapsed, 256).as("h"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      BatchStore(storeDir).seed(t(ss, d).documents.where(col("doc_id") % 2 === 0)
+        .select(sha2(collapsed, 256).as("h")))
       val rates = Corpus.temperatureRates(
         t(ss, d).documents.select(col("doc_id"), col("lang"), collapsed.as("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-htmlingest-out").toString
@@ -1143,8 +1141,7 @@ object CrawlPipelineQueries {
     Q("streaming_paragraph_ingest", (s, d) => {
       val (ss, rawPages) = pageStream(s, d)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-parastore").toString
-      ss.range(0).select(col("id").as("ph"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      BatchStore(storeDir).seed(ss.range(0).select(col("id").as("ph")))
       val out = java.nio.file.Files.createTempDirectory("graft-paraout").toString
       val pages = boilerplated(rawPages)
       graft.streaming.IngestPipeline.runParaIngest(ss, pages, storeDir, out)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.LakeTable
-import graft.streaming.EventStreams
+import graft.streaming.{BatchStore, EventStreams}
 import graft.plans.Lineage.TruncateOps
 import graft.QuerySpec.Q
 import graft.SparkEntry._
@@ -455,9 +455,8 @@ object StreamingQueries {
     Q("streaming_pipeline_ingest", (s, d) => {
       val (ss, docs) = docStream(s, d)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-ingest-store").toString
-      t(ss, d).documents.where(col("doc_id") % 2 === 0)
-        .select(sha2(col("text"), 256).as("h"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      BatchStore(storeDir).seed(t(ss, d).documents.where(col("doc_id") % 2 === 0)
+        .select(sha2(col("text"), 256).as("h")))
       val rates = Corpus.temperatureRates(
         t(ss, d).documents.select(col("doc_id"), col("lang"), col("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-ingest-out").toString

@@ -18,15 +18,15 @@ import graft.functions._
   * sessionize so batch output is the oracle for streaming output
   * (exactly-once file/memory sinks converge to the batch answer).
   *
-  * Every bounded stream in graft is read, run to its end and landed
-  * through one seam here: [[fileStream]] reads a directory of drops one
-  * file per micro-batch, [[drain]] runs a query until its backlog is
-  * spent and it stops by itself (`Trigger.AvailableNow`, the poison
-  * pill's Spark form), [[drainEach]] is its `foreachBatch` form, and
-  * [[batchDir]] is where a batch-keyed sink lands batch N. A drained
-  * query has ended before `stop()`, which therefore cancels no job
-  * group (stopping a still-running query, even an idle one, logs two
-  * "Failed to cancel job group" warnings).
+  * Every bounded stream in graft is read and run to its end through one
+  * seam here: [[fileStream]] reads a directory of drops one file per
+  * micro-batch, [[drain]] runs a query until its backlog is spent and
+  * it stops by itself (`Trigger.AvailableNow`, the poison pill's Spark
+  * form), and [[drainEach]] is its `foreachBatch` form; a batch-keyed
+  * sink lands batch N through [[BatchStore]]. A drained query has ended
+  * before `stop()`, which therefore cancels no job group (stopping a
+  * still-running query, even an idle one, logs two "Failed to cancel
+  * job group" warnings).
   */
 object EventStreams {
 
@@ -59,12 +59,6 @@ object EventStreams {
     drain(stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       f(batch, batchId)
     })
-
-  /** Where a batch-keyed sink lands micro-batch `batchId` of `dir`: a
-    * re-delivered batch overwrites its own directory instead of
-    * appending duplicates, and `spark.read.parquet(dir)` reads the
-    * landed batches back with `batch_id` as a partition column. */
-  def batchDir(dir: String, batchId: Long): String = s"$dir/batch_id=$batchId"
 
   /** The events table schema with ts already as a microsecond
     * timestamp (see graft.sources.Tables.events for the NANOS issue —
@@ -430,20 +424,20 @@ object EventStreams {
   }
 
   /** foreachBatch composed with the size-governed batch sink
-    * (Sinks.writeCompacted): each micro-batch lands as
-    * `batch_id=<n>/` with file count ⌈rows/target⌉ and a
-    * maxRecordsPerFile ceiling — replay-idempotent (a re-delivered
-    * batch overwrites its own directory) AND small-file-proof (a
+    * (Sinks.writeCompacted): each micro-batch lands in the
+    * [[BatchStore.landing]] `outDir` with file count ⌈rows/target⌉ and
+    * a maxRecordsPerFile ceiling — replay-idempotent (a re-delivered
+    * batch replaces its own directory) AND small-file-proof (a
     * trickle of tiny micro-batches cannot shatter the table into
     * thousands of files). This is the production streaming-ingest
     * recipe: exactly-once landing + compaction policy in ONE hop,
     * instead of a separate compaction job rewriting the table later. */
   def runToCompactedParquet(streamed: DataFrame, outDir: String,
-                            targetRowsPerFile: Long): Unit =
-    drainEach(streamed) { (batch, batchId) =>
-      graft.sources.Sinks.writeCompacted(batch, batchDir(outDir, batchId), targetRowsPerFile)
-      ()
-    }
+                            targetRowsPerFile: Long): Unit = {
+    val land = BatchStore.landing(outDir)
+    drainEach(streamed)((batch, batchId) =>
+      land.write(batchId)(graft.sources.Sinks.writeCompacted(batch, _, targetRowsPerFile)))
+  }
 
   /** The latest-image table's schema, for a drain that landed nothing. */
   private val latestImageSchema: StructType = StructType(Seq(

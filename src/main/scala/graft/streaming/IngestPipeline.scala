@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Corpus, Dedup}
 import graft.plans.Lineage.TruncateOps
-import graft.streaming.EventStreams.{batchDir, drainEach}
+import graft.streaming.EventStreams.drainEach
 
 /** The CONTINUOUS twin of the batch `pipeline_ingest` composition:
   * document drops arriving as a file stream, each micro-batch run as
@@ -17,16 +17,10 @@ import graft.streaming.EventStreams.{batchDir, drainEach}
   *   broadcast — see Corpus.temperatureRates) → context-window
   *   chunking → size-governed compacted landing.
   *
-  * Exactly-once discipline, the same two devices the other streaming
-  * sinks use (EventStreams.runToCompactedParquet / runLatestImageMerge):
-  *  - every write is KEYED BY BATCH ID and overwrites its own
-  *    directory: output lands in `outDir/batch_id=N/`, and the batch's
-  *    newly-seen digests commit to `storeDir/bN/` — a re-delivered
-  *    batch overwrites both instead of duplicating either;
-  *  - a batch reads only digest dirs with id < its own (the seed plus
-  *    every EARLIER commit), so a replay sees exactly the store its
-  *    original run saw — in particular it does NOT dedup against its
-  *    own previously-committed digests or a later batch's.
+  * Exactly-once discipline is [[BatchStore]]'s: the landing and the
+  * digest store are batch-keyed (a re-delivered batch replaces its own
+  * commits), and a batch reads the store AS OF its own id — a replay
+  * does NOT dedup against its own earlier commit or a later batch's.
   *
   * Scale shape per micro-batch: digests are 32-byte keys aggregated
   * batch-side then anti-joined against the store scan (the
@@ -56,39 +50,6 @@ object IngestPipeline {
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("text", StringType)))
 
-  private def storeBatchIds(storeDir: String): Seq[Long] =
-    Option(new java.io.File(storeDir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("b"))
-      .flatMap(f => scala.util.Try(f.getName.drop(1).toLong).toOption)
-      .sorted
-
-  /** Crash recovery for [[compactStore]]'s two-rename swap: if a crash
-    * landed between renaming the old seed aside and renaming the new
-    * one in, the completed `.seed_next` is the truth — finish the swap.
-    * Called at the top of every store read/compact so the pipeline
-    * self-heals instead of failing on a missing seed dir. */
-  private def healStore(storeDir: String): Unit = {
-    val seed = new java.io.File(s"$storeDir/seed")
-    val next = new java.io.File(s"$storeDir/.seed_next")
-    if (!seed.exists() && next.exists())
-      require(next.renameTo(seed), s"store heal failed in $storeDir")
-    graft.sources.FsUtil.deleteRecursively(new java.io.File(s"$storeDir/.seed_old"))
-  }
-
-  /** A batch-keyed store AS OF batch `batchId`: the seed plus every
-    * STRICTLY earlier batch commit, read after [[healStore]], so a
-    * replayed batch sees exactly the store its original run saw. */
-  private def storeAsOf(ss: SparkSession, storeDir: String, batchId: Long): DataFrame = {
-    healStore(storeDir)
-    ss.read.parquet(s"$storeDir/seed" +:
-      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i"): _*)
-  }
-
-  /** An empty seed: a store whose stream starts with no history. */
-  private def writeEmptySeed(spark: SparkSession, storeDir: String, schema: StructType): Unit =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      .write.mode("overwrite").parquet(s"$storeDir/seed")
-
   /** One micro-batch of the ingest, exposed so the spec can re-run a
     * batch verbatim and prove replay idempotence. `rates` must be the
     * fixed profile policy, not derived from `batch`.
@@ -117,7 +78,9 @@ object IngestPipeline {
                   bandStoreDir: Option[String] = None): Unit = {
     val ss = batch.sparkSession
     val batchP = fanOut(batch, "doc_id") // sha256/minhash/chunk work parallel
-    val storeAll = storeAsOf(ss, storeDir, batchId)
+    val digests = BatchStore(storeDir)
+    val bands = bandStoreDir.map(BatchStore(_))
+    val storeAll = digests.asOf(ss, batchId)
     val store =
       if (bloomBits <= 0L) storeAll
       else graft.operators.Sketches.bloomSemiFilter(
@@ -131,21 +94,19 @@ object IngestPipeline {
     val survivors = batchP.join(fresh.select(col("doc_id")), Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("text"))
     // near-dup admission against the band store AS OF this batch
-    val admitted = bandStoreDir.fold(survivors) { bd =>
-      Dedup.incrementalMinhashDedup(survivors, storeAsOf(ss, bd, batchId))
+    val admitted = bands.fold(survivors) { bs =>
+      Dedup.incrementalMinhashDedup(survivors, bs.asOf(ss, batchId))
         .truncateLineage // consumed twice: resample + band commit
     }
     val kept = Corpus.resampleWithRates(admitted, rates)
       .select(col("doc_id"), col("lang"), col("text"))
     val chunks = Corpus.chunk(kept, chunkSize)
       .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
-    graft.sources.Sinks.writeCompacted(chunks, batchDir(outDir, batchId), targetRowsPerFile)
+    BatchStore(outDir).write(batchId)(graft.sources.Sinks.writeCompacted(chunks, _, targetRowsPerFile))
     // commit the batch's digests LAST (post-resample docs included:
     // a later duplicate of a sampled-out doc is still a duplicate)
-    fresh.select(col("h")).write.mode("overwrite").parquet(s"$storeDir/b$batchId")
-    bandStoreDir.foreach(bd =>
-      Dedup.bandKeys(admitted).select(col("band"), col("bh"))
-        .write.mode("overwrite").parquet(s"$bd/b$batchId"))
+    digests.write(batchId, fresh.select(col("h")))
+    bands.foreach(_.write(batchId, Dedup.bandKeys(admitted).select(col("band"), col("bh"))))
   }
 
   /** One micro-batch of PARAGRAPH-granularity incremental dedup — the
@@ -155,10 +116,9 @@ object IngestPipeline {
     * every later copy — same batch or any later one — drops; the
     * retroactive drop-ALL-copies form stays a batch job).
     *
-    * Same batch-keyed transaction discipline as [[ingestBatch]]: the
-    * paragraph-hash store is read AS OF this batch (seed + strictly
-    * earlier commits), the landing and the batch's newly-first hashes
-    * overwrite their own directories, so replays are idempotent.
+    * The [[BatchStore]] discipline of [[ingestBatch]]: the hash store
+    * is read AS OF this batch, and the landing and the newly-first
+    * hashes commit batch-keyed, so replays are idempotent.
     *
     * Scale shape per batch: the first-occurrence rule is a window over
     * the 8-byte paragraph hash (per-group rows = one paragraph's
@@ -182,13 +142,14 @@ object IngestPipeline {
     * re-run the whole dedup. */
   private def paraIngestLand(paras: DataFrame, batchId: Long, storeDir: String,
                              outDir: String, pinLanded: Boolean): DataFrame = {
-    val store = storeAsOf(paras.sparkSession, storeDir, batchId)
+    val store = BatchStore(storeDir)
     val hashed = paras.select(col("doc_id"), col("pos"), col("para"),
       xxhash64(col("para")).as("ph"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("ph")).orderBy(col("doc_id"), col("pos"))
     val flagged = hashed.withColumn("rn", row_number().over(w))
-      .join(store.select(col("ph")).distinct().withColumn("seen", lit(true)),
+      .join(store.asOf(paras.sparkSession, batchId).select(col("ph")).distinct()
+        .withColumn("seen", lit(true)),
         Seq("ph"), "left")
       .withColumn("keep", col("rn") === 1 && col("seen").isNull)
       .truncateLineage // consumed twice: landing + store commit
@@ -200,10 +161,9 @@ object IngestPipeline {
             when(col("keep"), struct(col("pos"), col("para"))))),
           s => s.getField("para"))).as("text"))
     val landed = if (pinLanded) docsOut.truncateLineage else docsOut
-    landed.write.mode("overwrite").parquet(batchDir(outDir, batchId))
+    BatchStore(outDir).write(batchId, landed)
     // commit ONLY newly-first hashes: in-store repeats are already there
-    flagged.where(col("keep")).select(col("ph")).distinct()
-      .write.mode("overwrite").parquet(s"$storeDir/b$batchId")
+    store.write(batchId, flagged.where(col("keep")).select(col("ph")).distinct())
     landed
   }
 
@@ -213,11 +173,13 @@ object IngestPipeline {
     * paragraph granularity). Returns the landed per-document table. */
   def runParaIngest(spark: SparkSession, pageStream: DataFrame, storeDir: String,
                     outDir: String): DataFrame = {
+    BatchStore.seeded(storeDir)
+    val land = BatchStore.landing(outDir)
     drainEach(pageStream) { (batch, batchId) =>
       paraIngestBatch(graft.operators.Html.extractBlocks(fanOut(batch, "doc_id")),
         batchId, storeDir, outDir)
     }
-    spark.read.parquet(outDir)
+    land.all(spark)
       .select(col("doc_id"), col("n_paras"), col("n_kept"), col("text"))
   }
 
@@ -244,6 +206,9 @@ object IngestPipeline {
     // loop-invariant dimension pinned once — a per-batch broadcast of
     // an unpinned langDim re-scans the dimension source every batch
     val langFrozen = langDim.truncateLineage
+    BatchStore.seeded(storeDir)
+    BatchStore.landing(landDir)
+    val frontier = BatchStore.landing(frontierDir)
     drainEach(containerStream) { (batch, batchId) =>
       val recs = graft.sources.Warc.records(batch.select(col("content")))
       // the fixture's fetch_ts stamp is invertible (warc_ingest)
@@ -261,12 +226,11 @@ object IngestPipeline {
       val mixed = gated.join(broadcast(rates), "lang")
         .where(graft.operators.Corpus.hashPermille(col("text")) < col("keep_permille"))
         .select(col("doc_id"), col("text"))
-      graft.operators.Corpus.priorityKeyed(mixed)
-        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-        .write.mode("overwrite").parquet(batchDir(frontierDir, batchId))
+      frontier.write(batchId, graft.operators.Corpus.priorityKeyed(mixed)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1))
     }
     graft.operators.Corpus.priorityFinish(
-      spark.read.parquet(frontierDir).select(col("doc_id"), col("weight"), col("__key")), k)
+      frontier.all(spark).select(col("doc_id"), col("weight"), col("__key")), k)
   }
 
   /** The crawl FRONT DOOR composed as one stream — the full admission
@@ -296,14 +260,7 @@ object IngestPipeline {
                         blockRules: DataFrame, robotsRules: DataFrame,
                         landDir: String): DataFrame = {
     import graft.operators.Html
-    // Replay idempotency must not depend on the rerun producing at
-    // least as many micro-batches as the prior run (per-batch overwrite
-    // alone leaves a stale batch_id=N dir alive when the rerun
-    // coalesces into fewer batches — ADVICE r15): the landing dir is
-    // this run's output, so clear it before the stream starts.
-    val landPath = new org.apache.hadoop.fs.Path(landDir)
-    landPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(landPath, true)
+    val land = BatchStore.landing(landDir)
     // rule relations are loop-invariant; unpinned, each micro-batch
     // rebuilds them from their source scans (optimization r17)
     val blockFrozen = blockRules.truncateLineage
@@ -316,9 +273,9 @@ object IngestPipeline {
         .join(Html.robotsFilter(urls, robotsFrozen)
           .withColumnRenamed("rule", "robots_rule"), Seq("url"))
         .withColumn("admitted", !col("blocked") && col("allowed"))
-      graded.write.mode("overwrite").parquet(batchDir(landDir, batchId))
+      land.write(batchId, graded)
     }
-    spark.read.parquet(landDir)
+    land.all(spark)
       .select(col("url"), col("blocked"), col("rule_host"), col("rule_prefix"),
         col("allowed"), col("robots_rule"), col("admitted"))
   }
@@ -337,15 +294,15 @@ object IngestPipeline {
   def runPrioritySampleIngest(spark: SparkSession, docStream: DataFrame,
                               outDir: String, k: Int): DataFrame = {
     require(k > 0, "runPrioritySampleIngest needs k > 0")
+    val land = BatchStore.landing(outDir)
     drainEach(docStream) { (batch, batchId) =>
       // fanOut measured a NET LOSS here (priority keys are one md5
       // per row — cheaper than shuffling the text): keep single-scan
-      graft.operators.Corpus.priorityKeyed(batch)
-        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-        .write.mode("overwrite").parquet(batchDir(outDir, batchId))
+      land.write(batchId, graft.operators.Corpus.priorityKeyed(batch)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1))
     }
     graft.operators.Corpus.priorityFinish(
-      spark.read.parquet(outDir).select(col("doc_id"), col("weight"), col("__key")), k)
+      land.all(spark).select(col("doc_id"), col("weight"), col("__key")), k)
   }
 
   /** One micro-batch of the STREAMING dataset card: commit (a) the
@@ -359,11 +316,10 @@ object IngestPipeline {
   def cardBatch(batch: DataFrame, batchId: Long, cubeDir: String,
                 digestDir: String): Unit = {
     val batchP = fanOut(batch, "doc_id") // sha256 + token histogram parallel
-    graft.operators.Corpus.datasetCardCube(batchP)
-      .write.mode("overwrite").parquet(s"$cubeDir/b$batchId")
-    val store = storeAsOf(batch.sparkSession, digestDir, batchId)
-    Dedup.incrementalDigestDedup(batchP, store).select(col("h"))
-      .write.mode("overwrite").parquet(s"$digestDir/b$batchId")
+    BatchStore(cubeDir).write(batchId, graft.operators.Corpus.datasetCardCube(batchP))
+    val digests = BatchStore(digestDir)
+    digests.write(batchId, Dedup.incrementalDigestDedup(
+      batchP, digests.asOf(batch.sparkSession, batchId)).select(col("h")))
   }
 
   /** The dataset card maintained INCREMENTALLY: drain the doc stream
@@ -373,14 +329,15 @@ object IngestPipeline {
     * [[graft.operators.Corpus.datasetCard]], which is the oracle. */
   def runCardIngest(spark: SparkSession, docStream: DataFrame,
                     cubeDir: String, digestDir: String): DataFrame = {
-    writeEmptySeed(spark, digestDir, StructType(Seq(StructField("h", StringType))))
+    val cubes = BatchStore.landing(cubeDir)
+    val digests = BatchStore.seeded(digestDir)
+    digests.seed(spark.range(0).select(lit("").as("h")))
     drainEach(docStream)(cardBatch(_, _, cubeDir, digestDir))
-    val cube = spark.read.parquet(
-      storeBatchIds(cubeDir).map(i => s"$cubeDir/b$i"): _*)
+    val cube = cubes.all(spark)
       .groupBy(col("lang"), col("source"), col("n_toks"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("chars")).as("chars"),
         sum(col("n_pass")).as("n_pass"))
-    val nDistinct = storeAsOf(spark, digestDir, Long.MaxValue)
+    val nDistinct = digests.all(spark)
       .agg(count(lit(1)).as("n_distinct"))
     graft.operators.Corpus.datasetCardFromCube(cube, nDistinct)
   }
@@ -413,15 +370,15 @@ object IngestPipeline {
       .groupBy(col("x.doc_id").as("doc_id"), col("y.doc_id").as("mate"))
       .agg(count(lit(1)).as("n")).where(col("n") >= minShared)
       .select(col("doc_id"))
-    val store = storeAsOf(batch.sparkSession, fpStoreDir, batchId)
-    val storeRej = fps.join(store.select(col("doc_id").as("e"), col("fp")), "fp")
+    val fpStore = BatchStore(fpStoreDir)
+    val storeRej = fps.join(fpStore.asOf(batch.sparkSession, batchId)
+        .select(col("doc_id").as("e"), col("fp")), "fp")
       .groupBy(col("doc_id"), col("e")).agg(count(lit(1)).as("n"))
       .where(col("n") >= minShared).select(col("doc_id"))
     val rejected = mateRej.unionByName(storeRej).distinct().truncateLineage
     val admitted = batch.select(col("doc_id")).join(rejected, Seq("doc_id"), "left_anti")
-    fps.join(admitted, Seq("doc_id")).select(col("doc_id"), col("fp"))
-      .write.mode("overwrite").parquet(s"$fpStoreDir/b$batchId")
-    admitted.write.mode("overwrite").parquet(batchDir(outDir, batchId))
+    fpStore.write(batchId, fps.join(admitted, Seq("doc_id")).select(col("doc_id"), col("fp")))
+    BatchStore(outDir).write(batchId, admitted)
   }
 
   /** Drain the doc stream through [[winnowBatch]] and return the
@@ -429,52 +386,16 @@ object IngestPipeline {
   def runWinnowIngest(spark: SparkSession, docStream: DataFrame,
                       fpStoreDir: String, outDir: String,
                       minShared: Int = 2, maxDf: Int = 50): DataFrame = {
-    writeEmptySeed(spark, fpStoreDir,
-      StructType(Seq(StructField("doc_id", LongType), StructField("fp", LongType))))
+    BatchStore.seeded(fpStoreDir).seed(spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")))
+    val land = BatchStore.landing(outDir)
     drainEach(docStream)(winnowBatch(_, _, fpStoreDir, outDir, minShared, maxDf))
-    spark.read.parquet(outDir).select(col("doc_id"))
-  }
-
-  /** Fold finalized batch commits into the seed — the store's
-    * compaction. Without it the digest store is seed + one directory
-    * per micro-batch forever, and every batch's scan unions an
-    * ever-growing dir list. Merging `b0..bThroughBatch` into the seed
-    * (distinct, one write, then retire the batch dirs) keeps the dir
-    * list bounded by compaction cadence.
-    *
-    * FINALIZATION CONTRACT: only compact batches that can no longer
-    * replay (their offsets are committed in the stream's checkpoint) —
-    * a replayed batch must see the store AS OF its original run, and
-    * compaction folds later digests into the seed where an earlier
-    * replay would wrongly dedup against them. The caller owns that
-    * horizon, exactly like a lake vacuum owns its retention window.
-    * Returns the number of batch dirs retired. */
-  def compactStore(spark: SparkSession, storeDir: String, throughBatch: Long): Long = {
-    healStore(storeDir)
-    val ids = storeBatchIds(storeDir).filter(_ <= throughBatch)
-    if (ids.isEmpty) return 0L
-    val dirs = s"$storeDir/seed" +: ids.map(i => s"$storeDir/b$i")
-    val merged = spark.read.parquet(dirs: _*).distinct()
-    val staging = s"$storeDir/.seed_next"
-    merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    // swap by METADATA renames, never an rm of live data: the only
-    // crash window with no seed dir is between the two renames, and
-    // healStore (run before every store read) completes the swap from
-    // the surviving .seed_next. The old seed is deleted LAST.
-    val seed = new java.io.File(s"$storeDir/seed")
-    val old = new java.io.File(s"$storeDir/.seed_old")
-    graft.sources.FsUtil.deleteRecursively(old)
-    require(seed.renameTo(old), s"store compaction: could not set aside $seed")
-    require(new java.io.File(staging).renameTo(seed),
-      s"store compaction swap failed in $storeDir")
-    ids.foreach(i => graft.sources.FsUtil.deleteRecursively(new java.io.File(s"$storeDir/b$i")))
-    graft.sources.FsUtil.deleteRecursively(old)
-    ids.size.toLong
+    land.all(spark).select(col("doc_id"))
   }
 
   /** Run the ingest over a streaming DataFrame of (doc_id, lang, text)
-    * to completion and return the landed chunk table. `storeDir` must
-    * contain the pre-seeded digest history under `seed/`. The stream
+    * to completion and return the landed chunk table. `storeDir` (and
+    * `bandStoreDir`) is a [[BatchStore.seeded]] store: its seed holds
+    * the digest history, and no earlier drain's batches. The stream
     * is the caller's, so an upstream extraction stage (e.g. HTML
     * boilerplate removal) runs inside the same micro-batch transaction
     * as the ingest itself; a bounded source dir of drops is
@@ -488,11 +409,14 @@ object IngestPipeline {
     // typically a corpus-scale aggregate, and the per-batch broadcast
     // otherwise recomputes it from source every micro-batch
     val frozenRates = rates.truncateLineage
+    BatchStore.seeded(storeDir)
+    bandStoreDir.foreach(BatchStore.seeded)
+    val land = BatchStore.landing(outDir)
     drainEach(docStream) { (batch, batchId) =>
       ingestBatch(batch, batchId, storeDir, frozenRates, outDir,
         targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
     }
-    spark.read.parquet(outDir)
+    land.all(spark)
       .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
   }
 
@@ -520,13 +444,13 @@ object IngestPipeline {
     // stays ≤ m rows on a firehose whose union vocabulary would not
     // ship (the dsir_select_hashed posture, streaming half)
     val frozen = model.truncateLineage
+    val land = BatchStore.landing(outDir)
     drainEach(docStream) { (batch, batchId) =>
       // fanOut measured +26% here (the scorer's explode+broadcast
       // probe is cheaper than shuffling the text payload): single-scan
-      scorer(batch, frozen)
-        .write.mode("overwrite").parquet(batchDir(outDir, batchId))
+      land.write(batchId, scorer(batch, frozen))
     }
-    spark.read.parquet(outDir)
+    land.all(spark)
       .select(col("doc_id"), col("n_tokens"),
         round(col("sl").cast(DoubleType), 6).as("dsir_logw"),
         (col("sl") >= lit(minLogw)).as("selected"))
@@ -554,43 +478,27 @@ object IngestPipeline {
     * (one window + one groupBy on conv_id); the landing carries
     * constant-width audit columns + a 16-byte digest per conversation
     * (transcripts themselves are NOT landed); the finish shuffles
-    * only (conv_id, resp_fp). Replays are idempotent: the landing dir
-    * is cleared at start and every batch overwrites its own
-    * `batch_id=N` directory (the runCrawlAdmission posture). */
+    * only (conv_id, resp_fp). Replays are idempotent: the landing is
+    * opened with [[BatchStore.landing]] and every batch replaces its
+    * own `batch_id=N` directory (the runCrawlAdmission posture). */
   def runSftAdmission(spark: SparkSession, docStream: DataFrame,
                       landDir: String): DataFrame = {
     import graft.operators.PostTraining
-    val landPath = new org.apache.hadoop.fs.Path(landDir)
-    landPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(landPath, true)
+    def audited(turns: DataFrame): DataFrame = PostTraining.conversationAudit(turns)
+      .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
+    val land = BatchStore.landing(landDir)
     drainEach(docStream) { (batch, batchId) =>
       // fanOut measured 2.15x SLOWER here — render/parse is one
       // regex split per transcript, far cheaper than shuffling the
       // transcripts; keep the batch single-scan
-      val turns = PostTraining.parseTurns(PostTraining.renderTranscripts(batch))
-      PostTraining.conversationAudit(turns)
-        .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
-        .write.mode("overwrite").parquet(batchDir(landDir, batchId))
+      land.write(batchId, audited(
+        PostTraining.parseTurns(PostTraining.renderTranscripts(batch))))
     }
-    // zero-micro-batch guard (ADVICE r16): the landing dir was
-    // cleared up front, so a stream that delivered nothing leaves no
-    // directory to read — return an empty, schema-bearing admission
-    // relation instead of throwing on the nonexistent path
-    val fs = landPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val landed =
-      if (fs.exists(landPath)) spark.read.parquet(landDir)
-      else {
-        import graft.operators.PostTraining
-        val noTurns = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          new org.apache.spark.sql.types.StructType()
-            .add("conv_id", org.apache.spark.sql.types.LongType)
-            .add("turn_idx", org.apache.spark.sql.types.LongType)
-            .add("role", org.apache.spark.sql.types.StringType)
-            .add("content", org.apache.spark.sql.types.StringType))
-        PostTraining.conversationAudit(noTurns)
-          .join(PostTraining.responseFingerprints(noTurns), Seq("conv_id"), "left")
-      }
+    // zero-micro-batch guard (ADVICE r16): an empty landing reads as an
+    // empty, schema-bearing admission relation
+    val noTurns = spark.range(0).select(col("id").as("conv_id"), col("id").as("turn_idx"),
+      lit("").as("role"), lit("").as("content"))
+    val landed = land.all(spark, ifEmpty = Some(audited(noTurns).schema))
     val groups = landed.groupBy(col("resp_fp"))
       .agg(count(lit(1)).as("group_size"), min(col("conv_id")).as("__keeper"))
     landed.join(groups, Seq("resp_fp"), "left")

@@ -12,15 +12,12 @@ import graft.operators.Similarity
   * (Similarity.ivfPqEncodeBatch / appendDrift / the persisted index
   * layout) run as one streaming lifecycle.
   *
-  * Exactly-once discipline, the IngestPipeline devices:
-  *  - a batch's cells and codes land in batch-keyed subdirs
-  *    (`cells/b<id>/`, `codes/b<id>/`) and OVERWRITE them on replay —
-  *    a re-delivered batch reproduces its commit instead of doubling
-  *    the index; [[Similarity.ivfPqReadGrown]] reads seed + batches as
-  *    one relation;
-  *  - the drift decision is computed against the BUILD-TIME baseline
-  *    (persisted next to the index) and appended batch-keyed too, so
-  *    the rebuild trigger's history is replay-stable.
+  * Exactly-once discipline: the index grows in its [[grown]]
+  * [[BatchStore]] beside the flat seed relations. A batch's cells,
+  * codes and drift decision (against the BUILD-TIME baseline persisted
+  * next to the index) publish as one batch by one rename, so a batch cut
+  * between its writes leaves the index as it was and a replay replaces
+  * its commit; [[Similarity.ivfPqReadGrown]] reads seed + batches.
   *
   * Scale shape per micro-batch: one broadcast coarse assignment + one
   * residual encode over the BATCH (index-size-independent — the
@@ -36,6 +33,9 @@ object VectorIngest {
   val vecSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
+
+  /** The batches a stream folded into the index under `indexDir`. */
+  def grown(indexDir: String): BatchStore = BatchStore(s"$indexDir/grown")
 
   /** One micro-batch: encode under frozen geometry, land batch-keyed,
     * record the drift decision. Exposed so the spec can replay a batch
@@ -68,10 +68,11 @@ object VectorIngest {
     val batchP = IngestPipeline.fanOut(batch, "vec_id")
     val (cellsNew, codesNew, drift) = Similarity.ivfPqEncodeBatchWithDrift(
       batchP, cents, books, baseline, m, dim, threshold, minBatchPerCell)
-    cellsNew.write.mode("overwrite").parquet(s"$indexDir/cells/b$batchId")
-    codesNew.write.mode("overwrite").parquet(s"$indexDir/codes/b$batchId")
-    drift.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").parquet(s"$indexDir/drift/b$batchId")
+    grown(indexDir).write(batchId) { stage =>
+      cellsNew.write.parquet(s"$stage/cells")
+      codesNew.write.parquet(s"$stage/codes")
+      drift.withColumn("batch_id", lit(batchId)).write.parquet(s"$stage/drift")
+    }
   }
 
   /** Drain a bounded vector-drop dir into the index; returns the drift
@@ -85,18 +86,13 @@ object VectorIngest {
     val cents = spark.read.parquet(s"$indexDir/coarse_cents").truncateLineage
     val books = spark.read.parquet(s"$indexDir/books").truncateLineage
     val baseline = spark.read.parquet(s"$indexDir/baseline").truncateLineage
+    val batches = BatchStore.seeded(grown(indexDir).dir)
     EventStreams.drainEach(EventStreams.fileStream(spark, srcDir, vecSchema)) { (batch, batchId) =>
       ingestBatchFrozen(batch, batchId, indexDir, cents, books, baseline,
         m, dim, threshold, minBatchPerCell)
     }
-    // a drain that found nothing to drain is a no-op, not an error:
-    // with zero micro-batches the drift dir was never created
-    if (new java.io.File(s"$indexDir/drift").exists())
-      spark.read.option("recursiveFileLookup", "true").parquet(s"$indexDir/drift")
-    else spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("cell", LongType), StructField("n_batch", LongType),
-        StructField("drift_ratio", DoubleType), StructField("rebuild", BooleanType),
-        StructField("batch_id", LongType))))
+    // a drain that found nothing to drain is a no-op, not an error
+    batches.all(spark, "drift", ifEmpty = Some(StructType.fromDDL(
+      "cell BIGINT, n_batch BIGINT, drift_ratio DOUBLE, rebuild BOOLEAN, batch_id BIGINT")))
   }
 }

@@ -301,11 +301,9 @@ class DedupSpec extends AnyFunSuite {
     import graft.streaming.IngestPipeline
     val store = java.nio.file.Files.createTempDirectory("winnow-spec-store").toString
     val out = java.nio.file.Files.createTempDirectory("winnow-spec-out").toString
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("fp", org.apache.spark.sql.types.LongType))))
-      .write.mode("overwrite").parquet(s"$store/seed")
+    graft.streaming.BatchStore(store).seed(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, fp BIGINT")))
     val original = "the winnowing detector must catch this exact reposted paragraph later on"
     val b0 = Seq(
       (1L, original),

@@ -118,8 +118,7 @@ class ParagraphLineSpec extends AnyFunSuite {
 
   private def mkParaStore(): (String, String) = {
     val store = java.nio.file.Files.createTempDirectory("pl-parastore").toString
-    spark.range(0).select(col("id").as("ph"))
-      .write.mode("overwrite").parquet(s"$store/seed")
+    graft.streaming.BatchStore(store).seed(spark.range(0).select(col("id").as("ph")))
     val out = java.nio.file.Files.createTempDirectory("pl-paraout").toString
     (store, out)
   }

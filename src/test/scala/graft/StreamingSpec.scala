@@ -577,8 +577,8 @@ class StreamingSpec extends AnyFunSuite {
         dest.setLastModified(t)
       }
     val storeDir = Files.createTempDirectory("graft-ingest-st").toString
-    Seq("stored text").toDF("text").select(sha2($"text", 256).as("h"))
-      .write.parquet(s"$storeDir/seed")
+    graft.streaming.BatchStore(storeDir).seed(
+      Seq("stored text").toDF("text").select(sha2($"text", 256).as("h")))
     // keep-everything policy: the dedup semantics are what's under test
     val rates = Seq(("en", 3L, 1000L), ("fr", 1L, 1000L))
       .toDF("lang", "n_l", "keep_permille")
@@ -605,18 +605,21 @@ class StreamingSpec extends AnyFunSuite {
     // the bloom-fronted store scan is EXACT (no false negatives): the
     // same run with the runtime filter on answers identically
     val storeDir2 = Files.createTempDirectory("graft-ingest-st2").toString
-    Seq("stored text").toDF("text").select(sha2($"text", 256).as("h"))
-      .write.parquet(s"$storeDir2/seed")
+    graft.streaming.BatchStore(storeDir2).seed(
+      Seq("stored text").toDF("text").select(sha2($"text", 256).as("h")))
     val out2 = Files.createTempDirectory("graft-ingest-o2").toString
     val bloomed = IngestPipeline.runIngestStream(spark, docStream(src), storeDir2, rates, out2,
         targetRowsPerFile = 100L, chunkSize = 8, bloomBits = 1L << 16)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3))).toSet
     assert(bloomed === got)
     // store compaction: fold the finalized batch commits into the seed —
-    // dir list shrinks, and the NEXT batch dedups identically against it
-    val retired = IngestPipeline.compactStore(spark, storeDir, throughBatch = 1L)
+    // no batch is left beside it (the store AS OF batch 0 is the whole
+    // store), and the NEXT batch dedups identically against it
+    val store = graft.streaming.BatchStore(storeDir)
+    val digests = store.all(spark).collect().toSet
+    val retired = store.compact(spark, through = 1L)
     assert(retired === 2L)
-    assert(!new java.io.File(s"$storeDir/b0").exists())
+    assert(store.asOf(spark, 0L).collect().toSet === digests)
     val nextBatch = Seq(
       (7L, "en", "alpha beta gamma"),  // dup of compacted doc 1: must still drop
       (8L, "en", "brand new text")
@@ -657,11 +660,12 @@ class StreamingSpec extends AnyFunSuite {
         dest.setLastModified(t)
       }
     val storeDir = Files.createTempDirectory("graft-nd-st").toString
-    Seq("unrelated seed digest").toDF("text").select(sha2($"text", 256).as("h"))
-      .write.parquet(s"$storeDir/seed")
+    graft.streaming.BatchStore(storeDir).seed(
+      Seq("unrelated seed digest").toDF("text").select(sha2($"text", 256).as("h")))
     val bandDir = Files.createTempDirectory("graft-nd-bs").toString
-    Dedup.bandKeys(Seq((100L, "quick brown fox jumps high")).toDF("doc_id", "text"))
-      .select(col("band"), col("bh")).write.parquet(s"$bandDir/seed")
+    graft.streaming.BatchStore(bandDir).seed(
+      Dedup.bandKeys(Seq((100L, "quick brown fox jumps high")).toDF("doc_id", "text"))
+        .select(col("band"), col("bh")))
     val rates = Seq(("en", 5L, 1000L)).toDF("lang", "n_l", "keep_permille")
     val out = Files.createTempDirectory("graft-nd-o").toString
     val got = IngestPipeline.runIngestStream(spark, docStream(src), storeDir, rates, out,
@@ -675,31 +679,6 @@ class StreamingSpec extends AnyFunSuite {
     val replayed = spark.read.parquet(out).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     assert(replayed === Set(2L, 6L))
-  }
-
-  test("streaming ingest heals a band store left between its compaction renames") {
-    import org.apache.spark.sql.functions.{col, sha2}
-    import graft.streaming.IngestPipeline
-    import graft.operators.Dedup
-    // a crash between compactStore's two renames leaves no seed and a
-    // complete .seed_next: the batch must finish the swap, then dedup
-    // against it (doc 1 is a whitespace variant of the band seed's doc)
-    val storeDir = Files.createTempDirectory("graft-heal-st").toString
-    Seq("unrelated seed digest").toDF("text").select(sha2($"text", 256).as("h"))
-      .write.parquet(s"$storeDir/seed")
-    val bandDir = Files.createTempDirectory("graft-heal-bs").toString
-    Dedup.bandKeys(Seq((100L, "quick brown fox jumps high")).toDF("doc_id", "text"))
-      .select(col("band"), col("bh")).write.parquet(s"$bandDir/.seed_next")
-    val batch = Seq((1L, "en", "quick  brown fox   jumps high"),
-      (2L, "en", "totally novel words appear here")).toDF("doc_id", "lang", "text")
-    val rates = Seq(("en", 2L, 1000L)).toDF("lang", "n_l", "keep_permille")
-    val out = Files.createTempDirectory("graft-heal-o").toString
-    IngestPipeline.ingestBatch(batch, 0L, storeDir, rates, out,
-      targetRowsPerFile = 100L, chunkSize = 64, bandStoreDir = Some(bandDir))
-    assert(new java.io.File(s"$bandDir/seed").isDirectory)
-    assert(!new java.io.File(s"$bandDir/.seed_next").exists())
-    assert(spark.read.parquet(out).select(col("doc_id")).distinct()
-      .collect().map(_.getLong(0)).toSet === Set(2L))
   }
 
   test("streaming ANN ingest: grown index == batch append, replay idempotent, OOD batch flags rebuild") {
@@ -740,8 +719,157 @@ class StreamingSpec extends AnyFunSuite {
     val ood = batch.select((col("vec_id") + 500000L).as("vec_id"),
       transform(col("embedding"), x => (x + lit(3.0f)).cast("float")).as("embedding"))
     graft.streaming.VectorIngest.annIngestBatch(ood, 99L, dir)
-    val d99 = spark.read.parquet(s"$dir/drift/b99")
+    val d99 = graft.streaming.VectorIngest.grown(dir).all(spark, "drift")
+      .where(col("batch_id") === 99L)
     assert(d99.where(col("rebuild")).count() > 0, "OOD drop did not flag a rebuild")
+  }
+
+  /** A source dir of one flat parquet file per part, modification times
+    * in part order, so a file stream drains it one part per batch. */
+  private def dropDir(parts: org.apache.spark.sql.DataFrame*): String = {
+    val src = Files.createTempDirectory("graft-drops").toString
+    parts.zipWithIndex.foreach { case (part, i) =>
+      part.coalesce(1).write.parquet(s"$src/.stage$i")
+      val file = new java.io.File(s"$src/.stage$i").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dest = new java.io.File(s"$src/d$i.parquet")
+      assert(file.renameTo(dest))
+      dest.setLastModified((i + 1) * 1000000L)
+    }
+    src
+  }
+
+  test("a drain into a used landing answers for its own batches; a used store fails") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    import graft.streaming.{BatchStore, IngestPipeline}
+    // docs 21..30 are long, so their frontier outranks every other doc
+    val docs = (1L to 50L).map(i =>
+        (i, "en", s"doc $i " + "w" * (if (i > 20 && i <= 30) 500 else 1 + (i % 11).toInt)))
+      .toDF("doc_id", "lang", "text")
+    def part(lo: Long, hi: Long) = docs.where(col("doc_id").between(lo, hi))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id").collect().toSeq
+    val out = Files.createTempDirectory("graft-stale-land").toString
+    IngestPipeline.runPrioritySampleIngest(spark,
+      docStream(dropDir(part(1, 10), part(11, 20), part(21, 30))), out, k = 3).collect()
+    // the second drain lands batches 0 and 1 only: the first drain's
+    // batch 2 must not join its finish
+    val got = IngestPipeline.runPrioritySampleIngest(spark,
+      docStream(dropDir(part(31, 40), part(41, 50))), out, k = 3)
+    assert(rows(got) === rows(graft.operators.Corpus.prioritySample(part(31, 50), k = 3)))
+    // a store with history is never cleared: a second drain into it fails
+    // and names it, instead of renumbering over the first drain's batches
+    val storeDir = Files.createTempDirectory("graft-stale-store").toString
+    BatchStore(storeDir).seed(Seq("seeded").toDF("text").select(sha2(col("text"), 256).as("h")))
+    val rates = Seq(("en", 50L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    def ingest() = IngestPipeline.runIngestStream(spark, docStream(dropDir(part(1, 5))),
+      storeDir, rates, Files.createTempDirectory("graft-stale-out").toString,
+      targetRowsPerFile = 100L)
+    assert(ingest().count() > 0L)
+    val e = intercept[IllegalArgumentException](ingest())
+    assert(e.getMessage.contains(storeDir), e.getMessage)
+  }
+
+  test("BatchStore: every store kind survives a cut batch, a replay and a cut compaction") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.operators.{Dedup, Similarity}
+    import graft.streaming.{BatchStore, IngestPipeline, VectorIngest}
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    def emptyOf(ddl: String) = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val docs = Seq(
+      (1L, "en", "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "en", "iota kappa lambda mu nu xi omicron pi rho"),
+      (3L, "en", "alpha beta gamma delta epsilon zeta eta theta"),
+      (4L, "fr", "sigma tau upsilon phi chi psi omega alpha")).toDF("doc_id", "lang", "text")
+    val batches = Seq(docs.where($"doc_id" <= 2L), docs.where($"doc_id" > 2L))
+    // every kind is grown by its own batch function over batches 0 and 1
+    val (digestDir, bandDir, chunkDir) = (tmp("cut-digest"), tmp("cut-band"), tmp("cut-chunks"))
+    BatchStore(digestDir).seed(Seq("seeded").toDF("text").select(sha2($"text", 256).as("h")))
+    BatchStore(bandDir).seed(Dedup.bandKeys(Seq((100L, "a seeded band document")).toDF("doc_id", "text"))
+      .select($"band", $"bh"))
+    val rates = Seq(("en", 3L, 1000L), ("fr", 1L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    def ingest(id: Int): Unit = IngestPipeline.ingestBatch(batches(id), id.toLong, digestDir, rates,
+      chunkDir, targetRowsPerFile = 100L, chunkSize = 8, bandStoreDir = Some(bandDir))
+    val (paraDir, paraOut) = (tmp("cut-para"), tmp("cut-paraout"))
+    BatchStore(paraDir).seed(spark.range(0).select($"id".as("ph")))
+    def para(id: Int): Unit = IngestPipeline.paraIngestBatch(batches(id)
+      .select($"doc_id", posexplode(split($"text", " ", 3)).as(Seq("pos", "para"))),
+      id.toLong, paraDir, paraOut)
+    val (fpDir, fpOut) = (tmp("cut-fp"), tmp("cut-fpout"))
+    BatchStore(fpDir).seed(emptyOf("doc_id BIGINT, fp BIGINT"))
+    def winnow(id: Int): Unit =
+      IngestPipeline.winnowBatch(batches(id), id.toLong, fpDir, fpOut, minShared = 1)
+    val (cubeDir, cardDir) = (tmp("cut-cube"), tmp("cut-card"))
+    BatchStore(cardDir).seed(emptyOf("h STRING"))
+    def card(id: Int): Unit = IngestPipeline.cardBatch(
+      batches(id).withColumn("source", lit("web")), id.toLong, cubeDir, cardDir)
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val annDir = tmp("cut-ann")
+    val idx = Similarity.ivfPqBuild(emb.where(col("vec_id") % 7 =!= 3), step = 10)
+    Similarity.ivfPqWrite(idx, annDir)
+    Similarity.cellResidualEnergy(idx, emb.where(col("vec_id") % 7 =!= 3))
+      .write.parquet(s"$annDir/baseline")
+    def ann(id: Int): Unit = VectorIngest.annIngestBatch(
+      emb.where(col("vec_id") % 7 === 3 && col("vec_id") % 2 === id), id.toLong, annDir)
+    Seq[Int => Unit](ingest, para, winnow, card, ann).foreach(f => { f(0); f(1) })
+
+    final case class Kind(name: String, store: BatchStore, relations: Seq[String],
+                          replay: () => Unit)
+    val kinds = Seq(
+      Kind("digest", BatchStore(digestDir), Seq(""), () => ingest(1)),
+      Kind("band", BatchStore(bandDir), Seq(""), () => ingest(1)),
+      Kind("landing", BatchStore(chunkDir), Seq(""), () => ingest(1)),
+      Kind("paragraph", BatchStore(paraDir), Seq(""), () => para(1)),
+      Kind("fingerprint", BatchStore(fpDir), Seq(""), () => winnow(1)),
+      Kind("cube", BatchStore(cubeDir), Seq(""), () => card(1)),
+      Kind("vector index", VectorIngest.grown(annDir), Seq("cells", "codes", "drift"), () => ann(0)))
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    def path(stage: String, relation: String) = if (relation.isEmpty) stage else s"$stage/$relation"
+    // every relation whole, and a single-relation store AS OF batch 1
+    def snapshot(k: Kind) = k.relations.map(r => rows(k.store.all(spark, r))) ++
+      (if (k.relations == Seq("")) Seq(rows(k.store.asOf(spark, 1L))) else Nil)
+    kinds.foreach { k =>
+      val before = snapshot(k)
+      assert(before.forall(_.nonEmpty), s"${k.name}: no rows to guard")
+      // a batch cut partway: its first relation is written whole, then
+      // the next one (a vector batch's codes) throws through raise_error
+      val cut = intercept[Exception](k.store.write(2L) { stage =>
+        val first = k.relations.head
+        val last = k.relations.drop(1).headOption.getOrElse(first)
+        k.store.all(spark, first).write.parquet(path(stage, first))
+        val rel = k.store.all(spark, last)
+        val c = rel.columns.head
+        rel.withColumn(c, when(lit(true), raise_error(lit("cut batch"))).otherwise(col(c)))
+          .write.mode("append").parquet(path(stage, last))
+      })
+      assert(Iterator.iterate[Throwable](cut)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("cut batch")), cut.toString)
+      assert(snapshot(k) === before, s"${k.name}: a cut batch changed the store")
+      k.replay()
+      assert(snapshot(k) === before, s"${k.name}: a replay changed the store")
+    }
+    // a compaction cut between its two renames: `.seed_next` holds the
+    // merged store, the old seed is set aside, and no seed dir exists.
+    // The first read completes the swap (compaction merges with
+    // distinct, and the merged batches are retired only after the
+    // swap, so the store keeps its distinct rows)
+    kinds.foreach { k =>
+      val dir = k.store.dir
+      val before = k.relations.map(r => rows(k.store.all(spark, r)).distinct)
+      k.relations.foreach(r =>
+        k.store.all(spark, r).distinct().write.parquet(path(s"$dir/.seed_next", r)))
+      val seed = new java.io.File(s"$dir/seed")
+      if (seed.exists()) assert(seed.renameTo(new java.io.File(s"$dir/.seed_old")))
+      assert(k.relations.map(r => rows(k.store.all(spark, r)).distinct) === before,
+        s"${k.name}: the healed store lost rows")
+      assert(seed.isDirectory && !new java.io.File(s"$dir/.seed_next").exists() &&
+        !new java.io.File(s"$dir/.seed_old").exists(), s"${k.name}: not healed")
+    }
+    // the grown index reads its healed batches too
+    assert(Similarity.ivfPqReadGrown(spark, annDir).cells.distinct().count() ===
+      emb.count())
   }
 
   test("mapGroupsWithState running totals match a direct fold") {

@@ -49,7 +49,14 @@ cross-checks
      only `.writeStream`s, both through `drain`'s
      `Trigger.AvailableNow`). `processAllAvailable(` is flagged
      everywhere: a `processAllAvailable()` + `stop()` pair logs two
-     "Failed to cancel job group" warnings per query.
+     "Failed to cancel job group" warnings per query,
+ 10. one batch store seam: under src/main and outside
+     streaming/BatchStore.scala, no string literal in code spells a
+     batch-keyed dir (`/b$…`, `batch_id=`), a store seed (`/seed`,
+     `.seed_next`) or a `recursiveFileLookup` read (sources/TextCorpus.scala
+     reads its corpus recursively and is exempt). A hand copy of the
+     layout skips what the seam does on every read and write: the heal,
+     the AS-OF filter and the one-rename publish.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -275,6 +282,29 @@ def main() -> int:
                 if not any(sp and sp[0] <= m.start() < sp[1] for sp in spans):
                     problems.append(f"{path}:{line(m.start())}: {m.group(0)} outside the "
                                     f"drain seam, use {use}")
+
+    # 10. batch-keyed dirs are spelt in one place: the shapes a hand
+    # copy of the layout leaves in a string literal of code.
+    store_seam = pathlib.Path("src/main/scala/graft/streaming/BatchStore.scala")
+    corpus = pathlib.Path("src/main/scala/graft/sources/TextCorpus.scala")
+    store_shapes = [  # (pattern, what, the one other file it may appear in)
+        (r"/b\$", "a /b$… batch dir", None),
+        (r"batch_id=", "a batch_id= dir", None),
+        (r"/seed\b|\.seed_next", "a store seed dir", None),
+        (r"recursiveFileLookup", "a recursiveFileLookup read", corpus)]
+    literal = re.compile(r'"(?:[^"\\\n]|\\.)*"')
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        if path == store_seam:
+            continue
+        for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1):
+            code = line.split("//")[0]
+            if code.lstrip().startswith(("*", "/*")):
+                continue
+            for lit in literal.findall(code):
+                for pattern, what, exempt in store_shapes:
+                    if path != exempt and re.search(pattern, lit):
+                        problems.append(f"{path}:{n}: {what} outside the batch store seam, "
+                                        "use graft.streaming.BatchStore")
 
     if problems:
         for p in problems:
