@@ -804,8 +804,10 @@ class StreamingSpec extends AnyFunSuite {
     BatchStore(cardDir).seed(emptyOf("h STRING"))
     def card(id: Int): Unit = IngestPipeline.cardBatch(
       batches(id).withColumn("source", lit("web")), id.toLong, cubeDir, cardDir)
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
+    // 500 deterministic 64-dim vectors
+    val emb = spark.range(500).select(col("id").as("vec_id"), expr(
+      "transform(sequence(1, 64), j -> CAST(sin(id * 0.37 + j * 1.3) + cos(id * j * 0.011) AS FLOAT))")
+      .as("embedding"))
     val annDir = tmp("cut-ann")
     val idx = Similarity.ivfPqBuild(emb.where(col("vec_id") % 7 =!= 3), step = 10)
     Similarity.ivfPqWrite(idx, annDir)
