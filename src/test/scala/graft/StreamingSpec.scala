@@ -681,6 +681,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(replayed === Set(2L, 6L))
   }
 
+  test("streaming ingest heals a band store left between its compaction renames") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    import graft.streaming.IngestPipeline
+    import graft.operators.Dedup
+    // a crash between BatchStore.compact's two renames leaves no seed and a
+    // complete .seed_next: the batch must finish the swap, then dedup
+    // against it (doc 1 is a whitespace variant of the band seed's doc)
+    val storeDir = Files.createTempDirectory("graft-heal-st").toString
+    Seq("unrelated seed digest").toDF("text").select(sha2($"text", 256).as("h"))
+      .write.parquet(s"$storeDir/seed")
+    val bandDir = Files.createTempDirectory("graft-heal-bs").toString
+    Dedup.bandKeys(Seq((100L, "quick brown fox jumps high")).toDF("doc_id", "text"))
+      .select(col("band"), col("bh")).write.parquet(s"$bandDir/.seed_next")
+    val batch = Seq((1L, "en", "quick  brown fox   jumps high"),
+      (2L, "en", "totally novel words appear here")).toDF("doc_id", "lang", "text")
+    val rates = Seq(("en", 2L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    val out = Files.createTempDirectory("graft-heal-o").toString
+    IngestPipeline.ingestBatch(batch, 0L, storeDir, rates, out,
+      targetRowsPerFile = 100L, chunkSize = 64, bandStoreDir = Some(bandDir))
+    assert(new java.io.File(s"$bandDir/seed").isDirectory)
+    assert(!new java.io.File(s"$bandDir/.seed_next").exists())
+    assert(spark.read.parquet(out).select(col("doc_id")).distinct()
+      .collect().map(_.getLong(0)).toSet === Set(2L))
+  }
+
   test("streaming ANN ingest: grown index == batch append, replay idempotent, OOD batch flags rebuild") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
