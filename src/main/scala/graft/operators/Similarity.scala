@@ -948,8 +948,9 @@ object Similarity {
     }
   }
 
-  /** Persist the index as four parquet relations under `dir`. */
+  /** Persist the index as four parquet relations under `dir`, dropping its grown batches. */
   def ivfPqWrite(index: IvfPqIndex, dir: String): Unit = {
+    graft.sources.FsUtil.deleteRecursively(new java.io.File(graft.streaming.VectorIngest.grown(dir).dir))
     index.cells.write.mode("overwrite").parquet(s"$dir/cells")
     index.codes.write.mode("overwrite").parquet(s"$dir/codes")
     index.coarseCents.write.mode("overwrite").parquet(s"$dir/coarse_cents")

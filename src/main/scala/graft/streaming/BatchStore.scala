@@ -13,11 +13,10 @@ import graft.sources.FsUtil.deleteRecursively
   * leaves the store as it was and a replay replaces its earlier copy.
   * A batch reads the store [[asOf]] its own id, so a replay sees the
   * store its original run saw. A landing (no seed) is also a plain
-  * partitioned table for `spark.read.parquet(dir)`.
-  *
-  * Drains run without a checkpoint, so each numbers its batches from 0:
-  * a drain opens its landings with [[BatchStore.landing]] and its stores
-  * with history with [[BatchStore.seeded]]. */
+  * partitioned table for `spark.read.parquet(dir)`. Drains run without a
+  * checkpoint (each numbers its batches from 0), so a drain opens its
+  * landings with [[BatchStore.landing]], its stores with history with
+  * [[BatchStore.seeded]]. */
 final case class BatchStore(dir: String) {
 
   private def batchPath(batchId: Long): String = s"$dir/batch_id=$batchId"
@@ -26,8 +25,7 @@ final case class BatchStore(dir: String) {
   private def batchIds: Seq[Long] = Option(new File(dir).listFiles()).toSeq.flatten
     .flatMap(f => BatchStore.Published.unapplySeq(f.getName).map(_.head.toLong)).sorted
 
-  /** Finish a [[compact]] cut between its two renames: the complete
-    * `.seed_next` is the seed. Run before every read. */
+  /** Finish a [[compact]] cut between its two renames; run before every read. */
   private def heal(): Unit = {
     val (seed, next) = (new File(seedPath), new File(s"$dir/.seed_next"))
     if (!seed.exists() && next.exists()) require(next.renameTo(seed), s"store heal failed in $dir")
@@ -44,9 +42,8 @@ final case class BatchStore(dir: String) {
 
   def seed(df: DataFrame): Unit = df.write.mode("overwrite").parquet(seedPath)
 
-  /** Commit batch `batchId`: `land` writes its relation(s) under the
-    * staging dir it is given (one subdir each when there are several),
-    * then one rename publishes them. */
+  /** Commit batch `batchId`: `land` writes under the staging dir it is
+    * given (one subdir per relation if several); one rename publishes it. */
   def write(batchId: Long)(land: String => Unit): Unit = {
     val (staging, dest) = (new File(s"$dir/.batch_id=$batchId"), new File(batchPath(batchId)))
     deleteRecursively(staging)
@@ -104,13 +101,14 @@ object BatchStore {
     BatchStore(dir)
   }
 
-  /** Open a store whose seed is history: batch dirs an earlier drain left
-    * would be read, or overwritten, by this drain's batches of the same
-    * ids, so they fail the open instead of being dropped. */
+  /** Open a store whose seed is history: an earlier drain's batch dirs
+    * fail the open. A fresh store (a copy of the seed) is the remedy;
+    * [[compact]]ing them only fits a drain whose input follows theirs,
+    * never a retry of the same input (it would dedup against itself). */
   def seeded(dir: String): BatchStore = {
     val stale = BatchStore(dir).batchIds
     require(stale.isEmpty, s"$dir holds batch dirs of an earlier drain " +
-      s"(batch_id=${stale.mkString(", ")}): compact them into its seed or use a fresh store")
+      s"(batch_id=${stale.mkString(", ")}): use a fresh store (a copy of its seed)")
     BatchStore(dir)
   }
 }

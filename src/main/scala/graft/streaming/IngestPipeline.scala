@@ -149,8 +149,7 @@ object IngestPipeline {
       .partitionBy(col("ph")).orderBy(col("doc_id"), col("pos"))
     val flagged = hashed.withColumn("rn", row_number().over(w))
       .join(store.asOf(paras.sparkSession, batchId).select(col("ph")).distinct()
-        .withColumn("seen", lit(true)),
-        Seq("ph"), "left")
+        .withColumn("seen", lit(true)), Seq("ph"), "left")
       .withColumn("keep", col("rn") === 1 && col("seen").isNull)
       .truncateLineage // consumed twice: landing + store commit
     val docsOut = flagged.groupBy(col("doc_id"))
@@ -330,7 +329,7 @@ object IngestPipeline {
   def runCardIngest(spark: SparkSession, docStream: DataFrame,
                     cubeDir: String, digestDir: String): DataFrame = {
     val cubes = BatchStore.landing(cubeDir)
-    val digests = BatchStore.seeded(digestDir)
+    val digests = BatchStore.landing(digestDir)
     digests.seed(spark.range(0).select(lit("").as("h")))
     drainEach(docStream)(cardBatch(_, _, cubeDir, digestDir))
     val cube = cubes.all(spark)
@@ -386,7 +385,7 @@ object IngestPipeline {
   def runWinnowIngest(spark: SparkSession, docStream: DataFrame,
                       fpStoreDir: String, outDir: String,
                       minShared: Int = 2, maxDf: Int = 50): DataFrame = {
-    BatchStore.seeded(fpStoreDir).seed(spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")))
+    BatchStore.landing(fpStoreDir).seed(spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")))
     val land = BatchStore.landing(outDir)
     drainEach(docStream)(winnowBatch(_, _, fpStoreDir, outDir, minShared, maxDf))
     land.all(spark).select(col("doc_id"))
@@ -478,9 +477,8 @@ object IngestPipeline {
     * (one window + one groupBy on conv_id); the landing carries
     * constant-width audit columns + a 16-byte digest per conversation
     * (transcripts themselves are NOT landed); the finish shuffles
-    * only (conv_id, resp_fp). Replays are idempotent: the landing is
-    * opened with [[BatchStore.landing]] and every batch replaces its
-    * own `batch_id=N` directory (the runCrawlAdmission posture). */
+    * only (conv_id, resp_fp). Replays are idempotent: the landing is a
+    * [[BatchStore.landing]] (the runCrawlAdmission posture). */
   def runSftAdmission(spark: SparkSession, docStream: DataFrame,
                       landDir: String): DataFrame = {
     import graft.operators.PostTraining

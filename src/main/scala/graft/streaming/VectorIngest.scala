@@ -34,7 +34,8 @@ object VectorIngest {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** The batches a stream folded into the index under `indexDir`. */
+  /** The batches a stream folded into the index under `indexDir` (its
+    * seed is the flat relations); [[Similarity.ivfPqWrite]] drops them. */
   def grown(indexDir: String): BatchStore = BatchStore(s"$indexDir/grown")
 
   /** One micro-batch: encode under frozen geometry, land batch-keyed,

@@ -620,6 +620,9 @@ class StreamingSpec extends AnyFunSuite {
     val retired = store.compact(spark, through = 1L)
     assert(retired === 2L)
     assert(store.asOf(spark, 0L).collect().toSet === digests)
+    // the retired batch dirs are gone: the whole store is the seed alone
+    assert(store.all(spark).count() === store.asOf(spark, 0L).count())
+    assert(Seq(0, 1).forall(i => !new java.io.File(s"$storeDir/batch_id=$i").exists()))
     val nextBatch = Seq(
       (7L, "en", "alpha beta gamma"),  // dup of compacted doc 1: must still drop
       (8L, "en", "brand new text")
@@ -747,6 +750,12 @@ class StreamingSpec extends AnyFunSuite {
     val d99 = graft.streaming.VectorIngest.grown(dir).all(spark, "drift")
       .where(col("batch_id") === 99L)
     assert(d99.where(col("rebuild")).count() > 0, "OOD drop did not flag a rebuild")
+    // rewriting the index drops the batches the stream grew it by, so a
+    // new drain into the same dir opens instead of failing
+    Similarity.ivfPqWrite(idx, dir)
+    assert(Similarity.ivfPqReadGrown(spark, dir).cells.count() ===
+      spark.read.parquet(s"$dir/cells").count())
+    assert(graft.streaming.VectorIngest.runAnnIngest(spark, s"$src/{p0}", dir).count() > 0)
   }
 
   /** A source dir of one flat parquet file per part, modification times
