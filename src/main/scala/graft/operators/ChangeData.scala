@@ -62,6 +62,18 @@ object ChangeData {
         coalesce(col(s"__c_$p"), col(s"__b_$p")).as(p)): _*)
   }
 
+  /** The LATEST IMAGE of each key: its row with the greatest
+    * `orderedPayload` tuple (compared in that column order), output as
+    * the key plus those columns — last-writer-wins as an argmax via
+    * max(struct(...)), NOT a blind overwrite, so an older image
+    * arriving later loses to a newer one, and a redelivered duplicate
+    * ties with itself (at-least-once input needs no separate dedup).
+    * One map-side-combined aggregate, shuffled on the key only. */
+  def latestImage(df: DataFrame, keyCol: String, orderedPayload: Seq[String]): DataFrame =
+    df.groupBy(col(keyCol))
+      .agg(max(struct(orderedPayload.map(col): _*)).as("__m"))
+      .select(col(keyCol) +: orderedPayload.map(c => col(s"__m.$c").as(c)): _*)
+
   /** Incremental materialized-view maintenance for additive aggregates
     * (count + sum): the view is refreshed by aggregating ONLY the
     * change batch and merging it into the stored aggregate — the fact

@@ -16,8 +16,8 @@ import graft.plans.Lineage.TruncateOps
   *
   * {{{
   * tableDir/
-  *   files/c0/part-*.parquet   immutable data files born in commit 0
-  *   files/c1/part-*.parquet   files REWRITTEN by commit 1
+  *   files/c0a…/part-*.parquet immutable data files born in commit 0
+  *   files/c1a…/part-*.parquet files REWRITTEN by commit 1
   *   v000000000/_manifest/     snapshot 0: its file list + stats
   *   v000000001/_manifest/     snapshot 1: carried + rewritten files
   * }}}
@@ -62,10 +62,11 @@ object LakeTable {
       m.collect().map(_.getString(0)).toIndexedSeq
   }
 
-  private def vDir(tableDir: String, v: Long) = f"$tableDir/v$v%09d"
+  /** The dir of version `v`: the zero-padded `v%09d` name [[versions]]
+    * parses (lexicographic = numeric). */
+  private[graft] def vDir(tableDir: String, v: Long) = f"$tableDir/v$v%09d"
   private def manifestDir(tableDir: String, v: Long) = s"${vDir(tableDir, v)}/_manifest"
   private def deletesDir(tableDir: String, v: Long) = s"${vDir(tableDir, v)}/_deletes"
-  private def commitDir(tableDir: String, v: Long) = s"$tableDir/files/c$v"
 
   /** The snapshot's delete vector, if any: a one-column relation of
     * keys logically deleted from rows still PHYSICALLY present in the
@@ -78,14 +79,14 @@ object LakeTable {
 
   /** Subtract a delete vector from visible rows — THE merge-on-read
     * read-time idiom, shared by every read surface (readVersion,
-    * scanPrunedVersion, lookupVersion, changesBetween) so vector
-    * semantics can only change in one place. Broadcast anti join: the
-    * vector is delta-sized by construction. */
+    * scanPrunedVersion, lookupVersion, changesBetween) and by the
+    * commits' reconciliation ([[pruneTouched]]), so vector semantics
+    * can only change in one place. Broadcast anti join: the vector is
+    * delta-sized by construction. */
   private def minusVector(df: DataFrame, vec: Option[DataFrame]): DataFrame =
     vec.fold(df)(d => df.join(broadcast(d), d.columns.toSeq, "left_anti"))
 
-  /** Snapshot versions present, ascending (zero-padded dir names make
-    * lexicographic = numeric, same device as the CDC latest-image). */
+  /** Snapshot versions present, ascending. */
   def versions(tableDir: String): Seq[Long] =
     Option(new java.io.File(tableDir).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("v"))
@@ -102,13 +103,8 @@ object LakeTable {
   def init(df: DataFrame, tableDir: String, keyCol: String, nFiles: Int,
            statsCols: Seq[String] = Nil, clusterExpr: Option[Column] = None): Commit = {
     require(versions(tableDir).isEmpty, s"LakeTable.init needs a fresh tableDir: $tableDir")
-    val spark = df.sparkSession
-    val cluster = clusterExpr.getOrElse(col(keyCol))
-    df.repartitionByRange(nFiles, cluster).sortWithinPartitions(cluster)
-      .write.mode("overwrite").parquet(commitDir(tableDir, 0L))
-    val files = FsUtil.parquetFiles(commitDir(tableDir, 0L))
-    StatsManifest.statsOf(spark, files, keyCol +: statsCols.filterNot(_ == keyCol))
-      .coalesce(1).write.mode("overwrite").parquet(manifestDir(tableDir, 0L))
+    val files = landCommit(tableDir, 0L, df, keyCol, keyCol +: statsCols.filterNot(_ == keyCol),
+      maxRowsPerFile = 0L, nFiles = Some(nFiles), cluster = clusterExpr)
     Commit(0L, files.size.toLong, 0L)
   }
 
@@ -139,34 +135,33 @@ object LakeTable {
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
     readVersion(spark, tableDir, versions(tableDir).last)
 
-  /** Apply a CDC batch (key, op ∈ upsert|delete, payload — the
-    * ChangeData.mergeApply contract, NULL payload keeps the base
-    * value) as one transactional commit:
-    *
-    *  1. prune: a data file is TOUCHED iff its [min_key, max_key]
-    *     interval contains some change key — an interval join of the
-    *     batch's distinct keys against the file-count-sized manifest;
-    *     untouched files provably hold no change key, so skipping them
-    *     is exact, not heuristic;
-    *  2. merge: full-outer coalesce of the touched files' rows with the
-    *     batch (inserts materialize change-side-only; deletes drop);
-    *  3. compact: survivors + inserts land re-clustered on the key in
-    *     ⌈rows/targetRowsPerFile⌉ files with a maxRecordsPerFile
-    *     ceiling — the writeCompacted small-file governance;
-    *  4. re-stat: ONLY the files written in step 3;
-    *  5. snapshot: carried manifest rows (verbatim) ∪ new stats rows →
-    *     v+1. Readers of v keep an immutable view throughout.
-    */
-  /** The pruning core every commit shares: which of the snapshot's
-    * files a batch's keys touch (interval join BROADCASTING the
-    * file-count-sized manifest and streaming the keys — at 100 TB the
-    * batch can be millions of keys while the manifest is tens of
-    * thousands of rows), the touched rows as a DataFrame (schema-only
-    * when nothing matches), and the carried manifest remainder. */
-  private final case class Pruned(touched: Set[String], nBaseFiles: Long,
-                                  base: DataFrame, carried: DataFrame)
-  private def pruneTouched(spark: SparkSession, m: DataFrame, batch: DataFrame,
+  /** The pruning and reconciliation core every merging commit shares
+    * (a keyed batch rewriting the files its keys touch, against
+    * snapshot `v`):
+    *  - touched: a data file is TOUCHED iff its [min_key, max_key]
+    *    interval contains some batch key — an interval join BROADCASTING
+    *    the file-count-sized manifest and streaming the keys (at 100 TB
+    *    the batch can be millions of keys while the manifest is tens of
+    *    thousands of rows); untouched files provably hold no batch key,
+    *    so skipping them is exact, not heuristic;
+    *  - base: the touched files' rows read THROUGH the snapshot's
+    *    delete vector (a vector-deleted row must not resurrect through
+    *    the merge); schema-only when nothing matches;
+    *  - carried: the manifest rows of the untouched files;
+    *  - deletes: the vector the new snapshot carries. A vector key
+    *    leaves it for EITHER exit: it is a batch key (the rewrite lands
+    *    a fresh row that must not stay masked), or its row sat in a
+    *    touched file (the rewrite reads it through the vector, so the
+    *    row is physically gone — keeping the entry would make history()
+    *    double-count it and tax every later read for nothing). NO
+    *    broadcast hint on the batch-keys side: the batch can be millions
+    *    of keys while the vector is delta-sized. */
+  private final case class Pruned(touched: Set[String], nBaseFiles: Long, base: DataFrame,
+                                  carried: DataFrame, deletes: Option[DataFrame],
+                                  statsCols: Seq[String])
+  private def pruneTouched(spark: SparkSession, tableDir: String, v: Long, batch: DataFrame,
                            keyCol: String): Pruned = {
+    val m = manifest(spark, tableDir, v)
     val keys = batch.select(col(keyCol).as("__k")).distinct()
     val touched = keys.join(broadcast(m.select(col("file"),
           col(s"min_$keyCol"), col(s"max_$keyCol"))),
@@ -177,32 +172,37 @@ object LakeTable {
       if (touched.nonEmpty) spark.read.option("mergeSchema", "true").parquet(touched.toIndexedSeq: _*)
       else spark.read.parquet(allFiles.head).where(lit(false)) // schema-only
     val carried = if (touched.isEmpty) m else m.where(!col("file").isin(touched.toSeq: _*))
-    Pruned(touched, allFiles.length.toLong, base, carried)
+    val del = deleteSet(spark, tableDir, v)
+    val nextDel = del
+      .map(_.join(batch.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+        .join(base.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+        .truncateLineage)
+      .filter(_.count() > 0L)
+    Pruned(touched, allFiles.length.toLong, minusVector(base, del), carried, nextDel,
+      statsColsOf(m))
   }
 
-  /** Atomic snapshot publication — the OPTIMISTIC CONCURRENCY CONTROL
-    * seam: the manifest is written to a hidden staging root, then a
-    * single directory RENAME makes it version `next`. POSIX rename
-    * fails if the target exists, so when two writers race to the same
-    * version exactly one wins; the loser's staging is removed and it
-    * gets [[java.util.ConcurrentModificationException]] — re-read the
-    * table, re-merge, retry ([[commitMergeRetrying]]). Readers never
-    * see a partial snapshot: a version dir either does not exist or
-    * holds its complete manifest, and the loser's attempt-scoped data
-    * files are unreferenced orphans until [[vacuum]] sweeps them. */
-  private def publishAtomic(manifest0: DataFrame, tableDir: String, next: Long,
-                            deletes: Option[DataFrame] = None): Unit = {
-    val staging = new java.io.File(s"$tableDir/.inflight_v${next}_${System.nanoTime()}")
-    manifest0.coalesce(1).write.mode("overwrite").parquet(s"${staging.getPath}/_manifest")
-    deletes.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"${staging.getPath}/_deletes"))
-    val dest = new java.io.File(vDir(tableDir, next))
-    if (!staging.renameTo(dest)) {
-      FsUtil.deleteRecursively(staging)
+  /** THE publication of a version — the OPTIMISTIC CONCURRENCY
+    * CONTROL seam: the manifest (and delete vector) is staged under a
+    * hidden name, then a single directory RENAME makes it version `v`
+    * ([[StatsManifest.publish]]). POSIX rename fails if the target
+    * exists, so when two writers race to the same version exactly one
+    * wins; the loser's staging is removed and it gets
+    * [[java.util.ConcurrentModificationException]] — re-read the table,
+    * re-merge, retry ([[retrying]]). Readers never see a partial
+    * snapshot: a version dir either does not exist or holds its
+    * complete manifest, and the loser's attempt-scoped data files are
+    * unreferenced orphans until [[vacuum]] sweeps them. A
+    * version-PINNED commit passes `replace`: its replay swaps its own
+    * earlier copy of `v` for the new one by the same rename. */
+  private def publish(tableDir: String, v: Long, manifest0: DataFrame,
+                      deletes: Option[DataFrame], replace: Boolean = false): Unit = {
+    val dest = new java.io.File(vDir(tableDir, v))
+    if (!StatsManifest.publish(dest.getPath,
+        ("_manifest" -> manifest0) +: deletes.map("_deletes" -> _).toSeq, replace))
       throw new java.util.ConcurrentModificationException(
-        s"LakeTable commit conflict: version $next already published in $tableDir — " +
+        s"LakeTable commit conflict: version $v already published in $tableDir — " +
           "re-read the latest snapshot and retry the commit")
-    }
     // stamp PUBLICATION time (not staging-write time) for versionAsOf.
     // The stamp lands just AFTER the rename, so there is a brief
     // rename-to-stamp window in which the dir still carries its
@@ -215,60 +215,45 @@ object LakeTable {
         "versionAsOf will use its staging-write time")
   }
 
-  /** Write a commit's merged rows (already materialized; `rows` is its
-    * count) key-clustered into `dataDir` and return the manifest
-    * for the new snapshot. The no-surviving-rows edge is handled
-    * explicitly: if nothing carries either, ONE empty schema-bearing
-    * file + a null-stats manifest row keep the emptied table readable
-    * and writable (statsOf emits no row for a 0-row file, and an empty
-    * manifest would strand readVersion and the next commit). */
-  private def landCommit(spark: SparkSession, merged: DataFrame, rows: Long,
-                         tableDir: String, next: Long, keyCol: String,
-                         targetRowsPerFile: Long, carried: Option[DataFrame],
-                         statsCols: Seq[String], dataDir: String,
-                         atomic: Boolean,
-                         deletes: Option[DataFrame] = None,
-                         cluster: Option[Column] = None): Seq[String] = {
-    val carriedCount = carried.map(_.count()).getOrElse(0L)
-    val clusterCol = cluster.getOrElse(col(keyCol))
+  /** THE commit path every version with new data takes: land `rows`
+    * clustered on the key (or `cluster`) through
+    * [[StatsManifest.writeFiles]] — `nFiles` files, or
+    * ⌈rows/maxRowsPerFile⌉ files of at most `maxRowsPerFile` rows (the
+    * Sinks.writeCompacted small-file governance) — re-stat ONLY those
+    * files, and [[publish]] the carried manifest rows (verbatim) plus
+    * their stats as version `next`. Returns the new files.
+    *
+    * The data dir is attempt-scoped (`files/c<next>a<nanos>`): two
+    * racing writers never share one (the loser's overwrite would
+    * clobber the winner's data files), and a replayed version never
+    * overwrites files a later version carries; the manifest records
+    * absolute paths, so the dir name is free. The no-surviving-rows
+    * edge: with files carried, nothing is written; with nothing carried
+    * either, ONE empty schema-bearing file and a null-stats manifest
+    * row keep the emptied table readable and writable (statsOf emits no
+    * row for a 0-row file, and an empty manifest would strand
+    * readVersion and the next commit). */
+  private def landCommit(tableDir: String, next: Long, rows: DataFrame, keyCol: String,
+                         statsCols: Seq[String], maxRowsPerFile: Long,
+                         nFiles: Option[Int] = None, carried: Option[DataFrame] = None,
+                         deletes: Option[DataFrame] = None, cluster: Option[Column] = None,
+                         replace: Boolean = false): Seq[String] = {
+    val spark = rows.sparkSession
+    val n = rows.count()
+    val carriedRows = carried.filter(_.count() > 0L)
     val newFiles =
-      if (rows == 0L && carriedCount > 0L) Seq.empty[String]
-      else {
-        val nFiles = math.max(1L, math.ceil(rows.toDouble / targetRowsPerFile).toLong).toInt
-        merged.repartitionByRange(nFiles, clusterCol).sortWithinPartitions(clusterCol)
-          .write.mode("overwrite").option("maxRecordsPerFile", targetRowsPerFile)
-          .parquet(dataDir)
-        FsUtil.parquetFiles(dataDir)
-      }
-    val newStats =
-      if (newFiles.isEmpty) None
-      else if (rows == 0L) {
-        // emptied table: synthesize the (file, nulls…, 0) manifest row
-        // (statsOf emits nothing for a 0-row file; the schema read is
-        // valid here because the empty file was just written)
-        val row = org.apache.spark.sql.Row.fromSeq(
-          newFiles.head +: Seq.fill(statsCols.length * 2)(null) :+ 0L)
-        Some(spark.createDataFrame(java.util.Arrays.asList(row),
-          StatsManifest.statsOf(spark, newFiles, statsCols).schema))
-      } else Some(StatsManifest.statsOf(spark, newFiles, statsCols))
-    val nextManifest = (carried.filter(_ => carriedCount > 0L), newStats) match {
-      case (Some(c), Some(s)) => c.unionByName(s)
-      case (Some(c), None) => c
-      case (None, Some(s)) => s
-      case (None, None) => throw new IllegalStateException(
-        s"commit $next would have an empty manifest — landCommit guards should prevent this")
+      if (n == 0L && carriedRows.nonEmpty) Seq.empty[String]
+      else StatsManifest.writeFiles(rows, s"$tableDir/files/c${next}a${System.nanoTime()}",
+        cluster.getOrElse(col(keyCol)),
+        nFiles.getOrElse(math.max(1L, math.ceil(n.toDouble / maxRowsPerFile).toLong).toInt),
+        maxRowsPerFile)
+    val newStats = newFiles.headOption.map { first =>
+      val stats = StatsManifest.statsOf(spark, newFiles, statsCols)
+      if (n > 0L) stats
+      else spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(
+        first +: Seq.fill(statsCols.length * 2)(null) :+ 0L)), stats.schema)
     }
-    if (atomic) publishAtomic(nextManifest, tableDir, next, deletes)
-    else {
-      nextManifest.coalesce(1).write.mode("overwrite").parquet(manifestDir(tableDir, next))
-      // overwrite-path vector publication mirrors the manifest: write
-      // the carried vector, or remove a stale one a replayed version
-      // may have left (the vector can EMPTY between replays)
-      deletes match {
-        case Some(d) => d.coalesce(1).write.mode("overwrite").parquet(deletesDir(tableDir, next))
-        case None => FsUtil.deleteRecursively(new java.io.File(deletesDir(tableDir, next)))
-      }
-    }
+    publish(tableDir, next, (carriedRows ++ newStats).reduce(_ unionByName _), deletes, replace)
     newFiles
   }
 
@@ -281,54 +266,32 @@ object LakeTable {
     * OCC spec uses to reproduce a writer racing on a STALE snapshot
     * (read v, merge against v, publish v+1 after someone else already
     * did). Fails with ConcurrentModificationException at publish time;
-    * nothing the loser wrote is visible to any reader. */
+    * nothing the loser wrote is visible to any reader.
+    *
+    * Apply a CDC batch (key, op ∈ upsert|delete, payload — the
+    * ChangeData.mergeApply contract, NULL payload keeps the base
+    * value) as one transactional commit: prune and reconcile
+    * ([[pruneTouched]]), full-outer coalesce of the touched files' rows
+    * with the batch (inserts materialize change-side-only; deletes
+    * drop), then [[landCommit]]: survivors + inserts re-clustered,
+    * re-stat of the written files only, snapshot v+1. Readers of v keep
+    * an immutable view throughout. */
   private[graft] def commitMergeAt(changes: DataFrame, tableDir: String, keyCol: String,
                                    targetRowsPerFile: Long, baseVersion: Long,
                                    opCol: String = "op",
                                    validate: DataFrame => Unit = _ => ()): Commit = {
-    val spark = changes.sparkSession
-    val m = manifest(spark, tableDir, baseVersion)
-    val p = pruneTouched(spark, m, changes, keyCol)
-    // merge-on-read reconciliation: the touched files are read THROUGH
-    // the snapshot's delete vector (a vector-deleted row must not
-    // resurrect via the coalesce merge), and the batch's keys leave
-    // the carried vector — their physical locations are exactly the
-    // touched files this commit rewrites, so after the rewrite the
-    // vector entry would wrongly mask a fresh upsert
-    val del = deleteSet(spark, tableDir, baseVersion)
-    val baseData = minusVector(p.base, del)
-    // NO broadcast hint on the batch-keys side: a CDC batch can be
-    // millions of keys (the pruneTouched rationale) while the vector is
-    // delta-sized — let the planner pick the build side / AQE decide.
-    // A vector key leaves the carried vector for EITHER exit: it is a
-    // batch key (the rewrite lands a fresh row that must not stay
-    // masked), or its row sat in a touched file (the rewrite read
-    // baseData through the vector, so the row is physically gone —
-    // keeping the entry would make history() double-count it and tax
-    // every later read for nothing)
-    val nextDel = del
-      .map(_.join(changes.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-        .join(p.base.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-        .truncateLineage)
-      .filter(_.count() > 0L)
+    val p = pruneTouched(changes.sparkSession, tableDir, baseVersion, changes, keyCol)
     // the merge is consumed twice (count + clustered write):
     // localCheckpoint materializes the join once (the
     // Dedup.jaccardPairs device) instead of re-reading the touched
     // files and re-joining per action
-    val merged = ChangeData.mergeApply(
-      baseData.drop(opCol), changes, keyCol, opCol).truncateLineage
+    val merged = ChangeData.mergeApply(p.base.drop(opCol), changes, keyCol, opCol).truncateLineage
     // constraint seam: runs BEFORE anything lands — a validation throw
     // aborts with no snapshot published and no data dir referenced
-    // (the unredeemed attempt dir is vacuum's orphan sweep's job)
     validate(merged)
     val next = baseVersion + 1
-    // attempt-scoped data dir: two racing writers must never share one
-    // (the loser's overwrite would clobber the winner's data files);
-    // the manifest records absolute paths, so the dir name is free
-    val dataDir = s"$tableDir/files/c${next}a${System.nanoTime()}"
-    val newFiles = landCommit(spark, merged, merged.count(), tableDir, next,
-      keyCol, targetRowsPerFile, Some(p.carried), statsColsOf(m), dataDir, atomic = true,
-      deletes = nextDel)
+    val newFiles = landCommit(tableDir, next, merged, keyCol, p.statsCols, targetRowsPerFile,
+      carried = Some(p.carried), deletes = p.deletes)
     Commit(next, newFiles.size.toLong, p.nBaseFiles - p.touched.size)
   }
 
@@ -376,124 +339,60 @@ object LakeTable {
     val newDel = keys.select(col(keyCol)).distinct()
     val mergedDel = deleteSet(spark, tableDir, v)
       .fold(newDel)(_.unionByName(newDel).distinct())
-    publishAtomic(m, tableDir, v + 1, Some(mergedDel))
+    publish(tableDir, v + 1, m, Some(mergedDel))
     Commit(v + 1, 0L, m.count())
   }
 
-  /** The OCC retry loop every real lake writer runs: attempt, and on a
-    * conflict re-read the NEW latest snapshot and re-apply — safe for
-    * every commit kind here because each is defined against whatever
-    * base it lands on (MERGE re-merges, DELETE re-unions the vector,
-    * COMPACT re-selects the small files, RECLUSTER re-reads the
-    * snapshot). Bounded attempts; rethrows when contention outlasts
-    * them. */
-  private def retryingCommit(maxAttempts: Int)(attemptOnce: => Commit): Commit = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return attemptOnce
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-      }
+  /** The OCC retry loop every real lake writer runs around any commit
+    * here: attempt, and on a conflict re-read the NEW latest snapshot
+    * and re-apply — safe for every commit kind because each is defined
+    * against whatever base it lands on (MERGE re-merges, DELETE
+    * re-unions the vector — idempotent, the vector is a distinct set —
+    * COMPACT re-selects the small files, so compacting never
+    * resurrects rows a concurrent merge rewrote, RECLUSTER re-reads the
+    * winning snapshot). Bounded attempts; rethrows when contention
+    * outlasts them. Pass the plain (latest-version) commit: an `…At`
+    * commit pinned to a stale version would lose every attempt. */
+  def retrying(attempt: => Commit, maxAttempts: Int = 5): Commit =
+    try attempt
+    catch {
+      case _: java.util.ConcurrentModificationException if maxAttempts > 1 =>
+        retrying(attempt, maxAttempts - 1)
     }
-    sys.error("unreachable")
-  }
-
-  def commitMergeRetrying(changes: DataFrame, tableDir: String, keyCol: String,
-                          targetRowsPerFile: Long, opCol: String = "op",
-                          maxAttempts: Int = 5): Commit =
-    retryingCommit(maxAttempts)(
-      commitMerge(changes, tableDir, keyCol, targetRowsPerFile, opCol))
-
-  /** [[commitDelete]] under the writer retry loop — a delete losing a
-    * race re-reads the new snapshot and re-unions its keys into THAT
-    * snapshot's vector (idempotent: the vector is a distinct set). */
-  def commitDeleteRetrying(keys: DataFrame, tableDir: String, keyCol: String,
-                           maxAttempts: Int = 5): Commit =
-    retryingCommit(maxAttempts)(commitDelete(keys, tableDir, keyCol))
-
-  /** [[commitCompact]] under the writer retry loop — the maintenance
-    * job racing a foreground writer. A lost race re-reads the new
-    * snapshot and re-selects ITS small files, so compacting never
-    * resurrects rows a concurrent merge rewrote: each attempt's inputs
-    * come entirely from the snapshot it publishes against. */
-  def commitCompactRetrying(spark: SparkSession, tableDir: String, keyCol: String,
-                            smallFileRows: Long, targetRowsPerFile: Long,
-                            maxAttempts: Int = 5): Commit =
-    retryingCommit(maxAttempts)(
-      commitCompact(spark, tableDir, keyCol, smallFileRows, targetRowsPerFile))
-
-  /** [[commitRecluster]] under the writer retry loop — layout
-    * evolution racing a foreground writer re-reads and re-clusters the
-    * WINNING snapshot, so no concurrently-merged row is lost to the
-    * rewrite. */
-  def commitReclusterRetrying(spark: SparkSession, tableDir: String, keyCol: String,
-                              clusterExpr: Column, targetRowsPerFile: Long,
-                              maxAttempts: Int = 5): Commit =
-    retryingCommit(maxAttempts)(
-      commitRecluster(spark, tableDir, keyCol, clusterExpr, targetRowsPerFile))
 
   /** Version-PINNED last-writer-wins commit — the LakeTable backend for
     * a streaming CDC materialization (EventStreams.runLatestImageLake):
     * fold a batch of key images into the table, newest row per key
-    * winning by the `orderedPayload` prefix (an argmax via
-    * max(struct(...)), the runLatestImageMerge rule — NOT the
-    * change-wins coalesce of [[commitMerge]], so an out-of-order image
-    * arriving in a later batch loses to a newer base row).
+    * winning by the `orderedPayload` prefix ([[ChangeData.latestImage]],
+    * the runLatestImageMerge rule — NOT the change-wins coalesce of
+    * [[commitMerge]], so an out-of-order image arriving in a later
+    * batch loses to a newer base row). Reconciles the delete vector
+    * exactly like [[commitMerge]] ([[pruneTouched]]): vector-masked
+    * base rows do not compete in the argmax, and an image for a masked
+    * key claims it back from the vector.
     *
     * The version is the CALLER's (a micro-batch id): the commit merges
-    * against the newest version STRICTLY BELOW it and overwrites its
-    * own commit + manifest dirs, so a re-delivered batch reproduces
-    * exactly its original commit instead of stacking a new version —
-    * the replay contract, now with the pruned-rewrite economics:
-    * untouched files carry by reference like every other commit.
-    * A first commit (no earlier version) seeds the table. */
+    * against the newest version STRICTLY BELOW it and REPLACES its own
+    * version ([[publish]] with `replace`: the micro-batch engine is the
+    * single writer here, so the OCC conflict would be wrong for it), so
+    * a re-delivered batch reproduces exactly its original commit
+    * instead of stacking a new version — the replay contract, with the
+    * pruned-rewrite economics: untouched files carry by reference like
+    * every other commit. A first commit (no earlier version) seeds the
+    * table. */
   def commitLatestImageAt(images: DataFrame, tableDir: String, keyCol: String,
                           orderedPayload: Seq[String], targetRowsPerFile: Long,
                           version: Long): Commit = {
-    val spark = images.sparkSession
-    def latestOf(df: DataFrame): DataFrame = df
-      .groupBy(col(keyCol))
-      .agg(max(struct(orderedPayload.map(col): _*)).as("__m"))
-      .select(col(keyCol) +: orderedPayload.map(c => col(s"__m.$c").as(c)): _*)
-    val prior = versions(tableDir).filter(_ < version)
-    val (merged0, touched, carriedM, totalBase, statsCols, nextDel) = prior.lastOption match {
-      case None =>
-        (latestOf(images), Set.empty[String], None, 0L, Seq(keyCol),
-          None: Option[DataFrame])
-      case Some(v) =>
-        val m = manifest(spark, tableDir, v)
-        val p = pruneTouched(spark, m, images, keyCol)
-        // merge-on-read reconciliation, exactly the commitMergeAt rule:
-        // vector-masked base rows must not compete in the LWW argmax,
-        // and an image for a masked key claims it back from the vector
-        val del = deleteSet(spark, tableDir, v)
-        val baseData = del.fold(p.base)(d =>
-          p.base.join(broadcast(d), d.columns.toSeq, "left_anti"))
-        // retire entries whose physical rows this rewrite drops — the
-        // commitMergeAt rule: a vector key inside a touched file is
-        // already absent from baseData (read through the vector), so
-        // keeping its entry would under-count history() and tax every
-        // later read with a dead probe
-        val carriedDel = del
-          .map(_.join(images.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-            .join(p.base.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-            .truncateLineage)
-          .filter(_.count() > 0L)
-        (latestOf(baseData.unionByName(latestOf(images))), p.touched, Some(p.carried),
-          p.nBaseFiles, statsColsOf(m), carriedDel)
-    }
-    // consumed twice (count + clustered write): materialize once.
-    // NOT atomic-published: this commit is version-PINNED and replays
-    // must overwrite their own snapshot (the streaming idempotence
-    // contract) — the micro-batch engine is the single writer here, so
-    // the OCC rename that would reject the overwrite is wrong for it
-    val merged = merged0.truncateLineage
-    val newFiles = landCommit(spark, merged, merged.count(), tableDir, version,
-      keyCol, targetRowsPerFile, carriedM, statsCols,
-      commitDir(tableDir, version), atomic = false, deletes = nextDel)
-    Commit(version, newFiles.size.toLong, totalBase - touched.size)
+    val p = versions(tableDir).filter(_ < version).lastOption
+      .map(pruneTouched(images.sparkSession, tableDir, _, images, keyCol))
+    val latest = ChangeData.latestImage(images, keyCol, orderedPayload)
+    // consumed twice (count + clustered write): materialize once
+    val merged = p.fold(latest)(q =>
+      ChangeData.latestImage(q.base.unionByName(latest), keyCol, orderedPayload)).truncateLineage
+    val newFiles = landCommit(tableDir, version, merged, keyCol,
+      p.fold(Seq(keyCol))(_.statsCols), targetRowsPerFile, carried = p.map(_.carried),
+      deletes = p.flatMap(_.deletes), replace = true)
+    Commit(version, newFiles.size.toLong, p.fold(0L)(q => q.nBaseFiles - q.touched.size))
   }
 
   /** Compaction commit: rewrite the snapshot's SMALL files
@@ -519,7 +418,6 @@ object LakeTable {
     val small = m.where(col("n_rows") < smallFileRows)
       .select(col("file")).collectManifestFiles
     val total = m.count()
-    val next = v + 1
     // a delete vector carries VERBATIM through compaction: rewritten
     // small files are read raw (they may still hold vector-masked
     // rows), so the vector must keep masking them — correctness never
@@ -528,25 +426,16 @@ object LakeTable {
     if (small.isEmpty) {
       // nothing to do — still snapshot (a commit is a commit), all
       // carried; published atomically like any other maintenance commit
-      publishAtomic(m, tableDir, next, carriedDel)
-      return Commit(next, 0L, total)
+      publish(tableDir, v + 1, m, carriedDel)
+      return Commit(v + 1, 0L, total)
     }
     // read the small files once (count + clustered write)
     val smallRows = spark.read.option("mergeSchema", "true")
       .parquet(small.toIndexedSeq: _*).truncateLineage
-    val rows = smallRows.count()
-    val nFiles = math.max(1L, math.ceil(rows.toDouble / targetRowsPerFile).toLong).toInt
-    val dataDir = s"$tableDir/files/c${next}a${System.nanoTime()}"
-    smallRows
-      .repartitionByRange(nFiles, col(keyCol)).sortWithinPartitions(keyCol)
-      .write.mode("overwrite").option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(dataDir)
-    val newFiles = FsUtil.parquetFiles(dataDir)
-    publishAtomic(
-      m.where(!col("file").isin(small.toIndexedSeq: _*))
-        .unionByName(StatsManifest.statsOf(spark, newFiles, statsColsOf(m))),
-      tableDir, next, carriedDel)
-    Commit(next, newFiles.size.toLong, total - small.length)
+    val newFiles = landCommit(tableDir, v + 1, smallRows, keyCol, statsColsOf(m),
+      targetRowsPerFile, carried = Some(m.where(!col("file").isin(small.toIndexedSeq: _*))),
+      deletes = carriedDel)
+    Commit(v + 1, newFiles.size.toLong, total - small.length)
   }
 
   /** OPTIMIZE … ZORDER BY: rewrite the snapshot clustered and sorted
@@ -555,14 +444,12 @@ object LakeTable {
     * clustering (init decides once; this is the one operation that
     * re-decides). Reads the whole snapshot THROUGH the delete vector
     * (a full rewrite is the natural point to reconcile it physically —
-    * the new snapshot carries no vector) and re-stats everything,
-    * landing through [[landCommit]] so the emptied-table edge keeps
-    * its schema-bearing file like every other commit. Deliberately the
-    * opposite cost profile of [[commitCompact]]: compaction is
-    * incremental and reader-invisible; reclustering is a full rewrite
-    * you schedule when pruning stats say the layout no longer fits the
-    * workload (the StatsManifestSpec skip-rate numbers are exactly
-    * that signal). Readers of old snapshots are untouched. */
+    * the new snapshot carries no vector) and re-stats everything.
+    * Deliberately the opposite cost profile of [[commitCompact]]:
+    * compaction is incremental and reader-invisible; reclustering is a
+    * full rewrite you schedule when pruning stats say the layout no
+    * longer fits the workload (the StatsManifestSpec skip-rate numbers
+    * are exactly that signal). Readers of old snapshots are untouched. */
   def commitRecluster(spark: SparkSession, tableDir: String, keyCol: String,
                       clusterExpr: Column, targetRowsPerFile: Long): Commit =
     commitReclusterAt(spark, tableDir, keyCol, clusterExpr, targetRowsPerFile,
@@ -573,15 +460,11 @@ object LakeTable {
   private[graft] def commitReclusterAt(spark: SparkSession, tableDir: String, keyCol: String,
                                        clusterExpr: Column, targetRowsPerFile: Long,
                                        v: Long): Commit = {
-    val m = manifest(spark, tableDir, v)
     // consumed twice (count + clustered write): checkpoint once
     val rows = readVersion(spark, tableDir, v).truncateLineage
-    val next = v + 1
-    val dataDir = s"$tableDir/files/c${next}a${System.nanoTime()}"
-    val newFiles = landCommit(spark, rows, rows.count(), tableDir, next, keyCol,
-      targetRowsPerFile, carried = None, statsColsOf(m), dataDir, atomic = true,
-      cluster = Some(clusterExpr))
-    Commit(next, newFiles.size.toLong, 0L)
+    val newFiles = landCommit(tableDir, v + 1, rows, keyCol,
+      statsColsOf(manifest(spark, tableDir, v)), targetRowsPerFile, cluster = Some(clusterExpr))
+    Commit(v + 1, newFiles.size.toLong, 0L)
   }
 
   /** Manifest-pruned read of a snapshot: load only the files whose
@@ -624,23 +507,20 @@ object LakeTable {
     require(versions(targetDir).isEmpty,
       s"cloneShallow needs a fresh targetDir: $targetDir")
     val sv = sourceVersion.getOrElse(versions(sourceDir).last)
-    publishAtomic(manifest(spark, sourceDir, sv), targetDir, 0L,
-      deleteSet(spark, sourceDir, sv))
+    publish(targetDir, 0L, manifest(spark, sourceDir, sv), deleteSet(spark, sourceDir, sv))
     sv
   }
 
   /** Time travel BY TIMESTAMP: the newest snapshot published at or
     * before `tsMillis`. Publication time is the version dir's mtime,
-    * stamped by [[publishAtomic]] immediately AFTER the rename that
-    * made the snapshot visible. A probe racing the brief
-    * rename-to-stamp window may resolve one snapshot early (the dir
-    * briefly carries its earlier staging mtime); once the stamp lands,
-    * at-or-before semantics are exact — callers needing a hard
-    * guarantee pin versions, not wall clocks. Defined for
-    * atomically-published
-    * tables; the overwrite-mode streaming path (version-pinned
-    * replays) deliberately re-publishes versions in place, so replayed
-    * tables re-stamp and timestamp travel there reflects the replay,
+    * stamped by [[publish]] immediately AFTER the rename that made the
+    * snapshot visible. A probe racing the brief rename-to-stamp window
+    * may resolve one snapshot early (the dir briefly carries its
+    * earlier staging mtime); once the stamp lands, at-or-before
+    * semantics are exact — callers needing a hard guarantee pin
+    * versions, not wall clocks. A version-pinned replay
+    * ([[commitLatestImageAt]]) replaces its own version, so a replayed
+    * version re-stamps and timestamp travel there reflects the replay,
     * matching its reproduce-the-snapshot contract. */
   def versionAsOf(tableDir: String, tsMillis: Long): Long = {
     val vs = versions(tableDir)

@@ -74,18 +74,51 @@ object StatsManifest {
   /** The data files currently in the layout, absolute paths. */
   def listDataFiles(dir: String): Seq[String] = FsUtil.parquetFiles(dataDir(dir))
 
+  /** THE clustered writer of both table layouts (this one and
+    * [[LakeTable]]): range-partition `df` into `nFiles` on
+    * `clusterExpr`, sort each partition on it, and write the parts into
+    * `dir` (replacing what is there, or appending), at most
+    * `maxRecordsPerFile` rows a file (0: no ceiling). Returns the files
+    * this write added, absolute paths, sorted. */
+  private[sources] def writeFiles(df: DataFrame, dir: String, clusterExpr: Column, nFiles: Int,
+                                  maxRecordsPerFile: Long = 0L,
+                                  append: Boolean = false): Seq[String] = {
+    val before = if (append) FsUtil.parquetFiles(dir).toSet else Set.empty[String]
+    df.repartitionByRange(nFiles, clusterExpr).sortWithinPartitions(clusterExpr)
+      .write.mode(if (append) "append" else "overwrite")
+      .option("maxRecordsPerFile", maxRecordsPerFile).parquet(dir)
+    FsUtil.parquetFiles(dir).filterNot(before)
+  }
+
+  /** THE manifest publisher of both table layouts: write each
+    * `(subdir, relation)` part as one file under a hidden staging dir
+    * beside `dest` (subdir "" is the staging dir itself), then make the
+    * staging dir `dest` with one rename. With `replace`, an existing
+    * `dest` (a replay's own earlier copy, a layout's previous manifest)
+    * is removed just before the rename; without it, an existing `dest`
+    * makes the rename fail (POSIX rename rejects a non-empty target),
+    * the staging dir is removed and the result is false. A reader sees
+    * the old `dest` or the whole new one, never a partial write. */
+  private[sources] def publish(dest: String, parts: Seq[(String, DataFrame)],
+                               replace: Boolean = false): Boolean = {
+    val to = new java.io.File(dest)
+    val staging = new java.io.File(to.getParentFile, s".inflight_${to.getName}_${System.nanoTime()}")
+    parts.foreach { case (sub, df) => df.coalesce(1).write.parquet(s"${staging.getPath}/$sub") }
+    if (replace) FsUtil.deleteRecursively(to)
+    staging.renameTo(to) || { FsUtil.deleteRecursively(staging); false }
+  }
+
+  private def publishManifest(m: DataFrame, dir: String): Unit =
+    require(publish(manifestDir(dir), Seq("" -> m), replace = true),
+      s"could not publish the manifest of $dir")
+
   /** Write `df` into `nFiles` parquet files clustered on `clusterExpr`
     * (range partition + in-file sort), then write a per-file manifest
     * with min/max of each column in `statsCols` plus row counts. */
   def writeClustered(df: DataFrame, dir: String, clusterExpr: Column,
-                     statsCols: Seq[String], nFiles: Int): Unit = {
-    df.repartitionByRange(nFiles, clusterExpr)
-      .sortWithinPartitions(clusterExpr)
-      .write.mode("overwrite").parquet(dataDir(dir))
-    statsOf(df.sparkSession, listDataFiles(dir), statsCols)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(manifestDir(dir))
-  }
+                     statsCols: Seq[String], nFiles: Int): Unit =
+    publishManifest(statsOf(df.sparkSession,
+      writeFiles(df, dataDir(dir), clusterExpr, nFiles), statsCols), dir)
 
   /** Incremental commit: append `df` as new clustered files and stat
     * ONLY those files, merging their rows into the existing manifest —
@@ -96,25 +129,14 @@ object StatsManifest {
     * exactly what the stats job scanned. Per-file intervals of
     * different commits may overlap — pruning stays CORRECT (interval
     * intersection), just less tight than one global re-cluster; a
-    * compaction rewrite restores disjointness when drift accumulates. */
+    * compaction rewrite restores disjointness when drift accumulates.
+    * The merged manifest is staged beside the old one, so reading the
+    * old one lazily cannot race its replacement. */
   def appendClustered(df: DataFrame, dir: String, clusterExpr: Column,
                       statsCols: Seq[String], nFiles: Int): Seq[String] = {
-    val before = listDataFiles(dir).toSet
-    df.repartitionByRange(nFiles, clusterExpr)
-      .sortWithinPartitions(clusterExpr)
-      .write.mode("append").parquet(dataDir(dir))
-    val newFiles = listDataFiles(dir).filterNot(before)
+    val newFiles = writeFiles(df, dataDir(dir), clusterExpr, nFiles, append = true)
     val spark = df.sparkSession
-    // the old manifest is re-written in place: materialize it on the
-    // driver first (file-count-sized — the accepted scale class of
-    // Spark's own file index) so the lazy read cannot race the overwrite
-    val oldSchema = readManifest(spark, dir).schema
-    val oldRows = readManifest(spark, dir).collect()
-    val oldDf = spark.createDataFrame(
-      java.util.Arrays.asList(oldRows: _*), oldSchema)
-    oldDf.unionByName(statsOf(spark, newFiles, statsCols))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(manifestDir(dir))
+    publishManifest(readManifest(spark, dir).unionByName(statsOf(spark, newFiles, statsCols)), dir)
     newFiles
   }
 

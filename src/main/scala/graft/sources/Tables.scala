@@ -63,38 +63,30 @@ final case class Tables(spark: SparkSession, dir: String) {
     * (VERDICT r13 #4). Driver-side, file-count-scale (one footer read
     * per data file — the LakeTable-manifest cost class, bounded by
     * file count, never row count); no Spark job is scheduled. */
-  def rowCountStat(name: String): Long = Tables.parquetRowCount(spark, s"$dir/$name.parquet")
+  def rowCountStat(name: String): Long = Tables.footerRowCount(spark,
+    Tables.visibleParquetFiles(spark, s"$dir/$name.parquet"))
 }
 
 object Tables {
-  /** Sum of footer record counts under `path` (a parquet file or a
-    * directory of part files). Footer metadata only — no data pages
-    * are read. */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
+  /** The parquet files a reader of `path` (a parquet file or a
+    * directory of part files) sees, recursively. Same visibility rule
+    * as Spark's InMemoryFileIndex: names starting with '_' or '.' are
+    * metadata/hidden (in-flight writer temps, _SUCCESS, .crc) and are
+    * invisible to df.count() — counting them would silently disagree
+    * with the reader. */
+  private def visibleParquetFiles(spark: SparkSession, path: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // same visibility rule as Spark's InMemoryFileIndex: names starting
-    // with '_' or '.' are metadata/hidden (in-flight writer temps,
-    // _SUCCESS, .crc) and are invisible to df.count() — counting them
-    // here would silently disagree with the reader
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
-    def files(p: Path): Seq[Path] = {
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq(p)
+    def files(p: Path): Seq[Path] =
+      if (fs.getFileStatus(p).isFile) Seq(p)
       else fs.listStatus(p).toSeq
         .filter(c => visible(c.getPath.getName))
         .flatMap(c => if (c.isFile) {
           if (c.getPath.getName.endsWith(".parquet")) Seq(c.getPath) else Nil
         } else files(c.getPath))
-    }
-    files(root).map { f =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try rd.getRecordCount finally rd.close()
-    }.sum
+    files(root).map(_.toString)
   }
 
   // footer counts keyed by (path, length, modificationTime) — parquet
@@ -107,24 +99,30 @@ object Tables {
   private val footerCountCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
 
-  /** Sum of footer record counts of an explicit file list (the
-    * [[graft.operators.TotalOrder.statRowBound]] leaf: a
-    * FileIndex's inputFiles). Footer metadata only, cached per path;
-    * None when any footer is unreadable (non-parquet sidecar, racing
-    * writer) so the caller falls back to counting. */
-  def parquetFilesRowCount(spark: SparkSession, paths: Seq[String]): Option[Long] = {
+  /** THE parquet footer reader: sum of footer record counts of an
+    * explicit file list, cached per file. Footer metadata only — no
+    * data pages are read and no Spark job is scheduled. Throws when a
+    * footer is unreadable. */
+  private def footerRowCount(spark: SparkSession, paths: Seq[String]): Long = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    try Some(paths.map { p =>
+    paths.map { p =>
       val path = new Path(p)
       val st = path.getFileSystem(conf).getFileStatus(path)
       footerCountCache.computeIfAbsent((p, st.getLen, st.getModificationTime), _ => {
         val rd = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
         try rd.getRecordCount finally rd.close()
       }).longValue()
-    }.sum)
-    catch { case scala.util.control.NonFatal(_) => None }
+    }.sum
   }
+
+  /** [[footerRowCount]] for the [[graft.operators.TotalOrder.statRowBound]]
+    * leaf (a FileIndex's inputFiles): None when any footer is unreadable
+    * (non-parquet sidecar, racing writer) so the caller falls back to
+    * counting. */
+  def parquetFilesRowCount(spark: SparkSession, paths: Seq[String]): Option[Long] =
+    try Some(footerRowCount(spark, paths))
+    catch { case scala.util.control.NonFatal(_) => None }
 }

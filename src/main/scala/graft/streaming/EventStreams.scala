@@ -445,6 +445,15 @@ object EventStreams {
     StructField("last_event_id", LongType), StructField("last_type", StringType),
     StructField("last_value", DoubleType)))
 
+  /** Its last-writer-wins order: the payload after the key, compared
+    * in this order. */
+  private val latestImagePayload: Seq[String] = latestImageSchema.fieldNames.toSeq.tail
+
+  /** A micro-batch of events as latest-image rows, before the argmax. */
+  private def imagesOf(batch: DataFrame): DataFrame =
+    batch.select(col("user_id"), col("ts").as("last_ts"), col("event_id").as("last_event_id"),
+      col("event_type").as("last_type"), col("value").as("last_value"))
+
   /** Streaming CDC → current-snapshot materialization: foreachBatch
     * maintains a copy-on-write LATEST-IMAGE table (one row per key,
     * the key's most recent event) under `tableDir`, one immutable
@@ -480,39 +489,24 @@ object EventStreams {
         Option(new java.io.File(tableDir).listFiles()).toSeq.flatten.isEmpty,
       s"runLatestImageMerge needs a fresh tableDir (found existing versions in $tableDir); " +
         "reusing a table across runs requires a streaming checkpointLocation so batchIds resume")
-    def latestOf(df: DataFrame): DataFrame = df
-      .groupBy(col("user_id"))
-      .agg(max(struct(col("last_ts"), col("last_event_id"),
-        col("last_type"), col("last_value"))).as("m"))
-      .select(col("user_id"), col("m.last_ts").as("last_ts"),
-        col("m.last_event_id").as("last_event_id"),
-        col("m.last_type").as("last_type"), col("m.last_value").as("last_value"))
-    def versions(dir: java.io.File): Seq[(Long, java.io.File)] =
-      Option(dir.listFiles()).toSeq.flatten
-        .flatMap(f => f.getName match {
-          case s if s.startsWith("v") => scala.util.Try(s.drop(1).toLong).toOption.map(_ -> f)
-          case _ => None
-        })
+    import graft.sources.LakeTable
+    def latestOf(df: DataFrame): DataFrame =
+      graft.operators.ChangeData.latestImage(df, "user_id", latestImagePayload)
     drainEach(readEventStream(spark, srcDir)) { (batch, batchId) =>
-      val ss = batch.sparkSession
-      val images = latestOf(batch.select(col("user_id"), col("ts").as("last_ts"),
-        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-        col("value").as("last_value")))
+      val images = latestOf(imagesOf(batch))
       // the replay contract needs "the version my original run read":
       // versions are batchIds, so that is max(v) strictly below mine
-      val prev = versions(new java.io.File(tableDir))
-        .filter(_._1 < batchId).sortBy(_._1).lastOption
-      val merged = prev match {
-        case Some((_, dir)) => latestOf(ss.read.parquet(dir.toString).unionByName(images))
+      val merged = LakeTable.versions(tableDir).filter(_ < batchId).lastOption match {
+        case Some(v) => latestOf(batch.sparkSession.read.parquet(LakeTable.vDir(tableDir, v))
+          .unionByName(images))
         case None => images
       }
-      merged.write.mode("overwrite")
-        .parquet(f"$tableDir/v$batchId%09d") // zero-padded: lexicographic = numeric
+      merged.write.mode("overwrite").parquet(LakeTable.vDir(tableDir, batchId))
     }
     // an empty source dir yields zero micro-batches and zero versions —
     // return an empty latest-image relation instead of throwing on .last
-    versions(new java.io.File(tableDir)).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir.toString)
+    LakeTable.versions(tableDir).lastOption match {
+      case Some(v) => spark.read.parquet(LakeTable.vDir(tableDir, v))
       case None =>
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           latestImageSchema)
@@ -530,18 +524,14 @@ object EventStreams {
     * manifest-backed time travel over every micro-batch boundary, and
     * compaction/vacuum afterwards with the same tools as any other
     * table. Out-of-order, replay and redelivery proofs carry over from
-    * the LWW argmax + overwrite-own-version contract. */
+    * the LWW argmax + replace-own-version contract. */
   def runLatestImageLake(spark: SparkSession, srcDir: String, tableDir: String,
                          targetRowsPerFile: Long = 5000L): DataFrame = {
     require(graft.sources.LakeTable.versions(tableDir).isEmpty,
       s"runLatestImageLake needs a fresh tableDir: $tableDir (no checkpoint → batchIds restart)")
     drainEach(readEventStream(spark, srcDir)) { (batch, batchId) =>
-      val images = batch.select(col("user_id"), col("ts").as("last_ts"),
-        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-        col("value").as("last_value"))
-      graft.sources.LakeTable.commitLatestImageAt(images, tableDir, "user_id",
-        Seq("last_ts", "last_event_id", "last_type", "last_value"),
-        targetRowsPerFile, version = batchId)
+      graft.sources.LakeTable.commitLatestImageAt(imagesOf(batch), tableDir, "user_id",
+        latestImagePayload, targetRowsPerFile, version = batchId)
       ()
     }
     if (graft.sources.LakeTable.versions(tableDir).isEmpty)

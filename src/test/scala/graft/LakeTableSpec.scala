@@ -198,6 +198,11 @@ class LakeTableSpec extends AnyFunSuite {
     val empty = LakeTable.readLatest(spark, dir)
     assert(empty.count() === 0L)
     assert(empty.columns.toSeq === Seq("c_custkey", "c_mktsegment", "c_acctbal"))
+    // a compaction of the emptied table keeps it readable, with its schema
+    LakeTable.commitCompact(spark, dir, "c_custkey", smallFileRows = 40L, targetRowsPerFile = 40L)
+    val compacted = LakeTable.readLatest(spark, dir)
+    assert(compacted.count() === 0L)
+    assert(compacted.columns.toSeq === Seq("c_custkey", "c_mktsegment", "c_acctbal"))
     // and the table accepts the next commit (re-population)
     val inserts = base.limit(5).select(col("c_custkey"), lit("upsert").as("op"),
       col("c_mktsegment"), col("c_acctbal"))
@@ -226,7 +231,7 @@ class LakeTableSpec extends AnyFunSuite {
     assert(LakeTable.versions(dir) === Seq(0L, 1L))
     assert(LakeTable.readLatest(spark, dir).where(col("c_mktsegment") === "RACED-A").count() > 0)
     // the writer loop retries: re-reads v1, re-merges B on top → v2
-    val b = LakeTable.commitMergeRetrying(batchB, dir, "c_custkey", 100)
+    val b = LakeTable.retrying(LakeTable.commitMerge(batchB, dir, "c_custkey", 100))
     assert(b.version === 2L)
     // final state holds BOTH effects — sequential A-then-B semantics
     val fin = LakeTable.readLatest(spark, dir)
@@ -310,6 +315,26 @@ class LakeTableSpec extends AnyFunSuite {
     val v3 = LakeTable.readLatest(spark, dir)
     assert(v3.where(col("c_custkey") === 20 && col("c_mktsegment") === "ZZZ-LWW2").count() === 1L)
     assert(v3.where(col("c_custkey").between(10, 40)).count() === 1L)
+  }
+
+  test("a replayed latest-image version keeps the files a later version carries") {
+    val dir = Files.createTempDirectory("graft-lake-replay").toString
+    val payload = Seq("c_mktsegment", "c_acctbal")
+    LakeTable.commitLatestImageAt(base, dir, "c_custkey", payload,
+      targetRowsPerFile = 40, version = 0L)
+    val img1 = base.where(col("c_custkey") <= 5)
+      .select(col("c_custkey"), lit("ZZZ-LWW1").as("c_mktsegment"), col("c_acctbal"))
+    val c1 = LakeTable.commitLatestImageAt(img1, dir, "c_custkey", payload,
+      targetRowsPerFile = 40, version = 1L)
+    assert(c1.filesCarried > 0L)
+    val v1 = rows(LakeTable.readVersion(spark, dir, 1L))
+    // batch 0 re-delivered after batch 1 committed: it replaces its own
+    // version and leaves the files version 1 carries from it in place
+    LakeTable.commitLatestImageAt(base, dir, "c_custkey", payload,
+      targetRowsPerFile = 40, version = 0L)
+    assert(LakeTable.versions(dir) === Seq(0L, 1L))
+    assert(rows(LakeTable.readVersion(spark, dir, 0L)) === rows(base))
+    assert(rows(LakeTable.readVersion(spark, dir, 1L)) === v1)
   }
 
   test("change feed: classified O(Δ)-file diff; compaction invisible; vector flips surface; replay reproduces the table") {
@@ -610,8 +635,8 @@ class LakeTableSpec extends AnyFunSuite {
     assert(rows(LakeTable.readLatest(spark, dir)) === afterMerge)
     // the retry loop re-reads v1 and re-selects ITS small files: the
     // compaction lands content-identical on top of the merge
-    val c2 = LakeTable.commitCompactRetrying(spark, dir, "c_custkey",
-      smallFileRows = 1000L, targetRowsPerFile = 500L)
+    val c2 = LakeTable.retrying(LakeTable.commitCompact(spark, dir, "c_custkey",
+      smallFileRows = 1000L, targetRowsPerFile = 500L))
     assert(c2.version === 2L)
     assert(rows(LakeTable.readLatest(spark, dir)) === afterMerge)
     // delete racing: stale against v1 (v2 already exists) → conflict;
@@ -620,7 +645,7 @@ class LakeTableSpec extends AnyFunSuite {
     intercept[java.util.ConcurrentModificationException] {
       LakeTable.commitDeleteAt(delKeys, dir, "c_custkey", v = 1L)
     }
-    val c3 = LakeTable.commitDeleteRetrying(delKeys, dir, "c_custkey")
+    val c3 = LakeTable.retrying(LakeTable.commitDelete(delKeys, dir, "c_custkey"))
     assert(c3.version === 3L)
     assert(LakeTable.readLatest(spark, dir).where(col("c_custkey") === 50L).isEmpty)
     assert(rows(LakeTable.readLatest(spark, dir)) ===
@@ -632,8 +657,8 @@ class LakeTableSpec extends AnyFunSuite {
       LakeTable.commitReclusterAt(spark, dir, "c_custkey",
         col("c_acctbal"), targetRowsPerFile = 500L, v = 2L)
     }
-    val c4 = LakeTable.commitReclusterRetrying(spark, dir, "c_custkey",
-      col("c_acctbal"), targetRowsPerFile = 500L)
+    val c4 = LakeTable.retrying(LakeTable.commitRecluster(spark, dir, "c_custkey",
+      col("c_acctbal"), targetRowsPerFile = 500L))
     assert(c4.version === 4L)
     assert(rows(LakeTable.readLatest(spark, dir)) ===
       afterMerge.filterNot(_._1 == 50L))
@@ -647,12 +672,12 @@ class LakeTableSpec extends AnyFunSuite {
     def runner(body: => Unit) = new Thread(() =>
       try { gate.await(); body } catch { case t: Throwable => errs.add(t) })
     val merger = runner {
-      LakeTable.commitMergeRetrying(batch(10, 30), dir, "c_custkey",
-        targetRowsPerFile = 40)
+      LakeTable.retrying(LakeTable.commitMerge(batch(10, 30), dir, "c_custkey",
+        targetRowsPerFile = 40))
     }
     val compactor = runner {
-      LakeTable.commitCompactRetrying(spark, dir, "c_custkey",
-        smallFileRows = 1000L, targetRowsPerFile = 500L)
+      LakeTable.retrying(LakeTable.commitCompact(spark, dir, "c_custkey",
+        smallFileRows = 1000L, targetRowsPerFile = 500L))
     }
     merger.start(); compactor.start()
     merger.join(120000); compactor.join(120000)

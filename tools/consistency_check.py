@@ -56,7 +56,18 @@ cross-checks
      `.seed_next`) or a `recursiveFileLookup` read (sources/TextCorpus.scala
      reads its corpus recursively and is exempt). A hand copy of the
      layout skips what the seam does on every read and write: the heal,
-     the AS-OF filter and the one-rename publish.
+     the AS-OF filter and the one-rename publish,
+ 11. one clustered writer and one manifest publisher: under src/main, a
+     `repartitionByRange(…)` chain that ends in a `.write`, a
+     `"maxRecordsPerFile"` write option, or a `.write` chain whose
+     target spells `_manifest` or `manifestDir(` appears only in
+     `StatsManifest.writeFiles` (the writer both table layouts land
+     their files through) and `StatsManifest.publish` (the staged,
+     one-rename manifest publication of both layouts).
+     `Sinks.writeCompacted`, the unclustered size-governed sink that
+     writes no manifest, may also set `"maxRecordsPerFile"`. A hand copy
+     of the writer or the publisher skips what they do: the emptied-table
+     guard of a LakeTable commit, the staging and the rename.
 
 A query with no twin and no rows-only reason cannot be registered, and
 a name cannot be registered twice (QueryRegistry throws), so no check
@@ -132,10 +143,11 @@ def def_span(text, name):
 
 
 def member_span(text, name):
-    """(start, end) of the object member `def name` (2-space indent):
-    from its line to the next line at that indent, so a brace-less
-    body counts too; None if there is no such member."""
-    m = re.search(r"^  def " + name + r"\b", text, re.M)
+    """(start, end) of the object member `def name` (2-space indent,
+    optionally `private`/`private[pkg]`): from its line to the next line
+    at that indent, so a brace-less body counts too; None if there is no
+    such member."""
+    m = re.search(r"^  (?:private(?:\[\w+\])? )?def " + name + r"\b", text, re.M)
     if not m:
         return None
     nxt = re.compile(r"^  \S", re.M).search(text, m.end())
@@ -305,6 +317,38 @@ def main() -> int:
                     if path != exempt and re.search(pattern, lit):
                         problems.append(f"{path}:{n}: {what} outside the batch store seam, "
                                         "use graft.streaming.BatchStore")
+
+    # 11. clustered files and manifests are written in one place: a
+    # statement is a line plus the `.`-led lines chained onto it.
+    layout = pathlib.Path("src/main/scala/graft/sources/StatsManifest.scala")
+    sinks = pathlib.Path("src/main/scala/graft/sources/Sinks.scala")
+    layout_text = layout.read_text(encoding="utf-8")
+    seams = {layout: [member_span(layout_text, n) for n in ("writeFiles", "publish")],
+             sinks: [member_span(sinks.read_text(encoding="utf-8"), "writeCompacted")]}
+    write_shapes = [  # (pattern over a statement, what, files whose seams may hold it)
+        (r"repartitionByRange\(.*\.write\b", "a repartitionByRange(…)….write", (layout,)),
+        (r'"maxRecordsPerFile"', "a maxRecordsPerFile write", (layout, sinks)),
+        (r"\.write\b.*(?:_manifest|manifestDir\()", "a _manifest write", (layout,))]
+    for path in sorted(pathlib.Path("src/main").rglob("*.scala")):
+        text = path.read_text(encoding="utf-8")
+        statements, offset = [], 0
+        for n, line in enumerate(text.splitlines(keepends=True), 1):
+            code = line.split("//")[0].strip()
+            if code.startswith(("*", "/*")):
+                code = ""
+            if code.startswith(".") and statements:
+                statements[-1][2] += code
+            else:
+                statements.append([n, offset, code])
+            offset += len(line)
+        for n, start, code in statements:
+            for pattern, what, homes in write_shapes:
+                inside = path in homes and any(
+                    sp and sp[0] <= start < sp[1] for sp in seams[path])
+                if re.search(pattern, code) and not inside:
+                    problems.append(f"{path}:{n}: {what} outside the one clustered writer and "
+                                    "publisher, use StatsManifest.writeFiles / publish "
+                                    "(LakeTable: landCommit / publish)")
 
     if problems:
         for p in problems:
